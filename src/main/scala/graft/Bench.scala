@@ -55,37 +55,14 @@ object Bench {
   private def sparkProbe(spark: SparkSession): Double = {
     val t0 = System.nanoTime()
     // modulus keeps the exact sum ~2e13, far inside ANSI Long
-    spark.range(20000000L).selectExpr("sum(id % 1048576)")
-      .write.format("noop").mode("overwrite").save()
+    Harness.noop(spark.range(20000000L).selectExpr("sum(id % 1048576)"))
     (System.nanoTime() - t0) / 1e9
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
-
-    // Untimed warmup: session/codegen/parquet-footer initialization and
-    // the JIT of the heavy operator paths (hash/shuffle/HOF-fold
-    // interpreters) should not be charged to whichever query happens to
-    // run first — a long-running cluster amortizes all of it.
-    try {
-      spark.range(1000).selectExpr("sum(id)").write
-        .format("noop").mode("overwrite").save()
-      spark.read.parquet(s"$sfDir/region.parquet").write
-        .format("noop").mode("overwrite").save()
-      val docsSlice = spark.read.parquet(s"$sfDir/documents.parquet").limit(64)
-      graft.ops.TextDedup.minHashCandidates(docsSlice).write
-        .format("noop").mode("overwrite").save()
-      graft.ops.TextDedup.simHashSignatures(docsSlice).write
-        .format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
+    val spark = Harness.session()
+    Harness.warmup(spark, sfDir)
 
     // Optional comma-separated query-name filter for local iteration
     // (e.g. SPARK_GRAFT_ONLY=p8_code_filter,pipeline_area_e2e).
@@ -125,27 +102,8 @@ object Bench {
     canary(0)
     var qIdx = 0
     val results = selected.map { case (name, fn) =>
-      // noop sink: materializes every column of every row (unlike
-      // count(), which lets Catalyst prune the projections under test).
       val times = (1 to reps).flatMap { _ =>
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          None
-        } finally {
-          // Queries are independent: any cache()/localCheckpoint blocks
-          // a rep leaves behind (iterative ops pin their FINAL frame;
-          // a failed rep may leak mid-loop state) are dead weight that
-          // crowds storage memory for every later query — the r15
-          // driver artifact measured 6-8× inflation on the late-
-          // alphabet graph queries from exactly this accumulation.
-          // Swept outside the timed section, non-blocking.
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-        }
+        Harness.step(spark, "bench", name)(Harness.noop(fn(spark, sfDir)))
       }
       qIdx += 1
       if (qIdx % canaryEvery == 0) canary(qIdx)

@@ -1,39 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    val (sfDir, outDir, only) = args match {
-      case Array(a, b)    => (a, b, None)
-      case Array(a, b, c) => (a, b, Some(c.split(',').toSet))
+  private val Usage = "usage: Verify <sfDir> <outDir> [q1,q2,...]"
+
+  /** (sfDir, outDir, optional query filter), or None on a wrong count. */
+  def parseArgs(args: Array[String]): Option[(String, String, Option[Set[String]])] =
+    args match {
+      case Array(a, b)    => Some((a, b, None))
+      case Array(a, b, c) => Some((a, b, Some(c.split(',').toSet)))
+      case _              => None
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+
+  def main(args: Array[String]): Unit = {
+    val (sfDir, outDir, only) = parseArgs(args).getOrElse {
+      System.err.println(Usage)
+      sys.exit(2)
+    }
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Harness.step(spark, "verify", name)(
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name"))
       }
-      finally
-        // queries are independent — drop any blocks this one pinned
-        // (iterative ops keep their final checkpoint; failures can
-        // leak mid-loop state) so the 188-query session stays flat
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

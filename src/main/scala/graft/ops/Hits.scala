@@ -42,7 +42,7 @@ object Hits {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // e is referenced 2× per round and nodes 2× per round + the final
     // join; AQE's runtime exchange reuse recovers SOME of that (the
-    // r21 ReuseAudit measured the un-checkpointed final plan at 5
+    // r21 reuse audit (`Inspect reuse`) measured the un-checkpointed final plan at 5
     // source scans / 10 reused stages), but the edge derivation
     // (scan→join→distinct) still executed repeatedly. Checkpointing
     // both graph tables once (the PageRank lifecycle) costs 2 driver

@@ -77,8 +77,8 @@ object Scc {
     * shape r17 measured on the SCC outer loop. A doubled pointer
     * jump per unit was also neutral (syncs −20%, wall flat): the
     * slow direction is the honest O(diameter) case where the jump
-    * degenerates to identity. Both measured via
-    * SPARK_GRAFT_SCC_DEBUG + tools/BowtieProbe.
+    * degenerates to identity. Both measured with a per-direction
+    * sync counter and a phase-timing probe (r20, since retired).
     */
   private val MinLabelStepsPerSync = 1
 
@@ -530,10 +530,6 @@ object Scc {
           "round(s) — diameter beyond 2^rounds or a non-deterministic " +
           "edge source")
     }
-    if (sys.env.contains("SPARK_GRAFT_SCC_DEBUG"))
-      // scalastyle:off println
-      System.err.println(s"[scc] minLabels iters=$iter")
-      // scalastyle:on println
     CheckpointUtil.free(withSelf)
     labels
   }

@@ -1,14 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.{GraftExtensions, SparkEntry}
+import graft.{Harness, SparkEntry}
 
 /** Session-config A/B harness for optimization rounds: times a set of
   * registry queries (same noop-sink methodology as [[graft.Bench]])
   * under an arbitrary set of extra SparkSession configs, so candidate
   * settings (AQE coalescing policy, join-strategy preferences, ...)
-  * can be measured in isolation before being baked into the session
-  * builders. Never writes any bench artifact — stdout only.
+  * can be measured in isolation before being baked into
+  * [[graft.Harness.session]]. Never writes any bench artifact — stdout only.
   *
   * Usage: ConfProbe <sfDir> <q1,q2,...|ALL> <reps> [k=v ...]
   */
@@ -23,47 +22,15 @@ object ConfProbe {
       require(i > 0, s"bad conf arg (want k=v): $a")
       (a.take(i), a.drop(i + 1))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    confs.foreach { case (k, v) => b = b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    val spark = Harness.session(conf = confs)
+    Harness.warmup(spark, sfDir)
 
-    // same untimed warmup as Bench
-    try {
-      spark.range(1000).selectExpr("sum(id)").write
-        .format("noop").mode("overwrite").save()
-      spark.read.parquet(s"$sfDir/region.parquet").write
-        .format("noop").mode("overwrite").save()
-      val docsSlice = spark.read.parquet(s"$sfDir/documents.parquet").limit(64)
-      graft.ops.TextDedup.minHashCandidates(docsSlice).write
-        .format("noop").mode("overwrite").save()
-      graft.ops.TextDedup.simHashSignatures(docsSlice).write
-        .format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
-
-    val names =
-      if (args(1) == "ALL") SparkEntry.queries.keys.toSeq.sorted
-      else args(1).split(",").map(_.trim).toSeq
+    val names = Harness.queryNames(Seq(args(1)))
     var total = 0.0
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
       val times = (1 to reps).flatMap { _ =>
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          System.err.println(s"[probe] $n failed: ${e.getMessage}")
-          None
-        } finally {
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-        }
+        Harness.step(spark, "probe", n)(Harness.noop(fn(spark, sfDir)))
       }.sorted
       val med = if (times.isEmpty) -1.0 else times(times.size / 2)
       if (med > 0) total += med

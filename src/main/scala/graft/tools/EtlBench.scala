@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.ExtractJob
@@ -23,13 +22,7 @@ object EtlBench {
   def main(args: Array[String]): Unit = {
     val tables = args.headOption.map(_.toInt).getOrElse(2000)
     val rowsPerTable = args.drop(1).headOption.map(_.toInt).getOrElse(250)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val work = Files.createTempDirectory("graft-etlbench-")
     val cellsPath = work.resolve("cells.parquet").toString

@@ -272,13 +272,7 @@ object RunAnnIndex {
   def main(args: Array[String]): Unit = {
     def usageExit(): Nothing = { System.err.println(Usage); sys.exit(2) }
     if (args.isEmpty) usageExit()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     val rest = args.drop(3)
     def opt(flag: String, default: Int): Int = rest.sliding(2).collectFirst {
       case Array(`flag`, v) => v.toInt

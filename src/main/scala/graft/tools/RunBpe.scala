@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.BpeMiner
@@ -46,15 +45,7 @@ import graft.ops.BpeMiner
   */
 object RunBpe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftExtensions.register(spark)
+    val spark = graft.Harness.session()
     def importedMerges(path: String): Seq[(String, String)] = {
       val src = scala.io.Source.fromFile(path, "UTF-8")
       try BpeMiner.parseMergesTxt(src.getLines()) finally src.close()
@@ -163,16 +154,15 @@ object RunBpe {
         val planted = spark.read.parquet(docs).withColumn("text",
           concat(col("text"), lit(" zq"), col("doc_id").cast("string")))
           .cache()
-        planted.write.format("noop").mode("overwrite").save()
+        graft.Harness.noop(planted)
         depths.split(",").map(_.trim.toInt).foreach { rounds =>
           def one(): (Double, Double) = {
             val t0 = System.nanoTime()
             val merges = BpeMiner.trainMergesLocal(planted, rounds)
             val t1 = System.nanoTime()
-            BpeMiner.encodeWithTable(planted,
-                graft.functions.BpeMergeTable.fromRawMerges(
-                  merges.map(t => (t._1, t._2)).toSeq))
-              .write.format("noop").mode("overwrite").save()
+            graft.Harness.noop(BpeMiner.encodeWithTable(planted,
+              graft.functions.BpeMergeTable.fromRawMerges(
+                merges.map(t => (t._1, t._2)).toSeq)))
             val t2 = System.nanoTime()
             ((t1 - t0) / 1e9, (t2 - t1) / 1e9)
           }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Components, Redaction, Sampling, TextAnalysis, TextDedup}
@@ -124,13 +124,7 @@ object RunCuration {
     val redact = !rest.contains("--no-redact")
     val classifier = rest.contains("--classifier")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val nearIndex = rest.sliding(2).collectFirst {
       case Array("--near-index", d) => d

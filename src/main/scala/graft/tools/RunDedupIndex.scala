@@ -235,13 +235,7 @@ object RunDedupIndex {
   def main(args: Array[String]): Unit = {
     def usageExit(): Nothing = { System.err.println(Usage); sys.exit(2) }
     if (args.isEmpty) usageExit()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     try args(0) match {
       case "build" =>
         if (args.length < 3) usageExit()

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.Paths
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.config.EtlConfig
 import graft.ops.{ExtractJob, PageRange}
@@ -91,14 +90,7 @@ object RunEtl {
           throw e // unreachable; keeps the type checker happy
       }
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val t0 = System.nanoTime()
     try {

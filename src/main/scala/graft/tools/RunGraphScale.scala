@@ -16,14 +16,7 @@ import graft.ops.{EventOps, Hits, KCore, LabelProp, PageRank, Scc}
   */
 object RunGraphScale {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftExtensions.register(spark)
+    val spark = graft.Harness.session()
     args.toList match {
       case "family" :: sfDir :: rest =>
         runFamily(spark, sfDir,
@@ -43,7 +36,7 @@ object RunGraphScale {
         throw new IllegalStateException("unreachable")
     }
     val events = spark.read.parquet(eventsPath).cache()
-    events.write.format("noop").mode("overwrite").save()
+    graft.Harness.noop(events)
     var warmed = false
     qs.foreach { q =>
       val edges = EventOps.segmentCycleGraph(events, q)
@@ -72,7 +65,7 @@ object RunGraphScale {
       val t2 = System.nanoTime()
       val bt = Scc.bowtie(edges, maxOuter = q + 2, maxInner = 256,
         maxDepth = 4 * q + 8)
-      bt.write.format("noop").mode("overwrite").save()
+      graft.Harness.noop(bt)
       val btS = (System.nanoTime() - t2) / 1e9
       // scalastyle:off println
       println(f"""{"q": $q, "nodes": $nNodes, "edges": $nEdges, """ +

@@ -33,15 +33,7 @@ object RunProfile {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: RunProfile <docs.parquet> <outDir>")
     val (docsPath, outDir) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftExtensions.register(spark)
+    val spark = graft.Harness.session()
     val (nDocs, nDamaged, nDups) =
       profile(spark, spark.read.parquet(docsPath), outDir)
     // scalastyle:off println

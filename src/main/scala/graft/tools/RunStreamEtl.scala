@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.io.CsvSink
 import graft.streaming.StreamingExtract
 
@@ -29,14 +28,7 @@ object RunStreamEtl {
       if (args.length >= 4) args(3)
       else Files.createTempDirectory("graft-stream-ckpt-").toString
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft-stream-etl")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val counts = scala.collection.concurrent.TrieMap.empty[String, Long]
     val q = StreamingExtract.run(

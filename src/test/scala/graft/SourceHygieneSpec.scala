@@ -36,4 +36,14 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+
+  test("only graft.Harness builds a SparkSession under src/main") {
+    // one session shape: every main goes through Harness.session, so
+    // what the specs check is what the CLIs ship
+    val builders = sourceFiles(Paths.get("src/main"))
+      .filter(p => p.getFileName.toString != "Harness.scala")
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8")
+        .contains("SparkSession.builder"))
+    assert(builders.isEmpty, builders.mkString("\n"))
+  }
 }

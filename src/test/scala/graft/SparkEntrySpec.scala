@@ -1,5 +1,7 @@
 package graft
 
+import graft.tools.Inspect
+
 /** The driver-contract smoke, run locally: `entry` exercises both
   * extractor families end-to-end, and every oracle key has a matching
   * query (the inverse need not hold — non-SQL-expressible ops are
@@ -103,22 +105,14 @@ class SparkEntrySpec extends SparkSpec {
     // silently break the match — the query stays correct but scans and
     // tokenizes the corpus three times, which read as bench noise
     // until pinned here. (Round-9 provenance: the r8→r7 driver drift
-    // on tfidf_top_terms was investigated with ReuseAudit and an A/B
-    // against the r7 commit on one machine — the reuse was intact and
+    // on tfidf_top_terms was investigated with `Inspect reuse` and an
+    // A/B against the r7 commit on one machine — the reuse was intact and
     // the medians statistically equal; this pin keeps it that way.)
     for (name <- Seq("tfidf_top_terms", "unigram_surprisal")) {
       val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
-      // drive THIS QueryExecution to its final adaptive plan (a write
-      // would execute a clone, leaving isFinalPlan=false here)
-      df.queryExecution.toRdd.foreachPartition(_ => ())
-      val fin = df.queryExecution.executedPlan.toString
-        .split("\\+\\- == Initial Plan ==").head
-      val scans = "FileScan|Scan parquet".r.findAllIn(fin).size
+      val fin = Inspect.finalPlan(df)
+      val (scans, _, reused) = Inspect.reuseCounts(fin)
       assert(scans == 1, s"$name scans the corpus $scans times:\n$fin")
-      val stages = "(ShuffleQueryStage|BroadcastQueryStage) \\d+".r
-        .findAllIn(fin).toSeq
-      val reused = "ReusedExchange".r.findAllIn(fin).size +
-        (stages.size - stages.distinct.size)
       assert(reused >= 2,
         s"$name lost its exchange reuse (reused=$reused):\n$fin")
     }
@@ -130,20 +124,14 @@ class SparkEntrySpec extends SparkSpec {
     // repartition prints into one exchange + ReusedExchange — if that
     // reuse silently breaks, the synthesizing pipeline re-runs per
     // branch and only bench noise would show it (ADVICE r10). Floors
-    // measured with graft.tools.ReuseAudit at sf0.001: area reused=3,
-    // island reused=1, scans=1 both.
+    // measured with `graft.tools.Inspect reuse` at sf0.001: area
+    // reused=3, island reused=1, scans=1 both.
     for ((name, minReused) <- Seq(
         "pipeline_area_e2e" -> 3, "pipeline_island_e2e" -> 1)) {
       val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
-      df.queryExecution.toRdd.foreachPartition(_ => ())
-      val fin = df.queryExecution.executedPlan.toString
-        .split("\\+\\- == Initial Plan ==").head
-      val scans = "FileScan|Scan parquet".r.findAllIn(fin).size
+      val fin = Inspect.finalPlan(df)
+      val (scans, _, reused) = Inspect.reuseCounts(fin)
       assert(scans == 1, s"$name scans its source $scans times:\n$fin")
-      val stages = "(ShuffleQueryStage|BroadcastQueryStage) \\d+".r
-        .findAllIn(fin).toSeq
-      val reused = "ReusedExchange".r.findAllIn(fin).size +
-        (stages.size - stages.distinct.size)
       assert(reused >= minReused,
         s"$name lost exchange reuse (reused=$reused < $minReused):\n$fin")
     }
@@ -288,29 +276,6 @@ class SparkEntrySpec extends SparkSpec {
       col("gopher_fail") + col("page_fail") * 2 + col("exact_dup") * 4)
       .count()
     assert(badMask == 0L)
-  }
-
-  test("dedupReportShared: the session API pays ONE five-detector " +
-      "build for the report+summary pair and survives sweeps " +
-      "(VERDICT r19 #8)") {
-    val dir = "/root/testdata/sf0.001"
-    val before = SparkEntry.dedupReportBuilds.get()
-    val shared = SparkEntry.dedupReportShared(spark, dir)
-    assert(shared.count() > 0)                 // "report" consumer
-    assert(SparkEntry.dedupReportShared(spark, dir)
-      .agg(org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1))).count() == 1) // summary
-    val built = SparkEntry.dedupReportBuilds.get() - before
-    assert(built == 1L,
-      s"expected exactly 1 shared build for the pair, got $built")
-    // sweep-resilience: unpersisting every RDD (what Verify/Bench do
-    // between queries) must degrade to a silent lineage recompute,
-    // not a missing-checkpoint-block crash
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-    assert(SparkEntry.dedupReportShared(spark, dir).count() > 0)
-    assert(SparkEntry.dedupReportBuilds.get() - before == 1L,
-      "a swept cache must recompute through its lineage, not rebuild")
   }
 
   test("registry sizes are exact (guards against silent Map-key dupes)") {

@@ -3,20 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (one per JVM — Test/fork). */
+/** Shared local SparkSession for specs (one per JVM — Test/fork), built
+  * through [[Harness.session]] so the specs check the session shape the
+  * mains ship; pinned to `local[4]` so plans do not vary with the host.
+  */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(s)
-    s
-  }
+  lazy val spark: SparkSession = Harness.session("local[4]")
 }
 
 trait SparkSpec extends AnyFunSuite {

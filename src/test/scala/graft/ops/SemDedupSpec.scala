@@ -52,9 +52,7 @@ class SemDedupSpec extends SparkSpec {
     // correct behavior, but it must not be the NORMAL plan).
     val df = graft.SparkEntry.queries("semdedup")(
       spark, "/root/testdata/sf0.001")
-    df.queryExecution.toRdd.foreachPartition(_ => ())
-    val fin = df.queryExecution.executedPlan.toString
-      .split("\\+\\- == Initial Plan ==").head
+    val fin = graft.tools.Inspect.finalPlan(df)
     assert(!fin.contains("SortMergeJoin"),
       s"semdedup backfill stayed a sort-merge join:\n$fin")
     assert(fin.contains("BroadcastHashJoin"),
