@@ -37,6 +37,19 @@ object EtlConfig {
   val Areas: Seq[String] =
     Seq("province", "regency", "district", "village", "island")
 
+  /** The reference's shipped `idnareaetl.toml` defaults. */
+  val Default: Config = Config(Map(
+    "province" -> DataConfig(500, Seq("code", "name"), "province"),
+    "regency" -> DataConfig(500, Seq("code", "province_code", "name"),
+      "regency"),
+    "district" -> DataConfig(1000, Seq("code", "regency_code", "name"),
+      "district"),
+    "village" -> DataConfig(2000, Seq("code", "district_code", "name"),
+      "village"),
+    "island" -> DataConfig(1000,
+      Seq("code", "regency_code", "coordinate", "is_populated",
+        "is_outermost_small", "name"), "island")))
+
   def load(path: Path): Config = {
     if (!Files.isRegularFile(path))
       throw ConfigError(s"Configuration file not found: $path")

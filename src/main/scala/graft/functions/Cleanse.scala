@@ -104,13 +104,9 @@ object Cleanse {
     else tokens.mkString("")
   }
 
-  // ScalaUDF variants kept as the portable fallback; the default
-  // Column builders below use the native Catalyst expressions
-  // (NativeExpressions.scala) — same Scala semantics, but codegen'd
+  // The Column builders use the native Catalyst expressions
+  // (NativeExpressions.scala) — the Scala semantics above, codegen'd
   // without the ScalaUDF encoder/boxing layer.
-  val fixWrappedNameUdf = udf((s: String) => fixWrappedNameScala(s))
-  val normalizeWordsUdf = udf((s: String) => normalizeWordsScala(s))
-
   def fixWrappedName(c: Column): Column = NativeExpressions.fixWrappedName(c)
   def normalizeWords(c: Column): Column = NativeExpressions.normalizeWords(c)
 
@@ -127,10 +123,6 @@ object Cleanse {
     */
   def cleanseIslandName(c: Column): Column =
     cleanName(fixWrappedName(coalesce(c, lit(""))))
-
-  /** Scala mirror of [[cleanseIslandName]]. */
-  def cleanseIslandNameScala(s: String): String =
-    cleanNameScala(fixWrappedNameScala(s))
 
   // ---- code-derived columns (`extractors.py:164-176,244-248,287-291`) ----
 

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
 
 /** DMS coordinate canonicalization.
   *
@@ -77,13 +76,9 @@ object Coordinates {
     if (lat != null && lon != null) s"$lat $lon" else s
   }
 
-  /** UDF form; see the advisor note — distinct name from the Column API
-    * to avoid overload/eta-expansion ambiguity. Kept as the portable
-    * fallback; the default Column builder uses the native Catalyst
-    * expression (no ScalaUDF boxing, stays in whole-stage codegen).
+  /** The native Catalyst expression over [[formatCoordinateScala]] (no
+    * ScalaUDF boxing, stays in whole-stage codegen).
     */
-  val formatCoordinateUdf = udf((s: String) => formatCoordinateScala(s))
-
   def formatCoordinate(c: Column): Column =
     NativeExpressions.formatCoordinate(c)
 }

@@ -32,12 +32,12 @@ object CsvSink {
       outputName: String,
       suffix: String,
       singleFile: Boolean = false): Path = {
-    val spark = df.sparkSession
     val ordered =
       if (singleFile) df.orderBy(col("seq")).drop("seq").coalesce(1)
       else df.repartitionByRange(col("seq")).sortWithinPartitions(col("seq"))
         .drop("seq")
     val outCols = ordered.columns
+    val headerLine = outCols.mkString(",") + "\r\n"
     // Cast everything to string: the reference serializes all fields as
     // text (`extractors.py:294-295` stringifies the flag ints).
     val asText = ordered.select(
@@ -71,20 +71,13 @@ object CsvSink {
     }
 
     if (singleFile) {
-      val part = scala.util.Using.resource(Files.list(Paths.get(tmp))) {
-        stream =>
-          stream.iterator().asScala
-            .filter(p => p.getFileName.toString.startsWith("part-") &&
-              p.getFileName.toString.endsWith(".csv"))
-            .toSeq.headOption
-      }
       val target = Paths.get(destination, s"$outputName.$suffix.csv")
-      part match {
+      csvParts(Paths.get(tmp)).headOption match {
         case Some(p) =>
           Files.move(p, target, StandardCopyOption.REPLACE_EXISTING)
         case None =>
           // Zero-partition result: emit the header-only file ourselves.
-          Files.writeString(target, outCols.mkString(",") + "\r\n")
+          Files.writeString(target, headerLine)
       }
       deleteRecursively(Paths.get(tmp))
       target
@@ -96,17 +89,20 @@ object CsvSink {
       // the directory would hold only _SUCCESS — emit the header-only
       // part so "header row written even when there are zero data
       // rows" holds for the default layout too.
-      val hasPart = scala.util.Using.resource(Files.list(target)) { s =>
-        s.iterator().asScala.exists(p =>
-          p.getFileName.toString.startsWith("part-") &&
-            p.getFileName.toString.endsWith(".csv"))
-      }
-      if (!hasPart)
-        Files.writeString(target.resolve("part-00000-header.csv"),
-          outCols.mkString(",") + "\r\n")
+      if (csvParts(target).isEmpty)
+        Files.writeString(target.resolve("part-00000-header.csv"), headerLine)
       target
     }
   }
+
+  /** The `part-*.csv` files Spark wrote directly under `dir`. */
+  private def csvParts(dir: Path): List[Path] =
+    scala.util.Using.resource(Files.list(dir)) { s =>
+      s.iterator().asScala.filter { p =>
+        val f = p.getFileName.toString
+        f.startsWith("part-") && f.endsWith(".csv")
+      }.toList
+    }
 
   private def deleteRecursively(p: Path): Unit = {
     if (Files.exists(p)) {

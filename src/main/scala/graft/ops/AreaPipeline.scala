@@ -9,13 +9,13 @@ import graft.functions.Cleanse
   * village rows. Reference: `extractors.py:103-176` (AreaExtractor),
   * pinned by `tests/test_extractors.py:405-488`.
   *
-  * Scale design: the only per-table driver-free metadata needed is the
-  * header row (row 0) and the table width; both are computed by a tiny
-  * `groupBy(table_id)` aggregate (one row per detected table — thousands
-  * of rows at 100 TB, not billions) and broadcast-joined back onto the
-  * full cell stream. Everything else is codegen'd Project/Filter; the
-  * one shuffle is the province first-occurrence dedup window, partitioned
-  * by code (per-code ordering only — parallel across codes).
+  * Scale design: the only per-table metadata needed is the table width,
+  * which comes from the shared per-table aggregate [[Dispatch.tableMeta]]
+  * (one row per detected table — thousands of rows at 100 TB, not
+  * billions), broadcast-joined back onto the full cell stream.
+  * Everything else is codegen'd Project/Filter; the one shuffle is the
+  * province first-occurrence dedup window, partitioned by code
+  * (per-code ordering only — parallel across codes).
   */
 object AreaPipeline {
 
@@ -30,34 +30,14 @@ object AreaPipeline {
       norm(1).contains("nama provinsi")
   }
 
-  private val matchesHeaderUdf = udf((cells: Seq[String]) =>
-    cells != null && matchesHeader(cells))
-
-  /** Per-table metadata DF: (table_id, table_width, is_area).
-    * One row per table; small enough to broadcast.
-    *
-    * Pre-filters to `row_idx === 0` before aggregating: INPUT MUST BE
-    * RECTANGULAR (the camelot/pandas invariant — every ingest path in
-    * this engine pads: CellTables.ofGrid, the engine's own parquet),
-    * so the header row alone carries both the header text and the
-    * table width — the filter is pushed to the scan and the aggregate
-    * touches one row per table instead of the full stream (at 100 TB
-    * the difference is a full extra pass). Sources that cannot
-    * guarantee rectangularity (hand-written CellTsv files) must pass
-    * through [[CellTables.rectangularize]] first; a data row wider
-    * than its header would otherwise shift the width-keyed variant
-    * projection. Tables with no row 0 cannot occur at the camelot
-    * boundary (an empty table raises in the reference and is skipped,
-    * `cli.py:190-191`).
+  /** Per-table metadata DF: (table_id, table_width, is_area), one row
+    * per table — the area columns of [[Dispatch.tableMeta]], whose
+    * route tags `is_area`. `table_width` is the header row's width; the
+    * input must be rectangular (see [[Dispatch.tableMeta]]).
     */
   def tableMeta(cells: DataFrame): DataFrame =
-    cells.filter(col("row_idx") === 0)
-      .groupBy("table_id").agg(
-        max(size(col("cells"))).as("table_width"),
-        max(col("cells")).as("header_cells"))
-      .withColumn("is_area",
-        coalesce(matchesHeaderUdf(col("header_cells")), lit(false)))
-      .drop("header_cells")
+    Dispatch.tableMeta(cells).select(col("table_id"), col("table_width"),
+      (col("route") <=> "area").as("is_area"))
 
   private def nonEmpty(c: Column): Column = {
     val t = Cleanse.pyTrim(c)
@@ -78,15 +58,13 @@ object AreaPipeline {
     */
   def codeNamePairs(
       cells: DataFrame,
-      requireMatch: Boolean = false,
       precomputedMeta: Option[DataFrame] = None): DataFrame = {
-    // Reuse the caller's tableMeta when dispatch already computed it —
-    // the inner broadcast join drops rows for tables not in `cells`.
-    val meta0 = precomputedMeta.getOrElse(tableMeta(cells))
-    // The reference separates matches() (the dispatch gate,
+    // Dispatch passes its meta, already filtered to the area route; the
+    // inner broadcast join drops rows for tables not in it. The
+    // reference separates matches() (the dispatch gate,
     // `cli.py:183-191`) from _extract_rows (no gate) — direct extraction
     // processes any table, like its unit tests do.
-    val meta = if (requireMatch) meta0.filter(col("is_area")) else meta0
+    val meta = precomputedMeta.getOrElse(tableMeta(cells))
     // width gating happens once, below: `=== 6 || >= 7` subsumes any
     // minimum-width check
     val withMeta = cells
@@ -151,28 +129,23 @@ object AreaPipeline {
   /** Full pipeline: cell tables -> tagged entity rows. */
   def extract(
       cells: DataFrame,
-      requireMatch: Boolean = false,
       precomputedMeta: Option[DataFrame] = None): DataFrame =
-    classify(codeNamePairs(cells, requireMatch, precomputedMeta))
+    classify(codeNamePairs(cells, precomputedMeta))
 
-  /** One entity stream, shaped to its output schema (SURVEY §1.2). */
-  def entity(extracted: DataFrame, name: String): DataFrame = name match {
-    case "province" =>
-      extracted.filter(col("entity") === "province")
-        .select(col("code"), col("name"), col("seq"))
-    case "regency" =>
-      extracted.filter(col("entity") === "regency")
-        .select(col("code"), col("parent_code").as("province_code"),
-          col("name"), col("seq"))
-    case "district" =>
-      extracted.filter(col("entity") === "district")
-        .select(col("code"), col("parent_code").as("regency_code"),
-          col("name"), col("seq"))
-    case "village" =>
-      extracted.filter(col("entity") === "village")
-        .select(col("code"), col("parent_code").as("district_code"),
-          col("name"), col("seq"))
-    case other =>
-      throw new IllegalArgumentException(s"unknown area entity: $other")
+  /** One entity stream, shaped to its output schema (SURVEY §1.2):
+    * (code, <parent>_code, name, seq); provinces have no parent.
+    */
+  def entity(extracted: DataFrame, name: String): DataFrame = {
+    val parent = name match {
+      case "province" => None
+      case "regency" => Some("province_code")
+      case "district" => Some("regency_code")
+      case "village" => Some("district_code")
+      case other =>
+        throw new IllegalArgumentException(s"unknown area entity: $other")
+    }
+    extracted.filter(col("entity") === name).select(
+      (col("code") +: parent.map(col("parent_code").as(_)).toSeq) ++
+        Seq(col("name"), col("seq")): _*)
   }
 }

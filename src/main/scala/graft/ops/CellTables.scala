@@ -6,7 +6,7 @@ import graft.schema.RawTableRow
 
 /** Helpers for the cell-table ingest boundary (FIXTURES.md §1):
   * building `RawTableRow` DataFrames from in-memory grids (tests,
-  * fixtures) and from parquet (production).
+  * fixtures) and padding ragged tables.
   */
 object CellTables {
 
@@ -45,20 +45,6 @@ object CellTables {
     else dfs.reduce(_ unionByName _)
   }
 
-  /** Production ingest: parquet of RawTableRow (S2). Column-pruned,
-    * filter-pushed scan — schema matches [[graft.schema.RawTableRow]].
-    */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** Per-table width (pandas `df.shape[1]` analog): tables are padded
-    * uniform by ingest, so any row's size works; max() is defensive.
-    * Tiny aggregate (one row per table) meant for broadcast-join back.
-    */
-  def tableWidths(cells: DataFrame): DataFrame =
-    cells.groupBy("table_id")
-      .agg(max(size(col("cells"))).as("table_width"))
-
   /** Enforce the rectangular-table invariant at an ingest boundary:
     * pad every row's `cells` with "" to its table's max width (exactly
     * what pandas does when camelot builds the frame — NaN-padding that
@@ -71,11 +57,12 @@ object CellTables {
     * hand-written CellTsv files, which round-trip ragged widths
     * losslessly by design) — it costs one extra pass over the cell
     * stream (a tiny per-table max broadcast-joined back), which is
-    * exactly the cost the row-0-only metadata aggregate avoids on
+    * exactly the cost the top-rows-only metadata aggregate avoids on
     * trusted inputs.
     */
   def rectangularize(cells: DataFrame): DataFrame =
-    cells.join(broadcast(tableWidths(cells)), "table_id")
+    cells.join(broadcast(cells.groupBy("table_id")
+        .agg(max(size(col("cells"))).as("table_width"))), "table_id")
       .withColumn("cells",
         concat(col("cells"), array_repeat(lit(""),
           greatest(col("table_width") - size(col("cells")), lit(0)))))

@@ -1,51 +1,87 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** P3 first-match dispatch (`cli.py:183-191`): for each detected table,
-  * try extractors in order [area, island]; the first whose `matches()`
-  * fires owns the table. Expressed as mutually-exclusive per-table tags
-  * (the short-circuit `break` becomes tag precedence), so each branch
-  * pipeline sees only its own tables.
+/** P3 first-match dispatch (`cli.py:158-160,183-191`): each detected
+  * table goes to the first extractor whose `matches()` fires, area
+  * before island. The rule lives in ONE place, [[tableMeta]]: one
+  * per-table aggregate over the top four rows tags every table with its
+  * `route` and carries the metadata both extractors need. Each family
+  * broadcast-joins that meta, filtered to its own route, onto the cell
+  * stream — the join that feeds the extractor is also the dispatch, so
+  * each family sees only its own tables and pays one meta aggregate.
   */
 object Dispatch {
 
-  /** Routing from precomputed per-table metadata: (table_id, route)
-    * where route ∈ {"area", "island", null}. Area wins ties, like the
-    * extractor ordering in `cli.py:158-160,183-189`.
-    */
-  def routesFromMeta(areaMeta: DataFrame, islandMeta: DataFrame): DataFrame = {
-    val area = areaMeta.select(col("table_id"), col("is_area"))
-    val island = islandMeta
-      .select(col("table_id"), col("match3").as("is_island"))
-    area.join(island, Seq("table_id"), "full_outer")
-      .select(col("table_id"),
-        when(coalesce(col("is_area"), lit(false)), "area")
-          .when(coalesce(col("is_island"), lit(false)), "island")
-          .as("route"))
+  // (route, header_idx, code_idx, name_idx, coord_idx, status_idx,
+  // info_idx) as a plain tuple — tuples stay inside whole-stage codegen
+  // where a nested case class would fall back to interpreted evaluation.
+  private val metaUdf = udf { (rows: Seq[Row]) =>
+    val top = rows.map(r =>
+      (r.getInt(0), Option(r.getSeq[String](1)).getOrElse(Nil)))
+    // area's matches() reads row 0; island's scans 3 rows, while
+    // island extraction locates its header in 4 (`extractors.py:
+    // 114-122,199-201,252-263`)
+    val isArea = top.exists { case (i, c) =>
+      i == 0 && AreaPipeline.matchesHeader(c) }
+    val h4 = IslandPipeline.headerIndex(top, 4)
+    val route =
+      if (isArea) "area"
+      else if (IslandPipeline.headerIndex(top, 3) >= 0) "island"
+      else null
+    if (h4 < 0) (route, -1, -1, -1, -1, -1, -1)
+    else {
+      val cols = IslandPipeline.inferColumns(
+        IslandPipeline.normHeaderRow(top.find(_._1 == h4).get._2))
+      (route, h4, cols.code, cols.name, cols.coordinate, cols.status,
+        cols.info)
+    }
   }
 
-  /** Per-table routing computed from scratch. */
+  /** Per-table metadata, one row per table (small enough to
+    * broadcast): (table_id, route, table_width, header_idx, code_idx,
+    * name_idx, coord_idx, status_idx, info_idx). `route` is "area",
+    * "island" or null — area wins ties. `table_width` is the header
+    * row's width, which keys the area name-column variant; the island
+    * indexes are -1 when absent.
+    *
+    * Aggregates only `row_idx < 4` — the filter is pushed to the scan.
+    * INPUT MUST BE RECTANGULAR (the camelot/pandas invariant — every
+    * ingest path in this engine pads: CellTables.ofGrid, the engine's
+    * own parquet), so the header row alone carries the table width.
+    * Sources that cannot guarantee it (hand-written CellTsv files) go
+    * through [[CellTables.rectangularize]] first; a data row wider than
+    * its header would otherwise shift the width-keyed variant
+    * projection.
+    */
+  def tableMeta(cells: DataFrame): DataFrame =
+    cells.filter(col("row_idx") < 4)
+      .groupBy("table_id")
+      .agg(
+        max(when(col("row_idx") === 0, size(col("cells")))).as("table_width"),
+        collect_list(struct(col("row_idx"), col("cells"))).as("top"))
+      .withColumn("meta", metaUdf(col("top")))
+      .select(col("table_id"), col("meta._1").as("route"),
+        col("table_width"),
+        col("meta._2").as("header_idx"), col("meta._3").as("code_idx"),
+        col("meta._4").as("name_idx"), col("meta._5").as("coord_idx"),
+        col("meta._6").as("status_idx"), col("meta._7").as("info_idx"))
+
+  /** Per-table routing: (table_id, route). */
   def routes(cells: DataFrame): DataFrame =
-    routesFromMeta(AreaPipeline.tableMeta(cells),
-      IslandPipeline.tableMeta(cells))
+    tableMeta(cells).select("table_id", "route")
 
   /** Dispatch + extract both families. Returns (area tagged rows,
     * island rows); each side only sees tables routed to it.
-    *
-    * Route resolution is folded INTO each side's metadata instead of
-    * materializing a routes frame and broadcast-filtering the cell
-    * stream per side: the extract pipelines already broadcast-join
-    * their (tiny, per-table) meta onto the cells, so pre-filtering the
-    * meta to the routed tables makes that one join do the dispatch as
-    * well — one meta aggregate and ONE broadcast join per family,
-    * rather than the previous routes full_outer join plus a second
-    * broadcast route-filter join on the full stream. Area wins ties
-    * like the extractor ordering (`cli.py:158-160,183-189`): an
-    * area-matched table is removed from the island meta by a tiny
-    * meta-vs-meta broadcast anti-join.
     */
+  def extractAll(cells: DataFrame): (DataFrame, DataFrame) = {
+    val meta = tableMeta(cells)
+    def routed(family: String) = Some(meta.filter(col("route") === family))
+    (AreaPipeline.extract(cells, precomputedMeta = routed("area")),
+      IslandPipeline.extract(cells, precomputedMeta = routed("island")))
+  }
+
   /** [[extractAll]] over a SHARED one-exchange materialization of the
     * cell stream. Each family needs the stream at least twice (the
     * per-table meta aggregate and the extract pass; the area side a
@@ -57,7 +93,7 @@ object Dispatch {
     * branch, so the upstream runs exactly once.
     *
     * Keep plain [[extractAll]] for pushdown-capable sources (the
-    * CellTsv DSv2 path): there the meta pass prunes to `row_idx == 0`
+    * CellTsv DSv2 path): there the meta pass prunes to `row_idx < 4`
     * AT THE SCAN — far cheaper than forcing the full stream through an
     * exchange. (The multi-sink [[ExtractJob]] needs neither: it
     * `cache()`s both extracted frames explicitly.)
@@ -81,16 +117,5 @@ object Dispatch {
         col("table_id"), col("page"), col("row_idx"), col("seq"),
         col("cells")))
     extractAll(shared)
-  }
-
-  def extractAll(cells: DataFrame): (DataFrame, DataFrame) = {
-    val areaRouted = AreaPipeline.tableMeta(cells)
-      .filter(col("is_area"))
-    val islandRouted = IslandPipeline.tableMeta(cells)
-      .filter(col("match3") && col("header_idx") >= 0)
-      .join(broadcast(areaRouted.select("table_id")), Seq("table_id"),
-        "left_anti")
-    (AreaPipeline.extract(cells, precomputedMeta = Some(areaRouted)),
-      IslandPipeline.extract(cells, precomputedMeta = Some(islandRouted)))
   }
 }

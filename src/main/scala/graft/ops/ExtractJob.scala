@@ -36,6 +36,36 @@ object ExtractJob {
   final case class NoMatchingDataException(message: String)
       extends RuntimeException(message)
 
+  /** The entity fan-out of one extraction (`cli.py:183-194`): the
+    * [[EtlConfig.Areas]] frames in order, each paired with its config
+    * and renamed to the configured output headers. `seq` rides along
+    * for document order; island flags stay Int (CsvSink casts every
+    * column to string at write, matching the reference's
+    * stringify-at-serialize).
+    */
+  def entityFrames(
+      area: DataFrame,
+      island: DataFrame,
+      config: EtlConfig.Config)
+      : Seq[(String, EtlConfig.DataConfig, DataFrame)] =
+    EtlConfig.Areas.map { entityName =>
+      val df =
+        if (entityName == "island") island
+        else AreaPipeline.entity(area, entityName)
+      val cfg = config.data.getOrElse(entityName,
+        throw EtlConfig.ConfigError(
+          s"Missing or invalid configuration for area '$entityName'"))
+      val headers = cfg.outputHeaders
+      val dataCols = df.columns.filterNot(_ == "seq")
+      if (headers.length != dataCols.length)
+        throw EtlConfig.ConfigError(
+          s"header arity mismatch for $entityName: " +
+            s"$headers vs ${dataCols.toSeq}")
+      (entityName, cfg, df.select(
+        (dataCols.zip(headers).map { case (c, h) => col(c).as(h) } :+
+          col("seq")).toIndexedSeq: _*))
+    }
+
   def run(
       cells: DataFrame,
       destination: String,
@@ -49,30 +79,12 @@ object ExtractJob {
     val areaCached = area.cache()
     val islandCached = island.cache()
     try {
-      val entityFrames: Seq[(String, DataFrame)] =
-        Seq("province", "regency", "district", "village")
-          .map(e => e -> AreaPipeline.entity(areaCached, e)) :+
-          // flags stay Int here; CsvSink casts every column to string
-          // at write (matching the reference's stringify-at-serialize)
-          ("island" -> islandCached)
-
-      val written = entityFrames.map { case (entityName, df) =>
-        val cfg = config.data.getOrElse(entityName,
-          throw EtlConfig.ConfigError(
-            s"Missing or invalid configuration for area '$entityName'"))
-        val headers = cfg.outputHeaders
-        val dataCols = df.columns.filterNot(_ == "seq")
-        if (headers.length != dataCols.length)
-          throw EtlConfig.ConfigError(
-            s"header arity mismatch for $entityName: " +
-              s"$headers vs ${dataCols.toSeq}")
-        val renamed = df.select(
-          (dataCols.zip(headers).map { case (c, h) => col(c).as(h) } :+
-            col("seq")).toIndexedSeq: _*)
-        val path = CsvSink.write(renamed, destination, outputName,
-          cfg.filenameSuffix, singleFile)
-        // cache is hot after the write; this count never hits the source
-        (entityName, renamed.count(), path)
+      val written = entityFrames(areaCached, islandCached, config).map {
+        case (entityName, cfg, df) =>
+          val path = CsvSink.write(df, destination, outputName,
+            cfg.filenameSuffix, singleFile)
+          // cache is hot after the write; this count never hits the source
+          (entityName, df.count(), path)
       }
 
       val counts = written.map { case (e, c, _) => e -> c }.toMap

@@ -9,10 +9,10 @@ import graft.functions.{Cleanse, Coordinates}
   * `tests/test_extractors.py:491-710`.
   *
   * Scale design mirrors [[AreaPipeline]]: header location + column
-  * inference happen in a tiny per-table aggregate over only the top 4
-  * rows of each table (a pushed-down `row_idx < 4` filter), broadcast
-  * back onto the stream; the row shaping is a single codegen'd
-  * projection with two UDF islands (fix_wrapped_name, format_coordinate).
+  * inference happen in the shared per-table aggregate
+  * [[Dispatch.tableMeta]] over only the top 4 rows of each table (a
+  * pushed-down `row_idx < 4` filter), broadcast back onto the stream;
+  * the row shaping is a single codegen'd projection.
   */
 object IslandPipeline {
 
@@ -67,37 +67,14 @@ object IslandPipeline {
       .collectFirst { case (i, cells) if isIslandHeader(normHeaderRow(cells)) => i }
       .getOrElse(-1)
 
-  // Returns (header_idx, match3, code_idx, name_idx, coord_idx,
-  // status_idx, info_idx) as a plain tuple — tuples stay inside
-  // whole-stage codegen where a nested case class would fall back to
-  // interpreted evaluation.
-  private val metaUdf = udf { (rows: Seq[org.apache.spark.sql.Row]) =>
-    val top = rows.map(r => (r.getInt(0), r.getSeq[String](1)))
-    val h4 = headerIndex(top, 4)
-    val h3 = headerIndex(top, 3)
-    if (h4 < 0) (-1, false, -1, -1, -1, -1, -1)
-    else {
-      val cols = inferColumns(
-        normHeaderRow(top.find(_._1 == h4).get._2))
-      (h4, h3 >= 0, cols.code, cols.name, cols.coordinate,
-        cols.status, cols.info)
-    }
-  }
-
-  /** Per-table metadata: (table_id, header_idx, match3, *_idx).
-    * Aggregates only `row_idx < 4` — the filter is pushed to the scan;
-    * output is one row per table, broadcastable.
+  /** Per-table metadata: (table_id, header_idx, code_idx, name_idx,
+    * coord_idx, status_idx, info_idx), one row per table — the island
+    * columns of [[Dispatch.tableMeta]]. `header_idx` is -1 when no
+    * header appears in the top 4 rows.
     */
   def tableMeta(cells: DataFrame): DataFrame =
-    cells.filter(col("row_idx") < 4)
-      .groupBy("table_id")
-      .agg(collect_list(struct(col("row_idx"), col("cells"))).as("top"))
-      .withColumn("meta", metaUdf(col("top")))
-      .select(col("table_id"),
-        col("meta._1").as("header_idx"), col("meta._2").as("match3"),
-        col("meta._3").as("code_idx"), col("meta._4").as("name_idx"),
-        col("meta._5").as("coord_idx"), col("meta._6").as("status_idx"),
-        col("meta._7").as("info_idx"))
+    Dispatch.tableMeta(cells).select("table_id", "header_idx", "code_idx",
+      "name_idx", "coord_idx", "status_idx", "info_idx")
 
   /** `val()` (`extractors.py:269-272`): absent column or short row -> "";
     * else `str(cell).strip()` (Unicode strip).
@@ -111,18 +88,17 @@ object IslandPipeline {
     * (code, regency_code, coordinate, is_populated, is_outermost_small,
     * name, seq) in document order via seq.
     *
-    * @param requireMatch3 require the dispatcher's 3-row `matches()`
-    *   rule in addition to the 4-row extraction locate — true in the
-    *   dispatched pipeline (`cli.py:183-191`), false when calling the
-    *   extractor directly (as the reference unit tests do).
+    * Like the reference's extractor called directly (as its unit tests
+    * do), this processes every table with a header in its top 4 rows.
+    * The dispatched pipeline passes [[Dispatch.tableMeta]] filtered to
+    * the island route as `precomputedMeta`, which also applies the
+    * dispatcher's 3-row `matches()` rule (`cli.py:183-191`).
     */
   def extract(
       cells: DataFrame,
-      requireMatch3: Boolean = false,
       precomputedMeta: Option[DataFrame] = None): DataFrame = {
-    val meta0 = precomputedMeta.getOrElse(tableMeta(cells))
+    val meta = precomputedMeta.getOrElse(tableMeta(cells))
       .filter(col("header_idx") >= 0)
-    val meta = if (requireMatch3) meta0.filter(col("match3")) else meta0
 
     val withMeta = cells.join(broadcast(meta), "table_id")
       .filter(col("row_idx") > col("header_idx"))

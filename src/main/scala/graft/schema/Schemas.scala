@@ -18,16 +18,3 @@ case class RawTableRow(
     row_idx: Int,
     seq: Long,
     cells: Seq[String])
-
-/** Output entities (reference `idnareaetl.toml:1-31`, SURVEY §1.2). */
-case class Province(code: String, name: String)
-case class Regency(code: String, province_code: String, name: String)
-case class District(code: String, regency_code: String, name: String)
-case class Village(code: String, district_code: String, name: String)
-case class Island(
-    code: String,
-    regency_code: String,
-    coordinate: String,
-    is_populated: Int,
-    is_outermost_small: Int,
-    name: String)

@@ -1,49 +1,30 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import graft.ops.{AreaPipeline, Dispatch}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.config.EtlConfig
+import graft.ops.{Dispatch, ExtractJob}
 import graft.schema.RawTableRow
 
 /** Structured-Streaming analog of the reference's manually-driven
   * micro-batch loop (SURVEY §2.9): the chunk loop (`cli.py:170-194`)
   * becomes a file-source stream with `Trigger.AvailableNow`; the
-  * cross-chunk `_seen_provinces` set (`extractors.py:110-112,166-169`)
-  * becomes keyed state in [[dedupProvincesStateful]]; the buffered
-  * incremental sinks (`writer.py:59-73`) become `foreachBatch` appends;
-  * the graceful interrupt (`cli.py:30-37`) is `query.stop()`.
+  * buffered incremental sinks (`writer.py:59-73`) become `foreachBatch`
+  * appends; the graceful interrupt (`cli.py:30-37`) is `query.stop()`.
   *
-  * Scale shape: each micro-batch runs the SAME batch pipeline
-  * (dispatch → extract), so the plan properties (broadcast metas,
-  * pushed filters, codegen) carry over unchanged; the only addition is
-  * the state store, keyed by province code — tiny values (one boolean
-  * per code), partitioned by key, checkpointed incrementally.
+  * Each micro-batch runs the SAME batch pipeline as [[ExtractJob]]
+  * (dispatch → extract → [[ExtractJob.entityFrames]] with
+  * [[EtlConfig.Default]]), so the plan properties (broadcast metas,
+  * pushed filters, codegen) carry over unchanged. The run-global
+  * `_seen_provinces` set (`extractors.py:110-112,166-169`) is a table
+  * of province codes under the checkpoint dir, one entry per batch id:
+  * batch B records its own codes, then drops the provinces whose code
+  * an entry below B holds. A replayed batch overwrites its own entry
+  * and reads the same earlier ones, so it gives the same output.
   */
 object StreamingExtract {
-
-  /** One extracted province row in document order. */
-  case class ProvinceRow(code: String, name: String, seq: Long)
-
-  /** A1's cross-batch first-occurrence dedup as keyed stream state:
-    * the first row per code (lowest `seq`) is emitted exactly once
-    * across ALL micro-batches; later occurrences hit existing state and
-    * vanish — the reference's run-global `_seen_provinces` semantics.
-    */
-  def dedupProvincesStateful(
-      provinces: Dataset[ProvinceRow]): Dataset[ProvinceRow] = {
-    import provinces.sparkSession.implicits._
-    provinces
-      .groupByKey(_.code)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: String, rows: Iterator[ProvinceRow], state: GroupState[Boolean]) =>
-          if (state.exists) Iterator.empty
-          else {
-            state.update(true)
-            rows.reduceOption((a, b) => if (a.seq <= b.seq) a else b).iterator
-          })
-  }
 
   /** File-source stream of cell tables (the post-camelot boundary):
     * new parquet files under `cellsDir` are the "new chunks".
@@ -54,30 +35,40 @@ object StreamingExtract {
       .parquet(cellsDir)
 
   /** End-to-end streaming extract: per micro-batch, run the batch
-    * dispatch+extract pipeline and hand each entity frame to `sink`
-    * (batchId, entity name, rows). The batchId is the CHECKPOINTED
-    * micro-batch id — monotonic across restarts, so sinks keying
-    * output on it never collide with a previous run's output.
-    * `Trigger.AvailableNow` processes the backlog then stops — the
-    * chunked-run analog; drop the trigger for a long-lived
-    * tail-the-directory job.
+    * dispatch+extract pipeline and hand each entity frame, renamed to
+    * the default config's headers, to `sink` (batchId, entity name,
+    * rows). The batchId is the CHECKPOINTED micro-batch id — monotonic
+    * across restarts, so sinks keying output on it never collide with
+    * a previous run's output. `Trigger.AvailableNow` processes the
+    * backlog then stops — the chunked-run analog; drop the trigger for
+    * a long-lived tail-the-directory job.
     */
   def run(
       cells: DataFrame,
       checkpointDir: String,
-      sink: (Long, String, DataFrame) => Unit): StreamingQuery =
+      sink: (Long, String, DataFrame) => Unit): StreamingQuery = {
+    val seenDir = new Path(checkpointDir, "seen_provinces").toString
     cells.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (area, island) = Dispatch.extractAll(batch)
-        val areaCached = area.cache()
+        val (extracted, island) = Dispatch.extractAll(batch)
+        val cached = extracted.cache()
         try {
-          Seq("province", "regency", "district", "village").foreach { e =>
-            sink(batchId, e, AreaPipeline.entity(areaCached, e))
-          }
-          sink(batchId, "island", island)
-        } finally { areaCached.unpersist(); () }
+          // record this batch's codes first: the table then exists, and
+          // a replay overwrites the same entry
+          cached.filter(col("entity") === "province").select("code")
+            .coalesce(1).write.mode("overwrite")
+            .parquet(new Path(seenDir, s"batch_id=$batchId").toString)
+          val seen = batch.sparkSession.read.parquet(seenDir)
+            .filter(col("batch_id") < batchId)
+            .select(lit("province").as("entity"), col("code"))
+          val area = cached.join(broadcast(seen), Seq("entity", "code"),
+            "left_anti")
+          ExtractJob.entityFrames(area, island, EtlConfig.Default)
+            .foreach { case (e, _, df) => sink(batchId, e, df) }
+        } finally { cached.unpersist(); () }
       }
       .start()
+  }
 }

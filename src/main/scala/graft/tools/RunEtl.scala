@@ -12,12 +12,16 @@ import graft.ops.{ExtractJob, PageRange}
   * Usage:
   *   RunEtl <cells.parquet> <destDir> <outputName>
   *          [--config <toml>] [--pages <range>] [--multi-file]
+  *          [--rectangularize]
   *
   * `--pages` takes the reference's `1-4,6` grammar (`cli.py:146-150`,
   * `utils.py:87-100`) and prunes the scan by the `page` column — the
   * partition-pruning analog of the reference's page selection. The CLI
   * writes reference-parity single files by default; `--multi-file`
   * switches to the scale-safe range-partitioned layout.
+  * `--rectangularize` pads ragged rows to their table's width
+  * ([[graft.ops.CellTables.rectangularize]]) for sources that do not
+  * guarantee rectangular tables.
   *
   * Without a config path, the reference's shipped `idnareaetl.toml`
   * defaults apply (suffixes province/regency/district/village/island,
@@ -25,18 +29,8 @@ import graft.ops.{ExtractJob, PageRange}
   */
 object RunEtl {
 
-  /** Defaults matching `/root/reference/idnareaetl.toml`. */
-  def defaultConfig: EtlConfig.Config = EtlConfig.Config(Map(
-    "province" -> EtlConfig.DataConfig(500, Seq("code", "name"), "province"),
-    "regency" -> EtlConfig.DataConfig(500,
-      Seq("code", "province_code", "name"), "regency"),
-    "district" -> EtlConfig.DataConfig(1000,
-      Seq("code", "regency_code", "name"), "district"),
-    "village" -> EtlConfig.DataConfig(2000,
-      Seq("code", "district_code", "name"), "village"),
-    "island" -> EtlConfig.DataConfig(1000,
-      Seq("code", "regency_code", "coordinate", "is_populated",
-        "is_outermost_small", "name"), "island")))
+  /** The reference's shipped config, [[EtlConfig.Default]]. */
+  def defaultConfig: EtlConfig.Config = EtlConfig.Default
 
   private val Usage =
     "usage: RunEtl <cells.parquet> <destDir> <outputName> " +

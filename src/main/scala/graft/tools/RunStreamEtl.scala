@@ -13,8 +13,9 @@ import graft.streaming.StreamingExtract
   *
   * Runs with `Trigger.AvailableNow`: processes the current backlog then
   * exits (re-run to pick up new files; the checkpoint makes that
-  * exactly-once). Each entity batch is written as a per-batch CSV
-  * directory — appends never rewrite prior output.
+  * exactly-once, and a province written by an earlier run on the same
+  * checkpoint is not written again). Each entity batch is written as a
+  * per-batch CSV directory — appends never rewrite prior output.
   */
 object RunStreamEtl {
   def main(args: Array[String]): Unit = {

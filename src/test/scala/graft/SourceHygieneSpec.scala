@@ -46,4 +46,14 @@ class SourceHygieneSpec extends AnyFunSuite {
         .contains("SparkSession.builder"))
     assert(builders.isEmpty, builders.mkString("\n"))
   }
+
+  test("only graft.config.EtlConfig lists the area entities under src/main") {
+    // one entity list (EtlConfig.Areas): the batch and streaming
+    // fan-outs iterate it instead of restating it
+    val literal = "\"province\", \"regency\", \"district\", \"village\""
+    val copies = sourceFiles(Paths.get("src/main"))
+      .filter(p => p.getFileName.toString != "EtlConfig.scala")
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(literal))
+    assert(copies.isEmpty, copies.mkString("\n"))
+  }
 }

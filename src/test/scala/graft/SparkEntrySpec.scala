@@ -81,13 +81,13 @@ class SparkEntrySpec extends SparkSpec {
     // only — BroadcastExchange (small dims) and ReusedExchange are
     // deliberate and excluded.
     // NOTE these are STATIC-plan counts: extractAllShared's one
-    // repartition prints once per consuming branch here (area 3×,
+    // repartition prints once per consuming branch here (area 4×,
     // island 2×) and collapses to a single exchange + ReusedExchange
     // at runtime — the "e2e pipelines scan once and reuse" spec below
     // pins that.
     val shuffles = raw"(?<!Broadcast|Reused)Exchange".r
     for ((name, pinned) <- Seq(
-        "pipeline_area_e2e" -> 7, "pipeline_island_e2e" -> 5)) {
+        "pipeline_area_e2e" -> 7, "pipeline_island_e2e" -> 3)) {
       val plan = SparkEntry.queries(name)(
         spark, "/root/testdata/sf0.001").queryExecution.executedPlan.toString
       assert(!plan.contains("SortMergeJoin"), s"$name grew an SMJ:\n$plan")

@@ -3,10 +3,11 @@ package graft.ops
 import graft.SparkSpec
 
 /** Physical-plan pins for the dispatch + extract product: routing is
-  * folded into each family's per-table metadata, so the ONLY joins in
-  * either side's plan are broadcast hash joins of that tiny meta — a
-  * shuffle (sort-merge) join of the cell stream would be a scale
-  * regression (the stream side must never move for dispatch).
+  * one per-table metadata aggregate that each family filters to its own
+  * route, so the ONLY joins in either side's plan are broadcast hash
+  * joins of that tiny meta — a shuffle (sort-merge) join of the cell
+  * stream would be a scale regression (the stream side must never move
+  * for dispatch).
   */
 class DispatchPlanSpec extends SparkSpec {
 
@@ -30,5 +31,23 @@ class DispatchPlanSpec extends SparkSpec {
     // the one stream shuffle on the area side is the province
     // first-occurrence window (partitioned by code) — nothing else
     assert(area.contains("Window"), area)
+  }
+
+  test("each family plans exactly one metadata aggregate and no anti-join") {
+    // the routing rule is one aggregate (Dispatch.tableMeta) that both
+    // families read; a second per-family meta pass, or an anti-join to
+    // enforce area-wins-ties, would re-scan the top rows per family.
+    // FINAL plans: the area side's two province-dedup branches each
+    // print the meta broadcast statically, and AQE reuses one stage.
+    val cells = CellTables.ofGrids(spark,
+      Seq(Fixtures.dfArea, Fixtures.dfIsland))
+    val (area, island) = Dispatch.extractAll(cells)
+    for ((name, df) <- Seq("area" -> area, "island" -> island)) {
+      val p = graft.tools.Inspect.finalPlan(df)
+      val metaAggs = p.linesIterator
+        .count(l => l.contains("Aggregate(") && l.contains("partial_"))
+      assert(metaAggs == 1, s"$name side plans $metaAggs meta aggregates:\n$p")
+      assert(!p.contains("LeftAnti"), s"$name side plans an anti-join:\n$p")
+    }
   }
 }

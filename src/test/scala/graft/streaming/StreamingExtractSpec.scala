@@ -1,48 +1,30 @@
 package graft.streaming
 
-import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
+import java.nio.file.{Files, Path}
+import org.apache.spark.sql.Row
 import graft.SparkSpec
 import graft.ops.{CellTables, Fixtures}
-import graft.schema.RawTableRow
 
-/** Streaming semantics (SURVEY §2.9): cross-batch first-occurrence
-  * province dedup via keyed state, and the foreachBatch chunk loop over
-  * a file source.
+/** Streaming semantics (SURVEY §2.9): the foreachBatch chunk loop over
+  * a file source, and the run-global first-occurrence province dedup
+  * across micro-batches and restarts.
   */
 class StreamingExtractSpec extends SparkSpec {
-  import graft.SparkTestSession.spark.implicits._
 
-  test("stateful dedup emits each province once ACROSS micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[StreamingExtract.ProvinceRow]
-    val deduped = StreamingExtract.dedupProvincesStateful(input.toDS())
-    val q = deduped.writeStream
-      .format("memory").queryName("prov_dedup")
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-").toString)
-      .start()
-    try {
-      // batch 1: two distinct provinces, one repeated inside the batch
-      input.addData(
-        StreamingExtract.ProvinceRow("11", "Aceh", 0L),
-        StreamingExtract.ProvinceRow("11", "Aceh dup", 5L),
-        StreamingExtract.ProvinceRow("12", "Sumut", 1L))
-      q.processAllAvailable()
-      // batch 2: "11" again (cross-batch dup) plus a new province
-      input.addData(
-        StreamingExtract.ProvinceRow("11", "Aceh again", 9L),
-        StreamingExtract.ProvinceRow("13", "Sumbar", 10L))
-      q.processAllAvailable()
-      val out = spark.table("prov_dedup")
-        .as[StreamingExtract.ProvinceRow].collect()
-        .sortBy(_.code)
-      assert(out.map(_.code).toSeq == Seq("11", "12", "13"))
-      // first occurrence in document order won (seq 0, not 5 or 9)
-      assert(out.head.name == "Aceh")
-    } finally q.stop()
+  /** One `Trigger.AvailableNow` run over `srcDir`; the sink collects
+    * every entity frame's rows.
+    */
+  private def runOnce(srcDir: Path, ckpt: Path): Map[String, Seq[Row]] = {
+    val out = scala.collection.concurrent.TrieMap.empty[String, Seq[Row]]
+    StreamingExtract.run(
+      StreamingExtract.readCells(spark, srcDir.toString),
+      ckpt.toString,
+      (_, entity, df) => {
+        val rows = df.collect().toSeq
+        out.updateWith(entity)(c => Some(c.getOrElse(Nil) ++ rows))
+        ()
+      }).awaitTermination()
+    out.toMap
   }
 
   test("foreachBatch file-source run extracts each entity per chunk") {
@@ -72,5 +54,38 @@ class StreamingExtractSpec extends SparkSpec {
     assert(counts.keySet ==
       Set("province", "regency", "district", "village", "island"))
     assert(batchIds.keySet.nonEmpty) // checkpointed ids delivered
+  }
+
+  test("a province seen by an earlier run on the checkpoint is not written again") {
+    val srcDir = Files.createTempDirectory("graft-stream-src-")
+    val ckpt = Files.createTempDirectory("graft-stream-ckpt-")
+    def chunk(name: String, tableId: Long, seqStart: Long): Unit =
+      CellTables.ofGrid(spark, Seq(
+        Seq("K O D E", "NAMA PROVINSI", "", "", "", "", ""),
+        Seq("", "", "", "", "", "", ""),
+        Seq("11", name, "", "", "", "", ""),
+        Seq(s"11.0$tableId", s"Kabupaten $name", "", "", "", "", "")),
+        tableId = tableId, seqStart = seqStart)
+        .write.mode("append").parquet(srcDir.toString)
+
+    // a province-less first run: its batch records an empty entry
+    CellTables.ofGrid(spark, Fixtures.dfIsland, tableId = 0L, seqStart = 500L)
+      .write.mode("append").parquet(srcDir.toString)
+    val islands = runOnce(srcDir, ckpt)
+    chunk("Aceh", 1L, 0L)
+    val first = runOnce(srcDir, ckpt)
+    chunk("Aceh Lagi", 2L, 100L)
+    val second = runOnce(srcDir, ckpt)
+
+    assert(islands("province").isEmpty && islands("island").nonEmpty)
+    val provinces = first("province") ++ second("province")
+    assert(provinces.map(r => (r.getString(0), r.getString(1))) ==
+      Seq(("11", "Aceh")))
+    // only provinces are deduped across batches: each run writes its regency
+    assert(first("regency").map(_.getString(0)) == Seq("11.01"))
+    assert(second("regency").map(_.getString(0)) == Seq("11.02"))
+    // the sink frames carry the default config's output headers
+    assert(first("regency").head.schema.fieldNames.toSeq ==
+      Seq("code", "province_code", "name", "seq"))
   }
 }
