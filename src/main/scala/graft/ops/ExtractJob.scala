@@ -17,12 +17,14 @@ import graft.io.CsvSink
   * writes (entities have different schemas, so separate writes, per
   * SURVEY §2.1).
   *
-  * Row counts (A2's count accumulation) are taken AFTER each write,
-  * from the already-populated cache: the count job reads memory, not
-  * the source, so the extract pipelines execute exactly once. (A
-  * `Dataset.observe` metric was tried and rejected: the ordered write's
-  * range-partitioner sampling pass evaluates the plan a second time and
-  * double-counts the metric.)
+  * Row counts (A2's count accumulation) are taken ONCE, after all
+  * five writes, by one action over the already-populated caches: the
+  * area frame's rows grouped by entity plus the island rows. It reads
+  * memory, not the source, so the extract pipelines execute exactly
+  * once; an entity with no rows reads 0. (A `Dataset.observe` metric
+  * was tried and rejected: the ordered write's range-partitioner
+  * sampling pass evaluates the plan a second time and double-counts
+  * the metric.)
   */
 object ExtractJob {
 
@@ -79,18 +81,21 @@ object ExtractJob {
     val areaCached = area.cache()
     val islandCached = island.cache()
     try {
-      val written = entityFrames(areaCached, islandCached, config).map {
-        case (entityName, cfg, df) =>
-          val path = CsvSink.write(df, destination, outputName,
+      val files = entityFrames(areaCached, islandCached, config).map {
+        case (_, cfg, df) =>
+          CsvSink.write(df, destination, outputName,
             cfg.filenameSuffix, singleFile)
-          // cache is hot after the write; this count never hits the source
-          (entityName, df.count(), path)
       }
-
-      val counts = written.map { case (e, c, _) => e -> c }.toMap
+      // caches are hot after the writes; this one action never hits
+      // the source
+      val byEntity = areaCached.groupBy(col("entity")).count()
+        .union(islandCached.groupBy(lit("island").as("entity")).count())
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val counts = EtlConfig.Areas
+        .map(e => e -> byEntity.getOrElse(e, 0L)).toMap
       if (counts.values.sum == 0)
         throw NoMatchingDataException("No matching data found")
-      Result(counts, written.map(_._3))
+      Result(counts, files)
     } finally {
       areaCached.unpersist()
       islandCached.unpersist()

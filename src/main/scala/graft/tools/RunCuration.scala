@@ -1,8 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBridge
 
+import graft.Harness
 import graft.ops.{Components, Redaction, Sampling, TextAnalysis, TextDedup}
 
 /** One-command corpus curation run — the 100 TB job this engine
@@ -14,7 +16,8 @@ import graft.ops.{Components, Redaction, Sampling, TextAnalysis, TextDedup}
   *
   * Usage:
   *   RunCuration <documents.parquet> <destDir> [--shards N]
-  *               [--no-redact] [--classifier]
+  *               [--no-redact] [--classifier] [--near-index DIR]
+  *               [--eval-rate R]
   *
   * The input needs (doc_id BIGINT, text STRING); extra columns pass
   * through to the sink untouched. `--classifier` adds the linear
@@ -24,9 +27,11 @@ import graft.ops.{Components, Redaction, Sampling, TextAnalysis, TextDedup}
   * assumed to be real multi-line documents, and every stage is the
   * operator itself.
   *
-  * Plan shape: gates and line cleaning are per-row projections, dedup
-  * is one hash-partitioned window, the shard write is one exchange +
-  * per-shard local sorts — three exchanges total at any corpus size.
+  * Plan shape: gates, line cleaning and redaction are per-row
+  * projections, dedup is one hash-partitioned window, the shard write
+  * is one exchange + per-shard local sorts — two exchanges total at
+  * any corpus size. The funnel is counted in that same pass (see
+  * [[curate]]), so the product runs the pipeline once.
   */
 object RunCuration {
 
@@ -35,49 +40,55 @@ object RunCuration {
       "[--shards N] [--no-redact] [--classifier] [--near-index DIR] " +
       "[--eval-rate R]"
 
-  /** The pipeline as a function, for tests: returns (curated frame,
-    * funnel thunk). The funnel is computed from the same gate columns
-    * the pipeline filters on — one extra scan, zero extra logic — but
-    * LAZILY: forcing it costs a driver collect of a 1-row aggregate
-    * plus a full pipeline count, so callers that only want the curated
-    * frame (or run at corpus scale with accounting disabled) never pay
-    * for the two accounting scans.
+  /** The pipeline as a function: returns (curated frame, funnel
+    * thunk). The funnel's counts are taken by two `Observation`s on the
+    * frame itself — the input and gate counts on the flagged rows
+    * before the filter, the kept count on the returned frame — so they
+    * come from the first action that runs `out`. In the product that
+    * action is the shard write, and the thunk then only formats the
+    * line and submits no Spark job. A thunk forced before any action
+    * has run `out` first runs ONE `noop` pass of it. An action that
+    * reads only part of `out` (`head`, `show`, a `limit`) would count
+    * only that part, so force the funnel before such an action. The
+    * frame stays lazy; every call makes fresh observations.
     */
   def curate(
       docs: DataFrame,
       redact: Boolean = true,
       classifier: Boolean = false): (DataFrame, () => String) = {
-    val gk = TextAnalysis.gopherKeep(col("text"))
-    val pk = TextAnalysis.c4PageKeep(col("text"))
-    val keepAll = if (classifier)
-      gk && pk && TextAnalysis.classifierKeep(col("text"))
-    else gk && pk
-    val gated = docs
-      .withColumn("__keep", keepAll)
+    val gates = Observation()
+    val kept = Observation()
+    val flagged = docs
+      .withColumn("__gk", TextAnalysis.gopherKeep(col("text")))
+      .withColumn("__pk", TextAnalysis.c4PageKeep(col("text")))
+      .observe(gates, count(lit(1)).as("n_input"),
+        count_if(col("__gk")).as("n_gopher"),
+        count_if(col("__gk") && col("__pk")).as("n_gates"))
+    val keep = if (classifier)
+      col("__gk") && col("__pk") && TextAnalysis.classifierKeep(col("text"))
+    else col("__gk") && col("__pk")
+    val gated = flagged
       .withColumn("__nd", monotonically_increasing_id())
-      .filter(col("__keep") && col("__nd") >= 0)
-      .drop("__keep", "__nd")
+      .filter(keep && col("__nd") >= 0)
+      .drop("__gk", "__pk", "__nd")
     val cleaned = gated.withColumn("text",
       TextAnalysis.c4LineClean(col("text")))
     val deduped = TextDedup.exactDedupKeepFirst(cleaned).drop("text_hash")
-    val out = if (redact) {
-      val scrubbed = Redaction.piiScrub(deduped)
-      deduped.drop("text").join(scrubbed
-        .select(col("doc_id"), col("redacted").as("text")), "doc_id")
-    } else deduped
+    // redaction is a per-row projection; the column order is doc_id,
+    // the pass-through columns, then text
+    val curated = if (redact) deduped.select((col("doc_id") +:
+        deduped.columns.filterNot(Set("doc_id", "text")).map(col).toSeq) :+
+        Redaction.redact(col("text")).as("text"): _*)
+      else deduped
+    val out = curated.observe(kept, count(lit(1)).as("n_out"))
     val funnel = () => {
-      // the ONE driver-side collect in this tool is a 1-row aggregate
-      // (four counters) for the run-log line — never corpus rows
-      val f = docs.agg(
-        count(lit(1)).as("n_input"),
-        sum(when(gk, 1L).otherwise(0L)).as("n_gopher"),
-        sum(when(gk && pk, 1L).otherwise(0L)).as("n_gates"))
-        .collect().head
-      val kept = out.count()
-      s"""{"n_input":${f.getAs[Long]("n_input")},""" +
-        s""""n_gopher":${f.getAs[Long]("n_gopher")},""" +
-        s""""n_gates":${f.getAs[Long]("n_gates")},""" +
-        s""""n_out":$kept}"""
+      // an action's observations land on the listener bus thread
+      def fired = gates.future.isCompleted && kept.future.isCompleted
+      if (!fired) ListenerBridge.drain(docs.sparkSession)
+      if (!fired) Harness.noop(out)
+      val g = gates.get
+      s"""{"n_input":${g("n_input")},"n_gopher":${g("n_gopher")},""" +
+        s""""n_gates":${g("n_gates")},"n_out":${kept.get("n_out")}}"""
     }
     (out, funnel)
   }
@@ -113,25 +124,30 @@ object RunCuration {
       labeled.filter(col("split") === "eval").drop("split"))
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.length < 2) { System.err.println(Usage); sys.exit(2) }
+  /** One run over `args` (the usage line without the program name):
+    * curate, gate, split and write, then return the funnel line. The
+    * plain path reads the funnel after the shard write, which counted
+    * it. `--near-index` and `--eval-rate` build more frames on `out`,
+    * and `Components` runs jobs while `splitFrames` builds, so those
+    * paths force the funnel first.
+    */
+  def run(spark: SparkSession, args: Array[String]): String = {
+    require(args.length >= 2, Usage)
     val src = args(0)
     val dest = args(1)
     val rest = args.drop(2)
-    val shards = rest.sliding(2).collectFirst {
-      case Array("--shards", n) => n.toInt
-    }.getOrElse(16)
+    def opt(name: String): Option[String] =
+      rest.sliding(2).collectFirst { case Array(`name`, v) => v }
+    val shards = opt("--shards").map(_.toInt).getOrElse(16)
     val redact = !rest.contains("--no-redact")
     val classifier = rest.contains("--classifier")
-
-    val spark = graft.Harness.session()
-
-    val nearIndex = rest.sliding(2).collectFirst {
-      case Array("--near-index", d) => d
-    }
+    val nearIndex = opt("--near-index")
+    val evalRate = opt("--eval-rate").map(_.toDouble)
 
     val docs = spark.read.parquet(src)
     val (curated, funnel) = curate(docs, redact, classifier)
+    val early = if (nearIndex.isDefined || evalRate.isDefined)
+      Some(funnel()) else None
     // cross-snapshot NEAR-dup gate against the persisted MinHash index
     // (RunDedupIndex) — placed AFTER the cheap per-row gates and the
     // in-batch exact dedup, so only already-surviving docs pay the
@@ -142,9 +158,6 @@ object RunCuration {
     val out = nearIndex match {
       case Some(idx) => RunDedupIndex.applyFrame(spark, curated, idx)
       case None => curated
-    }
-    val evalRate = rest.sliding(2).collectFirst {
-      case Array("--eval-rate", r) => r.toDouble
     }
     val splitCounts = evalRate match {
       case Some(r) =>
@@ -162,10 +175,15 @@ object RunCuration {
         Sampling.writeTrainingShards(out, col("text"), dest, shards)
         ""
     }
-    val line = funnel()
+    val line = early.getOrElse(funnel())
     val extra = nearIndex
       .map(_ => s""","n_after_index":${out.count()}""").getOrElse("")
-    println(line.dropRight(1) + extra + splitCounts + "}")
-    spark.stop()
+    line.dropRight(1) + extra + splitCounts + "}"
+  }
+
+  def main(args: Array[String]): Unit = {
+    if (args.length < 2) { System.err.println(Usage); sys.exit(2) }
+    val spark = Harness.session()
+    try println(run(spark, args)) finally spark.stop()
   }
 }

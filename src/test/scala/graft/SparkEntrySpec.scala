@@ -40,13 +40,14 @@ class SparkEntrySpec extends SparkSpec {
       s"pushdown barrier disappeared — gates likely re-inlined:\n$plan")
   }
 
-  test("curation_e2e_v2 runs every published gate before its single shuffle") {
-    // ADVICE r21: the exact Exchange counts below (and in the
-    // per-row-operators test) ride on the spread() guard FIRING —
-    // i.e. the fixture planning as a single-partition scan on a
-    // multi-core test master. Pin that environmental assumption
-    // explicitly so a fixture re-shard or a 1-core test run fails
-    // HERE with the real reason instead of as a count mismatch.
+  /** The exact Exchange counts of `curation_e2e_v2` and
+    * `c4_page_filter` ride on the spread() guard FIRING — i.e. the
+    * fixture planning as a single-partition scan on a multi-core test
+    * master. Pin that environmental assumption explicitly so a fixture
+    * re-shard or a 1-core test run fails HERE with the real reason
+    * instead of as a count mismatch.
+    */
+  private def assertSpreadFires(): Unit = {
     val scanParts = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .rdd.getNumPartitions
@@ -55,7 +56,11 @@ class SparkEntrySpec extends SparkSpec {
       s"precondition lost: the sf0.001 documents scan plans as " +
         s"$scanParts partition(s) on a $cores-core master, so the " +
         "scale-guarded spread no longer fires and the exact exchange " +
-        "pins below are vacuous — re-pin them for the new fixture")
+        "pins are vacuous — re-pin them for the new fixture")
+  }
+
+  test("curation_e2e_v2 runs every published gate before its single shuffle") {
+    assertSpreadFires()
     val plan = SparkEntry.queries("curation_e2e_v2")(
       spark, "/root/testdata/sf0.001").queryExecution.executedPlan.toString
     // two Exchanges total (r21): the dedup window PLUS the
@@ -165,6 +170,7 @@ class SparkEntrySpec extends SparkSpec {
       assert(!plan.contains("Exchange"),
         s"$name grew a shuffle:\n$plan")
     }
+    assertSpreadFires()
     val c4 = SparkEntry.queries("c4_page_filter")(
       spark, "/root/testdata/sf0.001").queryExecution.executedPlan.toString
     assert(c4.sliding("Exchange".length).count(_ == "Exchange") == 1 &&

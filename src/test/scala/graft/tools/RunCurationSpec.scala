@@ -1,8 +1,16 @@
 package graft.tools
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBridge
 
 import graft.SparkSpec
+import graft.ops.{Sampling, TextAnalysis}
 
 /** The one-command curation run on REAL multi-line documents (no
   * synthetic line reconstruction): gates, line cleaning, dedup,
@@ -14,6 +22,62 @@ class RunCurationSpec extends SparkSpec {
   private val prose = (1 to 60)
     .map(i => s"the data and model run $i goes to the set with care.")
     .mkString("\n")
+
+  /** The funnel as two scans: the gate counts over the input, then a
+    * count of the curated frame. It is the oracle for the funnel that
+    * `curate` counts during the pass that runs `out`.
+    */
+  private def referenceFunnel(docs: DataFrame, out: DataFrame): String = {
+    val gk = TextAnalysis.gopherKeep(col("text"))
+    val pk = TextAnalysis.c4PageKeep(col("text"))
+    val f = docs.agg(
+      count(lit(1)).as("n_input"),
+      sum(when(gk, 1L).otherwise(0L)).as("n_gopher"),
+      sum(when(gk && pk, 1L).otherwise(0L)).as("n_gates"))
+      .collect().head
+    s"""{"n_input":${f.getAs[Long]("n_input")},""" +
+      s""""n_gopher":${f.getAs[Long]("n_gopher")},""" +
+      s""""n_gates":${f.getAs[Long]("n_gates")},""" +
+      s""""n_out":${out.count()}}"""
+  }
+
+  /** 40 documents with every fate the funnel counts: distinct passing
+    * prose, exact duplicates, Gopher and page-gate failures, PII lines,
+    * and a pass-through `source` column.
+    */
+  private def mixedDocs: DataFrame = (0 until 40).map { i =>
+    val text = i % 8 match {
+      case 0 => "short junk"
+      case 1 => prose + "\nlorem ipsum dolor sit amet."
+      case 2 => prose + s"\ncall +6281234567$i now please today."
+      case 3 => prose + s"\nextra closing line number ${i + 1}."
+      case _ => prose + s"\nextra closing line number $i."
+    }
+    (i.toLong, s"src$i", text)
+  }.toDF("doc_id", "source", "text")
+
+  /** (jobs, SQL executions) that `body` submits. */
+  private def submitted(body: => Unit): (Int, Int) = {
+    val jobs = new AtomicInteger
+    val execs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => execs.incrementAndGet()
+        case _ =>
+      }
+    }
+    ListenerBridge.drain(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; ListenerBridge.drain(spark) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    (jobs.get, execs.get)
+  }
+
+  private def fields(line: String): Map[String, Long] =
+    "\"(n_\\w+)\":(\\d+)".r.findAllMatchIn(line)
+      .map(m => m.group(1) -> m.group(2).toLong).toMap
 
   test("curate: gates, dedup, redaction and funnel on hand-built docs") {
     val docs = Seq(
@@ -108,5 +172,82 @@ class RunCurationSpec extends SparkSpec {
     assert(eIds(900L) == (naive(900L) == "eval"), "rep label broken")
     for (i <- 0L until 24L)
       assert(eIds(i) == (naive(i) == "eval"), s"singleton $i moved")
+  }
+
+  test("the one-pass funnel equals the two-scan reference for every " +
+      "curate variant") {
+    val docs = mixedDocs
+    assert(referenceFunnel(docs, RunCuration.curate(docs)._1) ==
+      """{"n_input":40,"n_gopher":35,"n_gates":30,"n_out":25}""")
+    for ((redact, classifier) <- Seq((true, false), (false, false),
+        (true, true))) {
+      val (out, funnel) = RunCuration.curate(docs, redact, classifier)
+      val expected = referenceFunnel(docs,
+        RunCuration.curate(docs, redact, classifier)._1)
+      assert(funnel() == expected,
+        s"redact=$redact classifier=$classifier")
+      assert(out.columns.toSeq == Seq("doc_id", "source", "text"))
+    }
+  }
+
+  test("after the shard write the funnel submits no Spark job; " +
+      "unfired, it runs exactly one pass") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-cur-pass-").toString
+    val docs = mixedDocs
+    val expected = referenceFunnel(docs, RunCuration.curate(docs)._1)
+    val (out, funnel) = RunCuration.curate(docs)
+    Sampling.writeTrainingShards(out, col("text"), dir, 16)
+    var line = ""
+    val (jobs, _) = submitted { line = funnel() }
+    assert(jobs == 0, s"funnel() after the write ran $jobs jobs")
+    assert(line == expected)
+    val (_, unfired) = RunCuration.curate(docs)
+    val (jobs2, passes) = submitted { line = unfired() }
+    assert(line == expected)
+    assert(jobs2 > 0 && passes == 1,
+      s"an unfired funnel ran $passes passes ($jobs2 jobs)")
+  }
+
+  test("the curated plan has no join and one exchange, the dedup " +
+      "window") {
+    val (out, _) = RunCuration.curate(mixedDocs)
+    val plan = Inspect.finalPlan(out)
+    assert(!plan.contains("Join"), s"redaction joined:\n$plan")
+    assert(plan.sliding("Exchange".length).count(_ == "Exchange") == 1,
+      s"expected exactly one Exchange:\n$plan")
+  }
+
+  test("run: the funnel is right on the plain, --eval-rate and " +
+      "--near-index paths") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-cur-run-").toString
+    mixedDocs.write.parquet(s"$dir/docs")
+    Seq((900L, "src900", prose + "\nextra closing line number 4."))
+      .toDF("doc_id", "source", "text").write.parquet(s"$dir/prior")
+    RunDedupIndex.buildIndex(spark.read.parquet(s"$dir/prior"),
+      s"$dir/index")
+    val docs = spark.read.parquet(s"$dir/docs")
+    val expected = fields(referenceFunnel(docs,
+      RunCuration.curate(docs)._1))
+    val paths = Seq(
+      "plain" -> Seq.empty[String],
+      "eval" -> Seq("--eval-rate", "0.4"),
+      "index" -> Seq("--near-index", s"$dir/index"))
+    for ((name, flags) <- paths) {
+      val got = fields(RunCuration.run(spark,
+        (Seq(s"$dir/docs", s"$dir/out-$name") ++ flags).toArray))
+      assert(expected.forall { case (k, v) => got.get(k).contains(v) },
+        s"$name: $got, expected $expected")
+      name match {
+        case "eval" =>
+          assert(got("n_train") + got("n_eval") == got("n_out"), s"$got")
+        case "index" =>
+          assert(got("n_after_index") < got("n_out"), s"$got")
+        case _ =>
+          assert(spark.read.parquet(s"$dir/out-plain").count() ==
+            got("n_out"))
+      }
+    }
   }
 }
