@@ -95,8 +95,8 @@ object Dispatch {
     * Keep plain [[extractAll]] for pushdown-capable sources (the
     * CellTsv DSv2 path): there the meta pass prunes to `row_idx < 4`
     * AT THE SCAN — far cheaper than forcing the full stream through an
-    * exchange. (The multi-sink [[ExtractJob]] needs neither: it
-    * `cache()`s both extracted frames explicitly.)
+    * exchange. (The multi-sink [[ExtractJob]] needs neither: its one
+    * write reads the rendered lines from [[graft.io.CsvSink]]'s cache.)
     *
     * Barrier mechanics (the same canonical-equality discipline as the
     * tfidf/surprisal exchange reuse in

@@ -11,20 +11,13 @@ import graft.io.CsvSink
   * the five entity CSVs in document order, fail on zero rows (A2,
   * `cli.py:198-201`).
   *
-  * S7 multi-sink fan-out: BOTH extracted frames (area-tagged, island)
-  * are cached once; the five entity projections write from the caches —
-  * one scan of the cell input per extract family, five cheap filtered
-  * writes (entities have different schemas, so separate writes, per
-  * SURVEY §2.1).
-  *
-  * Row counts (A2's count accumulation) are taken ONCE, after all
-  * five writes, by one action over the already-populated caches: the
-  * area frame's rows grouped by entity plus the island rows. It reads
-  * memory, not the source, so the extract pipelines execute exactly
-  * once; an entity with no rows reads 0. (A `Dataset.observe` metric
-  * was tried and rejected: the ordered write's range-partitioner
-  * sampling pass evaluates the plan a second time and double-counts
-  * the metric.)
+  * S7 multi-sink fan-out: both families render to one frame of CSV
+  * lines tagged by entity ([[lines]]), and [[CsvSink]] writes all five
+  * entities in one ordered, entity-partitioned write. The sink caches
+  * those lines (its range partitioner samples them before the write
+  * reads them) and counts each entity's rows (A2's count accumulation)
+  * with an observation in the same write, so the extract runs once and
+  * no separate count action follows; an entity with no rows reads 0.
   */
 object ExtractJob {
 
@@ -39,34 +32,39 @@ object ExtractJob {
       extends RuntimeException(message)
 
   /** The entity fan-out of one extraction (`cli.py:183-194`): the
-    * [[EtlConfig.Areas]] frames in order, each paired with its config
-    * and renamed to the configured output headers. `seq` rides along
-    * for document order; island flags stay Int (CsvSink casts every
-    * column to string at write, matching the reference's
-    * stringify-at-serialize).
+    * [[EtlConfig.Areas]] sinks in order, each with its configured
+    * suffix and output headers, and one frame `(entity, seq, line)` of
+    * every row rendered as a CSV record in its entity's column order.
+    * The area family renders in ONE projection (a province has no
+    * parent column), so the area extract is planned once. Raises
+    * [[EtlConfig.ConfigError]] for a missing entity config or a header
+    * count that differs from the entity's columns.
     */
-  def entityFrames(
+  def lines(
       area: DataFrame,
       island: DataFrame,
-      config: EtlConfig.Config)
-      : Seq[(String, EtlConfig.DataConfig, DataFrame)] =
-    EtlConfig.Areas.map { entityName =>
-      val df =
+      config: EtlConfig.Config): (DataFrame, Seq[CsvSink.Sink]) = {
+    def dataCols(df: DataFrame) = df.columns.filterNot(_ == "seq").toSeq
+    val sinks = EtlConfig.Areas.map { entityName =>
+      val cols = dataCols(
         if (entityName == "island") island
-        else AreaPipeline.entity(area, entityName)
+        else AreaPipeline.entity(area, entityName))
       val cfg = config.data.getOrElse(entityName,
         throw EtlConfig.ConfigError(
           s"Missing or invalid configuration for area '$entityName'"))
-      val headers = cfg.outputHeaders
-      val dataCols = df.columns.filterNot(_ == "seq")
-      if (headers.length != dataCols.length)
-        throw EtlConfig.ConfigError(
-          s"header arity mismatch for $entityName: " +
-            s"$headers vs ${dataCols.toSeq}")
-      (entityName, cfg, df.select(
-        (dataCols.zip(headers).map { case (c, h) => col(c).as(h) } :+
-          col("seq")).toIndexedSeq: _*))
+      if (cfg.outputHeaders.length != cols.length)
+        throw EtlConfig.ConfigError(s"header arity mismatch for " +
+          s"$entityName: ${cfg.outputHeaders} vs $cols")
+      CsvSink.Sink(entityName, cfg.filenameSuffix, cfg.outputHeaders)
     }
+    def line(cols: String*) = CsvSink.line(cols.map(col): _*)
+    val areaLines = area.select(col("entity"), col("seq"),
+      when(col("entity") === "province", line("code", "name"))
+        .otherwise(line("code", "parent_code", "name")).as("line"))
+    val islandLines = island.select(lit("island").as("entity"), col("seq"),
+      line(dataCols(island): _*).as("line"))
+    (areaLines.unionByName(islandLines), sinks)
+  }
 
   def run(
       cells: DataFrame,
@@ -78,27 +76,12 @@ object ExtractJob {
       // for reference-parity one-file-per-entity layout (the CLI does).
       singleFile: Boolean = false): Result = {
     val (area, island) = Dispatch.extractAll(cells)
-    val areaCached = area.cache()
-    val islandCached = island.cache()
-    try {
-      val files = entityFrames(areaCached, islandCached, config).map {
-        case (_, cfg, df) =>
-          CsvSink.write(df, destination, outputName,
-            cfg.filenameSuffix, singleFile)
-      }
-      // caches are hot after the writes; this one action never hits
-      // the source
-      val byEntity = areaCached.groupBy(col("entity")).count()
-        .union(islandCached.groupBy(lit("island").as("entity")).count())
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val counts = EtlConfig.Areas
-        .map(e => e -> byEntity.getOrElse(e, 0L)).toMap
-      if (counts.values.sum == 0)
-        throw NoMatchingDataException("No matching data found")
-      Result(counts, files)
-    } finally {
-      areaCached.unpersist()
-      islandCached.unpersist()
-    }
+    val (rendered, sinks) = lines(area, island, config)
+    val written = CsvSink.write(rendered, sinks, destination, outputName,
+      singleFile)
+    val counts = sinks.map(_.entity).zip(written.map(_._2)).toMap
+    if (counts.values.sum == 0)
+      throw NoMatchingDataException("No matching data found")
+    Result(counts, written.map(_._1))
   }
 }

@@ -182,7 +182,8 @@ object Multimodal {
       * MemoryCache stream, not `ImageIO.read(InputStream)`: the
       * convenience overload wraps the bytes in ImageIO's default
       * DISK-backed stream cache — a temp file per in-memory decode
-      * (the CodecBench r19 finding on the GIF path; same class here).
+      * (the r19 codec probe (SCALE.md) finding on the GIF path; same
+      * class here).
       */
     def decode(bytes: Array[Byte]): BufferedImage =
       if (bytes == null || bytes.isEmpty) null
@@ -652,7 +653,7 @@ object Multimodal {
     import javax.imageio.stream.{MemoryCacheImageInputStream,
       MemoryCacheImageOutputStream}
 
-    // Per-payload cost audit (CodecBench, r19): the obvious
+    // Per-payload cost audit (the r19 codec probe (SCALE.md)): the obvious
     // `ImageIO.getImageReadersBySuffix` + `createImageInputStream`
     // per call pays (a) a SYNCHRONIZED registry scan — 32 executor
     // threads serialize on the IIORegistry lock — and (b) a

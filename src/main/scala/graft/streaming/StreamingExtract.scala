@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.config.EtlConfig
+import graft.io.CsvSink
 import graft.ops.{Dispatch, ExtractJob}
 import graft.schema.RawTableRow
 
@@ -15,7 +16,7 @@ import graft.schema.RawTableRow
   * appends; the graceful interrupt (`cli.py:30-37`) is `query.stop()`.
   *
   * Each micro-batch runs the SAME batch pipeline as [[ExtractJob]]
-  * (dispatch → extract → [[ExtractJob.entityFrames]] with
+  * (dispatch → extract → [[ExtractJob.lines]] with
   * [[EtlConfig.Default]]), so the plan properties (broadcast metas,
   * pushed filters, codegen) carry over unchanged. The run-global
   * `_seen_provinces` set (`extractors.py:110-112,166-169`) is a table
@@ -35,18 +36,19 @@ object StreamingExtract {
       .parquet(cellsDir)
 
   /** End-to-end streaming extract: per micro-batch, run the batch
-    * dispatch+extract pipeline and hand each entity frame, renamed to
-    * the default config's headers, to `sink` (batchId, entity name,
-    * rows). The batchId is the CHECKPOINTED micro-batch id — monotonic
-    * across restarts, so sinks keying output on it never collide with
-    * a previous run's output. `Trigger.AvailableNow` processes the
-    * backlog then stops — the chunked-run analog; drop the trigger for
-    * a long-lived tail-the-directory job.
+    * dispatch+extract pipeline and hand its rendered lines and the
+    * default config's sinks to `sink` (batchId, lines, sinks) — the
+    * arguments of [[CsvSink.write]]. The batchId is the CHECKPOINTED
+    * micro-batch id — monotonic across restarts, so sinks keying
+    * output on it never collide with a previous run's output.
+    * `Trigger.AvailableNow` processes the backlog then stops — the
+    * chunked-run analog; drop the trigger for a long-lived
+    * tail-the-directory job.
     */
   def run(
       cells: DataFrame,
       checkpointDir: String,
-      sink: (Long, String, DataFrame) => Unit): StreamingQuery = {
+      sink: (Long, DataFrame, Seq[CsvSink.Sink]) => Unit): StreamingQuery = {
     val seenDir = new Path(checkpointDir, "seen_provinces").toString
     cells.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -65,8 +67,8 @@ object StreamingExtract {
             .select(lit("province").as("entity"), col("code"))
           val area = cached.join(broadcast(seen), Seq("entity", "code"),
             "left_anti")
-          ExtractJob.entityFrames(area, island, EtlConfig.Default)
-            .foreach { case (e, _, df) => sink(batchId, e, df) }
+          val (lines, sinks) = ExtractJob.lines(area, island, EtlConfig.Default)
+          sink(batchId, lines, sinks)
         } finally { cached.unpersist(); () }
       }
       .start()

@@ -129,7 +129,10 @@ object RunCuration {
     * plain path reads the funnel after the shard write, which counted
     * it. `--near-index` and `--eval-rate` build more frames on `out`,
     * and `Components` runs jobs while `splitFrames` builds, so those
-    * paths force the funnel first.
+    * paths force the funnel first. `n_after_index`, `n_train` and
+    * `n_eval` are observed on the frames each shard write runs, so no
+    * job follows the last write; with both flags the split partitions
+    * the index survivors, so `n_after_index` is `n_train + n_eval`.
     */
   def run(spark: SparkSession, args: Array[String]): String = {
     require(args.length >= 2, Usage)
@@ -159,25 +162,30 @@ object RunCuration {
       case Some(idx) => RunDedupIndex.applyFrame(spark, curated, idx)
       case None => curated
     }
-    val splitCounts = evalRate match {
+    // writes `df`'s shards under `dir` and returns its row count. AQE
+    // drops the observed node from a plan it proves empty, and the
+    // observation then completes with no metrics: zero rows.
+    def write(df: DataFrame, dir: String): Long = {
+      val n = Observation()
+      Sampling.writeTrainingShards(df.observe(n, count(lit(1)).as("n")),
+        col("text"), dir, shards)
+      n.get.getOrElse("n", 0L).asInstanceOf[Long]
+    }
+    val (nOut, splitCounts) = evalRate match {
       case Some(r) =>
         // leakage-safe split LAST: membership is keyed on the cluster
         // rep's bytes, so it commutes with every upstream gate — but
         // clustering the final survivors keeps the banding work to
         // exactly the docs being shipped
         val (train, evalD) = splitFrames(out, r)
-        Sampling.writeTrainingShards(train, col("text"),
-          s"$dest/train", shards)
-        Sampling.writeTrainingShards(evalD, col("text"),
-          s"$dest/eval", shards)
-        s""","n_train":${train.count()},"n_eval":${evalD.count()}"""
-      case None =>
-        Sampling.writeTrainingShards(out, col("text"), dest, shards)
-        ""
+        val nTrain = write(train, s"$dest/train")
+        val nEval = write(evalD, s"$dest/eval")
+        (nTrain + nEval, s""","n_train":$nTrain,"n_eval":$nEval""")
+      case None => (write(out, dest), "")
     }
     val line = early.getOrElse(funnel())
     val extra = nearIndex
-      .map(_ => s""","n_after_index":${out.count()}""").getOrElse("")
+      .map(_ => s""","n_after_index":$nOut""").getOrElse("")
     line.dropRight(1) + extra + splitCounts + "}"
   }
 

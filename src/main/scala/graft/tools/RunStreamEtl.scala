@@ -14,8 +14,10 @@ import graft.streaming.StreamingExtract
   * Runs with `Trigger.AvailableNow`: processes the current backlog then
   * exits (re-run to pick up new files; the checkpoint makes that
   * exactly-once, and a province written by an earlier run on the same
-  * checkpoint is not written again). Each entity batch is written as a
-  * per-batch CSV directory — appends never rewrite prior output.
+  * checkpoint is not written again). Each micro-batch is one
+  * [[CsvSink.write]] into its own `batch_<id>` directory — appends
+  * never rewrite prior output — and, like [[graft.ops.ExtractJob]],
+  * writes a header-only file for an entity with no rows in the batch.
   */
 object RunStreamEtl {
   def main(args: Array[String]): Unit = {
@@ -25,28 +27,24 @@ object RunStreamEtl {
       sys.exit(2)
     }
     val Array(input, dest, name) = args.take(3)
-    val ckpt =
-      if (args.length >= 4) args(3)
-      else Files.createTempDirectory("graft-stream-ckpt-").toString
+    val ckpt = args.lift(3)
+      .getOrElse(Files.createTempDirectory("graft-stream-ckpt-").toString)
 
     val spark = graft.Harness.session()
 
     val counts = scala.collection.concurrent.TrieMap.empty[String, Long]
-    val q = StreamingExtract.run(
+    StreamingExtract.run(
       StreamingExtract.readCells(spark, input),
       ckpt,
-      (batchId, entity, df) => {
-        val n = df.count()
-        counts.updateWith(entity)(c => Some(c.getOrElse(0L) + n))
-        if (n > 0) {
-          // keyed by the CHECKPOINTED batch id: re-runs continue the
-          // sequence instead of overwriting a previous run's output
-          CsvSink.write(df, Paths.get(dest, s"batch_$batchId").toString,
-            name, entity, singleFile = false)
+      (batchId, lines, sinks) => {
+        // keyed by the CHECKPOINTED batch id: re-runs continue the
+        // sequence instead of overwriting a previous run's output
+        val written = CsvSink.write(lines, sinks,
+          Paths.get(dest, s"batch_$batchId").toString, name, singleFile = false)
+        sinks.zip(written).foreach { case (s, (_, n)) =>
+          counts.updateWith(s.entity)(c => Some(c.getOrElse(0L) + n))
         }
-        ()
-      })
-    q.awaitTermination()
+      }).awaitTermination()
 
     println(s"Streaming backlog processed; checkpoint: $ckpt")
     counts.toSeq.sortBy(_._1).foreach { case (e, c) => println(s"  $e: $c") }

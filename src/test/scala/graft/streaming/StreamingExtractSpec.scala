@@ -1,7 +1,8 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path}
-import org.apache.spark.sql.Row
+import scala.collection.concurrent.TrieMap
+import org.apache.spark.sql.functions.col
 import graft.SparkSpec
 import graft.ops.{CellTables, Fixtures}
 
@@ -11,20 +12,27 @@ import graft.ops.{CellTables, Fixtures}
   */
 class StreamingExtractSpec extends SparkSpec {
 
-  /** One `Trigger.AvailableNow` run over `srcDir`; the sink collects
-    * every entity frame's rows.
+  /** One `Trigger.AvailableNow` run over `srcDir`: every sink's
+    * rendered lines, split into fields, in document order; and each
+    * sink's headers.
     */
-  private def runOnce(srcDir: Path, ckpt: Path): Map[String, Seq[Row]] = {
-    val out = scala.collection.concurrent.TrieMap.empty[String, Seq[Row]]
+  private def runOnce(srcDir: Path, ckpt: Path)
+      : (Map[String, Seq[Seq[String]]], Map[String, Seq[String]]) = {
+    val out = TrieMap.empty[String, Seq[Seq[String]]]
+    val headers = TrieMap.empty[String, Seq[String]]
     StreamingExtract.run(
       StreamingExtract.readCells(spark, srcDir.toString),
       ckpt.toString,
-      (_, entity, df) => {
-        val rows = df.collect().toSeq
-        out.updateWith(entity)(c => Some(c.getOrElse(Nil) ++ rows))
-        ()
+      (_, lines, sinks) => {
+        for (s <- sinks) {
+          headers.put(s.entity, s.headers)
+          val rows = lines.filter(col("entity") === s.entity)
+            .orderBy("seq").select("line").collect()
+            .map(_.getString(0).split(",", -1).toSeq).toSeq
+          out.updateWith(s.entity)(c => Some(c.getOrElse(Nil) ++ rows))
+        }
       }).awaitTermination()
-    out.toMap
+    (out.toMap, headers.toMap)
   }
 
   test("foreachBatch file-source run extracts each entity per chunk") {
@@ -41,11 +49,12 @@ class StreamingExtractSpec extends SparkSpec {
     val q = StreamingExtract.run(
       StreamingExtract.readCells(spark, srcDir.toString),
       ckpt.toString,
-      (batchId, entity, df) => {
-        val n = df.count()
+      (batchId, lines, sinks) => {
         batchIds.put(batchId, ())
-        counts.updateWith(entity) { c => Some(c.getOrElse(0L) + n) }
-        ()
+        for (s <- sinks) {
+          val n = lines.filter(col("entity") === s.entity).count()
+          counts.updateWith(s.entity) { c => Some(c.getOrElse(0L) + n) }
+        }
       })
     q.awaitTermination()
 
@@ -71,21 +80,19 @@ class StreamingExtractSpec extends SparkSpec {
     // a province-less first run: its batch records an empty entry
     CellTables.ofGrid(spark, Fixtures.dfIsland, tableId = 0L, seqStart = 500L)
       .write.mode("append").parquet(srcDir.toString)
-    val islands = runOnce(srcDir, ckpt)
+    val (islands, _) = runOnce(srcDir, ckpt)
     chunk("Aceh", 1L, 0L)
-    val first = runOnce(srcDir, ckpt)
+    val (first, headers) = runOnce(srcDir, ckpt)
     chunk("Aceh Lagi", 2L, 100L)
-    val second = runOnce(srcDir, ckpt)
+    val (second, _) = runOnce(srcDir, ckpt)
 
     assert(islands("province").isEmpty && islands("island").nonEmpty)
     val provinces = first("province") ++ second("province")
-    assert(provinces.map(r => (r.getString(0), r.getString(1))) ==
-      Seq(("11", "Aceh")))
+    assert(provinces.map(r => (r(0), r(1))) == Seq(("11", "Aceh")))
     // only provinces are deduped across batches: each run writes its regency
-    assert(first("regency").map(_.getString(0)) == Seq("11.01"))
-    assert(second("regency").map(_.getString(0)) == Seq("11.02"))
-    // the sink frames carry the default config's output headers
-    assert(first("regency").head.schema.fieldNames.toSeq ==
-      Seq("code", "province_code", "name", "seq"))
+    assert(first("regency").map(_.head) == Seq("11.01"))
+    assert(second("regency").map(_.head) == Seq("11.02"))
+    // the sinks carry the default config's output headers
+    assert(headers("regency") == Seq("code", "province_code", "name"))
   }
 }

@@ -1,6 +1,8 @@
 package graft.tools
 
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobStart}
@@ -73,6 +75,34 @@ class RunCurationSpec extends SparkSpec {
     try { body; ListenerBridge.drain(spark) }
     finally spark.sparkContext.removeSparkListener(listener)
     (jobs.get, execs.get)
+  }
+
+  /** Runs `body`; returns how many jobs started after the last job of
+    * the last shard write (an `InsertIntoHadoopFsRelationCommand`).
+    */
+  private def jobsAfterLastWrite(body: => Unit): Int = {
+    val writes = ConcurrentHashMap.newKeySet[Long]()
+    val jobExecs = new ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobExecs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .fold(-1L)(_.toLong))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.physicalPlanDescription
+            .contains("InsertIntoHadoopFsRelationCommand") =>
+          writes.add(s.executionId)
+        case _ =>
+      }
+    }
+    ListenerBridge.drain(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; ListenerBridge.drain(spark) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    val order = jobExecs.asScala.toSeq
+    val last = order.lastIndexWhere(writes.contains)
+    assert(last >= 0, "no shard write ran")
+    order.size - 1 - last
   }
 
   private def fields(line: String): Map[String, Long] =
@@ -220,6 +250,7 @@ class RunCurationSpec extends SparkSpec {
 
   test("run: the funnel is right on the plain, --eval-rate and " +
       "--near-index paths") {
+    // and so are the tail counts, with no job after the last write
     val dir = java.nio.file.Files
       .createTempDirectory("graft-cur-run-").toString
     mixedDocs.write.parquet(s"$dir/docs")
@@ -230,23 +261,42 @@ class RunCurationSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$dir/docs")
     val expected = fields(referenceFunnel(docs,
       RunCuration.curate(docs)._1))
+    val afterIndex = RunDedupIndex.applyFrame(spark,
+      RunCuration.curate(docs)._1, s"$dir/index").count()
+    // an empty split writes no part file, so the schema is given
+    def written(path: String) =
+      spark.read.schema(docs.schema).parquet(path).count()
     val paths = Seq(
       "plain" -> Seq.empty[String],
       "eval" -> Seq("--eval-rate", "0.4"),
-      "index" -> Seq("--near-index", s"$dir/index"))
+      "index" -> Seq("--near-index", s"$dir/index"),
+      "both" -> Seq("--near-index", s"$dir/index", "--eval-rate", "0.4"))
     for ((name, flags) <- paths) {
-      val got = fields(RunCuration.run(spark,
-        (Seq(s"$dir/docs", s"$dir/out-$name") ++ flags).toArray))
+      val out = s"$dir/out-$name"
+      var line = ""
+      val late = jobsAfterLastWrite {
+        line = RunCuration.run(spark,
+          (Seq(s"$dir/docs", out) ++ flags).toArray)
+      }
+      assert(late == 0, s"$name: $late jobs after the last write")
+      val got = fields(line)
       assert(expected.forall { case (k, v) => got.get(k).contains(v) },
         s"$name: $got, expected $expected")
       name match {
+        case "plain" =>
+          assert(written(out) == got("n_out"))
         case "eval" =>
-          assert(got("n_train") + got("n_eval") == got("n_out"), s"$got")
+          assert(got("n_train") == written(s"$out/train") &&
+            got("n_eval") == written(s"$out/eval") &&
+            got("n_train") + got("n_eval") == got("n_out"), s"$got")
         case "index" =>
-          assert(got("n_after_index") < got("n_out"), s"$got")
-        case _ =>
-          assert(spark.read.parquet(s"$dir/out-plain").count() ==
-            got("n_out"))
+          assert(got("n_after_index") == afterIndex &&
+            written(out) == afterIndex && afterIndex < got("n_out"), s"$got")
+        case "both" =>
+          assert(got("n_after_index") == afterIndex &&
+            got("n_train") == written(s"$out/train") &&
+            got("n_eval") == written(s"$out/eval") &&
+            got("n_train") + got("n_eval") == afterIndex, s"$got")
       }
     }
   }
