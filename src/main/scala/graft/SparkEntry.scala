@@ -1,20 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import graft.functions.{Cleanse, ZOrder}
-import graft.ops._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+import graft.ops.{CellTables, Dispatch}
+import graft.registry._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract: `entry`, plus a thin index over the query registry.
   *
-  * `queries` maps every implemented operator from SURVEY.md §2 (plus the
-  * LLM-data-pipeline extensions) onto the driver's synthetic tables at
-  * `/root/testdata/<sf>/`; `oracleSql` carries the DuckDB-equivalent SQL
-  * for every SQL-expressible entry. Where an oracle expression is a
-  * composite (the cleanse chain, the language-marker counters), the SQL
-  * is GENERATED from the same constants the Spark side uses, so the two
-  * can't silently drift.
+  * Every registry query is one [[graft.registry.QueryDef]] — name, Spark
+  * build and DuckDB oracle SQL side by side — in a per-family object
+  * under `graft.registry`; helpers live next to the one family that uses
+  * them, or in `registry.Shared`. `queries` and `oracleSql` are derived
+  * once from the concatenated definitions, and a name declared twice
+  * fails the index instead of silently dropping a query. Where an oracle
+  * expression is a composite (the cleanse chain, the language-marker
+  * counters), the SQL is GENERATED from the same constants the Spark
+  * side uses, so the two can't silently drift.
   *
   * Column names and types are aligned on both sides (the driver's
   * comparator sorts columns by name and hashes values): every computed
@@ -24,100 +25,6 @@ import graft.ops._
   * of integer-valued doubles, which are exact.
   */
 object SparkEntry {
-
-  /** Events with `ts` normalized to epoch-MICROS BIGINT regardless of
-    * the physical parquet timestamp type. The driver has generated the
-    * table as TIMESTAMP(NANOS) in some rounds (Spark reads it as a
-    * nanos-long under the legacy flag) and TIMESTAMP(MICROS) in others
-    * (Spark reads it as a native TimestampType, micros internally), so
-    * the physical type is detected from the scanned schema instead of
-    * assumed. All event-time operators (windowing, sessionize, as-of)
-    * consume micros; DuckDB reads either physical type at micros via
-    * epoch_us(ts), so the oracle compare is precision-aligned in both
-    * layouts.
-    */
-  private def eventsMicros(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // TIMESTAMP(MICROS) without isAdjustedToUTC reads as TIMESTAMP_NTZ;
-    // DuckDB's epoch_us treats the same naive wall-clock as UTC, so the
-    // NTZ→instant cast must happen under a UTC session zone for the two
-    // engines to agree (Verify already sets it session-wide; this makes
-    // eventsMicros self-sufficient under any caller).
-    s.conf.set("spark.sql.session.timeZone", "UTC")
-    val raw = s.read.parquet(s"$dir/events.parquet")
-    val tsUs = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => expr("ts div 1000")
-      case _ => unix_micros(col("ts")
-        .cast(org.apache.spark.sql.types.TimestampType))
-    }
-    raw.withColumn("ts", tsUs)
-  }
-
-  /** Synthetic change set over the 4-column customer snapshot: delete
-    * wins over update so every key carries exactly one op.
-    */
-  private def upsertChanges(base: DataFrame): DataFrame = {
-    val upd = base
-      .filter(col("c_custkey") % 5 === 0 && col("c_custkey") % 7 =!= 0)
-      .withColumn("c_acctbal", col("c_acctbal") + lit(1000.0))
-      .withColumn("op", lit("U"))
-    val del = base.filter(col("c_custkey") % 7 === 0)
-      .withColumn("op", lit("D"))
-    val ins = base.filter(col("c_custkey") % 11 === 0)
-      .withColumn("c_custkey", col("c_custkey") + lit(200000L))
-      .withColumn("op", lit("I"))
-    upd.unionByName(del).unionByName(ins)
-  }
-
-  /** Scale-guarded scan spread (optimization guide §2.5 "input skew" /
-    * §6): the driver's fixture tables are single-row-group parquet
-    * files, and a Spark scan cannot split inside a row group — so
-    * every scan stage runs as ONE task, and any heavy per-row work
-    * Catalyst collapses into the scan stage (regex reconstruction,
-    * codec decode, gram explosion, 64-dim integer kernels) runs
-    * single-threaded until the first Exchange. A round-robin
-    * repartition to the session's core count moves that work behind
-    * one tiny exchange (the spread ships keys/short text, never
-    * derived payloads) and restores full parallelism.
-    *
-    * The guard makes it scale-adaptive rather than a local[32] hack:
-    * it fires ONLY when the planned scan parallelism is at most half
-    * the machine (measured from the actual physical plan, not
-    * assumed). At 100 TB a scan yields thousands of row groups ≥
-    * cores and this is a no-op — exactly the "derive partitioning
-    * from input size instead of a constant" rule. Applied selectively
-    * to queries whose scan-stage work is measured to dominate; a
-    * blanket application would tax every floor query with a useless
-    * exchange.
-    */
-  private def spread(df: DataFrame): DataFrame = {
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    // the planned scan parallelism comes off this Dataset's OWN
-    // QueryExecution (`toRdd`), not `df.rdd` — the latter constructs
-    // a SECOND QueryExecution plus a row-deserializer RDD only to be
-    // discarded (the "spread plans the query twice" driver overhead
-    // flagged in r21). Same partition count by construction: df.rdd
-    // is toRdd wrapped in a mapPartitions deserializer.
-    if (df.queryExecution.toRdd.getNumPartitions * 2 <= cores)
-      df.repartition(cores)
-    else df
-  }
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    // events.ts has carried two physical parquet types across driver
-    // rounds (TIMESTAMP(NANOS) — which plain schema inference rejects —
-    // and TIMESTAMP(MICROS)); none of the queries routed through T need
-    // it, so read events through an explicit ts-free schema (the scan
-    // then never touches that column — same effect as column pruning).
-    // Event-time queries go through eventsMicros, which adapts to the
-    // physical type.
-    if (name == "events")
-      s.read.schema("event_id BIGINT, user_id BIGINT, event_type STRING, " +
-        "value DOUBLE, props STRING")
-        .parquet(s"$dir/$name.parquet")
-    else s.read.parquet(s"$dir/$name.parquet")
-
-  // ---------------------------------------------------------------- entry
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. Runs the
     * REAL pipeline — fixture cell tables through dispatch and both
@@ -144,8823 +51,18 @@ object SparkEntry {
         lit("island").as("entity"), col("code"), col("name")))
   }
 
-  // ------------------------------------------------- oracle SQL builders
-
-  /** DuckDB rendition of [[Cleanse.cleanName]] — same 9 ordered regex
-    * passes (trim, CR, TAB, leading digits+NL, trailing NL+digits,
-    * NL-collapse, leading digits+space, multispace, trim).
-    */
-  private def duckCleanName(inner: String): String = {
-    val steps = Seq(
-      ("^\\s+|\\s+$", "", true), ("\\r", "", true), ("\\t", " ", true),
-      ("^\\d+\\n", "", false), ("\\n\\d+$", "", false), ("\\n+", " ", true),
-      ("^\\d+\\s+", "", false), ("\\s{2,}", " ", true),
-      ("^\\s+|\\s+$", "", true))
-    steps.foldLeft(inner) { case (acc, (pat, rep, g)) =>
-      s"regexp_replace($acc, '$pat', '$rep'${if (g) ", 'g'" else ""})"
-    }
-  }
-
-  /** DuckDB rendition of [[TextAnalysis.occurrences]]. */
-  private def occSql(textExpr: String, needle: String): String = {
-    val esc = needle.replace("'", "''")
-    s"CAST((length($textExpr) - length(replace($textExpr, '$esc', ''))) / ${needle.length} AS BIGINT)"
-  }
-
-  private val PaddedLower = "(' ' || lower(text) || ' ')"
-
-  private def hitsSql(markers: Seq[String]): String =
-    markers.map(occSql(PaddedLower, _)).mkString("(", " + ", ")")
-
-  /** The linear quality-classifier score as one DuckDB expression —
-    * generated from the SAME weight constants the Spark column uses
-    * ([[TextAnalysis.ClassifierWeights]]), shared by the
-    * quality_classifier and classifier_calibration oracles.
-    */
-  private lazy val ClassifierScoreSql: String = {
-    val fragments = Map(
-      "word_cnt" ->
-        "CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)",
-      "stop_hits" -> TextAnalysis.GopherStopWords
-        .map(w => occSql(PaddedLower, s" $w ")).mkString("(", " + ", ")"),
-      "punct_cnt" ->
-        ("CAST(length(text) - length(regexp_replace(text, " +
-          "'[.,;:!?]', '', 'g')) AS BIGINT)"),
-      "digit_cnt" ->
-        ("CAST(length(text) - length(regexp_replace(text, " +
-          "'[0-9]', '', 'g')) AS BIGINT)"))
-    val (bias, w) = TextAnalysis.ClassifierWeights
-    (s"CAST($bias AS BIGINT)" +:
-      TextAnalysis.ClassifierFeatures
-        .collect { case (name, _) if w.contains(name) =>
-          s"(${fragments(name)}) * (${w(name)})" })
-      .mkString("(", " + ", ")")
-  }
-
-  /** The Gopher stat columns (SELECT fragment over `documents`'s raw
-    * `text`) and the composite keep rule over them — shared by the
-    * gopher_quality and classifier_calibration oracles. The rule
-    * yields FALSE for blank docs through the word-count floor, same as
-    * [[TextAnalysis.gopherKeep]].
-    */
-  private lazy val GopherStatsSql: String = {
-    val stopPresent = TextAnalysis.GopherStopWords
-      .map(w => s"CASE WHEN strpos($PaddedLower, ' $w ') > 0 " +
-        "THEN 1 ELSE 0 END")
-      .mkString("(", " + ", ")")
-    "CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS word_cnt, " +
-      "CAST(length(regexp_replace(text, '\\s', '', 'g')) AS BIGINT) AS nonws_chars, " +
-      "CAST((length(text) - length(replace(text, '#', ''))) + " +
-      "(length(text) - length(replace(text, '...', ''))) / 3 AS BIGINT) AS symbol_cnt, " +
-      "CAST(len(string_split(text, chr(10))) AS BIGINT) AS n_lines, " +
-      "CAST(len(list_filter(string_split(text, chr(10)), l -> " +
-      "starts_with(l, '- ') OR starts_with(l, '* ') OR starts_with(l, '• '))) AS BIGINT) AS bullet_lines, " +
-      "CAST(len(list_filter(string_split(text, chr(10)), l -> " +
-      "ends_with(l, '...'))) AS BIGINT) AS ellipsis_lines, " +
-      "CAST(len(list_filter(string_split_regex(trim(text), '\\s+'), w -> " +
-      "regexp_matches(w, '[A-Za-z]'))) AS BIGINT) AS alpha_words, " +
-      s"CAST($stopPresent AS BIGINT) AS stop_present"
-  }
-
-  private val GopherRuleSql: String =
-    "(word_cnt BETWEEN 50 AND 100000 " +
-      "AND nonws_chars >= word_cnt * 3 AND nonws_chars <= word_cnt * 10 " +
-      "AND symbol_cnt * 10 <= word_cnt " +
-      "AND bullet_lines * 10 <= n_lines * 9 " +
-      "AND ellipsis_lines * 10 <= n_lines * 3 " +
-      "AND alpha_words * 10 >= word_cnt * 8 " +
-      "AND stop_present >= 2)"
-
-  private val NormTextSql =
-    "lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
-
-  /** DuckDB replay of [[TextAnalysis.wsTokOk]] — the whitespace-
-    * tokenization honesty flag (RE2 `\x{…}` spelling of the same
-    * space-free-script ranges; exact integer verdict).
-    */
-  /** RE2 spelling of [[TextAnalysis.SpacefreeScriptClass]]. */
-  private val SpacefreeClassSql =
-    "[\\x{3040}-\\x{30FF}\\x{3400}-\\x{4DBF}" +
-      "\\x{4E00}-\\x{9FFF}\\x{AC00}-\\x{D7AF}\\x{0E00}-\\x{0E7F}]"
-
-  private def wsTokOkSqlOf(norm: String): String =
-    s"(2 * (length(replace($norm, ' ', '')) - " +
-      s"length(regexp_replace(replace($norm, ' ', ''), " +
-      s"'$SpacefreeClassSql', '', 'g'))) <= " +
-      s"length(replace($norm, ' ', '')))"
-
-  private val WsTokOkSql = wsTokOkSqlOf(NormTextSql)
-
-  /** Merge depth of every bpe_* query AND its oracle — one constant so
-    * the Spark side and the generated CTE replay cannot drift. 16 is
-    * deep enough that the tokenizer family measures a real merge
-    * table, not a mechanism demo (VERDICT r16 "What's missing #1"),
-    * while keeping the mine a bounded slice of the bench.
-    */
-  private val BpeRounds = 16
-
-  /** Merge depth of the DEEP tokenizer queries (bpe_encode /
-    * bpe_pack / bpe_fertility) — the flat-table encode path
-    * ([[graft.ops.BpeMiner.encodeFlat]]) whose plan does not grow
-    * with merge count (VERDICT r17 #1). 256 would exhaust the
-    * fixture's 30-word natural vocabulary (~90 mineable pairs), so
-    * those three queries mine over the corpus PLUS one planted
-    * pseudo-word per document ([[BpeDeepTextSql]]) — the
-    * vocabulary-diversity plant, same convention as the
-    * mojibake_census / planted-recall plants.
-    */
-  private val BpeDeepRounds = 256
-
-  /** The deep queries' planted text, SQL form: every doc contributes
-    * `zq<doc_id>` — ~n_docs distinct extra words, thousands of
-    * mineable pairs. NULL text stays NULL through `||` on both
-    * engines.
-    */
-  private val BpeDeepTextSql = "text || ' zq' || CAST(doc_id AS VARCHAR)"
-
-  /** The same plant, Spark form. */
-  private def bpeDeepDocs(docs: DataFrame): DataFrame =
-    docs.withColumn("text",
-      concat(col("text"), lit(" zq"), col("doc_id").cast("string")))
-
-  /** Closed pseudo-word vocabulary for the IMPORTED-tokenizer
-    * fertility gate (VERDICT r18 missing #3), paired with each word's
-    * HAND-COMPUTED token count under the committed
-    * `/graft/merges_fixture.txt` merge table (the derivations are
-    * written in the fixture file itself). The GPT-2 symbol dialect
-    * cannot be replayed as SQL string-replaces — symbol boundaries
-    * are lost the moment merged tokens abut — so the oracle instead
-    * replays the corpus CONSTRUCTION (pure id arithmetic) and joins
-    * these hand counts as a VALUES table: any regression in the
-    * import parse, the symbol interning, or the priority-merge encode
-    * diverges total_tokens and breaks the hash.
-    */
-  private val ImportedVocab: Seq[(String, Long)] = Seq(
-    ("the", 1L), ("qxz", 1L), ("ababab", 2L), ("zzz", 3L),
-    ("thethe", 2L))
-
-  /** The imported-fertility planted corpus: doc d's text is
-    * `5 + d % 7` words, word j = ImportedVocab[(d + j) % 5] — both
-    * engines rebuild it from (doc_id, lang) alone.
-    */
-  private def importedFertilityDocs(docs: DataFrame): DataFrame = {
-    val vocabLit = array(ImportedVocab.map(w => lit(w._1)): _*)
-    val n = (lit(5) + pmod(col("doc_id"), lit(7))).cast("int")
-    docs.select(col("doc_id"), col("lang"),
-      array_join(transform(sequence(lit(0), n - 1),
-        j => element_at(vocabLit,
-          pmod(col("doc_id") + j, lit(ImportedVocab.size)).cast("int")
-            + 1)), " ").as("text"))
-  }
-
-  /** [[NormTextSql]] over an arbitrary document-text expression. */
-  private def normTextSqlOf(textExpr: String): String =
-    s"lower(regexp_replace(trim($textExpr), '\\s+', ' ', 'g'))"
-
-  /** DuckDB literal for the round-`k` (1-based) merge placeholder —
-    * the U+E000 private-use codepoints [[graft.ops.BpeMiner]] mints,
-    * identical on both engines (`ascii`/`chr` are full-codepoint).
-    */
-  private def bpeChr(k: Int): String = s"chr(${57343 + k})"
-
-  /** The generated `rounds`-deep BPE-mining CTE chain (`w0`
-    * vocabulary; per-round winners `t<k>` and applied vocabularies
-    * `w<k>`) shared by every bpe_* oracle. `applyLast` additionally
-    * materializes `w<rounds>` (the fully merged vocabulary — only the
-    * compression/curve oracles need it). `textExpr` is the document
-    * text expression the vocabulary tokenizes (the deep queries pass
-    * the planted [[BpeDeepTextSql]]). Returns the comma-joined CTE
-    * definitions WITHOUT the leading `WITH`.
-    */
-  private def bpeMinedTopsCte(
-      rounds: Int,
-      applyLast: Boolean = false,
-      textExpr: String = "text"): String = {
-    // Every CTE is MATERIALIZED: w<k> references w<k-1> twice
-    // (directly and through t<k>), so DuckDB's default inlining would
-    // expand the chain 2^rounds times — at 16 rounds that is tens of
-    // thousands of copies of the base scan ("Too many open files"
-    // long before any result). Materialization makes the replay
-    // linear, which is also exactly what the Spark side's per-round
-    // checkpoints do.
-    // The pair count folds INTO the winner CTE (2 CTEs per round, not
-    // 3): DuckDB's binder recursion is bounded by TOTAL CTE count
-    // (~1000), and the 256-round encode chain must fit under it
-    // alongside this mine.
-    def top(src: String, out: String) =
-      s"$out AS MATERIALIZED (SELECT s.l AS l, s.r AS r, " +
-        "CAST(sum(cnt) AS BIGINT) AS pair_cnt FROM " +
-        "(SELECT cnt, unnest(list_transform(range(1, length(w)), " +
-        "i -> {'l': w[i:i], 'r': w[i+1:i+1]})) AS s " +
-        s"FROM $src) GROUP BY 1, 2 " +
-        "ORDER BY pair_cnt DESC, l, r LIMIT 1)"
-    val parts = Seq.newBuilder[String]
-    parts += s"w0 AS MATERIALIZED (SELECT w, " +
-      "CAST(count(*) AS BIGINT) AS cnt " +
-      s"FROM (SELECT unnest(string_split(${normTextSqlOf(textExpr)}, ' ')) AS w " +
-      "FROM documents WHERE text IS NOT NULL) " +
-      "WHERE length(w) > 1 GROUP BY w)"
-    for (k <- 1 to rounds) {
-      parts += top(s"w${k - 1}", s"t$k")
-      if (k < rounds || applyLast)
-        parts += s"w$k AS MATERIALIZED (SELECT replace(w${k - 1}.w, " +
-          s"t$k.l || t$k.r, ${bpeChr(k)}) AS w, " +
-          s"cnt FROM w${k - 1}, t$k)"
-    }
-    parts.result().mkString(", ")
-  }
-
-  /** The `rounds`-deep merge application over the DISTINCT word set
-    * (`dw(w)`), as a chain of one-replace-per-round CTEs `e1..e<n>`
-    * ending in the encoded word table `e<rounds>(w, mw)`. Chained
-    * CTEs, not one nested expression (a 256-deep nested replace blows
-    * DuckDB's max_expression_depth), and each distinct word does its
-    * merge work ONCE — occurrences join back to it.
-    */
-  private def bpeEncChainCtes(rounds: Int): String = {
-    val parts = Seq.newBuilder[String]
-    parts += "e0 AS MATERIALIZED (SELECT w, w AS mw FROM dw)"
-    for (k <- 1 to rounds)
-      parts += s"e$k AS MATERIALIZED (SELECT w, replace(mw, " +
-        s"t$k.l || t$k.r, ${bpeChr(k)}) AS mw FROM e${k - 1}, t$k)"
-    parts.result().mkString(", ")
-  }
-
-  /** `t1, t2, …, t<rounds>` — the FROM-list of 1-row winner CTEs a
-    * placeholder-expansion cross-joins (bpe_merges' human-readable
-    * view).
-    */
-  private def bpeTopsFrom(rounds: Int): String =
-    (1 to rounds).map("t" + _).mkString(", ")
-
-  /** The shared doc→words (`d`) + distinct-words (`dw`) CTE pair for
-    * the deep encode oracles — planted text, with optional extra
-    * per-doc columns carried through `d`.
-    */
-  private def bpeDeepDocWordsCtes(extraCols: String = ""): String =
-    s"d AS (SELECT doc_id, source, $extraCols" +
-      s"list_filter(string_split(${normTextSqlOf(BpeDeepTextSql)}, ' '), " +
-      "w -> length(w) > 0) AS wd " +
-      "FROM documents WHERE text IS NOT NULL), " +
-      "dw AS MATERIALIZED (SELECT DISTINCT unnest(wd) AS w FROM d)"
-
-  /** Distinct 3-gram set over a `toks` token-list column — the DuckDB
-    * replay of [[TextDedup.shingles]] (n = 3), including the
-    * whole-text fallback for sub-3-token docs (the range degenerates
-    * to one truncated slice, exactly like Spark's `slice`).
-    */
-  private val ShingleSetSql =
-    "list_distinct(list_transform(range(0, greatest(len(toks) - 3, 0) + 1), " +
-      "i -> array_to_string(toks[i+1:i+3], ' ')))"
-
-  /** The planted stop-word sentence for curation_e2e_v2's Gopher gate:
-    * 7 of the 8 [[TextAnalysis.GopherStopWords]] in one terminal-
-    * punctuated 14-word line, so it survives the C4 line stage and
-    * counts as a sentence for the page stage. Rendered verbatim into
-    * both the Spark prep and the oracle.
-    */
-  private val StopSentence =
-    "the model and the data of the run have to be set with care."
-
-  /** The curation_e2e_v2 input synthesis over the raw `text` column:
-    * 12-token lines punctuated every third line, plus the text-derived
-    * planted rule triggers (stop-word sentence unless `len % 4 == 0`,
-    * lorem page at `len % 19 == 0`, brace page at `len % 23 == 0`).
-    * Text-derived so verbatim duplicate documents stay verbatim
-    * duplicates through the prep. Mirrored by [[CurationSynthCtes]].
-    */
-  private def curationSynth: Column = {
-    val nt = TextDedup.normText(col("text"))
-    val toks = split(nt, " ")
-    val la = transform(
-      transform(
-        sequence(lit(0),
-          greatest(floor((size(toks) - 1) / 12).cast("int"), lit(0))),
-        i => concat_ws(" ", slice(toks, i * 12 + 1, lit(12)))),
-      (l, i) => when(pmod(i, lit(3)) === 0, concat(l, lit(".")))
-        .otherwise(l))
-    val ln = length(nt)
-    val s0 = array_join(la, "\n")
-    val s1 = when(pmod(ln, lit(4)) =!= 0,
-      concat(s0, lit("\n" + StopSentence))).otherwise(s0)
-    val s2 = when(pmod(ln, lit(19)) === 0,
-      concat(s1, lit("\nlorem ipsum dolor sit amet."))).otherwise(s1)
-    when(pmod(ln, lit(23)) === 0,
-      concat(s2, lit("\ncode { sample }"))).otherwise(s2)
-  }
-
-  /** prep → sy → st CTE chain of the curation_e2e_v2 oracle: the
-    * synthesized punctuated multi-line text plus every gate rule
-    * input. Shared by curation_e2e_v2 and curation_funnel.
-    */
-  private lazy val CurationSynthCtes: String = {
-    val stopPresent = TextAnalysis.GopherStopWords
-      .map(w => s"CASE WHEN strpos(' ' || lower(text) || ' ', ' $w ') " +
-        "> 0 THEN 1 ELSE 0 END")
-      .mkString("(", " + ", ")")
-    s"""prep AS (SELECT doc_id,
-       |    string_split($NormTextSql, ' ') AS t,
-       |    length($NormTextSql) AS ln FROM documents),
-       |sy AS (SELECT doc_id,
-       |  array_to_string(list_transform(range(0, (len(t)-1)//12 + 1),
-       |    i -> array_to_string(t[i*12+1:i*12+12], ' ') ||
-       |      CASE WHEN i % 3 = 0 THEN '.' ELSE '' END), chr(10))
-       |  || CASE WHEN ln % 4 <> 0
-       |       THEN chr(10) || '$StopSentence' ELSE '' END
-       |  || CASE WHEN ln % 19 = 0
-       |       THEN chr(10) || 'lorem ipsum dolor sit amet.'
-       |       ELSE '' END
-       |  || CASE WHEN ln % 23 = 0
-       |       THEN chr(10) || 'code { sample }' ELSE '' END AS text
-       |  FROM prep),
-       |st AS (SELECT doc_id, text,
-       |  CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
-       |    AS word_cnt,
-       |  CAST(length(regexp_replace(text, '\\s', '', 'g')) AS BIGINT)
-       |    AS nonws_chars,
-       |  CAST((length(text) - length(replace(text, '#', ''))) +
-       |    (length(text) - length(replace(text, '...', ''))) / 3
-       |    AS BIGINT) AS symbol_cnt,
-       |  CAST(len(string_split(text, chr(10))) AS BIGINT) AS n_lines,
-       |  CAST(len(list_filter(string_split(text, chr(10)), l ->
-       |    starts_with(l, '- ') OR starts_with(l, '* ')
-       |    OR starts_with(l, '• '))) AS BIGINT) AS bullet_lines,
-       |  CAST(len(list_filter(string_split(text, chr(10)), l ->
-       |    ends_with(l, '...'))) AS BIGINT) AS ellipsis_lines,
-       |  CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
-       |    w -> regexp_matches(w, '[A-Za-z]'))) AS BIGINT)
-       |    AS alpha_words,
-       |  CAST($stopPresent AS BIGINT) AS stop_present,
-       |  CAST(length(text) - length(replace(text, '.', '')) AS BIGINT)
-       |    AS n_sentences
-       |  FROM sy)"""
-      .stripMargin.replaceAll("\\s+", " ").trim
-  }
-
-  /** The Gopher composite over st's named columns. */
-  private val GopherCondSql: String =
-    "word_cnt BETWEEN 50 AND 100000 " +
-      "AND nonws_chars >= word_cnt * 3 " +
-      "AND nonws_chars <= word_cnt * 10 " +
-      "AND symbol_cnt * 10 <= word_cnt " +
-      "AND bullet_lines * 10 <= n_lines * 9 " +
-      "AND ellipsis_lines * 10 <= n_lines * 3 " +
-      "AND alpha_words * 10 >= word_cnt * 8 " +
-      "AND stop_present >= 2"
-
-  /** The C4 page composite over st's named columns. */
-  private val PageCondSql: String =
-    "length(trim(text)) > 0 AND n_sentences >= 3 " +
-      "AND NOT contains(lower(text), 'lorem ipsum') " +
-      "AND NOT contains(text, '{')"
-
-  /** The C4 line clean (kept lines rejoined) over a `text` column. */
-  private val C4LineCleanSql: String =
-    "array_to_string(list_filter(string_split(text, chr(10)), l -> " +
-      "regexp_matches(l, '[.!?\"]$') " +
-      "AND len(string_split_regex(trim(l), '\\s+')) >= 5 " +
-      "AND NOT contains(lower(l), 'javascript')), chr(10))"
-
-  /** DuckDB rendition of [[Redaction.withFakePii]]'s injector —
-    * shared by the pii_redact and curation_e2e oracles.
-    */
-  private val PiiInjSql: String =
-    "(text || " +
-      "CASE WHEN doc_id % 3 = 0 THEN ' contact user' || " +
-      "CAST(doc_id AS VARCHAR) || '@example.com' ELSE '' END || " +
-      "CASE WHEN doc_id % 5 = 0 THEN ' see https://example.org/d/' || " +
-      "CAST(doc_id AS VARCHAR) ELSE '' END || " +
-      "CASE WHEN doc_id % 7 = 0 THEN ' from 10.' || " +
-      "CAST(doc_id % 256 AS VARCHAR) || '.0.' || " +
-      "CAST(doc_id % 100 AS VARCHAR) ELSE '' END || " +
-      "CASE WHEN doc_id % 11 = 0 THEN ' call +62' || " +
-      "CAST(doc_id + 1000000 AS VARCHAR) ELSE '' END)"
-
-  /** DuckDB replay of the substring_dedup stats — shared by the keep
-    * form. Same planted excerpt union as [[substringDedupInput]], then
-    * raw-string 50-token span sets (list slicing clamps at the array
-    * end exactly like the native gram builder's width = min(n, t - i),
-    * whole-text fallback included), ownership by min doc_id, per-doc
-    * rollup.
-    */
-  private val SubstringDedupSql: String =
-    s"""WITH all_docs AS (
-       |  SELECT doc_id, $NormTextSql AS norm FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + 10000000,
-       |    array_to_string((string_split($NormTextSql, ' '))[3:62], ' ')
-       |  FROM documents
-       |  WHERE doc_id % 41 = 0
-       |    AND len(string_split($NormTextSql, ' ')) >= 62),
-       |sp AS (
-       |  SELECT doc_id, unnest(list_distinct(list_transform(
-       |    range(0, greatest(len(t) - 50, 0) + 1),
-       |    i -> array_to_string(t[i+1:i+50], ' ')))) AS span
-       |  FROM (SELECT doc_id, string_split(coalesce(norm, ''), ' ') AS t
-       |        FROM all_docs)),
-       |own AS (SELECT span, min(doc_id) AS first_doc, count(*) AS n_docs
-       |        FROM sp GROUP BY span)
-       |SELECT sp.doc_id, count(*) AS n_spans,
-       |  CAST(sum(CASE WHEN own.n_docs > 1 THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS shared_spans,
-       |  CAST(sum(CASE WHEN own.n_docs > 1 AND own.first_doc < sp.doc_id
-       |    THEN 1 ELSE 0 END) AS BIGINT) AS dup_spans,
-       |  CAST(max(CASE WHEN own.n_docs > 1 AND own.first_doc < sp.doc_id
-       |    THEN 1 ELSE 0 END) AS INTEGER) AS is_dup
-       |FROM sp JOIN own USING (span)
-       |GROUP BY sp.doc_id""".stripMargin.replaceAll("\\s+", " ").trim
-
-  // --------------------------------------------------------------- inputs
-  // Synthetic "messy" columns derived deterministically from the test
-  // tables, so the cleanse/filter operators have something to clean.
-
-  /** Per-language keep-rates for `sample_stratified` (downsample the
-    * over-represented languages harder) — rendered into both the Spark
-    * predicate and the generated DuckDB CASE so they can't drift.
-    */
-  private val SampleRates: Seq[(String, Double)] = Seq(
-    "en" -> 0.125, "de" -> 0.5, "es" -> 0.5, "fr" -> 0.5, "zh" -> 0.25)
-
-  /** Per-language epoch budgets for the repeated-epoch upsampling
-    * query (en repeated 2.5 epochs, es 1.25, de THINNED to half an
-    * epoch, rest exactly once) — rendered into both the Spark plan and
-    * the generated DuckDB CASE so they can't drift.
-    */
-  private val EpochBudgets: Seq[(String, Double)] = Seq(
-    "en" -> 2.5, "es" -> 1.25, "de" -> 0.5)
-
-  // ---- planted near-dup ground truth (MinHash / SimHash recall) ----
-  // The synthetic corpus holds no true near-dups, so the banded-LSH
-  // candidate generators get checkable true positives by planting
-  // them: a deterministic document slice is copied with every 50th
-  // normalized token replaced, and the copy re-enters the corpus under
-  // doc_id + PlantOffset. Which pairs SHOULD surface is then known
-  // without running any hash — (d, d + PlantOffset) for each eligible
-  // d — which is what makes an engine-independent recall flag (and
-  // hence a DuckDB oracle) expressible for xxhash64-based operators.
-  // Mirrors the cosine_neardup_pairs planting introduced in round 6.
-  // Mutation strength is tuned so BOTH detectors should fire: ~2% of
-  // tokens (1-2 per 50-100-token doc) keeps shingle Jaccard ≳ 0.88
-  // and perturbs only a few SimHash bit-sums.
-  //
-  // FLOOR PROVENANCE (re-measured 2026-08-13 / round 8 on the current
-  // driver parquet — sf0.01: MinHash 16/16, SimHash 16/16, LSH 6/6,
-  // winnowing 16/16; sf0.1: MinHash 213/213, SimHash 202/213, LSH
-  // 19/21, winnowing 213/213 — identical to the round-7 measurements;
-  // the floors are assertions about THIS data + these hash
-  // seeds, not theorems — if the driver ever regenerates testdata with
-  // a new seed, re-measure BEFORE trusting a red gate as a code bug):
-  //   MinHashRecallFloorPct = 90  measured 100%   (sf0.01 and sf0.1)
-  //   SimHashRecallFloorPct = 80  measured 100% / 94.8% (sf0.01 / sf0.1)
-  //   AnnLshRecallFloorPct  = 75  measured 100% / 90.5% (multi-probe)
-  //   AnnIvfRecallFloorPct  = 80  measured 100% / 95.2%
-  //   AnnIvfPqRecallFloorPct = 80  measured 100% / 95.2% (rerank=30 —
-  //     the one sf0.1 miss is the same coarse-cell miss as plain IVF)
-  //   (winnowing_planted_overlap has NO floor constant: its planted
-  //   ≥49-token shared runs make 100% recall a theorem of the
-  //   winnowing window guarantee, independent of data.)
-  // Re-measure procedure: temporarily expose the per-pair hit column
-  // (string-replace `plantedRecall` to also emit sum(hit)), run
-  // `graft.tools.Inspect show <sfDir> minhash_planted_recall ...` at
-  // sf0.01 AND sf0.1, revert, and keep ≥10pct margin under the worst
-  // measurement. Mutation knobs are load-bearing: every-50th-token
-  // with PlantMinTokens=50 — every-25th drops SimHash recall to ~73%
-  // at sf0.1, under its floor.
-  private val PlantOffset = 1000000L
-  private val PlantMod = 13
-  private val PlantMinTokens = 50
-  private val MinHashRecallFloorPct = 90
-  private val SimHashRecallFloorPct = 80
-  private val AnnLshRecallFloorPct = 75
-  private val AnnIvfRecallFloorPct = 80
-  private val AnnIvfPqRecallFloorPct = 80
-  private val AnnMatryoshkaRecallFloorPct = 80
-  // image near-dup on 8x8 pooled-pixel thumbs: recall is deterministic
-  // on this data (integer LSH projections, min |proj| measured far
-  // above the +-1 planted shift) — floor kept at 90 by convention
-  private val MmImageRecallFloorPct = 90
-  // audio near-dup on 64-bin pooled-PCM features: signed bin means
-  // are near-zero-centered BY CONSTRUCTION (the image path needed an
-  // explicit -127.5 shift; PCM is already bipolar), planted +1 shift
-  // vs bin-mean spread ~170 — same two-table sign-LSH, same floor
-  private val MmAudioRecallFloorPct = 90
-  // video near-dup on 16-frame RGB-mean pooled features: exact-palette
-  // solid frames make the feature integer-exact; same planted +1 vs
-  // per-dim spread ~37, same two-table LSH, same floor
-  private val MmVideoRecallFloorPct = 90
-  // fuzzy-join blocking recall on planted 1-substitution typos:
-  // measured 100% at sf0.01 AND sf0.1 (the substitution kills <= q
-  // grams; the rarest-2 prefix re-selects from the untouched ones)
-  private val FuzzyJoinRecallFloorPct = 90
-  // ADC-only recall@10 vs the exact-int8 ranking WITHIN the probed
-  // cells (isolates PQ fidelity from cell-miss), k-means-trained
-  // coarse centroids (1 Lloyd round — margins match the 2-round
-  // training at ~20% less query cost: 35.6% vs 30.3% at sf0.01;
-  // 2-round measured 34.9/30.4, and 24.0/22.7 at sf0.1 with trained
-  // codebooks), seeded codebooks — floor 30 keeps >4pts margin under
-  // the residual measurement and sits ABOVE the raw-encoding
-  // measurement, so a silent fallback to raw codes would trip the
-  // gate.
-  private val AnnIvfPqAdcFloorPct = 30
-
-  /** Recursive-CTE replay of [[neardupLabeled]] (shingles →
-    * integer-exact Jaccard edges → min-label reachability), shared by
-    * the neardup_components and neardup_dedup_keep oracles. The CTE
-    * names take a `p` prefix so the chain can coexist with other
-    * reach pipelines inside one composed statement (dedup_report).
-    */
-  private def neardupReachBody(p: String = ""): String =
-    s"""${p}sh AS (
-       |  SELECT doc_id,
-       |    list_distinct(list_transform(
-       |      range(0, greatest(len(toks) - 3, 0) + 1),
-       |      i -> array_to_string(toks[i+1:i+3], ' '))) AS sh
-       |  FROM (SELECT doc_id, string_split($NormTextSql, ' ') AS toks
-       |        FROM documents)),
-       |${p}edges0 AS (
-       |  SELECT a.doc_id AS src, b.doc_id AS dst
-       |  FROM ${p}sh a JOIN ${p}sh b
-       |    ON b.doc_id = a.doc_id + 1 OR b.doc_id = a.doc_id + 2
-       |  WHERE len(list_intersect(a.sh, b.sh)) * 100 >=
-       |        len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))),
-       |${p}edges AS (SELECT src, dst FROM ${p}edges0
-       |          UNION SELECT dst, src FROM ${p}edges0),
-       |${p}reach(node, lbl) AS (
-       |  SELECT doc_id, doc_id FROM documents
-       |  UNION
-       |  SELECT e.dst, r.lbl FROM ${p}reach r JOIN ${p}edges e
-       |    ON e.src = r.node)"""
-      .stripMargin.replaceAll("\\s+", " ").trim
-
-  private lazy val NeardupReachCte: String =
-    "WITH RECURSIVE " + neardupReachBody()
-
-  /** Shared DuckDB CTE for the semdedup oracles: planted-duplicate
-    * union, int8 quantization, within-cluster integer-cosine edges,
-    * and the recursive reach set — consumers append their final
-    * SELECT over `reach` + `base`.
-    */
-  /** The within-cluster edge + recursive-reach suffix of the SemDeDup
-    * replay, over an already-defined CTE `base(vec_id, embedding,
-    * label)`. Shared by the pre-labeled semdedup queries (labels from
-    * the embeddings table) and the e2e query (labels from the k-means
-    * replay below).
-    */
-  private def semdedupReachSuffix(p: String = ""): String =
-    s"""${p}n AS (SELECT vec_id, label,
-      |  list_transform(embedding, v -> CAST(greatest(least(
-      |    floor(CAST(v AS DOUBLE) * 64), 127), -128) AS BIGINT)) AS qvec
-      |  FROM ${p}base),
-      |${p}m AS (SELECT vec_id, label, qvec,
-      |  CAST(list_sum(list_transform(qvec, x -> x * x)) AS BIGINT)
-      |    AS norm2 FROM ${p}n),
-      |${p}p AS (SELECT a.vec_id AS src, b.vec_id AS dst,
-      |  CAST(list_dot_product(a.qvec, b.qvec) AS BIGINT) AS qdot,
-      |  a.norm2 AS na, b.norm2 AS nb
-      |  FROM ${p}m a JOIN ${p}m b
-      |    ON a.label = b.label AND a.vec_id < b.vec_id),
-      |${p}edges0 AS (SELECT src, dst FROM ${p}p
-      |  WHERE qdot > 0 AND 10000 * qdot * qdot >= 9409 * na * nb),
-      |${p}edges AS (SELECT src, dst FROM ${p}edges0
-      |  UNION SELECT dst, src FROM ${p}edges0),
-      |${p}reach(node, lbl) AS (
-      |  SELECT vec_id, vec_id FROM ${p}base
-      |  UNION
-      |  SELECT e.dst, r.lbl FROM ${p}reach r JOIN ${p}edges e
-      |    ON e.src = r.node)"""
-      .stripMargin.replaceAll("\\s+", " ").trim
-
-  private lazy val SemdedupReachSuffix: String = semdedupReachSuffix()
-
-  private lazy val SemdedupReachCte: String =
-    ("""WITH RECURSIVE base AS (
-      |  SELECT vec_id, embedding, label FROM embeddings
-      |  UNION ALL
-      |  SELECT vec_id + 10000000, embedding, label FROM embeddings
-      |  WHERE vec_id % 17 = 0),"""
-      .stripMargin.replaceAll("\\s+", " ").trim) + " " + SemdedupReachSuffix
-
-  /** Shared CTE chain of the dedup-verdict ENSEMBLE report — the table
-    * a 100 TB curation run ends with: per document, one verdict column
-    * per dedup family, all replayed from the same fragments the
-    * individual oracles use. The planted universe is the mod-17
-    * verbatim-copy union (the semdedup planting, applied to TEXT and
-    * EMBEDDINGS alike), so every content-based detector has known true
-    * positives; the adjacent-window near-dup detector structurally
-    * cannot see the non-adjacent +10M copies — the report SHOWS that
-    * disagreement rather than hiding it (that is what an ensemble
-    * report is for). Ends with
-    * `report(doc_id, exact_dup, line_dup, lines_lost, substr_dup,
-    * neardup_dup, sem_dup)`.
-    */
-  private lazy val DedupReportCtes: String =
-    s"""alldocs AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + 10000000, text FROM documents
-       |  WHERE doc_id % 17 = 0),
-       |eh AS (SELECT doc_id, md5($NormTextSql) AS h FROM alldocs),
-       |eo AS (SELECT h, min(doc_id) AS owner FROM eh GROUP BY h),
-       |ltoks AS (SELECT doc_id,
-       |    string_split(coalesce($NormTextSql, ''), ' ') AS t
-       |  FROM alldocs),
-       |lls AS (SELECT doc_id,
-       |    list_transform(range(0, (len(t)-1)//12 + 1),
-       |      i -> array_to_string(t[i*12+1:i*12+12], ' ')) AS la
-       |  FROM ltoks),
-       |llines AS (SELECT doc_id, unnest(la) AS line,
-       |    generate_subscripts(la, 1) AS pos FROM lls),
-       |lown AS (SELECT line, count(*) AS c,
-       |    min(doc_id * 4294967296 + pos) AS owner
-       |  FROM llines GROUP BY line),
-       |lstat AS (SELECT l.doc_id,
-       |    CAST(count(*) FILTER (WHERE o.c > 1 AND
-       |      l.doc_id * 4294967296 + l.pos <> o.owner) AS BIGINT)
-       |      AS lines_lost
-       |  FROM llines l JOIN lown o ON l.line = o.line
-       |  GROUP BY l.doc_id),
-       |ssp AS (SELECT doc_id, unnest(list_distinct(list_transform(
-       |    range(0, greatest(len(t) - 50, 0) + 1),
-       |    i -> array_to_string(t[i+1:i+50], ' ')))) AS span
-       |  FROM ltoks),
-       |sown AS (SELECT span, min(doc_id) AS first_doc,
-       |    count(*) AS n_docs
-       |  FROM ssp GROUP BY span),
-       |sstat AS (SELECT ssp.doc_id,
-       |    CAST(max(CASE WHEN sown.n_docs > 1
-       |      AND sown.first_doc < ssp.doc_id
-       |      THEN 1 ELSE 0 END) AS INTEGER) AS substr_dup
-       |  FROM ssp JOIN sown USING (span) GROUP BY ssp.doc_id),
-       |${neardupReachBody("nd_")},
-       |ndcomp AS (SELECT node, min(lbl) AS component FROM nd_reach
-       |  GROUP BY node),
-       |sd_base AS (
-       |  SELECT vec_id, embedding, label FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 10000000, embedding, label FROM embeddings
-       |  WHERE vec_id % 17 = 0),
-       |${semdedupReachSuffix("sd_")},
-       |sdcomp AS (SELECT node, min(lbl) AS component FROM sd_reach
-       |  GROUP BY node),
-       |report AS (SELECT eh.doc_id,
-       |    CAST(eh.doc_id <> eo.owner AS INTEGER) AS exact_dup,
-       |    CAST(l.lines_lost > 0 AS INTEGER) AS line_dup,
-       |    l.lines_lost,
-       |    s.substr_dup,
-       |    CAST(coalesce(n.node <> n.component, FALSE) AS INTEGER)
-       |      AS neardup_dup,
-       |    CAST(coalesce(sc.node <> sc.component, FALSE) AS INTEGER)
-       |      AS sem_dup
-       |  FROM eh JOIN eo USING (h)
-       |  JOIN lstat l ON l.doc_id = eh.doc_id
-       |  JOIN sstat s ON s.doc_id = eh.doc_id
-       |  LEFT JOIN ndcomp n ON n.node = eh.doc_id
-       |  LEFT JOIN sdcomp sc ON sc.node = eh.doc_id)"""
-      .stripMargin.replaceAll("\\s+", " ").trim
-
-  /** PQ replay CTEs: int8 codes → per-subspace codebook from the 16
-    * lowest vec_ids BY RANK (j = row_number − 1, the same
-    * id-shift-proof rule [[graft.ops.Quantization.seededCodebookCodes]]
-    * seeds with — ADVICE r18: the literal `vec_id < 16` replay only
-    * agreed with the engine on dense 0-based ids) → exact integer L2²
-    * assignment (row_number, ties to the lower centroid id) →
-    * big-endian nibble pack. Ends with `assign(vec_id, s, j)`,
-    * `cbn(s, j, cvec, nb)`, `qc(vec_id, qv)` and
-    * `pcodes(vec_id, pq_code)`; k=16, m=8, subDim=8 mirror the
-    * [[graft.ops.Quantization]] defaults.
-    */
-  private lazy val PqCtes: String =
-    """WITH qc AS (SELECT vec_id, list_transform(embedding,
-      |  v -> CAST(greatest(least(floor(CAST(v AS DOUBLE) * 64), 127),
-      |    -128) AS BIGINT)) AS qv FROM embeddings),
-      |sp AS (SELECT unnest(range(0, 8)) AS s),
-      |seeds AS (SELECT qv, j FROM (SELECT qv,
-      |  row_number() OVER (ORDER BY vec_id) - 1 AS j FROM qc)
-      |  WHERE j < 16),
-      |cbn AS (SELECT sp.s AS s, seeds.j AS j,
-      |  seeds.qv[sp.s*8+1:sp.s*8+8] AS cvec,
-      |  CAST(list_dot_product(seeds.qv[sp.s*8+1:sp.s*8+8],
-      |    seeds.qv[sp.s*8+1:sp.s*8+8]) AS BIGINT) AS nb
-      |  FROM seeds, sp),
-      |subs AS (SELECT qc.vec_id, sp.s, qc.qv[sp.s*8+1:sp.s*8+8] AS sub
-      |  FROM qc, sp),
-      |assign AS (SELECT vec_id, s, j FROM (
-      |  SELECT subs.vec_id, subs.s, cbn.j, row_number() OVER (
-      |    PARTITION BY subs.vec_id, subs.s
-      |    ORDER BY 2 * CAST(list_dot_product(subs.sub, cbn.cvec)
-      |      AS BIGINT) - cbn.nb DESC, cbn.j) AS rn
-      |  FROM subs JOIN cbn ON cbn.s = subs.s) WHERE rn = 1),
-      |pcodes AS (SELECT vec_id,
-      |  CAST(sum(j * (CAST(1 AS BIGINT) << CAST(4 * (7 - s) AS INTEGER)))
-      |    AS BIGINT) AS pq_code
-      |  FROM assign GROUP BY vec_id)"""
-      .stripMargin.replaceAll("\\s+", " ").trim
-
-  /** Residual-IVFPQ replay CTEs (the IVFADC formulation
-    * [[graft.ops.Quantization.ivfPqTopK]] defaults to): int8 codes
-    * `qc`, float-cosine cell assignment `cellasg` (same margin
-    * argument as ann_ivf_topk), int8 centroid codes `cent8`, integer
-    * residuals `rv(vec_id, cell, rq)`, residual-seeded codebook `cbn`,
-    * exact integer L2² assignment `assign`, per-vector residual
-    * reconstruction `recon`, queries `qq(q_id, qv)` (vec_id 10..19),
-    * and `probes(q_id, cell, qoff)` with the per-probe ADC offset
-    * `qoff = dot(q_codes, c8_cell)`.
-    */
-  private lazy val IvfPqResidCtes: String =
-    """WITH qc AS (SELECT vec_id, list_transform(embedding,
-      |  v -> CAST(greatest(least(floor(CAST(v AS DOUBLE) * 64), 127),
-      |    -128) AS BIGINT)) AS qv FROM embeddings),
-      |cent AS (SELECT CAST(vec_id AS INTEGER) AS cell,
-      |  embedding AS c_vec FROM embeddings WHERE vec_id < 8),
-      |cent8 AS (SELECT cell, list_transform(c_vec,
-      |  v -> CAST(greatest(least(floor(CAST(v AS DOUBLE) * 64), 127),
-      |    -128) AS BIGINT)) AS c8 FROM cent),
-      |cellasg AS (SELECT vec_id, cell FROM (
-      |  SELECT e.vec_id, c.cell, row_number() OVER (
-      |    PARTITION BY e.vec_id ORDER BY
-      |    list_cosine_similarity(e.embedding, c.c_vec) DESC, c.cell)
-      |    AS rn FROM embeddings e CROSS JOIN cent c) WHERE rn = 1),
-      |rv AS (SELECT qc.vec_id, ca.cell,
-      |  list_transform(range(1, 65), i -> qc.qv[i] - c8.c8[i]) AS rq
-      |  FROM qc JOIN cellasg ca USING (vec_id)
-      |  JOIN cent8 c8 USING (cell)),
-      |sp AS (SELECT unnest(range(0, 8)) AS s),
-      |rseeds AS (SELECT rq, j FROM (SELECT rq,
-      |  row_number() OVER (ORDER BY vec_id) - 1 AS j FROM rv)
-      |  WHERE j < 16),
-      |cbn AS (SELECT sp.s AS s, rseeds.j AS j,
-      |  rseeds.rq[sp.s*8+1:sp.s*8+8] AS cvec,
-      |  CAST(list_dot_product(rseeds.rq[sp.s*8+1:sp.s*8+8],
-      |    rseeds.rq[sp.s*8+1:sp.s*8+8]) AS BIGINT) AS nb
-      |  FROM rseeds, sp),
-      |subs AS (SELECT rv.vec_id, sp.s, rv.rq[sp.s*8+1:sp.s*8+8] AS sub
-      |  FROM rv, sp),
-      |assign AS (SELECT vec_id, s, j FROM (
-      |  SELECT subs.vec_id, subs.s, cbn.j, row_number() OVER (
-      |    PARTITION BY subs.vec_id, subs.s
-      |    ORDER BY 2 * CAST(list_dot_product(subs.sub, cbn.cvec)
-      |      AS BIGINT) - cbn.nb DESC, cbn.j) AS rn
-      |  FROM subs JOIN cbn ON cbn.s = subs.s) WHERE rn = 1),
-      |recon AS (SELECT a.vec_id,
-      |  flatten(list(c.cvec ORDER BY a.s)) AS recon
-      |  FROM assign a JOIN cbn c ON c.s = a.s AND c.j = a.j
-      |  GROUP BY a.vec_id),
-      |qq AS (SELECT vec_id AS q_id, qv FROM qc
-      |  WHERE vec_id >= 10 AND vec_id < 20),
-      |probes AS (SELECT p.q_id, p.cell,
-      |  CAST(list_dot_product(qq.qv, c8.c8) AS BIGINT) AS qoff FROM (
-      |  SELECT q.vec_id AS q_id, c.cell, row_number() OVER (
-      |    PARTITION BY q.vec_id ORDER BY
-      |    list_cosine_similarity(q.embedding, c.c_vec) DESC, c.cell)
-      |    AS rn FROM embeddings q CROSS JOIN cent c
-      |  WHERE q.vec_id >= 10 AND q.vec_id < 20) p
-      |  JOIN cent8 c8 USING (cell) JOIN qq ON qq.q_id = p.q_id
-      |  WHERE p.rn <= 2)"""
-      .stripMargin.replaceAll("\\s+", " ").trim
-
-  /** K-means label replay: the full integer-exact Lloyd iteration of
-    * [[graft.ops.KMeans.fitAssign]] (k = 8, 2 rounds, 64 dims, scale
-    * 2^6) rendered as CTEs over a caller-prepended `base0(vec_id,
-    * embedding)`. Ends with `klabel(vec_id, embedding, label)`. Every
-    * compared value is exact-integer-derived — the only doubles are
-    * the score division and the centroid floor-division, both
-    * correctly rounded IEEE ops on exactly-representable operands, so
-    * both engines compute identical bits (see KMeans scaladoc).
-    */
-  private def kmeansLabelSql(k: Int = 8, dims: Int = 64): String = {
-    // argmax cell per vector: signed-square cosine ordering, ties to
-    // the lower cell, degenerate zero-norm centroids at -infinity
-    def assignCte(name: String, cent: String): String =
-      s"$name AS (SELECT vec_id, cell FROM (" +
-        "SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id " +
-        "ORDER BY CASE WHEN cnorm2 > 0 THEN (CASE WHEN qd >= 0 " +
-        "THEN CAST(qd * qd AS DOUBLE) ELSE CAST(qd * qd AS DOUBLE) * -1 " +
-        "END) / CAST(cnorm2 AS DOUBLE) ELSE CAST('-infinity' AS DOUBLE) " +
-        "END DESC, cell ASC) AS rn FROM (" +
-        "SELECT q.vec_id, c.cell, " +
-        "CAST(list_dot_product(q.qvec, c.cvec) AS BIGINT) AS qd, " +
-        "CAST(list_dot_product(c.cvec, c.cvec) AS BIGINT) AS cnorm2 " +
-        s"FROM q CROSS JOIN $cent c)) WHERE rn = 1)"
-    // Lloyd update: per-cell per-dim floor(sum/count); empty cells
-    // drop out of the GROUP BY exactly as in KMeans.refine
-    def refineCte(sName: String, cName: String, aName: String): String =
-      s"$sName AS (SELECT a.cell, d.i, sum(q.qvec[d.i]) AS sm, " +
-        s"count(*) AS cnt FROM $aName a JOIN q USING (vec_id) " +
-        s"CROSS JOIN (SELECT unnest(range(1, ${dims + 1})) AS i) d " +
-        "GROUP BY a.cell, d.i), " +
-        s"$cName AS (SELECT cell, list(CAST(floor(CAST(sm AS DOUBLE) " +
-        s"/ cnt) AS BIGINT) ORDER BY i) AS cvec FROM $sName GROUP BY cell)"
-    "q AS (SELECT vec_id, embedding, list_transform(embedding, " +
-      "v -> CAST(greatest(least(floor(CAST(v AS DOUBLE) * 64), 127), " +
-      "-128) AS BIGINT)) AS qvec FROM base0), " +
-      // seed cells 0..k-1 from the k smallest vec_ids BY RANK — the
-      // same rule KMeans.fitAssign uses (ADVICE r18: the literal
-      // `vec_id < k` replay only matched the engine on dense 0-based
-      // id spaces; rank-based matches on ANY corpus)
-      "c0 AS (SELECT CAST(j AS INTEGER) AS cell, qvec AS cvec FROM (" +
-      "SELECT qvec, row_number() OVER (ORDER BY vec_id) - 1 AS j " +
-      s"FROM q) WHERE j < $k), " +
-      assignCte("a1", "c0") + ", " + refineCte("s1", "c1", "a1") + ", " +
-      assignCte("a2", "c1") + ", " + refineCte("s2", "c2", "a2") + ", " +
-      assignCte("af", "c2") + ", " +
-      "klabel AS (SELECT q.vec_id, q.embedding, a.cell AS label " +
-      "FROM q JOIN af a USING (vec_id))"
-  }
-
-  /** Shared near-dup clustering pipeline (candidates → integer-exact
-    * Jaccard edges → distributed connected components), labeled
-    * (node, component). Candidate pairs are the deterministic adjacent
-    * doc_id set so the whole thing is oracle-able via a recursive CTE;
-    * the repartition exists because the single-file fixture would
-    * otherwise compute every shingle array serially (cf. the
-    * minhash_planted_recall note).
-    */
-  /** The candidate-edge half of the near-dup pipeline: (edges, ids). */
-  private def neardupEdges(
-      s: org.apache.spark.sql.SparkSession,
-      dir: String): (DataFrame, DataFrame) = {
-    val docs = T(s, dir, "documents")
-      .repartition(s.sparkContext.defaultParallelism)
-    val ids = docs.select(col("doc_id"))
-    // No existence-validation join for doc_b: jaccardCountsHashed joins
-    // the pairs INNER against the shingle frame on both doc_a and
-    // doc_b, so a candidate pointing past the max id simply produces no
-    // row — the explicit pre-join against ids was a third join doing
-    // work the verification joins already do.
-    val pairs = ids
-      .select(col("doc_id").as("doc_a"), (col("doc_id") + 1).as("doc_b"))
-      .union(ids
-        .select(col("doc_id").as("doc_a"), (col("doc_id") + 2).as("doc_b")))
-    // Hashed-shingle flavor: the shingle sets cross the two
-    // verification joins as sorted array<bigint> (8 bytes/gram), not
-    // array<string>; counts are string-exact modulo 64-bit gram
-    // collisions (spec-pinned equal on this corpus), so the DuckDB
-    // string replay stays a valid oracle.
-    val edges = TextDedup.jaccardCountsHashed(pairs, docs)
-      .filter(col("inter_cnt") * 100 >= col("union_cnt"))
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    (edges, ids)
-  }
-
-  /** Input for the substring_dedup queries: documents plus planted
-    * mid-document excerpt docs — tokens 3..62 of the normalized text
-    * of every doc_id % 41 == 0 document with at least 62 tokens, under
-    * doc_id + 10,000,000. Pure token slicing on the normalized form,
-    * so DuckDB's `t[3:62]` + `array_to_string` replays the excerpt
-    * text byte-exactly.
-    */
-  private def substringDedupInput(
-      s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents")
-    val toks = split(TextDedup.normText(col("text")), " ")
-    val excerpts = docs
-      .where(col("doc_id") % 41 === 0 && size(toks) >= 62)
-      .select((col("doc_id") + 10000000L).as("doc_id"),
-        array_join(slice(toks, 3, 60), " ").as("text"))
-    docs.select(col("doc_id"), col("text")).unionByName(excerpts)
-  }
-
-  private def neardupLabeled(
-      s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val (edges, ids) = neardupEdges(s, dir)
-    Components.connectedComponents(edges,
-      ids.select(col("doc_id").as("node")))
-  }
-
-  /** The dedup-verdict ensemble report (Spark side of
-    * [[DedupReportCtes]]): five verdict pipelines — exact hash,
-    * keep-first line, exact-substring span, adjacent-window Jaccard
-    * components, semantic components — assembled by equi-joins on
-    * doc_id. Scale shape: each verdict is an already-bounded pipeline
-    * (hash groupBy / broadcast owner sets / label equi-joins); the
-    * assembly re-uses one hash partitioning of doc_id across the
-    * joins, so the report costs the five passes plus one co-partitioned
-    * join chain — nothing quadratic is introduced by composing them.
-    */
-  private def dedupReportFrame(
-      s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents").select(col("doc_id"), col("text"))
-    val all = docs.unionByName(
-      docs.filter(col("doc_id") % 17 === 0)
-        .select((col("doc_id") + 10000000L).as("doc_id"), col("text")))
-    // ONE normalization pass shared by the three text detectors
-    // (VERDICT r21 #3): exact, line and substring each re-derived
-    // normText over the planted union — the checkpoint computes the
-    // regexp normalization once and the detectors read ~500 tiny
-    // (doc_id, nt) rows. normText(null) stays null, so every
-    // detector's null semantics are byte-identical (oracle unchanged).
-    val allNorm = all
-      .select(col("doc_id"), TextDedup.normText(col("text")).as("nt"))
-      .localCheckpoint(false)
-    // exact: min-owner per 32-byte content hash — one window over the
-    // hash partitioning, no second aggregate-join pass
-    val exact = allNorm
-      .select(col("doc_id"), md5(col("nt")).as("h"))
-      .withColumn("owner",
-        min(col("doc_id")).over(Window.partitionBy(col("h"))))
-      .select(col("doc_id"),
-        (col("doc_id") =!= col("owner")).cast("int").as("exact_dup"))
-    val recon = regexp_replace(col("nt"),
-      "((?:\\S+ ){11}\\S+) ", "$1\n")
-    val line = TextDedup.lineDedupKeepFirst(
-        allNorm.select(col("doc_id"), recon.as("text")))
-      .select(col("doc_id"),
-        (col("n_lines") - col("kept_lines")).as("lines_lost"))
-    val substr = TextDedup.substringDedup(
-        allNorm.select(col("doc_id"), col("nt").as("text")),
-        normalized = true)
-      .select(col("doc_id"), col("is_dup").as("substr_dup"))
-    val near = neardupLabeled(s, dir)
-      .select(col("node").as("doc_id"),
-        (col("node") =!= col("component")).cast("int").as("neardup_dup"))
-    val emb = T(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"), col("label"))
-    val sem = SemDedup.semDedup(emb.unionByName(
-        emb.filter(col("vec_id") % 17 === 0)
-          .select((col("vec_id") + 10000000L).as("vec_id"),
-            col("embedding"), col("label"))))
-      .select(col("vec_id").as("doc_id"), col("is_dup").as("sem_dup"))
-    exact
-      .join(line, Seq("doc_id"))
-      .join(substr, Seq("doc_id"))
-      // the near-dup labeling covers the natural corpus only (its
-      // candidate window is id-adjacency) and the semantic labeling
-      // covers the embedding universe — left joins + coalesce(0) keep
-      // a detector's structural blind spot visible as a 0, not a drop
-      .join(near, Seq("doc_id"), "left")
-      .join(sem, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("exact_dup"),
-        (col("lines_lost") > 0).cast("int").as("line_dup"),
-        col("lines_lost"), col("substr_dup"),
-        coalesce(col("neardup_dup"), lit(0)).as("neardup_dup"),
-        coalesce(col("sem_dup"), lit(0)).as("sem_dup"))
-  }
-
-  /** Docs that get a planted near-dup copy: a deterministic 1-in-13
-    * slice, long enough (≥ 50 tokens) that every copy gets at least
-    * one real mutation while Jaccard stays high. The predicate is
-    * replayed in the oracle SQL.
-    */
-  private def plantedEligible(docs: DataFrame): DataFrame =
-    docs.filter(col("doc_id") % PlantMod === 0 &&
-      size(split(TextDedup.normText(col("text")), " ")) >= PlantMinTokens)
-
-  /** Corpus ∪ mutated copies (doc_id + PlantOffset, every 50th token
-    * replaced by a sentinel token). The mutation operates on the
-    * normalized token stream, so the copy is its own normal form.
-    *
-    * The every-50th replacement is ONE codegen'd regex pass: each
-    * non-overlapping "(49 tokens + space) + token" group keeps its
-    * prefix and swaps its 50th token — identical output to the
-    * split→transform(pmod)→concat_ws HOF chain (spec-pinned in
-    * SparkEntrySpec), which evaluates its lambda interpreted per
-    * token and was the dominant per-row cost of the planted corpus.
-    */
-  private def plantedInput(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("text")).union(plantedCopies(docs))
-
-  /** Just the mutated copies half of [[plantedInput]] — the "new
-    * snapshot" side for the incremental near-dup recall gate.
-    */
-  private def plantedCopies(docs: DataFrame): DataFrame = {
-    val mutated = regexp_replace(TextDedup.normText(col("text")),
-      "((?:\\S+ ){49})\\S+", "$1zzplantzz")
-    plantedEligible(docs).select(
-      (col("doc_id") + PlantOffset).as("doc_id"),
-      mutated.as("text"))
-  }
-
-  /** In-band recall summary over the planted pairs: how many eligible
-    * docs d had (d, d + PlantOffset) surface in `cands`, as a
-    * (planted_total, recall_ok) row. Only engine-independent values
-    * are emitted — the oracle recomputes planted_total from the
-    * eligibility predicate and asserts the flag held.
-    */
-  private def plantedRecall(
-      cands: DataFrame,
-      eligible: DataFrame,
-      floorPct: Int): DataFrame = {
-    val hits = cands
-      .filter(col("doc_a") < PlantOffset &&
-        col("doc_b") === col("doc_a") + PlantOffset)
-      .select(col("doc_a").as("doc_id"), lit(1L).as("hit"))
-    eligible.select("doc_id")
-      .join(hits, Seq("doc_id"), "left")
-      .agg(count(lit(1)).as("planted_total"),
-        (sum(coalesce(col("hit"), lit(0L))) * 100 >=
-          count(lit(1)) * floorPct).as("recall_ok"))
-  }
-
-  /** [[plantedRecall]] plus a FALSE-POSITIVE term (ADVICE r18): the
-    * exact count of candidate pairs that are NOT a planted
-    * (d, d + PlantOffset) pair rides the summary as `fp_pairs`, and
-    * the oracle asserts it is EXACTLY 0 — so the "zero false
-    * positives" property the near-dup entries cite is a gated
-    * invariant, not a one-off measurement. (Planted ids exist only
-    * for eligible docs, so the complement of the hit predicate is
-    * precisely the FP set.) The two 1-row aggregates meet in a 1-row
-    * cross join — the documented tiny-broadcast BNLJ shape.
-    */
-  private def plantedRecallFp(
-      cands: DataFrame,
-      eligible: DataFrame,
-      floorPct: Int): DataFrame = {
-    val plantedPair = col("doc_a") < PlantOffset &&
-      col("doc_b") === col("doc_a") + PlantOffset
-    val hits = cands.filter(plantedPair)
-      .select(col("doc_a").as("doc_id"), lit(1L).as("hit"))
-    val fp = cands.filter(!plantedPair)
-      .agg(count(lit(1)).as("fp_pairs"))
-    eligible.select("doc_id")
-      .join(hits, Seq("doc_id"), "left")
-      .agg(count(lit(1)).as("planted_total"),
-        (sum(coalesce(col("hit"), lit(0L))) * 100 >=
-          count(lit(1)) * floorPct).as("recall_ok"))
-      .crossJoin(fp)
-  }
-
-  /** PPJoin oracle CTEs: the planted corpus re-derived in SQL (base
-    * normalized text ∪ every-50th-token-mutated eligible copies under
-    * `doc_id + PlantOffset`), distinct 3-gram shingle sets, and the
-    * ALL-PAIRS exact Jaccard counts `pairs(a_id, b_id, inter_cnt,
-    * union_cnt)`. The oracle deliberately brute-forces what the engine
-    * prefix-filters: at sf0.01 that is ~10^5 list intersections for
-    * DuckDB, and any pair the engine's prefix/length filters wrongly
-    * dropped (or any hash-collision miscount) diverges the compare —
-    * the completeness audit for the lossless claim.
-    */
-  private lazy val PpjoinCtes: String =
-    s"""WITH pt AS (
-       |  SELECT doc_id, $NormTextSql AS nt FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + $PlantOffset, regexp_replace($NormTextSql,
-       |    '((?:\\S+ ){49})\\S+', '\\1zzplantzz', 'g')
-       |  FROM documents WHERE doc_id % $PlantMod = 0
-       |    AND len(string_split($NormTextSql, ' ')) >= $PlantMinTokens),
-       |ppt0 AS (SELECT doc_id, string_split(nt, ' ') AS toks FROM pt),
-       |ppts AS (SELECT doc_id, $ShingleSetSql AS tk FROM ppt0),
-       |pptn AS (SELECT doc_id, tk, len(tk) AS n FROM ppts
-       |  WHERE len(tk) > 0),
-       |pairs0 AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-       |  a.n + b.n AS ssum,
-       |  CAST(len(list_intersect(a.tk, b.tk)) AS BIGINT) AS inter_cnt
-       |  FROM pptn a JOIN pptn b ON a.doc_id < b.doc_id),
-       |pairs AS (SELECT a_id, b_id, inter_cnt,
-       |  CAST(ssum - inter_cnt AS BIGINT) AS union_cnt FROM pairs0)"""
-      .stripMargin.replaceAll("\\s+", " ").trim
-
-  /** The fuzzy-join fixture: left = part names keyed by partkey;
-    * probes = every 50th part's name with one character substituted
-    * (position 3 → '#', a deterministic distance-1 typo the oracle
-    * renders identically), offset into a disjoint id space.
-    */
-  private def fuzzyLeft(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "part")
-      .select(col("p_partkey").as("l_id"), col("p_name").as("l_name"))
-
-  private def fuzzyProbes(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "part").filter(col("p_partkey") % 50 === 0)
-      .select((col("p_partkey") + 9000000L).as("r_id"),
-        concat(substring(col("p_name"), 1, 2), lit("#"),
-          expr("substring(p_name, 4)")).as("r_name"))
-
-  /** Fuzzy-join oracle CTEs: the fixture (part names + planted typo
-    * probes) and the ENTIRE blocking pipeline replayed — distinct
-    * 4-grams with the same sub-q truncation rule, left gram dfs, the
-    * rarest-(maxDist+1) prefix per probe ranked by (df, gram), the
-    * ±1 length band — ending in candidate set `c(l_id, l_name, r_id,
-    * r_name)`.
-    */
-  private lazy val FuzzyJoinCtes: String =
-    """WITH lf AS (SELECT p_partkey AS l_id, p_name AS l_name FROM part),
-      |rt AS (SELECT p_partkey + 9000000 AS r_id,
-      |  l_part[1:2] || '#' || l_part[4:] AS r_name FROM
-      |  (SELECT p_partkey, p_name AS l_part FROM part
-      |   WHERE p_partkey % 50 = 0)),
-      |lg AS (SELECT l_id, l_name, unnest(list_distinct(list_transform(
-      |  range(1, greatest(len(l_name) - 3, 1) + 1),
-      |  i -> l_name[i:i+3]))) AS g FROM lf),
-      |gdf AS (SELECT g, count(*) AS gdf FROM lg GROUP BY g),
-      |rg AS (SELECT r_id, r_name, g FROM (
-      |  SELECT r0.r_id, r0.r_name, r0.g, row_number() OVER (
-      |    PARTITION BY r0.r_id ORDER BY gdf.gdf, r0.g) AS rn
-      |  FROM (SELECT r_id, r_name, unnest(list_distinct(list_transform(
-      |    range(1, greatest(len(r_name) - 3, 1) + 1),
-      |    i -> r_name[i:i+3]))) AS g FROM rt) r0
-      |  JOIN gdf ON gdf.g = r0.g) WHERE rn <= 2),
-      |c AS (SELECT DISTINCT l.l_id, l.l_name, r.r_id, r.r_name
-      |  FROM lg l JOIN rg r ON l.g = r.g
-      |  WHERE abs(len(l.l_name) - len(r.r_name)) <= 1)"""
-      .stripMargin.replaceAll("\\s+", " ").trim
-
-  /** The BM25 run CTE chain (token stream → query-term postings →
-    * scored → top-10 `run`) shared by the retrieval_eval and
-    * graded_rank_eval oracles — one source of truth for the query
-    * set and the scoring formula. Pre-collapsed; interpolate after
-    * `WITH `.
-    */
-  private lazy val Bm25RunCtes: String =
-    s"""toks AS (
-       |  SELECT doc_id, unnest(string_split($NormTextSql, ' '))
-       |    AS term FROM documents),
-       |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-       |       WHERE len(term) > 0 GROUP BY doc_id, term),
-       |dl AS (SELECT doc_id, count(*) AS dl FROM toks
-       |       WHERE len(term) > 0 GROUP BY doc_id),
-       |q AS (SELECT CAST(q_id AS BIGINT) AS q_id, term FROM (VALUES
-       |  (1, 'hash'), (1, 'join'), (2, 'column'), (2, 'scan'),
-       |  (3, 'filter'), (3, 'merge'), (3, 'small')) t(q_id, term)),
-       |qp AS (SELECT tf.doc_id, tf.term, tf.tf, dl.dl
-       |       FROM tf JOIN dl USING (doc_id)
-       |       WHERE tf.term IN (SELECT term FROM q)),
-       |dfq AS (SELECT term, count(*) AS df FROM qp GROUP BY term),
-       |scl AS (SELECT (SELECT count(*) FROM documents) AS n_docs,
-       |       (SELECT avg(CAST(dl AS DOUBLE)) FROM dl) AS avgdl),
-       |s AS (SELECT q.q_id, qp.doc_id,
-       |  sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) *
-       |    (tf * 2.2) / (tf + 1.2 *
-       |      (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl))) AS score
-       |  FROM qp JOIN q USING (term) JOIN dfq USING (term)
-       |  CROSS JOIN scl GROUP BY q.q_id, qp.doc_id),
-       |run AS (SELECT q_id, doc_id, CAST(row_number() OVER (
-       |  PARTITION BY q_id
-       |  ORDER BY round(score, 4) DESC, doc_id ASC) AS INTEGER) AS rk
-       |  FROM s QUALIFY rk <= 10)"""
-      .stripMargin.replaceAll("\\s+", " ").trim
-
-  /** HITS oracle rounds: one authority CTE (inflow of hub scores on
-    * dst) and one hub CTE (inflow of authority scores on src) per
-    * round, each left-joined back to the node table so zero-degree
-    * sides keep a 0 score.
-    */
-  private lazy val HitsSql: String = {
-    def authRound(hSrc: String, out: String) =
-      s"$out AS (SELECT nd.node, CAST(coalesce(x.m, 0) AS BIGINT) " +
-        "AS auth FROM nd LEFT JOIN (SELECT e.dst AS node, " +
-        s"sum(h.hub) AS m FROM pe e JOIN $hSrc h ON h.node = e.src " +
-        "GROUP BY 1) x ON x.node = nd.node)"
-    def hubRound(aSrc: String, out: String) =
-      s"$out AS (SELECT nd.node, CAST(coalesce(x.m, 0) AS BIGINT) " +
-        "AS hub FROM nd LEFT JOIN (SELECT e.src AS node, " +
-        s"sum(a.auth) AS m FROM pe e JOIN $aSrc a ON a.node = e.dst " +
-        "GROUP BY 1) x ON x.node = nd.node)"
-    "WITH pe AS (SELECT DISTINCT o_custkey AS src, " +
-      "l_suppkey + 1000000 AS dst " +
-      "FROM lineitem JOIN orders ON l_orderkey = o_orderkey), " +
-      "nd AS (SELECT DISTINCT node FROM " +
-      "(SELECT src AS node FROM pe UNION ALL SELECT dst FROM pe)), " +
-      "h0 AS (SELECT node, CAST(1 AS BIGINT) AS hub FROM nd), " +
-      s"${authRound("h0", "a1")}, ${hubRound("a1", "h1")}, " +
-      s"${authRound("h1", "a2")}, ${hubRound("a2", "h2")} " +
-      "SELECT h2.node, h2.hub, a2.auth FROM h2 " +
-      "JOIN a2 ON a2.node = h2.node"
-  }
-
-  /** k-core oracle: the peel unrolled — per round a degree CTE, a
-    * survivor filter at `k`, and the induced-subgraph edge CTE.
-    */
-  private lazy val KCoreSql: String = {
-    def round(r: Int): String =
-      s"d$r AS (SELECT node, count(*) AS deg FROM " +
-        s"(SELECT a AS node FROM e${r - 1} " +
-        s"UNION ALL SELECT b FROM e${r - 1}) GROUP BY node), " +
-        s"k$r AS (SELECT node FROM d$r WHERE deg >= 30), " +
-        s"e$r AS (SELECT e.a, e.b FROM e${r - 1} e " +
-        s"JOIN k$r x ON x.node = e.a JOIN k$r y ON y.node = e.b)"
-    "WITH e0 AS (SELECT DISTINCT o_custkey AS a, " +
-      "l_suppkey + 1000000 AS b " +
-      "FROM lineitem JOIN orders ON l_orderkey = o_orderkey), " +
-      round(1) + ", " + round(2) + ", " + round(3) +
-      " SELECT node, CAST(count(*) AS BIGINT) AS deg FROM " +
-      "(SELECT a AS node FROM e3 UNION ALL SELECT b FROM e3) " +
-      "GROUP BY node"
-  }
-
-  /** PageRank oracle: the fixed-point update unrolled as one CTE pair
-    * per iteration — `i_k` (inflow: floor-divided contributions summed
-    * per target) and `r_k` (damped update, floor division by 100).
-    * Every value BIGINT, so three rounds replay bit-exactly.
-    */
-  private lazy val PageRankSql: String = {
-    val base = (100L - 85) * 1000000L
-    def iter(k: Int): String =
-      s"i$k AS (SELECT e.dst AS node, sum(r.r // d.deg) AS m " +
-        s"FROM e JOIN r${k - 1} r ON r.node = e.src " +
-        s"JOIN d ON d.src = e.src GROUP BY e.dst), " +
-        s"r$k AS (SELECT nd.node, " +
-        s"CAST(($base + 85 * COALESCE(m, 0)) // 100 AS BIGINT) AS r " +
-        s"FROM nd LEFT JOIN i$k ON i$k.node = nd.node)"
-    "WITH pe AS (SELECT DISTINCT o_custkey AS cust, " +
-      "l_suppkey + 1000000 AS supp " +
-      "FROM lineitem JOIN orders ON l_orderkey = o_orderkey), " +
-      "e AS (SELECT cust AS src, supp AS dst FROM pe " +
-      "UNION ALL SELECT supp, cust FROM pe), " +
-      "d AS (SELECT src, count(*) AS deg FROM e GROUP BY src), " +
-      "nd AS (SELECT DISTINCT node FROM " +
-      "(SELECT src AS node FROM e UNION ALL SELECT dst FROM e)), " +
-      "r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS r FROM nd), " +
-      iter(1) + ", " + iter(2) + ", " + iter(3) +
-      " SELECT node, r AS pr FROM r3"
-  }
-
-  /** Combining-mark suffix appended for `unicode_nfc`: decomposed
-    * e+COMBINING ACUTE (U+0301) forms that NFC precomposes — the same
-    * constant is rendered into the DuckDB oracle literal.
-    */
-  private val DecomposedSuffix = " désa été"
-
-  private def messyName: Column =
-    concat(lit("  "), pmod(col("p_partkey"), lit(1000)).cast("string"),
-      lit("  "), col("p_name"), lit("\t"))
-  private val messyNameSql =
-    "('  ' || CAST(p_partkey % 1000 AS VARCHAR) || '  ' || p_name || chr(9))"
-
-  private def islandishCode: Column =
-    when(pmod(col("l_linenumber"), lit(3)) === 0,
-      concat(pmod(col("l_suppkey"), lit(100)).cast("string"), lit("."),
-        pmod(col("l_partkey"), lit(100)).cast("string")))
-      .otherwise(concat(
-        lpad(pmod(col("l_suppkey"), lit(100)).cast("string"), 2, "0"), lit("."),
-        lpad(pmod(col("l_partkey"), lit(100)).cast("string"), 2, "0"), lit("."),
-        lpad(pmod(col("l_orderkey"), lit(100000)).cast("string"), 5, "0")))
-  private val islandishCodeSql =
-    """(CASE WHEN l_linenumber % 3 = 0
-      | THEN CAST(l_suppkey % 100 AS VARCHAR) || '.' || CAST(l_partkey % 100 AS VARCHAR)
-      | ELSE lpad(CAST(l_suppkey % 100 AS VARCHAR), 2, '0') || '.' ||
-      |      lpad(CAST(l_partkey % 100 AS VARCHAR), 2, '0') || '.' ||
-      |      lpad(CAST(l_orderkey % 100000 AS VARCHAR), 5, '0') END)"""
-      .stripMargin.replaceAll("\\s+", " ").trim
-
-  // -------------------------------------------------------------- queries
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // F1: clean_name regexp chain over a synthesized messy column.
-    "f1_clean_name" -> ((s, dir) =>
-      T(s, dir, "part").select(col("p_partkey"),
-        Cleanse.cleanName(messyName).as("cleaned"))),
-
-    // P5: variant-dependent projection (width-keyed column pick).
-    "p5_variant_projection" -> ((s, dir) =>
-      T(s, dir, "events").select(col("event_id"),
-        when(pmod(length(col("props")), lit(2)) === 0, col("event_type"))
-          .otherwise(col("user_id").cast("string")).as("picked"))),
-
-    // P6: first-non-empty coalesce across candidate columns.
-    "p6_coalesce" -> ((s, dir) => {
-      val cand1 = when(pmod(col("c_custkey"), lit(3)) === 0, lit("   "))
-        .otherwise(col("c_name"))
-      def nonEmpty(c: Column) =
-        when(trim(c) === "", lit(null)).otherwise(trim(c))
-      T(s, dir, "customer").select(col("c_custkey"),
-        coalesce(nonEmpty(cand1), nonEmpty(col("c_mktsegment")),
-          lit("unknown")).as("picked_name"))
-    }),
-
-    // P7: non-empty row filter (code AND name non-blank after trim).
-    "p7_nonempty_filter" -> ((s, dir) => {
-      val name2 = when(pmod(col("p_partkey"), lit(7)) === 0, lit(" "))
-        .otherwise(col("p_name"))
-      T(s, dir, "part")
-        .select(col("p_partkey"), name2.as("name"), col("p_brand").as("brand"))
-        .filter(length(trim(col("name"))) > 0 && length(trim(col("brand"))) > 0)
-    }),
-
-    // P8: island code-format rlike filter over synthesized codes.
-    "p8_code_filter" -> ((s, dir) =>
-      T(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          islandishCode.as("code"))
-        .filter(col("code").rlike(Cleanse.IslandCodeRegex))),
-
-    // F5: is_populated / is_outermost_small flag derivation.
-    "f5_flags" -> ((s, dir) => {
-      val status = when(pmod(col("o_orderkey"), lit(3)) === 0, lit(" BP"))
-        .when(pmod(col("o_orderkey"), lit(3)) === 1, lit("TBP"))
-        .otherwise(lit("BP/TBP"))
-      val info = when(pmod(col("o_orderkey"), lit(5)) === 0,
-        lit("pulau PPKT kecil")).otherwise(col("o_orderstatus"))
-      T(s, dir, "orders").select(col("o_orderkey"),
-        Cleanse.isPopulated(status).as("is_populated"),
-        Cleanse.isOutermostSmall(info).as("is_outermost_small"))
-    }),
-
-    // F6: island parent code with the "00" -> empty sentinel.
-    "f6_island_parent" -> ((s, dir) =>
-      T(s, dir, "lineitem").select(col("l_orderkey"), col("l_linenumber"),
-        islandishCode.as("code"))
-        .select(col("l_orderkey"), col("l_linenumber"), col("code"),
-          Cleanse.islandParentCode(col("code")).as("regency_code"))),
-
-    // F7: area parent prefixes (province/regency/district from village).
-    "f7_parent_prefix" -> ((s, dir) => {
-      val vcode = lpad(col("o_orderkey").cast("string"), 13, "0")
-      T(s, dir, "orders").select(col("o_orderkey"), vcode.as("vcode"),
-        Cleanse.parentPrefix(vcode, Cleanse.ProvinceCodeLength).as("province_code"),
-        Cleanse.parentPrefix(vcode, Cleanse.RegencyCodeLength).as("regency_code"),
-        Cleanse.parentPrefix(vcode, Cleanse.DistrictCodeLength).as("district_code"))
-    }),
-
-    // A1: first-occurrence dedup (window by key, ordered, rn=1).
-    "a1_first_dedup" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey")).orderBy(col("o_orderkey"))
-      T(s, dir, "orders")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("o_custkey"), col("o_orderkey").as("first_orderkey"),
-          col("o_orderstatus"))
-    }),
-
-    // O1: sort + top-k with deterministic tie-break.
-    "o1_topk" -> ((s, dir) =>
-      T(s, dir, "orders")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-        .limit(100)
-        .select(col("o_orderkey"), col("o_totalprice"))),
-
-    // J1: broadcast left-anti RI check (orphan children).
-    "j1_ri_antijoin" -> ((s, dir) => {
-      val parents = T(s, dir, "customer")
-        .filter(pmod(col("c_custkey"), lit(7)) =!= 0)
-      RefIntegrity.orphans(T(s, dir, "orders"), parents,
-        "o_custkey", "c_custkey")
-        .select(col("o_orderkey"), col("o_custkey"))
-    }),
-
-    // S3: page-range pruning pushed to the scan as an isin filter.
-    "s3_page_prune" -> ((s, dir) => {
-      val pages = PageRange.parse("1-4,6", 20)
-      T(s, dir, "events")
-        .withColumn("page", (pmod(col("event_id"), lit(20)) + 1).cast("int"))
-        .filter(col("page").isin(pages: _*))
-        .select(col("event_id"), col("page"), col("event_type"))
-    }),
-
-    // Hash-agg with partial (map-side) aggregation — the Catalyst
-    // counterpart of the reference's count accumulation, at scale.
-    "agg_groupby" -> ((s, dir) =>
-      T(s, dir, "lineitem")
-        .filter(col("l_quantity") <= 25)
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(col("l_quantity")).as("sum_qty"),
-          count(lit(1)).as("cnt"),
-          min(col("l_extendedprice")).as("min_price"),
-          max(col("l_extendedprice")).as("max_price"))),
-
-    // S1: metadata scan analog — per-page row stats, the file-listing/
-    // page-count step that bounds the reference's page range
-    // (`cli.py:146-150`).
-    "s1_page_stats" -> ((s, dir) =>
-      T(s, dir, "events")
-        .withColumn("page", (pmod(col("event_id"), lit(20)) + 1).cast("int"))
-        .groupBy("page")
-        .agg(count(lit(1)).as("n_rows"), max(col("event_id")).as("max_id"))),
-
-    // Salted two-stage aggregation (skew defense); result identical to
-    // the plain groupBy, which is exactly what the oracle checks.
-    "skew_salted_agg" -> ((s, dir) =>
-      SkewAgg.sumCountSalted(
-        T(s, dir, "lineitem"),
-        key = col("l_returnflag"),
-        value = col("l_quantity"),
-        salt = pmod(col("l_orderkey"), lit(8)),
-        keyName = "l_returnflag")),
-
-    // Salted shuffle JOIN (SkewAgg's sibling for joins): events on the
-    // 5-value event_type key — maximal skew — against a derived type
-    // dim, salted into 16 sub-keys; aggregated after the join so the
-    // oracle compares exact integers. Row-identical to the plain join.
-    "skew_salted_join" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-      val dim = ev.select(col("event_type")).distinct()
-        .withColumn("type_weight", length(col("event_type")).cast("long"))
-      SkewJoin.saltedInnerJoin(ev, dim, "event_type",
-        salt = xxhash64(col("event_id")), buckets = 16)
-        .groupBy("event_type", "type_weight")
-        .agg(count(lit(1)).as("cnt"), sum(col("event_id")).as("sum_event_id"))
-    }),
-
-    // Two-pass exact heavy hitters: freqItems sketch (no false
-    // negatives above support) prunes to candidates, then an exact
-    // recount keyed only on candidates — GROUP BY HAVING semantics
-    // without the full-cardinality shuffle. support derives from the
-    // ACTUAL row count (minCount/N with 2× margin), so the no-miss
-    // guarantee holds at any SF rather than only where a pinned
-    // constant happens to sit below minCount/N.
-    "heavy_hitters" -> ((s, dir) =>
-      HeavyHitters.exactHeavyHittersAuto(T(s, dir, "events"),
-        key = "user_id", minCount = 80L)),
-
-    // Same exact result through the engine's own TypedImperativeAggregate
-    // (mergeable Misra-Gries sketch) + broadcast semi-join — no driver
-    // collect. k likewise derives from the actual row count to keep
-    // the N/(k+1) < minCount no-miss bound at any SF.
-    "heavy_hitters_mg" -> ((s, dir) =>
-      HeavyHitters.exactHeavyHittersMGAuto(T(s, dir, "events"),
-        key = "user_id", minCount = 80L)),
-
-    // Distinct aggregates (absent in the reference; Catalyst built-in
-    // — expand + two-phase agg, SURVEY §2.4).
-    "count_distinct_agg" -> ((s, dir) =>
-      T(s, dir, "orders").agg(
-        count_distinct(col("o_custkey")).as("distinct_custs"),
-        count_distinct(col("o_orderpriority")).as("distinct_prios"),
-        count(lit(1)).as("total"))),
-
-    // ROLLUP hierarchy totals (Catalyst Expand; SURVEY §2.4 freebie).
-    // Sums are of integer-valued doubles — exact, oracle-safe. The
-    // NULL grouping keys are coalesced to a sentinel on BOTH sides:
-    // null-sort placement differs across engines and would misalign
-    // the row-sorted hash compare.
-    "rollup_agg" -> ((s, dir) =>
-      T(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(col("l_quantity")).as("sum_qty"),
-          count(lit(1)).as("cnt"))
-        .select(coalesce(col("l_returnflag"), lit("(all)")).as("returnflag"),
-          coalesce(col("l_linestatus"), lit("(all)")).as("linestatus"),
-          col("sum_qty"), col("cnt"))),
-
-    // Set operation (§2.7 — absent in the reference; Catalyst built-in
-    // shown here as except/anti semantics over projections): customers
-    // in the two largest market segments minus those holding the top
-    // account balances.
-    "set_except" -> ((s, dir) => {
-      val c = T(s, dir, "customer")
-      c.filter(col("c_mktsegment").isin("AUTOMOBILE", "BUILDING"))
-        .select(col("c_custkey"))
-        .except(c.filter(col("c_acctbal") > 9000.0).select(col("c_custkey")))
-    }),
-
-    // Window frame beyond row_number: running totals per customer in
-    // order-key order (ROWS UNBOUNDED PRECEDING). o_orderkey is unique,
-    // so the frame order is total and the integer accumulation exact —
-    // (lineitem's (orderkey, linenumber) is NOT unique in this data,
-    // which makes running sums over it engine-nondeterministic).
-    "window_running_sum" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      T(s, dir, "orders").select(
-        col("o_custkey"), col("o_orderkey"),
-        sum(pmod(col("o_orderkey"), lit(100))).over(w).as("running_mod"),
-        count(lit(1)).over(w).as("running_orders"))
-    }),
-
-    // Edit distance (dedup-adjacent fuzzy matching): exact integer on
-    // both engines (same DP algorithm).
-    "edit_distance" -> ((s, dir) =>
-      T(s, dir, "customer").select(col("c_custkey"),
-        levenshtein(col("c_name"), lit("Customer#000000000"))
-          .as("dist_from_ref"))),
-
-    // Semi-structured JSON extraction + aggregation over the events
-    // props column (get_json_object stays inside codegen; the cast to
-    // BIGINT keeps the sum integer-exact).
-    "json_extract_agg" -> ((s, dir) =>
-      T(s, dir, "events")
-        .groupBy(col("event_type"))
-        .agg(sum(get_json_object(col("props"), "$.k").cast("long"))
-          .as("sum_k"),
-          count(lit(1)).as("cnt"))),
-
-    // HLL++ distinct sketch in its benchable production shape: the
-    // audit side is a value-keyed 1-in-4 sampled exact count (cheap —
-    // the distinct stream shrinks 4× before the shuffle) feeding a
-    // generous in-band sanity flag. Engine-independent output only.
-    "sketch_approx_distinct" -> ((s, dir) =>
-      Sketches.approxDistinctSampled(
-        T(s, dir, "lineitem"), "l_returnflag", "l_partkey")),
-
-    // The TIGHT audit, registered separately so its full
-    // exact-distinct shuffle (the very thing the sketch avoids) is not
-    // charged to the production operator's bench line: exact count +
-    // within-5·rsd flag, verified against the oracle's exact recount.
-    "sketch_audit" -> ((s, dir) =>
-      Sketches.approxDistinctChecked(
-        T(s, dir, "lineitem"), "l_returnflag", "l_partkey")),
-
-    // Approximate quantiles under their own Greenwald-Khanna rank
-    // bound, audited in-band (sketch values never cross the engine
-    // boundary; the flag does).
-    "sketch_quantiles" -> ((s, dir) =>
-      Sketches.approxQuantilesChecked(
-        T(s, dir, "lineitem"), "l_returnflag", "l_quantity")),
-
-    // Cross-shard HLL merge: two shard "jobs" (l_orderkey parity)
-    // each build DataSketches binary states; the merge unions STATES,
-    // never rows — the way distinct-count accounting composes across
-    // a 100-shard corpus build. Estimate audited in-band vs exact.
-    "sketch_hll_merge" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem")
-      Sketches.hllMergeChecked(
-        Sketches.hllShardStates(li, pmod(col("l_orderkey"), lit(2)),
-          "l_returnflag", "l_partkey"),
-        li, "l_returnflag", "l_partkey")
-    }),
-
-    // Mergeable HISTOGRAM quantiles: per-shard (group, bucket, cnt)
-    // states (doc_id parity simulates two ingest jobs) merge by
-    // per-bucket SUM, and every derived percentile replays
-    // value-exactly — integer counts in, integer bucket edges out,
-    // no in-band flag needed (unlike GK, whose states never leave
-    // the engine).
-    "sketch_hist_quantiles_merged" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val shards = Seq(0, 1).map(p =>
-        Sketches.histogramState(
-          docs.filter(pmod(col("doc_id"), lit(2)) === p),
-          "lang", "n_chars", width = 64L))
-      Sketches.histogramMergeQuantiles(shards, "lang",
-        Seq(50, 90), width = 64L)
-    }),
-
-    // Mergeable COUNT-MIN token-frequency states: four doc-parity
-    // shards each build a <= depth×width sparse counter state, merge
-    // by per-cell sum (CMS linearity, audited cell-identical against
-    // the unsharded build), and the top-10 tokens' estimates carry the
-    // in-band flags — never-undercount (deterministic CMS guarantee)
-    // and the 4N/width overcount bound. Probe selection is a
-    // TakeOrdered top-10 (per-partition heads + merge), never a global
-    // vocab sort.
-    "sketch_cms_merge" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val keyed = docs
-        .select(pmod(col("doc_id"), lit(4)).as("shard"),
-          explode(split(TextDedup.normText(col("text")), " ")).as("key"))
-        .filter(length(col("key")) > 0)
-        .groupBy(col("shard"), col("key"))
-        .agg(count(lit(1)).as("cnt"))
-      val probes = keyed.groupBy(col("key"))
-        .agg(sum(col("cnt")).as("tot"))
-        .orderBy(col("tot").desc, col("key").asc)
-        .limit(10)
-        .select(col("key"))
-      Sketches.cmsMergeChecked(keyed, probes)
-    }),
-
-    // W1: document-order discipline (ordered projection + bound).
-    "w1_ordered_projection" -> ((s, dir) =>
-      T(s, dir, "events")
-        .orderBy(col("event_id"))
-        .limit(500)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value"))),
-
-    // Whole-pipeline E2E, area family: cell tables are SYNTHESIZED from
-    // the customer table (header + subheader literals unioned with one
-    // data row per customer, code length cycling 2/5/8/13), then run
-    // through the REAL dispatch + area pipeline — header sniff, meta
-    // broadcast join, variant projection, cleanse chain (native
-    // expressions), length classification, parent prefixes, ordered
-    // province dedup. The oracle replays the data-row semantics in SQL.
-    // (extractAllShared's one exchange feeds the meta aggregate, the
-    // extract pass, and the province-dedup split — the synthesized
-    // stream is computed once instead of once per branch.)
-    "pipeline_area_e2e" -> ((s, dir) => {
-      val k = col("c_custkey")
-      val code = when(pmod(k, lit(4)) === 0,
-        lpad(pmod(k, lit(100)).cast("string"), 2, "0"))
-        .when(pmod(k, lit(4)) === 1, lpad(k.cast("string"), 5, "0"))
-        .when(pmod(k, lit(4)) === 2, lpad(k.cast("string"), 8, "0"))
-        .otherwise(lpad(k.cast("string"), 13, "0"))
-      val pad5 = Seq.fill(5)(lit(""))
-      val data = T(s, dir, "customer").select(
-        lit(0L).as("table_id"), lit(1).as("page"),
-        (k + 2).cast("int").as("row_idx"), (k + 2).as("seq"),
-        array(code +: col("c_name") +: pad5: _*).as("cells"))
-      val headRows = Seq(
-        (0, Seq("K o d e", "NAMA PROVINSI / KABUPATEN / KOTA",
-          "", "", "", "", "")),
-        (1, Seq("1", "2", "3", "4", "5", "6", "7")))
-      val header = headRows.foldLeft(Option.empty[DataFrame]) {
-        case (acc, (idx, cs)) =>
-          val row = s.range(1).select(
-            lit(0L).as("table_id"), lit(1).as("page"),
-            lit(idx).as("row_idx"), lit(idx.toLong).as("seq"),
-            typedLit(cs).as("cells"))
-          Some(acc.fold(row)(_.unionByName(row)))
-      }.get
-      val cells = header.unionByName(data)
-      val (areaRows, _) = Dispatch.extractAllShared(cells)
-      areaRows.select(col("entity"), col("code"),
-        coalesce(col("parent_code"), lit("")).as("parent"), col("name"))
-    }),
-
-    // Whole-pipeline E2E, island family: same construction over orders
-    // — canonical coordinates (format_coordinate is idempotent on its
-    // own output, pinned by ScalaCheck), status/info flags by key
-    // parity, an invalid short code every 5th row that the code-format
-    // filter must drop.
-    "pipeline_island_e2e" -> ((s, dir) => {
-      val k = col("o_orderkey")
-      val code = when(pmod(k, lit(5)) === 0, lit("bad"))
-        .otherwise(concat(
-          lpad(pmod(k, lit(90)).cast("string"), 2, "0"), lit("."),
-          lpad(pmod(k, lit(97)).cast("string"), 2, "0"), lit("."),
-          lpad(pmod(k, lit(99999)).cast("string"), 5, "0")))
-      val coord = concat(
-        lpad(pmod(k, lit(10)).cast("string"), 2, "0"), lit("°"),
-        lpad(pmod(k, lit(60)).cast("string"), 2, "0"), lit("'"),
-        lpad(pmod(k, lit(60)).cast("string"), 2, "0"), lit(".00\" N "),
-        lpad(pmod(k, lit(140)).cast("string"), 3, "0"), lit("°"),
-        lpad(pmod(k, lit(59)).cast("string"), 2, "0"), lit("'"),
-        lpad(pmod(k, lit(59)).cast("string"), 2, "0"), lit(".00\" E"))
-      val status = when(pmod(k, lit(2)) === 0, lit("BP")).otherwise(lit("TBP"))
-      val info = when(pmod(k, lit(3)) === 0, lit("PPKT")).otherwise(lit(""))
-      val name = concat(lit("Pulau "), k.cast("string"))
-      // extractAllShared's repartition also spreads the single-file
-      // fixture scan across cores (the old data-level repartition,
-      // measured 2× at sf0.1), so no separate exchange here
-      val data = T(s, dir, "orders")
-        .select(
-        lit(0L).as("table_id"), lit(1).as("page"),
-        (k + 1).cast("int").as("row_idx"), (k + 1).as("seq"),
-        array(k.cast("string"), code, name, coord, status, info).as("cells"))
-      val header = s.range(1).select(
-        lit(0L).as("table_id"), lit(1).as("page"),
-        lit(0).as("row_idx"), lit(0L).as("seq"),
-        typedLit(Seq("No", "Kode Pulau", "Nama Pulau", "Koordinat",
-          "BP/TBP", "Keterangan")).as("cells"))
-      val (_, islandRows) =
-        Dispatch.extractAllShared(header.unionByName(data))
-      islandRows.select(col("code"), col("regency_code"), col("coordinate"),
-        col("is_populated"), col("is_outermost_small"), col("name"))
-    }),
-
-    // ------------------------- LLM-data-pipeline operators -------------
-
-    // Exact dedup, group summary (hash-keyed groupBy).
-    "dedup_exact_groups" -> ((s, dir) =>
-      TextDedup.exactDupGroups(T(s, dir, "documents"))),
-
-    // Exact dedup, keep-first flavor (window by hash).
-    "dedup_exact_keep" -> ((s, dir) =>
-      TextDedup.exactDedupKeepFirst(T(s, dir, "documents"))
-        .select(col("doc_id"), col("text_hash"))),
-
-    // Token/length/shape statistics.
-    "text_stats" -> ((s, dir) =>
-      TextAnalysis.tokenStats(T(s, dir, "documents"))),
-
-    // Encoding-damage census (mojibake screen): every 7th doc gets a
-    // planted UTF-8-read-as-Latin-1 suffix ("caffè"→"caffÃ¨",
-    // "—"→"â€”") plus one U+FFFD; the census counts each telltale by
-    // exact literal-substring occurrences (length difference — no
-    // regex dialect to diverge on) and flags the disjunction. The
-    // plant is rendered codepoint-for-codepoint in the oracle.
-    "mojibake_census" -> ((s, dir) => {
-      val planted = T(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 7 === 0,
-          concat(col("text"),
-            lit(" caffÃ¨ â€” �")))
-          .otherwise(col("text")).as("text"))
-      TextAnalysis.encodingDamage(planted).orderBy("doc_id")
-    }),
-
-    // Stopword-marker language identification.
-    "lang_id" -> ((s, dir) =>
-      TextAnalysis.langId(T(s, dir, "documents"))),
-
-    // The language-ID CONFUSION MATRIX against the ground-truth lang
-    // column — the table a langid owner reads before trusting the
-    // gate: per (truth, guess) cell the exact doc count. One
-    // aggregate over the per-row guess projection.
-    "langid_confusion" -> ((s, dir) =>
-      TextAnalysis.langId(T(s, dir, "documents"))
-        .groupBy(col("lang"), col("lang_guess"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("lang", "lang_guess")),
-
-    // Quality scoring with categorical verdict.
-    "quality_score" -> ((s, dir) =>
-      TextAnalysis.qualityScore(T(s, dir, "documents"))),
-
-    // Leave-one-source-out ablation table — the mixture-design
-    // question "what does the corpus look like WITHOUT this source":
-    // per source its own doc/token/good-doc mass AND the
-    // corpus-minus-source complements, all exact integers off ONE
-    // per-source aggregate + a broadcast grand total (the complement
-    // is subtraction, never a second scan per source).
-    "source_ablation" -> ((s, dir) => {
-      val docsF = T(s, dir, "documents")
-        .filter(length(trim(col("text"))) > 0)
-      val per = docsF.groupBy(col("source")).agg(
-        count(lit(1)).as("n_docs"),
-        sum(TextAnalysis.wordCount(col("text"))).as("n_tokens"),
-        sum((TextAnalysis.qualityVerdict(col("text")) === "good")
-          .cast("long")).as("n_good"))
-      val tot = per.agg(sum(col("n_docs")).as("t_docs"),
-        sum(col("n_tokens")).as("t_tokens"),
-        sum(col("n_good")).as("t_good"))
-      per.crossJoin(broadcast(tot))
-        .select(col("source"), col("n_docs"), col("n_tokens"),
-          col("n_good"),
-          (col("t_docs") - col("n_docs")).as("docs_without"),
-          (col("t_tokens") - col("n_tokens")).as("tokens_without"),
-          (col("t_good") - col("n_good")).as("good_without"))
-        .orderBy("source")
-    }),
-
-    // Model-based quality filtering: linear classifier score over the
-    // named integer feature set with the default integer weights —
-    // the trained-classifier gate shape (fastText/DCLM) as a pure
-    // per-row projection.
-    "quality_classifier" -> ((s, dir) =>
-      TextAnalysis.classifierScore(T(s, dir, "documents"))),
-
-    // Inter-rater agreement between the heuristic quality gate and
-    // the linear classifier gate over the same non-empty universe —
-    // Cohen's kappa as the exact integers it is a ratio of (the N²
-    // terms in DECIMAL(38,0), shipped as digit strings per the
-    // wide-decimal convention) plus the cross-multiplied κ > 0.4
-    // Landis–Koch verdict. One map-side-combined global aggregate.
-    "annotator_agreement" -> ((s, dir) => {
-      // spread: both per-row classifiers otherwise run inside the
-      // single-row-group scan task (cf. curation_funnel)
-      val docs = spread(T(s, dir, "documents")
-          .select(col("doc_id"), col("text")))
-        .filter(length(trim(col("text"))) > 0)
-      EvalMetrics.cohenKappa(docs,
-        (TextAnalysis.qualityVerdict(col("text")) === "good")
-          .cast("int"),
-        TextAnalysis.classifierKeep(col("text")).cast("int"))
-    }),
-
-    // Classifier-vs-gate calibration: integer score bins × Gopher
-    // verdict counts — the report that places a classifier threshold
-    // before it gates a corpus. Runs over the synthesized curation
-    // corpus (the raw fixture fails Gopher uniformly — no stopwords —
-    // so raw calibration would be a degenerate all-zero column). One
-    // scan, one small-key aggregate.
-    "classifier_calibration" -> ((s, dir) =>
-      // spread: cf. curation_funnel (synthesis + classifier per row)
-      TextAnalysis.classifierCalibration(
-        spread(T(s, dir, "documents").select(col("doc_id"), col("text")))
-          .select(col("doc_id"), curationSynth.as("text")),
-        binWidth = 50L)),
-
-    // Training-shard layout: deterministic global shuffle + per-shard
-    // position — the write-side layout of a curation run (16 hash
-    // shards, per-shard rank; see Sampling.shardLayout for the
-    // 100 TB shape).
-    "train_shard_layout" -> ((s, dir) =>
-      Sampling.shardLayout(
-        T(s, dir, "documents"), TextDedup.normText(col("text")))),
-
-    // Gopher/MassiveText composite quality rules, integer-exact.
-    "gopher_quality" -> ((s, dir) =>
-      TextAnalysis.gopherQualityFilter(T(s, dir, "documents"))),
-
-    // C4 line-level cleaning. The corpus is single-line word salad
-    // with no punctuation, so the input prep synthesizes the line
-    // structure SQL-replayably: 12-token lines (as in line_dedup),
-    // terminal '.' on every line where (doc_id + pos) % 3 == 0, and a
-    // planted "javascript click right here now." line (terminal
-    // punct, 5 words — dropped by the javascript rule ALONE under the
-    // paper's minWords = 5 default) on doc_id % 13.
-    "c4_line_filter" -> ((s, dir) => {
-      val toks = split(TextDedup.normText(col("text")), " ")
-      val la = transform(
-        sequence(lit(0),
-          greatest(floor((size(toks) - 1) / 12).cast("int"), lit(0))),
-        i => concat_ws(" ", slice(toks, i * 12 + 1, lit(12))))
-      val punct = transform(la, (l, i) =>
-        when(pmod(col("doc_id") + i, lit(3)) === 0, concat(l, lit(".")))
-          .otherwise(l))
-      val withJs = when(pmod(col("doc_id"), lit(13)) === 0,
-        concat(array_join(punct, "\n"),
-          lit("\njavascript click right here now.")))
-        .otherwise(array_join(punct, "\n"))
-      TextAnalysis.c4LineFilter(
-        // spread: cf. curation_funnel (per-row synthesis + line gates)
-        spread(T(s, dir, "documents").select(col("doc_id"), col("text")))
-          .select(col("doc_id"), withJs.as("text")))
-    }),
-
-    // Document fingerprint (normalized md5).
-    "doc_fingerprint" -> ((s, dir) =>
-      TextAnalysis.fingerprint(T(s, dir, "documents"))),
-
-    // Greedy token-budget pack: quality verdicts map to rank 4..0
-    // (good best), docs keep in (rank DESC, doc_id) order while the
-    // running word_cnt total fits the budget. The budget is sized so
-    // the cut lands INSIDE a bucket at both gate SFs — exercising the
-    // full-keep fast path, the boundary window, and the drop path.
-    "token_budget_pack" -> ((s, dir) => {
-      val ranked = TextAnalysis.qualityScore(T(s, dir, "documents"))
-        .withColumn("__r",
-          when(col("quality") === "good", 4L)
-            .when(col("quality") === "no_stopwords", 3L)
-            .when(col("quality") === "digit_noise", 2L)
-            .when(col("quality") === "punct_noise", 1L)
-            .otherwise(0L))
-      Sampling.tokenBudgetPack(ranked, col("__r"), col("word_cnt"),
-        budget = 20000L)
-    }),
-
-    // Integer-exact unigram surprisal (inverse-corpus-frequency bit
-    // lengths) — the unigram-LM quality-filter analog, oracled
-    // bit-for-bit because no float log ever materializes.
-    "unigram_surprisal" -> ((s, dir) =>
-      TextAnalysis.unigramSurprisal(T(s, dir, "documents"))),
-
-    // Bigram-LM surprisal: integer bit-length -log2 P(w|prev) under
-    // the corpus MLE — formulaic continuations score low. The bigram
-    // count table is NOT broadcastable at corpus scale, so counts meet
-    // the per-doc rows in a shuffled (prev, w) equi-join; the left-
-    // context totals derive from the count table, never the corpus.
-    "bigram_surprisal" -> ((s, dir) =>
-      TextAnalysis.bigramSurprisal(T(s, dir, "documents"))),
-
-    // Kneser-Ney continuation counts: the exact integer tables a
-    // filtering/contamination bigram LM is estimated from — count,
-    // context total, context fan-out, the word's continuation count
-    // (KN's "francisco" insight) and the distinct-type total; top-50
-    // bigrams by count with a deterministic lexicographic tie-break.
-    "kn_continuation" -> ((s, dir) =>
-      TextAnalysis.knBigramCounts(T(s, dir, "documents"), topK = 50)),
-
-    // Rank-normalized multi-signal quality blend: decile buckets of
-    // classifier score + unigram surprisal via broadcast
-    // percentile_disc cutoffs (never a corpus-wide rank window).
-    "quality_blend" -> ((s, dir) =>
-      TextAnalysis.qualityBlend(T(s, dir, "documents"))),
-
-    // Language-ID confidence margin: top1-top2 marker-vote gap and
-    // the routing flag. Scan-only, one 5-int sort per row.
-    "langid_confidence" -> ((s, dir) =>
-      TextAnalysis.langIdConfidence(T(s, dir, "documents"))),
-
-    // Content-keyed train/eval split: every row labeled, none dropped;
-    // membership is a function of the document's own bytes (the
-    // property that keeps eval contamination-free across re-shards and
-    // dedup passes). Scan-shaped; threshold rendered from the shared
-    // constant into the oracle.
-    "train_eval_split" -> ((s, dir) =>
-      Sampling.hashSplit(T(s, dir, "documents"), col("text"),
-        evalRate = 0.05).select(col("doc_id"), col("split"))),
-
-    // Near-dup-aware split: every member of a near-dup component
-    // splits by the REPRESENTATIVE document's bytes (component = min
-    // doc_id), so a whole duplicate cluster lands on one side — the
-    // Lee-et-al test-set-leakage fix as an operator. Components come
-    // from the same deterministic candidate graph as
-    // neardup_components, so the recursive-CTE oracle replays the
-    // labeling and md5-splits the rep text identically.
-    "split_leakage_safe" -> ((s, dir) =>
-      Sampling.leakageSafeSplit(T(s, dir, "documents"),
-          neardupLabeled(s, dir), col("text"), evalRate = 0.2)
-        .select(col("doc_id"), col("component"), col("split"))),
-
-    // The leakage census that justifies it: near-dup candidate pairs
-    // straddling the train/eval boundary under the naive per-doc hash
-    // split vs the cluster-rep split — safe_leaks is structurally 0
-    // (split is a function of the component), naive_leaks is the
-    // exposure removed. One |E|-row double join per audit into 1-row
-    // aggregates.
-    "split_leakage_audit" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      // ONE candidate pipeline (r21): the entry used to derive its
-      // audit edges AND call neardupLabeled — which re-ran the whole
-      // shingle/Jaccard candidate stage a second time internally.
-      // Checkpoint the edge list once and feed both the audits and
-      // the component labeling from it (neardupLabeled IS
-      // connectedComponents over this same frame, so results are
-      // unchanged — oracle stays green).
-      val (edges0, ids) = neardupEdges(s, dir)
-      val edges = edges0.localCheckpoint()
-      val labeled = Components.connectedComponents(edges,
-        ids.select(col("doc_id").as("node")))
-      val naive = Sampling.hashSplit(docs, col("text"), evalRate = 0.2)
-        .select(col("doc_id"), col("split"))
-      val safe = Sampling.leakageSafeSplit(docs,
-          labeled, col("text"), evalRate = 0.2)
-        .select(col("doc_id"), col("split"))
-      Sampling.splitLeakageAudit(edges, naive)
-        .select(col("n_pairs"), col("leaks").as("naive_leaks"))
-        .crossJoin(Sampling.splitLeakageAudit(edges, safe)
-          .select(col("leaks").as("safe_leaks")))
-    }),
-
-    // Per-language "dataset card" rollup — all exact integers, one
-    // map-side-combined aggregate.
-    "corpus_report" -> ((s, dir) =>
-      TextAnalysis.corpusReport(T(s, dir, "documents"))),
-
-    // N-gram novelty vs a reference slice (doc_id % 20) — per-doc
-    // known/total distinct-gram counts, integer-exact.
-    "ngram_novelty" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
-      TextDedup.ngramNovelty(docs, docs.filter(col("doc_id") % 20 === 0))
-    }),
-
-    // Gopher-style duplicate-n-gram repetition filter (integer-exact;
-    // repartition: single-file fixture, cf. minhash_candidates note).
-    "repetition_stats" -> ((s, dir) =>
-      TextAnalysis.repetitionStats(
-        T(s, dir, "documents")
-          .repartition(s.sparkContext.defaultParallelism))),
-
-    // Winnowing (MOSS rolling-hash) fingerprints, checked against
-    // their own guarantee: any shared run of ≥ k + windowSize - 1 = 7
-    // tokens MUST yield a shared selected fingerprint (both documents
-    // contain a full hash window inside the run and both keep that
-    // window's minimum). Planted copies share a ≥ 49-token prefix, so
-    // every planted pair must surface — the floor is 100, a theorem,
-    // not a measurement; a miss means the implementation broke the
-    // winnowing property. Oracled via the in-band flag (the raw
-    // xxhash64 fingerprint rows were rows-only in earlier rounds).
-    "winnowing_planted_overlap" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
-      val fps = TextAnalysis.winnowingFingerprints(plantedInput(docs))
-      val cands = fps.filter(col("doc_id") < PlantOffset)
-        .join(fps.filter(col("doc_id") >= PlantOffset)
-            .select((col("doc_id") - PlantOffset).as("doc_id"),
-              col("fingerprint")),
-          Seq("doc_id", "fingerprint"), "left_semi")
-        .select(col("doc_id").as("doc_a"),
-          (col("doc_id") + PlantOffset).as("doc_b"))
-        .distinct()
-      plantedRecall(cands, plantedEligible(docs), 100)
-    }),
-
-    // MinHash/LSH near-dup candidate pairs (banded, bucket-joined —
-    // never an all-pairs product), run on the corpus WITH planted
-    // ground-truth near-dups (every 50th token of an eligible doc
-    // replaced — see plantedInput). The output is the in-band recall
-    // summary over the planted pairs, which is engine-independent and
-    // therefore fully oracled — unlike the raw xxhash64-derived pair
-    // set this operator registered in earlier rounds (rows-only then).
-    // A planted pair keeps ~94% of its shingles ⇒ Jaccard ≳ 0.88 ⇒ a
-    // 2-row band matches with p ≈ 0.78 and 16 bands make a miss ~1e-11
-    // per pair — measured recall is 100% at sf0.01 and sf0.1; the
-    // floor leaves slack for future data regeneration.
-    // The fixture is ONE small parquet file = one input partition, so
-    // the CPU-heavy signature fold would run on a single core without
-    // the repartition; at production scale inputs are many files and
-    // the repartition is unnecessary (and would be a real shuffle).
-    "minhash_planted_recall" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
-      plantedRecall(
-        TextDedup.minHashCandidates(plantedInput(docs),
-          numHashes = 32, rowsPerBand = 2),
-        plantedEligible(docs), MinHashRecallFloorPct)
-    }),
-
-    // EXACT set-similarity self-join (PPJoin prefix filtering): the
-    // planted corpus' COMPLETE shingle-set-Jaccard>=80% pair set with
-    // exact intersection/union counts — the deterministic complement
-    // of the MinHash recall gate. The oracle brute-forces ALL pairs
-    // in DuckDB and compares the full answer, so the prefix/length
-    // filters' losslessness is audited pair-for-pair every round,
-    // not summarized into a floor flag.
-    "ppjoin_pairs" -> ((s, dir) =>
-      TextDedup.ppjoinPairs(
-        plantedInput(T(s, dir, "documents")
-          .repartition(s.sparkContext.defaultParallelism)),
-        thresholdPct = 80)),
-
-    // Applied form: first-occurrence survivors of the exact join —
-    // every doc with a qualifying similar earlier doc drops.
-    "ppjoin_keep" -> ((s, dir) =>
-      TextDedup.ppjoinKeep(
-        plantedInput(T(s, dir, "documents")
-          .repartition(s.sparkContext.defaultParallelism)),
-        thresholdPct = 80)
-        .select("doc_id")),
-
-    // (An `ngram_jaccard` rows-only query — jaccardVerify over the raw
-    // LSH candidates — was registered through round 7 and retired in
-    // round 8: its verification math is fully oracled below in
-    // ngram_jaccard_pairs and its candidate-recall claim is fully
-    // oracled in minhash_planted_recall, so it only inflated the
-    // rows-only set. TextDedup.jaccardVerify stays spec-covered in
-    // TextOpsSpec, and its integer-exact core (jaccardCounts) runs
-    // inside the oracled neardup_* pipelines.)
-
-    // Exact n-gram Jaccard COUNTS over a deterministic pair set
-    // (adjacent doc_ids) — the integer-exact verification math under a
-    // full DuckDB oracle (the LSH-candidate variant above stays
-    // rows-only because its pair set is xxhash64-derived).
-    "ngram_jaccard_pairs" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
-      val pairs = docs.select(col("doc_id").as("doc_a"),
-        (col("doc_id") + 1).as("doc_b"))
-        .join(docs.select(col("doc_id").as("doc_b")), "doc_b")
-        .select("doc_a", "doc_b")
-      TextDedup.jaccardCounts(pairs, docs)
-    }),
-
-    // TF-weighted Jaccard over the same adjacent candidate pairs —
-    // the multiplicity-aware verifier (set Jaccard saturates on
-    // repeated boilerplate; min/max of term frequencies does not).
-    // Exact integer numerator/denominator via the
-    // wmax = dl_a + dl_b − wmin identity, so only SHARED terms join.
-    "weighted_jaccard_pairs" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
-      val pairs = docs.select(col("doc_id").as("doc_a"),
-        (col("doc_id") + 1).as("doc_b"))
-        .join(docs.select(col("doc_id").as("doc_b")), "doc_b")
-        .select("doc_a", "doc_b")
-      TextDedup.weightedJaccardCounts(pairs, docs)
-    }),
-
-    // Vocabulary-growth census (Heaps'-law curve): new distinct
-    // 3-grams per doc_id-range slice by FIRST occurrence, with the
-    // running vocabulary size — one vocabulary-sized min-aggregate,
-    // then a 10-row frame. 3-grams, not unigrams: this corpus's 31
-    // unigram types all appear by doc 8 (the curve would be one
-    // degenerate row), while its 16k 3-grams keep arriving through
-    // the last slice — the order a tokenizer budget actually tracks.
-    "vocab_growth" -> ((s, dir) =>
-      TextAnalysis.vocabGrowth(T(s, dir, "documents"), buckets = 10,
-        n = 3)),
-
-    // Concat-and-chunk packing fragmentation: docs whose token span
-    // crosses a 512-block boundary, via the two-level scale-safe
-    // prefix-sum (bucket 64 here so the fixture exercises multi-
-    // bucket offset stitching — 500 docs → 8 buckets).
-    "packing_fragmentation" -> ((s, dir) =>
-      Sampling.packingFragmentation(T(s, dir, "documents"),
-        TextAnalysis.wordCount(col("text")),
-        blockSize = 512, bucketSize = 64)),
-
-    // Padding-waste census: tokens billed under arrival-order batching
-    // vs length-bucketed batching (batch 8, bucket width 16) — the
-    // sequence-bucketing ROI number. Arrival side is doc_id
-    // arithmetic (no sort); the bucketed window partitions by length
-    // class, never corpus-wide.
-    "padding_waste" -> ((s, dir) =>
-      Sampling.paddingWasteCensus(T(s, dir, "documents"),
-        TextAnalysis.wordCount(col("text")),
-        batchSize = 8, bucketWidth = 16)),
-
-    // SimHash signature pass with an IN-BAND SELF-AUDIT (the
-    // compression_signal pattern): the raw 64-bit signatures are
-    // xxhash64-derived and DuckDB's hash() is a different function, so
-    // the bits themselves can't be replayed — instead the query
-    // computes the signature THREE ways and emits `audit_ok`, which
-    // the oracle asserts TRUE everywhere: (a) non-null on non-null
-    // text, (b) deterministic-repeat — the second run goes through the
-    // OpaqueIdentityExpr barrier, so the optimizer provably cannot
-    // collapse the two evaluations, and (c) token-order invariance —
-    // SimHash sums ±1 contributions over the token MULTISET, so the
-    // signature of the word-reversed text must match bit-for-bit; a
-    // broken hash seed, fold order, or sign reassembly fails this.
-    // The operator's QUALITY claim is oracled separately
-    // (simhash_planted_recall), and bit-exact behavior is pinned by an
-    // independent BigInt model in TextOpsSpec.
-    "simhash_signatures" -> ((s, dir) => {
-      val toks = split(TextDedup.normText(col("text")), " ")
-      val sig = graft.functions.SimHashExprs.simHash(toks)
-      val sigRepeat = graft.functions.SimHashExprs.simHash(
-        split(TextDedup.normText(
-          graft.functions.CurationExprs.opaqueIdentity(col("text"))), " "))
-      val sigReversed = graft.functions.SimHashExprs.simHash(reverse(toks))
-      T(s, dir, "documents")
-        .where(col("text").isNotNull)
-        .select(col("doc_id"),
-          size(toks).cast("long").as("n_tokens"),
-          (sig.isNotNull && sig === sigRepeat && sig === sigReversed)
-            .as("audit_ok"))
-    }),
-
-    // Embedding-cosine near-duplicate pairs (LSH-bucketed self-join,
-    // never all-pairs) at a REAL near-dup threshold (0.95). The
-    // synthetic embeddings hold no true near-dups, so the input prep
-    // plants them: a deterministic slice (vec_id % 97) is copied with
-    // its first coordinate nudged by +0.25f — single-rounded float
-    // arithmetic, so DuckDB's CAST(...+0.25 AS FLOAT) replays it
-    // bit-exactly. Planted-pair sims measure 0.968..0.975 vs
-    // non-planted below ~0.35, so the 0.95 cut has >0.018 margin on
-    // both sides — far above float cosine noise. The planted vectors'
-    // sign-LSH projections are margin-safe too: measured min
-    // |plane·vec| over all planted rows at sf0.01 is 5.5e-2 (whole
-    // input: 6.1e-4), ~5000× above f32-accumulation noise, so bucket
-    // assignment cannot flip between engines. Pair ids only — no
-    // float column reaches the comparator.
-    "cosine_neardup_pairs" -> ((s, dir) => {
-      val base = T(s, dir, "embeddings").select("vec_id", "embedding")
-      val planted = base.filter(col("vec_id") % 97 === 0)
-        .select((col("vec_id") + 1000000L).as("vec_id"),
-          concat(array(element_at(col("embedding"), 1) + lit(0.25f)),
-            slice(col("embedding"), 2, 63)).as("embedding"))
-      Similarity.cosineNearDupPairs(base.union(planted),
-        threshold = 0.95, numBits = 8)
-        .select(col("id_a"), col("id_b"))
-    }),
-
-    // SimHash near-dup candidates: 16-bit band buckets over the 64-bit
-    // signatures (pigeonhole: hamming ≤ 3 ⇒ some band equal), on the
-    // same planted corpus as minhash_planted_recall; output is the
-    // in-band planted-pair recall summary (oracled — the raw pair set
-    // was rows-only in earlier rounds). Replacing ~2% of tokens
-    // perturbs each bit's ±1 sum by ~4% of tokens, so planted pairs
-    // sit at small hamming distance and usually some 16-bit band
-    // still matches; measured recall is 100% at sf0.01, 94.8% at
-    // sf0.1 — SimHash is honestly the coarser detector, hence the
-    // lower floor.
-    "simhash_planted_recall" -> ((s, dir) => {
-      // same single-file-fixture hazard as minhash_planted_recall: the
-      // explode + 64-bit-sum signature fold is the CPU-heavy stage and
-      // must not run on the fixture's one input partition
-      val docs = T(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
-      plantedRecall(
-        TextDedup.simHashCandidates(plantedInput(docs)),
-        plantedEligible(docs), SimHashRecallFloorPct)
-    }),
-
-    // Brute-force cosine top-k (exact ANN baseline, broadcast queries).
-    "ann_cosine_topk" -> ((s, dir) => {
-      val corpus = T(s, dir, "embeddings")
-      val queries = corpus.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      Similarity.bruteForceTopK(corpus, queries, k = 10)
-        .select(col("q_id"), col("vec_id"), col("rk"))
-    }),
-
-    // Hard-negative mining: per anchor, the top-10 nearest vectors of
-    // a DIFFERENT label — the contrastive-training near-misses. Same
-    // broadcast + WindowGroupLimit shape as the brute top-k; sim stays
-    // engine-internal (float), rank-only output like ann_cosine_topk.
-    "hard_negatives" -> ((s, dir) => {
-      val corpus = T(s, dir, "embeddings")
-      val anchors = corpus.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"),
-          col("label").as("q_label"))
-      Similarity.hardNegatives(corpus, anchors, k = 10)
-        .select(col("q_id"), col("vec_id"), col("rk"))
-    }),
-
-    // LSH-bucketed approximate top-k (the scale path; no SQL oracle).
-    "ann_lsh_topk" -> ((s, dir) => {
-      val corpus = T(s, dir, "embeddings")
-      val queries = corpus.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      Similarity.lshTopK(corpus, queries, k = 10, numBits = 4)
-        .select(col("q_id"), col("vec_id"), col("rk"))
-    }),
-
-    // Multi-probe variant under the full oracle: the query probes its
-    // own bucket plus every 1-bit flip (the recall lever measured in
-    // ann_planted_recall), and DuckDB replays the probe expansion with
-    // xor() over the same plane literals. Rank-only output, same
-    // float-margin argument as ann_lsh_topk.
-    "ann_lsh_multiprobe_topk" -> ((s, dir) => {
-      val corpus = T(s, dir, "embeddings")
-      val queries = corpus.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      Similarity.lshTopKMultiProbe(corpus, queries, k = 10, numBits = 4)
-        .select(col("q_id"), col("vec_id"), col("rk"))
-    }),
-
-    // Per-vector LSH bucket assignment (deterministic hyperplanes).
-    "ann_lsh_buckets" -> ((s, dir) =>
-      Similarity.withBuckets(T(s, dir, "embeddings"), numBits = 12)
-        .select(col("vec_id"), col("label"), col("bucket"))),
-
-    // Embedding-distribution drift census between two snapshots —
-    // the "rebuild the frozen ANN model?" pre-flight. Old = even
-    // vec_ids; new = odd vec_ids with every 11th vector scaled ×3
-    // (planted drift: scaling CANNOT flip a sign-LSH bucket, so the
-    // plant moves int8 means without any hyperplane-boundary float
-    // hazard). Exact integers: cross-multiplied L1 mean shift per
-    // deterministic LSH bucket, count asymmetries, threshold verdict,
-    // and the in-band low_mass honesty column (at this SF every
-    // bucket is below judgment mass and says so; the drifted
-    // semantics at mass are spec-pinned on constructed fixtures).
-    "embedding_drift" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val newSnap = emb.filter(col("vec_id") % 2 === 1)
-        .select(col("vec_id"),
-          when(col("vec_id") % 11 === 0,
-            transform(col("embedding"),
-              v => (v * lit(3.0f)).cast("float")))
-            .otherwise(col("embedding")).as("embedding"))
-      Similarity.driftCensus(
-        emb.filter(col("vec_id") % 2 === 0), newSnap, numBits = 6)
-        .orderBy("bucket")
-    }),
-
-    // IVF-style ANN: coarse-quantize into cells (broadcast argmin),
-    // probe the query's nearest cells only. Centroids here are the 8
-    // lowest-id vectors standing in for trained k-means centers.
-    "ann_ivf_topk" -> ((s, dir) => {
-      val corpus = T(s, dir, "embeddings")
-      val centroids = corpus.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("cell"),
-          col("embedding").as("c_vec"))
-      val queries = corpus.filter(col("vec_id") >= 10 && col("vec_id") < 20)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      Similarity.ivfTopK(corpus, queries, centroids, k = 10, nProbe = 2)
-        .select(col("q_id"), col("vec_id"), col("rk"))
-    }),
-
-    // Int8-quantized brute-force top-k: the 4× memory/bandwidth lever
-    // for billion-scale ANN, scored on EXACT integer dot products —
-    // which is why, unlike the float paths, rank AND score are both
-    // oracled (the fixed power-of-two scale makes the codes
-    // bit-identical across engines; see Quantization.int8Codes).
-    "ann_quantized_topk" -> ((s, dir) => {
-      val corpus = T(s, dir, "embeddings")
-      val queries = corpus.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      Quantization.quantizedTopK(corpus, queries, k = 10)
-    }),
-
-    // PQ code column: 8 nibbles packed into one BIGINT per vector —
-    // the 4-byte compressed index a 100 TB corpus stores instead of
-    // 256 B of floats. Deterministic codebook, exact integer
-    // assignment; the oracle replays the whole encode.
-    "pq_codes" -> ((s, dir) => {
-      val corpus = T(s, dir, "embeddings")
-      Quantization.pqEncode(corpus, Quantization.pqCodebook(corpus))
-        .select(col("vec_id"), col("pq_code"))
-    }),
-
-    // PQ ADC top-k: integer dot of query codes against PQ-
-    // reconstructed corpus vectors — rank AND score replay exactly.
-    "ann_pq_topk" -> ((s, dir) => {
-      val corpus = T(s, dir, "embeddings")
-      val queries = corpus.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      Quantization.pqTopK(corpus, queries, topK = 10)
-    }),
-
-    // IVF×PQ fused ANN with exact re-rank — the billion-vector index
-    // shape: coarse cells prune the corpus (nProbe=2 of 8), PQ ADC
-    // scores only within probed cells, and the ADC top-30 re-rank by
-    // exact int8 dot. Integer scores end-to-end, so score AND rank
-    // replay; the float cell assignment replays like ann_ivf_topk.
-    "ann_ivfpq_topk" -> ((s, dir) => {
-      val corpus = T(s, dir, "embeddings")
-      val centroids = corpus.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("cell"),
-          col("embedding").as("c_vec"))
-      val queries = corpus.filter(col("vec_id") >= 10 && col("vec_id") < 20)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      Quantization.ivfPqTopK(corpus, queries, centroids,
-        topK = 10, nProbe = 2, rerank = 30)
-    }),
-
-    // IVF + exact int8 scoring (FAISS "IVF,SQ8"): coarse cells prune,
-    // the true quantized dot scores — no PQ approximation, so score
-    // AND rank replay as integers. The uncompressed-index baseline
-    // the PQ paths are graded against.
-    "ann_ivfsq8_topk" -> ((s, dir) => {
-      val corpus = T(s, dir, "embeddings")
-      val centroids = corpus.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("cell"),
-          col("embedding").as("c_vec"))
-      val queries = corpus.filter(col("vec_id") >= 10 && col("vec_id") < 20)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      Quantization.ivfSq8TopK(corpus, queries, centroids,
-        topK = 10, nProbe = 2)
-    }),
-
-    // Retrieval-quality gate for the fused path (same planted-original
-    // construction as ann_planted_recall): the flag asserts that the
-    // IVFPQ+rerank pipeline surfaced the planted original in its
-    // top-10 for >= floor% of planted queries — ADC quantization error
-    // and cell-miss both count against it.
-    "ann_ivfpq_recall" -> ((s, dir) => {
-      val base = T(s, dir, "embeddings").select("vec_id", "embedding")
-      val planted = base.filter(col("vec_id") % 97 === 0)
-        .select((col("vec_id") + 1000000L).as("vec_id"),
-          concat(array(element_at(col("embedding"), 1) + lit(0.25f)),
-            slice(col("embedding"), 2, 63)).as("embedding"))
-      val corpus = base.union(planted)
-      val queries = planted.select(col("vec_id").as("q_id"),
-        col("embedding").as("q_vec"))
-      val centroids = base.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("cell"),
-          col("embedding").as("c_vec"))
-      val hits = Quantization.ivfPqTopK(corpus, queries, centroids,
-        topK = 10, nProbe = 2, rerank = 30)
-        .filter(col("vec_id") === col("q_id") - 1000000L)
-        .select(col("q_id"), lit(1L).as("hit"))
-      queries.select("q_id").join(hits, Seq("q_id"), "left")
-        .agg(count(lit(1)).as("planted_total"),
-          (sum(coalesce(col("hit"), lit(0L))) * 100 >=
-            count(lit(1)) * AnnIvfPqRecallFloorPct).as("recall_ok"))
-    }),
-
-    // The residual-vs-raw PQ fidelity gate, run as a query: ADC-only
-    // (rerank=0) top-10 for BOTH encodings against the exact-int8
-    // ranking within the same probed cells (rerank >> candidates), on
-    // k-means-TRAINED coarse centroids — the regime where residual
-    // encoding provably has something to subtract (cluster means;
-    // with arbitrary vector-valued centroids residual deltas are
-    // BIGGER than the vectors and raw wins — both measured, see
-    // SCALE.md). Asserts residual >= raw on this data AND residual
-    // above its absolute floor; the xxhash-free integer pipeline makes
-    // the flags in-band self-audits the oracle pins TRUE.
-    "ann_ivfpq_adc_recall" -> ((s, dir) => {
-      // spread: the per-row integer kernels (int8 quantize, m×kCode
-      // PQ argmins, ADC dots) otherwise run inside the single-row-
-      // group scan task (cf. the mm gates)
-      val corpus = spread(
-        T(s, dir, "embeddings").select("vec_id", "embedding"))
-      val cents = graft.tools.RunAnnIndex
-        .trainCentroids(corpus, kCells = 8, iters = 1)
-        .localCheckpoint()
-      // ONE coarse assignment shared by all three index flavors
-      // (r21): identical rows by construction, so the checkpoint
-      // changes no result. queries derive from it too (same
-      // (vec_id, embedding) rows as the corpus), killing the
-      // per-flavor corpus re-scans (r22).
-      val assigned = Similarity.ivfAssign(corpus, cents)
-        .localCheckpoint()
-      val queries = assigned
-        .filter(col("vec_id") >= 10 && col("vec_id") < 110)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      // the three flavors (sq8 exact / residual ADC / raw ADC) score
-      // the SAME candidate pairs, so the whole gate is one fused
-      // candidate pass with three rank columns (Quantization.
-      // ivfPqAdcCounts, r22) — counts spec-pinned equal to the
-      // per-flavor formulation, oracle unchanged
-      val counts = Quantization.ivfPqAdcCounts(assigned, queries, cents,
-        topK = 10, nProbe = 2)
-      queries.agg(count(lit(1)).as("n_queries"))
-        .crossJoin(counts)
-        .select(col("n_queries"),
-          (col("res_hits") >= col("raw_hits")).as("residual_not_worse"),
-          (col("res_hits") * 100 >= col("n_pairs") * AnnIvfPqAdcFloorPct)
-            .as("residual_floor_ok"))
-    }),
-
-    // SemDeDup-style semantic dedup: within pre-assigned embedding
-    // clusters (`label`), int8-quantized integer-cosine pairs above
-    // 0.97 connect into components; keep min vec_id per component.
-    // The corpus has no natural 0.97-cosine pairs, so the input prep
-    // plants them SQL-replayably: every vec_id % 17 == 0 vector
-    // re-enters verbatim under vec_id + 10,000,000 (same label —
-    // identical vectors cluster together by construction), giving
-    // exactly one two-vector component per planted pair.
-    "semdedup" -> ((s, dir) => {
-      val base = T(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"), col("label"))
-      val planted = base.filter(col("vec_id") % 17 === 0)
-        .select((col("vec_id") + 10000000L).as("vec_id"),
-          col("embedding"), col("label"))
-      SemDedup.semDedup(base.unionByName(planted))
-    }),
-
-    // The end-user shape: semantic dedup APPLIED — survivors only
-    // (each component's minimum vec_id), the pass that shrinks the
-    // corpus. Same labeling pipeline; one filter on top.
-    "semdedup_keep" -> ((s, dir) => {
-      val base = T(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"), col("label"))
-      val planted = base.filter(col("vec_id") % 17 === 0)
-        .select((col("vec_id") + 10000000L).as("vec_id"),
-          col("embedding"), col("label"))
-      SemDedup.semDedup(base.unionByName(planted))
-        .filter(col("is_dup") === 0)
-        .select(col("vec_id"), col("label"))
-    }),
-
-    // In-engine cluster assignment: integer-exact spherical k-means
-    // (KMeans.fitAssign — 2 Lloyd rounds from the deterministic
-    // lowest-id seeds). The oracle replays the ENTIRE iteration in
-    // SQL; every score and centroid update is exact-integer-derived,
-    // so the labels hash identically (see KMeans scaladoc).
-    "kmeans_assign" -> ((s, dir) =>
-      KMeans.fitAssign(
-        T(s, dir, "embeddings").select(col("vec_id"), col("embedding")))
-        .select(col("vec_id"), col("label"))),
-
-    // SemDeDup END-TO-END from raw embeddings: the k-means labels
-    // above feed the semantic-dedup pair/components pass — no
-    // pre-assigned cluster column anywhere. Planted +10M duplicates
-    // (identical embeddings → identical codes → identical argmax →
-    // same cluster BY CONSTRUCTION) make the dedup nontrivial.
-    "semdedup_e2e" -> ((s, dir) => {
-      val base = T(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-      val planted = base.filter(col("vec_id") % 17 === 0)
-        .select((col("vec_id") + 10000000L).as("vec_id"),
-          col("embedding"))
-      // checkpoint the labeling once: semDedup reads it on both pair
-      // sides plus the final labeling (3 references), each of which
-      // re-ran the assign projection + model broadcast otherwise
-      SemDedup.semDedup(
-        KMeans.fitAssign(base.unionByName(planted)).localCheckpoint())
-    }),
-
-    // the APPLIED form of the same end-to-end pass: raw embeddings →
-    // k-means labels → semantic dedup → survivors only (the corpus
-    // that ships to training)
-    "semdedup_keep_e2e" -> ((s, dir) => {
-      val base = T(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-      val planted = base.filter(col("vec_id") % 17 === 0)
-        .select((col("vec_id") + 10000000L).as("vec_id"),
-          col("embedding"))
-      // same shared-labeling checkpoint as semdedup_e2e
-      SemDedup.semDedup(
-        KMeans.fitAssign(base.unionByName(planted)).localCheckpoint())
-        .filter(col("is_dup") === 0)
-        .select(col("vec_id"), col("label"))
-    }),
-
-    // Planted-neighbor recall for the APPROXIMATE ANN paths. The
-    // ann_lsh_topk / ann_ivf_topk oracles replay the same algorithm in
-    // SQL, proving determinism but not retrieval quality; this query
-    // proves quality: plant near-dup vectors (same +0.25f prep as
-    // cosine_neardup_pairs), query with the copies, and flag whether
-    // each approximate path returned the copy's original in its top-k.
-    // The original IS the brute-force top-1 by construction (planted
-    // sim ≈ 0.97 vs < 0.35 for every other vector — the margins
-    // recorded at cosine_neardup_pairs), so asserting "found the
-    // original" is recall@k against the exact baseline without
-    // recomputing it. Only engine-independent values are emitted.
-    // LSH runs MULTI-probe (own bucket + 1-bit flips): single-probe
-    // 4-bit measured 83%/57% recall at sf0.01/sf0.1 — too thin over
-    // any honest floor — multi-probe measures 100%/90.5%; IVF 2-probe
-    // measures 100%/95.2%. Floors 75/80 leave real margin.
-    "ann_planted_recall" -> ((s, dir) => {
-      val base = T(s, dir, "embeddings").select("vec_id", "embedding")
-      val planted = base.filter(col("vec_id") % 97 === 0)
-        .select((col("vec_id") + 1000000L).as("vec_id"),
-          concat(array(element_at(col("embedding"), 1) + lit(0.25f)),
-            slice(col("embedding"), 2, 63)).as("embedding"))
-      val corpus = base.union(planted)
-      val queries = planted.select(col("vec_id").as("q_id"),
-        col("embedding").as("q_vec"))
-      val centroids = base.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("cell"),
-          col("embedding").as("c_vec"))
-      def hits(topk: DataFrame): DataFrame = topk
-        .filter(col("vec_id") === col("q_id") - 1000000L)
-        .select(col("q_id"), lit(1L).as("hit"))
-      val lshHits = hits(Similarity.lshTopKMultiProbe(corpus, queries,
-        k = 10, numBits = 4))
-      val ivfHits = hits(Similarity.ivfTopK(corpus, queries, centroids,
-        k = 10, nProbe = 2))
-      def recallFlag(h: DataFrame, floorPct: Int, name: String) =
-        queries.select("q_id").join(h, Seq("q_id"), "left")
-          .agg(count(lit(1)).as("planted_total"),
-            (sum(coalesce(col("hit"), lit(0L))) * 100 >=
-              count(lit(1)) * floorPct).as(name))
-      recallFlag(lshHits, AnnLshRecallFloorPct, "lsh_recall_ok")
-        .crossJoin(broadcast(recallFlag(ivfHits, AnnIvfRecallFloorPct,
-          "ivf_recall_ok").select("ivf_recall_ok")))
-    }),
-
-    // Matryoshka truncate-then-rerank retrieval gate (same planted
-    // construction): stage 1 scans only the first 16 of 64 dims — the
-    // head slice an MRL index keeps hot, 4× less vector I/O — and
-    // stage 2 re-ranks a 30-candidate shortlist at full dimension.
-    // The planted original's perturbation lives in dim 1 (inside the
-    // head), so the flag measures truncation's recall loss directly.
-    "ann_matryoshka_recall" -> ((s, dir) => {
-      val base = T(s, dir, "embeddings").select("vec_id", "embedding")
-      // query set CAPPED to a fixed id range: the single-stage head
-      // scan is corpus × queries, so an SF-proportional query set
-      // would go quadratic (measured 13× at 10× data before the cap);
-      // a recall gate needs a fixed sample, not a growing one
-      val planted = base
-        .filter(col("vec_id") % 97 === 0 && col("vec_id") < 10000)
-        .select((col("vec_id") + 1000000L).as("vec_id"),
-          concat(array(element_at(col("embedding"), 1) + lit(0.25f)),
-            slice(col("embedding"), 2, 63)).as("embedding"))
-      val corpus = base.union(planted)
-      val queries = planted.select(col("vec_id").as("q_id"),
-        col("embedding").as("q_vec"))
-      val hits = Similarity.truncatedRerankTopK(corpus, queries,
-        prefixDims = 16, shortlist = 30, k = 10)
-        .filter(col("vec_id") === col("q_id") - 1000000L)
-        .select(col("q_id"), lit(1L).as("hit"))
-      queries.select("q_id").join(hits, Seq("q_id"), "left")
-        .agg(count(lit(1)).as("planted_total"),
-          (sum(coalesce(col("hit"), lit(0L))) * 100 >=
-            count(lit(1)) * AnnMatryoshkaRecallFloorPct)
-            .as("matryoshka_recall_ok"))
-    }),
-
-    // Event-time window aggregation: tumbling 1-hour windows over the
-    // events stream table (ts normalized to micros by eventsMicros —
-    // physical-type-adaptive), bucketed with the window() operator. The
-    // bucket is emitted as EPOCH SECONDS (window.start cast long) —
-    // window alignment and the epoch cast are both timezone-independent,
-    // so the oracle compare holds in any session timezone (a date_format
-    // rendering would depend on spark.sql.session.timeZone).
-    "time_window_agg" -> ((s, dir) => {
-      val ev = eventsMicros(s, dir)
-      ev.withColumn("event_ts", timestamp_micros(col("ts")))
-        .groupBy(window(col("event_ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"),
-          min(col("value")).as("min_v"), max(col("value")).as("max_v"))
-        .select(
-          col("window.start").cast("long").as("hour_epoch"),
-          col("event_type"), col("cnt"), col("min_v"), col("max_v"))
-    }),
-
-    // Multimodal: byte-level payload description (pre-decode pass).
-    "mm_describe_binary" -> ((s, dir) =>
-      Multimodal.describeBinary(
-        Multimodal.withFakePayload(T(s, dir, "documents")),
-        "doc_id", "payload")),
-
-    // Multimodal: frame-sampling expansion from typed metadata.
-    "mm_sample_frames" -> ((s, dir) =>
-      Multimodal.sampleFrames(
-        Multimodal.withFakePayload(T(s, dir, "documents")), everyMs = 250L)),
-
-    // Multimodal: resize stub to an 8x8 target — payload and typed
-    // meta updated in one projection. The 64-byte cycled payload is
-    // emitted as a 128-char hex column, which DuckDB replays by
-    // cycling the hex string (2 chars/byte keeps byte alignment).
-    "mm_resize" -> ((s, dir) => {
-      val resized = Multimodal.resizeStub(
-        Multimodal.withFakePayload(T(s, dir, "documents")), 8, 8)
-      resized.select(col("doc_id"),
-        col("meta.width").as("width"), col("meta.height").as("height"),
-        lower(hex(col("payload"))).as("resized_hex"))
-    }),
-
-    // Multimodal: stubbed decode -> fixed-width feature vector via the
-    // partition-batched mapPartitions path (once-per-partition decoder
-    // session — the mapInPandas shape). The registered result folds
-    // the vector back to the 16 integer histogram-bin counts
-    // (`round(features[i] * n_bytes)` — exact: counts are small
-    // integers and the f32 normalize/denormalize round-trip error is
-    // ≪ 0.5), both because the driver's comparator can't sort array
-    // columns and because the integer counts admit an EXACT DuckDB
-    // oracle (high nibble of each UTF-8 byte via hex()).
-    "mm_featurize" -> ((s, dir) => {
-      val payload = Multimodal.withFakePayload(T(s, dir, "documents"))
-      val feats = Multimodal.featurizeBatched(payload, "doc_id", "payload")
-      val nb = payload.select(col("doc_id"),
-        length(col("payload")).cast("long").as("n_bytes"))
-      val bins = (0 until 16).map(i =>
-        round(element_at(col("features"), i + 1) * col("n_bytes"))
-          .cast("long").as(f"bin_$i%x"))
-      feats.join(nb, "doc_id").select(col("doc_id") +: bins: _*)
-    }),
-
-    // REAL image-codec roundtrip (JDK ImageIO): solid PNGs whose
-    // geometry/color derive arithmetically from doc_id are encoded,
-    // decoded, and pixel-summed by actual codec code; the oracle
-    // predicts every recovered value from doc_id alone. Green here
-    // means the decode path is not a stub.
-    "mm_image_roundtrip" -> ((s, dir) =>
-      Multimodal.imageRoundtrip(
-        T(s, dir, "documents").select("doc_id").filter(col("doc_id") < 200),
-        "doc_id", resizeTo = None)),
-
-    // Same, plus a REAL nearest-neighbor rescale + PNG re-encode in the
-    // middle: recovered geometry is the resize target, recovered color
-    // is still the planted one (solid survives interpolation).
-    "mm_image_resize" -> ((s, dir) =>
-      Multimodal.imageRoundtrip(
-        T(s, dir, "documents").select("doc_id").filter(col("doc_id") < 200),
-        "doc_id", resizeTo = Some((5, 3)))),
-
-    // REAL audio-codec roundtrip (JDK javax.sound.sampled): planted
-    // square-wave WAVs whose length/period/amplitude derive from
-    // doc_id are encoded, decoded and sample-summed by actual WAV/PCM
-    // codec code; the oracle predicts every recovered statistic —
-    // including a position-weighted sample checksum — from doc_id
-    // alone. Green here means the SECOND modality is not a stub.
-    "mm_audio_features" -> ((s, dir) =>
-      Multimodal.audioRoundtrip(
-        T(s, dir, "documents").select("doc_id").filter(col("doc_id") < 200),
-        "doc_id")),
-
-    // REAL video-codec roundtrip (JDK ImageIO, animated GIF — the
-    // JVM's one multi-frame container): planted GIFs whose geometry,
-    // frame count and per-frame colors derive from doc_id are encoded,
-    // frame-iterated and pixel-summed by actual codec code; the oracle
-    // predicts every recovered statistic — including a frame-ORDER-
-    // weighted checksum that dropped/reordered frames break — from
-    // doc_id alone. Green here means the THIRD modality is not a stub.
-    "mm_video_roundtrip" -> ((s, dir) =>
-      Multimodal.videoRoundtrip(
-        T(s, dir, "documents").select("doc_id").filter(col("doc_id") < 200),
-        "doc_id")),
-
-    // REAL frame sampling: keep every 2nd DECODED frame with its
-    // recovered channel means (mm_sample_frames' metadata expansion
-    // upgraded to actual decoded pixels).
-    "mm_video_frames" -> ((s, dir) =>
-      Multimodal.videoFrameSample(
-        T(s, dir, "documents").select("doc_id").filter(col("doc_id") < 200),
-        "doc_id", everyN = 2)),
-
-    // Corrupt binary payload QUARANTINE census (VERDICT r19 #4): the
-    // readJsonl quarantine+triage convention extended to the three
-    // modality decoders. A planted mixed-modality corpus (doc_id % 3
-    // → png/wav/gif pattern payloads) carries deterministic
-    // corruption (doc_id % 7: 0 → emptied, 2 → signature zeroed,
-    // 4 → truncated to the first third), and the census classifies
-    // every payload at the CONTAINER level (signature / trailer /
-    // declared-size checks + a real decode for complete containers)
-    // — so mode → failure_class is pure id arithmetic the oracle
-    // replays exactly, and a codec regression that nulls payloads
-    // becomes a visible decode_error count instead of a silent
-    // Option-drop (Multimodal.scala's decode-to-null contract is for
-    // feature UDFs mid-scan; this is the audit the pipeline owner
-    // runs).
-    "mm_corrupt_census" -> ((s, dir) => {
-      // spread: payload synthesis + real codec decode are the cost,
-      // and both collapse into the single-row-group scan task without
-      // it; the spread shuffles 8-byte ids, never payloads
-      val ids = spread(T(s, dir, "documents").select(col("doc_id")))
-      val m3 = pmod(col("doc_id"), lit(3))
-      val m7 = pmod(col("doc_id"), lit(7))
-      val kind = when(m3 === 0, "png").when(m3 === 1, "wav")
-        .otherwise("gif")
-      val mode = when(m7 === 0, 1).when(m7 === 2, 2)
-        .when(m7 === 4, 3).otherwise(0)
-      val payload = when(m3 === 0,
-          Multimodal.patternPng(col("doc_id"), lit(false)))
-        .when(m3 === 1, Multimodal.patternWav(col("doc_id"), lit(false)))
-        .otherwise(Multimodal.patternGif(col("doc_id"), lit(false)))
-      val corpus = ids.select(col("doc_id"), kind.as("kind"),
-        Multimodal.corruptPayload(payload, mode, kind).as("payload"))
-      Multimodal.corruptCensus(corpus, "doc_id", "payload", "kind")
-        .groupBy(col("modality"), col("failure_class"))
-        .agg(count(lit(1)).as("n_payloads"),
-          sum(when(col("decoded_ok"), 1L).otherwise(0L)).as("n_ok"))
-        .orderBy("modality", "failure_class")
-    }),
-
-    // IMAGE near-dup on REAL pooled pixels (VERDICT r17 #4): every
-    // PlantMod-th doc gets a planted near-duplicate image — the same
-    // deterministic 32×32 pattern PNG with ONE 4×4 block brightened
-    // by exactly +1 — and both go through the REAL javax.imageio
-    // decode → 8×8 integer-mean grayscale thumbnail → CENTERING →
-    // the SAME sign-LSH cosine near-dup operator the text embeddings
-    // use, with L=2 hash tables.
-    //
-    // Centering (−127.5, the generator's expected pixel mean) is
-    // LOAD-BEARING at scale: raw thumbs are all-positive and
-    // concentrated, so origin sign-LSH put nearly EVERYTHING in a
-    // few buckets (measured 14.5M bucket pairs at sf0.1 — quadratic)
-    // and squeezed unplanted cosines up to 0.998. Centered, buckets
-    // spread (49k bucket pairs) and the gap is a chasm: planted sim
-    // ≥ 0.99985 vs max unplanted 0.63 at sf0.1 (threshold 0.9 has
-    // ~0.27 margin BOTH sides). Recall per single table measured
-    // 92%/95% (a ±1 projection shift flips a plane when |proj| < 1);
-    // two independent tables multiply the miss rates away —
-    // measured 97.4%/99.7% at sf0.01/sf0.1, zero false positives at
-    // either scale, floor 90.
-    "mm_image_neardup" -> ((s, dir) => {
-      // spread: payload synthesis + real codec decode are the cost,
-      // and both collapse into the single-row-group scan task without
-      // it; the spread shuffles 8-byte ids, never payloads
-      val ids = spread(T(s, dir, "documents").select(col("doc_id")))
-      val eligible = ids.filter(col("doc_id") % PlantMod === 0)
-      val payloads = ids.select(col("doc_id"),
-          Multimodal.patternPng(col("doc_id"), lit(false)).as("payload"))
-        .unionByName(eligible.select(
-          (col("doc_id") + PlantOffset).as("doc_id"),
-          Multimodal.patternPng(col("doc_id"), lit(true)).as("payload")))
-      // checkpoint the decoded features: the two LSH tables each
-      // self-join this frame, so the lazy form re-decodes every PNG
-      // 4x (2 seeds x 2 join sides) — the decode is the dominant
-      // cost and the frame is tiny (64 floats/doc)
-      val vecs = payloads
-        .select(col("doc_id"),
-          Multimodal.imageThumbFeatures(col("payload")).as("thumb"))
-        .select(col("doc_id").as("vec_id"),
-          expr("transform(thumb, x -> CAST(x - 127.5 AS FLOAT))")
-            .as("embedding"))
-        .localCheckpoint()
-      val cands = Seq(42L, 1042L).map(seed =>
-          Similarity.cosineNearDupPairs(vecs, threshold = 0.9,
-            numBits = 8, dims = 64, seed = seed)
-            .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
-        .reduce(_.unionByName(_)).distinct()
-      // recall AND zero-FP both gated (ADVICE r18): fp_pairs must be
-      // exactly 0 for the oracle hash to match
-      plantedRecallFp(cands, eligible, MmImageRecallFloorPct)
-    }),
-
-    // AUDIO near-dup on REAL pooled PCM (VERDICT r18 missing #4):
-    // every PlantMod-th doc gets a planted near-duplicate clip — the
-    // same deterministic 3072-sample pattern WAV with the first
-    // pooled bin's 48 samples shifted by exactly +1 — and both go
-    // through the REAL javax.sound.sampled decode → 64-bin signed
-    // integer-mean pooled feature → the SAME sign-LSH cosine
-    // near-dup operator the text embeddings and image thumbs use,
-    // with L=2 hash tables. No centering shift: signed PCM bin means
-    // are near-zero by construction (the image path's load-bearing
-    // −127.5 shift, made unnecessary instead of applied). Recall
-    // floor 90 as the image gate; fp_pairs gated to exactly 0.
-    "mm_audio_neardup" -> ((s, dir) => {
-      // NOT spread (unlike the image/video/corrupt gates): measured
-      // 1.76 s → 3.44 s WITH the 32-way scan spread (r21 A/B), and
-      // 1.76 s → 2.70 s with a BOUNDED repartition(4) (r22 A/B) —
-      // the javax.sound AudioSystem.getAudioInputStream provider
-      // lookup contends under ANY multi-threaded decode, so the
-      // single scan task is the measured optimum at every width tried
-      val ids = T(s, dir, "documents").select(col("doc_id"))
-      val eligible = ids.filter(col("doc_id") % PlantMod === 0)
-      val payloads = ids.select(col("doc_id"),
-          Multimodal.patternWav(col("doc_id"), lit(false)).as("payload"))
-        .unionByName(eligible.select(
-          (col("doc_id") + PlantOffset).as("doc_id"),
-          Multimodal.patternWav(col("doc_id"), lit(true)).as("payload")))
-      // same checkpoint-the-decode reasoning as mm_image_neardup
-      val vecs = payloads
-        .select(col("doc_id").as("vec_id"),
-          Multimodal.audioPooledFeatures(col("payload")).as("embedding"))
-        .localCheckpoint()
-      val cands = Seq(42L, 1042L).map(seed =>
-          Similarity.cosineNearDupPairs(vecs, threshold = 0.9,
-            numBits = 8, dims = 64, seed = seed)
-            .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
-        .reduce(_.unionByName(_)).distinct()
-      plantedRecallFp(cands, eligible, MmAudioRecallFloorPct)
-    }),
-
-    // VIDEO near-dup on REAL decoded frames — the third modality
-    // through the SAME shared sign-LSH near-dup operator: every
-    // PlantMod-th doc gets a planted near-duplicate clip (the same
-    // 16-frame pattern GIF with frame 0's red channel +1), both go
-    // through the real javax.imageio frame iteration → 48-dim
-    // frame-ordered RGB-mean pooled feature → centering at the
-    // generator's expected channel mean (95.5: channels are uniform
-    // on [32, 159] — all-positive like pixels, so centering IS
-    // load-bearing here, unlike signed PCM) → L=2 LSH tables.
-    // Recall floor 90, fp_pairs gated to exactly 0.
-    "mm_video_neardup" -> ((s, dir) => {
-      // spread: payload synthesis + real codec decode are the cost,
-      // and both collapse into the single-row-group scan task without
-      // it; the spread shuffles 8-byte ids, never payloads
-      val ids = spread(T(s, dir, "documents").select(col("doc_id")))
-      val eligible = ids.filter(col("doc_id") % PlantMod === 0)
-      val payloads = ids.select(col("doc_id"),
-          Multimodal.patternGif(col("doc_id"), lit(false)).as("payload"))
-        .unionByName(eligible.select(
-          (col("doc_id") + PlantOffset).as("doc_id"),
-          Multimodal.patternGif(col("doc_id"), lit(true)).as("payload")))
-      // checkpoint-the-decode, as in the image/audio gates
-      val vecs = payloads
-        .select(col("doc_id"),
-          Multimodal.videoPooledFeatures(col("payload")).as("f"))
-        .select(col("doc_id").as("vec_id"),
-          expr("transform(f, x -> CAST(x - 95.5 AS FLOAT))")
-            .as("embedding"))
-        .localCheckpoint()
-      val cands = Seq(42L, 1042L).map(seed =>
-          Similarity.cosineNearDupPairs(vecs, threshold = 0.9,
-            numBits = 8, dims = 48, seed = seed)
-            .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
-        .reduce(_.unionByName(_)).distinct()
-      plantedRecallFp(cands, eligible, MmVideoRecallFloorPct)
-    }),
-
-    // Deterministic stratified sampling: content-keyed md5-bucket
-    // predicate with per-language keep rates (rebalance the language
-    // mix) — pure scan→filter, no shuffle at any scale. Thresholds are
-    // rendered into the oracle from the same SampleRates constants.
-    "sample_stratified" -> ((s, dir) =>
-      Sampling.stratifiedSample(T(s, dir, "documents"),
-        col("lang"), col("text"), SampleRates, defaultRate = 0.0625)
-        .select(col("doc_id"), col("lang"))),
-
-    // Repeated-epoch upsampling (data budgeting for data-constrained
-    // training): full copies per stratum budget plus a content-keyed
-    // deterministic fractional epoch; de's 0.5 budget shows the same
-    // machinery DOWNsampling. Scan-only — CASE projection + bounded
-    // sequence explode, no shuffle; the whole expansion replays in SQL.
-    // Deterministic exact-k sample: lowest-k content hashes, stable
-    // across re-runs/re-shards; plans as TakeOrdered, never a global
-    // corpus sort.
-    "sample_exact_k" -> ((s, dir) =>
-      Sampling.exactKSample(T(s, dir, "documents"), col("text"), 50)
-        .select(col("doc_id"), col("lang"))),
-
-    "epoch_upsample" -> ((s, dir) =>
-      Sampling.epochUpsample(T(s, dir, "documents"),
-        col("lang"), col("text"), EpochBudgets, defaultEpochs = 1.0)
-        .select(col("doc_id"), col("lang"), col("copy_idx"))),
-
-    // Capped stratum share: no language may exceed ~150 expected rows
-    // — the rebalancer with DATA-DEPENDENT rates (min(1, cap/n) per
-    // stratum). The keep test is integer arithmetic over a 16-bit
-    // content bucket, so the data-derived thresholds replay bit-exactly
-    // in the oracle; counts ride a broadcast join, never a full-corpus
-    // window on the (skewed) stratum key.
-    "sample_capped_share" -> ((s, dir) =>
-      Sampling.capStratumShare(
-        T(s, dir, "documents").select("doc_id", "lang", "text"),
-        col("lang"), col("text"), cap = 150L)
-        .select(col("doc_id"), col("lang"))),
-
-    // Temperature-balanced sample (α = 1/2): per-language keep-rate
-    // min(1, 8/√n) — the multilingual flatten that lets small
-    // languages through whole while the head grows only as √n. The
-    // per-stratum threshold (k²·2^32 div n) is integer arithmetic on
-    // the broadcast counts side, replayed bit-exactly by the oracle.
-    "sample_sqrt_share" -> ((s, dir) =>
-      Sampling.sqrtShareSample(
-        T(s, dir, "documents").select("doc_id", "lang", "text"),
-        col("lang"), col("text"), k = 8L)
-        .select(col("doc_id"), col("lang"))),
-
-    // Per-key cap: at most 20 docs per language, ranked by content
-    // hash (run-stable, order-bias-free); WindowGroupLimit prunes to
-    // k rows per key map-side before the one shuffle.
-    "cap_per_key" -> ((s, dir) =>
-      Sampling.capPerKey(T(s, dir, "documents"),
-        key = col("lang"), tieBreaker = col("doc_id"), k = 20)
-        .select(col("doc_id"), col("lang"))),
-
-    // Per-DOMAIN capping through real URL parsing: deterministic
-    // synthetic URLs (host varies by doc_id mod 7), host extracted
-    // with Spark's parse_url, at most 10 docs per host by content-
-    // hash rank. The oracle reconstructs the host from the same mod
-    // arithmetic, so parse_url's HOST extraction is pinned against
-    // the construction — the FineWeb-style docs-per-domain limiter.
-    "domain_cap" -> ((s, dir) => {
-      val url = concat(lit("https://site"), pmod(col("doc_id"), lit(7)),
-        lit(".example.com/d/"), col("doc_id"))
-      val docs = T(s, dir, "documents")
-        .select(col("doc_id"), url.as("url"))
-        .withColumn("host", expr("parse_url(url, 'HOST')"))
-      Sampling.capPerKey(docs, key = col("host"),
-        tieBreaker = col("doc_id"), k = 10)
-        .select(col("doc_id"), col("host"))
-    }),
-
-    // PII scrub: RE2-compatible detect + redact chains over documents
-    // with deterministic synthetic PII injected (the synthetic corpus
-    // contains none) — injector replayed verbatim in the oracle.
-    "pii_redact" -> ((s, dir) =>
-      Redaction.piiScrub(Redaction.withFakePii(T(s, dir, "documents")))),
-
-    // Per-source PII exposure census — the privacy-report rollup a
-    // corpus owner reads BEFORE deciding what to redact: per source
-    // the exact match counts per category and how many docs carry any
-    // PII at all. Counts inherit piiScrub's exact token-difference
-    // arithmetic; source rides the scrub projection (no self-join).
-    "pii_census" -> ((s, dir) =>
-      Redaction.piiScrub(Redaction.withFakePii(T(s, dir, "documents")),
-          carryCols = Seq("source"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_url")).as("n_url"),
-          sum(col("n_email")).as("n_email"),
-          sum(col("n_ip")).as("n_ip"),
-          sum(col("n_phone")).as("n_phone"),
-          sum(((col("n_url") + col("n_email") + col("n_ip") +
-            col("n_phone")) > 0).cast("long")).as("n_docs_with_pii"))
-        .orderBy("source")),
-
-    // Unicode NFC normalization (no Spark built-in — native JDK
-    // Normalizer expression) over text with injected combining-mark
-    // sequences; DuckDB's nfc_normalize implements the same standard
-    // algorithm, giving an exact oracle.
-    "unicode_nfc" -> ((s, dir) => {
-      val raw = concat(col("text"), lit(DecomposedSuffix))
-      T(s, dir, "documents").select(col("doc_id"),
-        graft.functions.CurationExprs.nfcNormalize(raw).as("norm_text"),
-        when(graft.functions.CurationExprs.nfcNormalize(raw) =!= raw, 1)
-          .otherwise(0).as("changed"))
-    }),
-
-    // Compression-ratio redundancy signal (Gopher-style boilerplate
-    // screen): single-shot fixed-level deflate size per document.
-    // DuckDB has no zlib surface, so the deflate length itself can't
-    // be replayed — instead the query emits an IN-BAND SELF-AUDIT the
-    // oracle can assert: `audit_ok` folds (a) the framing bound
-    // (deflate adds at most a few bytes — raw+64 is generous), (b) the
-    // corpus ratio bound (this corpus compresses at most ~2.5x; bound
-    // set at 50x), and (c) deterministic-repeat equality — the codec
-    // run twice, the second run through the graft-owned
-    // `OpaqueIdentityExpr` barrier no Catalyst rule (current or
-    // future) can fold or CSE away, so the double evaluation is
-    // structurally guaranteed, not dependent on Spark lacking a
-    // particular simplification. The oracle expects TRUE everywhere,
-    // so a broken codec path fails the hash compare instead of hiding
-    // in a rows-only row. The ordering property (repetitive text
-    // compresses better) stays spec-pinned.
-    "compression_signal" -> ((s, dir) => {
-      val once = graft.functions.CurationExprs.deflateSize(col("text"))
-      val again = graft.functions.CurationExprs.deflateSize(
-        graft.functions.CurationExprs.opaqueIdentity(col("text")))
-      T(s, dir, "documents").select(col("doc_id"),
-        length(col("text")).cast("long").as("raw_len"),
-        once.as("deflate_len"), again.as("deflate_len2"))
-        .select(col("doc_id"), col("raw_len"),
-          (col("deflate_len") <= col("raw_len") + 64 &&
-            col("deflate_len") * 50 >= col("raw_len") &&
-            col("deflate_len") === col("deflate_len2")).as("audit_ok"))
-    }),
-
-    // Near-dup clustering: integer-exact n-gram Jaccard edges over a
-    // deterministic pair set (adjacent doc_ids, +1/+2), then
-    // distributed connected components (min-label propagation with
-    // pointer jumping; O(log diameter) rounds). component = min
-    // reachable doc_id; oracled by a DuckDB recursive CTE.
-    "neardup_components" -> ((s, dir) =>
-      neardupLabeled(s, dir)
-        .select(col("node").as("doc_id"), col("component"))),
-
-    // Fixed-point integer PageRank over the customer↔supplier
-    // co-purchase graph (both directions of the distinct
-    // lineitem⋈orders pairs; suppliers offset into a disjoint id
-    // space) — the crawl-frontier/host-importance prior, 3 rounds,
-    // BIGINT ranks at a 10^6 scale with floor-divided updates, so
-    // the oracle unrolls the loop and every rank hashes exactly.
-    "pagerank_fixed" -> ((s, dir) => {
-      val pairs = T(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-        .join(T(s, dir, "orders").select("o_orderkey", "o_custkey"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("cust"),
-          (col("l_suppkey") + 1000000L).as("supp"))
-        .distinct()
-      val edges = pairs.select(col("cust").as("src"), col("supp").as("dst"))
-        .union(pairs.select(col("supp").as("src"), col("cust").as("dst")))
-      PageRank.pagerankFixed(edges, iters = 3)
-        .select(col("node"), col("r").as("pr"))
-    }),
-
-    // Bounded k-core peel over the customer↔supplier purchase graph
-    // (k = 30, 3 rounds): low-degree periphery nodes drop, survivors
-    // report their within-subgraph degrees — all exact integers, the
-    // oracle unrolls the peel. Completes the graph suite next to
-    // components, PageRank and the triangle census.
-    "kcore_peel" -> ((s, dir) => {
-      val edges = T(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-        .join(T(s, dir, "orders").select("o_orderkey", "o_custkey"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + 1000000L).as("dst"))
-        .distinct()
-      KCore.kcorePeel(edges, k = 30, rounds = 3)
-    }),
-
-    // Triangle census over the supplier co-occurrence graph (suppliers
-    // sharing an order) — degree-ordered compact-forward enumeration,
-    // so a hub of degree d costs O(√m) wedge work instead of O(d²);
-    // the oracle brute-forces the canonical three-way join. All-integer
-    // summary row. The order slice is CAPPED at a fixed key range (the
-    // ann_matryoshka precedent): a co-occurrence graph's density is a
-    // property of the data — at sf0.1 the uncapped supplier graph is
-    // near-COMPLETE and its 10^8-triangle output is the explosion, not
-    // the plan — so the demo graph stays analysis-sized at every sf
-    // while the operator's skew behavior is spec-pinned separately.
-    "triangle_count" -> ((s, dir) => {
-      val sp = T(s, dir, "lineitem")
-        .filter(col("l_orderkey") < 4000)
-        .select("l_orderkey", "l_suppkey").distinct()
-      val edges = sp.as("x").join(sp.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-            col("x.l_suppkey") < col("y.l_suppkey"))
-        .select(col("x.l_suppkey").as("src"), col("y.l_suppkey").as("dst"))
-      Triangles.summary(edges)
-    }),
-
-    // Edit-distance record linkage (EDJoin rarest-gram blocking +
-    // exact Levenshtein verify): part names probed by planted
-    // 1-substitution typos. The BLOCKING is part of the contract and
-    // the oracle replays it verbatim — grams, left-df prefix ranking,
-    // length band, verification — so the pair set hashes exactly.
-    "fuzzy_join_typos" -> ((s, dir) =>
-      FuzzyJoin.editBlockedJoin(
-        fuzzyLeft(s, dir), fuzzyProbes(s, dir), maxDist = 1)),
-
-    // Blocking recall on the planted typos — every probe should link
-    // back to its original (quantifies what the rarest-gram prefix
-    // gives up; measured 100%, floored at 90).
-    "fuzzy_join_recall" -> ((s, dir) => {
-      val hits = FuzzyJoin.editBlockedJoin(
-          fuzzyLeft(s, dir), fuzzyProbes(s, dir), maxDist = 1)
-        .filter(col("r_id") === col("l_id") + 9000000L)
-        .select(col("l_id"), lit(1L).as("hit"))
-      fuzzyLeft(s, dir).filter(col("l_id") % 50 === 0)
-        .select("l_id")
-        .join(hits, Seq("l_id"), "left")
-        .agg(count(lit(1)).as("planted_total"),
-          (sum(coalesce(col("hit"), lit(0L))) * 100 >=
-            count(lit(1)) * FuzzyJoinRecallFloorPct).as("recall_ok"))
-    }),
-
-    // The end-user shape of near-dup clustering: DEDUP the corpus —
-    // keep exactly one canonical (minimum-id) document per cluster,
-    // singletons included. Same candidate/edge/label pipeline as
-    // neardup_components; survivors are the nodes that are their own
-    // component label. At 100 TB this is the pass that actually
-    // shrinks the corpus: label, then one scan-shaped filter.
-    "neardup_dedup_keep" -> ((s, dir) =>
-      neardupLabeled(s, dir)
-        .filter(col("node") === col("component"))
-        .select(col("node").as("doc_id"))),
-
-    // Cluster-size summary over the same labeling — the histogram a
-    // curation run inspects BEFORE committing a dedup (how many
-    // clusters, how big, which doc is canonical): one map-side-combined
-    // aggregate over the EDGE-INCIDENT labels only. Singletons can't
-    // pass the size > 1 filter (every edge endpoint is in a cluster of
-    // ≥ 2), so the corpus-wide singleton anti-join is skipped outright;
-    // the oracle's HAVING count(*) > 1 replay proves the equivalence.
-    "neardup_cluster_sizes" -> ((s, dir) =>
-      Components.componentSizes(
-        Components.edgeComponents(neardupEdges(s, dir)._1))),
-
-    // Quality-aware canonical selection: within each near-dup
-    // component keep the HIGHEST-QUALITY member (max n_chars, doc_id
-    // tiebreak) instead of the smallest id — what a production dedup
-    // actually retains (the longest/cleanest copy), FineWeb-style.
-    // The window partitions by component label, so only label rows
-    // plus one quality column shuffle; text never moves.
-    "neardup_keep_best" -> ((s, dir) => {
-      val labeled = neardupLabeled(s, dir)
-      val quality = T(s, dir, "documents").select(
-        col("doc_id").as("node"), col("n_chars"))
-      val w = Window.partitionBy(col("component"))
-        .orderBy(col("n_chars").desc, col("node").asc)
-      labeled.join(quality, "node")
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("node").as("doc_id"), col("component"), col("n_chars"))
-    }),
-
-    // C4-style cross-document line dedup: drop every line occurring
-    // more than once corpus-wide, keep the documents. The corpus here
-    // is single-line word streams, so the query first reconstructs a
-    // deterministic multi-line form (12-token lines) in BOTH engines —
-    // the operator itself is generic over '\n'-separated text. The
-    // duplicated documents planted in the fixture make their lines
-    // corpus-frequent, so the drops are real (≈14% of docs lose lines
-    // at sf0.01).
-    "line_dedup" -> ((s, dir) => {
-      // One codegen'd regex pass: every 12-token run that is followed
-      // by another token gets its trailing space turned into '\n' —
-      // exactly the "chunks of 12, last chunk shorter" split the
-      // oracle replays with list slicing (a transform/sequence/slice
-      // HOF chain computes the same thing ~2x slower: interpreted
-      // lambdas, and the probe side of the frequent-line join
-      // re-executes the reconstruction).
-      val recon = regexp_replace(TextDedup.normText(col("text")),
-        "((?:\\S+ ){11}\\S+) ", "$1\n")
-      TextDedup.lineDedup(
-        T(s, dir, "documents").select(col("doc_id"), recon.as("text")))
-    }),
-
-    // Boilerplate-share page gate over the same synthesized 12-token
-    // lines: the fraction of a page's lines that are corpus-frequent,
-    // and the drop-whole-page verdict at the 50% share — the page-
-    // level complement of line_dedup (verbatim duplicate docs in the
-    // fixture make every one of their lines frequent, so they flag).
-    "boilerplate_share" -> ((s, dir) => {
-      val recon = regexp_replace(TextDedup.normText(col("text")),
-        "((?:\\S+ ){11}\\S+) ", "$1\n")
-      TextDedup.boilerplateShare(
-        T(s, dir, "documents").select(col("doc_id"), recon.as("text")))
-    }),
-
-    // C4-faithful keep-first line dedup over the same synthesized
-    // 12-token lines: a duplicated line survives only at its global
-    // first occurrence (min doc_id, then position) instead of being
-    // dropped everywhere.
-    "line_dedup_keep_first" -> ((s, dir) => {
-      val recon = regexp_replace(TextDedup.normText(col("text")),
-        "((?:\\S+ ){11}\\S+) ", "$1\n")
-      TextDedup.lineDedupKeepFirst(
-        T(s, dir, "documents").select(col("doc_id"), recon.as("text")))
-    }),
-
-    // The PARAGRAPH-granularity form of the same operator: the
-    // generalized `sep` parameter exercised with a MULTI-character
-    // literal separator ("\n\n"), not just typed — the reconstruction
-    // emits blank-line-separated 12-token paragraphs and the operator
-    // must split/reassemble on the quoted two-char boundary. Counts
-    // match line_dedup by construction; dedup_text proves the
-    // separator round-trips.
-    "line_dedup_paragraph" -> ((s, dir) => {
-      val recon = regexp_replace(TextDedup.normText(col("text")),
-        "((?:\\S+ ){11}\\S+) ", "$1\n\n")
-      TextDedup.lineDedup(
-        T(s, dir, "documents").select(col("doc_id"), recon.as("text")),
-        sep = "\n\n")
-    }),
-
-    // WITHIN-document line dedup (intra-page boilerplate). The word
-    // salad never repeats a 12-token line inside one document, so the
-    // prep plants the repeat SQL-replayably: doc_id % 7 == 0 documents
-    // get their own first line appended again at the end.
-    "line_dedup_within_doc" -> ((s, dir) => {
-      val recon = regexp_replace(TextDedup.normText(col("text")),
-        "((?:\\S+ ){11}\\S+) ", "$1\n")
-      val planted = when(pmod(col("doc_id"), lit(7)) === 0,
-        concat(recon, lit("\n"), element_at(split(recon, "\n", -1), 1)))
-        .otherwise(recon)
-      TextDedup.lineDedupWithinDoc(
-        T(s, dir, "documents").select(col("doc_id"), planted.as("text")))
-    }),
-
-    // C4 page-level retention over the same punctuated synthesis as
-    // c4_line_filter, with the lorem-ipsum (doc_id % 19) and brace
-    // (doc_id % 23) pathologies planted SQL-replayably.
-    "c4_page_filter" -> ((s, dir) => {
-      val toks = split(TextDedup.normText(col("text")), " ")
-      val la = transform(
-        sequence(lit(0),
-          greatest(floor((size(toks) - 1) / 12).cast("int"), lit(0))),
-        i => concat_ws(" ", slice(toks, i * 12 + 1, lit(12))))
-      val punct = array_join(transform(la, (l, i) =>
-        when(pmod(col("doc_id") + i, lit(3)) === 0, concat(l, lit(".")))
-          .otherwise(l)), "\n")
-      val withLorem = when(pmod(col("doc_id"), lit(19)) === 0,
-        concat(punct, lit("\nlorem ipsum dolor sit amet.")))
-        .otherwise(punct)
-      val withBrace = when(pmod(col("doc_id"), lit(23)) === 0,
-        concat(withLorem, lit("\ncode { sample }")))
-        .otherwise(withLorem)
-      TextAnalysis.c4PageFilter(
-        // spread: cf. curation_funnel (per-row synthesis + page gates)
-        spread(T(s, dir, "documents").select(col("doc_id"), col("text")))
-          .select(col("doc_id"), withBrace.as("text")))
-    }),
-
-    // Exact-substring cross-document dedup at 50-token granularity —
-    // catches verbatim repeats that do NOT align on line boundaries
-    // (what line_dedup structurally cannot see). The corpus has no
-    // natural sub-document 50-token repeats, so the input prep plants
-    // them SQL-replayably: every doc_id % 41 == 0 document with >= 62
-    // tokens contributes a composite "excerpt doc" (tokens 3..62 of
-    // its normalized text, a mid-document 60-token splice) under
-    // doc_id + 10,000,000. Each excerpt shares exactly its 11
-    // overlapping 50-grams with the earlier original, so the expected
-    // output is fully determined: excerpts get is_dup = 1 with
-    // dup_spans = 11, originals stay is_dup = 0 with shared_spans =
-    // 11, and the fixture's planted whole-document duplicates (< 50
-    // tokens -> whole-text fallback gram) are flagged too. Spark
-    // counts 8-byte span hashes; the oracle recounts raw span strings
-    // — the green row is also the collision audit.
-    "substring_dedup" -> ((s, dir) =>
-      TextDedup.substringDedup(substringDedupInput(s, dir))),
-
-    // the keep-first action form: the corpus that survives
-    "substring_dedup_keep" -> ((s, dir) =>
-      TextDedup.substringDedupKeep(substringDedupInput(s, dir))),
-
-    // The dedup-verdict ENSEMBLE report: per document, one verdict per
-    // dedup family (exact / line / substring / near-dup / semantic)
-    // plus the cross-detector flag count — the table a curation run
-    // reviews before committing drops. See dedupReportFrame.
-    "dedup_report" -> ((s, dir) =>
-      dedupReportFrame(s, dir)
-        .withColumn("n_flags",
-          (col("exact_dup") + col("line_dup") + col("substr_dup") +
-            col("neardup_dup") + col("sem_dup")).cast("int"))),
-
-    // Corpus-level drop accounting over the same ensemble: per-detector
-    // totals, union reach, and the >= 2-detector consensus set.
-    "dedup_report_summary" -> ((s, dir) => {
-      val nf = col("exact_dup") + col("line_dup") + col("substr_dup") +
-        col("neardup_dup") + col("sem_dup")
-      dedupReportFrame(s, dir).agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("exact_dup")).as("exact_dups"),
-        sum(col("line_dup")).as("line_dups"),
-        sum(col("substr_dup")).as("substr_dups"),
-        sum(col("neardup_dup")).as("neardup_dups"),
-        sum(col("sem_dup")).as("sem_dups"),
-        sum(when(nf > 0, 1L).otherwise(0L)).as("flagged_any"),
-        sum(when(nf >= 2, 1L).otherwise(0L)).as("flagged_consensus"))
-    }),
-
-    // Incremental (cross-snapshot) dedup: which docs of the "new crawl"
-    // half are genuinely new vs the corpus half — left-anti join on the
-    // 32-byte content hash, corpus side reduced to distinct hashes.
-    "dedup_incremental" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      TextDedup.incrementalNew(
-        docs.filter(col("doc_id") >= 250),
-        docs.filter(col("doc_id") < 250))
-        .select(col("doc_id"), col("text_hash"))
-    }),
-
-    // Cross-snapshot incremental NEAR-dup dedup against the persisted
-    // band+signature index (TextDedup.nearDupIndex) — the weekly
-    // re-crawl shape: only the new snapshot is shingled, the prior
-    // corpus participates purely through its index. The new snapshot
-    // is built SQL-replayably: verbatim re-fetches (every 5th doc),
-    // whitespace-mangled re-fetches (every 7th doc, ' ' -> '  ' —
-    // same normalized form, so exact AND near dedup both see through
-    // it), and genuinely new docs (doc_id >= 450 with a prefix that
-    // changes the gram set). thresholdPct = 100 makes the verdict
-    // shingle-SET equality — deterministic (set-equal docs share every
-    // band by construction; unequal candidates fail the exact verify),
-    // so the kept set replays as a NOT EXISTS over the gram sets. The
-    // fuzzy-threshold recall path is gated by incremental_near_recall.
-    "dedup_incremental_near" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val (bands, sigs) = TextDedup.nearDupIndex(docs)
-      val newDocs = docs.filter(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + 500000L).as("doc_id"), col("text"))
-        .unionByName(docs.filter(col("doc_id") % 7 === 0)
-          .select((col("doc_id") + 600000L).as("doc_id"),
-            regexp_replace(col("text"), " ", "  ").as("text")))
-        .unionByName(docs.filter(col("doc_id") >= 450)
-          .select((col("doc_id") + 700000L).as("doc_id"),
-            concat(lit("fresh v2 "), col("text")).as("text")))
-      TextDedup.incrementalNearNew(newDocs, bands, sigs,
-        thresholdPct = 100, maxBucket = Int.MaxValue)
-        .select(col("doc_id"))
-    }),
-
-    // The retrieval-quality gate for the fuzzy incremental path: the
-    // new snapshot is the planted mutated copies (every-50th-token
-    // sentinel, Jaccard ~0.9 vs their originals), the index is the
-    // unmodified corpus, and the flag asserts that >= floor% of the
-    // copies were DROPPED by incrementalNearNew at a 50% threshold —
-    // end-to-end through banding, the index join and the exact verify.
-    // Same floor as minhash_planted_recall: identical signature
-    // machinery, so candidacy recall is identical by construction.
-    "incremental_near_recall" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
-      val (bands, sigs) = TextDedup.nearDupIndex(docs)
-      val copies = plantedCopies(docs)
-      val kept = TextDedup.incrementalNearNew(copies, bands, sigs,
-        thresholdPct = 50)
-      val dropped = copies.select("doc_id")
-        .join(kept.select(col("doc_id"), lit(1L).as("kept")),
-          Seq("doc_id"), "left")
-      dropped.agg(count(lit(1)).as("planted_total"),
-        (sum(when(col("kept").isNull, 1L).otherwise(0L)) * 100 >=
-          count(lit(1)) * MinHashRecallFloorPct).as("recall_ok"))
-    }),
-
-    // Lexical BM25 retrieval: three fixed bag-of-terms queries ranked
-    // over the corpus. Postings restrict to queried terms via a
-    // broadcast semi-join BEFORE any aggregate (df is computed on
-    // queried-term postings only, never a vocabulary-wide groupBy);
-    // ranking is on round(score, 4) with doc_id tiebreak so the
-    // double-precision BM25 replays rank-exactly (tf-idf trick).
-    "bm25_topk" -> ((s, dir) => {
-      import s.implicits._
-      val docs = T(s, dir, "documents")
-      val queries = Seq(
-        (1L, "hash"), (1L, "join"),
-        (2L, "column"), (2L, "scan"),
-        (3L, "filter"), (3L, "merge"), (3L, "small"))
-        .toDF("q_id", "term")
-      Retrieval.bm25TopK(docs, queries, k = 10)
-    }),
-
-    // Hybrid retrieval: BM25 over documents fused with exact-cosine
-    // ANN over the SAME id universe (vec_id == doc_id in the fixture)
-    // by reciprocal-rank fusion — no score calibration, integer ranks
-    // in, and 1/(60+rk) doubles are single correctly-rounded IEEE ops,
-    // so the fused ordering replays bit-exactly with no rounding
-    // trick. Both inputs are top-20-bounded, so the fusion join is
-    // O(queries × 20) whatever the corpus size.
-    "hybrid_rrf_topk" -> ((s, dir) => {
-      import s.implicits._
-      val docs = T(s, dir, "documents")
-      val emb = T(s, dir, "embeddings")
-      val qt = Seq(
-        (1L, "hash"), (1L, "join"),
-        (2L, "column"), (2L, "scan"),
-        (3L, "filter"), (3L, "merge"))
-        .toDF("q_id", "term")
-      val bm = Retrieval.bm25TopK(docs, qt, k = 20)
-      val qv = emb.filter(col("vec_id").isin(1L, 2L, 3L))
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      val ann = Similarity.bruteForceTopK(emb, qv, k = 20)
-        .select(col("q_id"), col("vec_id").as("doc_id"), col("rk"))
-      Retrieval.rrfFuse(bm, ann, k = 10)
-    }),
-
-    // Quality filtering at an exact discrete percentile cutoff: keep
-    // docs at or below the global p90 of n_chars. Scale shape: a tiny
-    // one-row aggregate broadcast back as a filter — NOT a global
-    // window sort (percent_rank over an unpartitioned window would
-    // single-task the corpus at 100 TB).
-    "quantile_filter" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val cutoff = docs.agg(
-        expr("percentile_disc(0.9) WITHIN GROUP (ORDER BY n_chars)")
-          .as("cut"))
-      docs.crossJoin(broadcast(cutoff))
-        .filter(col("n_chars") <= col("cut"))
-        .select(col("doc_id"), col("n_chars"))
-    }),
-
-    // Late-interaction (ColBERT MaxSim) retrieval: every 4 consecutive
-    // vec_ids form one multi-vector "document", queries are the first
-    // 4 such groups, and score(q,d) = sum over query tokens of the max
-    // int8-dot against d's tokens — all 64-bit integer arithmetic
-    // (Quantization.quantize codes), so scores and ranks hash exactly.
-    // Query side broadcast; linear in corpus tokens at the fixed query
-    // set (the ann_cosine_topk shape). Production path at 100 TB: pass
-    // `candidates` from a pooled-vector ANN stage and the rerank is
-    // linear in the candidate list.
-    "maxsim_topk" -> ((s, dir) => {
-      val grp = floor(col("vec_id") / 4).cast("long")
-      val codes = Quantization.quantize(T(s, dir, "embeddings"))
-      val dt = codes.select(grp.as("d_id"), col("qvec").as("dvec"))
-      val qt = codes.filter(col("vec_id") < 16)
-        .select(grp.as("q_id"), col("vec_id").as("qtok_id"),
-          col("qvec"))
-      Retrieval.maxSimTopK(qt, dt, k = 10, excludeSelf = true)
-    }),
-
-    // Two-stage late-interaction serving audit, two first stages per
-    // query: a lead-token ("CLS" proxy) int8-dot prefilter and a
-    // SUM-POOLED single-vector prefilter (dot(Σq,Σd) = the all-pairs
-    // interaction total), each taking top-30 candidates which full
-    // MaxSim then reranks; output counts the exact overlap with the
-    // unrestricted MaxSim top-10 per strategy. All integer arithmetic
-    // end to end. On these RANDOM synthetic embeddings the census
-    // reads exactly as the math says it must: the lead token carries
-    // no summary of the other three (~3-4/10), while the pooled
-    // proxy — correlated with the full interaction sum by
-    // construction — recovers most of the top-10; the side-by-side
-    // IS the pre-rollout decision artifact.
-    "maxsim_rerank_recall" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val grp = floor(col("vec_id") / 4).cast("long")
-      val codes = Quantization.quantize(T(s, dir, "embeddings"))
-      val dt = codes.select(grp.as("d_id"), col("qvec").as("dvec"))
-      val qt = codes.filter(col("vec_id") < 16)
-        .select(grp.as("q_id"), col("vec_id").as("qtok_id"),
-          col("qvec"))
-      val full = Retrieval.maxSimTopK(qt, dt, k = 10,
-        excludeSelf = true)
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("s0").desc, col("d_id").asc)
-      def top30(dSide: DataFrame, qSide: DataFrame): DataFrame =
-        dSide.crossJoin(broadcast(qSide))
-          .filter(col("d_id") =!= col("q_id"))
-          .select(col("q_id"), col("d_id"),
-            Quantization.intDot(col("qv0"), col("dv0")).as("s0"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 30)
-          .select(col("q_id"), col("d_id"))
-      val leadCand = top30(
-        codes.filter(col("vec_id") % 4 === 0)
-          .select(grp.as("d_id"), col("qvec").as("dv0")),
-        codes.filter(col("vec_id") < 16 && col("vec_id") % 4 === 0)
-          .select(grp.as("q_id"), col("qvec").as("qv0")))
-      val pooledCand = top30(
-        Retrieval.sumPool(dt, "d_id", "dvec")
-          .select(col("d_id"), col("pvec").as("dv0")),
-        Retrieval.sumPool(qt.select(col("q_id"), col("qvec")),
-          "q_id", "qvec")
-          .select(col("q_id"), col("pvec").as("qv0")))
-      // ONE pass over the expensive full product: both rerank chains
-      // left-join it, both hit counts aggregate together, and stack()
-      // unpivots to per-strategy rows without a union (a union of two
-      // census branches would re-evaluate the full MaxSim product per
-      // branch — exchange reuse across union arms is best-effort, the
-      // single-aggregate shape doesn't need it)
-      def hits(cand: DataFrame, tag: String): DataFrame =
-        Retrieval.maxSimTopK(qt, dt, k = 10,
-          candidates = Some(cand), excludeSelf = true)
-          .select(col("q_id"), col("d_id"), lit(1).as(s"hit_$tag"))
-      full.select(col("q_id"), col("d_id"))
-        .join(hits(leadCand, "lead"), Seq("q_id", "d_id"), "left")
-        .join(hits(pooledCand, "pooled"), Seq("q_id", "d_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(count(lit(1)).as("n_full"),
-          sum(coalesce(col("hit_lead"), lit(0))).as("n_l"),
-          sum(coalesce(col("hit_pooled"), lit(0))).as("n_p"))
-        .select(col("q_id"),
-          expr("stack(2, 'lead', n_l, 'pooled', n_p)")
-            .as(Seq("strategy", "n_overlap")), col("n_full"))
-        .select(col("q_id"), col("strategy"), col("n_full"),
-          col("n_overlap"))
-    }),
-
-    // Retrieval eval harness: BM25 run vs deterministic boolean-AND
-    // pseudo-qrels (doc relevant iff it contains every query term) —
-    // per query the relevant-set size, top-10 hit count (recall@10
-    // numerator) and first-relevant rank (MRR denominator; 0 = miss).
-    // All integers; query-bounded joins, corpus touched once.
-    "retrieval_eval" -> ((s, dir) => {
-      import s.implicits._
-      val docs = T(s, dir, "documents")
-      val queries = Seq(
-        (1L, "hash"), (1L, "join"),
-        (2L, "column"), (2L, "scan"),
-        (3L, "filter"), (3L, "merge"), (3L, "small"))
-        .toDF("q_id", "term")
-      Retrieval.rankEval(
-        Retrieval.bm25TopK(docs, queries, k = 10),
-        Retrieval.booleanAndQrels(docs, queries), k = 10)
-    }),
-
-    // Gap-based sessionization (30-min gap): lag boundary + running-sum
-    // numbering over ONE (shuffle, sort) on user_id. Timestamps are
-    // micros on both sides (eventsMicros / epoch_us): micros is the
-    // finest precision DuckDB reads from either parquet timestamp
-    // layout, and the sf0.01 stream is collision-free at micros.
-    // Islands-and-gaps interval coverage: every event carries a
-    // 15-minute interval; overlapping/touching intervals merge per
-    // user (running-MAX end, not lag — nested intervals stay
-    // correct) and the census is all exact epoch-micros BIGINTs.
-    "interval_coverage" -> ((s, dir) =>
-      EventOps.intervalCoverage(
-        eventsMicros(s, dir).select(col("event_id"), col("user_id"),
-          col("ts")),
-        durUs = 900L * 1000000L)
-        .orderBy("user_id")),
-
-    "sessionize" -> ((s, dir) =>
-      EventOps.sessionize(
-        eventsMicros(s, dir).select(col("event_id"), col("user_id"),
-          col("ts")),
-        gapNs = EventOps.SessionGapNs / 1000)
-        .select(col("event_id"), col("user_id"), col("session_idx"))),
-
-    // Declarative data-quality suite — the pre-flight gate over the
-    // star schema: key uniqueness, completeness, value invariants and
-    // the lineitem→orders referential containment (all hold on this
-    // fixture — the suite proves a CLEAN bill exactly, and any
-    // violation would land in `observed` with passed = 0).
-    // Snapshot-drift data contract: documents vs a mutated "today"
-    // snapshot (planted NULLs in source/lang by id modulus). Integer
-    // cross-multiplied rate verdict; 2 scans total for any number of
-    // tracked columns (one multi-null-count aggregate per side).
-    "dq_drift" -> ((s, dir) => {
-      val prev = T(s, dir, "documents")
-      val cur = prev.select(col("doc_id"),
-        when(col("doc_id") % 200 === 0, lit(null)).otherwise(col("lang"))
-          .as("lang"),
-        when(col("doc_id") % 25 === 0, lit(null)).otherwise(col("source"))
-          .as("source"),
-        col("text"))
-      DataQuality.drift(prev, cur, Seq("lang", "source", "text"),
-        tolerancePct = 5)
-    }),
-
-    "dq_checks" -> ((s, dir) => DataQuality.suite(Seq(
-      DataQuality.uniqueness(T(s, dir, "orders"),
-        "orders_pk_unique", col("o_orderkey")),
-      DataQuality.uniqueness(T(s, dir, "customer"),
-        "customer_pk_unique", col("c_custkey")),
-      DataQuality.completeness(T(s, dir, "orders"),
-        "orders_custkey_complete", col("o_custkey")),
-      DataQuality.constraint(T(s, dir, "lineitem"),
-        "lineitem_qty_positive", col("l_quantity") > 0),
-      DataQuality.constraint(T(s, dir, "events"),
-        "events_value_nonneg", col("value") >= 0),
-      DataQuality.containment(
-        T(s, dir, "lineitem"), col("l_orderkey"),
-        T(s, dir, "orders"), col("o_orderkey"),
-        "lineitem_orderkey_contained")))),
-
-    // Join-blowup pre-flight audit: what would events ⨝ purchases on
-    // user_id produce — per-key multiplicities for the 10 hottest
-    // keys, total output rows, matched keys and the hottest key's
-    // share, computed from the two key-count aggregates alone (the
-    // skew audit you run BEFORE committing the shuffle; output-bound
-    // work never happens).
-    "join_blowup_audit" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-      Profiling.joinBlowupAudit(
-        ev.select(col("user_id").as("jk")),
-        ev.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("jk")),
-        "jk", topK = 10)
-    }),
-
-    // DSIR-style importance weighting toward the English slice as the
-    // target distribution: per doc the integer-exact bits score
-    // (source surprisal minus target surprisal over md5-hex-prefix
-    // hashed gram buckets — 256 buckets, broadcast both count tables,
-    // one explode -> broadcast-join -> doc aggregate; no floats).
-    "dsir_importance" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      Dsir.importanceBits(docs, docs.filter(col("lang") === "en"))
-    }),
-
-    // The action form of the DSIR screen (the report/keep pairing
-    // every dedup family here follows): resample the corpus toward
-    // the target by keeping docs whose importance is non-negative,
-    // reported as per-language survivor counts + surviving grams —
-    // what actually changes in the training mixture.
-    "dsir_select" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      Dsir.importanceBits(docs, docs.filter(col("lang") === "en"))
-        .filter(col("score_bits") >= 0)
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("kept_docs"),
-          sum(col("n_grams")).as("kept_grams"))
-    }),
-
-    // k-anonymity / l-diversity privacy audit: every (nation, market
-    // segment) quasi-identifier combination with its group size,
-    // distinct count of the sensitive balance-bucket, and both
-    // violation flags — one aggregate, all exact integers.
-    "k_anonymity" -> ((s, dir) =>
-      DataQuality.kAnonymity(T(s, dir, "customer"),
-        Seq("c_nationkey", "c_mktsegment"),
-        floor(col("c_acctbal") / 2000).cast("long"), k = 10L, l = 3L)),
-
-    // DPO/RLHF preference-pair construction: per prompt group the
-    // (chosen, rejected) extreme pair under a margin gate — chosen =
-    // top score (ties to the smallest id), rejected = bottom score
-    // (ties to the largest), both ends of ONE struct-extreme
-    // aggregate; no windows, no per-prompt sorts.
-    "preference_pairs" -> ((s, dir) =>
-      Alignment.preferencePairs(
-        T(s, dir, "documents").select(
-          pmod(col("doc_id"), lit(97)).as("prompt_id"),
-          col("doc_id").as("response_id"),
-          col("n_chars").as("score")),
-        minMargin = 5L)),
-
-    // Exact ROUGE-2 accounting over (candidate, reference) pairs: the
-    // planted every-50th-token-mutated copy against its original —
-    // clipped bigram overlap, candidate and reference totals, all
-    // exact integers (precision/recall are ratios of these three).
-    // Spark counts 8-byte gram hashes; the oracle recounts raw gram
-    // strings — the green row is also the collision audit.
-    "rouge_pair_counts" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      EvalMetrics.rougeNCounts(
-        plantedCopies(docs)
-          .select((col("doc_id") - PlantOffset).as("pair_id"),
-            col("text").as("cand_text"))
-          .join(docs.select(col("doc_id").as("pair_id"),
-            col("text").as("ref_text")), Seq("pair_id")),
-        n = 2)
-    }),
-
-    // HOPPING (sliding) event-time windows in batch: 1-hour windows
-    // every 30 minutes — each event lands in exactly two windows. The
-    // oracle replays the expansion arithmetically (each event's two
-    // half-hour-aligned window starts), so the window() operator's
-    // hop semantics are pinned value-exactly, complementing the
-    // tumbling time_window_agg and the streaming sliding specs.
-    "time_window_hopping" -> ((s, dir) => {
-      val ev = eventsMicros(s, dir)
-      ev.withColumn("event_ts", timestamp_micros(col("ts")))
-        .groupBy(window(col("event_ts"), "1 hour", "30 minutes"),
-          col("event_type"))
-        .agg(count(lit(1)).as("cnt"))
-        .select(col("window.start").cast("long").as("win_start_epoch"),
-          col("event_type"), col("cnt"))
-    }),
-
-    // GROUPING SETS with an explicit grouping_id — the general form
-    // cube/rollup specialize; pinned because the Expand-based plan is
-    // what a reporting layer generates.
-    "grouping_sets_agg" -> ((s, dir) => {
-      T(s, dir, "orders").createOrReplaceTempView("__orders_gs")
-      // grouped-out cells coalesce to a sentinel: the driver comparator
-      // cannot row-align NULL sort keys across engines (same fix as
-      // rollup_agg); gid keeps the sets distinguishable regardless
-      s.sql(
-        """SELECT coalesce(o_orderstatus, '(all)') AS status,
-          |  coalesce(o_orderpriority, '(all)') AS priority,
-          |  CAST(grouping_id(o_orderstatus, o_orderpriority) AS BIGINT)
-          |    AS gid,
-          |  count(*) AS cnt
-          |FROM __orders_gs
-          |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
-          |  (o_orderstatus), ())""".stripMargin)
-    }),
-
-    // Time-based RANGE window frame: per event, the user's trailing
-    // one-hour spend — rangeBetween over the epoch-micros ordering
-    // key, so equal timestamps are peers and the frame is TIME, not
-    // row count (window_running_sum pins the ROWS flavor). Amounts
-    // ride as integer cents (round(value*100) is exact in IEEE double
-    // for 2-decimal values in both engines), so the sums hash.
-    "trailing_hour_sum" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"))
-        .rangeBetween(-3600000000L, 0L)
-      eventsMicros(s, dir)
-        .select(col("event_id"), col("user_id"), col("ts"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .withColumn("trail_cents", sum(col("cents")).over(w))
-        .select(col("event_id"), col("user_id"),
-          col("ts").as("ts_us"), col("trail_cents"))
-    }),
-
-    // Cohort retention matrix: weekly cohorts by first event, distinct
-    // active users per (cohort, weeks-since) — integer week indices
-    // via `div` on epoch micros.
-    "cohort_retention" -> ((s, dir) =>
-      EventOps.cohortRetention(
-        eventsMicros(s, dir).select(col("user_id"), col("ts")))),
-
-    // Two-step conversion funnel: signup → purchase within one week
-    // of the user's FIRST signup.
-    "event_funnel" -> ((s, dir) =>
-      EventOps.conversionFunnel(
-        eventsMicros(s, dir)
-          .select(col("user_id"), col("event_type"), col("ts")),
-        "signup", "purchase")),
-
-    // As-of join composed from a window carry-forward (no range join,
-    // no self-join): every click paired with the most recent purchase
-    // at-or-before it by the same user. NULL (no prior purchase) → -1
-    // sentinel so no nullable column reaches the comparator. Oracled
-    // against DuckDB's native ASOF LEFT JOIN; micros for the same
-    // precision reason as sessionize.
-    "asof_prior_purchase" -> ((s, dir) =>
-      EventOps.withAsofTs(
-        eventsMicros(s, dir).select(col("event_id"), col("user_id"),
-          col("ts"), col("event_type")),
-        col("event_type") === "purchase", "purchase_ts")
-        .filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts").as("ts_us"),
-          coalesce(col("purchase_ts"), lit(-1L)).as("prior_purchase_us"))),
-
-    // The same as-of lookup through the NATIVE operator (AsofJoin
-    // logical node -> AsofJoinStrategy -> AsofJoinExec merge): each
-    // side shuffles on its own key and the join is one forward-only
-    // merge per partition. Oracle identical to asof_prior_purchase.
-    "asof_join_native" -> ((s, dir) => {
-      val ev = eventsMicros(s, dir).select(col("event_id"), col("user_id"),
-        col("ts"), col("event_type"))
-      graft.plans.Asof.joinBackward(
-        ev.filter(col("event_type") === "click"),
-        ev.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user_id"), col("ts").as("p_ts")),
-        "user_id", "p_user_id", "ts", "p_ts")
-        .select(col("event_id"), col("user_id"), col("ts").as("ts_us"),
-          coalesce(col("p_ts"), lit(-1L)).as("prior_purchase_us"))
-    }),
-
-    // Forward direction of the native operator: each click's NEXT
-    // purchase (smallest purchase ts >= click ts, same user).
-    "asof_next_purchase" -> ((s, dir) => {
-      val ev = eventsMicros(s, dir).select(col("event_id"), col("user_id"),
-        col("ts"), col("event_type"))
-      graft.plans.Asof.joinForward(
-        ev.filter(col("event_type") === "click"),
-        ev.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user_id"), col("ts").as("p_ts")),
-        "user_id", "p_user_id", "ts", "p_ts")
-        .select(col("event_id"), col("user_id"), col("ts").as("ts_us"),
-          coalesce(col("p_ts"), lit(-1L)).as("next_purchase_us"))
-    }),
-
-    // Overlapping token-window chunking (64-token windows, stride 48) —
-    // scan → generate, no shuffle. repartition: single-file fixture
-    // (cf. minhash_candidates note).
-    "doc_chunks" -> ((s, dir) =>
-      Chunking.chunk(T(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism))),
-
-    // Deterministic sequence packing into ~2048-token packs per source
-    // (exclusive running token sum div target — reproducible at any
-    // parallelism, unlike a greedy stateful packer).
-    "sequence_packing" -> ((s, dir) =>
-      Chunking.packSequences(T(s, dir, "documents"))),
-
-    // Corpus top-50 terms by document frequency (partial-agg counts +
-    // TakeOrdered top-k — never a global sort).
-    "term_doc_freq" -> ((s, dir) =>
-      TextAnalysis.termDocFreq(T(s, dir, "documents"))),
-
-    // Eval-set decontamination: training docs (id < 480) sharing a
-    // 3-gram with any benchmark doc (id >= 480), with shared-gram
-    // counts. Benchmark side broadcast; no cross join.
-    "decontaminate" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      TextDedup.contaminationHits(
-        docs.filter(col("doc_id") < 480),
-        docs.filter(col("doc_id") >= 480), n = 3)
-    }),
-
-    // The decontamination ACTION: training docs that survive the
-    // screen (share no 3-gram with any benchmark doc) — the corpus
-    // that actually ships to training. Anti-join on the distinct
-    // contaminated ids.
-    "decontaminate_keep" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      TextDedup.decontaminateDrop(
-        docs.filter(col("doc_id") < 480),
-        docs.filter(col("doc_id") >= 480), n = 3)
-        .select(col("doc_id"))
-    }),
-
-    // FRACTIONAL decontamination (the published large-model practice:
-    // drop a training doc when a big share of its n-grams appears in
-    // the benchmark UNION, not on any single shared gram): per train
-    // doc the exact (grams_total, grams_known) pair plus the
-    // cross-multiplied keep verdict at 20%.
-    "decontaminate_frac" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      TextDedup.ngramNovelty(
-        docs.filter(col("doc_id") < 480),
-        docs.filter(col("doc_id") >= 480), n = 3)
-        .withColumn("keep",
-          col("grams_known") * 100 < col("grams_total") * 20)
-    }),
-
-    // Contamination PROVENANCE: per benchmark doc, how many training
-    // docs share grams with it, the total leakage mass, and the
-    // single worst offender (group-wise argmax via the max-struct
-    // idiom, ties to the smaller doc_id) — the table an eval owner
-    // reads to decide whether the benchmark or the corpus moves.
-    "contamination_report" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      TextDedup.contaminationHits(
-          docs.filter(col("doc_id") < 480),
-          docs.filter(col("doc_id") >= 480), n = 3)
-        .groupBy(col("eval_id"))
-        .agg(count(lit(1)).as("n_contaminated_train"),
-          sum(col("shared_ngrams")).as("total_shared"),
-          max(struct(col("shared_ngrams"), (-col("doc_id")).as("nd")))
-            .as("s"))
-        .select(col("eval_id"), col("n_contaminated_train"),
-          col("total_shared"),
-          (-col("s.nd")).as("top_train_doc"),
-          col("s.shared_ngrams").as("top_shared"))
-        .orderBy("eval_id")
-    }),
-
-    // Bloom-pruned join (the runtime-filter pattern as a first-class
-    // operator): fact rows that can't match the filtered dim die at
-    // the scan, BEFORE the join shuffle; the exact join over survivors
-    // makes the result row-identical to the plain join — which is
-    // exactly what the oracle replays.
-    "bloom_prune_join" -> ((s, dir) => {
-      val build = T(s, dir, "customer")
-        .filter(col("c_acctbal") > 9000.0)
-        .select(col("c_custkey"), col("c_acctbal"))
-      BloomPrune.prunedEquiJoin(
-        T(s, dir, "orders").select("o_orderkey", "o_custkey"),
-        build, "o_custkey", "c_custkey")
-        .select(col("o_orderkey"), col("o_custkey"), col("c_acctbal"))
-    }),
-
-    // Binned range join: lineitems shipped within 14 days of each
-    // big-ticket order's date — an interval×point join executed as an
-    // EQUI-join on a quantized day bin (+ exact BETWEEN residual),
-    // never the BNLJ/cartesian Spark would plan for a bare inequality
-    // condition.
-    "range_join_binned" -> ((s, dir) => {
-      val epoch = lit(java.sql.Date.valueOf("1970-01-01"))
-      val intervals = T(s, dir, "orders")
-        .filter(col("o_totalprice") > 495000.0)
-        .select(col("o_orderkey"),
-          datediff(col("o_orderdate"), epoch).cast("long").as("start_day"))
-        .withColumn("end_day", col("start_day") + 13)
-      val points = T(s, dir, "lineitem")
-        .select(col("l_quantity"),
-          datediff(col("l_shipdate"), epoch).cast("long").as("ship_day"))
-      RangeJoin.pointInInterval(points, intervals,
-        col("ship_day"), col("start_day"), col("end_day"), binWidth = 14L)
-        .groupBy("o_orderkey")
-        .agg(count(lit(1)).as("n_shipped"), sum(col("l_quantity")).as("sum_qty"))
-    }),
-
-    // The same interval join written NAIVELY — no explicit binning.
-    // The RewriteRangeJoin optimizer rule (GraftExtensions) turns the
-    // inequality-only join into the binned equi-join plan on its own;
-    // PlanInvariantsSpec pins that no BNLJ/cartesian survives here.
-    "range_join_auto" -> ((s, dir) => {
-      val epoch = lit(java.sql.Date.valueOf("1970-01-01"))
-      val intervals = T(s, dir, "orders")
-        .filter(col("o_totalprice") > 495000.0)
-        .select(col("o_orderkey"),
-          datediff(col("o_orderdate"), epoch).cast("long").as("start_day"))
-        .withColumn("end_day", col("start_day") + 13)
-      val points = T(s, dir, "lineitem")
-        .select(col("l_quantity"),
-          datediff(col("l_shipdate"), epoch).cast("long").as("ship_day"))
-      points.join(intervals,
-        col("ship_day") >= col("start_day") &&
-          col("ship_day") <= col("end_day"))
-        .groupBy("o_orderkey")
-        .agg(count(lit(1)).as("n_shipped"), sum(col("l_quantity")).as("sum_qty"))
-    }),
-
-    // Per-document top-5 TF-IDF terms; integer-exact output, the IDF
-    // float only orders rows (rounded to 4dp before ranking so an
-    // engine ulp can't flip it).
-    "tfidf_top_terms" -> ((s, dir) =>
-      TextAnalysis.tfidfTopTerms(T(s, dir, "documents"), k = 5)),
-
-    // CUBE over the same keys rollup_agg rolls up — all four grouping
-    // sets in one Expand + hash aggregate pass.
-    "cube_agg" -> ((s, dir) =>
-      T(s, dir, "lineitem")
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("cnt"))
-        .select(coalesce(col("l_returnflag"), lit("(all)")).as("returnflag"),
-          coalesce(col("l_linestatus"), lit("(all)")).as("linestatus"),
-          col("sum_qty"), col("cnt"))),
-
-    // Pivot (wide conditional aggregation): order counts per status ×
-    // priority. Values enumerated so the output schema is static; the
-    // absent-combination NULLs are coalesced to 0 to match the
-    // conditional-sum oracle.
-    "pivot_agg" -> ((s, dir) => {
-      val prios = Seq("1-URGENT" -> "urgent", "2-HIGH" -> "high",
-        "3-MEDIUM" -> "medium", "4-NOT SPECIFIED" -> "not_specified",
-        "5-LOW" -> "low")
-      T(s, dir, "orders")
-        .groupBy(col("o_orderstatus"))
-        .pivot("o_orderpriority", prios.map(_._1))
-        .agg(count(lit(1)))
-        .select(col("o_orderstatus") +: prios.map { case (v, a) =>
-          coalesce(col(s"`$v`"), lit(0L)).as(a)
-        }: _*)
-    }),
-
-    // Weighted systematic sample: exactly 20 docs per language,
-    // probability proportional to n_chars, deterministic. Two-tier PPS
-    // (certainty rows + fixed-step residual) so heavy rows can't
-    // collapse the sample; integer-exact in both engines.
-    "sample_weighted" -> ((s, dir) =>
-      Sampling.systematicByWeight(
-        T(s, dir, "documents").select("doc_id", "lang", "n_chars"),
-        col("lang"), col("n_chars"), col("doc_id"), k = 20)),
-
-    // MERGE-style change application: one anti-join + union pass turns
-    // (snapshot, change set) into the next snapshot. The synthetic
-    // change set updates %5 keys, deletes %7 keys, inserts shifted %11
-    // keys — each key at most one op (delete wins over update).
-    "upsert_apply" -> ((s, dir) => {
-      val base = T(s, dir, "customer")
-        .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
-      Merge.applyChanges(base, upsertChanges(base), "c_custkey")
-    }),
-
-    // Snapshot diff: FULL OUTER join + payload comparison classifies
-    // every key as I/U/D; unchanged keys emit nothing. Diffing the
-    // upsert result against its base must recover exactly the change
-    // set's ops — which is what the oracle independently derives.
-    "snapshot_diff" -> ((s, dir) => {
-      val base = T(s, dir, "customer")
-        .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
-      Merge.diff(base, Merge.applyChanges(base, upsertChanges(base),
-        "c_custkey"), "c_custkey")
-    }),
-
-    // Type-2 SCD history: fold the mutated "today" snapshot (same
-    // deterministic change set as upsert_apply/snapshot_diff) into the
-    // seeded history — changed/deleted keys close at version 2,
-    // changed/new keys open at version 2, unchanged rows stay open
-    // from version 1. One full-outer equi-join of the open slice; the
-    // oracle re-derives the intervals from the replayed snapshots.
-    "scd2_history" -> ((s, dir) => {
-      val base = T(s, dir, "customer")
-        .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
-      val v2 = Merge.applyChanges(base, upsertChanges(base), "c_custkey")
-      Merge.scd2Apply(Merge.scd2Init(base, 1L), v2, "c_custkey", 2L)
-        // open rows carry valid_to NULL in the operator; the dump uses
-        // a 0 sentinel because a NULL numeric reads as NaN on both
-        // sides of the driver compare and NaN != NaN fails it
-        .withColumn("valid_to", coalesce(col("valid_to"), lit(0L)))
-    }),
-
-    // Collocation mining: top-50 adjacent-token pairs by the PMI
-    // ratio c_xy·N/(c_x·c_y) — one IEEE division of exact integer
-    // products, so score and top-k membership replay bit-identically;
-    // the multiword-expression pass a tokenizer pipeline runs first.
-    "collocations_topk" -> ((s, dir) =>
-      TextAnalysis.collocationsTopK(T(s, dir, "documents"),
-        k = 50, minCount = 5)),
-
-    // URL canonicalization + dedup: two deterministic messy variants
-    // of every doc's URL (tracking params, fragment, mixed-case host,
-    // default port, trailing slash, shuffled params) must collapse to
-    // ONE canonical form — n_variants == 2 everywhere is the proof.
-    "url_dedup" -> ((s, dir) => {
-      val id = col("doc_id")
-      val messy = concat(lit("HTTPS://Site"), pmod(id, lit(7)),
-        lit(".Example.COM:443/d/"), id,
-        lit("/?utm_source=feed&b=2&a=1#sec"), id)
-      val clean = concat(lit("https://site"), pmod(id, lit(7)),
-        lit(".example.com/d/"), id, lit("?a=1&b=2"))
-      T(s, dir, "documents")
-        .select(id, explode(array(messy, clean)).as("url"))
-        .select(UrlOps.canonicalizeUrl(col("url")).as("canonical_url"))
-        .groupBy("canonical_url")
-        .agg(count(lit(1)).as("n_variants"))
-        .orderBy("canonical_url")
-    }),
-
-    // Reference-LM surprisal (the CCNet perplexity-filter shape):
-    // docs with doc_id % 4 == 0 form the clean reference LM; the rest
-    // score against it — known bigrams at reference bit cost, unseen
-    // ones at a flat OOV penalty, all exact integers.
-    "ref_surprisal" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      TextAnalysis.refBigramSurprisal(
-        docs.filter(col("doc_id") % 4 =!= 0),
-        docs.filter(col("doc_id") % 4 === 0))
-        .orderBy("doc_id")
-    }),
-
-    // Incremental sessionization (the nightly-batch shape): fold the
-    // second half-month of events into the first half's session
-    // TABLE — prior sessions compressed to one pseudo-event each —
-    // and the oracle is the full batch recompute over all events, so
-    // the gate checks incremental == batch EXACTLY.
-    "sessionize_incremental" -> ((s, dir) => {
-      val ev = eventsMicros(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"))
-      val cutoffUs = 1705363200000000L // 2024-01-16T00:00Z
-      val gapUs = EventOps.SessionGapNs / 1000
-      val prior = EventOps.sessionSummaries(
-        ev.filter(col("ts") < cutoffUs), gapUs)
-      EventOps.sessionsIncremental(prior,
-          ev.filter(col("ts") >= cutoffUs), gapUs)
-        .orderBy("user_id", "session_start")
-    }),
-
-    // Mutual top-match alignment (the bitext-mining shape): even-id
-    // vectors vs odd-id vectors, integer-dot scores, keep (a, b) only
-    // when each is the other's argmax — both argmaxes map-side-
-    // combinable aggregates, hub vectors die by construction.
-    // (vec_id < 2000 caps the brute demo at a fixed pair budget —
-    // the triangle_count/ann_matryoshka fixed-size precedent; the
-    // production path is Similarity.mutualArgmax over an ANN stage's
-    // candidates, linear in the candidate list)
-    "mutual_top_match" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings").filter(col("vec_id") < 2000)
-      Similarity.mutualTopMatch(
-        emb.filter(col("vec_id") % 2 === 0),
-        emb.filter(col("vec_id") % 2 === 1))
-        .orderBy("a_id")
-    }),
-
-    // Star-schema revenue rollup (the TPC-H Q5 shape): lineitem ⋈
-    // orders ⋈ customer ⋈ nation ⋈ region, revenue in fixed-point
-    // DECIMAL(38,0) (price·(10⁴−disc) scaled units — a double sum
-    // would never replay). The fact-fact join shuffles; the dims ride
-    // broadcasts (nation/region pinned, customer via AQE).
-    // revenue_num leaves the query as a canonical digit STRING: its
-    // exact value exceeds int64/exact-float64 range, and wide decimals
-    // in a final schema hash differently across engines (r15 gate
-    // fail) — the digit string is representation-free.
-    "star_revenue" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem").select(col("l_orderkey"),
-        round(col("l_extendedprice") * 10000).cast("decimal(38,0)")
-          .as("__p"),
-        round(col("l_discount") * 10000).cast("decimal(38,0)")
-          .as("__d"))
-      li.join(T(s, dir, "orders").select(col("o_orderkey"),
-            col("o_custkey"), year(col("o_orderdate")).as("o_year")),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(T(s, dir, "customer").select(col("c_custkey"),
-          col("c_nationkey")), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(T(s, dir, "nation").select(col("n_nationkey"),
-          col("n_regionkey"))),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(T(s, dir, "region")),
-          col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"), col("o_year"))
-        .agg(sum((col("__p") * (lit(10000) - col("__d")))
-            .cast("decimal(38,0)")).cast("decimal(38,0)")
-            .cast("string").as("revenue_num"),
-          count(lit(1)).as("n_items"))
-        .orderBy("r_name", "o_year")
-    }),
-
-    // Top ordered 3-step event paths: one ordered per-user array,
-    // sliding triples generated array-side (zero joins), exact
-    // counts — the path analysis above the Markov matrix.
-    "event_paths" -> ((s, dir) =>
-      EventOps.topPaths(
-        eventsMicros(s, dir)
-          .select(col("user_id"), col("ts"), col("event_id"),
-            col("event_type")),
-        k = 50, minCount = 5)),
-
-    // Embedding-norm outlier census: int8-quantized (the SemDeDup
-    // convention) exact integer norm² per vector, then the per-label
-    // median/MAD census — the "are these embeddings healthy" check
-    // before any ANN index build.
-    "embedding_outliers" -> ((s, dir) => {
-      val q = "CAST(greatest(least(floor(CAST(v AS DOUBLE) * 64), " +
-        "127), -128) AS BIGINT)"
-      val norm2 = expr("aggregate(transform(embedding, v -> " + q +
-        "), CAST(0 AS BIGINT), (a, x) -> a + x * x)")
-      DataQuality.madOutliers(
-        T(s, dir, "embeddings").filter(col("embedding").isNotNull)
-          .select(col("label"), norm2.as("norm2")),
-        "label", "norm2")
-        .orderBy("label")
-    }),
-
-    // Three-step ordered funnel (view → click → purchase, each step
-    // within a week of the previous anchor, anchors at the earliest
-    // qualifying event): per stage one filtered scan + one user join
-    // + one min — the surviving-user frame only shrinks.
-    "funnel_3step" -> ((s, dir) =>
-      EventOps.funnelSteps(
-        eventsMicros(s, dir)
-          .select(col("user_id"), col("ts"), col("event_type")),
-        steps = Seq("view", "click", "purchase"))),
-
-    // Per-group OLS trend: slope of extended price on quantity per
-    // return flag, carried as exact DECIMAL(38,0) numerator and
-    // denominator plus their single IEEE division; zero-variance
-    // groups flag degenerate instead of emitting NULL. The exact
-    // num/den leave as canonical digit STRINGS (beyond int64 range —
-    // wide decimals in a final schema are hash-unstable across
-    // engines, the r15 gate lesson).
-    "ols_trend" -> ((s, dir) =>
-      Profiling.olsTrend(T(s, dir, "lineitem"),
-        "l_returnflag", "l_quantity", "l_extendedprice")
-        .withColumn("slope_num", col("slope_num").cast("string"))
-        .withColumn("slope_den", col("slope_den").cast("string"))
-        .orderBy("l_returnflag")),
-
-    // Market-basket pair rules: exact support, directional
-    // confidence and lift for item pairs co-occurring in orders —
-    // pair work bounded by C(basket, 2) via the order-key self-join,
-    // every score one IEEE division of exact BIGINTs.
-    "basket_pairs" -> ((s, dir) =>
-      Association.pairRules(T(s, dir, "lineitem"),
-        minSupport = 3, k = 100)),
-
-    // Corpus compression under the learned BPE merges: weighted
-    // symbol counts before vs after all BpeRounds merges, off the
-    // same one-pass vocabulary as bpe_merges — the "is this tokenizer
-    // worth its vocab slots" accounting. Flat (driver-side) trainer
-    // per the bpe_encode/bpe_pack lifecycle: one bounded vocabulary
-    // collect replaces 2·rounds kilobyte-frame driver jobs (r22;
-    // spec-pinned identical to the distributed mine).
-    "bpe_compression" -> ((s, dir) =>
-      BpeMiner.compressionSummaryFlat(T(s, dir, "documents"),
-        rounds = BpeRounds)),
-
-    // Skip-gram co-occurrence counts (window ±2, forward pairs): the
-    // (center, context, dist) table a word2vec/GloVe trainer
-    // consumes — both offsets generated from ONE materialized token
-    // array, zero joins, one map-side-combinable count.
-    "skipgram_counts" -> ((s, dir) =>
-      TextAnalysis.skipgramCounts(T(s, dir, "documents"),
-        maxDist = 2, k = 100, minCount = 5)),
-
-    // Ingest-telemetry spike detection, EWMA flavor: each hourly
-    // bucket vs the 2^k-weighted sum of its previous 8 OBSERVED
-    // buckets — scaled-integer weights, cross-multiplied verdict, no
-    // float accumulation, null until a full history exists.
-    // (ewma_num coalesces to 0 for the incomplete-history rows AFTER
-    // the spike verdict: a null in the dump would be sort-unstable in
-    // any engine's row-order-insensitive compare, and 0 is
-    // unambiguous — observed history always sums to ≥ 255)
-    "ewma_anomaly" -> ((s, dir) =>
-      Anomaly.ewmaSpikes(eventsMicros(s, dir)
-          .select(col("event_type"), col("ts")))
-        .select(col("event_type"), col("bucket"), col("cnt"),
-          coalesce(col("ewma_num"), lit(0L)).as("ewma_num"),
-          col("is_spike"))
-        .orderBy("event_type", "bucket")),
-
-    // Seasonal flavor: each bucket vs the leave-one-out mean of its
-    // (key, hour-of-day) slot — cnt·(n−1) > 2·(Σ−cnt) exact.
-    "seasonal_anomaly" -> ((s, dir) =>
-      Anomaly.seasonalSpikes(eventsMicros(s, dir)
-          .select(col("event_type"), col("ts")))
-        .select(col("event_type"), col("bucket"), col("cnt"),
-          col("slot"), col("base_cnt"), col("base_n"), col("is_spike"))
-        .orderBy("event_type", "bucket")),
-
-    // Entity-resolution golden records: the EDJoin-blocked fuzzy
-    // match pairs connect into clusters by transitive closure
-    // (pointer-jumping components), each cluster collapsing to one
-    // record under the explicit survivorship rule (longest name, ties
-    // to the smallest id). Unmatched records stay singletons.
-    "er_golden_record" -> ((s, dir) => {
-      val records = fuzzyLeft(s, dir)
-        .select(col("l_id").as("id"), col("l_name").as("name"))
-        .unionByName(fuzzyProbes(s, dir)
-          .select(col("r_id").as("id"), col("r_name").as("name")))
-      val pairs = FuzzyJoin.editBlockedJoin(
-        fuzzyLeft(s, dir), fuzzyProbes(s, dir), maxDist = 1)
-        .select(col("l_id"), col("r_id"))
-      EntityResolution.goldenRecords(records, pairs)
-        .orderBy("cluster_id")
-    }),
-
-    // HyperBall neighborhood census over a deterministic ring+chord
-    // graph (doc_id % 400 with +1 and +7 edges): exact pairs-within-t
-    // per radius, plus the flag that the HLL-register BSP estimate
-    // (the path a 10^11-node graph would run — sparse per-node
-    // registers, one join + max-merge per hop, never a pair table)
-    // landed within 10%. The registers never reach the comparator;
-    // the audit flag does (the planted-recall convention).
-    "hyperball_reach" -> ((s, dir) => {
-      val nd = T(s, dir, "documents")
-        .select(pmod(col("doc_id"), lit(400)).as("v")).distinct()
-      val edges = nd.select(col("v").as("src"),
-          pmod(col("v") + 1, lit(400)).as("dst"))
-        .unionByName(nd.select(col("v").as("src"),
-          pmod(col("v") + 7, lit(400)).as("dst")))
-      HyperBall.auditedNeighborhood(edges, maxT = 3, p = 6, tolPct = 10)
-        .orderBy("t")
-    }),
-
-    // Community detection by synchronous label propagation (3 rounds,
-    // most-frequent-neighbor label, ties to the smallest) over the
-    // supplier co-occurrence graph — one equi-join + one map-side-
-    // combinable count per round, adjacency checkpointed once; the
-    // oracle unrolls all three rounds.
-    "label_propagation" -> ((s, dir) => {
-      val sp = T(s, dir, "lineitem").filter(col("l_orderkey") < 4000)
-        .select(col("l_orderkey"), col("l_suppkey")).distinct()
-      val edges = sp.as("x").join(sp.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-            col("x.l_suppkey") < col("y.l_suppkey"))
-        .select(col("x.l_suppkey").as("src"),
-          col("y.l_suppkey").as("dst"))
-      LabelProp.propagate(edges, rounds = 3).orderBy("node")
-    }),
-
-    // The first BpeRounds tokenizer-training merges: per round the
-    // most frequent adjacent symbol pair over the (word, count)
-    // vocabulary, applied leftmost-non-overlapping before the next
-    // recount; merged symbols ride single private-use placeholder
-    // chars and expand back in the output. ONE corpus tokenize; every
-    // round runs on the vocabulary.
-    // Flat (driver-side) trainer — one bounded vocabulary collect
-    // instead of `rounds` checkpointed top-pair jobs (r22; spec-pinned
-    // identical to the distributed mine, same lifecycle as bpe_encode).
-    "bpe_merges" -> ((s, dir) =>
-      BpeMiner.topMergesFlat(T(s, dir, "documents"), rounds = BpeRounds)),
-
-    // The merge-depth return curve: corpus symbol count after each
-    // successive merge vs the constant pre-merge total — "how many
-    // merges are worth their vocab slots". Every row is a bounded
-    // vocabulary aggregate; symbols_after is a true per-round recount
-    // (pair counts include overlaps, so no subtraction identity).
-    // Flat (driver-side) trainer: the per-round symbols_after recount
-    // runs in memory over the collected vocabulary (r22; spec-pinned).
-    "bpe_merge_curve" -> ((s, dir) =>
-      BpeMiner.mergeCurveFlat(T(s, dir, "documents"), rounds = BpeRounds)),
-
-    // Codepoint-class fallback tokenization census: spaced-script
-    // runs count one token each, space-free-script chars one token
-    // each — the honest budget column when ws_tok_ok is false, the
-    // exact whitespace count when text is latin prose. Scan-shaped.
-    "token_fallback_counts" -> ((s, dir) =>
-      TextAnalysis.fallbackTokenStats(T(s, dir, "documents"))),
-
-    // Tokenizer ENCODE at a REAL merge depth (256 rounds, planted
-    // vocabulary diversity — see BpeDeepRounds): per-document token
-    // ids (code points; merged symbols ride their merge-rank
-    // placeholder codepoints, U+E000+) as a hash-friendly dump. The
-    // trainer is the hybrid real tokenizer trainers use (one
-    // distributed corpus pass → vocabulary → in-memory merge loop);
-    // the encode is a FLAT plan — scan → ONE native priority-merge
-    // expression — whose node count is independent of merge depth
-    // (VERDICT r17 #1; the replayed chain was O(rounds) plan nodes).
-    "bpe_encode" -> ((s, dir) =>
-      BpeMiner.encodeFlat(bpeDeepDocs(T(s, dir, "documents")),
-        rounds = BpeDeepRounds)
-        .orderBy("doc_id")),
-
-    // Sequence packing on ENCODED lengths at the same real depth: the
-    // bpe_encode token counts through the same two-level prefix-sum
-    // pack assignment as sequence_packing — "pack on what the
-    // tokenizer will actually emit", deterministic at any parallelism.
-    "bpe_pack" -> ((s, dir) =>
-      Chunking.packByLength(
-        BpeMiner.encodedLengthsFlat(bpeDeepDocs(T(s, dir, "documents")),
-          rounds = BpeDeepRounds),
-        targetTokens = 512)
-        .orderBy("doc_id")),
-
-    // Tokenizer-fertility accounting per language: encoded tokens vs
-    // whitespace words vs normalized chars — the "how expensive is
-    // this tokenizer on each language" table a multilingual pipeline
-    // reads before setting mixture weights. Exact integer sums plus
-    // one guarded integer ratio; the learned merges replay through
-    // the shared unrolled-CTE chain.
-    "bpe_fertility" -> ((s, dir) => {
-      val docs = bpeDeepDocs(T(s, dir, "documents"))
-      val words = docs.filter(col("text").isNotNull).select(
-        col("doc_id"), col("lang"),
-        size(filter(split(TextDedup.normText(col("text")), " "),
-          w => length(w) > 0)).cast("long").as("n_words"),
-        length(TextDedup.normText(col("text"))).cast("long")
-          .as("n_chars"),
-        TextAnalysis.wsTokOk(col("text")).as("ws_tok_ok"))
-      words
-        .join(BpeMiner.encodedLengthsFlat(docs, rounds = BpeDeepRounds)
-          .select(col("doc_id"), col("n_tokens")), Seq("doc_id"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          // the honesty census: fertility over a language whose docs
-          // are majority space-free-script is measuring word salad —
-          // the count of flagged docs rides the summary in-band
-          sum(when(!col("ws_tok_ok"), 1L).otherwise(0L))
-            .as("n_spacefree_docs"),
-          sum(col("n_words")).as("total_words"),
-          sum(col("n_tokens")).as("total_tokens"),
-          sum(col("n_chars")).as("total_chars"))
-        .withColumn("fertility_pct",
-          when(col("total_words") > 0,
-            expr("total_tokens * 100 div total_words")))
-    }),
-
-    // Fertility under an IMPORTED tokenizer (VERDICT r18 missing #3):
-    // the committed GPT-2-dialect merges.txt fixture flows through
-    // the REAL import path — parseMergesTxt → fromSymbolMerges
-    // (concatenation products, interned ids) → the flat
-    // priority-merge count kernel — over a planted corpus whose
-    // words come from a closed vocabulary with hand-computed token
-    // counts. The oracle replays the corpus construction and the
-    // hand counts (a 5-row VALUES table), so every output column is
-    // exact-replayed even though the symbol dialect itself has no
-    // SQL rendering.
-    "bpe_fertility_imported" -> ((s, dir) => {
-      val docs = importedFertilityDocs(T(s, dir, "documents"))
-      val table = graft.functions.BpeMergeTable.fromSymbolMerges(
-        BpeMiner.loadMergesResource("/graft/merges_fixture.txt"))
-      // unlike bpe_fertility (whose encode hangs off the mined-merge
-      // chain), the imported count is a pure expression — words,
-      // chars and tokens all come off ONE scan, zero joins
-      docs.select(col("lang"),
-          size(filter(split(TextDedup.normText(col("text")), " "),
-            w => length(w) > 0)).cast("long").as("n_words"),
-          length(TextDedup.normText(col("text"))).cast("long")
-            .as("n_chars"),
-          graft.functions.BpeExprs
-            .encodeCount(TextDedup.normText(col("text")), table)
-            .as("n_tokens"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_words")).as("total_words"),
-          sum(col("n_tokens")).as("total_tokens"),
-          sum(col("n_chars")).as("total_chars"))
-        .withColumn("fertility_pct",
-          when(col("total_words") > 0,
-            expr("total_tokens * 100 div total_words")))
-    }),
-
-    // BYTE-LEVEL imported fertility (VERDICT r18 stretch #8): the
-    // same planted corpus through the REAL GPT-2 pre-tokenization —
-    // regex split, byte→unicode map (space → Ġ), per-pretoken
-    // priority merge over the committed byte-dialect fixture. A
-    // doc's FIRST word has no leading space, so its count differs
-    // from later occurrences of the same word (Ġthe vs the) — the
-    // oracle's hand table carries (tok_first, tok_rest) per word and
-    // selects by position, pinning exactly the mechanic the
-    // whitespace-words approximation cannot express.
-    "bpe_bytelevel_fertility" -> ((s, dir) => {
-      val docs = importedFertilityDocs(T(s, dir, "documents"))
-      val table = graft.functions.BpeMergeTable.fromSymbolMerges(
-        BpeMiner.loadMergesResource(
-          "/graft/merges_fixture_bytelevel.txt"))
-      docs.select(col("doc_id"), col("lang"),
-          size(split(col("text"), " ")).cast("long").as("n_words"),
-          graft.functions.Gpt2ByteLevel.count(col("text"), table)
-            .as("n_tokens"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_words")).as("total_words"),
-          sum(col("n_tokens")).as("total_tokens"))
-        .withColumn("fertility_pct",
-          when(col("total_words") > 0,
-            expr("total_tokens * 100 div total_words")))
-    }),
-
-    // Byte-level TRAINED fertility (VERDICT r19 #3): the full
-    // train→encode→fertility lifecycle at byte level, in-engine. The
-    // trainer (BpeMiner.trainByteLevelMergesLocal) learns 8
-    // GPT-2-dialect merges from the planted corpus restricted to
-    // doc_id < 500 — exactly the sf0.01 corpus, so the learned table
-    // is IDENTICAL at every sf >= 0.01 and the oracle's hand table
-    // stays valid under the bench's sf0.1 run. The hand table (and
-    // the rank-parity spec's naive reference) derive the full merge
-    // sequence: (h,e) 2397 → (t,he) 2397 → (a,b) 2394 → (z,z) 1598 →
-    // (ab,ab) 1596 → (Ġ,the) 1398 → (q,x) 799 → (qx,z) 799 — the
-    // last two winning a four-way 799 tie on (l ASC, r ASC)
-    // codepoint order, which pins the tie-break contract itself.
-    "bpe_bytelevel_trained_fertility" -> ((s, dir) => {
-      val docs = importedFertilityDocs(T(s, dir, "documents"))
-      val table = BpeMiner.byteLevelTableFor(
-        docs.filter(col("doc_id") < 500), rounds = 8)
-      docs.select(col("doc_id"), col("lang"),
-          size(split(col("text"), " ")).cast("long").as("n_words"),
-          graft.functions.Gpt2ByteLevel.count(col("text"), table)
-            .as("n_tokens"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_words")).as("total_words"),
-          sum(col("n_tokens")).as("total_tokens"))
-        .withColumn("fertility_pct",
-          when(col("total_words") > 0,
-            expr("total_tokens * 100 div total_words")))
-    }),
-
-    // Unigram-LM (SentencePiece-family) fertility + the BPE-vs-unigram
-    // comparison (VERDICT r19 #6): the unigram trainer
-    // (UnigramLm.trainLocal — substring seed, hard-EM, count prune,
-    // all exact integers) learns its model from docs 0..499 (the
-    // sf-stable slice, the byte-level-trainer convention), Viterbi
-    // encode runs as one codegen'd expression, and the same scan
-    // carries the imported word-level BPE count — so the
-    // tokenizer-choice comparison a tokenizer team actually makes is
-    // ONE query. Hand-derivable model: the seed's top multi-char
-    // pieces keep {the, qxz, ab, abab, zz, ...}; EM segments
-    // the→[the], qxz→[qxz], ababab→[ab,abab] (equal-probability tie
-    // → longer LAST piece), zzz→[z,zz] ('zzz' loses the 16-piece
-    // seed cut to alphabetically-earlier 799-count peers — the seed
-    // tie-break pinned), thethe→[the,the].
-    "unigram_fertility" -> ((s, dir) => {
-      val docs = importedFertilityDocs(T(s, dir, "documents"))
-      val model = graft.ops.UnigramLm.trainLocal(
-        docs.filter(col("doc_id") < 500))
-      val bpeTable = graft.functions.BpeMergeTable.fromSymbolMerges(
-        BpeMiner.loadMergesResource("/graft/merges_fixture.txt"))
-      docs.select(col("lang"),
-          size(split(col("text"), " ")).cast("long").as("n_words"),
-          graft.functions.UnigramExprs
-            .countTokens(TextDedup.normText(col("text")), model)
-            .as("n_tok_unigram"),
-          graft.functions.BpeExprs
-            .encodeCount(TextDedup.normText(col("text")), bpeTable)
-            .as("n_tok_bpe"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_words")).as("total_words"),
-          sum(col("n_tok_unigram")).as("total_tokens_unigram"),
-          sum(col("n_tok_bpe")).as("total_tokens_bpe"))
-        .withColumn("fertility_unigram_pct",
-          when(col("total_words") > 0,
-            expr("total_tokens_unigram * 100 div total_words")))
-        .withColumn("fertility_bpe_pct",
-          when(col("total_words") > 0,
-            expr("total_tokens_bpe * 100 div total_words")))
-    }),
-
-    // First-order Markov transition matrix over per-user event
-    // sequences: exact (from, to) counts off ONE sessionize-shaped
-    // window shuffle, with P(to|from) as a single IEEE division of
-    // two exact BIGINTs — the behavioral-model fit analytics runs on
-    // a clickstream.
-    "markov_transitions" -> ((s, dir) =>
-      EventOps.markovTransitions(
-        eventsMicros(s, dir).select(col("event_id"), col("user_id"),
-          col("ts"), col("event_type")))
-        .orderBy("from_type", "to_type")),
-
-    // Exact pairwise covariance (scaled fixed-point, DECIMAL(38,0)
-    // throughout): the feature-correlation screen before training a
-    // quality classifier — one map-side-combined pass computes every
-    // Σx/Σxy; a double sum would never replay across engines. cov_num
-    // (up to ~e27) leaves as a canonical digit STRING — wide decimals
-    // in a final schema are hash-unstable across engines (r15 gate).
-    "cov_matrix" -> ((s, dir) =>
-      // NOT spread: Catalyst eliminates a round-robin repartition
-      // directly below the global moment aggregate (verified in the
-      // r21 plan capture — the exchange never appears), so a spread
-      // here is a dead no-op; the apparent probe win was noise
-      Profiling.covMatrix(T(s, dir, "lineitem"),
-        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
-        .withColumn("cov_num", col("cov_num").cast("string"))
-        .orderBy("x_col", "y_col")),
-
-    // 2-D Pareto frontier (skyline) of parts under (min price, max
-    // size): the "best tradeoff" rows via group + tiny running-max
-    // window — strict dominance without a self-join.
-    "pareto_frontier" -> ((s, dir) =>
-      Profiling.paretoFrontier(T(s, dir, "part"),
-        "p_retailprice", "p_size")
-        .select(col("p_partkey"), col("p_retailprice"), col("p_size"))
-        .orderBy("p_retailprice", "p_size", "p_partkey")),
-
-    // Water-filling token-budget allocation across sources: small
-    // sources keep all their tokens, the rest split the remainder to
-    // one exact water level — all-BIGINT cross-multiplication, the
-    // sub-token remainder dealt deterministically, so Σalloc ==
-    // min(budget, Σcap) replays bit-identically.
-    "mixture_weights" -> ((s, dir) => {
-      val caps = T(s, dir, "documents")
-        .filter(length(trim(col("text"))) > 0)
-        .groupBy(col("source"))
-        .agg(sum(graft.ops.TextAnalysis.wordCount(col("text")))
-          .as("cap_tokens"))
-      Mixture.waterfill(caps, "source", "cap_tokens")
-        .orderBy("source")
-    }),
-
-    // HLL inclusion–exclusion set intersection: how many users did
-    // BOTH click and view, estimated from three one-pass sketches and
-    // audited in-band against the exact distinct-join count — the
-    // cross-segment overlap question answered sketch-side.
-    "sketch_hll_intersect" -> ((s, dir) =>
-      Sketches.hllIntersectChecked(T(s, dir, "events"),
-        "event_type", "user_id", "click", "view")),
-
-    // KMV set-DIFFERENCE estimate with the exact anti-join count and
-    // the in-band bound audit — the question HLL inclusion-exclusion
-    // can't answer without stacking its error twice; sketches are
-    // k-row and mergeable. The fixture overlaps two event_id ranges
-    // (60%/60%, 20% shared) so BOTH sides exceed k — the
-    // (k−1)·H/m_k path, the union-membership Jaccard and a genuine
-    // nonzero difference all get exercised (the user_id universe at
-    // this SF is 150 ids dense in every type — any type pair
-    // degenerates to 0).
-    "sketch_kmv_diff" -> ((s, dir) => {
-      val e = T(s, dir, "events")
-      val facts = e.filter(col("event_id") % 10 < 6)
-        .select(lit("a").as("part"), col("event_id").as("k"))
-        .unionByName(e.filter(col("event_id") % 10 >= 4)
-          .select(lit("b").as("part"), col("event_id").as("k")))
-      Sketches.kmvDiffChecked(facts, "part", "k", "a", "b")
-    }),
-
-    // Robust per-group outlier census: median/MAD flags with both
-    // medians under the explicit integer nearest-rank rule — every
-    // reported number replays exactly (no percentile-convention
-    // dependence, no mean dragged by the tail it hunts).
-    "mad_outliers" -> ((s, dir) =>
-      DataQuality.madOutliers(T(s, dir, "events"), "event_type", "value")),
-
-    // Functional-dependency audit over declared candidates: exact
-    // distinct counts both sides, the holds verdict and the violation
-    // magnitude, all candidate pairs riding ONE aggregate pass —
-    // o_orderkey determines custkey/totalprice (it's the key);
-    // o_custkey does not determine o_orderstatus.
-    "fd_audit" -> ((s, dir) =>
-      DataQuality.fdAudit(T(s, dir, "orders"), Seq(
-        "o_orderkey" -> "o_custkey",
-        "o_orderkey" -> "o_totalprice",
-        "o_custkey" -> "o_orderstatus"))
-        .orderBy("determinant", "dependent")),
-
-    // Per-group winsorized summary: nearest-rank [p5, p95] bounds
-    // (actual data values), clamp counts per side, and the exact
-    // winsorized sum over the integer-valued quantity column — the
-    // robust-mean companion to mad_outliers.
-    "winsorized_stats" -> ((s, dir) =>
-      DataQuality.winsorizedStats(
-        T(s, dir, "lineitem"), "l_returnflag", "l_quantity")),
-
-    // Per-group discrete percentiles: the selected values are ACTUAL
-    // data values (no interpolation), so doubles pass through exact
-    // and both engines pick the identical element.
-    "group_quantiles" -> ((s, dir) =>
-      T(s, dir, "events")
-        .groupBy(col("event_type"))
-        .agg(
-          expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY value)").as("p50"),
-          expr("percentile_disc(0.9) WITHIN GROUP (ORDER BY value)").as("p90"),
-          expr("percentile_disc(0.99) WITHIN GROUP (ORDER BY value)").as("p99"),
-          count(lit(1)).as("cnt"))),
-
-    // Z-order (Morton) layout key: the clustering column a 100 TB sink
-    // range-partitions + sorts by for two-dimensional scan pruning.
-    // Values are integer-exact; the oracle replays the interleave in
-    // SQL bit arithmetic.
-    "zorder_key" -> ((s, dir) =>
-      T(s, dir, "events")
-        .select(col("event_id"), col("user_id"),
-          ZOrder.zorder(col("event_id"), col("user_id")).as("zval"))),
-
-    // The whole curation pipeline as ONE declarative plan — what a
-    // user actually runs over a crawl: inject (test-only) → quality
-    // gate → language gate → deterministic 50% sample → exact dedup
-    // keep-first → PII redaction with exact counts. Every stage is a
-    // column-level predicate/projection except the dedup window, so
-    // the physical plan is scan → filter → one shuffle → project:
-    // filters run BEFORE the only exchange (Catalyst pushes them into
-    // the scan side), the sample thins the shuffle by half, and the
-    // composition is verified end-to-end by a single CTE-chained
-    // DuckDB oracle.
-    "curation_e2e" -> ((s, dir) => {
-      val docs = Redaction.withFakePii(
-        T(s, dir, "documents").select("doc_id", "lang", "text"))
-      // The three gates are computed as ONE projected flag rather than
-      // a Filter predicate: a Project gets codegen subexpression
-      // elimination (the 20 marker scans are shared between the
-      // quality and language gates), a Filter predicate does not —
-      // measured 2.6 s vs 1.2 s at sf0.1 for the identical logic. The
-      // nondeterministic `__nd` column is the pushdown barrier
-      // (PushDownPredicates won't cross a nondeterministic project),
-      // and it must ALSO appear in the filter or ColumnPruning
-      // removes it and the barrier with it; `__nd >= 0` is always
-      // true for monotonically_increasing_id.
-      val kept = docs
-        .withColumn("__keep",
-          TextAnalysis.qualityVerdict(col("text")) === "good" &&
-            TextAnalysis.langGuess(col("text"))
-              .isin("en", "de", "fr", "es") &&
-            Sampling.hexBucket(col("text")) <
-              lit(Sampling.thresholdHex(0.5)))
-        .withColumn("__nd", monotonically_increasing_id())
-        .filter(col("__keep") && col("__nd") >= 0)
-        .drop("__keep", "__nd")
-      Redaction.piiScrub(TextDedup.exactDedupKeepFirst(kept))
-    }),
-
-    // The curation pipeline upgraded to the PUBLISHED quality gates:
-    // Gopher composite rules → C4 page retention → C4 line cleaning →
-    // exact dedup keep-first → PII redaction, still ONE declarative
-    // plan with a single shuffle. The corpus is single-line word
-    // salad, so the prep synthesizes the multi-line punctuated form
-    // the gates consume; every planted rule trigger (stop-word
-    // sentence, lorem page, brace page) derives from the TEXT (length
-    // mods), NOT doc_id, so verbatim duplicate documents remain
-    // verbatim duplicates through the prep and the dedup window still
-    // fires on them. Gates are projected flags behind the same
-    // nondeterministic barrier as curation_e2e; the line stage uses
-    // the per-row c4LineClean, so nothing before the dedup shuffles.
-    "curation_e2e_v2" -> ((s, dir) => {
-      // spread: same single-row-group-scan reasoning as curation_funnel
-      val gated = spread(T(s, dir, "documents")
-          .select(col("doc_id"), col("text")))
-        .select(col("doc_id"), curationSynth.as("text"))
-        .withColumn("__keep",
-          TextAnalysis.gopherKeep(col("text")) &&
-            TextAnalysis.c4PageKeep(col("text")))
-        .withColumn("__nd", monotonically_increasing_id())
-        .filter(col("__keep") && col("__nd") >= 0)
-        .select(col("doc_id"),
-          TextAnalysis.c4LineClean(col("text")).as("text"))
-      Redaction.piiScrub(Redaction.withFakePii(
-        TextDedup.exactDedupKeepFirst(gated)))
-    }),
-
-    // Per-stage survivor accounting over the same synthesized corpus —
-    // the funnel a run reviews before committing drops: input →
-    // gopher gate → +page gate → +non-empty line clean → post-dedup
-    // distinct documents. ONE corpus scan, one partial-aggregated
-    // fold; the dedup stage is a count(DISTINCT hash) over the gated
-    // subset, never a second pipeline.
-    "curation_funnel" -> ((s, dir) => {
-      val gk = TextAnalysis.gopherKeep(col("text"))
-      val pk = TextAnalysis.c4PageKeep(col("text"))
-      val clean = TextAnalysis.c4LineClean(col("text"))
-      // spread: the synthesis + all four gate expressions otherwise
-      // fold into the single-row-group scan task (one core)
-      spread(T(s, dir, "documents").select(col("doc_id"), col("text")))
-        .select(col("doc_id"), curationSynth.as("text"))
-        .agg(
-          count(lit(1)).as("n_input"),
-          sum(when(gk, 1L).otherwise(0L)).as("n_gopher"),
-          sum(when(gk && pk, 1L).otherwise(0L)).as("n_page"),
-          sum(when(gk && pk && length(clean) > 0, 1L).otherwise(0L))
-            .as("n_line_nonempty"),
-          count_distinct(when(gk && pk,
-            md5(TextDedup.normText(clean)))).as("n_deduped"))
-    }),
-
-    // Per-document curation PROVENANCE (VERDICT r19 #5, Dolma-style
-    // attributes): alongside the survivor frame, every input document
-    // gets its rejection reasons as flags + a bitmask (gopher=1,
-    // page=2, exact_dup=4) plus informational attributes (line-clean
-    // emptied; PII found on the survivor form) — the per-doc record a
-    // filter-ablation study or an auditor consumes, where
-    // curation_funnel only gives stage totals. By construction the
-    // frame reconciles EXACTLY with the funnel (spec-pinned):
-    // n_gopher = Σ(gopher_fail=0), n_page = Σ(gated),
-    // n_line_nonempty = Σ(gated ∧ ¬line_empty),
-    // n_deduped = Σ(survived) = curation_e2e_v2's row count.
-    // Plan: one scan + the dedup-ownership hash window (the shuffle
-    // the pipeline pays anyway) + a survivor-only scrub joined back.
-    "curation_attributes" -> ((s, dir) => {
-      val gk = TextAnalysis.gopherKeep(col("text"))
-      val pk = TextAnalysis.c4PageKeep(col("text"))
-      // spread: same single-row-group-scan reasoning as curation_funnel
-      val base = spread(T(s, dir, "documents")
-          .select(col("doc_id"), col("text")))
-        .select(col("doc_id"), curationSynth.as("text"))
-        .select(col("doc_id"),
-          (!gk).cast("int").as("gopher_fail"),
-          (!pk).cast("int").as("page_fail"),
-          TextAnalysis.c4LineClean(col("text")).as("clean"))
-      val gated = col("gopher_fail") === 0 && col("page_fail") === 0
-      val owner = min(when(gated, col("doc_id")))
-        .over(Window.partitionBy(md5(TextDedup.normText(col("clean")))))
-      val attrs = base
-        .withColumn("exact_dup",
-          (gated && col("doc_id") =!= owner).cast("int"))
-        .withColumn("line_empty",
-          (gated && length(col("clean")) === 0).cast("int"))
-        .withColumn("survived",
-          (gated && col("exact_dup") === 0).cast("int"))
-      // pii_present is ROW-LOCAL (injection is id-keyed, redaction is
-      // per-row), so it rides the same projection instead of a second
-      // corpus scan + join: "the redaction chain changed the injected
-      // string" is exactly "some category matched" — no replacement
-      // token can occur naturally mid-match or compose across a
-      // boundary (Redaction.piiScrub's scaladoc argument), and the
-      // CaseWhen guard runs the regex chain only on survivor rows.
-      val injected =
-        concat(col("clean"), Redaction.fakePiiSuffix(col("doc_id")))
-      attrs
-        .select(col("doc_id"), col("gopher_fail"), col("page_fail"),
-          col("line_empty"), col("exact_dup"),
-          (col("gopher_fail") + col("page_fail") * 2 +
-            col("exact_dup") * 4).as("reject_mask"),
-          col("survived"),
-          when(col("survived") === 1 &&
-              Redaction.redact(injected) =!= injected, 1)
-            .otherwise(0).as("pii_present"))
-    }),
-
-    // Aggregate-based argmax (max_by on a struct ordering key): each
-    // customer's highest-value order in ONE hash aggregate — no
-    // per-group sort, no window shuffle; ties broken by orderkey so
-    // the result is deterministic.
-    "argmax_per_group" -> ((s, dir) =>
-      T(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(
-          max_by(col("o_orderkey"),
-            struct(col("o_totalprice"), col("o_orderkey"))).as("top_orderkey"),
-          max(col("o_totalprice")).as("top_price"))),
-
-    // Kneser-Ney-backoff bigram LM filter: reference partition
-    // (doc_id % 4 = 0, the ref_surprisal split) estimates the count /
-    // continuation tables; every other document pays integer bits per
-    // bigram — direct estimate when seen, continuation backoff when
-    // the word is a known completion, flat OOV otherwise — with a
-    // cross-multiplied avg-bits keep verdict.
-    "kn_perplexity" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      TextAnalysis.knPerplexity(
-        docs.filter(col("doc_id") % 4 =!= 0),
-        docs.filter(col("doc_id") % 4 === 0))
-    }),
-
-    // Flesch / Flesch-Kincaid readability in exact milli-units:
-    // sentence runs on the raw text, vowel-group "syllables" on the
-    // normalized text, both scores one cross-multiplied floor
-    // division — scan-shaped, no shuffle.
-    "readability_scores" -> ((s, dir) =>
-      TextAnalysis.readability(T(s, dir, "documents"))),
-
-    // Corpus-concentration audit: token-budget Gini off the
-    // counts-of-counts histogram + language-mix Herfindahl, both in
-    // exact ppm (DECIMAL-promoted products, integral div back).
-    "corpus_inequality" -> ((s, dir) =>
-      Profiling.corpusInequality(T(s, dir, "documents"))),
-
-    // Integer HITS over the directed customer→supplier purchase
-    // graph (the pagerank_fixed bipartite fixture, direction kept):
-    // hubs = customers who buy from authoritative suppliers,
-    // authorities = suppliers bought by strong hubs. 2 unrolled
-    // rounds, raw mutual-reinforcement sums — all BIGINT.
-    "hits_scores" -> ((s, dir) => {
-      val edges = T(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-        .join(T(s, dir, "orders").select("o_orderkey", "o_custkey"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + 1000000L).as("dst"))
-      Hits.hitsFixed(edges, rounds = 2)
-    }),
-
-    // Graded-relevance ranking eval (NDCG with the exact linear
-    // discount): BM25 run vs term-coverage graded qrels on the
-    // retrieval_eval query set; IDCG from per-grade COUNTS (never an
-    // ideal-ranking sort), all integer-scaled by lcm(2..11).
-    "graded_rank_eval" -> ((s, dir) => {
-      import s.implicits._
-      val docs = T(s, dir, "documents")
-      val queries = Seq(
-        (1L, "hash"), (1L, "join"),
-        (2L, "column"), (2L, "scan"),
-        (3L, "filter"), (3L, "merge"), (3L, "small"))
-        .toDF("q_id", "term")
-      Retrieval.gradedRankEval(
-        Retrieval.bm25TopK(docs, queries, k = 10),
-        Retrieval.gradedQrels(docs, queries), k = 10)
-    }),
-
-    // Benford first-digit audit over order totals: per digit 1-9 the
-    // observed count, floored per-mille share (cross-multiplied
-    // integer division, no float ratio), the log10(1+1/d) expectation
-    // and absolute deviation — the fabricated-data screen, all exact.
-    "benford_audit" -> ((s, dir) =>
-      DataQuality.benfordAudit(T(s, dir, "orders"), col("o_totalprice"))),
-
-    // Zipf rank-frequency census: vocabulary counts folded into
-    // doubling buckets (bit length of the term count) — types, token
-    // mass, min/max per bucket. The corpus-health screen; no rank
-    // sort, the bucket IS the rank structure.
-    "zipf_census" -> ((s, dir) =>
-      TextAnalysis.zipfCensus(T(s, dir, "documents"))),
-
-    // Degree histogram of the customer→supplier purchase graph in
-    // doubling buckets, both directions — the skew pre-flight the
-    // iterative graph ops key off. Node counts, degree mass, exact
-    // min/max per (side, bucket).
-    "degree_census" -> ((s, dir) => {
-      val edges = T(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-        .join(T(s, dir, "orders").select("o_orderkey", "o_custkey"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + 1000000L).as("dst"))
-      GraphCensus.degreeCensus(edges)
-    }),
-
-    // Strongly connected components of a directed arithmetic graph
-    // (doubling map + a chord family — cycles with DAG periphery):
-    // trim + forward/backward min-label peel, never a reachability
-    // pair table. The oracle recomputes mutual reachability by
-    // recursive closure on the bounded fixture — result parity
-    // without replaying the algorithm.
-    "scc_labels" -> ((s, dir) => {
-      val nd = T(s, dir, "customer")
-        .select((col("c_custkey") % 120).as("v")).distinct()
-      val e1 = nd.select(col("v").as("src"),
-        ((col("v") * 2 + 1) % 120).as("dst"))
-      val e2 = nd.filter(col("v") % 4 === 0)
-        .select(col("v").as("src"), ((col("v") + 30) % 120).as("dst"))
-      Scc.stronglyConnected(e1.unionByName(e2)).orderBy("node")
-    }),
-
-    // The SCC condensation census over the same fixture graph —
-    // per component: member count, condensation out-degree, and the
-    // LONGEST-path topological layer (the dependency-screen table:
-    // n_nodes>1 rows ARE the cycles, layer is evaluation-order
-    // depth). Layers by iterated relaxation on component-sized
-    // frames; the oracle recomputes everything from the recursive
-    // mutual-reach closure plus a recursive longest-path walk on the
-    // (acyclic) condensation — ground truth by definition.
-    "scc_condensation" -> ((s, dir) => {
-      val nd = T(s, dir, "customer")
-        .select((col("c_custkey") % 120).as("v")).distinct()
-      val e1 = nd.select(col("v").as("src"),
-        ((col("v") * 2 + 1) % 120).as("dst"))
-      val e2 = nd.filter(col("v") % 4 === 0)
-        .select(col("v").as("src"), ((col("v") + 30) % 120).as("dst"))
-      Scc.condensation(e1.unionByName(e2)).orderBy("scc_id")
-    }),
-
-    // Bowtie census (Broder et al. 2000) on a constructed four-region
-    // graph: a 60-cycle core (gcd(7,60)=1 ⇒ one orbit), 40 IN
-    // tendrils, 40 OUT tendrils, and a disconnected 10-cycle island.
-    // Everything after the SCC runs on the condensation; the two
-    // reach sets grow by BFS with exact set-size certificates. The
-    // oracle classifies from the full recursive closure — reach-to- /
-    // reach-from-core by definition.
-    "bowtie_regions" -> ((s, dir) => {
-      val nd = T(s, dir, "customer")
-        .select((col("c_custkey") % 150).as("v")).distinct()
-      val core = nd.filter(col("v") < 60)
-        .select(col("v").as("src"), ((col("v") + 7) % 60).as("dst"))
-      val inT = nd.filter(col("v") >= 60 && col("v") < 100)
-        .select(col("v").as("src"), (col("v") - 60).as("dst"))
-      val outT = nd.filter(col("v") >= 100 && col("v") < 140)
-        .select((col("v") - 100).as("src"), col("v").as("dst"))
-      val isl = nd.filter(col("v") >= 140)
-        .select(col("v").as("src"),
-          (lit(140) + ((col("v") - 140 + 1) % 10)).as("dst"))
-      Scc.bowtie(core.unionByName(inT).unionByName(outT)
-        .unionByName(isl)).orderBy("node")
-    }),
-
-    // Reciprocity summary of the arithmetic functional graph
-    // k%1000 → (3k+2)%1000 (chosen so loops AND mutual pairs both
-    // exist): distinct non-loop edges, directed mutual count,
-    // self-loop count — one row, all BIGINT.
-    "graph_reciprocity" -> ((s, dir) =>
-      GraphCensus.reciprocity(
-        T(s, dir, "customer").select(
-          (col("c_custkey") % 1000).as("src"),
-          ((col("c_custkey") * 3 + 2) % 1000).as("dst")))),
-
-    // Inter-arrival burstiness census: per-user consecutive gaps (in
-    // epoch micros) folded into doubling buckets — gap counts, dwell
-    // sums, exact min/max per bucket; bucket 0 = exact timestamp
-    // ties. One sessionize-shaped shuffle, then a bounded aggregate.
-    "interarrival_census" -> ((s, dir) =>
-      EventOps.interarrivalCensus(
-        eventsMicros(s, dir).select(
-          col("event_id"), col("user_id"), col("ts")))),
-
-    // Exact Spearman moments between document char length and word
-    // count: histogram-decomposed doubled tie ranks (no global rank
-    // sort), one row of DECIMAL-exact Pearson-on-ranks numerators
-    // emitted as digit strings (r15 wide-decimal rule).
-    "rank_correlation" -> ((s, dir) =>
-      Profiling.spearmanMoments(T(s, dir, "documents"),
-        col("n_chars"), TextAnalysis.wordCount(col("text")))),
-
-    // Near-dup cluster size census over the Jaccard components:
-    // clusters per exact size with their doc mass — the "how much
-    // would dedup delete" summary on top of neardup_components;
-    // singletons included (every doc is a node).
-    "neardup_cluster_census" -> ((s, dir) =>
-      neardupLabeled(s, dir)
-        .groupBy(col("component")).agg(count(lit(1)).as("cluster_size"))
-        .groupBy("cluster_size")
-        .agg(count(lit(1)).as("n_clusters"))
-        .select(col("cluster_size"), col("n_clusters"),
-          (col("cluster_size") * col("n_clusters")).as("n_docs"))))
-
-  // ------------------------------------------------------------- oracles
-
-  def oracleSql: Map[String, String] = {
-    val langs = TextAnalysis.LangMarkers
-    val allMarkers = langs.flatMap(_._2)
-    val hitCols = langs.map { case (l, ms) => s"${hitsSql(ms)} AS ${l}_hits" }
-    val great = "greatest(en_hits, de_hits, fr_hits, es_hits, zh_hits)"
-    val statsCols =
-      s"""CAST(length(text) AS BIGINT) AS char_len,
-         | CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS word_cnt,
-         | CAST(len(regexp_extract_all(text, '\\w+|[^\\w\\s]')) AS BIGINT) AS tokenish_cnt,
-         | CAST(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS BIGINT) AS punct_cnt,
-         | CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS BIGINT) AS digit_cnt"""
-        .stripMargin.replaceAll("\\s+", " ").trim
-
-    Map(
-      "f1_clean_name" ->
-        s"SELECT p_partkey, ${duckCleanName(messyNameSql)} AS cleaned FROM part",
-
-      "p5_variant_projection" ->
-        ("SELECT event_id, CASE WHEN length(props) % 2 = 0 THEN event_type " +
-          "ELSE CAST(user_id AS VARCHAR) END AS picked FROM events"),
-
-      "p6_coalesce" ->
-        ("SELECT c_custkey, coalesce(" +
-          "nullif(trim(CASE WHEN c_custkey % 3 = 0 THEN '   ' ELSE c_name END), ''), " +
-          "nullif(trim(c_mktsegment), ''), 'unknown') AS picked_name FROM customer"),
-
-      "p7_nonempty_filter" ->
-        ("SELECT p_partkey, CASE WHEN p_partkey % 7 = 0 THEN ' ' ELSE p_name END AS name, " +
-          "p_brand AS brand FROM part " +
-          "WHERE length(trim(CASE WHEN p_partkey % 7 = 0 THEN ' ' ELSE p_name END)) > 0 " +
-          "AND length(trim(p_brand)) > 0"),
-
-      "p8_code_filter" ->
-        (s"SELECT l_orderkey, l_linenumber, $islandishCodeSql AS code FROM lineitem " +
-          s"WHERE regexp_matches($islandishCodeSql, '^\\d{2}\\.\\d{2}\\.\\d{5}$$')"),
-
-      "f5_flags" ->
-        ("SELECT o_orderkey, " +
-          "CASE WHEN regexp_matches(upper(CASE WHEN o_orderkey % 3 = 0 THEN ' BP' " +
-          "WHEN o_orderkey % 3 = 1 THEN 'TBP' ELSE 'BP/TBP' END), '^\\s*BP\\b') " +
-          "THEN 1 ELSE 0 END AS is_populated, " +
-          "CASE WHEN contains(upper(CASE WHEN o_orderkey % 5 = 0 THEN 'pulau PPKT kecil' " +
-          "ELSE o_orderstatus END), 'PPKT') THEN 1 ELSE 0 END AS is_outermost_small " +
-          "FROM orders"),
-
-      "f6_island_parent" ->
-        (s"SELECT l_orderkey, l_linenumber, $islandishCodeSql AS code, " +
-          s"CASE WHEN substr($islandishCodeSql, 4, 2) = '00' THEN '' " +
-          s"ELSE substr($islandishCodeSql, 1, 5) END AS regency_code FROM lineitem"),
-
-      "f7_parent_prefix" ->
-        ("SELECT o_orderkey, lpad(CAST(o_orderkey AS VARCHAR), 13, '0') AS vcode, " +
-          "substr(lpad(CAST(o_orderkey AS VARCHAR), 13, '0'), 1, 2) AS province_code, " +
-          "substr(lpad(CAST(o_orderkey AS VARCHAR), 13, '0'), 1, 5) AS regency_code, " +
-          "substr(lpad(CAST(o_orderkey AS VARCHAR), 13, '0'), 1, 8) AS district_code " +
-          "FROM orders"),
-
-      "a1_first_dedup" ->
-        ("SELECT o_custkey, o_orderkey AS first_orderkey, o_orderstatus FROM orders " +
-          "QUALIFY row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderkey) = 1"),
-
-      "o1_topk" ->
-        ("SELECT o_orderkey, o_totalprice FROM orders " +
-          "ORDER BY o_totalprice DESC, o_orderkey LIMIT 100"),
-
-      "j1_ri_antijoin" ->
-        ("SELECT o_orderkey, o_custkey FROM orders WHERE NOT EXISTS " +
-          "(SELECT 1 FROM customer WHERE c_custkey = o_custkey AND c_custkey % 7 <> 0)"),
-
-      "s3_page_prune" ->
-        ("SELECT event_id, CAST(event_id % 20 + 1 AS INTEGER) AS page, event_type " +
-          "FROM events WHERE event_id % 20 + 1 IN (1, 2, 3, 4, 6)"),
-
-      "agg_groupby" ->
-        ("SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty, " +
-          "count(*) AS cnt, min(l_extendedprice) AS min_price, " +
-          "max(l_extendedprice) AS max_price FROM lineitem " +
-          "WHERE l_quantity <= 25 GROUP BY l_returnflag, l_linestatus"),
-
-      "s1_page_stats" ->
-        ("SELECT CAST(event_id % 20 + 1 AS INTEGER) AS page, " +
-          "count(*) AS n_rows, max(event_id) AS max_id FROM events " +
-          "GROUP BY 1"),
-
-      "skew_salted_agg" ->
-        ("SELECT l_returnflag, sum(l_quantity) AS sum_value, " +
-          "count(*) AS cnt FROM lineitem GROUP BY l_returnflag"),
-
-      "skew_salted_join" ->
-        ("SELECT e.event_type, d.type_weight, count(*) AS cnt, " +
-          "CAST(sum(e.event_id) AS BIGINT) AS sum_event_id " +
-          "FROM events e JOIN (SELECT DISTINCT event_type, " +
-          "CAST(length(event_type) AS BIGINT) AS type_weight " +
-          "FROM events) d USING (event_type) " +
-          "GROUP BY e.event_type, d.type_weight"),
-
-      "heavy_hitters" ->
-        ("SELECT user_id, count(*) AS cnt FROM events " +
-          "GROUP BY user_id HAVING count(*) >= 80"),
-
-      "heavy_hitters_mg" ->
-        ("SELECT user_id, count(*) AS cnt FROM events " +
-          "GROUP BY user_id HAVING count(*) >= 80"),
-
-      "cap_per_key" ->
-        ("SELECT doc_id, lang FROM documents QUALIFY " +
-          "row_number() OVER (PARTITION BY lang " +
-          "ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) <= 20"),
-
-      // host replayed from the construction arithmetic — pinning
-      // Spark's parse_url(HOST) against it
-      "domain_cap" ->
-        ("SELECT doc_id, 'site' || (doc_id % 7) || '.example.com' " +
-          "AS host FROM documents QUALIFY " +
-          "row_number() OVER (PARTITION BY doc_id % 7 " +
-          "ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) <= 10"),
-
-      "unicode_nfc" ->
-        (s"SELECT doc_id, nfc_normalize(text || '$DecomposedSuffix') " +
-          "AS norm_text, " +
-          s"CAST(nfc_normalize(text || '$DecomposedSuffix') <> " +
-          s"(text || '$DecomposedSuffix') AS INTEGER) AS changed " +
-          "FROM documents"),
-
-      // zlib isn't SQL-replayable, so the oracle asserts the query's
-      // in-band self-audit instead: every audit_ok must come back TRUE
-      // (framing bound, ratio bound, deterministic-repeat equality)
-      "compression_signal" ->
-        ("SELECT doc_id, length(text) AS raw_len, TRUE AS audit_ok " +
-          "FROM documents"),
-
-      "count_distinct_agg" ->
-        ("SELECT count(DISTINCT o_custkey) AS distinct_custs, " +
-          "count(DISTINCT o_orderpriority) AS distinct_prios, " +
-          "count(*) AS total FROM orders"),
-
-      "rollup_agg" ->
-        ("SELECT coalesce(l_returnflag, '(all)') AS returnflag, " +
-          "coalesce(l_linestatus, '(all)') AS linestatus, " +
-          "sum(l_quantity) AS sum_qty, count(*) AS cnt FROM lineitem " +
-          "GROUP BY ROLLUP (l_returnflag, l_linestatus)"),
-
-      "set_except" ->
-        ("SELECT c_custkey FROM customer " +
-          "WHERE c_mktsegment IN ('AUTOMOBILE', 'BUILDING') " +
-          "EXCEPT " +
-          "SELECT c_custkey FROM customer WHERE c_acctbal > 9000.0"),
-
-      "window_running_sum" ->
-        ("SELECT o_custkey, o_orderkey, " +
-          // CAST: DuckDB integer SUM widens to HUGEINT; Spark stays BIGINT
-          "CAST(sum(o_orderkey % 100) OVER (PARTITION BY o_custkey ORDER BY o_orderkey " +
-          "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS running_mod, " +
-          "count(*) OVER (PARTITION BY o_custkey ORDER BY o_orderkey " +
-          "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running_orders " +
-          "FROM orders"),
-
-      "edit_distance" ->
-        // CAST: DuckDB levenshtein returns BIGINT, Spark's INT
-        ("SELECT c_custkey, CAST(levenshtein(c_name, 'Customer#000000000') " +
-          "AS INTEGER) AS dist_from_ref FROM customer"),
-
-      "json_extract_agg" ->
-        ("SELECT event_type, " +
-          "CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) " +
-          "AS sum_k, count(*) AS cnt FROM events GROUP BY event_type"),
-
-      "w1_ordered_projection" ->
-        ("SELECT event_id, user_id, event_type, value FROM events " +
-          "ORDER BY event_id LIMIT 500"),
-
-      "pipeline_area_e2e" ->
-        ("WITH d AS (SELECT c_custkey AS k, trim(c_name) AS name, " +
-          "CASE c_custkey % 4 " +
-          "WHEN 0 THEN lpad(CAST(c_custkey % 100 AS VARCHAR), 2, '0') " +
-          "WHEN 1 THEN lpad(CAST(c_custkey AS VARCHAR), 5, '0') " +
-          "WHEN 2 THEN lpad(CAST(c_custkey AS VARCHAR), 8, '0') " +
-          "ELSE lpad(CAST(c_custkey AS VARCHAR), 13, '0') END AS code " +
-          "FROM customer) " +
-          "SELECT CASE k % 4 WHEN 1 THEN 'regency' WHEN 2 THEN 'district' " +
-          "ELSE 'village' END AS entity, code, " +
-          "CASE k % 4 WHEN 1 THEN substr(code, 1, 2) " +
-          "WHEN 2 THEN substr(code, 1, 5) ELSE substr(code, 1, 8) END AS parent, " +
-          "name FROM d WHERE k % 4 <> 0 " +
-          "UNION ALL " +
-          "SELECT 'province', code, '', name FROM " +
-          "(SELECT code, name, row_number() OVER " +
-          "(PARTITION BY code ORDER BY k) AS rn FROM d WHERE k % 4 = 0) " +
-          "WHERE rn = 1"),
-
-      "pipeline_island_e2e" ->
-        ("WITH d AS (SELECT o_orderkey AS k, " +
-          "CASE WHEN o_orderkey % 5 = 0 THEN 'bad' ELSE " +
-          "lpad(CAST(o_orderkey % 90 AS VARCHAR), 2, '0') || '.' || " +
-          "lpad(CAST(o_orderkey % 97 AS VARCHAR), 2, '0') || '.' || " +
-          "lpad(CAST(o_orderkey % 99999 AS VARCHAR), 5, '0') END AS code, " +
-          "lpad(CAST(o_orderkey % 10 AS VARCHAR), 2, '0') || '°' || " +
-          "lpad(CAST(o_orderkey % 60 AS VARCHAR), 2, '0') || '''' || " +
-          "lpad(CAST(o_orderkey % 60 AS VARCHAR), 2, '0') || '.00\" N ' || " +
-          "lpad(CAST(o_orderkey % 140 AS VARCHAR), 3, '0') || '°' || " +
-          "lpad(CAST(o_orderkey % 59 AS VARCHAR), 2, '0') || '''' || " +
-          "lpad(CAST(o_orderkey % 59 AS VARCHAR), 2, '0') || '.00\" E' " +
-          "AS coord, " +
-          "'Pulau ' || CAST(o_orderkey AS VARCHAR) AS name FROM orders) " +
-          "SELECT code, CASE WHEN substr(code, 4, 2) = '00' THEN '' " +
-          "ELSE substr(code, 1, 5) END AS regency_code, " +
-          "coord AS coordinate, " +
-          "CASE WHEN k % 2 = 0 THEN 1 ELSE 0 END AS is_populated, " +
-          "CASE WHEN k % 3 = 0 THEN 1 ELSE 0 END AS is_outermost_small, " +
-          "name FROM d " +
-          "WHERE regexp_matches(code, '^\\d{2}\\.\\d{2}\\.\\d{5}$')"),
-
-      // Replays shingles() exactly: normalize, split on the collapsed
-      // single space, 3-token grams via list slicing (truncating at the
-      // end like Spark's slice()), distinct; union arithmetically.
-      "ngram_jaccard_pairs" ->
-        (s"""WITH sh AS (
-           |  SELECT doc_id,
-           |    list_distinct(list_transform(
-           |      range(0, greatest(len(toks) - 3, 0) + 1),
-           |      i -> array_to_string(toks[i+1:i+3], ' '))) AS sh
-           |  FROM (SELECT doc_id, string_split($NormTextSql, ' ') AS toks
-           |        FROM documents)
-           |)
-           |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           |  CAST(len(list_intersect(a.sh, b.sh)) AS BIGINT) AS inter_cnt,
-           |  CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))
-           |       AS BIGINT) AS union_cnt
-           |FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the weighted replay: per-doc term frequencies, min-sum over
-      // shared terms, max-sum via the dl identity
-      "weighted_jaccard_pairs" ->
-        (s"""WITH toks AS (
-           |  SELECT doc_id, unnest(string_split($NormTextSql, ' '))
-           |    AS term FROM documents),
-           |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-           |       WHERE len(term) > 0 GROUP BY doc_id, term),
-           |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf
-           |       GROUP BY doc_id),
-           |pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-           |  FROM documents a JOIN documents b
-           |    ON b.doc_id = a.doc_id + 1),
-           |shared AS (SELECT p.doc_a, p.doc_b,
-           |  CAST(sum(least(ta.tf, tb.tf)) AS BIGINT) AS wmin
-           |  FROM pairs p
-           |  JOIN tf ta ON ta.doc_id = p.doc_a
-           |  JOIN tf tb ON tb.doc_id = p.doc_b AND tb.term = ta.term
-           |  GROUP BY 1, 2)
-           |SELECT p.doc_a, p.doc_b,
-           |  coalesce(s.wmin, 0) AS wmin,
-           |  da.dl + db.dl - coalesce(s.wmin, 0) AS wmax
-           |FROM pairs p
-           |LEFT JOIN shared s USING (doc_a, doc_b)
-           |JOIN dl da ON da.doc_id = p.doc_a
-           |JOIN dl db ON db.doc_id = p.doc_b"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // first-occurrence slices over the 3-gram set; bucket
-      // arithmetic is the identical IEEE double division + floor on
-      // both engines
-      "vocab_growth" ->
-        (s"""WITH first AS (
-           |  SELECT term, min(doc_id) AS fd FROM (
-           |    SELECT doc_id, unnest($ShingleSetSql) AS term
-           |    FROM (SELECT doc_id,
-           |      string_split($NormTextSql, ' ') AS toks
-           |      FROM documents)) WHERE len(term) > 0 GROUP BY term),
-           |rg AS (SELECT min(doc_id) AS lo,
-           |  max(doc_id) - min(doc_id) + 1 AS span FROM documents),
-           |b AS (SELECT least(CAST(floor((fd - lo) * 10 / span)
-           |    AS BIGINT), 9) AS bucket, count(*) AS new_terms
-           |  FROM first CROSS JOIN rg GROUP BY 1)
-           |SELECT bucket, new_terms,
-           |  CAST(sum(new_terms) OVER (ORDER BY bucket) AS BIGINT)
-           |    AS cum_terms FROM b"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the packing replay: one window prefix sum (the oracle CAN
-      // afford the global window; the engine side is the two-level
-      // decomposition it exists to verify)
-      "packing_fragmentation" ->
-        ("""WITH l AS (SELECT doc_id,
-           |  CAST(len(string_split_regex(trim(text), '\s+'))
-           |    AS BIGINT) AS len FROM documents),
-           |p AS (SELECT doc_id, len, coalesce(sum(len) OVER (
-           |  ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND
-           |  1 PRECEDING), 0) AS prefix FROM l)
-           |SELECT count(*) AS n_docs,
-           |  CAST(sum(CASE WHEN prefix % 512 + len > 512 THEN 1
-           |    ELSE 0 END) AS BIGINT) AS n_split,
-           |  CAST(ceil(CAST(sum(len) AS DOUBLE) / 512) AS BIGINT)
-           |    AS n_blocks,
-           |  CAST(sum(len) AS BIGINT) AS total_tokens FROM p""")
-          .stripMargin.replaceAll("\\s+", " ").trim,
-
-      // both batching disciplines replayed: arrival = doc_id runs,
-      // bucketed = (len, doc_id) order within width-16 length classes
-      "padding_waste" ->
-        ("""WITH l AS (SELECT doc_id,
-           |  CAST(len(string_split_regex(trim(text), '\s+'))
-           |    AS BIGINT) AS len FROM documents),
-           |a AS (SELECT floor(doc_id / 8) AS b, count(*) AS n,
-           |  sum(len) AS s, max(len) AS m FROM l GROUP BY 1),
-           |ar AS (SELECT 'arrival' AS strategy,
-           |  count(*) AS n_batches, CAST(sum(s) AS BIGINT)
-           |    AS real_tokens,
-           |  CAST(sum(n * m) AS BIGINT) AS padded_tokens FROM a),
-           |br AS (SELECT lb, floor((row_number() OVER (
-           |    PARTITION BY lb ORDER BY len, doc_id) - 1) / 8) AS bb,
-           |    len FROM (SELECT doc_id, len,
-           |      CAST(floor(len / 16) AS BIGINT) AS lb FROM l)),
-           |bg AS (SELECT lb, bb, count(*) AS n, sum(len) AS s,
-           |  max(len) AS m FROM br GROUP BY 1, 2),
-           |bu AS (SELECT 'bucketed' AS strategy,
-           |  count(*) AS n_batches, CAST(sum(s) AS BIGINT)
-           |    AS real_tokens,
-           |  CAST(sum(n * m) AS BIGINT) AS padded_tokens FROM bg)
-           |SELECT * FROM ar UNION ALL SELECT * FROM bu""")
-          .stripMargin.replaceAll("\\s+", " ").trim,
-
-      "dedup_exact_groups" ->
-        (s"SELECT md5($NormTextSql) AS text_hash, min(doc_id) AS keep_doc_id, " +
-          "count(*) AS dup_count FROM documents GROUP BY 1"),
-
-      "dedup_exact_keep" ->
-        (s"SELECT doc_id, md5($NormTextSql) AS text_hash FROM documents " +
-          s"QUALIFY row_number() OVER (PARTITION BY md5($NormTextSql) ORDER BY doc_id) = 1"),
-
-      // the sketch estimate never reaches the comparator — the flag is
-      // asserted TRUE (Spark must have computed it true for the hash to
-      // match); rows is the only other output and is exact
-      "sketch_approx_distinct" ->
-        ("SELECT l_returnflag, count(*) AS \"rows\", " +
-          "TRUE AS approx_ok FROM lineitem GROUP BY l_returnflag"),
-
-      // the tight audit: oracle recomputes the exact side and asserts
-      // the within-5·rsd flag held
-      "sketch_audit" ->
-        ("SELECT l_returnflag, count(*) AS \"rows\", " +
-          "count(DISTINCT l_partkey) AS exact_distinct, " +
-          "TRUE AS within_5rsd FROM lineitem GROUP BY l_returnflag"),
-
-      // the quantile audit: group sizes replayed exactly, the GK rank
-      // flag asserted TRUE (Spark must have measured the bound held)
-      "sketch_quantiles" ->
-        ("SELECT l_returnflag, pct, \"rows\", TRUE AS rank_ok FROM " +
-          "(SELECT l_returnflag, count(l_quantity) AS \"rows\" " +
-          "FROM lineitem GROUP BY l_returnflag) " +
-          "CROSS JOIN (SELECT unnest([50, 90]) AS pct)"),
-
-      // cross-shard HLL state merge: the oracle recomputes the exact
-      // side (rows and distincts are shard-sum-invariant) and asserts
-      // the merged estimate held its bound
-      "sketch_hll_merge" ->
-        ("SELECT l_returnflag, count(*) AS \"rows\", " +
-          "count(DISTINCT l_partkey) AS exact_distinct, " +
-          "TRUE AS within_bound FROM lineitem GROUP BY l_returnflag"),
-
-      // exact token counts replay; the CMS estimates stay
-      // engine-internal behind the three in-band flags (one-sided
-      // guarantee, 4N/width bound, merge-linearity cell equality)
-      "sketch_cms_merge" ->
-        (s"""WITH toks AS (
-           |  SELECT unnest(string_split($NormTextSql, ' ')) AS key
-           |  FROM documents),
-           |k AS (SELECT key, count(*) AS exact_cnt FROM toks
-           |      WHERE len(key) > 0 GROUP BY key)
-           |SELECT key, exact_cnt, 1 AS est_ge_exact,
-           |  1 AS est_within_bound, 1 AS merge_exact
-           |FROM k ORDER BY exact_cnt DESC, key ASC LIMIT 10"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // mergeable histogram quantiles replay EXACTLY: per-bucket sums
-      // over shards equal global bucket counts, so the oracle skips
-      // the sharding and derives the same integer bucket edges
-      "sketch_hist_quantiles_merged" ->
-        ("""WITH st AS (
-           |  SELECT lang, greatest(CAST(floor(CAST(n_chars AS DOUBLE)
-           |    / 64) AS BIGINT), 0) AS bucket, count(*) AS cnt
-           |  FROM documents WHERE n_chars IS NOT NULL GROUP BY 1, 2),
-           |cum AS (
-           |  SELECT lang, bucket,
-           |    CAST(sum(cnt) OVER (PARTITION BY lang ORDER BY bucket
-           |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
-           |    CAST(sum(cnt) OVER (PARTITION BY lang) AS BIGINT) AS "rows"
-           |  FROM st),
-           |px AS (SELECT unnest([50, 90]) AS pct)
-           |SELECT lang, pct, "rows", min(bucket) * 64 AS q_lo
-           |FROM cum CROSS JOIN px
-           |WHERE cum * 100 >= pct * "rows"
-           |GROUP BY lang, pct, "rows""""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // planted-recall oracles: the eligibility predicate is replayed
-      // verbatim, the recall flag is asserted TRUE — Spark must have
-      // measured recall above the floor for the hash to match. The
-      // xxhash64 candidate sets themselves never reach the comparator.
-      "minhash_planted_recall" ->
-        (s"SELECT count(*) AS planted_total, TRUE AS recall_ok " +
-          s"FROM documents WHERE doc_id % $PlantMod = 0 " +
-          s"AND len(string_split($NormTextSql, ' ')) >= $PlantMinTokens"),
-
-      // image near-dup: the eligibility predicate is id-arithmetic
-      // only (every PlantMod-th doc plants a perturbed image); the
-      // recall flag asserts the planted pairs surfaced through the
-      // real decode -> thumb -> LSH pipeline, and fp_pairs = 0
-      // asserts NOTHING ELSE did (ADVICE r18: both sides of the
-      // precision/recall claim are gated)
-      "mm_image_neardup" ->
-        (s"SELECT count(*) AS planted_total, TRUE AS recall_ok, " +
-          s"CAST(0 AS BIGINT) AS fp_pairs " +
-          s"FROM documents WHERE doc_id % $PlantMod = 0"),
-
-      // audio near-dup: same id-arithmetic eligibility; the flags
-      // assert the planted clips surfaced through the real WAV/PCM
-      // decode -> pooled-bin -> LSH pipeline and that NOTHING else did
-      "mm_audio_neardup" ->
-        (s"SELECT count(*) AS planted_total, TRUE AS recall_ok, " +
-          s"CAST(0 AS BIGINT) AS fp_pairs " +
-          s"FROM documents WHERE doc_id % $PlantMod = 0"),
-
-      // video near-dup: same convention, third modality — flags
-      // assert the planted clips surfaced through the real GIF frame
-      // decode -> pooled RGB means -> LSH pipeline and nothing else
-      "mm_video_neardup" ->
-        (s"SELECT count(*) AS planted_total, TRUE AS recall_ok, " +
-          s"CAST(0 AS BIGINT) AS fp_pairs " +
-          s"FROM documents WHERE doc_id % $PlantMod = 0"),
-
-      // the full exact-join answer, brute-forced: every pair the
-      // prefix filter may return, none it may not
-      "ppjoin_pairs" ->
-        (PpjoinCtes + " SELECT a_id, b_id, inter_cnt, union_cnt " +
-          "FROM pairs WHERE inter_cnt * 100 >= union_cnt * 80"),
-
-      // survivors = the planted-id universe minus the later half of
-      // every qualifying pair (NULL/empty-token docs never pair, so
-      // they always survive — both engines agree by construction)
-      "ppjoin_keep" ->
-        (PpjoinCtes + s", allids AS (SELECT doc_id FROM documents " +
-          s"UNION ALL SELECT doc_id + $PlantOffset FROM documents " +
-          s"WHERE doc_id % $PlantMod = 0 " +
-          s"AND len(string_split($NormTextSql, ' ')) >= $PlantMinTokens) " +
-          "SELECT doc_id FROM allids WHERE doc_id NOT IN " +
-          "(SELECT b_id FROM pairs " +
-          "WHERE inter_cnt * 100 >= union_cnt * 80)"),
-
-      "simhash_planted_recall" ->
-        (s"SELECT count(*) AS planted_total, TRUE AS recall_ok " +
-          s"FROM documents WHERE doc_id % $PlantMod = 0 " +
-          s"AND len(string_split($NormTextSql, ' ')) >= $PlantMinTokens"),
-
-      // xxhash64 signature bits aren't SQL-replayable, so the oracle
-      // asserts the query's in-band self-audit: every audit_ok TRUE
-      // (deterministic-repeat through the opaque barrier + token-order
-      // invariance of the multiset sum), plus the replayable token
-      // count per kept document
-      "simhash_signatures" ->
-        (s"SELECT doc_id, CAST(len(string_split($NormTextSql, ' ')) " +
-          "AS BIGINT) AS n_tokens, TRUE AS audit_ok " +
-          "FROM documents WHERE text IS NOT NULL"),
-
-      // ANN retrieval-quality gate: both approximate paths must have
-      // found the planted original above their floors for the flags
-      // to hash-match the oracle's TRUEs
-      "ann_planted_recall" ->
-        ("SELECT count(*) AS planted_total, TRUE AS lsh_recall_ok, " +
-          "TRUE AS ivf_recall_ok FROM embeddings WHERE vec_id % 97 = 0"),
-
-      "ann_matryoshka_recall" ->
-        ("SELECT count(*) AS planted_total, TRUE AS matryoshka_recall_ok " +
-          "FROM embeddings WHERE vec_id % 97 = 0 AND vec_id < 10000"),
-
-      // full replay of the int8 quantizer and integer dot product:
-      // floor(CAST AS DOUBLE * 64) is exact in both engines (2^6
-      // scales the exponent only), integer sums are exact, so score
-      // and rank both reach the comparator — no float anywhere
-      "ann_quantized_topk" ->
-        ("WITH c AS (SELECT vec_id, list_transform(embedding, " +
-          "x -> CAST(greatest(least(floor(CAST(x AS DOUBLE) * 64), 127), " +
-          "-128) AS INTEGER)) AS qvec FROM embeddings), " +
-          "q AS (SELECT vec_id AS q_id, qvec AS q_codes FROM c " +
-          "WHERE vec_id < 10), " +
-          "s AS (SELECT q.q_id, c.vec_id, " +
-          "list_sum(list_transform(range(1, 65), " +
-          "i -> CAST(c.qvec[i] AS BIGINT) * q.q_codes[i])) AS qdot " +
-          "FROM c CROSS JOIN q WHERE c.vec_id <> q.q_id) " +
-          "SELECT q_id, vec_id, CAST(qdot AS BIGINT) AS qdot, " +
-          "CAST(row_number() OVER (PARTITION BY q_id " +
-          "ORDER BY qdot DESC, vec_id) AS INTEGER) AS rk " +
-          "FROM s QUALIFY rk <= 10"),
-
-      // the full PQ encode replay — codebook, assignment, nibble pack
-      "pq_codes" ->
-        (PqCtes + " SELECT vec_id, pq_code FROM pcodes"),
-
-      // PQ ADC replay: reconstruct each corpus vector from its
-      // assigned centroids (ordered flatten), integer-dot against the
-      // query codes — score and rank reach the comparator exactly
-      "ann_pq_topk" ->
-        (PqCtes + ", recon AS (SELECT a.vec_id, " +
-          "flatten(list(c.cvec ORDER BY a.s)) AS recon " +
-          "FROM assign a JOIN cbn c ON c.s = a.s AND c.j = a.j " +
-          "GROUP BY a.vec_id), " +
-          "qq AS (SELECT vec_id AS q_id, qv FROM qc WHERE vec_id < 10), " +
-          "adc AS (SELECT qq.q_id, r.vec_id, " +
-          "CAST(list_dot_product(qq.qv, r.recon) AS BIGINT) AS score " +
-          "FROM recon r, qq WHERE r.vec_id <> qq.q_id) " +
-          "SELECT q_id, vec_id, score, " +
-          "CAST(row_number() OVER (PARTITION BY q_id " +
-          "ORDER BY score DESC, vec_id) AS INTEGER) AS rk " +
-          "FROM adc QUALIFY rk <= 10"),
-
-      // IVF×PQ replay, RESIDUAL formulation (IVFADC): int8 codes and
-      // cells as before, then per-vector integer residuals rq = qv −
-      // c8(cell), a codebook seeded from the 16 lowest vec_ids'
-      // RESIDUAL subvectors, exact integer L2² assignment over
-      // residual subvectors, and ADC = per-probe offset dot(q, c8) +
-      // dot(q, recon(residual)) — every compared value an exact
-      // integer, the coarse float assignment replaying as in
-      // ann_ivf_topk; ADC top-30 re-ranked by the exact int8 dot
-      "ann_ivfpq_topk" ->
-        (IvfPqResidCtes +
-          ", adc0 AS (SELECT p.q_id, r.vec_id, " +
-          "CAST(p.qoff + list_dot_product(q.qv, r.recon) AS BIGINT) " +
-          "AS adc " +
-          "FROM recon r JOIN cellasg ca ON ca.vec_id = r.vec_id " +
-          "JOIN probes p ON p.cell = ca.cell " +
-          "JOIN qq q ON q.q_id = p.q_id WHERE r.vec_id <> p.q_id), " +
-          "short AS (SELECT q_id, vec_id FROM (" +
-          "SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id " +
-          "ORDER BY adc DESC, vec_id) AS arn FROM adc0) WHERE arn <= 30), " +
-          "rr AS (SELECT s.q_id, s.vec_id, " +
-          "CAST(list_dot_product(q.qv, c.qv) AS BIGINT) AS score " +
-          "FROM short s JOIN qc c ON c.vec_id = s.vec_id " +
-          "JOIN qq q ON q.q_id = s.q_id) " +
-          "SELECT q_id, vec_id, score, " +
-          "CAST(row_number() OVER (PARTITION BY q_id " +
-          "ORDER BY score DESC, vec_id) AS INTEGER) AS rk " +
-          "FROM rr QUALIFY rk <= 10"),
-
-      // IVF,SQ8 replay: int8 codes, float-cosine cell assignment and
-      // probes (the ann_ivf_topk margin argument), exact integer dot
-      // within probed cells — score and rank reach the comparator
-      "ann_ivfsq8_topk" ->
-        ("""WITH qc AS (SELECT vec_id, list_transform(embedding,
-           |  v -> CAST(greatest(least(floor(CAST(v AS DOUBLE) * 64), 127),
-           |    -128) AS BIGINT)) AS qv FROM embeddings),
-           |cent AS (SELECT CAST(vec_id AS INTEGER) AS cell,
-           |  embedding AS c_vec FROM embeddings WHERE vec_id < 8),
-           |cellasg AS (SELECT vec_id, cell FROM (
-           |  SELECT e.vec_id, c.cell, row_number() OVER (
-           |    PARTITION BY e.vec_id ORDER BY
-           |    list_cosine_similarity(e.embedding, c.c_vec) DESC, c.cell)
-           |    AS rn FROM embeddings e CROSS JOIN cent c) WHERE rn = 1),
-           |qq AS (SELECT vec_id AS q_id, qv FROM qc
-           |  WHERE vec_id >= 10 AND vec_id < 20),
-           |probes AS (SELECT q_id, cell FROM (
-           |  SELECT q.vec_id AS q_id, c.cell, row_number() OVER (
-           |    PARTITION BY q.vec_id ORDER BY
-           |    list_cosine_similarity(q.embedding, c.c_vec) DESC, c.cell)
-           |    AS rn FROM embeddings q CROSS JOIN cent c
-           |  WHERE q.vec_id >= 10 AND q.vec_id < 20) WHERE rn <= 2),
-           |sc AS (SELECT p.q_id, ca.vec_id,
-           |  CAST(list_dot_product(q.qv, c.qv) AS BIGINT) AS score
-           |  FROM cellasg ca JOIN probes p ON p.cell = ca.cell
-           |  JOIN qc c ON c.vec_id = ca.vec_id
-           |  JOIN qq q ON q.q_id = p.q_id WHERE ca.vec_id <> p.q_id)
-           |SELECT q_id, vec_id, score,
-           |  CAST(row_number() OVER (PARTITION BY q_id
-           |    ORDER BY score DESC, vec_id) AS INTEGER) AS rk
-           |FROM sc QUALIFY rk <= 10"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // fused-path quality gate: planted-total replay + flag TRUE
-      "ann_ivfpq_recall" ->
-        ("SELECT count(*) AS planted_total, TRUE AS recall_ok " +
-          "FROM embeddings WHERE vec_id % 97 = 0"),
-
-      // residual-vs-raw PQ fidelity gate: query-count replay + both
-      // in-band self-audit flags pinned TRUE (Spark must have measured
-      // residual ADC recall >= raw AND above the absolute floor)
-      "ann_ivfpq_adc_recall" ->
-        ("SELECT count(*) AS n_queries, TRUE AS residual_not_worse, " +
-          "TRUE AS residual_floor_ok " +
-          "FROM embeddings WHERE vec_id >= 10 AND vec_id < 110"),
-
-      // SemDeDup replay: identical quantization, the cross-multiplied
-      // integer cosine-squared test (qdot > 0 guard keeps the squaring
-      // monotone), and a recursive reach CTE for the components —
-      // every value integer, so the labeling hashes exactly
-      "semdedup" ->
-        (SemdedupReachCte +
-          " SELECT b.vec_id, b.label, r.component," +
-          " CAST(b.vec_id <> r.component AS INTEGER) AS is_dup" +
-          " FROM (SELECT node, min(lbl) AS component FROM reach" +
-          " GROUP BY node) r JOIN base b ON b.vec_id = r.node"),
-
-      // survivors of the applied semantic dedup: a vector is kept iff
-      // it IS its component's minimum id
-      "semdedup_keep" ->
-        (SemdedupReachCte +
-          " SELECT b.vec_id, b.label" +
-          " FROM (SELECT node, min(lbl) AS component FROM reach" +
-          " GROUP BY node) r JOIN base b ON b.vec_id = r.node" +
-          " WHERE b.vec_id = r.component"),
-
-      // the standalone Lloyd labeling, replayed end-to-end
-      "kmeans_assign" ->
-        ("WITH base0 AS (SELECT vec_id, embedding FROM embeddings), " +
-          kmeansLabelSql() + " SELECT vec_id, label FROM klabel"),
-
-      // k-means labels feeding the semantic-dedup reach — the full
-      // raw-embeddings-to-verdict replay in one statement
-      "semdedup_e2e" ->
-        ("WITH RECURSIVE base0 AS (" +
-          "SELECT vec_id, embedding FROM embeddings UNION ALL " +
-          "SELECT vec_id + 10000000, embedding FROM embeddings " +
-          "WHERE vec_id % 17 = 0), " +
-          kmeansLabelSql() + ", " +
-          "base AS (SELECT vec_id, embedding, label FROM klabel), " +
-          SemdedupReachSuffix +
-          " SELECT b.vec_id, b.label, r.component," +
-          " CAST(b.vec_id <> r.component AS INTEGER) AS is_dup" +
-          " FROM (SELECT node, min(lbl) AS component FROM reach" +
-          " GROUP BY node) r JOIN base b ON b.vec_id = r.node"),
-
-      // the applied end-to-end form: survivors only
-      "semdedup_keep_e2e" ->
-        ("WITH RECURSIVE base0 AS (" +
-          "SELECT vec_id, embedding FROM embeddings UNION ALL " +
-          "SELECT vec_id + 10000000, embedding FROM embeddings " +
-          "WHERE vec_id % 17 = 0), " +
-          kmeansLabelSql() + ", " +
-          "base AS (SELECT vec_id, embedding, label FROM klabel), " +
-          SemdedupReachSuffix +
-          " SELECT b.vec_id, b.label" +
-          " FROM (SELECT node, min(lbl) AS component FROM reach" +
-          " GROUP BY node) r JOIN base b ON b.vec_id = r.node" +
-          " WHERE b.vec_id = r.component"),
-
-      // winnowing guarantee gate: recall floor is 100 BY THEOREM
-      // (shared ≥7-token run ⇒ shared fingerprint; plants share ≥49)
-      "winnowing_planted_overlap" ->
-        (s"SELECT count(*) AS planted_total, TRUE AS recall_ok " +
-          s"FROM documents WHERE doc_id % $PlantMod = 0 " +
-          s"AND len(string_split($NormTextSql, ' ')) >= $PlantMinTokens"),
-
-      "text_stats" ->
-        (s"SELECT doc_id, $statsCols FROM documents WHERE length(trim(text)) > 0"),
-
-      "langid_confidence" ->
-        (s"WITH h AS (SELECT doc_id, ${hitCols.mkString(", ")} " +
-          "FROM documents), " +
-          s"h2 AS (SELECT doc_id, CASE WHEN $great = 0 THEN 'und' " +
-          s"WHEN en_hits = $great THEN 'en' " +
-          s"WHEN de_hits = $great THEN 'de' " +
-          s"WHEN fr_hits = $great THEN 'fr' " +
-          s"WHEN es_hits = $great THEN 'es' ELSE 'zh' END AS lang_guess, " +
-          "list_reverse_sort([en_hits, de_hits, fr_hits, es_hits, " +
-          "zh_hits]) AS l FROM h) " +
-          "SELECT doc_id, lang_guess, l[1] AS top1, l[2] AS top2, " +
-          "l[1] - l[2] AS margin, " +
-          "CAST(l[1] > 0 AND l[1] - l[2] >= 2 AS INTEGER) AS confident " +
-          "FROM h2"),
-
-      // the plant rendered codepoint-for-codepoint via chr(); each
-      // telltale counted by the same length-difference arithmetic
-      // (// = DuckDB integer division; the diffs are exact multiples).
-      // The Latin-1 telltale is the ANCHORED two-char class (chr(195)
-      // + continuation range, \x{..} is RE2's codepoint escape) —
-      // bare chr(195) also occurs in legitimate text (ADVICE r17)
-      "mojibake_census" ->
-        ("""WITH d AS (SELECT doc_id,
-           |  CASE WHEN doc_id % 7 = 0 THEN text || ' caff' ||
-           |    chr(195) || chr(168) || ' ' || chr(226) || chr(8364) ||
-           |    chr(8221) || ' ' || chr(65533)
-           |  ELSE text END AS text FROM documents)
-           |SELECT doc_id,
-           |  CAST(length(text) - length(replace(text, chr(65533), ''))
-           |    AS BIGINT) AS n_replacement,
-           |  CAST((length(text) - length(regexp_replace(text,
-           |    chr(195) || '[\x{80}-\x{BF}]', '', 'g'))) // 2
-           |    AS BIGINT) AS n_latin1_utf8,
-           |  CAST((length(text) -
-           |    length(replace(text, chr(226) || chr(8364), ''))) // 2
-           |    AS BIGINT) AS n_punct_mojibake,
-           |  CAST(CASE WHEN
-           |    (length(text) - length(replace(text, chr(65533), ''))) +
-           |    ((length(text) - length(regexp_replace(text,
-           |      chr(195) || '[\x{80}-\x{BF}]', '', 'g'))) // 2) +
-           |    (length(text) -
-           |     length(replace(text, chr(226) || chr(8364), ''))) > 0
-           |    THEN 1 ELSE 0 END AS INTEGER) AS damaged
-           |FROM d ORDER BY doc_id"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      "lang_id" ->
-        (s"WITH h AS (SELECT doc_id, lang, ${hitCols.mkString(", ")} FROM documents) " +
-          s"SELECT doc_id, lang, CASE WHEN $great = 0 THEN 'und' " +
-          s"WHEN en_hits = $great THEN 'en' WHEN de_hits = $great THEN 'de' " +
-          s"WHEN fr_hits = $great THEN 'fr' WHEN es_hits = $great THEN 'es' " +
-          "ELSE 'zh' END AS lang_guess, " +
-          "en_hits, de_hits, fr_hits, es_hits, zh_hits FROM h"),
-
-      // the same generated guess CASE, folded to the confusion cells
-      "langid_confusion" ->
-        (s"WITH h AS (SELECT lang, ${hitCols.mkString(", ")} FROM documents), " +
-          s"g AS (SELECT lang, CASE WHEN $great = 0 THEN 'und' " +
-          s"WHEN en_hits = $great THEN 'en' WHEN de_hits = $great THEN 'de' " +
-          s"WHEN fr_hits = $great THEN 'fr' WHEN es_hits = $great THEN 'es' " +
-          "ELSE 'zh' END AS lang_guess FROM h) " +
-          "SELECT lang, lang_guess, CAST(count(*) AS BIGINT) AS n " +
-          "FROM g GROUP BY 1, 2 ORDER BY 1, 2"),
-
-      // per-source masses from the same generated quality fragments;
-      // complements by subtraction from the grand total
-      "source_ablation" ->
-        (s"WITH s AS (SELECT source, $statsCols, " +
-          s"${hitsSql(allMarkers)} AS stop_hits " +
-          "FROM documents WHERE length(trim(text)) > 0), " +
-          "g AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs, " +
-          "CAST(sum(word_cnt) AS BIGINT) AS n_tokens, " +
-          "CAST(sum(CASE WHEN char_len >= 64 " +
-          "AND punct_cnt * 5 <= char_len AND digit_cnt * 5 <= char_len " +
-          "AND stop_hits > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_good " +
-          "FROM s GROUP BY source), " +
-          "t AS (SELECT sum(n_docs) AS t_docs, sum(n_tokens) AS t_tokens, " +
-          "sum(n_good) AS t_good FROM g) " +
-          "SELECT source, n_docs, n_tokens, n_good, " +
-          "CAST(t_docs - n_docs AS BIGINT) AS docs_without, " +
-          "CAST(t_tokens - n_tokens AS BIGINT) AS tokens_without, " +
-          "CAST(t_good - n_good AS BIGINT) AS good_without " +
-          "FROM g CROSS JOIN t ORDER BY source"),
-
-      "quality_score" ->
-        (s"WITH s AS (SELECT doc_id, $statsCols, " +
-          s"${hitsSql(allMarkers)} AS stop_hits " +
-          "FROM documents WHERE length(trim(text)) > 0) " +
-          "SELECT doc_id, char_len, word_cnt, punct_cnt, digit_cnt, stop_hits, " +
-          "CASE WHEN char_len < 64 THEN 'too_short' " +
-          "WHEN punct_cnt * 5 > char_len THEN 'punct_noise' " +
-          "WHEN digit_cnt * 5 > char_len THEN 'digit_noise' " +
-          "WHEN stop_hits = 0 THEN 'no_stopwords' ELSE 'good' END AS quality FROM s"),
-
-      // both raters replayed from the same generated fragments the
-      // Spark side folds (quality when-chain + classifier score);
-      // kappa pieces in HUGEINT, wide values shipped as VARCHAR
-      "annotator_agreement" ->
-        (s"""WITH s AS (SELECT doc_id, $statsCols,
-           |    ${hitsSql(allMarkers)} AS stop_hits,
-           |    $ClassifierScoreSql AS cscore
-           |  FROM documents WHERE length(trim(text)) > 0),
-           |t AS (SELECT
-           |    CASE WHEN char_len < 64 THEN 0
-           |      WHEN punct_cnt * 5 > char_len THEN 0
-           |      WHEN digit_cnt * 5 > char_len THEN 0
-           |      WHEN stop_hits = 0 THEN 0 ELSE 1 END AS a,
-           |    CASE WHEN cscore >= 0 THEN 1 ELSE 0 END AS b FROM s),
-           |g AS (SELECT CAST(count(*) AS HUGEINT) AS n,
-           |    CAST(sum(CASE WHEN a = b THEN 1 ELSE 0 END) AS HUGEINT)
-           |      AS n_agree,
-           |    CAST(sum(a) AS HUGEINT) AS a_pos,
-           |    CAST(sum(b) AS HUGEINT) AS b_pos FROM t)
-           |SELECT CAST(n AS BIGINT) AS n,
-           |  CAST(n_agree AS BIGINT) AS n_agree,
-           |  CAST(a_pos AS BIGINT) AS a_pos,
-           |  CAST(b_pos AS BIGINT) AS b_pos,
-           |  CAST(n * n_agree - (a_pos * b_pos + (n - a_pos) *
-           |    (n - b_pos)) AS VARCHAR) AS kappa_num,
-           |  CAST(n * n - (a_pos * b_pos + (n - a_pos) * (n - b_pos))
-           |    AS VARCHAR) AS kappa_den,
-           |  ((n * n_agree - (a_pos * b_pos + (n - a_pos) *
-           |    (n - b_pos))) * 5 > (n * n - (a_pos * b_pos +
-           |    (n - a_pos) * (n - b_pos))) * 2) AS substantial
-           |FROM g"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the linear classifier replay, GENERATED from the same feature
-      // fragments and weight constants the Spark side folds — the two
-      // can't drift
-      "quality_classifier" ->
-        (s"SELECT doc_id, $ClassifierScoreSql AS score, " +
-          s"CAST($ClassifierScoreSql >= 0 AS INTEGER) AS keep " +
-          "FROM documents"),
-
-      // the calibration report replays both replayable signals over
-      // the shared synthesized-corpus CTE (st carries text + every
-      // Gopher stat) and re-aggregates: integer classifier score bins
-      // vs the Gopher rule verdict
-      "classifier_calibration" ->
-        ("WITH " + CurationSynthCtes +
-          s" SELECT CAST(floor(CAST($ClassifierScoreSql AS DOUBLE) " +
-          "/ 50) AS BIGINT) AS bin, count(*) AS n_docs, " +
-          s"CAST(sum(CASE WHEN $GopherCondSql THEN 1 ELSE 0 END) " +
-          "AS BIGINT) AS n_gopher_pass FROM st GROUP BY bin"),
-
-      // shard = md5 first-byte value folded mod 16 (ascii arithmetic —
-      // no hex-parse builtin assumed), pos = rank of the hash within
-      // the shard; same tie-break (hash, doc_id) as the Spark window
-      "train_shard_layout" -> {
-        def nib(i: Int) =
-          s"(CASE WHEN ascii(substr(h, $i, 1)) < 58 " +
-            s"THEN ascii(substr(h, $i, 1)) - 48 " +
-            s"ELSE ascii(substr(h, $i, 1)) - 87 END)"
-        s"WITH hs AS (SELECT doc_id, md5($NormTextSql) AS h " +
-          "FROM documents), " +
-          "sh AS (SELECT doc_id, h, " +
-          s"CAST((${nib(1)} * 16 + ${nib(2)}) % 16 AS INTEGER) AS shard " +
-          "FROM hs) " +
-          "SELECT doc_id, shard, " +
-          "CAST(row_number() OVER (PARTITION BY shard ORDER BY h, doc_id) " +
-          "AS BIGINT) AS pos FROM sh"
-      },
-
-      // Gopher rules replayed with the same cross-multiplied integer
-      // arithmetic (no float ratios cross the engine boundary)
-      "gopher_quality" ->
-        (s"WITH s AS (SELECT doc_id, $WsTokOkSql AS ws_tok_ok, " +
-          s"$GopherStatsSql " +
-          "FROM documents WHERE length(trim(text)) > 0) " +
-          s"SELECT *, $GopherRuleSql AS keep FROM s"),
-
-      // C4 line rules replayed over the same synthesized lines.
-      // Positions: DuckDB's range/generate_subscripts are 1-based vs
-      // Spark's 0-based transform index, so the punctuation condition
-      // uses (doc_id + i - 1) here.
-      "c4_line_filter" ->
-        (s"""WITH toks AS (
-            |  SELECT doc_id, string_split($NormTextSql, ' ') AS t
-            |  FROM documents),
-            |ls AS (
-            |  SELECT doc_id, list_transform(range(0, (len(t)-1)//12 + 1),
-            |    i -> array_to_string(t[i*12+1:i*12+12], ' ')) AS la
-            |  FROM toks),
-            |lp AS (SELECT doc_id, list_transform(range(1, len(la)+1),
-            |  i -> CASE WHEN (doc_id + i - 1) % 3 = 0 THEN la[i] || '.'
-            |       ELSE la[i] END) AS la FROM ls),
-            |lj AS (SELECT doc_id, CASE WHEN doc_id % 13 = 0
-            |  THEN list_append(la, 'javascript click right here now.')
-            |  ELSE la END AS la FROM lp),
-            |lines AS (SELECT doc_id, unnest(la) AS line,
-            |  generate_subscripts(la, 1) AS pos FROM lj),
-            |k AS (SELECT doc_id, line, pos,
-            |  (regexp_matches(line, '[.!?"]$$') AND
-            |   len(string_split_regex(trim(line), '\\s+')) >= 5 AND
-            |   NOT contains(lower(line), 'javascript')) AS kept
-            |  FROM lines)
-            |SELECT doc_id, count(*) AS n_lines,
-            |  count(*) FILTER (kept) AS kept_lines,
-            |  coalesce(string_agg(line, chr(10) ORDER BY pos)
-            |    FILTER (kept), '') AS clean_text
-            |FROM k GROUP BY doc_id"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // same CTE chain, reduced to the keep action's per-language
-      // survivor accounting
-      "dsir_select" ->
-        (s"""WITH g AS (
-           |  SELECT doc_id, substring(md5(w), 1, 2) AS bk FROM (
-           |    SELECT doc_id, unnest(list_filter(
-           |      string_split($NormTextSql, ' '),
-           |      w -> length(w) > 0)) AS w
-           |    FROM documents WHERE text IS NOT NULL)),
-           |tg AS (
-           |  SELECT substring(md5(w), 1, 2) AS bk, count(*) AS t_cnt
-           |  FROM (
-           |    SELECT unnest(list_filter(
-           |      string_split($NormTextSql, ' '),
-           |      w -> length(w) > 0)) AS w
-           |    FROM documents WHERE text IS NOT NULL AND lang = 'en')
-           |  GROUP BY 1),
-           |sc AS (SELECT bk, count(*) AS s_cnt FROM g GROUP BY 1),
-           |st AS (SELECT CAST(sum(s_cnt) AS BIGINT) AS s_tot FROM sc),
-           |tt AS (SELECT CAST(sum(t_cnt) AS BIGINT) AS t_tot FROM tg),
-           |sw AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-           |    CAST(sum(length(bin(s_tot // s_cnt)) -
-           |      CASE WHEN t_cnt IS NULL THEN 20
-           |      ELSE length(bin(t_tot // t_cnt)) END) AS BIGINT)
-           |      AS score_bits
-           |  FROM g JOIN sc USING (bk) LEFT JOIN tg USING (bk)
-           |  CROSS JOIN st CROSS JOIN tt
-           |  GROUP BY doc_id)
-           |SELECT lang, count(*) AS kept_docs,
-           |  CAST(sum(n_grams) AS BIGINT) AS kept_grams
-           |FROM sw JOIN documents USING (doc_id)
-           |WHERE score_bits >= 0 GROUP BY 1"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      "doc_fingerprint" ->
-        (s"SELECT doc_id, md5($NormTextSql) AS fingerprint FROM documents"),
-
-      // the oracle replays the pack as ONE global running sum — the
-      // equivalence of the bucketed offsets + boundary-window plan to
-      // the global greedy prefix is exactly what is being checked
-      "token_budget_pack" ->
-        (s"WITH s AS (SELECT doc_id, $statsCols, " +
-          s"${hitsSql(allMarkers)} AS stop_hits " +
-          "FROM documents WHERE length(trim(text)) > 0), " +
-          "r AS (SELECT doc_id, CASE WHEN char_len < 64 THEN 0 " +
-          "WHEN punct_cnt * 5 > char_len THEN 1 " +
-          "WHEN digit_cnt * 5 > char_len THEN 2 " +
-          "WHEN stop_hits = 0 THEN 3 ELSE 4 END AS qrank, " +
-          "word_cnt AS n_tok FROM s), " +
-          "c AS (SELECT *, CAST(sum(n_tok) OVER " +
-          "(ORDER BY qrank DESC, doc_id) AS BIGINT) AS cum FROM r) " +
-          "SELECT doc_id, CAST(qrank AS BIGINT) AS qrank, n_tok " +
-          "FROM c WHERE cum <= 20000"),
-
-      "train_eval_split" ->
-        ("SELECT doc_id, CASE WHEN substring(md5(text), 1, 4) < " +
-          s"'${Sampling.thresholdHex(0.05)}' THEN 'eval' ELSE 'train' " +
-          "END AS split FROM documents"),
-
-      // the components CTE replayed, every member md5-split by its
-      // representative (= component = min doc_id) document's text
-      "split_leakage_safe" ->
-        (NeardupReachCte +
-          ", comp AS (SELECT node, min(lbl) AS component" +
-          " FROM reach GROUP BY node)" +
-          " SELECT c.node AS doc_id, c.component," +
-          " CASE WHEN substring(md5(d.text), 1, 4) < " +
-          s"'${Sampling.thresholdHex(0.2)}' THEN 'eval' ELSE 'train'" +
-          " END AS split FROM comp c" +
-          " JOIN documents d ON d.doc_id = c.component"),
-
-      // candidate pairs straddling the split boundary: naive per-doc
-      // hash split vs the cluster-rep split (structurally 0)
-      "split_leakage_audit" ->
-        (NeardupReachCte +
-          ", comp AS (SELECT node, min(lbl) AS component" +
-          " FROM reach GROUP BY node)" +
-          ", rsplit AS (SELECT c.node AS doc_id," +
-          " CASE WHEN substring(md5(d.text), 1, 4) < " +
-          s"'${Sampling.thresholdHex(0.2)}' THEN 'eval' ELSE 'train'" +
-          " END AS split FROM comp c" +
-          " JOIN documents d ON d.doc_id = c.component)" +
-          ", nsplit AS (SELECT doc_id," +
-          " CASE WHEN substring(md5(text), 1, 4) < " +
-          s"'${Sampling.thresholdHex(0.2)}' THEN 'eval' ELSE 'train'" +
-          " END AS split FROM documents)" +
-          ", na AS (SELECT count(*) AS n_pairs," +
-          " count(CASE WHEN a.split <> b.split THEN 1 END)" +
-          " AS naive_leaks FROM edges0 e" +
-          " JOIN nsplit a ON a.doc_id = e.src" +
-          " JOIN nsplit b ON b.doc_id = e.dst)" +
-          ", sa AS (SELECT count(CASE WHEN a.split <> b.split THEN 1" +
-          " END) AS safe_leaks FROM edges0 e" +
-          " JOIN rsplit a ON a.doc_id = e.src" +
-          " JOIN rsplit b ON b.doc_id = e.dst)" +
-          " SELECT na.n_pairs, na.naive_leaks, sa.safe_leaks" +
-          " FROM na CROSS JOIN sa"),
-
-      "corpus_report" ->
-        (s"WITH h AS (SELECT doc_id, text, ${hitCols.mkString(", ")} " +
-          "FROM documents), " +
-          s"l AS (SELECT CASE WHEN $great = 0 THEN 'und' " +
-          s"WHEN en_hits = $great THEN 'en' WHEN de_hits = $great THEN 'de' " +
-          s"WHEN fr_hits = $great THEN 'fr' WHEN es_hits = $great THEN 'es' " +
-          "ELSE 'zh' END AS lang_guess, " +
-          "CAST(length(text) AS BIGINT) AS char_len, " +
-          "CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) " +
-          "AS word_cnt FROM h) " +
-          "SELECT lang_guess, count(*) AS n_docs, " +
-          "CAST(sum(word_cnt) AS BIGINT) AS total_tokens, " +
-          "CAST(sum(char_len) AS BIGINT) AS total_chars, " +
-          "min(char_len) AS min_chars, max(char_len) AS max_chars " +
-          "FROM l GROUP BY lang_guess"),
-
-      // same distinct-3-gram fragment the neardup reach CTE proves
-      // equivalent to the native shingles node
-      "ngram_novelty" ->
-        (s"WITH g AS (SELECT doc_id, unnest(list_distinct(list_transform(" +
-          "range(0, greatest(len(toks) - 3, 0) + 1), " +
-          "i -> array_to_string(toks[i+1:i+3], ' ')))) AS gram " +
-          s"FROM (SELECT doc_id, string_split($NormTextSql, ' ') AS toks " +
-          "FROM documents)), " +
-          "r AS (SELECT DISTINCT gram FROM g WHERE doc_id % 20 = 0) " +
-          "SELECT g.doc_id, count(*) AS grams_total, " +
-          "CAST(sum(CASE WHEN r.gram IS NOT NULL THEN 1 ELSE 0 END) " +
-          "AS BIGINT) AS grams_known " +
-          "FROM g LEFT JOIN r ON g.gram = r.gram GROUP BY g.doc_id"),
-
-      "unigram_surprisal" ->
-        (s"WITH tf AS (SELECT doc_id, tok, count(*) AS tf FROM " +
-          s"(SELECT doc_id, unnest(string_split($NormTextSql, ' ')) AS tok " +
-          "FROM documents) GROUP BY doc_id, tok), " +
-          "c AS (SELECT tok, CAST(sum(tf) AS BIGINT) AS cnt " +
-          "FROM tf GROUP BY tok), " +
-          "t AS (SELECT CAST(sum(tf) AS BIGINT) AS n_total FROM tf) " +
-          "SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tok, " +
-          "CAST(sum(tf * length(bin(n_total // cnt))) AS BIGINT) " +
-          "AS surprisal_bits " +
-          "FROM tf JOIN c USING (tok) CROSS JOIN t GROUP BY doc_id"),
-
-      // both signal pipelines replay, then the same nine cutoffs per
-      // signal — the EXPLICIT integer nearest-rank rule k=(i*n+9)//10,
-      // not quantile_disc, whose convention differs from Spark's
-      // percentile_disc for some group sizes — and the strictly-below
-      // bucket count
-      "quality_blend" ->
-        (s"""WITH tf AS (
-           |  SELECT doc_id, tok, count(*) AS tf FROM (
-           |    SELECT doc_id, unnest(string_split($NormTextSql, ' '))
-           |      AS tok FROM documents) GROUP BY doc_id, tok),
-           |cg AS (SELECT tok, CAST(sum(tf) AS BIGINT) AS cnt
-           |       FROM tf GROUP BY tok),
-           |tot AS (SELECT CAST(sum(tf) AS BIGINT) AS n_total FROM tf),
-           |srp AS (SELECT doc_id,
-           |  CAST(sum(tf * length(bin(n_total // cnt))) AS BIGINT)
-           |    AS surprisal_bits
-           |  FROM tf JOIN cg USING (tok) CROSS JOIN tot GROUP BY doc_id),
-           |cls AS (SELECT doc_id, $ClassifierScoreSql AS score
-           |        FROM documents),
-           |j AS (SELECT doc_id, score, surprisal_bits
-           |      FROM cls JOIN srp USING (doc_id)),
-           |ql AS (SELECT list_sort(list(score)) AS lc,
-           |  list_sort(list(surprisal_bits)) AS ls FROM j),
-           |q AS (SELECT
-           |  list_transform(range(1, 10),
-           |    i -> lc[(i * len(lc) + 9) // 10]) AS qc,
-           |  list_transform(range(1, 10),
-           |    i -> ls[(i * len(ls) + 9) // 10]) AS qs FROM ql)
-           |SELECT doc_id,
-           |  CAST(len(list_filter(qc, c -> score > c)) AS INTEGER)
-           |    AS d_cls,
-           |  CAST(len(list_filter(qs, c -> surprisal_bits > c))
-           |    AS INTEGER) AS d_srp,
-           |  CAST(len(list_filter(qc, c -> score > c)) +
-           |    len(list_filter(qs, c -> surprisal_bits > c))
-           |    AS INTEGER) AS blend
-           |FROM j CROSS JOIN q"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // identical integer arithmetic one order up: conditional
-      // bit-lengths over MLE bigram counts, 1-based list indexing
-      "bigram_surprisal" ->
-        (s"""WITH t AS (
-           |  SELECT doc_id, string_split($NormTextSql, ' ') AS tk
-           |  FROM documents),
-           |bg AS (SELECT doc_id, unnest(list_transform(
-           |    range(1, len(tk)), i -> {'prev': tk[i], 'w': tk[i+1]}))
-           |    AS s FROM t),
-           |tf AS (SELECT doc_id, s.prev AS prev, s.w AS w,
-           |       count(*) AS tf FROM bg GROUP BY 1, 2, 3),
-           |c AS (SELECT prev, w, CAST(sum(tf) AS BIGINT) AS c_bw
-           |      FROM tf GROUP BY 1, 2),
-           |cp AS (SELECT prev, CAST(sum(c_bw) AS BIGINT) AS c_prev
-           |       FROM c GROUP BY 1)
-           |SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_bigrams,
-           |  CAST(sum(tf * length(bin(c_prev // c_bw))) AS BIGINT)
-           |    AS surprisal_bits
-           |FROM tf JOIN c USING (prev, w) JOIN cp USING (prev)
-           |GROUP BY doc_id"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the same bigram extraction CTE as bigram_surprisal, reduced to
-      // the four KN count tables; ORDER BY c_bw DESC with the
-      // (prev, w) tie-break keeps the top-50 SET deterministic
-      "kn_continuation" ->
-        (s"""WITH t AS (
-           |  SELECT doc_id, string_split($NormTextSql, ' ') AS tk
-           |  FROM documents),
-           |bgx AS (SELECT doc_id, unnest(list_transform(
-           |    range(1, len(tk)), i -> {'prev': tk[i], 'w': tk[i+1]}))
-           |    AS s FROM t),
-           |bg AS (SELECT s.prev AS prev, s.w AS w FROM bgx),
-           |c AS (SELECT prev, w, CAST(count(*) AS BIGINT) AS c_bw
-           |  FROM bg GROUP BY 1, 2),
-           |cp AS (SELECT prev, CAST(sum(c_bw) AS BIGINT) AS c_prev,
-           |  count(*) AS n1p_right FROM c GROUP BY 1),
-           |cw AS (SELECT w, count(*) AS n1p_left FROM c GROUP BY 1),
-           |ty AS (SELECT count(*) AS bigram_types FROM c)
-           |SELECT prev, w, c_bw, c_prev, n1p_right, n1p_left,
-           |  bigram_types
-           |FROM c JOIN cp USING (prev) JOIN cw USING (w) CROSS JOIN ty
-           |ORDER BY c_bw DESC, prev, w LIMIT 50"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // Bigram list built like ngram_jaccard_pairs' but NOT dedup'd —
-      // the duplicate fraction is the signal.
-      "repetition_stats" ->
-        (s"""WITH g AS (
-           |  SELECT doc_id, list_transform(
-           |    range(0, greatest(len(toks) - 2, 0) + 1),
-           |    i -> array_to_string(toks[i+1:i+2], ' ')) AS grams
-           |  FROM (SELECT doc_id, string_split($NormTextSql, ' ') AS toks
-           |        FROM documents))
-           |SELECT doc_id,
-           |  CAST(len(grams) AS BIGINT) AS total_ngrams,
-           |  CAST(len(list_distinct(grams)) AS BIGINT) AS distinct_ngrams,
-           |  CASE WHEN (len(grams) - len(list_distinct(grams))) * 5
-           |       > len(grams) THEN 1 ELSE 0 END AS is_repetitive
-           |FROM g"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      "mm_describe_binary" ->
-        ("SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes, " +
-          // DuckDB's sha256 takes VARCHAR (hashing its UTF-8 bytes) —
-          // identical to Spark's sha2 over the UTF-8-encoded payload.
-          "sha256(text) AS sha256, " +
-          // DuckDB 1.x can't substring a BLOB — hex the whole payload
-          // and take the first 16 hex chars (= first 8 bytes).
-          "lower(substring(hex(encode(text)), 1, 16)) AS header_hex FROM documents"),
-
-      "mm_featurize" -> {
-        // high-nibble-per-byte string: hex() emits 2 chars per byte,
-        // the regexp collapses each pair to its first (high) nibble
-        val binCols = (0 until 16).map { i =>
-          val hexUp = f"$i%X" // hex() output is uppercase
-          val name = f"bin_$i%x"
-          s"CAST(length(hn) - length(replace(hn, '$hexUp', '')) AS BIGINT) AS $name"
-        }
-        "WITH hh AS (SELECT doc_id, " +
-          "regexp_replace(hex(encode(text)), '(.).', '\\1', 'g') AS hn " +
-          "FROM documents) " +
-          s"SELECT doc_id, ${binCols.mkString(", ")} FROM hh"
-      },
-
-      "mm_resize" ->
-        ("SELECT doc_id, 8 AS width, 8 AS height, " +
-          "CASE WHEN octet_length(encode(text)) = 0 THEN repeat('00', 64) " +
-          "ELSE lower(substr(repeat(hex(encode(text)), " +
-          "(64 // octet_length(encode(text))) + 1), 1, 128)) END " +
-          "AS resized_hex FROM documents"),
-
-      "mm_sample_frames" ->
-        ("SELECT doc_id, unnest(generate_series(0, length(text) * 10, 250)) " +
-          "AS frame_ts_ms FROM documents"),
-
-      // the oracle PREDICTS what a correct codec roundtrip recovers —
-      // it never decodes; mismatch = the real ImageIO path broke
-      "mm_image_roundtrip" ->
-        ("SELECT doc_id, CAST(doc_id % 13 + 1 AS INTEGER) AS width, " +
-          "CAST(doc_id % 11 + 1 AS INTEGER) AS height, " +
-          "doc_id * 7 % 256 AS mean_r, doc_id * 13 % 256 AS mean_g, " +
-          "doc_id * 29 % 256 AS mean_b FROM documents WHERE doc_id < 200"),
-
-      "mm_image_resize" ->
-        ("SELECT doc_id, CAST(5 AS INTEGER) AS width, " +
-          "CAST(3 AS INTEGER) AS height, " +
-          "doc_id * 7 % 256 AS mean_r, doc_id * 13 % 256 AS mean_g, " +
-          "doc_id * 29 % 256 AS mean_b FROM documents WHERE doc_id < 200"),
-
-      // every statistic of the planted square wave predicted from the
-      // id: |s| == amp everywhere, and the weighted checksum replays
-      // the per-sample sign pattern via range() — the oracle decodes
-      // nothing
-      "mm_audio_features" ->
-        ("SELECT doc_id, CAST(8000 AS INTEGER) AS sample_rate, " +
-          "CAST(1 AS INTEGER) AS channels, " +
-          "CAST(200 + doc_id % 50 AS BIGINT) AS n_samples, " +
-          "CAST(doc_id * 31 % 32768 AS BIGINT) AS peak_abs, " +
-          "CAST(doc_id * 31 % 32768 AS BIGINT) AS mean_abs, " +
-          "CAST((doc_id * 31 % 32768) * list_sum(list_transform(" +
-          "range(0, CAST(200 + doc_id % 50 AS BIGINT)), " +
-          "i -> CASE WHEN (i // (doc_id % 7 + 1)) % 2 = 0 " +
-          "THEN i % 17 + 1 ELSE -(i % 17 + 1) END)) AS BIGINT) AS wsum " +
-          "FROM documents WHERE doc_id < 200"),
-
-      // the planted solid frames mean the per-frame channel means ARE
-      // the planted colors; the frame-order-weighted checksum replays
-      // the frame sequence via range() — the oracle decodes nothing
-      "mm_video_roundtrip" ->
-        ("SELECT doc_id, CAST(doc_id % 13 + 1 AS INTEGER) AS width, " +
-          "CAST(doc_id % 11 + 1 AS INTEGER) AS height, " +
-          "CAST(doc_id % 6 + 2 AS BIGINT) AS n_frames, " +
-          "CAST(list_sum(list_transform(range(0, doc_id % 6 + 2), " +
-          "f -> ((doc_id * 7 + f * 31) % 256 * 3 + " +
-          "(doc_id * 13 + f * 17) % 256 * 5 + " +
-          "(doc_id * 29 + f * 53) % 256 * 7) * (f + 1))) AS BIGINT) " +
-          "AS wsum FROM documents WHERE doc_id < 200"),
-
-      "mm_video_frames" ->
-        ("SELECT doc_id, CAST(f AS BIGINT) AS frame_idx, " +
-          "(doc_id * 7 + f * 31) % 256 AS mean_r, " +
-          "(doc_id * 13 + f * 17) % 256 AS mean_g, " +
-          "(doc_id * 29 + f * 53) % 256 AS mean_b FROM (" +
-          "SELECT doc_id, unnest(range(0, doc_id % 6 + 2)) AS f " +
-          "FROM documents WHERE doc_id < 200) WHERE f % 2 = 0"),
-
-      // corrupt-payload census: corruption mode → failure class is
-      // pure id arithmetic by construction (container-level checks;
-      // the truncation cut retreats past any accidental
-      // trailer-mimicking byte), so the oracle replays the whole
-      // census without decoding a byte; intact payloads classifying
-      // 'ok' rides on the three roundtrip oracles proving the
-      // codecs decode these exact pattern payloads
-      "mm_corrupt_census" ->
-        ("WITH c AS (SELECT doc_id, " +
-          "CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'wav' " +
-          "ELSE 'gif' END AS modality, " +
-          "CASE doc_id % 7 WHEN 0 THEN 'empty' " +
-          "WHEN 2 THEN 'bad_magic' WHEN 4 THEN 'truncated' " +
-          "ELSE 'ok' END AS failure_class FROM documents) " +
-          "SELECT modality, failure_class, " +
-          "CAST(count(*) AS BIGINT) AS n_payloads, " +
-          "CAST(sum(CASE WHEN failure_class = 'ok' THEN 1 ELSE 0 END) " +
-          "AS BIGINT) AS n_ok " +
-          "FROM c GROUP BY 1, 2 ORDER BY 1, 2"),
-
-      "time_window_agg" ->
-        ("SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) " +
-          "AS hour_epoch, event_type, count(*) AS cnt, " +
-          "min(value) AS min_v, max(value) AS max_v " +
-          "FROM events GROUP BY 1, 2"),
-
-      // The sign-LSH bucket key is fully replayable in SQL: the
-      // hyperplanes are deterministic ±1 driver-side literals
-      // (Similarity.hyperplanes), rendered here into the generated
-      // oracle so the two sides can't drift. Sign decisions are
-      // float-margin-safe: ±1 products are EXACT in both engines
-      // (a sign flip never rounds), so only accumulation-order noise
-      // (≲1e-5 even if one engine accumulated in f32) remains — the
-      // measured |projection| floor on the sf0.01 embeddings is
-      // 3.5e-4, ~35× above it. Bits are disjoint powers of two —
-      // SUM ≡ bitwise OR.
-      "ann_lsh_buckets" -> {
-        val bucket = graft.ops.Similarity.hyperplanes(numBits = 12, dims = 64)
-          .zipWithIndex.map { case (p, j) =>
-            val lst = p.map(v => if (v > 0) "1.0" else "-1.0")
-              .mkString("[", ", ", "]")
-            s"(CASE WHEN list_dot_product(embedding, $lst) >= 0 " +
-              s"THEN ${1 << j} ELSE 0 END)"
-          }.mkString(" + ")
-        s"SELECT vec_id, label, CAST($bucket AS INTEGER) AS bucket " +
-          "FROM embeddings"
-      },
-
-      // 6-bit plane-literal replay (same seed draws the 12-bit set's
-      // prefix); ×3 plant rendered with the literal FLOAT cast so the
-      // multiply rounds once in f32 like Spark's; int8 sums, counts
-      // and the cross-multiplied L1 all exact BIGINTs
-      "embedding_drift" -> {
-        val bucket = graft.ops.Similarity.hyperplanes(numBits = 6, dims = 64)
-          .zipWithIndex.map { case (p, j) =>
-            val lst = p.map(v => if (v > 0) "1.0" else "-1.0")
-              .mkString("[", ", ", "]")
-            s"(CASE WHEN list_dot_product(embedding, $lst) >= 0 " +
-              s"THEN ${1 << j} ELSE 0 END)"
-          }.mkString(" + ")
-        val q8 = "list_transform(embedding, v -> CAST(greatest(least(" +
-          "floor(CAST(v AS DOUBLE) * 64), 127), -128) AS BIGINT))"
-        s"""WITH oldv AS (SELECT embedding FROM embeddings
-           |  WHERE vec_id % 2 = 0),
-           |newv AS (SELECT CASE WHEN vec_id % 11 = 0
-           |    THEN list_transform(embedding,
-           |      v -> CAST(v * CAST(3.0 AS FLOAT) AS FLOAT))
-           |    ELSE embedding END AS embedding
-           |  FROM embeddings WHERE vec_id % 2 = 1),
-           |bo AS (SELECT CAST($bucket AS INTEGER) AS bucket, $q8 AS q8
-           |  FROM oldv),
-           |bn AS (SELECT CAST($bucket AS INTEGER) AS bucket, $q8 AS q8
-           |  FROM newv),
-           |co AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_old
-           |  FROM bo GROUP BY 1),
-           |cn AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_new
-           |  FROM bn GROUP BY 1),
-           |so AS (SELECT bucket, pos, CAST(sum(v) AS BIGINT) AS s_old
-           |  FROM (SELECT bucket, unnest(q8) AS v,
-           |    generate_subscripts(q8, 1) AS pos FROM bo) GROUP BY 1, 2),
-           |sn AS (SELECT bucket, pos, CAST(sum(v) AS BIGINT) AS s_new
-           |  FROM (SELECT bucket, unnest(q8) AS v,
-           |    generate_subscripts(q8, 1) AS pos FROM bn) GROUP BY 1, 2),
-           |cc AS (SELECT coalesce(co.bucket, cn.bucket) AS bucket,
-           |  coalesce(n_old, 0) AS n_old, coalesce(n_new, 0) AS n_new
-           |  FROM co FULL JOIN cn ON co.bucket = cn.bucket),
-           |l1 AS (SELECT bucket, CAST(sum(abs(
-           |    coalesce(s_new, 0) * n_old - coalesce(s_old, 0) * n_new))
-           |    AS BIGINT) AS l1_num
-           |  FROM (SELECT coalesce(so.bucket, sn.bucket) AS bucket,
-           |      s_old, s_new FROM so FULL JOIN sn
-           |      ON so.bucket = sn.bucket AND so.pos = sn.pos) j
-           |  JOIN cc USING (bucket) GROUP BY bucket)
-           |SELECT cc.bucket, n_old, n_new,
-           |  coalesce(l1_num, 0) AS l1_num,
-           |  (n_old = 0 OR n_new = 0 OR
-           |   coalesce(l1_num, 0) > 256 * n_old * n_new) AS drifted,
-           |  (n_old < 100 OR n_new < 100) AS low_mass
-           |FROM cc LEFT JOIN l1 USING (bucket) ORDER BY cc.bucket"""
-          .stripMargin.replaceAll("\\s+", " ").trim
-      },
-
-      // Same plane-literal replay as ann_lsh_buckets, 8-bit planes
-      // (the same seed draws the 12-bit set's prefix, but rendered
-      // independently from the same constants). The planted-near-dup
-      // prep is replayed verbatim: +0.25 on the first coordinate, with
-      // the literal CAST to FLOAT so the add is FLOAT+FLOAT → computed
-      // and rounded ONCE in f32, exactly like Spark's float add — no
-      // reliance on the double sum being exact at any magnitude.
-      "cosine_neardup_pairs" -> {
-        def bucketSql(vecCol: String): String =
-          graft.ops.Similarity.hyperplanes(numBits = 8, dims = 64)
-            .zipWithIndex.map { case (p, j) =>
-              val lst = p.map(v => if (v > 0) "1.0" else "-1.0")
-                .mkString("[", ", ", "]")
-              s"(CASE WHEN list_dot_product($vecCol, $lst) >= 0 " +
-                s"THEN ${1 << j} ELSE 0 END)"
-            }.mkString("(", " + ", ")")
-        "WITH inp AS (SELECT vec_id, embedding FROM embeddings " +
-          "UNION ALL SELECT vec_id + 1000000, " +
-          "list_concat([CAST(embedding[1] + CAST(0.25 AS FLOAT) AS FLOAT)], " +
-          "embedding[2:]) FROM embeddings WHERE vec_id % 97 = 0), " +
-          s"b AS (SELECT vec_id, embedding, ${bucketSql("embedding")} " +
-          "AS bucket FROM inp) " +
-          "SELECT l.vec_id AS id_a, r.vec_id AS id_b " +
-          "FROM b l JOIN b r USING (bucket) " +
-          "WHERE l.vec_id < r.vec_id " +
-          "AND list_cosine_similarity(l.embedding, r.embedding) >= 0.95"
-      },
-
-      // Ranks only (no float sim column): verified locally that the
-      // smallest neighbor-similarity gap (~2e-5) is orders of magnitude
-      // above float32 cosine noise, so rank order is engine-stable.
-      "ann_cosine_topk" ->
-        ("WITH q AS (SELECT vec_id AS q_id, embedding AS q_vec " +
-          "FROM embeddings WHERE vec_id < 10), " +
-          "sims AS (SELECT q.q_id, e.vec_id, " +
-          "list_cosine_similarity(q.q_vec, e.embedding) AS sim " +
-          "FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.q_id) " +
-          "SELECT q_id, vec_id, CAST(row_number() OVER " +
-          "(PARTITION BY q_id ORDER BY sim DESC, vec_id) AS INTEGER) AS rk " +
-          "FROM sims QUALIFY rk <= 10"),
-
-      "hard_negatives" ->
-        ("WITH q AS (SELECT vec_id AS q_id, embedding AS q_vec, " +
-          "label AS q_label FROM embeddings WHERE vec_id < 10), " +
-          "sims AS (SELECT q.q_id, e.vec_id, " +
-          "list_cosine_similarity(q.q_vec, e.embedding) AS sim " +
-          "FROM embeddings e CROSS JOIN q " +
-          "WHERE e.vec_id <> q.q_id AND e.label <> q.q_label) " +
-          "SELECT q_id, vec_id, CAST(row_number() OVER " +
-          "(PARTITION BY q_id ORDER BY sim DESC, vec_id) AS INTEGER) AS rk " +
-          "FROM sims QUALIFY rk <= 10"),
-
-      // Single-probe sign-LSH top-k replayed in SQL: same 4-bit plane
-      // literals for both sides of the bucket join, then the exact
-      // rank/tie-break of the Spark side. Rank-only output.
-      "ann_lsh_topk" -> {
-        def bucketSql(vecCol: String): String =
-          graft.ops.Similarity.hyperplanes(numBits = 4, dims = 64)
-            .zipWithIndex.map { case (p, j) =>
-              val lst = p.map(v => if (v > 0) "1.0" else "-1.0")
-                .mkString("[", ", ", "]")
-              s"(CASE WHEN list_dot_product($vecCol, $lst) >= 0 " +
-                s"THEN ${1 << j} ELSE 0 END)"
-            }.mkString("(", " + ", ")")
-        s"WITH b AS (SELECT vec_id, embedding, ${bucketSql("embedding")} " +
-          "AS bucket FROM embeddings), " +
-          s"q AS (SELECT vec_id AS q_id, embedding AS q_vec, " +
-          s"${bucketSql("embedding")} AS bucket FROM embeddings " +
-          "WHERE vec_id < 10), " +
-          "cand AS (SELECT q.q_id, b.vec_id, " +
-          "list_cosine_similarity(q.q_vec, b.embedding) AS sim " +
-          "FROM b JOIN q USING (bucket) WHERE b.vec_id <> q.q_id) " +
-          "SELECT q_id, vec_id, CAST(row_number() OVER (" +
-          "PARTITION BY q_id ORDER BY sim DESC, vec_id) AS INTEGER) AS rk " +
-          "FROM cand QUALIFY rk <= 10"
-      },
-
-      // multi-probe replay: same plane literals, the probe list is the
-      // query bucket xor each single bit (xor() in DuckDB = Spark's
-      // bitwiseXOR); corpus vectors keep one bucket so the expansion
-      // introduces no duplicate pairs. Rank-only for the same
-      // corpus-wide ~2e-5 sim-gap reason as ann_cosine_topk (any
-      // candidate subset inherits the full-corpus gap floor).
-      "ann_lsh_multiprobe_topk" -> {
-        def bucketSql(vecCol: String): String =
-          graft.ops.Similarity.hyperplanes(numBits = 4, dims = 64)
-            .zipWithIndex.map { case (p, j) =>
-              val lst = p.map(v => if (v > 0) "1.0" else "-1.0")
-                .mkString("[", ", ", "]")
-              s"(CASE WHEN list_dot_product($vecCol, $lst) >= 0 " +
-                s"THEN ${1 << j} ELSE 0 END)"
-            }.mkString("(", " + ", ")")
-        s"WITH b AS (SELECT vec_id, embedding, ${bucketSql("embedding")} " +
-          "AS bucket FROM embeddings), " +
-          s"q0 AS (SELECT vec_id AS q_id, embedding AS q_vec, " +
-          s"${bucketSql("embedding")} AS bucket0 FROM embeddings " +
-          "WHERE vec_id < 10), " +
-          "q AS (SELECT q_id, q_vec, unnest([bucket0, xor(bucket0, 1), " +
-          "xor(bucket0, 2), xor(bucket0, 4), xor(bucket0, 8)]) AS bucket " +
-          "FROM q0), " +
-          "cand AS (SELECT q.q_id, b.vec_id, " +
-          "list_cosine_similarity(q.q_vec, b.embedding) AS sim " +
-          "FROM b JOIN q USING (bucket) WHERE b.vec_id <> q.q_id) " +
-          "SELECT q_id, vec_id, CAST(row_number() OVER (" +
-          "PARTITION BY q_id ORDER BY sim DESC, vec_id) AS INTEGER) AS rk " +
-          "FROM cand QUALIFY rk <= 10"
-      },
-
-      // IVF replayed end-to-end in SQL: same deterministic centroid
-      // set (the 8 lowest-id vectors), same argmax cell assignment,
-      // same 2-probe candidate join, same rank/tie-break — rank-only
-      // output like ann_cosine_topk, for the same float-margin reason.
-      "ann_ivf_topk" ->
-        ("WITH cent AS (SELECT CAST(vec_id AS INTEGER) AS cell, " +
-          "embedding AS c_vec FROM embeddings WHERE vec_id < 8), " +
-          "assigned AS (SELECT vec_id, embedding, cell FROM (" +
-          "SELECT e.vec_id, e.embedding, c.cell, row_number() OVER (" +
-          "PARTITION BY e.vec_id ORDER BY " +
-          "list_cosine_similarity(e.embedding, c.c_vec) DESC, c.cell) AS rn " +
-          "FROM embeddings e CROSS JOIN cent c) WHERE rn = 1), " +
-          "probes AS (SELECT q_id, q_vec, cell FROM (" +
-          "SELECT q.vec_id AS q_id, q.embedding AS q_vec, c.cell, " +
-          "row_number() OVER (PARTITION BY q.vec_id ORDER BY " +
-          "list_cosine_similarity(q.embedding, c.c_vec) DESC, c.cell) AS rn " +
-          "FROM embeddings q CROSS JOIN cent c " +
-          "WHERE q.vec_id >= 10 AND q.vec_id < 20) WHERE rn <= 2), " +
-          "cand AS (SELECT p.q_id, a.vec_id, " +
-          "list_cosine_similarity(p.q_vec, a.embedding) AS sim " +
-          "FROM assigned a JOIN probes p ON a.cell = p.cell " +
-          "WHERE a.vec_id <> p.q_id) " +
-          "SELECT q_id, vec_id, CAST(row_number() OVER (" +
-          "PARTITION BY q_id ORDER BY sim DESC, vec_id) AS INTEGER) AS rk " +
-          "FROM cand QUALIFY rk <= 10"),
-
-      // the same integer keep-test, with the bucket parsed via
-      // DuckDB's '0x...' cast (= Spark's conv(hex,16,10))
-      "sample_capped_share" ->
-        ("WITH c AS (SELECT lang AS s, count(*) AS n FROM documents " +
-          "GROUP BY lang) " +
-          "SELECT d.doc_id, d.lang FROM documents d JOIN c ON d.lang = c.s " +
-          "WHERE CAST(('0x' || substring(md5(d.text), 1, 4)) AS BIGINT) " +
-          "* c.n < 150 * 65536"),
-
-      // α=1/2 temperature replay: squared bucket vs (k²·2^32) // n,
-      // all BIGINT-exact in both engines (k = 8)
-      "sample_sqrt_share" ->
-        (s"WITH c AS (SELECT lang AS s, " +
-          s"${8L * 8L * 4294967296L} // count(*) AS t FROM documents " +
-          "GROUP BY lang) " +
-          "SELECT d.doc_id, d.lang FROM documents d JOIN c ON d.lang = c.s " +
-          "WHERE CAST(('0x' || substring(md5(d.text), 1, 4)) AS BIGINT) " +
-          "* CAST(('0x' || substring(md5(d.text), 1, 4)) AS BIGINT) < c.t"),
-
-      // Threshold hex literals generated from the same SampleRates
-      // constants as the Spark predicate; fixed-width lowercase hex
-      // compares identically (lexical = numeric) in both engines.
-      "sample_stratified" -> {
-        val cases = SampleRates.map { case (l, r) =>
-          s"WHEN '$l' THEN '${Sampling.thresholdHex(r)}'"
-        }.mkString(" ")
-        "SELECT doc_id, lang FROM documents " +
-          s"WHERE substring(md5(text), 1, 4) < CASE lang $cases " +
-          s"ELSE '${Sampling.thresholdHex(0.0625)}' END"
-      },
-
-      "sample_exact_k" ->
-        ("SELECT doc_id, lang FROM documents " +
-          "ORDER BY md5(text), doc_id LIMIT 50"),
-
-      // full replay of the epoch expansion from the same budget
-      // constants: integer full copies + the md5-bucket fractional coin
-      "epoch_upsample" -> {
-        val fullCase = EpochBudgets.map { case (l, e) =>
-          s"WHEN '$l' THEN ${math.floor(e).toLong}"
-        }.mkString(" ")
-        val fracCase = EpochBudgets.map { case (l, e) =>
-          s"WHEN '$l' THEN '${Sampling.thresholdHex(e - math.floor(e))}'"
-        }.mkString(" ")
-        "WITH c AS (SELECT doc_id, lang, " +
-          s"CAST(CASE lang $fullCase ELSE 1 END AS BIGINT) + " +
-          "CASE WHEN substring(md5(text), 1, 4) < " +
-          s"CASE lang $fracCase ELSE '${Sampling.thresholdHex(0.0)}' END " +
-          "THEN 1 ELSE 0 END AS copies FROM documents) " +
-          "SELECT doc_id, lang, unnest(range(1, copies + 1)) AS copy_idx " +
-          "FROM c WHERE copies > 0"
-      },
-
-      // Counts via regexp_extract_all (DuckDB's regexp_count analog);
-      // the injector and the redaction chain are both rendered from
-      // Redaction.Patterns / the same CASE arithmetic as withFakePii.
-      // the full curation chain replayed as chained CTEs: inject →
-      // quality/language/sample predicates (all integer-or-lexical
-      // exact) → keep-first dedup window → redaction chain → exact
-      // token-count subtraction. One oracle checks the composition.
-      "curation_e2e" -> {
-        def occ2(src: String, tok: String) =
-          s"(len($src) - len(replace($src, '$tok', ''))) // ${tok.length}"
-        val countCols = Redaction.Patterns.map { case (cat, _, tok) =>
-          s"CAST(${occ2("redacted", tok)} - ${occ2("t", tok)} " +
-            s"AS BIGINT) AS n_$cat"
-        }
-        val redacted = Redaction.Patterns.foldLeft("text") {
-          case (acc, (_, pat, tok)) =>
-            s"regexp_replace($acc, '$pat', '$tok', 'g')"
-        }
-        val guess = s"CASE WHEN $great = 0 THEN 'und' " +
-          s"WHEN en_hits = $great THEN 'en' " +
-          s"WHEN de_hits = $great THEN 'de' " +
-          s"WHEN fr_hits = $great THEN 'fr' " +
-          s"WHEN es_hits = $great THEN 'es' ELSE 'zh' END"
-        s"WITH p AS (SELECT doc_id, $PiiInjSql AS text FROM documents), " +
-          s"h AS (SELECT doc_id, text, ${hitCols.mkString(", ")}, " +
-          "length(text) AS char_len, " +
-          "(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))) AS punct_cnt, " +
-          "(length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))) AS digit_cnt " +
-          "FROM p), " +
-          "g AS (SELECT doc_id, text FROM h " +
-          "WHERE char_len >= 64 AND punct_cnt * 5 <= char_len " +
-          "AND digit_cnt * 5 <= char_len " +
-          s"AND ${hitsSql(allMarkers)} > 0 " +
-          s"AND ($guess) IN ('en', 'de', 'fr', 'es') " +
-          s"AND substring(md5(text), 1, 4) < '${Sampling.thresholdHex(0.5)}' " +
-          s"QUALIFY row_number() OVER (PARTITION BY md5($NormTextSql) " +
-          "ORDER BY doc_id) = 1), " +
-          "r AS (SELECT doc_id, text AS t, " +
-          s"$redacted AS redacted FROM g) " +
-          s"SELECT doc_id, ${countCols.mkString(", ")}, redacted FROM r"
-      },
-
-      // the published-gate curation replay: synthesized punctuated
-      // lines (text-derived planting), the full Gopher + C4 page rule
-      // set as one WHERE, the C4 line clean as list_filter, keep-first
-      // dedup, then the same injection/redaction tail as curation_e2e
-      "curation_e2e_v2" -> {
-        def occ2(src: String, tok: String) =
-          s"(len($src) - len(replace($src, '$tok', ''))) // ${tok.length}"
-        val countCols = Redaction.Patterns.map { case (cat, _, tok) =>
-          s"CAST(${occ2("redacted", tok)} - ${occ2("t", tok)} " +
-            s"AS BIGINT) AS n_$cat"
-        }
-        val redacted = Redaction.Patterns.foldLeft("t") {
-          case (acc, (_, pat, tok)) =>
-            s"regexp_replace($acc, '$pat', '$tok', 'g')"
-        }
-        s"WITH $CurationSynthCtes, " +
-          s"g AS (SELECT doc_id, text FROM st " +
-          s"WHERE $GopherCondSql AND $PageCondSql), " +
-          s"c AS (SELECT doc_id, $C4LineCleanSql AS text FROM g), " +
-          "d AS (SELECT doc_id, text FROM c " +
-          s"QUALIFY row_number() OVER (PARTITION BY md5($NormTextSql) " +
-          "ORDER BY doc_id) = 1), " +
-          s"p AS (SELECT doc_id, $PiiInjSql AS t FROM d), " +
-          s"r AS (SELECT doc_id, t, $redacted AS redacted FROM p) " +
-          s"SELECT doc_id, ${countCols.mkString(", ")}, redacted FROM r"
-      },
-
-      // the per-stage survivor accounting over the same synthesis:
-      // input → gopher → +page → +nonempty line clean → post-dedup
-      // distinct, all from one scan
-      "curation_funnel" -> {
-        val normClean = NormTextSql.replace("text", "clean")
-        s"WITH $CurationSynthCtes, " +
-          s"cl AS (SELECT doc_id, text, $C4LineCleanSql AS clean, " +
-          s"CASE WHEN $GopherCondSql THEN 1 ELSE 0 END AS gok, " +
-          s"CASE WHEN $PageCondSql THEN 1 ELSE 0 END AS pok FROM st) " +
-          "SELECT count(*) AS n_input, " +
-          "CAST(sum(gok) AS BIGINT) AS n_gopher, " +
-          "CAST(sum(CASE WHEN gok = 1 AND pok = 1 THEN 1 ELSE 0 END) " +
-          "AS BIGINT) AS n_page, " +
-          "CAST(sum(CASE WHEN gok = 1 AND pok = 1 AND length(clean) > 0 " +
-          "THEN 1 ELSE 0 END) AS BIGINT) AS n_line_nonempty, " +
-          "count(DISTINCT CASE WHEN gok = 1 AND pok = 1 " +
-          s"THEN md5($normClean) END) AS n_deduped FROM cl"
-      },
-
-      // per-doc provenance: gates, ownership window and the survivor
-      // redaction all replayed; pii_present = "the redaction chain
-      // changed the injected string" (never id-mod shortcuts — raw
-      // text could carry matchable spans of its own)
-      "curation_attributes" -> {
-        val redacted = Redaction.Patterns.foldLeft("t") {
-          case (acc, (_, pat, tok)) =>
-            s"regexp_replace($acc, '$pat', '$tok', 'g')"
-        }
-        val normClean = NormTextSql.replace("text", "clean")
-        val injected = PiiInjSql.replace("(text ||", "(clean ||")
-        s"WITH $CurationSynthCtes, " +
-          s"cl AS (SELECT doc_id, $C4LineCleanSql AS clean, " +
-          s"CASE WHEN $GopherCondSql THEN 0 ELSE 1 END AS gopher_fail, " +
-          s"CASE WHEN $PageCondSql THEN 0 ELSE 1 END AS page_fail " +
-          "FROM st), " +
-          "d AS (SELECT *, CASE WHEN gopher_fail = 0 AND page_fail = 0 " +
-          "THEN 1 ELSE 0 END AS gated FROM cl), " +
-          "o AS (SELECT *, CASE WHEN gated = 1 AND doc_id <> " +
-          "min(CASE WHEN gated = 1 THEN doc_id END) " +
-          s"OVER (PARTITION BY md5($normClean)) " +
-          "THEN 1 ELSE 0 END AS exact_dup FROM d), " +
-          "a AS (SELECT doc_id, clean, gopher_fail, page_fail, " +
-          "CASE WHEN gated = 1 AND length(clean) = 0 " +
-          "THEN 1 ELSE 0 END AS line_empty, exact_dup, " +
-          "CASE WHEN gated = 1 AND exact_dup = 0 " +
-          "THEN 1 ELSE 0 END AS survived FROM o), " +
-          s"p AS (SELECT *, $injected AS t FROM a) " +
-          "SELECT doc_id, gopher_fail, page_fail, line_empty, " +
-          "exact_dup, gopher_fail + page_fail * 2 + exact_dup * 4 " +
-          "AS reject_mask, survived, " +
-          s"CASE WHEN survived = 1 AND $redacted <> t " +
-          "THEN 1 ELSE 0 END AS pii_present FROM p"
-      },
-
-      "pii_redact" -> {
-        val inj = PiiInjSql
-        // counts replay the Spark side: token occurrences in the
-        // redacted output MINUS occurrences already in the raw text,
-        // via exact length arithmetic, not regex (see piiScrub's
-        // scaladoc for why the difference is exact on any input)
-        def occ(src: String, tok: String) =
-          s"(len($src) - len(replace($src, '$tok', ''))) // ${tok.length}"
-        val countCols = Redaction.Patterns.map { case (cat, _, tok) =>
-          s"CAST(${occ("redacted", tok)} - ${occ("t", tok)} " +
-            s"AS BIGINT) AS n_$cat"
-        }
-        val redacted = Redaction.Patterns.foldLeft("t") {
-          case (acc, (_, pat, tok)) =>
-            s"regexp_replace($acc, '$pat', '$tok', 'g')"
-        }
-        s"WITH p AS (SELECT doc_id, $inj AS t FROM documents), " +
-          s"r AS (SELECT doc_id, t, $redacted AS redacted FROM p) " +
-          s"SELECT doc_id, ${countCols.mkString(", ")}, redacted FROM r"
-      },
-
-      // the same injected scrub replay, rolled up per source
-      "pii_census" -> {
-        val inj = PiiInjSql
-        def occ(src: String, tok: String) =
-          s"(len($src) - len(replace($src, '$tok', ''))) // ${tok.length}"
-        val countCols = Redaction.Patterns.map { case (cat, _, tok) =>
-          s"CAST(${occ("redacted", tok)} - ${occ("t", tok)} " +
-            s"AS BIGINT) AS n_$cat"
-        }
-        val redacted = Redaction.Patterns.foldLeft("t") {
-          case (acc, (_, pat, tok)) =>
-            s"regexp_replace($acc, '$pat', '$tok', 'g')"
-        }
-        s"WITH p AS (SELECT source, $inj AS t FROM documents), " +
-          s"r AS (SELECT source, t, $redacted AS redacted FROM p), " +
-          s"c AS (SELECT source, ${countCols.mkString(", ")} FROM r) " +
-          "SELECT source, CAST(count(*) AS BIGINT) AS n_docs, " +
-          "CAST(sum(n_url) AS BIGINT) AS n_url, " +
-          "CAST(sum(n_email) AS BIGINT) AS n_email, " +
-          "CAST(sum(n_ip) AS BIGINT) AS n_ip, " +
-          "CAST(sum(n_phone) AS BIGINT) AS n_phone, " +
-          "CAST(sum(CASE WHEN n_url + n_email + n_ip + n_phone > 0 " +
-          "THEN 1 ELSE 0 END) AS BIGINT) AS n_docs_with_pii " +
-          "FROM c GROUP BY source ORDER BY source"
-      },
-
-      // Min reachable doc_id per node via a recursive CTE over the
-      // same integer-exact Jaccard edge set (UNION dedups the frontier
-      // so the recursion terminates).
-      "neardup_components" ->
-        (NeardupReachCte + " SELECT node AS doc_id, min(lbl) AS component" +
-          " FROM reach GROUP BY node"),
-
-      // the fixed-point update unrolled: three (inflow, damped-rank)
-      // CTE pairs, all-BIGINT floor arithmetic — ranks hash exactly
-      "pagerank_fixed" -> PageRankSql,
-
-      // the peel unrolled: three (degree, survivor, induced-edge)
-      // rounds — survivor degrees hash exactly
-      "kcore_peel" -> KCoreSql,
-
-      // the canonical (x<y<z) three-way join the engine's
-      // degree-ordered enumeration must agree with exactly
-      "triangle_count" ->
-        ("WITH sp AS (SELECT DISTINCT l_orderkey, l_suppkey " +
-          "FROM lineitem WHERE l_orderkey < 4000), " +
-          "e AS (SELECT DISTINCT x.l_suppkey AS a, y.l_suppkey AS b " +
-          "FROM sp x JOIN sp y ON x.l_orderkey = y.l_orderkey " +
-          "AND x.l_suppkey < y.l_suppkey), " +
-          "nd AS (SELECT DISTINCT n FROM " +
-          "(SELECT a AS n FROM e UNION ALL SELECT b FROM e)), " +
-          "tri AS (SELECT count(*) AS t FROM e e1 " +
-          "JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b " +
-          "JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b) " +
-          "SELECT CAST((SELECT count(*) FROM nd) AS BIGINT) AS n_nodes, " +
-          "CAST((SELECT count(*) FROM e) AS BIGINT) AS n_edges, " +
-          "CAST((SELECT t FROM tri) AS BIGINT) AS n_triangles"),
-
-      // the full blocking + verification replay: 4-grams, left-side
-      // gram dfs, the (df, gram) rarest-2 prefix per probe, the
-      // length band, and exact levenshtein — pair set hashes exactly
-      "fuzzy_join_typos" ->
-        (FuzzyJoinCtes +
-          " SELECT l_id, r_id, CAST(levenshtein(l_name, r_name) " +
-          "AS INTEGER) AS dist FROM c " +
-          "WHERE levenshtein(l_name, r_name) <= 1"),
-
-      // planted-typo linkage recall: count replay + flag TRUE
-      "fuzzy_join_recall" ->
-        ("SELECT count(*) AS planted_total, TRUE AS recall_ok " +
-          "FROM part WHERE p_partkey % 50 = 0"),
-
-      // survivors of the end-to-end near-dup dedup: a node is kept iff
-      // it IS its cluster's minimum reachable id
-      "neardup_dedup_keep" ->
-        (NeardupReachCte + " SELECT node AS doc_id FROM reach" +
-          " GROUP BY node HAVING node = min(lbl)"),
-
-      // same labeling, canonical member by quality: max n_chars then
-      // min node within each component
-      "neardup_keep_best" ->
-        (NeardupReachCte +
-          ", comp AS (SELECT node, min(lbl) AS component" +
-          " FROM reach GROUP BY node)" +
-          " SELECT node AS doc_id, component, n_chars" +
-          " FROM comp JOIN documents ON node = doc_id" +
-          " QUALIFY row_number() OVER (PARTITION BY component" +
-          " ORDER BY n_chars DESC, node ASC) = 1"),
-
-      // non-singleton cluster histogram over the same labeling; the
-      // canonical member is the component id by construction (min
-      // reachable), asserted via min(node) rather than assumed
-      "neardup_cluster_sizes" ->
-        (NeardupReachCte + ", comp AS (SELECT node, min(lbl) AS component" +
-          " FROM reach GROUP BY node)" +
-          " SELECT component, count(*) AS size, min(node) AS canonical" +
-          " FROM comp GROUP BY component HAVING count(*) > 1"),
-
-      // same 12-token line reconstruction, raw-string occurrence
-      // counts (vs Spark's xxhash64 keys — the green row is also the
-      // collision audit), FILTERed aggregate keeps all-dropped docs
-      "line_dedup" ->
-        (s"""WITH toks AS (
-            |  SELECT doc_id, string_split($NormTextSql, ' ') AS t
-            |  FROM documents),
-            |ls AS (
-            |  SELECT doc_id, list_transform(range(0, (len(t)-1)//12 + 1),
-            |    i -> array_to_string(t[i*12+1:i*12+12], ' ')) AS la
-            |  FROM toks),
-            |lines AS (
-            |  SELECT doc_id, unnest(la) AS line,
-            |    generate_subscripts(la, 1) AS pos FROM ls),
-            |cnt AS (SELECT line, count(*) AS c FROM lines GROUP BY line)
-            |SELECT l.doc_id, count(*) AS n_lines,
-            |  count(*) FILTER (WHERE c.c <= 1) AS kept_lines,
-            |  coalesce(string_agg(l.line, chr(10) ORDER BY l.pos)
-            |    FILTER (WHERE c.c <= 1), '') AS dedup_text
-            |FROM lines l JOIN cnt c ON l.line = c.line
-            |GROUP BY l.doc_id"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // same line reconstruction and raw-string occurrence counts as
-      // line_dedup (the green row doubles as the hash-collision
-      // audit); integer cross-multiplied share verdict
-      "boilerplate_share" ->
-        (s"""WITH toks AS (
-            |  SELECT doc_id, string_split($NormTextSql, ' ') AS t
-            |  FROM documents),
-            |ls AS (
-            |  SELECT doc_id, list_transform(range(0, (len(t)-1)//12 + 1),
-            |    i -> array_to_string(t[i*12+1:i*12+12], ' ')) AS la
-            |  FROM toks),
-            |lines AS (SELECT doc_id, unnest(la) AS line FROM ls),
-            |cnt AS (SELECT line, count(*) AS c FROM lines GROUP BY line)
-            |SELECT l.doc_id, count(*) AS n_lines,
-            |  CAST(count(*) FILTER (WHERE c.c > 1) AS BIGINT)
-            |    AS frequent_lines,
-            |  CAST(count(*) FILTER (WHERE c.c > 1) * 100 > count(*) * 50
-            |    AS INTEGER) AS is_boilerplate
-            |FROM lines l JOIN cnt c ON l.line = c.line
-            |GROUP BY l.doc_id"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // same counts as line_dedup; dedup_text rejoined on the
-      // two-character paragraph boundary the operator split on
-      "line_dedup_paragraph" ->
-        (s"""WITH toks AS (
-            |  SELECT doc_id, string_split($NormTextSql, ' ') AS t
-            |  FROM documents),
-            |ls AS (
-            |  SELECT doc_id, list_transform(range(0, (len(t)-1)//12 + 1),
-            |    i -> array_to_string(t[i*12+1:i*12+12], ' ')) AS la
-            |  FROM toks),
-            |lines AS (
-            |  SELECT doc_id, unnest(la) AS line,
-            |    generate_subscripts(la, 1) AS pos FROM ls),
-            |cnt AS (SELECT line, count(*) AS c FROM lines GROUP BY line)
-            |SELECT l.doc_id, count(*) AS n_lines,
-            |  count(*) FILTER (WHERE c.c <= 1) AS kept_lines,
-            |  coalesce(string_agg(l.line, chr(10) || chr(10)
-            |    ORDER BY l.pos)
-            |    FILTER (WHERE c.c <= 1), '') AS dedup_text
-            |FROM lines l JOIN cnt c ON l.line = c.line
-            |GROUP BY l.doc_id"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // within-doc replay via min-position window: DuckDB's
-      // list_distinct REORDERS, so first-occurrence order (which
-      // Spark's array_distinct preserves) is reconstructed explicitly
-      "line_dedup_within_doc" ->
-        (s"""WITH toks AS (
-            |  SELECT doc_id, string_split($NormTextSql, ' ') AS t
-            |  FROM documents),
-            |ls AS (
-            |  SELECT doc_id, list_transform(range(0, (len(t)-1)//12 + 1),
-            |    i -> array_to_string(t[i*12+1:i*12+12], ' ')) AS la
-            |  FROM toks),
-            |pl AS (SELECT doc_id, CASE WHEN doc_id % 7 = 0
-            |  THEN list_append(la, la[1]) ELSE la END AS la FROM ls),
-            |lines AS (SELECT doc_id, unnest(la) AS line,
-            |  generate_subscripts(la, 1) AS pos FROM pl),
-            |f AS (SELECT doc_id, line, pos,
-            |  min(pos) OVER (PARTITION BY doc_id, line) AS fpos
-            |  FROM lines)
-            |SELECT doc_id, count(*) AS n_lines,
-            |  count(*) FILTER (pos = fpos) AS kept_lines,
-            |  coalesce(string_agg(line, chr(10) ORDER BY pos)
-            |    FILTER (pos = fpos), '') AS dedup_text
-            |FROM f GROUP BY doc_id"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // page-level replay over the same punctuated synthesis
-      "c4_page_filter" ->
-        (s"""WITH toks AS (
-            |  SELECT doc_id, string_split($NormTextSql, ' ') AS t
-            |  FROM documents),
-            |ls AS (
-            |  SELECT doc_id, list_transform(range(0, (len(t)-1)//12 + 1),
-            |    i -> array_to_string(t[i*12+1:i*12+12], ' ')) AS la
-            |  FROM toks),
-            |lp AS (SELECT doc_id, array_to_string(
-            |  list_transform(range(1, len(la)+1),
-            |    i -> CASE WHEN (doc_id + i - 1) % 3 = 0 THEN la[i] || '.'
-            |         ELSE la[i] END), chr(10)) AS text FROM ls),
-            |pg AS (SELECT doc_id,
-            |  text ||
-            |  CASE WHEN doc_id % 19 = 0
-            |    THEN chr(10) || 'lorem ipsum dolor sit amet.' ELSE '' END ||
-            |  CASE WHEN doc_id % 23 = 0
-            |    THEN chr(10) || 'code { sample }' ELSE '' END AS text
-            |  FROM lp)
-            |SELECT doc_id,
-            |  CAST((length(text) - length(replace(text, '.', '')))
-            |    AS BIGINT) AS n_sentences,
-            |  contains(lower(text), 'lorem ipsum') AS has_lorem,
-            |  contains(text, '{') AS has_brace,
-            |  (CAST((length(text) - length(replace(text, '.', '')))
-            |    AS BIGINT) >= 3 AND NOT contains(lower(text), 'lorem ipsum')
-            |   AND NOT contains(text, '{')) AS keep
-            |FROM pg WHERE length(trim(text)) > 0"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // keep-first replay on raw line strings: the owner arg-min uses
-      // the same scalar doc_id-then-position key (1-based positions
-      // here vs 0-based in Spark — monotone per document, so both
-      // sides elect the identical occurrence)
-      "line_dedup_keep_first" ->
-        (s"""WITH toks AS (
-            |  SELECT doc_id, string_split($NormTextSql, ' ') AS t
-            |  FROM documents),
-            |ls AS (
-            |  SELECT doc_id, list_transform(range(0, (len(t)-1)//12 + 1),
-            |    i -> array_to_string(t[i*12+1:i*12+12], ' ')) AS la
-            |  FROM toks),
-            |lines AS (
-            |  SELECT doc_id, unnest(la) AS line,
-            |    generate_subscripts(la, 1) AS pos FROM ls),
-            |own AS (SELECT line, count(*) AS c,
-            |  min(doc_id * 4294967296 + pos) AS owner
-            |  FROM lines GROUP BY line)
-            |SELECT l.doc_id, count(*) AS n_lines,
-            |  count(*) FILTER (WHERE o.c = 1 OR
-            |    l.doc_id * 4294967296 + l.pos = o.owner) AS kept_lines,
-            |  coalesce(string_agg(l.line, chr(10) ORDER BY l.pos)
-            |    FILTER (WHERE o.c = 1 OR
-            |      l.doc_id * 4294967296 + l.pos = o.owner), '') AS dedup_text
-            |FROM lines l JOIN own o ON l.line = o.line
-            |GROUP BY l.doc_id"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // raw-string replay of the 50-token span sets (list slicing
-      // clamps at the end exactly like the native gram builder's
-      // width = min(n, t - i), including the whole-text fallback for
-      // short docs), over the same planted excerpt union
-      "substring_dedup" -> SubstringDedupSql,
-
-      "substring_dedup_keep" ->
-        (s"WITH stats AS ($SubstringDedupSql) " +
-          "SELECT doc_id FROM stats WHERE is_dup = 0"),
-
-      // the full ensemble replay: every verdict column recomputed from
-      // the same SQL fragments its standalone oracle uses, joined once
-      "dedup_report" ->
-        (s"WITH RECURSIVE $DedupReportCtes " +
-          "SELECT doc_id, exact_dup, line_dup, lines_lost, substr_dup, " +
-          "neardup_dup, sem_dup, " +
-          "CAST(exact_dup + line_dup + substr_dup + neardup_dup + " +
-          "sem_dup AS INTEGER) AS n_flags FROM report"),
-
-      "dedup_report_summary" ->
-        (s"WITH RECURSIVE $DedupReportCtes " +
-          "SELECT count(*) AS n_docs, " +
-          "CAST(sum(exact_dup) AS BIGINT) AS exact_dups, " +
-          "CAST(sum(line_dup) AS BIGINT) AS line_dups, " +
-          "CAST(sum(substr_dup) AS BIGINT) AS substr_dups, " +
-          "CAST(sum(neardup_dup) AS BIGINT) AS neardup_dups, " +
-          "CAST(sum(sem_dup) AS BIGINT) AS sem_dups, " +
-          "CAST(sum(CASE WHEN exact_dup + line_dup + substr_dup + " +
-          "neardup_dup + sem_dup > 0 THEN 1 ELSE 0 END) AS BIGINT) " +
-          "AS flagged_any, " +
-          "CAST(sum(CASE WHEN exact_dup + line_dup + substr_dup + " +
-          "neardup_dup + sem_dup >= 2 THEN 1 ELSE 0 END) AS BIGINT) " +
-          "AS flagged_consensus FROM report"),
-
-      "dedup_incremental" -> {
-        // qualify the column refs: inside the NOT EXISTS a bare `text`
-        // would resolve to the inner table and trivially match itself
-        val normN = NormTextSql.replace("text", "n.text")
-        val normC = NormTextSql.replace("text", "c.text")
-        s"SELECT doc_id, md5($normN) AS text_hash FROM documents n " +
-          "WHERE doc_id >= 250 AND NOT EXISTS (" +
-          "SELECT 1 FROM documents c WHERE c.doc_id < 250 AND " +
-          s"md5($normC) = md5($normN))"
-      },
-
-      // the incremental near-dup kept set, replayed as NOT EXISTS over
-      // distinct 3-gram sets: at thresholdPct = 100 the Spark verdict
-      // is shingle-set equality, which DuckDB tests as equality of the
-      // SORTED distinct-gram lists (a plain list comparison — DuckDB
-      // 1.0 cannot bind correlated columns inside list_intersect's
-      // lambda expansion; same shingle construction as the
-      // ngram_jaccard_pairs replay, whole-text fallback included).
-      // The doubled-space mangle is written ' ' || ' ' because this
-      // builder collapses whitespace runs even inside literals.
-      "dedup_incremental_near" ->
-        (s"""WITH oldsh AS (
-           |  SELECT doc_id, list_sort($ShingleSetSql) AS sh
-           |  FROM (SELECT doc_id, string_split($NormTextSql, ' ') AS toks
-           |        FROM documents)),
-           |newdocs AS (
-           |  SELECT doc_id + 500000 AS doc_id, text FROM documents
-           |    WHERE doc_id % 5 = 0
-           |  UNION ALL
-           |  SELECT doc_id + 600000, regexp_replace(text, ' ', ' ' || ' ', 'g')
-           |    FROM documents WHERE doc_id % 7 = 0
-           |  UNION ALL
-           |  SELECT doc_id + 700000, 'fresh v2 ' || text
-           |    FROM documents WHERE doc_id >= 450),
-           |newsh AS (
-           |  SELECT doc_id, list_sort($ShingleSetSql) AS sh
-           |  FROM (SELECT doc_id, string_split($NormTextSql, ' ') AS toks
-           |        FROM newdocs))
-           |SELECT n.doc_id FROM newsh n WHERE NOT EXISTS (
-           |  SELECT 1 FROM oldsh o WHERE o.sh = n.sh)"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // xxhash64 banding isn't SQL-replayable, so the fuzzy-threshold
-      // gate follows the planted-recall convention: eligibility replays
-      // verbatim, the drop-recall flag is asserted TRUE
-      "incremental_near_recall" ->
-        (s"SELECT count(*) AS planted_total, TRUE AS recall_ok " +
-          s"FROM documents WHERE doc_id % $PlantMod = 0 " +
-          s"AND len(string_split($NormTextSql, ' ')) >= $PlantMinTokens"),
-
-      // Spark's percentile_disc rule replayed EXPLICITLY — the
-      // smallest value whose rank satisfies 10·rank >= 9·n, in integer
-      // arithmetic — instead of DuckDB's quantile_disc, whose
-      // nearest-rank convention ((n−1)p-based) differs from Spark's
-      // for some group sizes (the qualityBlend divergence, r15
-      // ADVICE). Spark's double-arithmetic boundary (smallest k with
-      // k >= fl(0.9)·n) agrees with the integer rule for every
-      // n < ~10^15: fl(0.9)'s relative error (2.5e-17) is under half
-      // an ulp, so fl(fl(0.9)·n) == 0.9·n exactly whenever 0.9·n is
-      // an integer.
-      "quantile_filter" ->
-        ("WITH r AS (SELECT n_chars, " +
-          "row_number() OVER (ORDER BY n_chars) AS rn, " +
-          "count(*) OVER () AS n FROM documents), " +
-          "c AS (SELECT min(n_chars) AS cut FROM r WHERE rn * 10 >= n * 9) " +
-          "SELECT doc_id, n_chars FROM documents CROSS JOIN c " +
-          "WHERE n_chars <= cut"),
-
-      // the same running-max island rule over epoch micros; island
-      // coverage = max(t)+dur − min(t), contiguous by construction
-      "interval_coverage" ->
-        ("""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS t
-           |  FROM events),
-           |w AS (SELECT user_id, event_id, t,
-           |  max(t + 900000000) OVER (PARTITION BY user_id
-           |    ORDER BY t, event_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           |    AS pme FROM e),
-           |i AS (SELECT user_id, t,
-           |  sum(CASE WHEN pme IS NULL OR t > pme THEN 1 ELSE 0 END)
-           |    OVER (PARTITION BY user_id ORDER BY t, event_id
-           |      ROWS UNBOUNDED PRECEDING) AS island FROM w),
-           |g AS (SELECT user_id, island,
-           |    CAST(count(*) AS BIGINT) AS n_events,
-           |    max(t) + 900000000 - min(t) AS covered
-           |  FROM i GROUP BY 1, 2)
-           |SELECT user_id, CAST(sum(n_events) AS BIGINT) AS n_events,
-           |  CAST(count(*) AS BIGINT) AS n_islands,
-           |  CAST(sum(covered) AS BIGINT) AS covered_us,
-           |  CAST(max(covered) AS BIGINT) AS longest_island_us
-           |FROM g GROUP BY user_id ORDER BY user_id"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      "sessionize" ->
-        (s"""SELECT event_id, user_id,
-           |  CAST(sum(b) OVER (PARTITION BY user_id
-           |    ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT)
-           |  AS session_idx
-           |FROM (SELECT event_id, user_id, epoch_us(ts) AS us,
-           |  CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER (
-           |    PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-           |    > ${EventOps.SessionGapNs / 1000} THEN 1 ELSE 0 END AS b
-           |  FROM events)"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // every observation an exact count; the RI check's orphan count
-      // replays as the NOT EXISTS the anti-join implements
-      // replay both sides' null counts and the cross-multiplied verdict
-      "dq_drift" ->
-        ("""WITH cur AS (SELECT doc_id,
-           |  CASE WHEN doc_id % 200 = 0 THEN NULL ELSE lang END AS lang,
-           |  CASE WHEN doc_id % 25 = 0 THEN NULL ELSE source END AS source,
-           |  text FROM documents),
-           |p AS (SELECT count(*) AS prev_rows,
-           |  count(CASE WHEN lang IS NULL THEN 1 END) AS n_lang,
-           |  count(CASE WHEN source IS NULL THEN 1 END) AS n_source,
-           |  count(CASE WHEN text IS NULL THEN 1 END) AS n_text
-           |  FROM documents),
-           |c AS (SELECT count(*) AS cur_rows,
-           |  count(CASE WHEN lang IS NULL THEN 1 END) AS n_lang,
-           |  count(CASE WHEN source IS NULL THEN 1 END) AS n_source,
-           |  count(CASE WHEN text IS NULL THEN 1 END) AS n_text FROM cur),
-           |u AS (
-           |  SELECT 'lang' AS col_name, p.prev_rows, p.n_lang AS prev_nulls,
-           |    c.cur_rows, c.n_lang AS cur_nulls FROM p, c
-           |  UNION ALL
-           |  SELECT 'source', p.prev_rows, p.n_source, c.cur_rows,
-           |    c.n_source FROM p, c
-           |  UNION ALL
-           |  SELECT 'text', p.prev_rows, p.n_text, c.cur_rows, c.n_text
-           |    FROM p, c)
-           |SELECT col_name, prev_rows, prev_nulls, cur_rows, cur_nulls,
-           |  CAST(abs(cur_nulls * prev_rows - prev_nulls * cur_rows) * 100
-           |    <= 5 * prev_rows * cur_rows AS INTEGER) AS within_pct
-           |FROM u"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      "dq_checks" ->
-        ("SELECT 'orders_pk_unique' AS check, " +
-          "count(*) - count(DISTINCT o_orderkey) AS observed, " +
-          "CAST(count(*) = count(DISTINCT o_orderkey) AS INTEGER) " +
-          "AS passed FROM orders " +
-          "UNION ALL SELECT 'customer_pk_unique', " +
-          "count(*) - count(DISTINCT c_custkey), " +
-          "CAST(count(*) = count(DISTINCT c_custkey) AS INTEGER) " +
-          "FROM customer " +
-          "UNION ALL SELECT 'orders_custkey_complete', " +
-          "count(CASE WHEN o_custkey IS NULL THEN 1 END), " +
-          "CAST(count(CASE WHEN o_custkey IS NULL THEN 1 END) = 0 " +
-          "AS INTEGER) FROM orders " +
-          "UNION ALL SELECT 'lineitem_qty_positive', " +
-          "count(CASE WHEN NOT coalesce(l_quantity > 0, FALSE) " +
-          "THEN 1 END), " +
-          "CAST(count(CASE WHEN NOT coalesce(l_quantity > 0, FALSE) " +
-          "THEN 1 END) = 0 AS INTEGER) FROM lineitem " +
-          "UNION ALL SELECT 'events_value_nonneg', " +
-          "count(CASE WHEN NOT coalesce(value >= 0, FALSE) THEN 1 END), " +
-          "CAST(count(CASE WHEN NOT coalesce(value >= 0, FALSE) " +
-          "THEN 1 END) = 0 AS INTEGER) FROM events " +
-          "UNION ALL SELECT 'lineitem_orderkey_contained', " +
-          "(SELECT count(*) FROM lineitem l WHERE NOT EXISTS " +
-          "(SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)), " +
-          "CAST((SELECT count(*) FROM lineitem l WHERE NOT EXISTS " +
-          "(SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)) " +
-          "= 0 AS INTEGER)"),
-
-      // the audit replayed from the same two key-count aggregates;
-      // the desc/key tie-break makes the top-10 SET deterministic
-      "join_blowup_audit" ->
-        ("WITH l AS (SELECT user_id AS key FROM events " +
-          "WHERE user_id IS NOT NULL), " +
-          "r AS (SELECT user_id AS key FROM events " +
-          "WHERE user_id IS NOT NULL AND event_type = 'purchase'), " +
-          "lc AS (SELECT key, count(*) AS l_cnt FROM l GROUP BY 1), " +
-          "rc AS (SELECT key, count(*) AS r_cnt FROM r GROUP BY 1), " +
-          "per AS (SELECT key, l_cnt, r_cnt, " +
-          "l_cnt * r_cnt AS out_rows FROM lc JOIN rc USING (key)), " +
-          "t AS (SELECT CAST(sum(out_rows) AS BIGINT) " +
-          "AS total_out_rows, count(*) AS matched_keys, " +
-          "CAST(max(out_rows) AS BIGINT) AS mx FROM per) " +
-          "SELECT key, l_cnt, r_cnt, out_rows, total_out_rows, " +
-          "matched_keys, CAST(mx * 100 // total_out_rows AS BIGINT) " +
-          "AS top_share_pct FROM per CROSS JOIN t " +
-          "ORDER BY out_rows DESC, key LIMIT 10"),
-
-      // per-gram importance bits replayed with the same integer
-      // bit-length idiom as the surprisal oracles; the md5-hex-prefix
-      // bucketing is computed identically by both engines
-      "dsir_importance" ->
-        (s"""WITH g AS (
-           |  SELECT doc_id, substring(md5(w), 1, 2) AS bk FROM (
-           |    SELECT doc_id, unnest(list_filter(
-           |      string_split($NormTextSql, ' '),
-           |      w -> length(w) > 0)) AS w
-           |    FROM documents WHERE text IS NOT NULL)),
-           |tg AS (
-           |  SELECT substring(md5(w), 1, 2) AS bk, count(*) AS t_cnt
-           |  FROM (
-           |    SELECT unnest(list_filter(
-           |      string_split($NormTextSql, ' '),
-           |      w -> length(w) > 0)) AS w
-           |    FROM documents WHERE text IS NOT NULL AND lang = 'en')
-           |  GROUP BY 1),
-           |sc AS (SELECT bk, count(*) AS s_cnt FROM g GROUP BY 1),
-           |st AS (SELECT CAST(sum(s_cnt) AS BIGINT) AS s_tot FROM sc),
-           |tt AS (SELECT CAST(sum(t_cnt) AS BIGINT) AS t_tot FROM tg)
-           |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-           |  CAST(sum(length(bin(s_tot // s_cnt)) -
-           |    CASE WHEN t_cnt IS NULL THEN 20
-           |    ELSE length(bin(t_tot // t_cnt)) END) AS BIGINT)
-           |    AS score_bits
-           |FROM g JOIN sc USING (bk) LEFT JOIN tg USING (bk)
-           |CROSS JOIN st CROSS JOIN tt
-           |GROUP BY doc_id"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // floor-then-cast keeps the bucket integral before the cast, so
-      // DuckDB's round-on-cast and Spark's truncate agree by
-      // construction; the division itself is the same IEEE double op
-      // on both engines
-      "k_anonymity" ->
-        ("SELECT c_nationkey, c_mktsegment, count(*) AS grp_n, " +
-          "count(DISTINCT CAST(floor(c_acctbal / 2000) AS BIGINT)) " +
-          "AS n_sensitive, " +
-          "CAST(count(*) < 10 AS INTEGER) AS at_risk, " +
-          "CAST(count(DISTINCT CAST(floor(c_acctbal / 2000) AS BIGINT)) " +
-          "< 3 AS INTEGER) AS low_diversity " +
-          "FROM customer GROUP BY 1, 2"),
-
-      // exact pairs-within-t replayed as a depth-bounded recursive
-      // CTE over the arithmetically re-derived ring+chord graph; the
-      // est_ok TRUEs assert Spark's register estimate held its 10%
-      "hyperball_reach" ->
-        ("WITH RECURSIVE " +
-          "nd AS (SELECT DISTINCT doc_id % 400 AS v FROM documents), " +
-          "e AS (SELECT v AS src, (v + 1) % 400 AS dst FROM nd " +
-          "UNION SELECT v, (v + 7) % 400 FROM nd), " +
-          "ns AS (SELECT src AS v FROM e UNION SELECT dst FROM e), " +
-          "r AS (SELECT v AS src, v AS dst, 0 AS d FROM ns " +
-          "UNION SELECT r.src, e2.dst, r.d + 1 FROM r " +
-          "JOIN e e2 ON e2.src = r.dst WHERE r.d < 3), " +
-          "mr AS (SELECT src, dst, min(d) AS d FROM r GROUP BY 1, 2), " +
-          "px AS (SELECT unnest([0, 1, 2, 3]) AS t) " +
-          "SELECT t, CAST(count(*) AS BIGINT) AS n_pairs, " +
-          "TRUE AS est_ok FROM mr JOIN px ON mr.d <= px.t GROUP BY t"),
-
-      // the struct-extreme convention replayed as plain SQL: chosen =
-      // smallest id at the max score, rejected = largest id at the min
-      "preference_pairs" ->
-        ("WITH r AS (SELECT doc_id % 97 AS prompt_id, " +
-          "doc_id AS response_id, n_chars AS score FROM documents), " +
-          "g AS (SELECT prompt_id, count(*) AS n_candidates, " +
-          "max(score) AS mx, min(score) AS mn FROM r GROUP BY 1), " +
-          "ch AS (SELECT r.prompt_id, min(response_id) AS chosen_id " +
-          "FROM r JOIN g ON r.prompt_id = g.prompt_id " +
-          "AND r.score = g.mx GROUP BY 1), " +
-          "rj AS (SELECT r.prompt_id, max(response_id) AS rejected_id " +
-          "FROM r JOIN g ON r.prompt_id = g.prompt_id " +
-          "AND r.score = g.mn GROUP BY 1) " +
-          "SELECT prompt_id, chosen_id, rejected_id, " +
-          "mx - mn AS margin, n_candidates " +
-          "FROM g JOIN ch USING (prompt_id) JOIN rj USING (prompt_id) " +
-          "WHERE n_candidates >= 2 AND mx - mn >= 5"),
-
-      // clipped-count ROUGE-2 recounted on raw gram STRINGS (Spark
-      // counted 8-byte xxhash64 keys — the green row is the collision
-      // audit); the candidate side re-derives the planted mutation
-      "rouge_pair_counts" ->
-        (s"""WITH base AS (
-           |  SELECT doc_id, $NormTextSql AS nt FROM documents
-           |  WHERE doc_id % $PlantMod = 0
-           |    AND len(string_split($NormTextSql, ' ')) >= $PlantMinTokens),
-           |sides AS (
-           |  SELECT doc_id, 1 AS is_cand, string_split(regexp_replace(nt,
-           |    '((?:\\S+ ){49})\\S+', '\\1zzplantzz', 'g'), ' ') AS tk
-           |  FROM base
-           |  UNION ALL SELECT doc_id, 0, string_split(nt, ' ') FROM base),
-           |bg AS (SELECT doc_id, is_cand, unnest(list_transform(
-           |    range(1, len(tk)), i -> tk[i] || ' ' || tk[i + 1])) AS g
-           |  FROM sides),
-           |gc AS (SELECT doc_id, g,
-           |    sum(CASE WHEN is_cand = 1 THEN 1 ELSE 0 END) AS c_cnt,
-           |    sum(CASE WHEN is_cand = 0 THEN 1 ELSE 0 END) AS r_cnt
-           |  FROM bg GROUP BY 1, 2)
-           |SELECT doc_id AS pair_id,
-           |  CAST(sum(least(c_cnt, r_cnt)) AS BIGINT) AS overlap_ngrams,
-           |  CAST(sum(c_cnt) AS BIGINT) AS cand_ngrams,
-           |  CAST(sum(r_cnt) AS BIGINT) AS ref_ngrams
-           |FROM gc GROUP BY 1"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // hop expansion replayed arithmetically: an event at t belongs
-      // to the two 30-min-aligned 1-hour windows starting at
-      // floor(t/30min) and that minus one hop
-      "time_window_hopping" ->
-        ("WITH e AS (SELECT event_type, " +
-          "epoch_us(ts) // 1800000000 AS slot FROM events), " +
-          "x AS (SELECT event_type, " +
-          "unnest([slot, slot - 1]) * 1800 AS win_start_epoch FROM e) " +
-          "SELECT win_start_epoch, event_type, count(*) AS cnt " +
-          "FROM x GROUP BY 1, 2"),
-
-      // same sets, same standard leftmost-is-MSB grouping id
-      "grouping_sets_agg" ->
-        ("SELECT coalesce(o_orderstatus, '(all)') AS status, " +
-          "coalesce(o_orderpriority, '(all)') AS priority, " +
-          "CAST(grouping(o_orderstatus, o_orderpriority) AS BIGINT) " +
-          "AS gid, count(*) AS cnt FROM orders " +
-          "GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), " +
-          "(o_orderstatus), ())"),
-
-      // RANGE frame replay: identical time-window semantics (peers at
-      // equal ts share a frame) on BIGINT micros and integer cents
-      "trailing_hour_sum" ->
-        ("SELECT event_id, user_id, epoch_us(ts) AS ts_us, " +
-          "CAST(sum(CAST(round(value * 100) AS BIGINT)) OVER (" +
-          "PARTITION BY user_id ORDER BY epoch_us(ts) " +
-          "RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) " +
-          "AS BIGINT) AS trail_cents FROM events"),
-
-      // week indices by integer division of epoch micros — both
-      // engines stay in BIGINT end to end
-      "cohort_retention" ->
-        (s"""WITH e AS (SELECT user_id,
-           |  epoch_us(ts) // ${EventOps.WeekUs} AS wk FROM events),
-           |f AS (SELECT user_id, min(wk) AS cohort_wk FROM e
-           |  GROUP BY user_id),
-           |a AS (SELECT DISTINCT user_id, wk FROM e)
-           |SELECT f.cohort_wk, a.wk - f.cohort_wk AS weeks_since,
-           |  count(*) AS active_users
-           |FROM a JOIN f USING (user_id) GROUP BY 1, 2"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      "event_funnel" ->
-        (s"""WITH s AS (SELECT user_id, min(epoch_us(ts)) AS t0
-           |  FROM events WHERE event_type = 'signup' GROUP BY user_id),
-           |c AS (SELECT DISTINCT e.user_id FROM events e
-           |  JOIN s ON s.user_id = e.user_id
-           |  WHERE e.event_type = 'purchase'
-           |  AND epoch_us(e.ts) >= s.t0
-           |  AND epoch_us(e.ts) <= s.t0 + ${EventOps.WeekUs})
-           |SELECT count(*) AS started_users,
-           |  CAST(sum(CASE WHEN c.user_id IS NOT NULL THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS converted_users
-           |FROM s LEFT JOIN c ON c.user_id = s.user_id"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      "asof_prior_purchase" ->
-        ("SELECT l.event_id, l.user_id, epoch_us(l.ts) AS ts_us, " +
-          "COALESCE(epoch_us(r.ts), -1) AS prior_purchase_us " +
-          "FROM (SELECT * FROM events WHERE event_type = 'click') l " +
-          "ASOF LEFT JOIN " +
-          "(SELECT * FROM events WHERE event_type = 'purchase') r " +
-          "ON l.user_id = r.user_id AND l.ts >= r.ts"),
-
-      "asof_join_native" ->
-        ("SELECT l.event_id, l.user_id, epoch_us(l.ts) AS ts_us, " +
-          "COALESCE(epoch_us(r.ts), -1) AS prior_purchase_us " +
-          "FROM (SELECT * FROM events WHERE event_type = 'click') l " +
-          "ASOF LEFT JOIN " +
-          "(SELECT * FROM events WHERE event_type = 'purchase') r " +
-          "ON l.user_id = r.user_id AND l.ts >= r.ts"),
-
-      // DuckDB's ASOF with <= picks the SMALLEST r.ts >= l.ts — the
-      // forward direction, verified on a hand case before relying on it
-      "asof_next_purchase" ->
-        ("SELECT l.event_id, l.user_id, epoch_us(l.ts) AS ts_us, " +
-          "COALESCE(epoch_us(r.ts), -1) AS next_purchase_us " +
-          "FROM (SELECT * FROM events WHERE event_type = 'click') l " +
-          "ASOF LEFT JOIN " +
-          "(SELECT * FROM events WHERE event_type = 'purchase') r " +
-          "ON l.user_id = r.user_id AND l.ts <= r.ts"),
-
-      // Same window arithmetic as Chunking.chunk: starts every 48
-      // tokens (DuckDB range() excludes its stop — +1 matches Spark
-      // sequence()'s inclusive stop), windows of 64 via list_slice
-      // (inclusive 1-based bounds = Spark slice(start+1, 64)). The
-      // parallel unnests zip by position.
-      "doc_chunks" ->
-        (s"""WITH t AS (SELECT doc_id,
-           |    string_split($NormTextSql, ' ') AS toks FROM documents),
-           |w AS (SELECT doc_id, toks,
-           |    range(0, greatest(len(toks) - 1, 0) + 1, 48) AS starts
-           |  FROM t)
-           |SELECT doc_id,
-           |  unnest(list_transform(starts,
-           |    s -> CAST(s // 48 AS INTEGER))) AS chunk_idx,
-           |  unnest(list_transform(starts,
-           |    s -> CAST(least(len(toks) - s, 64) AS BIGINT))) AS n_tokens,
-           |  unnest(list_transform(starts,
-           |    s -> md5(array_to_string(list_slice(toks, s + 1, s + 64),
-           |      ' ')))) AS chunk_hash
-           |FROM w"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      "sequence_packing" ->
-        (s"""WITH t AS (SELECT doc_id, source,
-           |    CAST(len(string_split($NormTextSql, ' ')) AS BIGINT)
-           |      AS n_tokens FROM documents),
-           |c AS (SELECT doc_id, source, n_tokens,
-           |    sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-           |      ROWS UNBOUNDED PRECEDING) - n_tokens AS cum_excl
-           |  FROM t)
-           |SELECT doc_id, source, n_tokens,
-           |  CAST(cum_excl // 2048 AS BIGINT) AS pack_id FROM c"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      "term_doc_freq" ->
-        (s"SELECT term, count(*) AS df FROM (SELECT doc_id, " +
-          s"unnest(list_distinct(string_split($NormTextSql, ' '))) AS term " +
-          "FROM documents) GROUP BY term ORDER BY df DESC, term LIMIT 50"),
-
-      // Shared distinct 3-grams per (train, eval) pair — the count via
-      // list_intersect equals Spark's join-then-count over exploded
-      // distinct shingles.
-      "decontaminate" ->
-        (s"""WITH sh AS (
-           |  SELECT doc_id,
-           |    list_distinct(list_transform(
-           |      range(0, greatest(len(toks) - 3, 0) + 1),
-           |      i -> array_to_string(toks[i+1:i+3], ' '))) AS sh
-           |  FROM (SELECT doc_id, string_split($NormTextSql, ' ') AS toks
-           |        FROM documents))
-           |SELECT t.doc_id, e.doc_id AS eval_id,
-           |  CAST(len(list_intersect(t.sh, e.sh)) AS BIGINT)
-           |    AS shared_ngrams
-           |FROM sh t JOIN sh e
-           |  ON t.doc_id < 480 AND e.doc_id >= 480
-           | AND len(list_intersect(t.sh, e.sh)) > 0"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the surviving corpus: NOT EXISTS over the same gram CTE
-      "decontaminate_keep" ->
-        (s"""WITH sh AS (
-           |  SELECT doc_id,
-           |    list_distinct(list_transform(
-           |      range(0, greatest(len(toks) - 3, 0) + 1),
-           |      i -> array_to_string(toks[i+1:i+3], ' '))) AS sh
-           |  FROM (SELECT doc_id, string_split($NormTextSql, ' ') AS toks
-           |        FROM documents))
-           |SELECT t.doc_id FROM sh t
-           |WHERE t.doc_id < 480 AND NOT EXISTS (
-           |  SELECT 1 FROM sh e WHERE e.doc_id >= 480
-           |    AND len(list_intersect(t.sh, e.sh)) > 0)"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the ngram_novelty replay restricted to the train/eval split,
-      // plus the cross-multiplied 20% verdict
-      "decontaminate_frac" ->
-        (s"""WITH g AS (SELECT doc_id,
-           |    unnest(list_distinct(list_transform(
-           |      range(0, greatest(len(toks) - 3, 0) + 1),
-           |      i -> array_to_string(toks[i+1:i+3], ' ')))) AS gram
-           |  FROM (SELECT doc_id, string_split($NormTextSql, ' ') AS toks
-           |        FROM documents) WHERE doc_id < 480),
-           |r AS (SELECT DISTINCT
-           |    unnest(list_distinct(list_transform(
-           |      range(0, greatest(len(toks) - 3, 0) + 1),
-           |      i -> array_to_string(toks[i+1:i+3], ' ')))) AS gram
-           |  FROM (SELECT doc_id, string_split($NormTextSql, ' ') AS toks
-           |        FROM documents) WHERE doc_id >= 480)
-           |SELECT g.doc_id, CAST(count(*) AS BIGINT) AS grams_total,
-           |  CAST(sum(CASE WHEN r.gram IS NOT NULL THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS grams_known,
-           |  (CAST(sum(CASE WHEN r.gram IS NOT NULL THEN 1 ELSE 0 END)
-           |    AS BIGINT) * 100 < CAST(count(*) AS BIGINT) * 20) AS keep
-           |FROM g LEFT JOIN r ON g.gram = r.gram GROUP BY g.doc_id"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the decontaminate pair replay aggregated per eval doc; the
-      // worst offender via row_number (shared DESC, doc_id ASC)
-      "contamination_report" ->
-        (s"""WITH sh AS (
-           |  SELECT doc_id,
-           |    list_distinct(list_transform(
-           |      range(0, greatest(len(toks) - 3, 0) + 1),
-           |      i -> array_to_string(toks[i+1:i+3], ' '))) AS sh
-           |  FROM (SELECT doc_id, string_split($NormTextSql, ' ') AS toks
-           |        FROM documents)),
-           |h AS (SELECT t.doc_id AS doc_id, e.doc_id AS eval_id,
-           |    CAST(len(list_intersect(t.sh, e.sh)) AS BIGINT) AS shared
-           |  FROM sh t JOIN sh e
-           |    ON t.doc_id < 480 AND e.doc_id >= 480
-           |   AND len(list_intersect(t.sh, e.sh)) > 0),
-           |rk AS (SELECT *, row_number() OVER (PARTITION BY eval_id
-           |    ORDER BY shared DESC, doc_id ASC) AS rn FROM h),
-           |ag AS (SELECT eval_id,
-           |    CAST(count(*) AS BIGINT) AS n_contaminated_train,
-           |    CAST(sum(shared) AS BIGINT) AS total_shared
-           |  FROM h GROUP BY eval_id)
-           |SELECT ag.eval_id, ag.n_contaminated_train, ag.total_shared,
-           |  rk.doc_id AS top_train_doc, rk.shared AS top_shared
-           |FROM ag JOIN rk ON rk.eval_id = ag.eval_id AND rk.rn = 1
-           |ORDER BY ag.eval_id"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // The bloom pass is a pure shuffle-thinner (no false negatives +
-      // exact residual join), so the oracle is simply the plain join.
-      "bloom_prune_join" ->
-        ("SELECT o_orderkey, o_custkey, c_acctbal FROM orders " +
-          "JOIN customer ON o_custkey = c_custkey " +
-          "WHERE c_acctbal > 9000.0"),
-
-      // The binning is row-preserving (each point has one bin, bin-equal
-      // is necessary for BETWEEN), so the oracle replays the naive
-      // interval join. Dates are timestamp[ms] in the data — CAST to
-      // DATE reproduces Spark datediff()'s day arithmetic exactly.
-      "range_join_binned" ->
-        ("SELECT o_orderkey, count(*) AS n_shipped, " +
-          "sum(l_quantity) AS sum_qty FROM orders JOIN lineitem " +
-          "ON CAST(l_shipdate AS DATE) BETWEEN CAST(o_orderdate AS DATE) " +
-          "AND CAST(o_orderdate AS DATE) + 13 " +
-          "WHERE o_totalprice > 495000.0 GROUP BY o_orderkey"),
-
-      // identical semantics to range_join_binned — the Spark side
-      // differs only in WHO does the binning (the optimizer rule)
-      "range_join_auto" ->
-        ("SELECT o_orderkey, count(*) AS n_shipped, " +
-          "sum(l_quantity) AS sum_qty FROM orders JOIN lineitem " +
-          "ON CAST(l_shipdate AS DATE) BETWEEN CAST(o_orderdate AS DATE) " +
-          "AND CAST(o_orderdate AS DATE) + 13 " +
-          "WHERE o_totalprice > 495000.0 GROUP BY o_orderkey"),
-
-      // Same tokenization as term_doc_freq; ln() is Spark log()'s
-      // natural log; the 4dp-rounded score exists only inside ORDER BY
-      // in both engines, so the compared columns stay integer-exact.
-      "tfidf_top_terms" ->
-        (s"""WITH tf AS (
-           |  SELECT doc_id, term, count(*) AS tf FROM (
-           |    SELECT doc_id, unnest(string_split($NormTextSql, ' '))
-           |      AS term FROM documents) GROUP BY doc_id, term),
-           |df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-           |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents)
-           |SELECT doc_id, term, tf, df,
-           |  CAST(row_number() OVER (PARTITION BY doc_id
-           |    ORDER BY round(tf * ln(n_docs / df), 4) DESC, term)
-           |    AS INTEGER) AS rk
-           |FROM tf JOIN df USING (term) CROSS JOIN nd
-           |QUALIFY rk <= 5"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // full BM25 replay: identical idf smoothing and length
-      // normalization, rank on round(score, 4) with doc_id tiebreak
-      "bm25_topk" ->
-        (s"""WITH toks AS (
-           |  SELECT doc_id, unnest(string_split($NormTextSql, ' '))
-           |    AS term FROM documents),
-           |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-           |       WHERE len(term) > 0 GROUP BY doc_id, term),
-           |dl AS (SELECT doc_id, count(*) AS dl FROM toks
-           |       WHERE len(term) > 0 GROUP BY doc_id),
-           |q AS (SELECT CAST(q_id AS BIGINT) AS q_id, term FROM (VALUES
-           |  (1, 'hash'), (1, 'join'), (2, 'column'), (2, 'scan'),
-           |  (3, 'filter'), (3, 'merge'), (3, 'small')) t(q_id, term)),
-           |qp AS (SELECT tf.doc_id, tf.term, tf.tf, dl.dl
-           |       FROM tf JOIN dl USING (doc_id)
-           |       WHERE tf.term IN (SELECT term FROM q)),
-           |dfq AS (SELECT term, count(*) AS df FROM qp GROUP BY term),
-           |sc AS (SELECT (SELECT count(*) FROM documents) AS n_docs,
-           |       (SELECT avg(CAST(dl AS DOUBLE)) FROM dl) AS avgdl),
-           |s AS (SELECT q.q_id, qp.doc_id,
-           |  sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) *
-           |    (tf * 2.2) / (tf + 1.2 *
-           |      (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl))) AS score
-           |  FROM qp JOIN q USING (term) JOIN dfq USING (term)
-           |  CROSS JOIN sc GROUP BY q.q_id, qp.doc_id)
-           |SELECT q_id, doc_id, CAST(row_number() OVER (
-           |  PARTITION BY q_id
-           |  ORDER BY round(score, 4) DESC, doc_id ASC) AS INTEGER) AS rk
-           |FROM s QUALIFY rk <= 10"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the full hybrid replay: BM25 CTE chain (rank trick) + exact
-      // cosine ranks + the RRF sum, which needs NO rounding — integer
-      // ranks through one IEEE division and one addition are
-      // bit-identical across engines
-      "hybrid_rrf_topk" ->
-        (s"""WITH toks AS (
-           |  SELECT doc_id, unnest(string_split($NormTextSql, ' '))
-           |    AS term FROM documents),
-           |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-           |       WHERE len(term) > 0 GROUP BY doc_id, term),
-           |dl AS (SELECT doc_id, count(*) AS dl FROM toks
-           |       WHERE len(term) > 0 GROUP BY doc_id),
-           |q AS (SELECT CAST(q_id AS BIGINT) AS q_id, term FROM (VALUES
-           |  (1, 'hash'), (1, 'join'), (2, 'column'), (2, 'scan'),
-           |  (3, 'filter'), (3, 'merge')) t(q_id, term)),
-           |qp AS (SELECT tf.doc_id, tf.term, tf.tf, dl.dl
-           |       FROM tf JOIN dl USING (doc_id)
-           |       WHERE tf.term IN (SELECT term FROM q)),
-           |dfq AS (SELECT term, count(*) AS df FROM qp GROUP BY term),
-           |sc AS (SELECT (SELECT count(*) FROM documents) AS n_docs,
-           |       (SELECT avg(CAST(dl AS DOUBLE)) FROM dl) AS avgdl),
-           |s AS (SELECT q.q_id, qp.doc_id,
-           |  sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) *
-           |    (tf * 2.2) / (tf + 1.2 *
-           |      (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl))) AS score
-           |  FROM qp JOIN q USING (term) JOIN dfq USING (term)
-           |  CROSS JOIN sc GROUP BY q.q_id, qp.doc_id),
-           |bm AS (SELECT q_id, doc_id, row_number() OVER (
-           |  PARTITION BY q_id
-           |  ORDER BY round(score, 4) DESC, doc_id ASC) AS rk_a
-           |  FROM s QUALIFY rk_a <= 20),
-           |qv AS (SELECT vec_id AS q_id, embedding AS q_vec
-           |       FROM embeddings WHERE vec_id IN (1, 2, 3)),
-           |sims AS (SELECT qv.q_id, e.vec_id AS doc_id,
-           |  list_cosine_similarity(qv.q_vec, e.embedding) AS sim
-           |  FROM embeddings e CROSS JOIN qv WHERE e.vec_id <> qv.q_id),
-           |ann AS (SELECT q_id, doc_id, row_number() OVER (
-           |  PARTITION BY q_id ORDER BY sim DESC, doc_id) AS rk_b
-           |  FROM sims QUALIFY rk_b <= 20),
-           |fused AS (SELECT q_id, doc_id,
-           |  coalesce(CAST(1 AS DOUBLE) / (60 + rk_a), 0) +
-           |  coalesce(CAST(1 AS DOUBLE) / (60 + rk_b), 0) AS score
-           |  FROM bm FULL OUTER JOIN ann USING (q_id, doc_id))
-           |SELECT q_id, doc_id, CAST(row_number() OVER (
-           |  PARTITION BY q_id ORDER BY score DESC, doc_id ASC)
-           |  AS INTEGER) AS rk
-           |FROM fused QUALIFY rk <= 10"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // MaxSim replayed in integer arithmetic: same floor(v·64) int8
-      // codes, max-of-dots per query token, summed per (q, d)
-      "maxsim_topk" ->
-        ("""WITH qc AS (SELECT vec_id, vec_id // 4 AS grp,
-           |  list_transform(embedding, v -> CAST(greatest(least(
-           |    floor(CAST(v AS DOUBLE) * 64), 127), -128) AS BIGINT))
-           |    AS qv FROM embeddings),
-           |qt AS (SELECT grp AS q_id, vec_id AS qtok, qv FROM qc
-           |  WHERE vec_id < 16),
-           |tokmax AS (SELECT qt.q_id, dc.grp AS d_id, qt.qtok,
-           |  max(CAST(list_dot_product(qt.qv, dc.qv) AS BIGINT)) AS mx
-           |  FROM qc dc CROSS JOIN qt WHERE dc.grp <> qt.q_id
-           |  GROUP BY 1, 2, 3),
-           |sc AS (SELECT q_id, d_id, CAST(sum(mx) AS BIGINT) AS score
-           |  FROM tokmax GROUP BY 1, 2)
-           |SELECT q_id, d_id, score, CAST(row_number() OVER (
-           |  PARTITION BY q_id ORDER BY score DESC, d_id) AS INTEGER)
-           |  AS rk FROM sc QUALIFY rk <= 10""")
-          .stripMargin.replaceAll("\\s+", " ").trim,
-
-      // the two-stage replay: unrestricted MaxSim top-10 vs the
-      // lead-token- and sum-pooled-prefiltered reranks, exact overlap
-      // counts per strategy
-      "maxsim_rerank_recall" ->
-        ("""WITH qc AS (SELECT vec_id, vec_id // 4 AS grp,
-           |  list_transform(embedding, v -> CAST(greatest(least(
-           |    floor(CAST(v AS DOUBLE) * 64), 127), -128) AS BIGINT))
-           |    AS qv FROM embeddings),
-           |qt AS (SELECT grp AS q_id, vec_id AS qtok, qv FROM qc
-           |  WHERE vec_id < 16),
-           |tokmax AS (SELECT qt.q_id, dc.grp AS d_id, qt.qtok,
-           |  max(CAST(list_dot_product(qt.qv, dc.qv) AS BIGINT)) AS mx
-           |  FROM qc dc CROSS JOIN qt WHERE dc.grp <> qt.q_id
-           |  GROUP BY 1, 2, 3),
-           |sc AS (SELECT q_id, d_id, CAST(sum(mx) AS BIGINT) AS score
-           |  FROM tokmax GROUP BY 1, 2),
-           |fl AS (SELECT q_id, d_id FROM (SELECT q_id, d_id,
-           |  row_number() OVER (PARTITION BY q_id
-           |    ORDER BY score DESC, d_id) AS rk FROM sc) WHERE rk <= 10),
-           |cand AS (SELECT q_id, d_id FROM (
-           |  SELECT qq.grp AS q_id, dd.grp AS d_id,
-           |    row_number() OVER (PARTITION BY qq.grp ORDER BY
-           |      CAST(list_dot_product(qq.qv, dd.qv) AS BIGINT) DESC,
-           |      dd.grp) AS rn
-           |  FROM qc qq CROSS JOIN qc dd
-           |  WHERE qq.vec_id < 16 AND qq.vec_id % 4 = 0
-           |    AND dd.vec_id % 4 = 0 AND dd.grp <> qq.grp)
-           |  WHERE rn <= 30),
-           |two AS (SELECT q_id, d_id FROM (SELECT s.q_id, s.d_id,
-           |  row_number() OVER (PARTITION BY s.q_id
-           |    ORDER BY s.score DESC, s.d_id) AS rk
-           |  FROM sc s JOIN cand USING (q_id, d_id)) WHERE rk <= 10),
-           |pool AS (SELECT grp, list(CAST(sv AS BIGINT) ORDER BY pos)
-           |    AS pv FROM (
-           |  SELECT grp, pos, sum(v) AS sv FROM (
-           |    SELECT grp, unnest(qv) AS v,
-           |      generate_subscripts(qv, 1) AS pos FROM qc)
-           |  GROUP BY 1, 2) GROUP BY 1),
-           |qpool AS (SELECT grp, list(CAST(sv AS BIGINT) ORDER BY pos)
-           |    AS pv FROM (
-           |  SELECT grp, pos, sum(v) AS sv FROM (
-           |    SELECT grp, unnest(qv) AS v,
-           |      generate_subscripts(qv, 1) AS pos FROM qc
-           |    WHERE vec_id < 16)
-           |  GROUP BY 1, 2) GROUP BY 1),
-           |candp AS (SELECT q_id, d_id FROM (
-           |  SELECT q.grp AS q_id, d.grp AS d_id,
-           |    row_number() OVER (PARTITION BY q.grp ORDER BY
-           |      CAST(list_dot_product(q.pv, d.pv) AS BIGINT) DESC,
-           |      d.grp) AS rn
-           |  FROM qpool q CROSS JOIN pool d WHERE d.grp <> q.grp)
-           |  WHERE rn <= 30),
-           |twop AS (SELECT q_id, d_id FROM (SELECT s.q_id, s.d_id,
-           |  row_number() OVER (PARTITION BY s.q_id
-           |    ORDER BY s.score DESC, s.d_id) AS rk
-           |  FROM sc s JOIN candp USING (q_id, d_id)) WHERE rk <= 10)
-           |SELECT f.q_id, 'lead' AS strategy, count(*) AS n_full,
-           |  CAST(sum(CASE WHEN t.d_id IS NOT NULL THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS n_overlap
-           |FROM fl f LEFT JOIN two t USING (q_id, d_id) GROUP BY 1
-           |UNION ALL
-           |SELECT f.q_id, 'pooled' AS strategy, count(*) AS n_full,
-           |  CAST(sum(CASE WHEN t.d_id IS NOT NULL THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS n_overlap
-           |FROM fl f LEFT JOIN twop t USING (q_id, d_id) GROUP BY 1""")
-          .stripMargin.replaceAll("\\s+", " ").trim,
-
-      // BM25 CTE chain + boolean-AND pseudo-qrels + the integer
-      // rank-quality census
-      "retrieval_eval" ->
-        (s"""WITH $Bm25RunCtes,
-           |nq AS (SELECT q_id, count(*) AS n_terms FROM q GROUP BY 1),
-           |relc AS (SELECT q.q_id, qp.doc_id, count(*) AS c
-           |  FROM (SELECT DISTINCT doc_id, term FROM qp) qp
-           |  JOIN q USING (term) GROUP BY 1, 2),
-           |rel AS (SELECT relc.q_id, relc.doc_id FROM relc
-           |  JOIN nq USING (q_id) WHERE c = n_terms),
-           |h AS (SELECT run.q_id, count(*) AS hits_at_k,
-           |  min(rk) AS fr FROM run JOIN rel USING (q_id, doc_id)
-           |  GROUP BY 1)
-           |SELECT nr.q_id, nr.n_rel,
-           |  coalesce(h.hits_at_k, 0) AS hits_at_k,
-           |  CAST(coalesce(h.fr, 0) AS INTEGER) AS first_rel_rank
-           |FROM (SELECT q_id, count(*) AS n_rel FROM rel GROUP BY 1) nr
-           |LEFT JOIN h USING (q_id)""")
-          .stripMargin.replaceAll("\\s+", " ").trim,
-
-      "cube_agg" ->
-        ("SELECT coalesce(l_returnflag, '(all)') AS returnflag, " +
-          "coalesce(l_linestatus, '(all)') AS linestatus, " +
-          "sum(l_quantity) AS sum_qty, count(*) AS cnt FROM lineitem " +
-          "GROUP BY CUBE (l_returnflag, l_linestatus)"),
-
-      "pivot_agg" ->
-        ("SELECT o_orderstatus, " +
-          "count(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS urgent, " +
-          "count(*) FILTER (WHERE o_orderpriority = '2-HIGH') AS high, " +
-          "count(*) FILTER (WHERE o_orderpriority = '3-MEDIUM') AS medium, " +
-          "count(*) FILTER (WHERE o_orderpriority = '4-NOT SPECIFIED') " +
-          "AS not_specified, " +
-          "count(*) FILTER (WHERE o_orderpriority = '5-LOW') AS low " +
-          "FROM orders GROUP BY o_orderstatus"),
-
-      // Two-tier PPS replay (see Sampling.systematicByWeight): the
-      // certainty prefix on the weight-desc axis, then fixed-step
-      // selection over the residual weights. DuckDB sums BIGINT into
-      // HUGEINT; `//` floors it exactly — same values Spark's long DIV
-      // produces below 2^63.
-      "sample_weighted" ->
-        (s"""WITH base AS (SELECT doc_id, lang, n_chars FROM documents
-           |  WHERE n_chars > 0),
-           |r AS (SELECT *,
-           |  row_number() OVER (PARTITION BY lang
-           |    ORDER BY n_chars DESC, doc_id) AS rk,
-           |  sum(n_chars) OVER (PARTITION BY lang
-           |    ORDER BY n_chars DESC, doc_id
-           |    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS sfx
-           |  FROM base),
-           |f AS (SELECT *, CASE WHEN n_chars * GREATEST(20 - rk + 1, 0) >= sfx
-           |  THEN 1 ELSE 0 END AS cert FROM r),
-           |s AS (SELECT *,
-           |  sum(CASE WHEN cert = 0 THEN n_chars ELSE 0 END)
-           |    OVER (PARTITION BY lang ORDER BY doc_id
-           |      ROWS UNBOUNDED PRECEDING) AS cum,
-           |  sum(CASE WHEN cert = 0 THEN n_chars ELSE 0 END)
-           |    OVER (PARTITION BY lang) AS tot,
-           |  sum(cert) OVER (PARTITION BY lang) AS c FROM f)
-           |SELECT doc_id, lang, n_chars FROM s
-           |WHERE cert = 1 OR (tot > 0 AND
-           |  (cum * (20 - c)) // tot >
-           |  ((cum - n_chars) * (20 - c)) // tot)"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      "upsert_apply" ->
-        (s"""WITH base AS (SELECT c_custkey, c_name, c_acctbal,
-           |    c_mktsegment FROM customer),
-           |changes AS (
-           |  SELECT c_custkey, c_name, c_acctbal + 1000.0 AS c_acctbal,
-           |    c_mktsegment, 'U' AS op FROM base
-           |  WHERE c_custkey % 5 = 0 AND c_custkey % 7 <> 0
-           |  UNION ALL SELECT c_custkey, c_name, c_acctbal,
-           |    c_mktsegment, 'D' FROM base WHERE c_custkey % 7 = 0
-           |  UNION ALL SELECT c_custkey + 200000, c_name, c_acctbal,
-           |    c_mktsegment, 'I' FROM base WHERE c_custkey % 11 = 0)
-           |SELECT b.* FROM base b WHERE NOT EXISTS
-           |  (SELECT 1 FROM changes c WHERE c.c_custkey = b.c_custkey)
-           |UNION ALL
-           |SELECT c_custkey, c_name, c_acctbal, c_mktsegment
-           |FROM changes WHERE op <> 'D'"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // pair/unigram counts and the single-division PMI ratio replay;
-      // ordering ties broken by the pair text on both sides
-      "collocations_topk" ->
-        (s"""WITH t AS (SELECT string_split($NormTextSql, ' ') AS tk
-           |  FROM documents WHERE text IS NOT NULL),
-           |uni AS (SELECT tok AS t, count(*) AS c FROM (
-           |  SELECT unnest(tk) AS tok FROM t) WHERE len(tok) > 0
-           |  GROUP BY tok),
-           |ntok AS (SELECT CAST(sum(c) AS BIGINT) AS n_tok FROM uni),
-           |bg AS (SELECT unnest(list_transform(range(1, len(tk)),
-           |  i -> {'l': tk[i], 'r': tk[i+1]})) AS s FROM t),
-           |pc AS (SELECT s.l AS l, s.r AS r, count(*) AS pair_cnt
-           |  FROM bg GROUP BY 1, 2 HAVING count(*) >= 5)
-           |SELECT pc.l, pc.r, CAST(pc.pair_cnt AS BIGINT) AS pair_cnt,
-           |  CAST(CAST(pc.pair_cnt AS HUGEINT) * n.n_tok AS DOUBLE) /
-           |    CAST(CAST(ul.c AS HUGEINT) * ur.c AS DOUBLE) AS pmi_ratio
-           |FROM pc JOIN uni ul ON ul.t = pc.l
-           |JOIN uni ur ON ur.t = pc.r CROSS JOIN ntok n
-           |ORDER BY pmi_ratio DESC, pc.l, pc.r LIMIT 50"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the full canonicalization replayed step by step in RE2
-      "url_dedup" ->
-        ("""WITH u AS (SELECT doc_id, unnest([
-           |  'HTTPS://Site' || (doc_id % 7) ||
-           |    '.Example.COM:443/d/' || doc_id ||
-           |    '/?utm_source=feed&b=2&a=1#sec' || doc_id,
-           |  'https://site' || (doc_id % 7) ||
-           |    '.example.com/d/' || doc_id || '?a=1&b=2']) AS url
-           |  FROM documents),
-           |st AS (SELECT
-           |  lower(regexp_extract(regexp_replace(url, '#.*$', ''),
-           |    '^([A-Za-z]+)://', 1)) AS scheme,
-           |  regexp_replace(regexp_replace(url, '#.*$', ''),
-           |    '^[A-Za-z]+://', '') AS rest FROM u),
-           |p AS (SELECT scheme,
-           |  lower(regexp_replace(regexp_extract(rest, '^([^/?]+)', 1),
-           |    CASE WHEN scheme = 'https' THEN ':443$'
-           |      WHEN scheme = 'http' THEN ':80$' ELSE '$^' END, ''))
-           |    AS host,
-           |  regexp_replace(rest, '^[^/?]+', '') AS pathq FROM st),
-           |p2 AS (SELECT scheme, host,
-           |  regexp_replace(regexp_extract(pathq, '^([^?]*)', 1),
-           |    '/+$', '') AS path0,
-           |  regexp_extract(pathq, '\?(.*)$', 1) AS q FROM p),
-           |c AS (SELECT scheme || '://' || host ||
-           |  (CASE WHEN path0 = '' THEN '/' ELSE path0 END) ||
-           |  (CASE WHEN sq = '' THEN '' ELSE '?' || sq END) AS curl
-           |  FROM (SELECT scheme, host, path0, array_to_string(
-           |    list_sort(list_filter(string_split(q, '&'),
-           |      x -> x <> '' AND NOT regexp_matches(x,
-           |        '^(utm_[^=]*|ref)='))), '&') AS sq FROM p2))
-           |SELECT curl AS canonical_url,
-           |  CAST(count(*) AS BIGINT) AS n_variants
-           |FROM c GROUP BY 1 ORDER BY 1"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the reference LM's counts from the %4==0 slice; unseen
-      // bigrams at the flat 20-bit OOV penalty
-      "ref_surprisal" ->
-        (s"""WITH t AS (
-           |  SELECT doc_id, string_split($NormTextSql, ' ') AS tk
-           |  FROM documents),
-           |bg AS (SELECT doc_id, unnest(list_transform(
-           |    range(1, len(tk)), i -> {'prev': tk[i], 'w': tk[i+1]}))
-           |    AS s FROM t),
-           |p AS (SELECT doc_id, s.prev AS prev, s.w AS w FROM bg),
-           |c AS (SELECT prev, w, CAST(count(*) AS BIGINT) AS c_bw
-           |      FROM p WHERE doc_id % 4 = 0 GROUP BY 1, 2),
-           |cp AS (SELECT prev, CAST(sum(c_bw) AS BIGINT) AS c_prev
-           |       FROM c GROUP BY 1),
-           |tf AS (SELECT doc_id, prev, w, count(*) AS tf FROM p
-           |       WHERE doc_id % 4 <> 0 GROUP BY 1, 2, 3)
-           |SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_bigrams,
-           |  CAST(sum(CASE WHEN c.c_bw IS NOT NULL THEN tf ELSE 0 END)
-           |    AS BIGINT) AS known_bigrams,
-           |  CAST(sum(tf * CASE WHEN c.c_bw IS NULL THEN 20
-           |    ELSE length(bin(cp.c_prev // c.c_bw)) END) AS BIGINT)
-           |    AS surprisal_bits
-           |FROM tf LEFT JOIN c USING (prev, w)
-           |LEFT JOIN cp USING (prev)
-           |GROUP BY doc_id ORDER BY doc_id"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the BATCH recompute over all events — incremental must equal
-      // it exactly (that is the operator's contract)
-      "sessionize_incremental" ->
-        (s"""WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_id
-           |  FROM events),
-           |x AS (SELECT user_id, us, event_id,
-           |  CASE WHEN us - lag(us) OVER (PARTITION BY user_id
-           |    ORDER BY us, event_id) > ${EventOps.SessionGapNs / 1000}
-           |    THEN 1 ELSE 0 END AS b FROM e),
-           |s AS (SELECT user_id, us,
-           |  sum(b) OVER (PARTITION BY user_id ORDER BY us, event_id
-           |    ROWS UNBOUNDED PRECEDING) AS sidx FROM x)
-           |SELECT user_id, min(us) AS session_start,
-           |  max(us) AS session_end, CAST(count(*) AS BIGINT)
-           |  AS n_events
-           |FROM s GROUP BY user_id, sidx
-           |ORDER BY user_id, session_start"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // int8 dot replay; both argmaxes as row_number over
-      // (score desc, id) — the deterministic tie order
-      "mutual_top_match" ->
-        ("""WITH q AS (SELECT vec_id, list_transform(embedding,
-           |  v -> CAST(greatest(least(floor(CAST(v AS DOUBLE) * 64),
-           |    127), -128) AS BIGINT)) AS qv FROM embeddings),
-           |a AS (SELECT vec_id AS a_id, qv AS qa FROM q
-           |  WHERE vec_id % 2 = 0 AND vec_id < 2000),
-           |b AS (SELECT vec_id AS b_id, qv AS qb FROM q
-           |  WHERE vec_id % 2 = 1 AND vec_id < 2000),
-           |p AS (SELECT a_id, b_id,
-           |  CAST(list_dot_product(qa, qb) AS BIGINT) AS score
-           |  FROM a, b),
-           |ab AS (SELECT a_id, b_id, score FROM (SELECT *,
-           |  row_number() OVER (PARTITION BY a_id
-           |    ORDER BY score DESC, b_id) AS rn FROM p) WHERE rn = 1),
-           |ba AS (SELECT a_id, b_id FROM (SELECT *,
-           |  row_number() OVER (PARTITION BY b_id
-           |    ORDER BY score DESC, a_id) AS rn FROM p) WHERE rn = 1)
-           |SELECT ab.a_id, ab.b_id, ab.score FROM ab
-           |JOIN ba USING (a_id, b_id) ORDER BY a_id"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the same fixed-point revenue in HUGEINT; year cast to INT on
-      // both sides; revenue_num as a canonical digit string (beyond
-      // int64 — wide decimals hash engine-dependently, r15)
-      "star_revenue" ->
-        ("""WITH li AS (SELECT l_orderkey,
-           |  CAST(round(l_extendedprice * 10000.0) AS HUGEINT) AS p,
-           |  CAST(round(l_discount * 10000.0) AS HUGEINT) AS d
-           |  FROM lineitem)
-           |SELECT r_name, CAST(year(o_orderdate) AS INTEGER) AS o_year,
-           |  CAST(sum(p * (10000 - d)) AS VARCHAR)
-           |    AS revenue_num,
-           |  CAST(count(*) AS BIGINT) AS n_items
-           |FROM li JOIN orders ON l_orderkey = o_orderkey
-           |JOIN customer ON o_custkey = c_custkey
-           |JOIN nation ON c_nationkey = n_nationkey
-           |JOIN region ON n_regionkey = r_regionkey
-           |GROUP BY 1, 2 ORDER BY 1, 2"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // ordered list() aggregation + sliding slices; exact counts,
-      // full tie order at the top-k boundary
-      "event_paths" ->
-        ("""WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_id,
-           |  event_type FROM events),
-           |s AS (SELECT user_id,
-           |  list(event_type ORDER BY us, event_id) AS tk FROM e
-           |  GROUP BY user_id),
-           |tr AS (SELECT unnest(list_transform(range(1, len(tk) - 1),
-           |  i -> {'a': tk[i], 'b': tk[i+1], 'c': tk[i+2]})) AS p
-           |  FROM s WHERE len(tk) >= 3),
-           |pc AS (SELECT p.a AS step1, p.b AS step2, p.c AS step3,
-           |  CAST(count(*) AS BIGINT) AS path_cnt FROM tr
-           |  GROUP BY 1, 2, 3 HAVING count(*) >= 5)
-           |SELECT * FROM pc
-           |ORDER BY path_cnt DESC, step1, step2, step3 LIMIT 50"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the int8 norm² replay feeding the same nearest-rank
-      // median/MAD algebra as mad_outliers
-      "embedding_outliers" -> {
-        val q = "CAST(greatest(least(floor(CAST(v AS DOUBLE) * 64), " +
-          "127), -128) AS BIGINT)"
-        s"""WITH v AS (SELECT label,
-           |  CAST(list_sum(list_transform(embedding,
-           |    v -> $q * $q)) AS BIGINT) AS norm2
-           |  FROM embeddings WHERE embedding IS NOT NULL),
-           |r AS (SELECT label, norm2, row_number() OVER (
-           |    PARTITION BY label ORDER BY norm2) AS rn,
-           |  count(*) OVER (PARTITION BY label) AS n FROM v),
-           |med AS (SELECT label, min(norm2) AS med FROM r
-           |  WHERE rn * 2 >= n GROUP BY label),
-           |dev AS (SELECT v.label, v.norm2, m.med,
-           |  abs(v.norm2 - m.med) AS d FROM v JOIN med m
-           |  USING (label)),
-           |r2 AS (SELECT label, d, row_number() OVER (
-           |    PARTITION BY label ORDER BY d) AS rn,
-           |  count(*) OVER (PARTITION BY label) AS n FROM dev),
-           |mad AS (SELECT label, min(d) AS mad FROM r2
-           |  WHERE rn * 2 >= n GROUP BY label)
-           |SELECT d.label, CAST(count(*) AS BIGINT) AS n_rows,
-           |  CAST(sum(CASE WHEN d.d > 3 * mad.mad THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS n_outliers,
-           |  any_value(d.med) AS med, any_value(mad.mad) AS mad
-           |FROM dev d JOIN mad USING (label)
-           |GROUP BY d.label ORDER BY d.label"""
-          .stripMargin.replaceAll("\\s+", " ").trim
-      },
-
-      // per-stage min-anchor CTEs; counts replay exactly
-      "funnel_3step" -> {
-        val wk = EventOps.WeekUs
-        s"""WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_type
-           |  FROM events),
-           |s1 AS (SELECT user_id, min(us) AS t FROM e
-           |  WHERE event_type = 'view' GROUP BY user_id),
-           |s2 AS (SELECT e.user_id, min(us) AS t FROM e
-           |  JOIN s1 ON s1.user_id = e.user_id
-           |  WHERE e.event_type = 'click' AND e.us > s1.t
-           |    AND e.us <= s1.t + $wk GROUP BY e.user_id),
-           |s3 AS (SELECT e.user_id, min(us) AS t FROM e
-           |  JOIN s2 ON s2.user_id = e.user_id
-           |  WHERE e.event_type = 'purchase' AND e.us > s2.t
-           |    AND e.us <= s2.t + $wk GROUP BY e.user_id)
-           |SELECT * FROM (
-           |  SELECT CAST(1 AS BIGINT) AS step_idx, 'view' AS step_type,
-           |    CAST(count(*) AS BIGINT) AS users FROM s1
-           |  UNION ALL SELECT 2, 'click', count(*) FROM s2
-           |  UNION ALL SELECT 3, 'purchase', count(*) FROM s3)
-           |ORDER BY step_idx"""
-          .stripMargin.replaceAll("\\s+", " ").trim
-      },
-
-      // the same fixed-point sums in HUGEINT; slope one division;
-      // num/den as canonical digit strings (beyond int64 — wide
-      // decimals hash engine-dependently, r15)
-      "ols_trend" ->
-        ("""WITH s AS (SELECT l_returnflag,
-           |  CAST(round(l_quantity * 10000.0) AS HUGEINT) AS x,
-           |  CAST(round(l_extendedprice * 10000.0) AS HUGEINT) AS y
-           |  FROM lineitem),
-           |a AS (SELECT l_returnflag, CAST(count(*) AS HUGEINT) AS n,
-           |  sum(x) AS sx, sum(y) AS sy, sum(x * x) AS sxx,
-           |  sum(x * y) AS sxy FROM s GROUP BY 1)
-           |SELECT l_returnflag, CAST(n AS BIGINT) AS n,
-           |  CAST(n * sxy - sx * sy AS VARCHAR) AS slope_num,
-           |  CAST(n * sxx - sx * sx AS VARCHAR) AS slope_den,
-           |  (n * sxx - sx * sx) = 0 AS degenerate,
-           |  CASE WHEN (n * sxx - sx * sx) = 0 THEN 0.0
-           |    ELSE CAST(n * sxy - sx * sy AS DOUBLE) /
-           |      CAST(n * sxx - sx * sx AS DOUBLE) END AS slope
-           |FROM a ORDER BY l_returnflag"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // distinct (order, item) counts, pair self-join, the three
-      // single-division scores; full tie order at the top-k boundary
-      "basket_pairs" ->
-        ("""WITH items AS (SELECT DISTINCT l_orderkey AS ok,
-           |  l_partkey AS item FROM lineitem),
-           |ic AS (SELECT item, CAST(count(*) AS BIGINT) AS c
-           |  FROM items GROUP BY item),
-           |no AS (SELECT CAST(count(DISTINCT ok) AS BIGINT)
-           |  AS n_orders FROM items),
-           |p AS (SELECT x.item AS item_a, y.item AS item_b,
-           |  CAST(count(*) AS BIGINT) AS pair_cnt
-           |  FROM items x JOIN items y
-           |    ON x.ok = y.ok AND x.item < y.item
-           |  GROUP BY 1, 2 HAVING count(*) >= 3)
-           |SELECT p.item_a, p.item_b, p.pair_cnt, a.c AS cnt_a,
-           |  b.c AS cnt_b, no.n_orders,
-           |  CAST(CAST(p.pair_cnt AS HUGEINT) * no.n_orders AS DOUBLE) /
-           |    CAST(CAST(a.c AS HUGEINT) * b.c AS DOUBLE) AS lift,
-           |  CAST(p.pair_cnt AS DOUBLE) / CAST(a.c AS DOUBLE)
-           |    AS conf_a_to_b,
-           |  CAST(p.pair_cnt AS DOUBLE) / CAST(b.c AS DOUBLE)
-           |    AS conf_b_to_a
-           |FROM p JOIN ic a ON a.item = p.item_a
-           |JOIN ic b ON b.item = p.item_b CROSS JOIN no
-           |ORDER BY lift DESC, p.item_a, p.item_b LIMIT 100"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the bpe_merges chain extended one apply further (w<rounds>);
-      // weighted symbol sums and one final division
-      "bpe_compression" ->
-        (s"WITH ${bpeMinedTopsCte(BpeRounds, applyLast = true)}, " +
-          "bf AS (SELECT CAST(sum(cnt * length(w)) AS BIGINT) " +
-          "AS symbols_before FROM w0), " +
-          "af AS (SELECT CAST(sum(cnt * length(w)) AS BIGINT) " +
-          s"AS symbols_after FROM w$BpeRounds) " +
-          "SELECT symbols_before, symbols_after, " +
-          "CAST(symbols_before AS DOUBLE) / " +
-          "CAST(symbols_after AS DOUBLE) AS compression_x " +
-          "FROM bf, af"),
-
-      // both window offsets as list_transform slices, exact counts,
-      // full (cnt desc, l, r, dist) tie order at the top-k boundary
-      "skipgram_counts" ->
-        (s"""WITH t AS (SELECT string_split($NormTextSql, ' ') AS tk
-           |  FROM documents WHERE text IS NOT NULL),
-           |bg AS (
-           |  SELECT unnest(list_transform(range(1, len(tk)),
-           |    i -> {'l': tk[i], 'r': tk[i+1], 'dist': 1})) AS s FROM t
-           |  UNION ALL
-           |  SELECT unnest(list_transform(range(1, len(tk) - 1),
-           |    i -> {'l': tk[i], 'r': tk[i+2], 'dist': 2})) AS s FROM t),
-           |pc AS (SELECT s.l AS l, s.r AS r,
-           |  CAST(s.dist AS BIGINT) AS dist,
-           |  CAST(count(*) AS BIGINT) AS pair_cnt FROM bg
-           |  WHERE len(s.l) > 0 AND len(s.r) > 0
-           |  GROUP BY 1, 2, 3 HAVING count(*) >= 5)
-           |SELECT l, r, dist, pair_cnt FROM pc
-           |ORDER BY pair_cnt DESC, l, r, dist LIMIT 100"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the 8-lag weighted sum replayed under one WINDOW clause;
-      // verdict by integer cross-multiplication
-      "ewma_anomaly" -> {
-        val terms = (1 to 8)
-          .map(d => s"lag(cnt, $d) OVER win * ${1L << (8 - d)}")
-          .mkString(" + ")
-        "WITH b AS (SELECT event_type, " +
-          "epoch_us(ts) // 3600000000 AS bucket, " +
-          "CAST(count(*) AS BIGINT) AS cnt FROM events GROUP BY 1, 2), " +
-          s"w AS (SELECT event_type, bucket, cnt, $terms AS ewma_num " +
-          "FROM b WINDOW win AS " +
-          "(PARTITION BY event_type ORDER BY bucket)) " +
-          "SELECT event_type, bucket, cnt, " +
-          "coalesce(ewma_num, 0) AS ewma_num, " +
-          "CASE WHEN ewma_num IS NULL THEN FALSE " +
-          "ELSE cnt * 255 > ewma_num * 2 END AS is_spike " +
-          "FROM w ORDER BY event_type, bucket"
-      },
-
-      // leave-one-out slot baseline, all-BIGINT
-      "seasonal_anomaly" ->
-        ("WITH b AS (SELECT event_type, " +
-          "epoch_us(ts) // 3600000000 AS bucket, " +
-          "CAST(count(*) AS BIGINT) AS cnt FROM events GROUP BY 1, 2), " +
-          "s AS (SELECT event_type, bucket, cnt, bucket % 24 AS slot " +
-          "FROM b), " +
-          "w AS (SELECT *, CAST(sum(cnt) OVER " +
-          "(PARTITION BY event_type, slot) - cnt AS BIGINT) " +
-          "AS base_cnt, CAST(count(*) OVER " +
-          "(PARTITION BY event_type, slot) - 1 AS BIGINT) AS base_n " +
-          "FROM s) " +
-          "SELECT event_type, bucket, cnt, slot, base_cnt, base_n, " +
-          "(base_n > 0 AND cnt * base_n > base_cnt * 2) AS is_spike " +
-          "FROM w ORDER BY event_type, bucket"),
-
-      // the full blocking replay feeding a recursive reach closure;
-      // survivorship replayed as row_number over (len desc, id)
-      "er_golden_record" ->
-        (FuzzyJoinCtes.replaceFirst("WITH ", "WITH RECURSIVE ") +
-          ", pairs AS (SELECT l_id, r_id FROM c " +
-          "WHERE levenshtein(l_name, r_name) <= 1), " +
-          "recs AS (SELECT l_id AS id, l_name AS name FROM lf " +
-          "UNION ALL SELECT r_id, r_name FROM rt), " +
-          "edges AS (SELECT l_id AS src, r_id AS dst FROM pairs " +
-          "UNION SELECT r_id, l_id FROM pairs), " +
-          "reach(node, lbl) AS (SELECT id, id FROM recs " +
-          "UNION SELECT e.dst, r.lbl FROM reach r " +
-          "JOIN edges e ON e.src = r.node), " +
-          "comp AS (SELECT node, min(lbl) AS component FROM reach " +
-          "GROUP BY node), " +
-          "m AS (SELECT comp.component, recs.id, recs.name FROM recs " +
-          "JOIN comp ON comp.node = recs.id), " +
-          "g AS (SELECT component, CAST(count(*) AS BIGINT) " +
-          "AS n_members FROM m GROUP BY component), " +
-          "rk AS (SELECT component, name, row_number() OVER (" +
-          "PARTITION BY component " +
-          "ORDER BY length(name) DESC, id) AS rn FROM m) " +
-          "SELECT g.component AS cluster_id, g.n_members, " +
-          "rk.name AS canonical_name FROM g " +
-          "JOIN rk ON rk.component = g.component AND rk.rn = 1 " +
-          "ORDER BY cluster_id"),
-
-      // the three LPA rounds unrolled: per round a count + argmax
-      // (row_number over count desc, label asc) CTE
-      "label_propagation" -> {
-        def round(prev: String, out: String) =
-          s"$out AS (SELECT n, lbl FROM (SELECT adj.n AS n, " +
-            "l.lbl AS lbl, row_number() OVER (PARTITION BY adj.n " +
-            "ORDER BY count(*) DESC, l.lbl) AS rn " +
-            s"FROM adj JOIN $prev l ON l.n = adj.m " +
-            "GROUP BY adj.n, l.lbl) WHERE rn = 1)"
-        "WITH sp AS (SELECT DISTINCT l_orderkey, l_suppkey " +
-          "FROM lineitem WHERE l_orderkey < 4000), " +
-          "e AS (SELECT DISTINCT x.l_suppkey AS a, y.l_suppkey AS b " +
-          "FROM sp x JOIN sp y ON x.l_orderkey = y.l_orderkey " +
-          "AND x.l_suppkey < y.l_suppkey), " +
-          "adj AS (SELECT a AS n, b AS m FROM e " +
-          "UNION ALL SELECT b, a FROM e), " +
-          "l0 AS (SELECT DISTINCT n, n AS lbl FROM adj), " +
-          s"${round("l0", "r1")}, ${round("r1", "r2")}, " +
-          s"${round("r2", "r3")} " +
-          "SELECT n AS node, lbl AS label FROM r3 ORDER BY node"
-      },
-
-      // every merge round unrolled: pair-count + top-1 + apply CTEs,
-      // placeholders expanded newest-first in the output (round k's
-      // symbols may contain earlier placeholders, which the later
-      // replaces fix — the same fold the Spark side runs)
-      "bpe_merges" -> {
-        def expand(e: String, r: Int): String =
-          (r - 1 to 1 by -1).foldLeft(e)((acc, j) =>
-            s"replace($acc, ${bpeChr(j)}, t$j.l || t$j.r)")
-        val branches = (1 to BpeRounds).map { r =>
-          s"SELECT CAST($r AS BIGINT) AS merge_rank, " +
-            s"${expand(s"t$r.l", r)} AS left_sym, " +
-            s"${expand(s"t$r.r", r)} AS right_sym, " +
-            s"t$r.pair_cnt FROM ${bpeTopsFrom(r)}"
-        }
-        s"WITH ${bpeMinedTopsCte(BpeRounds)} " +
-          s"SELECT * FROM (${branches.mkString(" UNION ALL ")}) " +
-          "ORDER BY merge_rank"
-      },
-
-      // the full mined chain INCLUDING w<rounds>; per round a 1-row
-      // weighted recount of the applied vocabulary against the
-      // constant w0 total
-      "bpe_merge_curve" -> {
-        val sums = (1 to BpeRounds).map(r =>
-          s"s$r AS MATERIALIZED (SELECT " +
-            "CAST(sum(cnt * length(w)) AS BIGINT) " +
-            s"AS symbols_after FROM w$r)").mkString(", ")
-        val branches = (1 to BpeRounds).map(r =>
-          s"SELECT CAST($r AS BIGINT) AS merge_rank, t$r.pair_cnt, " +
-            s"bf.symbols_before, s$r.symbols_after FROM t$r, s$r, bf")
-        s"WITH ${bpeMinedTopsCte(BpeRounds, applyLast = true)}, $sums, " +
-          "bf AS (SELECT CAST(sum(cnt * length(w)) AS BIGINT) " +
-          "AS symbols_before FROM w0) " +
-          s"SELECT * FROM (${branches.mkString(" UNION ALL ")}) " +
-          "ORDER BY merge_rank"
-      },
-
-      // the fallback decomposition replayed with the RE2 class: word
-      // pieces via regexp_extract_all, space-free chars via the
-      // replace-length delta, the verdict shared with ws_tok_ok
-      "token_fallback_counts" ->
-        (s"SELECT doc_id, lang, " +
-          s"CAST(len(list_filter(string_split($NormTextSql, ' '), " +
-          "w -> length(w) > 0)) AS BIGINT) AS n_ws_tokens, " +
-          s"CAST(len(regexp_extract_all($NormTextSql, " +
-          s"'[^ ${SpacefreeClassSql.stripPrefix("[").stripSuffix("]")}]+'" +
-          ")) AS BIGINT) AS n_pieces, " +
-          s"CAST(length(replace($NormTextSql, ' ', '')) - " +
-          s"length(regexp_replace(replace($NormTextSql, ' ', ''), " +
-          s"'$SpacefreeClassSql', '', 'g')) AS BIGINT) " +
-          "AS n_spacefree_chars, " +
-          s"CAST(len(regexp_extract_all($NormTextSql, " +
-          s"'[^ ${SpacefreeClassSql.stripPrefix("[").stripSuffix("]")}]+'" +
-          s")) + (length(replace($NormTextSql, ' ', '')) - " +
-          s"length(regexp_replace(replace($NormTextSql, ' ', ''), " +
-          s"'$SpacefreeClassSql', '', 'g'))) AS BIGINT) " +
-          "AS n_tokens_fallback, " +
-          s"$WsTokOkSql AS ws_tok_ok " +
-          "FROM documents WHERE text IS NOT NULL"),
-
-      // the DEEP (256-round, planted-vocabulary) mined-merge chain +
-      // the distinct-word one-replace-per-CTE apply, occurrences
-      // joined back in document order; ids as code points, the full
-      // sequence compared through its md5
-      "bpe_encode" ->
-        (s"WITH ${bpeMinedTopsCte(BpeDeepRounds, textExpr = BpeDeepTextSql)}, " +
-          s"${bpeDeepDocWordsCtes()}, " +
-          s"${bpeEncChainCtes(BpeDeepRounds)}, " +
-          "pos AS (SELECT doc_id, source, unnest(wd) AS w, " +
-          "generate_subscripts(wd, 1) AS ord FROM d), " +
-          "tk AS (SELECT p.doc_id, " +
-          "flatten(list(list_transform(range(1, length(e.mw) + 1), " +
-          "i -> ascii(e.mw[i:i])) ORDER BY p.ord)) AS ids " +
-          s"FROM pos p JOIN e$BpeDeepRounds e USING (w) " +
-          "GROUP BY p.doc_id) " +
-          "SELECT d.doc_id, d.source, " +
-          "CAST(COALESCE(len(tk.ids), 0) AS BIGINT) AS n_tokens, " +
-          "md5(COALESCE(array_to_string(tk.ids, ','), '')) AS ids_hash, " +
-          "COALESCE(array_to_string(tk.ids[1:8], ','), '') AS head_ids " +
-          "FROM d LEFT JOIN tk ON tk.doc_id = d.doc_id ORDER BY d.doc_id"),
-
-      // deep encoded token counts through the exclusive-prefix-sum
-      // pack assignment (trunc division, both operands non-negative)
-      "bpe_pack" ->
-        (s"WITH ${bpeMinedTopsCte(BpeDeepRounds, textExpr = BpeDeepTextSql)}, " +
-          s"${bpeDeepDocWordsCtes()}, " +
-          s"${bpeEncChainCtes(BpeDeepRounds)}, " +
-          "pos AS (SELECT doc_id, unnest(wd) AS w FROM d), " +
-          "s AS (SELECT p.doc_id, sum(length(e.mw)) AS n " +
-          s"FROM pos p JOIN e$BpeDeepRounds e USING (w) " +
-          "GROUP BY p.doc_id), " +
-          "n AS (SELECT d.doc_id, d.source, " +
-          "CAST(COALESCE(s.n, 0) AS BIGINT) AS n_tokens " +
-          "FROM d LEFT JOIN s ON s.doc_id = d.doc_id), " +
-          "p AS (SELECT doc_id, source, n_tokens, " +
-          "COALESCE(sum(n_tokens) OVER (PARTITION BY source " +
-          "ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND " +
-          "1 PRECEDING), 0) AS pre FROM n) " +
-          "SELECT doc_id, source, n_tokens, " +
-          "CAST(pre // 512 AS BIGINT) AS pack_id FROM p ORDER BY doc_id"),
-
-      // per-language fertility at the deep merge table: the same
-      // encoded-length replay as bpe_pack, aggregated; the ratio is
-      // exact integer division of two exact sums, guarded like the
-      // Spark side
-      "bpe_fertility" ->
-        (s"WITH ${bpeMinedTopsCte(BpeDeepRounds, textExpr = BpeDeepTextSql)}, " +
-          bpeDeepDocWordsCtes(
-            s"lang, length(${normTextSqlOf(BpeDeepTextSql)}) AS nc, " +
-              s"${wsTokOkSqlOf(normTextSqlOf(BpeDeepTextSql))} AS ws_tok_ok, ") +
-          s", ${bpeEncChainCtes(BpeDeepRounds)}, " +
-          "pos AS (SELECT doc_id, unnest(wd) AS w FROM d), " +
-          "s AS (SELECT p.doc_id, sum(length(e.mw)) AS n " +
-          s"FROM pos p JOIN e$BpeDeepRounds e USING (w) " +
-          "GROUP BY p.doc_id), " +
-          "n AS (SELECT d.lang, d.nc, d.ws_tok_ok, " +
-          "CAST(len(d.wd) AS BIGINT) AS n_words, " +
-          "CAST(COALESCE(s.n, 0) AS BIGINT) AS n_tokens " +
-          "FROM d LEFT JOIN s ON s.doc_id = d.doc_id) " +
-          "SELECT lang, count(*) AS n_docs, " +
-          "CAST(sum(CASE WHEN NOT ws_tok_ok THEN 1 ELSE 0 END) " +
-          "AS BIGINT) AS n_spacefree_docs, " +
-          "CAST(sum(n_words) AS BIGINT) AS total_words, " +
-          "CAST(sum(n_tokens) AS BIGINT) AS total_tokens, " +
-          "CAST(sum(nc) AS BIGINT) AS total_chars, " +
-          "CASE WHEN sum(n_words) > 0 THEN " +
-          "CAST(sum(n_tokens) * 100 // sum(n_words) AS BIGINT) END " +
-          "AS fertility_pct FROM n GROUP BY 1"),
-
-      // imported-tokenizer fertility: the corpus construction is pure
-      // id arithmetic and the per-word token counts are the
-      // hand-computed constants from the committed fixture header —
-      // the oracle replays BOTH, so the engine's parse→intern→
-      // priority-merge pipeline is pinned without the symbol dialect
-      // ever needing a SQL rendering
-      "bpe_fertility_imported" ->
-        ("WITH v AS (SELECT * FROM (VALUES " +
-          ImportedVocab.zipWithIndex.map { case ((w, tok), i) =>
-            s"($i, '$w', CAST($tok AS BIGINT))" }.mkString(", ") +
-          ") AS t(i, w, tok)), " +
-          "d AS (SELECT doc_id, lang, 5 + doc_id % 7 AS n " +
-          "FROM documents), " +
-          "j AS (SELECT doc_id, lang, unnest(range(0, n)) AS jj " +
-          "FROM d), " +
-          "wj AS (SELECT j.doc_id, j.lang, v.w, v.tok FROM j " +
-          s"JOIN v ON v.i = (j.doc_id + j.jj) % ${ImportedVocab.size}), " +
-          "per AS (SELECT doc_id, lang, " +
-          "CAST(count(*) AS BIGINT) AS n_words, " +
-          "CAST(sum(tok) AS BIGINT) AS n_tokens, " +
-          "CAST(sum(len(w)) + count(*) - 1 AS BIGINT) AS n_chars " +
-          "FROM wj GROUP BY 1, 2) " +
-          "SELECT lang, count(*) AS n_docs, " +
-          "CAST(sum(n_words) AS BIGINT) AS total_words, " +
-          "CAST(sum(n_tokens) AS BIGINT) AS total_tokens, " +
-          "CAST(sum(n_chars) AS BIGINT) AS total_chars, " +
-          "CASE WHEN sum(n_words) > 0 THEN " +
-          "CAST(sum(n_tokens) * 100 // sum(n_words) AS BIGINT) END " +
-          "AS fertility_pct FROM per GROUP BY 1"),
-
-      // byte-level fertility: same corpus replay, but the hand table
-      // is position-sensitive — (tok_first, tok_rest) per word, the
-      // Ġ-prefix mechanic rendered as a CASE on the word index
-      "bpe_bytelevel_fertility" ->
-        ("WITH v AS (SELECT * FROM (VALUES " +
-          "(0, 'the', CAST(1 AS BIGINT), CAST(1 AS BIGINT)), " +
-          "(1, 'qxz', CAST(1 AS BIGINT), CAST(2 AS BIGINT)), " +
-          "(2, 'ababab', CAST(2 AS BIGINT), CAST(3 AS BIGINT)), " +
-          "(3, 'zzz', CAST(3 AS BIGINT), CAST(4 AS BIGINT)), " +
-          "(4, 'thethe', CAST(2 AS BIGINT), CAST(2 AS BIGINT))" +
-          ") AS t(i, w, tok_first, tok_rest)), " +
-          "d AS (SELECT doc_id, lang, 5 + doc_id % 7 AS n " +
-          "FROM documents), " +
-          "j AS (SELECT doc_id, lang, unnest(range(0, n)) AS jj " +
-          "FROM d), " +
-          "wj AS (SELECT j.doc_id, j.lang, " +
-          "CASE WHEN j.jj = 0 THEN v.tok_first ELSE v.tok_rest END " +
-          "AS tok FROM j " +
-          "JOIN v ON v.i = (j.doc_id + j.jj) % 5), " +
-          "per AS (SELECT doc_id, lang, " +
-          "CAST(count(*) AS BIGINT) AS n_words, " +
-          "CAST(sum(tok) AS BIGINT) AS n_tokens " +
-          "FROM wj GROUP BY 1, 2) " +
-          "SELECT lang, count(*) AS n_docs, " +
-          "CAST(sum(n_words) AS BIGINT) AS total_words, " +
-          "CAST(sum(n_tokens) AS BIGINT) AS total_tokens, " +
-          "CASE WHEN sum(n_words) > 0 THEN " +
-          "CAST(sum(n_tokens) * 100 // sum(n_words) AS BIGINT) END " +
-          "AS fertility_pct FROM per GROUP BY 1"),
-
-      // byte-level TRAINED fertility: the corpus replay is identical
-      // to bpe_bytelevel_fertility; the position-sensitive hand
-      // table carries each word's token count under the table the
-      // trainer LEARNS from docs 0..499 (merge sequence derived in
-      // the registry comment and independently re-derived by
-      // BpeByteLevelTrainSpec's naive reference): final
-      // segmentations are the→[the], Ġthe→[Ġthe], qxz→[qxz],
-      // Ġqxz→[Ġ,qxz], ababab→[abab,ab], Ġababab→[Ġ,abab,ab],
-      // zzz→[zz,z], Ġzzz→[Ġ,zz,z], thethe→[the,the],
-      // Ġthethe→[Ġthe,the].
-      "bpe_bytelevel_trained_fertility" ->
-        ("WITH v AS (SELECT * FROM (VALUES " +
-          "(0, 'the', CAST(1 AS BIGINT), CAST(1 AS BIGINT)), " +
-          "(1, 'qxz', CAST(1 AS BIGINT), CAST(2 AS BIGINT)), " +
-          "(2, 'ababab', CAST(2 AS BIGINT), CAST(3 AS BIGINT)), " +
-          "(3, 'zzz', CAST(2 AS BIGINT), CAST(3 AS BIGINT)), " +
-          "(4, 'thethe', CAST(2 AS BIGINT), CAST(2 AS BIGINT))" +
-          ") AS t(i, w, tok_first, tok_rest)), " +
-          "d AS (SELECT doc_id, lang, 5 + doc_id % 7 AS n " +
-          "FROM documents), " +
-          "j AS (SELECT doc_id, lang, unnest(range(0, n)) AS jj " +
-          "FROM d), " +
-          "wj AS (SELECT j.doc_id, j.lang, " +
-          "CASE WHEN j.jj = 0 THEN v.tok_first ELSE v.tok_rest END " +
-          "AS tok FROM j " +
-          "JOIN v ON v.i = (j.doc_id + j.jj) % 5), " +
-          "per AS (SELECT doc_id, lang, " +
-          "CAST(count(*) AS BIGINT) AS n_words, " +
-          "CAST(sum(tok) AS BIGINT) AS n_tokens " +
-          "FROM wj GROUP BY 1, 2) " +
-          "SELECT lang, count(*) AS n_docs, " +
-          "CAST(sum(n_words) AS BIGINT) AS total_words, " +
-          "CAST(sum(n_tokens) AS BIGINT) AS total_tokens, " +
-          "CASE WHEN sum(n_words) > 0 THEN " +
-          "CAST(sum(n_tokens) * 100 // sum(n_words) AS BIGINT) END " +
-          "AS fertility_pct FROM per GROUP BY 1"),
-
-      // unigram-vs-BPE fertility: corpus replay as in the other
-      // fertility oracles; the hand table carries each word's token
-      // count under BOTH trained/imported tokenizers — unigram from
-      // the Viterbi segmentations derived in the registry comment
-      // (and re-derived by UnigramLmSpec's naive reference), BPE from
-      // the merges_fixture.txt hand derivations
-      "unigram_fertility" ->
-        ("WITH v AS (SELECT * FROM (VALUES " +
-          "(0, 'the', CAST(1 AS BIGINT), CAST(1 AS BIGINT)), " +
-          "(1, 'qxz', CAST(1 AS BIGINT), CAST(1 AS BIGINT)), " +
-          "(2, 'ababab', CAST(2 AS BIGINT), CAST(2 AS BIGINT)), " +
-          "(3, 'zzz', CAST(2 AS BIGINT), CAST(3 AS BIGINT)), " +
-          "(4, 'thethe', CAST(2 AS BIGINT), CAST(2 AS BIGINT))" +
-          ") AS t(i, w, tok_uni, tok_bpe)), " +
-          "d AS (SELECT doc_id, lang, 5 + doc_id % 7 AS n " +
-          "FROM documents), " +
-          "j AS (SELECT doc_id, lang, unnest(range(0, n)) AS jj " +
-          "FROM d), " +
-          "wj AS (SELECT j.doc_id, j.lang, v.tok_uni, v.tok_bpe " +
-          "FROM j JOIN v ON v.i = (j.doc_id + j.jj) % 5), " +
-          "per AS (SELECT doc_id, lang, " +
-          "CAST(count(*) AS BIGINT) AS n_words, " +
-          "CAST(sum(tok_uni) AS BIGINT) AS n_uni, " +
-          "CAST(sum(tok_bpe) AS BIGINT) AS n_bpe " +
-          "FROM wj GROUP BY 1, 2) " +
-          "SELECT lang, count(*) AS n_docs, " +
-          "CAST(sum(n_words) AS BIGINT) AS total_words, " +
-          "CAST(sum(n_uni) AS BIGINT) AS total_tokens_unigram, " +
-          "CAST(sum(n_bpe) AS BIGINT) AS total_tokens_bpe, " +
-          "CASE WHEN sum(n_words) > 0 THEN " +
-          "CAST(sum(n_uni) * 100 // sum(n_words) AS BIGINT) END " +
-          "AS fertility_unigram_pct, " +
-          "CASE WHEN sum(n_words) > 0 THEN " +
-          "CAST(sum(n_bpe) * 100 // sum(n_words) AS BIGINT) END " +
-          "AS fertility_bpe_pct FROM per GROUP BY 1"),
-
-      // lead-window transition replay; P(to|from) is one IEEE
-      // division of two exact BIGINTs
-      "markov_transitions" ->
-        ("""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us,
-           |  event_type FROM events),
-           |t AS (SELECT event_type AS from_type,
-           |  lead(event_type) OVER (PARTITION BY user_id
-           |    ORDER BY us, event_id) AS to_type FROM e),
-           |c AS (SELECT from_type, to_type,
-           |  CAST(count(*) AS BIGINT) AS n_trans FROM t
-           |  WHERE to_type IS NOT NULL GROUP BY 1, 2)
-           |SELECT from_type, to_type, n_trans,
-           |  CAST(sum(n_trans) OVER (PARTITION BY from_type) AS BIGINT)
-           |    AS row_total,
-           |  CAST(n_trans AS DOUBLE) /
-           |    CAST(sum(n_trans) OVER (PARTITION BY from_type)
-           |      AS DOUBLE) AS p_trans
-           |FROM c ORDER BY from_type, to_type"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // fixed-point sums replayed in HUGEINT (DuckDB's 128-bit exact
-      // lane; Spark's is DECIMAL(38,0)); cov_num leaves as a canonical
-      // digit string (up to ~e27 — wide decimals hash
-      // engine-dependently, r15)
-      "cov_matrix" -> {
-        val cs = Seq("l_quantity", "l_extendedprice", "l_discount",
-          "l_tax")
-        val fx = cs.map(c =>
-          s"CAST(round($c * 10000.0) AS HUGEINT) AS $c").mkString(", ")
-        val sums = cs.map(c => s"sum($c) AS s_$c") ++
-          (for { (x, i) <- cs.zipWithIndex; (y, j) <- cs.zipWithIndex
-                 if i <= j } yield s"sum($x * $y) AS sxy_${x}__$y")
-        val rows = for { (x, i) <- cs.zipWithIndex
-                         (y, j) <- cs.zipWithIndex if i <= j } yield
-          s"SELECT '$x' AS x_col, '$y' AS y_col, " +
-            "CAST(n AS BIGINT) AS n, " +
-            s"CAST(n * sxy_${x}__$y - s_$x * s_$y AS VARCHAR) " +
-            "AS cov_num FROM a"
-        s"WITH s AS (SELECT $fx FROM lineitem), " +
-          s"a AS (SELECT CAST(count(*) AS HUGEINT) AS n, " +
-          s"${sums.mkString(", ")} FROM s) " +
-          rows.mkString(" UNION ALL ") +
-          " ORDER BY x_col, y_col"
-      },
-
-      // grouped best-y + running max in x-order — the same
-      // no-self-join strict-dominance algebra as the Spark side
-      "pareto_frontier" ->
-        ("""WITH b AS (SELECT p_retailprice, max(p_size) AS best
-           |  FROM part GROUP BY 1),
-           |r AS (SELECT p_retailprice, best, max(best) OVER (
-           |  ORDER BY p_retailprice
-           |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev
-           |  FROM b),
-           |f AS (SELECT p_retailprice, best FROM r
-           |  WHERE prev IS NULL OR best > prev)
-           |SELECT p.p_partkey, p.p_retailprice, p.p_size
-           |FROM part p JOIN f ON p.p_retailprice = f.p_retailprice
-           |  AND p.p_size = f.best
-           |ORDER BY p.p_retailprice, p.p_size, p.p_partkey"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the water level found by the same exact cross-multiplication;
-      // // is DuckDB's integer div, both operands non-negative
-      "mixture_weights" ->
-        ("""WITH caps AS (SELECT source,
-           |  CAST(sum(len(string_split_regex(trim(text), '\s+')))
-           |    AS BIGINT) AS cap_tokens
-           |  FROM documents WHERE length(trim(text)) > 0
-           |  GROUP BY source),
-           |w AS (SELECT source, cap_tokens,
-           |  CAST(row_number() OVER (ORDER BY cap_tokens, source)
-           |    AS BIGINT) AS i,
-           |  CAST(count(*) OVER () AS BIGINT) AS n,
-           |  CAST(COALESCE(sum(cap_tokens) OVER (
-           |    ORDER BY cap_tokens, source
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           |    AS BIGINT) AS prior,
-           |  CAST(sum(cap_tokens) OVER () AS BIGINT) AS total
-           |  FROM caps),
-           |w2 AS (SELECT *, total // 2 AS budget,
-           |  cap_tokens * (n - i + 1) <= (total // 2) - prior AS capped
-           |  FROM w),
-           |w3 AS (SELECT *,
-           |  CAST(sum(CASE WHEN capped THEN 1 ELSE 0 END) OVER ()
-           |    AS BIGINT) AS k,
-           |  CAST(COALESCE(sum(CASE WHEN capped THEN cap_tokens END)
-           |    OVER (), 0) AS BIGINT) AS spent FROM w2),
-           |w4 AS (SELECT *, budget - spent AS leftb, n - k AS m
-           |  FROM w3)
-           |SELECT source, cap_tokens AS capacity,
-           |  CAST(CASE WHEN capped THEN cap_tokens
-           |    ELSE (leftb // m) +
-           |      (CASE WHEN i - k <= (leftb % m) THEN 1 ELSE 0 END)
-           |    END AS BIGINT) AS alloc_tokens, capped
-           |FROM w4 ORDER BY source"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // exact distinct-join intersection replay + the audit flag TRUE
-      "sketch_hll_intersect" ->
-        ("SELECT CAST(count(*) AS BIGINT) AS exact_intersection, " +
-          "TRUE AS within_bound FROM " +
-          "(SELECT DISTINCT user_id FROM events " +
-          "WHERE event_type = 'click') a JOIN " +
-          "(SELECT DISTINCT user_id FROM events " +
-          "WHERE event_type = 'view') b USING (user_id)"),
-
-      // exact replay of the difference; the KMV estimate is
-      // hash-derived, so the oracle asserts the in-band bound flag
-      "sketch_kmv_diff" ->
-        ("SELECT CAST(count(*) AS BIGINT) AS exact_diff, " +
-          "TRUE AS within_bound FROM " +
-          "(SELECT DISTINCT event_id FROM events " +
-          "WHERE event_id % 10 < 6) a " +
-          "ANTI JOIN (SELECT DISTINCT event_id FROM events " +
-          "WHERE event_id % 10 >= 4) b " +
-          "USING (event_id)"),
-
-      // median and MAD via the explicit nearest-rank rule (2·rank>=n,
-      // smallest value), deviations and the k·MAD comparison exact —
-      // counts, median and MAD all hash across engines
-      "mad_outliers" ->
-        ("""WITH v AS (SELECT event_type, value FROM events
-           |  WHERE value IS NOT NULL),
-           |r AS (SELECT event_type, value, row_number() OVER (
-           |    PARTITION BY event_type ORDER BY value) AS rn,
-           |  count(*) OVER (PARTITION BY event_type) AS n FROM v),
-           |med AS (SELECT event_type, min(value) AS med FROM r
-           |  WHERE rn * 2 >= n GROUP BY event_type),
-           |dev AS (SELECT v.event_type, v.value, m.med,
-           |  abs(v.value - m.med) AS d FROM v JOIN med m
-           |  USING (event_type)),
-           |r2 AS (SELECT event_type, d, row_number() OVER (
-           |    PARTITION BY event_type ORDER BY d) AS rn,
-           |  count(*) OVER (PARTITION BY event_type) AS n FROM dev),
-           |mad AS (SELECT event_type, min(d) AS mad FROM r2
-           |  WHERE rn * 2 >= n GROUP BY event_type)
-           |SELECT d.event_type, CAST(count(*) AS BIGINT) AS n_rows,
-           |  CAST(sum(CASE WHEN d.d > 3 * mad.mad THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS n_outliers,
-           |  any_value(d.med) AS med, any_value(mad.mad) AS mad
-           |FROM dev d JOIN mad USING (event_type)
-           |GROUP BY d.event_type"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the SCD2 intervals re-derived from the replayed snapshots:
-      // U/D keys close (1→2), U/I keys open at 2, untouched keys stay
-      // open from 1
-      "scd2_history" ->
-        (s"""WITH base AS (SELECT c_custkey, c_name, c_acctbal,
-           |    c_mktsegment FROM customer),
-           |changes AS (
-           |  SELECT c_custkey, c_name, c_acctbal + 1000.0 AS c_acctbal,
-           |    c_mktsegment, 'U' AS op FROM base
-           |  WHERE c_custkey % 5 = 0 AND c_custkey % 7 <> 0
-           |  UNION ALL SELECT c_custkey, c_name, c_acctbal,
-           |    c_mktsegment, 'D' FROM base WHERE c_custkey % 7 = 0
-           |  UNION ALL SELECT c_custkey + 200000, c_name, c_acctbal,
-           |    c_mktsegment, 'I' FROM base WHERE c_custkey % 11 = 0),
-           |after AS (
-           |  SELECT b.* FROM base b WHERE NOT EXISTS
-           |    (SELECT 1 FROM changes c WHERE c.c_custkey = b.c_custkey)
-           |  UNION ALL
-           |  SELECT c_custkey, c_name, c_acctbal, c_mktsegment
-           |  FROM changes WHERE op <> 'D'),
-           |d AS (SELECT COALESCE(b.c_custkey, a.c_custkey) AS k,
-           |  CASE WHEN b.c_custkey IS NULL THEN 'I'
-           |       WHEN a.c_custkey IS NULL THEN 'D'
-           |       WHEN b.c_name <> a.c_name
-           |         OR b.c_acctbal <> a.c_acctbal
-           |         OR b.c_mktsegment <> a.c_mktsegment THEN 'U'
-           |  END AS op
-           |  FROM base b FULL OUTER JOIN after a
-           |    ON b.c_custkey = a.c_custkey),
-           |ops AS (SELECT k, op FROM d WHERE op IS NOT NULL)
-           |SELECT b.c_custkey, b.c_name, b.c_acctbal, b.c_mktsegment,
-           |  CAST(1 AS BIGINT) AS valid_from, CAST(2 AS BIGINT) AS valid_to
-           |FROM base b JOIN ops ON ops.k = b.c_custkey
-           |  AND ops.op IN ('U', 'D')
-           |UNION ALL
-           |SELECT b.c_custkey, b.c_name, b.c_acctbal, b.c_mktsegment,
-           |  CAST(1 AS BIGINT), CAST(0 AS BIGINT)
-           |FROM base b WHERE NOT EXISTS
-           |  (SELECT 1 FROM ops WHERE ops.k = b.c_custkey)
-           |UNION ALL
-           |SELECT a.c_custkey, a.c_name, a.c_acctbal, a.c_mktsegment,
-           |  CAST(2 AS BIGINT), CAST(0 AS BIGINT)
-           |FROM after a JOIN ops ON ops.k = a.c_custkey
-           |  AND ops.op IN ('U', 'I')"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // after-snapshot replayed, then classified against the base by a
-      // FULL OUTER join — the op set must equal the change set's
-      "snapshot_diff" ->
-        (s"""WITH base AS (SELECT c_custkey, c_name, c_acctbal,
-           |    c_mktsegment FROM customer),
-           |changes AS (
-           |  SELECT c_custkey, c_name, c_acctbal + 1000.0 AS c_acctbal,
-           |    c_mktsegment, 'U' AS op FROM base
-           |  WHERE c_custkey % 5 = 0 AND c_custkey % 7 <> 0
-           |  UNION ALL SELECT c_custkey, c_name, c_acctbal,
-           |    c_mktsegment, 'D' FROM base WHERE c_custkey % 7 = 0
-           |  UNION ALL SELECT c_custkey + 200000, c_name, c_acctbal,
-           |    c_mktsegment, 'I' FROM base WHERE c_custkey % 11 = 0),
-           |after AS (
-           |  SELECT b.* FROM base b WHERE NOT EXISTS
-           |    (SELECT 1 FROM changes c WHERE c.c_custkey = b.c_custkey)
-           |  UNION ALL
-           |  SELECT c_custkey, c_name, c_acctbal, c_mktsegment
-           |  FROM changes WHERE op <> 'D')
-           |SELECT COALESCE(b.c_custkey, a.c_custkey) AS c_custkey,
-           |  CASE WHEN b.c_custkey IS NULL THEN 'I'
-           |       WHEN a.c_custkey IS NULL THEN 'D' ELSE 'U' END AS op
-           |FROM base b FULL OUTER JOIN after a
-           |  ON b.c_custkey = a.c_custkey
-           |WHERE b.c_custkey IS NULL OR a.c_custkey IS NULL
-           |  OR b.c_name <> a.c_name OR b.c_acctbal <> a.c_acctbal
-           |  OR b.c_mktsegment <> a.c_mktsegment"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // per-group form of the explicit nearest-rank replay (see
-      // quantile_filter): p ∈ {1/2, 9/10, 99/100} as integer
-      // cross-multiplications against the group rank/size
-      // per-pair distinct counts replayed directly (pair structs
-      // nulled when the determinant is NULL, matching the Spark
-      // side's NULL-determinant discipline — ADVICE r17); same shape
-      "fd_audit" ->
-        ("""WITH g AS (SELECT
-           |  CAST(count(DISTINCT o_orderkey) AS BIGINT) AS d0,
-           |  CAST(count(DISTINCT CASE WHEN o_orderkey IS NOT NULL
-           |    THEN (o_orderkey, o_custkey) END) AS BIGINT) AS p0,
-           |  CAST(count(DISTINCT CASE WHEN o_orderkey IS NOT NULL
-           |    THEN (o_orderkey, o_totalprice) END) AS BIGINT) AS p1,
-           |  CAST(count(DISTINCT o_custkey) AS BIGINT) AS d2,
-           |  CAST(count(DISTINCT CASE WHEN o_custkey IS NOT NULL
-           |    THEN (o_custkey, o_orderstatus) END) AS BIGINT) AS p2
-           |  FROM orders)
-           |SELECT 'o_orderkey' AS determinant, 'o_custkey' AS dependent,
-           |  d0 AS n_det, p0 AS n_pairs,
-           |  CAST(p0 = d0 AS INTEGER) AS holds, p0 - d0 AS violations
-           |  FROM g
-           |UNION ALL SELECT 'o_orderkey', 'o_totalprice', d0, p1,
-           |  CAST(p1 = d0 AS INTEGER), p1 - d0 FROM g
-           |UNION ALL SELECT 'o_custkey', 'o_orderstatus', d2, p2,
-           |  CAST(p2 = d2 AS INTEGER), p2 - d2 FROM g
-           |ORDER BY determinant, dependent"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // same nearest-rank replay as group_quantiles, then the clamp
-      // census; quantities are integer-valued so the winsorized sum
-      // is exact in BIGINT on both engines
-      "winsorized_stats" ->
-        ("""WITH v AS (SELECT l_returnflag,
-           |    CAST(l_quantity AS BIGINT) AS v FROM lineitem
-           |  WHERE l_quantity IS NOT NULL),
-           |r AS (SELECT l_returnflag, v,
-           |    row_number() OVER (PARTITION BY l_returnflag ORDER BY v)
-           |      AS rn,
-           |    count(*) OVER (PARTITION BY l_returnflag) AS n FROM v),
-           |b AS (SELECT l_returnflag,
-           |    min(v) FILTER (WHERE rn * 100 >= n * 5) AS lo,
-           |    min(v) FILTER (WHERE rn * 100 >= n * 95) AS hi
-           |  FROM r GROUP BY 1)
-           |SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_rows,
-           |  CAST(max(b.lo) AS BIGINT) AS lo,
-           |  CAST(max(b.hi) AS BIGINT) AS hi,
-           |  CAST(sum(CASE WHEN v.v < b.lo THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS n_clamped_lo,
-           |  CAST(sum(CASE WHEN v.v > b.hi THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS n_clamped_hi,
-           |  CAST(sum(greatest(least(v.v, b.hi), b.lo)) AS BIGINT)
-           |    AS winsorized_sum
-           |FROM v JOIN b USING (l_returnflag) GROUP BY l_returnflag"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      "group_quantiles" ->
-        ("WITH r AS (SELECT event_type, value, " +
-          "row_number() OVER (PARTITION BY event_type ORDER BY value) " +
-          "AS rn, count(*) OVER (PARTITION BY event_type) AS n " +
-          "FROM events) " +
-          "SELECT event_type, " +
-          "min(value) FILTER (WHERE rn * 2 >= n) AS p50, " +
-          "min(value) FILTER (WHERE rn * 10 >= n * 9) AS p90, " +
-          "min(value) FILTER (WHERE rn * 100 >= n * 99) AS p99, " +
-          "CAST(max(n) AS BIGINT) AS cnt FROM r GROUP BY event_type"),
-
-      // bit-exact Morton replay: disjoint power-of-two terms, so the
-      // list_sum IS the bitwise OR of the interleaved bits. y's bit 31
-      // lands on bit 63, where DuckDB's checked `<<` overflows — that
-      // one term is added as the signed value -2^63 instead (HUGEINT
-      // sum, exact BIGINT cast), keeping the oracle valid over the
-      // operator's full 32-bit-per-axis domain, not just small ids.
-      "zorder_key" ->
-        ("SELECT event_id, user_id, CAST(" +
-          "list_sum(list_transform(range(0, 32), i -> " +
-          "((event_id >> i) & 1) << (2*i))) + " +
-          "list_sum(list_transform(range(0, 31), i -> " +
-          "((user_id >> i) & 1) << (2*i + 1))) + " +
-          "CASE WHEN ((user_id >> 31) & 1) = 1 " +
-          "THEN -9223372036854775808 ELSE 0 END " +
-          "AS BIGINT) AS zval FROM events"),
-
-      // max_by over struct(price, orderkey) ≡ highest price, ties to the
-      // highest orderkey — exactly rn=1 under (price DESC, key DESC).
-      "argmax_per_group" ->
-        ("SELECT o_custkey, o_orderkey AS top_orderkey, " +
-          "o_totalprice AS top_price FROM orders " +
-          "QUALIFY row_number() OVER (PARTITION BY o_custkey " +
-          "ORDER BY o_totalprice DESC, o_orderkey DESC) = 1"),
-
-      // the KN tables from the % 4 = 0 reference partition, integer
-      // bits per target bigram: seen → ⌊log2(c_prev/c_bw)⌋+1 via
-      // length(bin(..)), backoff → continuation ratio + 2, OOV → 24
-      "kn_perplexity" ->
-        (s"""WITH f AS (SELECT doc_id, $WsTokOkSql AS ws_tok_ok
-           |  FROM documents),
-           |t AS (
-           |  SELECT doc_id, string_split($NormTextSql, ' ') AS tk
-           |  FROM documents),
-           |bg AS (SELECT doc_id, unnest(list_transform(
-           |    range(1, len(tk)), i -> {'prev': tk[i], 'w': tk[i+1]}))
-           |    AS s FROM t),
-           |p AS (SELECT doc_id, s.prev AS prev, s.w AS w FROM bg),
-           |c AS (SELECT prev, w, CAST(count(*) AS BIGINT) AS c_bw
-           |      FROM p WHERE doc_id % 4 = 0 GROUP BY 1, 2),
-           |cp AS (SELECT prev, CAST(sum(c_bw) AS BIGINT) AS c_prev
-           |       FROM c GROUP BY 1),
-           |cw AS (SELECT w, CAST(count(*) AS BIGINT) AS n1p_left
-           |       FROM c GROUP BY 1),
-           |ty AS (SELECT CAST(count(*) AS BIGINT) AS bigram_types
-           |       FROM c),
-           |tf AS (SELECT doc_id, prev, w, count(*) AS tf FROM p
-           |       WHERE doc_id % 4 <> 0 GROUP BY 1, 2, 3),
-           |j AS (SELECT doc_id, tf, c.c_bw, cw.n1p_left,
-           |  CASE WHEN c.c_bw IS NOT NULL
-           |       THEN length(bin(cp.c_prev // c.c_bw))
-           |       WHEN cw.n1p_left IS NOT NULL
-           |       THEN length(bin(ty.bigram_types // cw.n1p_left)) + 2
-           |       ELSE 24 END AS bits
-           |  FROM tf LEFT JOIN c USING (prev, w)
-           |  LEFT JOIN cp USING (prev) LEFT JOIN cw USING (w)
-           |  CROSS JOIN ty)
-           |SELECT doc_id, f.ws_tok_ok,
-           |  CAST(sum(tf) AS BIGINT) AS n_bigrams,
-           |  CAST(sum(CASE WHEN c_bw IS NOT NULL THEN tf ELSE 0 END)
-           |    AS BIGINT) AS known_bigrams,
-           |  CAST(sum(CASE WHEN c_bw IS NULL AND n1p_left IS NOT NULL
-           |    THEN tf ELSE 0 END) AS BIGINT) AS backoff_bigrams,
-           |  CAST(sum(CASE WHEN c_bw IS NULL AND n1p_left IS NULL
-           |    THEN tf ELSE 0 END) AS BIGINT) AS oov_bigrams,
-           |  CAST(sum(tf * bits) AS BIGINT) AS kn_bits,
-           |  CASE WHEN sum(tf * bits) * 10 <= 56 * sum(tf) THEN 1 ELSE 0
-           |    END AS keep
-           |FROM j JOIN f USING (doc_id) GROUP BY doc_id, f.ws_tok_ok"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // cross-multiplied Flesch / FK over the common denominator
-      // n_sents·n_words — floor division, milli-units
-      "readability_scores" ->
-        (s"""WITH b AS (SELECT doc_id, $WsTokOkSql AS ws_tok_ok,
-           |  CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
-           |    AS n_words,
-           |  CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1)
-           |    AS BIGINT) AS n_sents,
-           |  CAST(len(regexp_extract_all($NormTextSql, '[aeiouy]+'))
-           |    AS BIGINT) AS n_syll
-           |  FROM documents WHERE length(trim(text)) > 0),
-           |m AS (SELECT doc_id, ws_tok_ok, n_words, n_sents, n_syll,
-           |  206835 - (1015 * n_words * n_words +
-           |    84600 * n_syll * n_sents) // (n_sents * n_words)
-           |    AS flesch_milli,
-           |  (390 * n_words * n_words + 11800 * n_syll * n_sents)
-           |    // (n_sents * n_words) - 15590 AS fk_grade_milli
-           |  FROM b)
-           |SELECT doc_id, ws_tok_ok, n_words, n_sents, n_syll,
-           |  flesch_milli, fk_grade_milli,
-           |  CASE WHEN flesch_milli >= 90000 THEN 'very_easy'
-           |       WHEN flesch_milli >= 70000 THEN 'easy'
-           |       WHEN flesch_milli >= 50000 THEN 'medium'
-           |       WHEN flesch_milli >= 30000 THEN 'hard'
-           |       ELSE 'very_hard' END AS band
-           |FROM m"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // Gini off the counts-of-counts histogram (HUGEINT products ≡
-      // the Spark side's DECIMAL(38,0) promotion), HHI off language
-      // counts; both floor ppm
-      "corpus_inequality" ->
-        (s"""WITH lens AS (SELECT lang,
-           |  CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
-           |    AS v FROM documents WHERE length(trim(text)) > 0),
-           |h AS (SELECT v, CAST(count(*) AS BIGINT) AS n FROM lens
-           |      GROUP BY v),
-           |cc AS (SELECT n, v,
-           |  coalesce(sum(n) OVER w, 0) AS cum_n,
-           |  coalesce(sum(n * v) OVER w, 0) AS cum_t
-           |  FROM h WINDOW w AS (ORDER BY v
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-           |g AS (SELECT CAST(sum(n) AS BIGINT) AS n_docs,
-           |  CAST(sum(n * v) AS BIGINT) AS total_tokens,
-           |  CAST(count(*) AS BIGINT) AS n_lengths,
-           |  sum(CAST(n AS HUGEINT) * (v * cum_n - cum_t)) AS s
-           |  FROM cc),
-           |lc AS (SELECT CAST(count(*) AS BIGINT) AS c FROM lens
-           |       GROUP BY lang),
-           |hh AS (SELECT CAST(count(*) AS BIGINT) AS n_langs,
-           |  sum(CAST(c AS HUGEINT) * c) AS sq,
-           |  CAST(sum(c) AS BIGINT) AS nn FROM lc)
-           |SELECT n_docs, total_tokens, n_lengths,
-           |  CAST((s * 1000000) //
-           |    (CAST(n_docs AS HUGEINT) * total_tokens) AS BIGINT)
-           |    AS gini_token_ppm,
-           |  n_langs,
-           |  CAST((sq * 1000000) // (CAST(nn AS HUGEINT) * nn)
-           |    AS BIGINT) AS hhi_lang_ppm
-           |FROM g CROSS JOIN hh"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      "hits_scores" -> HitsSql,
-
-      // BM25 run (shared CTEs) vs term-coverage graded qrels; IDCG
-      // from per-grade counts against the position-discount prefix
-      // table (27720 = lcm(2..11); prefix(p) = Σ_{i<=p} 27720/(1+i))
-      "graded_rank_eval" ->
-        (s"""WITH $Bm25RunCtes,
-           |qr AS (SELECT q.q_id, qp.doc_id,
-           |  CAST(least(4, length(bin(sum(qp.tf)))) AS BIGINT)
-           |    AS grade
-           |  FROM qp JOIN q USING (term) GROUP BY 1, 2),
-           |pr AS (SELECT * FROM (VALUES (0, 0), (1, 13860), (2, 23100),
-           |  (3, 30030), (4, 35574), (5, 40194), (6, 44154),
-           |  (7, 47619), (8, 50699), (9, 53471), (10, 55991))
-           |  t(p, ps)),
-           |dcg AS (SELECT run.q_id,
-           |  CAST(sum(qr.grade * (27720 // (run.rk + 1))) AS BIGINT)
-           |    AS dcg_scaled
-           |  FROM run JOIN qr USING (q_id, doc_id)
-           |  WHERE run.rk <= 10 GROUP BY 1),
-           |gc AS (SELECT q_id, grade, CAST(count(*) AS BIGINT) AS cnt
-           |       FROM qr GROUP BY 1, 2),
-           |cb AS (SELECT q_id, grade, cnt,
-           |  coalesce(sum(cnt) OVER (PARTITION BY q_id
-           |    ORDER BY grade DESC
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           |    AS cb FROM gc),
-           |ic AS (SELECT cb.q_id,
-           |  CAST(sum(cb.grade * (ph.ps - pl.ps)) AS BIGINT)
-           |    AS idcg_scaled
-           |  FROM cb JOIN pr ph ON ph.p = least(cb.cb + cb.cnt, 10)
-           |  JOIN pr pl ON pl.p = least(cb.cb, 10) GROUP BY 1),
-           |ng AS (SELECT q_id, CAST(count(*) AS BIGINT) AS n_graded
-           |       FROM qr GROUP BY 1)
-           |SELECT ng.q_id, ng.n_graded,
-           |  CAST(coalesce(dcg.dcg_scaled, 0) AS BIGINT) AS dcg_scaled,
-           |  ic.idcg_scaled,
-           |  CAST((coalesce(dcg.dcg_scaled, 0) * 1000000)
-           |    // ic.idcg_scaled AS BIGINT) AS ndcg_ppm
-           |FROM ng JOIN ic USING (q_id) LEFT JOIN dcg USING (q_id)"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // floor-then-cast leading digit (the one double→int path both
-      // engines agree on); per-mille by integer cross-multiplication;
-      // the Benford table as a 1-based list lookup, floored per-mille
-      "benford_audit" ->
-        ("""WITH g AS (SELECT CAST(substr(CAST(CAST(floor(o_totalprice)
-           |    AS BIGINT) AS VARCHAR), 1, 1) AS INTEGER) AS digit,
-           |  count(*) AS n FROM orders WHERE o_totalprice >= 1
-           |  GROUP BY 1),
-           |t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM g)
-           |SELECT digit, CAST(n AS BIGINT) AS n,
-           |  n * 1000 // total AS obs_milli,
-           |  CAST([301, 176, 124, 96, 79, 66, 57, 51, 45][digit]
-           |    AS BIGINT) AS benford_milli,
-           |  abs(n * 1000 // total -
-           |    [301, 176, 124, 96, 79, 66, 57, 51, 45][digit])
-           |    AS dev_milli
-           |FROM g CROSS JOIN t"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the doubling bucket is length(bin(cnt)) on both engines —
-      // exact bit length, no float log anywhere
-      "zipf_census" ->
-        (s"""WITH c AS (SELECT tok, count(*) AS cnt FROM
-           |  (SELECT unnest(string_split($NormTextSql, ' ')) AS tok
-           |   FROM documents) GROUP BY tok)
-           |SELECT CAST(length(bin(cnt)) AS BIGINT) AS bucket,
-           |  count(*) AS n_types, CAST(sum(cnt) AS BIGINT) AS n_tokens,
-           |  CAST(min(cnt) AS BIGINT) AS min_cnt,
-           |  CAST(max(cnt) AS BIGINT) AS max_cnt
-           |FROM c GROUP BY 1"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      "degree_census" ->
-        ("""WITH e AS (SELECT DISTINCT o_custkey AS src,
-           |  l_suppkey + 1000000 AS dst FROM lineitem
-           |  JOIN orders ON l_orderkey = o_orderkey),
-           |d AS (SELECT 'out' AS side, src AS node, count(*) AS deg
-           |      FROM e GROUP BY src
-           |      UNION ALL
-           |      SELECT 'in' AS side, dst AS node, count(*) AS deg
-           |      FROM e GROUP BY dst)
-           |SELECT side, CAST(length(bin(deg)) AS BIGINT) AS bucket,
-           |  count(*) AS n_nodes, CAST(sum(deg) AS BIGINT) AS deg_sum,
-           |  CAST(min(deg) AS BIGINT) AS min_deg,
-           |  CAST(max(deg) AS BIGINT) AS max_deg
-           |FROM d GROUP BY 1, 2"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // ground truth by definition, not by algorithm replay: the
-      // recursive reach closure on the bounded fixture, SCC = mutual
-      // reachability, id = min member
-      "scc_labels" ->
-        ("""WITH RECURSIVE nd AS (
-           |  SELECT DISTINCT c_custkey % 120 AS v FROM customer),
-           |e AS (SELECT v AS src, (v * 2 + 1) % 120 AS dst FROM nd
-           |  UNION SELECT v, (v + 30) % 120 FROM nd WHERE v % 4 = 0),
-           |r(a, b) AS (SELECT v, v FROM nd
-           |  UNION SELECT r.a, e.dst FROM r JOIN e ON e.src = r.b)
-           |SELECT r1.a AS node, CAST(min(r1.b) AS BIGINT) AS scc_id
-           |FROM r r1 JOIN r r2 ON r2.a = r1.b AND r2.b = r1.a
-           |GROUP BY 1 ORDER BY 1"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the same mutual-reach closure, then sizes / condensation
-      // out-degree directly, and LAYER by a recursive longest-path
-      // walk over the (acyclic) condensation — every piece recomputed
-      // from the definition, nothing replaying the relaxation loop
-      "scc_condensation" ->
-        ("""WITH RECURSIVE nd AS (
-           |  SELECT DISTINCT c_custkey % 120 AS v FROM customer),
-           |e AS (SELECT v AS src, (v * 2 + 1) % 120 AS dst FROM nd
-           |  UNION SELECT v, (v + 30) % 120 FROM nd WHERE v % 4 = 0),
-           |r(a, b) AS (SELECT v, v FROM nd
-           |  UNION SELECT r.a, e.dst FROM r JOIN e ON e.src = r.b),
-           |scc AS (SELECT r1.a AS node, min(r1.b) AS scc_id
-           |  FROM r r1 JOIN r r2 ON r2.a = r1.b AND r2.b = r1.a
-           |  GROUP BY 1),
-           |sz AS (SELECT scc_id, CAST(count(*) AS BIGINT) AS n_nodes
-           |  FROM scc GROUP BY 1),
-           |ce AS (SELECT DISTINCT s.scc_id AS s_scc, d.scc_id AS d_scc
-           |  FROM e JOIN scc s ON s.node = e.src
-           |  JOIN scc d ON d.node = e.dst
-           |  WHERE s.scc_id <> d.scc_id),
-           |od AS (SELECT s_scc AS scc_id,
-           |  CAST(count(*) AS BIGINT) AS n_out FROM ce GROUP BY 1),
-           |lp(scc_id, d) AS (SELECT scc_id, 0 FROM sz
-           |  UNION SELECT ce.d_scc, lp.d + 1
-           |  FROM lp JOIN ce ON ce.s_scc = lp.scc_id),
-           |ly AS (SELECT scc_id, CAST(max(d) AS BIGINT) AS layer
-           |  FROM lp GROUP BY 1)
-           |SELECT CAST(sz.scc_id AS BIGINT) AS scc_id, sz.n_nodes,
-           |  CAST(coalesce(od.n_out, 0) AS BIGINT) AS n_out, ly.layer
-           |FROM sz LEFT JOIN od USING (scc_id) JOIN ly USING (scc_id)
-           |ORDER BY 1"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // region from the full recursive closure by definition: core =
-      // largest SCC (ties → smaller id), in = closure row into a core
-      // node, out = closure row from a core node, other = neither
-      "bowtie_regions" ->
-        ("""WITH RECURSIVE nd AS (
-           |  SELECT DISTINCT c_custkey % 150 AS v FROM customer),
-           |e AS (SELECT v AS src, (v + 7) % 60 AS dst FROM nd
-           |    WHERE v < 60
-           |  UNION SELECT v, v - 60 FROM nd WHERE v >= 60 AND v < 100
-           |  UNION SELECT v - 100, v FROM nd
-           |    WHERE v >= 100 AND v < 140
-           |  UNION SELECT v, 140 + ((v - 140 + 1) % 10) FROM nd
-           |    WHERE v >= 140),
-           |r(a, b) AS (SELECT v, v FROM nd
-           |  UNION SELECT r.a, e.dst FROM r JOIN e ON e.src = r.b),
-           |scc AS (SELECT r1.a AS node, min(r1.b) AS scc_id
-           |  FROM r r1 JOIN r r2 ON r2.a = r1.b AND r2.b = r1.a
-           |  GROUP BY 1),
-           |sz AS (SELECT scc_id, count(*) AS n FROM scc GROUP BY 1),
-           |g AS (SELECT scc_id FROM sz ORDER BY n DESC, scc_id ASC
-           |  LIMIT 1),
-           |cn AS (SELECT node FROM scc
-           |  WHERE scc_id = (SELECT scc_id FROM g))
-           |SELECT CAST(scc.node AS BIGINT) AS node,
-           |  CASE WHEN scc.scc_id = (SELECT scc_id FROM g) THEN 'core'
-           |    WHEN EXISTS (SELECT 1 FROM r JOIN cn ON cn.node = r.b
-           |      WHERE r.a = scc.node) THEN 'in'
-           |    WHEN EXISTS (SELECT 1 FROM r JOIN cn ON cn.node = r.a
-           |      WHERE r.b = scc.node) THEN 'out'
-           |    ELSE 'other' END AS region
-           |FROM scc ORDER BY scc.node"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the left-join-reversed-edge formulation, replayed verbatim;
-      // grand aggregate (no GROUP BY) + cross join so an edge list
-      // with zero non-loop edges still yields the one (0, 0, n_loops)
-      // row the Spark global agg emits (ADVICE r16)
-      "graph_reciprocity" ->
-        ("""WITH nd AS (SELECT DISTINCT c_custkey % 1000 AS src,
-           |  (c_custkey * 3 + 2) % 1000 AS dst FROM customer),
-           |pl AS (SELECT src, dst FROM nd WHERE src <> dst),
-           |rv AS (SELECT dst AS src, src AS dst, 1 AS rr FROM pl),
-           |lp AS (SELECT CAST(count(*) AS BIGINT) AS n_loops
-           |       FROM nd WHERE src = dst),
-           |ag AS (SELECT CAST(count(*) AS BIGINT) AS n_edges,
-           |  CAST(coalesce(sum(coalesce(rr, 0)), 0) AS BIGINT)
-           |    AS n_mutual
-           |  FROM pl LEFT JOIN rv USING (src, dst))
-           |SELECT n_edges, n_mutual, n_loops FROM ag CROSS JOIN lp"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // gaps at micros on both sides (eventsMicros / epoch_us); the
-      // (ts, event_id) tiebreak fixes per-row order, though the gap
-      // multiset is already determined by the timestamps alone
-      "interarrival_census" ->
-        ("""WITH g AS (SELECT epoch_us(ts) - lag(epoch_us(ts)) OVER (
-           |  PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-           |  AS gap FROM events)
-           |SELECT CASE WHEN gap = 0 THEN CAST(0 AS BIGINT)
-           |    ELSE CAST(length(bin(gap)) AS BIGINT) END AS bucket,
-           |  count(*) AS n_gaps, CAST(sum(gap) AS BIGINT) AS gap_sum,
-           |  CAST(min(gap) AS BIGINT) AS min_gap,
-           |  CAST(max(gap) AS BIGINT) AS max_gap
-           |FROM g WHERE gap IS NOT NULL GROUP BY 1"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the histogram-rank decomposition replayed: doubled average tie
-      // ranks off each value histogram's exclusive prefix, moments in
-      // HUGEINT (int128 ≈ the Spark side's DECIMAL(38,0)), the wide
-      // numerators leaving as digit strings on both sides
-      "rank_correlation" ->
-        ("""WITH d AS (SELECT CAST(n_chars AS BIGINT) AS x,
-           |  CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
-           |    AS y FROM documents),
-           |hx AS (SELECT x, count(*) AS c FROM d GROUP BY x),
-           |px AS (SELECT x, 2 * coalesce(sum(c) OVER (ORDER BY x
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           |    + c + 1 AS rx FROM hx),
-           |hy AS (SELECT y, count(*) AS c FROM d GROUP BY y),
-           |py AS (SELECT y, 2 * coalesce(sum(c) OVER (ORDER BY y
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           |    + c + 1 AS ry FROM hy),
-           |j AS (SELECT rx, ry FROM d JOIN px USING (x)
-           |      JOIN py USING (y)),
-           |m AS (SELECT CAST(count(*) AS HUGEINT) AS n,
-           |  CAST(sum(rx) AS HUGEINT) AS sx,
-           |  CAST(sum(ry) AS HUGEINT) AS sy,
-           |  CAST(sum(CAST(rx AS HUGEINT) * ry) AS HUGEINT) AS sxy,
-           |  CAST(sum(CAST(rx AS HUGEINT) * rx) AS HUGEINT) AS sx2,
-           |  CAST(sum(CAST(ry AS HUGEINT) * ry) AS HUGEINT) AS sy2
-           |  FROM j)
-           |SELECT CAST(n AS BIGINT) AS n,
-           |  CAST(n * sxy - sx * sy AS VARCHAR) AS num_str,
-           |  CAST(n * sx2 - sx * sx AS VARCHAR) AS denx_str,
-           |  CAST(n * sy2 - sy * sy AS VARCHAR) AS deny_str
-           |FROM m"""
-          .stripMargin.replaceAll("\\s+", " ").trim),
-
-      // the same recursive reach set as neardup_components, folded
-      // twice: component sizes, then clusters-per-size
-      "neardup_cluster_census" ->
-        (NeardupReachCte +
-          ", lbl AS (SELECT node, min(lbl) AS component" +
-          "          FROM reach GROUP BY node), " +
-          "cs AS (SELECT component, count(*) AS cluster_size" +
-          "       FROM lbl GROUP BY component) " +
-          "SELECT CAST(cluster_size AS BIGINT) AS cluster_size, " +
-          "count(*) AS n_clusters, " +
-          "CAST(cluster_size * count(*) AS BIGINT) AS n_docs " +
-          "FROM cs GROUP BY cluster_size"))
-  }
+  /** Every registry query, family by family. */
+  lazy val defs: Seq[QueryDef] =
+    EtlQueries.defs ++ RelationalQueries.defs ++ TextQualityQueries.defs ++
+      DedupQueries.defs ++ AnnQueries.defs ++ MultimodalQueries.defs ++
+      SamplingQueries.defs ++ GraphQueries.defs ++ EventQueries.defs ++
+      TokenizerQueries.defs ++ StatsQueries.defs
+
+  private lazy val index: Map[String, QueryDef] = QueryDef.index(defs)
+  private lazy val builds = index.map { case (n, d) => n -> d.build }
+  private lazy val oracles = index.map { case (n, d) => n -> d.oracleSql }
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] = builds
+
+  def oracleSql: Map[String, String] = oracles
 }

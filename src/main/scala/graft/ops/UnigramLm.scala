@@ -12,7 +12,7 @@ import graft.functions.UnigramModel
   * vocabulary grown from substring seeds and EM-re-estimated then
   * pruned. With both families in-engine, tokenizer-choice fertility
   * comparisons (BPE vs unigram on the same corpus) run as one query
-  * ([[graft.SparkEntry]] `unigram_fertility`).
+  * ([[graft.registry.TokenizerQueries]] `unigram_fertility`).
   *
   * This is the SentencePiece ALGORITHM SHAPE with two documented,
   * deterministic simplifications (the published trainer:

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Event-time windowed aggregation with watermarking — the streaming
-  * counterpart of the batch `time_window_agg` query (SparkEntry), for
+  * counterpart of the batch `time_window_agg` query (EventQueries), for
   * live event feeds.
   *
   * Scale shape: the watermark bounds state (windows older than

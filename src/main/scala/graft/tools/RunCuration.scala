@@ -50,7 +50,9 @@ object RunCuration {
     * has run `out` first runs ONE `noop` pass of it. An action that
     * reads only part of `out` (`head`, `show`, a `limit`) would count
     * only that part, so force the funnel before such an action. The
-    * frame stays lazy; every call makes fresh observations.
+    * frame stays lazy; every call makes fresh observations. When no
+    * document passes the gates the plan is proven empty and the gate
+    * counts are lost, so that path alone recounts them in one job.
     */
   def curate(
       docs: DataFrame,
@@ -58,12 +60,13 @@ object RunCuration {
       classifier: Boolean = false): (DataFrame, () => String) = {
     val gates = Observation()
     val kept = Observation()
-    val flagged = docs
+    val flags = docs
       .withColumn("__gk", TextAnalysis.gopherKeep(col("text")))
       .withColumn("__pk", TextAnalysis.c4PageKeep(col("text")))
-      .observe(gates, count(lit(1)).as("n_input"),
-        count_if(col("__gk")).as("n_gopher"),
-        count_if(col("__gk") && col("__pk")).as("n_gates"))
+    val gateCounts = Seq(count(lit(1)).as("n_input"),
+      count_if(col("__gk")).as("n_gopher"),
+      count_if(col("__gk") && col("__pk")).as("n_gates"))
+    val flagged = flags.observe(gates, gateCounts.head, gateCounts.tail: _*)
     val keep = if (classifier)
       col("__gk") && col("__pk") && TextAnalysis.classifierKeep(col("text"))
     else col("__gk") && col("__pk")
@@ -86,9 +89,17 @@ object RunCuration {
       def fired = gates.future.isCompleted && kept.future.isCompleted
       if (!fired) ListenerBridge.drain(docs.sparkSession)
       if (!fired) Harness.noop(out)
-      val g = gates.get
+      // When no document passes the gates, AQE proves the dedup input
+      // empty and drops both observed nodes from the plan, so the
+      // observations complete with no metrics. The kept node tops
+      // `out`, so its missing count is 0; the gate counts were taken
+      // but lost, so only this path recounts them.
+      val g = if (gates.get.contains("n_input")) gates.get
+        else flags.agg(gateCounts.head, gateCounts.tail: _*).head()
+          .getValuesMap[Long](Seq("n_input", "n_gopher", "n_gates"))
       s"""{"n_input":${g("n_input")},"n_gopher":${g("n_gopher")},""" +
-        s""""n_gates":${g("n_gates")},"n_out":${kept.get("n_out")}}"""
+        s""""n_gates":${g("n_gates")},""" +
+        s""""n_out":${kept.get.getOrElse("n_out", 0L)}}"""
     }
     (out, funnel)
   }

@@ -1,11 +1,10 @@
 package graft
 
+import graft.registry.QueryDef
 import graft.tools.Inspect
 
 /** The driver-contract smoke, run locally: `entry` exercises both
-  * extractor families end-to-end, and every oracle key has a matching
-  * query (the inverse need not hold — non-SQL-expressible ops are
-  * rows-only by contract).
+  * extractor families end-to-end, and the registry matches its pin.
   */
 class SparkEntrySpec extends SparkSpec {
 
@@ -24,6 +23,53 @@ class SparkEntrySpec extends SparkSpec {
   test("every oracle key has a registered query") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle without query: $missing")
+  }
+
+  test("registry sizes are exact (guards against silent Map-key dupes)") {
+    // pin the exact counts so a lost or extra registration shows up here
+    assert(SparkEntry.queries.size == 240,
+      s"queries: ${SparkEntry.queries.keySet.toSeq.sorted}")
+    assert(SparkEntry.oracleSql.size == 240,
+      s"oracles: ${SparkEntry.oracleSql.keySet.toSeq.sorted}")
+    // every query carries an oracle (or an in-band self-audit it asserts)
+    assert(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet ==
+      Set.empty[String])
+  }
+
+  /** `registry_pin.tsv` lists every query name, sorted, with the
+    * SHA-256 of `name + "\n" + oracleSql`: a rename, an addition, a
+    * removal or an oracle edit must update the pin on purpose.
+    */
+  test("the registry matches its pin: names declared once, " +
+      "oracle digests unchanged") {
+    val src = scala.io.Source.fromResource("graft/registry_pin.tsv")(
+      scala.io.Codec.UTF8)
+    val pin = try src.getLines().filterNot(_.startsWith("#")).map { l =>
+      val Array(n, h) = l.split('\t')
+      n -> h
+    }.toSeq finally src.close()
+    assert(pin.size == 240)
+    assert(SparkEntry.defs.map(_.name).sorted == pin.map(_._1))
+    assert(SparkEntry.queries.keys.toSeq.sorted == pin.map(_._1))
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+    def digest(n: String): String = sha.digest((n + "\n" +
+      SparkEntry.oracleSql(n)).getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val changed = pin.collect { case (n, h) if digest(n) != h => n }
+    assert(changed.isEmpty, s"oracle SQL changed without a pin update: $changed")
+  }
+
+  test("the registry index fails on a duplicated name and names it") {
+    val Seq(a, b) = SparkEntry.defs.take(2)
+    val e = intercept[IllegalArgumentException](
+      QueryDef.index(Seq(a, b, a.copy(oracleSql = "SELECT 1"))))
+    assert(e.getMessage.contains(a.name) && !e.getMessage.contains(b.name),
+      e.getMessage)
+  }
+
+  test("Bench's sync-round variance class names registered queries") {
+    val orphans = Bench.SyncRoundQueries.filterNot(SparkEntry.queries.contains)
+    assert(Bench.SyncRoundQueries.nonEmpty && orphans.isEmpty,
+      s"not registered: $orphans")
   }
 
   test("curation_e2e keeps its one-shuffle shape with projected gates") {
@@ -282,22 +328,5 @@ class SparkEntrySpec extends SparkSpec {
       col("gopher_fail") + col("page_fail") * 2 + col("exact_dup") * 4)
       .count()
     assert(badMask == 0L)
-  }
-
-  test("registry sizes are exact (guards against silent Map-key dupes)") {
-    // A duplicated key in the Map literal would silently drop an entry;
-    // pin the exact counts so that shows up as a test failure.
-    assert(SparkEntry.queries.size == 240,
-      s"queries: ${SparkEntry.queries.keySet.toSeq.sorted}")
-    assert(SparkEntry.oracleSql.size == 240,
-      s"oracles: ${SparkEntry.oracleSql.keySet.toSeq.sorted}")
-    // the rows-only set is pinned EMPTY since round 10: every query
-    // carries an oracle — the two whose raw values aren't
-    // SQL-replayable (compression_signal's zlib lengths, r9;
-    // simhash_signatures' xxhash64 bits, r10) emit in-band self-audit
-    // flags the oracle asserts TRUE instead. Anything new must bring
-    // an oracle or a self-audit.
-    assert(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet ==
-      Set.empty[String])
   }
 }

@@ -34,8 +34,9 @@ class RunCurationSpec extends SparkSpec {
     val pk = TextAnalysis.c4PageKeep(col("text"))
     val f = docs.agg(
       count(lit(1)).as("n_input"),
-      sum(when(gk, 1L).otherwise(0L)).as("n_gopher"),
-      sum(when(gk && pk, 1L).otherwise(0L)).as("n_gates"))
+      coalesce(sum(when(gk, 1L).otherwise(0L)), lit(0L)).as("n_gopher"),
+      coalesce(sum(when(gk && pk, 1L).otherwise(0L)), lit(0L))
+        .as("n_gates"))
       .collect().head
     s"""{"n_input":${f.getAs[Long]("n_input")},""" +
       s""""n_gopher":${f.getAs[Long]("n_gopher")},""" +
@@ -298,6 +299,28 @@ class RunCurationSpec extends SparkSpec {
             got("n_eval") == written(s"$out/eval") &&
             got("n_train") + got("n_eval") == afterIndex, s"$got")
       }
+    }
+  }
+
+  test("an all-rejected or empty input prints its true funnel, through " +
+      "curate + writeTrainingShards and through run") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-cur-empty-").toString
+    val junk = (0 until 10).map(i => (i.toLong, "short junk"))
+      .toDF("doc_id", "text")
+    val inputs = Seq(
+      "junk" -> (junk, """{"n_input":10,"n_gopher":0,"n_gates":0,"n_out":0}"""),
+      "empty" -> (junk.limit(0),
+        """{"n_input":0,"n_gopher":0,"n_gates":0,"n_out":0}"""))
+    for ((name, (docs, expected)) <- inputs) {
+      assert(referenceFunnel(docs, RunCuration.curate(docs)._1) == expected)
+      val (out, funnel) = RunCuration.curate(docs)
+      Sampling.writeTrainingShards(out, col("text"), s"$dir/$name-shards", 4)
+      assert(funnel() == expected, s"$name: curate")
+      docs.write.parquet(s"$dir/$name-docs")
+      assert(RunCuration.run(spark,
+        Array(s"$dir/$name-docs", s"$dir/$name-out")) == expected,
+        s"$name: run")
     }
   }
 }
