@@ -3,6 +3,9 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.types.IntegerType
 import graft.functions.{FixWrappedNameExpr, FormatCoordinateExpr, NormalizeWordsExpr}
 
@@ -24,13 +27,21 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.functions.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    ext.injectOptimizerRule(_ => graft.plans.FuseHofDotProduct)
-    ext.injectOptimizerRule(_ => graft.plans.RewriteRangeJoin)
-    ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
+    GraftExtensions.optimizerRules.foreach(r => ext.injectOptimizerRule(_ => r))
+    GraftExtensions.plannerStrategies.foreach(s =>
+      ext.injectPlannerStrategy(_ => s))
   }
 }
 
 object GraftExtensions {
+
+  /** The optimizer rules and planner strategies, injected at session
+    * build (`apply`) or into a built session ([[register]]).
+    */
+  private val optimizerRules: Seq[Rule[LogicalPlan]] =
+    Seq(graft.plans.FuseHofDotProduct, graft.plans.RewriteRangeJoin)
+  private val plannerStrategies: Seq[SparkStrategy] =
+    Seq(graft.plans.AsofJoinStrategy)
 
   /** Non-deprecated full-form ExpressionInfo (the 5-arg convenience
     * constructor is deprecated since 3.0); optional doc fields empty.
@@ -147,22 +158,21 @@ object GraftExtensions {
   }
 
   /** Register into an existing session (post-construction): SQL
-    * functions into the function registry, and the HOF-fusion rule via
-    * `experimental.extraOptimizations` (the post-hoc analog of
-    * `injectOptimizerRule`; idempotent).
+    * functions into the function registry, the optimizer rules via
+    * `experimental.extraOptimizations` and the strategies via
+    * `experimental.extraStrategies` (the post-hoc analogs of
+    * `injectOptimizerRule` / `injectPlannerStrategy`; idempotent).
     */
   def register(spark: SparkSession): Unit = {
     functions.foreach { case (name, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(
         FunctionIdentifier(name), info, builder)
     }
-    val rules = Seq(graft.plans.FuseHofDotProduct, graft.plans.RewriteRangeJoin)
     val extra = spark.experimental.extraOptimizations
     spark.experimental.extraOptimizations =
-      extra ++ rules.filterNot(extra.contains)
+      extra ++ optimizerRules.filterNot(extra.contains)
     val strategies = spark.experimental.extraStrategies
-    if (!strategies.contains(graft.plans.AsofJoinStrategy))
-      spark.experimental.extraStrategies =
-        strategies :+ graft.plans.AsofJoinStrategy
+    spark.experimental.extraStrategies =
+      strategies ++ plannerStrategies.filterNot(strategies.contains)
   }
 }

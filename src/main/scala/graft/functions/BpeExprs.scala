@@ -8,91 +8,10 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native kernel for the BPE tokenizer-ENCODE dump.
-  *
-  * The composed formulation — `flatten(transform(mw, w =>
-  * transform(sequence(1, length(w)), i => ascii(substr(w, i, 1)))))`
-  * followed by `md5(array_join(transform(ids, cast), ','))` — is
-  * built-ins only, but the doubly-nested higher-order lambdas run
-  * interpreted with an O(chars) `substr` inside (quadratic per word),
-  * and the join re-serializes every id it just materialized (VERDICT
-  * r16 "What's wrong #3": ~10× the per-byte cost of the comparable
-  * single scan). This kernel computes the SAME three derived columns
-  * (token count, comma-joined code-point csv, first-8 head) in one
-  * code-point walk over the merged text with two output allocations,
-  * and participates in whole-stage codegen.
-  */
-object BpeNative {
-
-  /** One pass over the merged normalized text: every non-space code
-    * point (full code points, so astral-plane chars match both
-    * engines' `ascii`) appended as its decimal value to a comma-joined
-    * csv, counted, with the first 8 captured separately. Space is the
-    * token separator [[graft.ops.TextDedup.normText]] guarantees
-    * (collapsed `\s+`, trimmed), and merge placeholders live at
-    * U+E000+ — never a space — so skipping spaces reproduces exactly
-    * the per-word flatten order of the composed chain.
-    */
-  def dump(s: UTF8String): InternalRow = {
-    val str = s.toString
-    val len = str.length
-    val csv = new java.lang.StringBuilder(len * 3)
-    val head = new java.lang.StringBuilder(48)
-    var n = 0L
-    var i = 0
-    while (i < len) {
-      val cp = str.codePointAt(i)
-      i += Character.charCount(cp)
-      if (cp != ' ') {
-        if (n > 0) csv.append(',')
-        csv.append(cp)
-        if (n < 8) {
-          if (n > 0) head.append(',')
-          head.append(cp)
-        }
-        n += 1
-      }
-    }
-    new GenericInternalRow(Array[Any](n,
-      UTF8String.fromString(csv.toString),
-      UTF8String.fromString(head.toString)))
-  }
-}
-
-/** `string` (merged normalized text) → `struct<n_tokens: bigint,
-  * ids_csv: string, head_ids: string>` — the hash-friendly encode dump
-  * in one pass. `ids_csv` feeds `md5()` on the codegen'd built-in
-  * path; it is never emitted raw (a final-list column would be at the
-  * mercy of engine list canonicalization — the wide-decimal lesson
-  * applied to lists).
-  */
-case class BpeCodepointsExpr(child: Expression)
-    extends UnaryExpression with GraftTypeChecks {
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    requireTypes((child.dataType, "a string argument", isString))
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("ids_csv", StringType, nullable = false),
-    StructField("head_ids", StringType, nullable = false)))
-  override def prettyName: String = "graft_bpe_codepoints"
-  override def nullSafeEval(input: Any): Any =
-    BpeNative.dump(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BpeNative.dump($c);")
-  override protected def withNewChildInternal(newChild: Expression) =
-    copy(child = newChild)
-}
-
 object BpeExprs {
-  def codepointsDump(mergedText: Column): Column =
-    ColumnBridge.column(BpeCodepointsExpr(ColumnBridge.expression(mergedText)))
-
-  /** Flat-table encode dump over NORMALIZED text — same output struct
-    * as [[codepointsDump]] over a replayed merge chain, one plan node
-    * at any merge count.
+  /** Flat-table encode dump over NORMALIZED text: `struct<n_tokens,
+    * ids_csv, head_ids>`, one plan node at any merge count. Parity-
+    * pinned against the replace-chain encode in BpeMinerSpec.
     */
   def encodeDump(normText: Column, table: BpeMergeTable): Column =
     ColumnBridge.column(
@@ -222,8 +141,8 @@ final class BpeMergeTable(
   /** One pass over normalized text: codepoints in, space-delimited
     * words priority-merged in place, merged ids appended to the csv /
     * head / count — the flat-table equivalent of replaying the merge
-    * chain and then [[BpeNative.dump]], emitting the identical
-    * `struct<n_tokens, ids_csv, head_ids>`.
+    * chain and dumping its code points (parity-pinned in
+    * BpeMinerSpec), emitting `struct<n_tokens, ids_csv, head_ids>`.
     */
   def dump(s: UTF8String): InternalRow = {
     val str = s.toString
@@ -394,10 +313,10 @@ object BpeMergeTable {
 }
 
 /** `string` (NORMALIZED text — [[graft.ops.TextDedup.normText]]'s
-  * contract: single-space separated, no PUA chars) → the same
-  * `struct<n_tokens, ids_csv, head_ids>` as [[BpeCodepointsExpr]]
-  * over the replayed merge chain, but against a [[BpeMergeTable]]
-  * reference object: ONE plan node at any merge count.
+  * contract: single-space separated, no PUA chars) →
+  * `struct<n_tokens, ids_csv, head_ids>` against a [[BpeMergeTable]]
+  * reference object: ONE plan node at any merge count. Parity-pinned
+  * against the replayed merge chain in BpeMinerSpec.
   */
 case class BpeEncodeExpr(child: Expression, table: BpeMergeTable)
     extends UnaryExpression with GraftTypeChecks {

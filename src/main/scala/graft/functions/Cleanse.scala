@@ -39,9 +39,10 @@ object Cleanse {
     * still exist, so `"1 Bakongan"` -> `"Bakongan"` but `"Limba U I"`
     * survives. Pure built-ins — stays inside codegen.
     *
-    * Null-propagating by design (Column semantics); the Scala mirror
-    * [[cleanNameScala]] returns "" for null — callers that need ""
-    * should wrap with `coalesce(..., lit(""))` or use [[cleanseName]].
+    * Null-propagating by design (Column semantics) — callers that need
+    * "" should wrap with `coalesce(..., lit(""))` or use [[cleanseName]].
+    * Parity-pinned against a plain-Scala mirror in NativeParitySpec;
+    * CleanseSpec holds the reference's unit tables.
     */
   def cleanName(c: Column): Column = {
     val t0 = pyTrim(c)
@@ -53,18 +54,6 @@ object Cleanse {
     val t6 = regexp_replace(t5, "(?U)^\\d+\\s+", "")
     val t7 = regexp_replace(t6, "(?U)\\s{2,}", " ")
     pyTrim(t7)
-  }
-
-  /** Scala mirror of [[cleanName]] for driver-side use and tests. */
-  def cleanNameScala(name: String): String = {
-    if (name == null) return ""
-    var t = pyStrip(name).replace("\r", "").replace("\t", " ")
-    t = t.replaceAll("(?U)^\\d+\n", "")
-    t = t.replaceAll("(?U)\n\\d+$", "")
-    t = t.replaceAll("\n+", " ")
-    t = t.replaceAll("(?U)^\\d+\\s+", "")
-    t = t.replaceAll("(?U)\\s{2,}", " ")
-    pyStrip(t)
   }
 
   /** fix_wrapped_name (`utils.py:41-65`): repairs PDF line-wraps.

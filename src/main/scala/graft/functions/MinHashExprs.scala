@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 /** Native fused MinHash: signature fold + LSH banding as one codegen'd
   * loop over the shingle array.
   *
-  * The composed formulation in [[graft.ops.TextDedup]] — an
+  * The composed formulation (parity-pinned in MinHashExprsSpec) — an
   * `aggregate` whose merge is `zip_with(acc, transform(seeds,
   * xxhash64(i, s)), least)` — is semantically exact but runs on the
   * interpreted `ArrayAggregate`/`HigherOrderFunction` path and

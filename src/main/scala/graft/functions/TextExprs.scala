@@ -13,9 +13,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native fused text-shingling primitives.
   *
-  * The composed formulation in [[graft.ops.TextDedup.shinglesHof]] —
-  * `array_distinct(transform(sequence(...), i => concat_ws(" ",
-  * slice(split(text, " "), i+1, n))))` — is built-ins only, but every
+  * The composed formulation — `array_distinct(transform(sequence(...),
+  * i => concat_ws(" ", slice(split(text, " "), i+1, n))))`, parity-
+  * pinned in TextExprsSpec — is built-ins only, but every
   * higher-order function in the chain evaluates its lambda through the
   * interpreted path and allocates an intermediate array per row
   * (sequence, transform results, per-gram slices). For corpus-scale

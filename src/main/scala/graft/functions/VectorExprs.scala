@@ -8,10 +8,11 @@ import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Native integer-vector kernels for the quantized embedding path.
   *
-  * The composed form (`aggregate(zip_with(a, b, ...))`) is the
-  * semantic reference, but Spark's higher-order functions are
-  * CodegenFallback — per-element interpreted lambda dispatch — which
-  * matters exactly where this kernel lives: the all-pairs
+  * The composed form (`aggregate(zip_with(a, b, ...))`, parity-pinned
+  * in QuantizationSpec) is the semantic reference, but Spark's
+  * higher-order functions are CodegenFallback — per-element
+  * interpreted lambda dispatch — which matters exactly where this
+  * kernel lives: the all-pairs
   * within-cluster loop of SemDeDup-style dedup, millions of 64-dim
   * dot products per partition. The native node is one tight JIT'd
   * loop inside whole-stage codegen.

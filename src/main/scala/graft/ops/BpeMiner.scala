@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{BpeExprs, BpeMergeTable}
@@ -13,39 +13,26 @@ import graft.functions.{BpeExprs, BpeMergeTable}
   * round recounts.
   *
   * Scale shape: the corpus is tokenized ONCE into a (word, count)
-  * vocabulary — the classic BPE-trainer move; everything after runs on
-  * the vocabulary, which is heavy-tailed but bounded (a Zipf corpus at
-  * 100 TB still has ~10⁷ distinct words). Merged symbols are carried
-  * as single placeholder characters from the Unicode private-use area
-  * (U+E000 + rank, ~6 400 slots — cannot appear in normalized corpus
-  * text, and sorts above every scripted codepoint identically in
-  * UTF-8-binary engines), so pair extraction stays a per-character
-  * slice every round; placeholders expand back to their text in the
-  * output via a chain of 1-row broadcast joins. The merge-loop lineage
-  * is chain-capped: every [[ChainCap]] rounds the working vocabulary
-  * is checkpointed and the superseded checkpoint freed
-  * ([[CheckpointUtil]] lifecycle), so round r's pair count re-evaluates
-  * at most [[ChainCap]] replace stages instead of r.
+  * vocabulary — the classic BPE-trainer move — in one distributed pass.
+  * The vocabulary is heavy-tailed but bounded (a Zipf corpus at
+  * 100 TB still has ~10⁷ distinct words), so it collects to the driver
+  * under a `minCount` floor and a loud [[TrainMaxVocab]] cap, and the
+  * merge loop runs there in memory ([[trainMergesLocal]],
+  * [[mineCensusLocal]]). Merged symbols are carried as single
+  * placeholder characters from the Unicode private-use area (U+E000 +
+  * rank — cannot appear in normalized corpus text, and sorts above
+  * every scripted codepoint identically in UTF-8-binary engines).
+  * Encoding loads the trained merges into one [[BpeMergeTable]]
+  * automaton: scan → one native expression, no joins, a plan that does
+  * not grow with the merge count. The byte-level (GPT-2 dialect)
+  * trainer follows the same shape.
   *
-  * Precondition shared with every external replay: `rounds` must not
-  * exceed the corpus's adjacent-pair diversity. A round with no pairs
-  * left yields an empty top-1 frame, which annihilates the downstream
-  * cross joins — both engines then agree on EMPTY output (parity
-  * holds), but the useful contract is rounds ≪ distinct pairs, which
-  * any real corpus satisfies by orders of magnitude.
+  * The word-level trainer, census operators and encoders are
+  * parity-pinned in BpeMinerSpec against a distributed miner that
+  * recounts the vocabulary with two Spark jobs per round and encodes
+  * by a chain of whole-text replaces.
   */
 object BpeMiner {
-
-  /** U+E000 private-use block: 6 400 codepoints, none of which survive
-    * [[TextDedup.normText]]'s script ranges — but cap the rounds well
-    * inside it so placeholder arithmetic stays single-char BMP.
-    */
-  private val MaxRounds = 1024
-
-  /** Bound on how many lazy replace stages may stack before the
-    * working vocabulary is re-checkpointed.
-    */
-  private val ChainCap = 4
 
   /** Cap for the DRIVER-SIDE trainer ([[trainMergesLocal]]): the full
     * U+E000 private-use block, 6 400 single-char placeholder slots.
@@ -68,151 +55,14 @@ object BpeMiner {
     */
   private[ops] def placeholder(r: Int): String = (0xE000 + r).toChar.toString
 
-  /** The shared mining loop: `(vocab, tops oldest-first, per-round
-    * applied vocabularies oldest-first — the last one is the final
-    * vocabulary after ALL `rounds` merges)`. The base vocabulary and
-    * per-round 1-row tops are checkpointed (plus the chain-cap
-    * checkpoints above); the per-round vocabularies are lazy, so a
-    * caller that ignores them pays nothing for them.
-    */
-  /** `keepRounds`: when true, superseded chain checkpoints are NOT
-    * freed — the intermediate per-round vocabularies read through
-    * them, so a caller that consumes more than the last entry of the
-    * returned list (the merge-curve census) needs every checkpoint
-    * alive until its one action runs. At most rounds/ChainCap pinned
-    * vocab-sized blocks, all dropped by the session's post-query
-    * sweep. When FALSE, the returned vocabulary list carries ONLY the
-    * final post-all-rounds frame: earlier entries would read through
-    * chain checkpoints this mode has already freed, and a
-    * documented-only hazard is one future caller away from a
-    * missing-block crash (ADVICE r17).
-    */
-  private def mineRounds(
-      docs: DataFrame, rounds: Int, keepRounds: Boolean = false)
-      : (DataFrame, List[DataFrame], List[DataFrame]) = {
-    require(rounds >= 1 && rounds <= MaxRounds,
-      s"rounds must be in [1, $MaxRounds], got $rounds")
-    // the one corpus pass: normalized whitespace tokens → vocabulary
-    val vocab = docs.filter(col("text").isNotNull)
-      .select(explode(split(TextDedup.normText(col("text")), " "))
-        .as("w"))
-      .filter(length(col("w")) > 1)
-      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-
-    val pairStructs = expr(
-      "transform(sequence(1, length(w) - 1), " +
-        "i -> struct(substring(w, i, 1) AS l, " +
-        "substring(w, i + 1, 1) AS r))")
-
-    var cur = vocab
-    var chainCkpt: DataFrame = null
-    var tops = List.empty[DataFrame] // newest first, raw (unexpanded)
-    var curs = List.empty[DataFrame] // newest first, post-round vocab
-    for (r <- 0 until rounds) {
-      // length-1 words (fully merged symbols) must not reach the
-      // sequence(): Spark's sequence(1, 0) generates DESCENDING [1,0]
-      // rather than empty, minting phantom ("", sym) pairs
-      val top = cur
-        .filter(length(col("w")) > 1)
-        .select(col("cnt"), explode(pairStructs).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("cnt")).as("pair_cnt"))
-        .orderBy(col("pair_cnt").desc, col("l"), col("r"))
-        .limit(1)
-        .localCheckpoint()
-      tops ::= top
-      cur = cur
-        .crossJoin(broadcast(
-          top.select(col("l").as("__l"), col("r").as("__r"))))
-        .withColumn("w",
-          replace(col("w"), concat(col("__l"), col("__r")),
-            lit(placeholder(r))))
-        .drop("__l", "__r")
-      if ((r + 1) % ChainCap == 0 && r < rounds - 1) {
-        // eager: materialized at the call, so the superseded chain
-        // checkpoint (whose lineage the new one no longer reaches)
-        // can be freed immediately — O(1) pinned vocab-sized blocks
-        // across the whole mine instead of O(rounds / ChainCap).
-        // UNLESS the caller keeps the per-round vocabularies: the
-        // entries recorded since the PREVIOUS cap read through that
-        // superseded checkpoint, and a freed localCheckpoint cannot
-        // recompute (its lineage is truncated at its own blocks)
-        val ck = cur.localCheckpoint()
-        if (chainCkpt != null && !keepRounds) CheckpointUtil.free(chainCkpt)
-        chainCkpt = ck
-        cur = ck
-      }
-      if (keepRounds) curs ::= cur
-    }
-    // keepRounds=false: only the FINAL vocabulary is safe to read
-    // (earlier per-round frames reach through freed chain
-    // checkpoints) — so that is all this mode returns
-    (vocab, tops.reverse, if (keepRounds) curs.reverse else List(cur))
-  }
-
-  /** Cross-joins the `rounds` 1-row top-merge frames onto `base` as
-    * `__ml<r>` / `__mr<r>` columns — the broadcast side of every
-    * merge replay.
-    */
-  private def withMergeCols(base: DataFrame, tops: Seq[DataFrame]): DataFrame =
-    tops.zipWithIndex.foldLeft(base) {
-      case (acc, (t, r)) =>
-        acc.crossJoin(broadcast(t.select(
-          col("l").as(s"__ml$r"), col("r").as(s"__mr$r"))))
-    }
-
-  /** Replays the `rounds` learned merges over a text column in rank
-    * order — round r's raw symbols are exactly the post-round-(r-1)
-    * alphabet, so the fold replays the trainer. Applied to the WHOLE
-    * normalized text, not per word: a merge pair never contains a
-    * space (both symbols come from space-split vocabulary words or
-    * are placeholders), so no match can straddle a word boundary and
-    * the full-text replace is exactly the per-word replace — minus
-    * the per-word higher-order lambda. A chain of `rounds` codegen'd
-    * `StringReplace`s is the entire merge cost per row.
-    */
-  private def applyMerges(c: Column, rounds: Int): Column =
-    (0 until rounds).foldLeft(c)((acc, r) =>
-      replace(acc, concat(col(s"__ml$r"), col(s"__mr$r")),
-        lit(placeholder(r))))
-
-  /** One row per merge round: `(merge_rank, left_sym, right_sym,
-    * pair_cnt)` with placeholder symbols expanded to their full text.
-    */
-  def topMerges(docs: DataFrame, rounds: Int = 3): DataFrame = {
-    val (_, ordered, _) = mineRounds(docs, rounds)
-    // expand placeholders newest-first: placeholder i's expansion may
-    // itself contain earlier placeholders, which the later replaces fix
-    val out = ordered.zipWithIndex.map { case (top, idx) =>
-      val withPrior = ordered.take(idx).zipWithIndex
-        .foldLeft(top.select(col("l"), col("r"), col("pair_cnt"))) {
-          case (acc, (prior, j)) =>
-            acc.crossJoin(broadcast(prior.select(
-              col("l").as(s"__pl$j"), col("r").as(s"__pr$j"))))
-        }
-      val expand = (c: Column) =>
-        (idx - 1 to 0 by -1).foldLeft(c) { (acc, j) =>
-          replace(acc, lit(placeholder(j)),
-            concat(col(s"__pl$j"), col(s"__pr$j")))
-        }
-      withPrior.select(
-        lit(idx + 1L).as("merge_rank"),
-        expand(col("l")).as("left_sym"),
-        expand(col("r")).as("right_sym"),
-        col("pair_cnt"))
-    }
-    out.reduce(_.unionByName(_)).orderBy("merge_rank")
-  }
-
   /** The mined merge table in RAW (placeholder-bearing) form — the
     * PERSISTABLE model artifact of the train-once / encode-many
     * lifecycle ([[graft.tools.RunBpe]]): `(merge_rank, l, r,
     * pair_cnt)` where `l`/`r` may contain earlier rounds' U+E000
     * placeholders, so replaying rank order with
     * `replace(text, l || r, placeholder(rank−1))` reproduces the
-    * trainer exactly — no expansion table needed ([[topMerges]] is
-    * the human-readable expanded view; THIS is the machine form).
+    * trainer exactly — no expansion table needed ([[topMergesFlat]]
+    * is the human-readable expanded view; THIS is the machine form).
     */
   def rawMerges(docs: DataFrame, rounds: Int = 3): DataFrame = {
     val spark = docs.sparkSession
@@ -220,20 +70,6 @@ object BpeMiner {
     trainMergesLocal(docs, rounds).zipWithIndex
       .map { case ((l, r, c), i) => (i + 1L, l, r, c) }.toSeq
       .toDF("merge_rank", "l", "r", "pair_cnt")
-  }
-
-  /** The DISTRIBUTED formulation of [[rawMerges]] — kept as the
-    * semantic reference the driver-side trainer is spec-pinned
-    * against (and the shape a corpus whose VOCABULARY exceeds driver
-    * memory would fall back to).
-    */
-  private[graft] def rawMergesViaMine(
-      docs: DataFrame, rounds: Int = 3): DataFrame = {
-    val (_, tops, _) = mineRounds(docs, rounds)
-    tops.zipWithIndex.map { case (t, i) =>
-      t.select(lit(i + 1L).as("merge_rank"), col("l"), col("r"),
-        col("pair_cnt"))
-    }.reduce(_.unionByName(_))
   }
 
   /** The BPE TRAINER as real tokenizer trainers run it (HuggingFace
@@ -245,18 +81,17 @@ object BpeMiner {
     * pair extraction), the (pair_cnt DESC, l, r) winner, and one
     * leftmost-non-overlapping in-place replace per word. Returns the
     * rank-ordered raw merges `(l, r, pair_cnt)` — single-codepoint
-    * symbols, earlier rounds riding their U+E000+rank placeholders —
-    * byte-identical to [[rawMergesViaMine]] (spec-pinned).
+    * symbols, earlier rounds riding their U+E000+rank placeholders.
+    * Parity-pinned, rank for rank, against the distributed miner in
+    * BpeMinerSpec.
     *
     * Why driver-side is the right 100 TB shape for TRAINING: the
     * vocabulary is Zipf-bounded (~10⁷ distinct words in a 100 TB web
-    * corpus ≈ a few hundred MB of (word, count) pairs), while the
+    * corpus ≈ a few hundred MB of (word, count) pairs), while a
     * distributed loop pays 2 Spark jobs per round — 512+
     * driver-synchronized jobs at rounds=256 for aggregates over
     * kilobyte-scale frames. In memory the whole 256-round loop is
-    * milliseconds. Mining-census operators ([[topMerges]],
-    * [[mergeCurve]], [[compressionSummary]]) keep the distributed
-    * loop: their OUTPUT is the per-round vocabulary recount itself.
+    * milliseconds.
     *
     * The Zipf assumption is ENFORCED, not hoped for (ADVICE r18): the
     * collect is guarded by a `cnt >= minCount` floor (the
@@ -270,8 +105,7 @@ object BpeMiner {
     * (minCount − 1) × (dropped words containing that pair) — and at
     * minCount=2 on web text the dropped mass is hapax noise no real
     * trainer wants in its merges anyway. Callers over pathological
-    * corpora either raise minCount or fall back to
-    * [[rawMergesViaMine]] (fully distributed, no driver state).
+    * corpora raise minCount (or maxVocab, if the driver has the heap).
     */
   def trainMergesLocal(
       docs: DataFrame,
@@ -284,14 +118,12 @@ object BpeMiner {
     * need: `(merges, symbols_before, symbols_after per round)` where
     * the symbol counts are the weighted corpus symbol totals
     * `Σ cnt·len(word)` over the (multi-char) vocabulary — `len`
-    * recounted after each round's in-place merge, exactly the
-    * distributed [[mergeCurve]]/[[compressionSummary]] aggregates
-    * (integer arithmetic on the same vocabulary, so the totals are
-    * bit-identical; spec-pinned). One Spark job (the bounded
-    * vocabulary collect) instead of 2·rounds driver-synchronized
-    * vocabulary jobs — the same train-once economics that moved
-    * [[rawMerges]]/[[encodeFlat]] driver-side (guide §5: the census
-    * loop is kilobyte-frame work priced entirely by job submission).
+    * recounted after each round's in-place merge (integer arithmetic,
+    * parity-pinned against the distributed per-round recount in
+    * BpeMinerSpec). One Spark job (the bounded vocabulary collect)
+    * instead of 2·rounds driver-synchronized vocabulary jobs (guide
+    * §5: the census loop is kilobyte-frame work priced entirely by job
+    * submission).
     */
   private[graft] def mineCensusLocal(
       docs: DataFrame,
@@ -318,7 +150,7 @@ object BpeMiner {
       s"trainMergesLocal: distinct-word vocabulary exceeds " +
         s"maxVocab=$maxVocab at minCount=$minCount — raise minCount " +
         s"(each dropped word perturbs pair counts by < minCount) or " +
-        s"use rawMergesViaMine (fully distributed trainer)")
+        s"maxVocab (if the driver heap allows)")
     // words as codepoint arrays, merged IN PLACE (lengths shrink);
     // codepoint order == UTF-8 byte order == both engines' binary
     // string collation, so integer compares reproduce the tie-break
@@ -426,13 +258,12 @@ object BpeMiner {
     (out, symsBefore, symsAfter)
   }
 
-  /** [[topMerges]] via the driver-side trainer ([[mineCensusLocal]]):
-    * identical rows (spec-pinned) from ONE distributed job — the
-    * bounded vocabulary collect — instead of `rounds` checkpointed
-    * top-pair jobs. Placeholder expansion replays the distributed
-    * version's newest-first replace chain in driver memory (placeholder
-    * j's expansion may itself contain earlier placeholders, which the
-    * later replaces fix).
+  /** One row per merge round: `(merge_rank, left_sym, right_sym,
+    * pair_cnt)` with placeholder symbols expanded to their full text,
+    * from ONE distributed job (the bounded vocabulary collect).
+    * Expansion runs newest-first (placeholder j's expansion may itself
+    * contain earlier placeholders, which the later replaces fix).
+    * Parity-pinned against the distributed miner in BpeMinerSpec.
     */
   def topMergesFlat(docs: DataFrame, rounds: Int = 3): DataFrame = {
     val spark = docs.sparkSession
@@ -454,10 +285,14 @@ object BpeMiner {
       .orderBy("merge_rank")
   }
 
-  /** [[mergeCurve]] via the driver-side trainer: identical rows
-    * (spec-pinned) from one vocabulary collect — the per-round
-    * `symbols_after` recount is the in-memory Σ cnt·len over the
-    * merged vocabulary instead of `rounds` distributed re-aggregates.
+  /** The merge-depth RETURN CURVE, one row per round: `(merge_rank,
+    * pair_cnt, symbols_before, symbols_after)` — the weighted corpus
+    * symbol count after each successive merge against the constant
+    * pre-merge total; the flattening point is the economic merge
+    * depth. `symbols_after` is a per-round recount (in memory, from
+    * one vocabulary collect), NOT `symbols_before − Σ pair_cnt`: pair
+    * counts include overlapping adjacencies, the apply does not.
+    * Parity-pinned against the distributed miner in BpeMinerSpec.
     */
   def mergeCurveFlat(docs: DataFrame, rounds: Int = 3): DataFrame = {
     val spark = docs.sparkSession
@@ -470,9 +305,11 @@ object BpeMiner {
       .orderBy("merge_rank")
   }
 
-  /** [[compressionSummary]] via the driver-side trainer: identical row
-    * (spec-pinned); the ratio is the same single IEEE division of the
-    * two exact BIGINTs.
+  /** Corpus compression under the learned merges, one row:
+    * `(symbols_before, symbols_after, compression_x)` — weighted symbol
+    * counts before vs after all `rounds` merges, the ratio a single
+    * IEEE division of the two exact BIGINTs. Parity-pinned against the
+    * distributed miner in BpeMinerSpec.
     */
   def compressionSummaryFlat(docs: DataFrame, rounds: Int = 3): DataFrame = {
     val spark = docs.sparkSession
@@ -639,11 +476,16 @@ object BpeMiner {
     BpeMergeTable.fromRawMerges(
       trainMergesLocal(docs, rounds).map(t => (t._1, t._2)).toSeq)
 
-  /** [[encode]] output off a [[BpeMergeTable]]: a FLAT plan — scan →
-    * one native priority-merge expression → md5 — whose node count
-    * does not grow with the merge count (VERDICT r17 #1; the replayed
-    * chain is O(rounds) plan nodes and codegen explodes long before a
-    * realistic 30k-merge vocabulary).
+  /** Tokenizer ENCODE off a [[BpeMergeTable]]: `(doc_id, source,
+    * n_tokens, ids_hash, head_ids)`. Token ids are code points — an
+    * unmerged character encodes as itself, the round-r merged symbol of
+    * a self-mined table as its placeholder `0xE000 + r`; `ids_hash` is
+    * the md5 of the comma-joined ids and `head_ids` the first 8 in the
+    * clear (raw arrays in a final schema would be at the mercy of
+    * engine list canonicalization). A FLAT plan — scan → one native priority-merge
+    * expression → md5 — whose node count does not grow with the merge
+    * count (VERDICT r17 #1: a replayed replace chain is O(rounds) plan
+    * nodes). Parity-pinned against that chain in BpeMinerSpec.
     */
   def encodeWithTable(docs: DataFrame, table: BpeMergeTable): DataFrame =
     docs.filter(col("text").isNotNull)
@@ -655,14 +497,14 @@ object BpeMiner {
         md5(col("d.ids_csv")).as("ids_hash"),
         col("d.head_ids").as("head_ids"))
 
-  /** [[encode]] with the driver-side trainer + flat-table encode:
-    * identical output, merge-count-independent plan. This is the
-    * production formulation the deep-rounds queries run.
+  /** [[encodeWithTable]] over the driver-side trainer's merges — the
+    * formulation the deep-rounds queries run.
     */
   def encodeFlat(docs: DataFrame, rounds: Int): DataFrame =
     encodeWithTable(docs, tableFor(docs, rounds))
 
-  /** [[encodedLengths]] in flat-table form: `(doc_id, source,
+  /** Per-document token counts only — the length column
+    * [[graft.ops.Chunking.packByLength]] packs on: `(doc_id, source,
     * n_tokens)` via the count-only native kernel (no id
     * materialization at all).
     */
@@ -675,17 +517,14 @@ object BpeMiner {
           .as("n_tokens"))
   }
 
-  /** [[encode]] against a PERSISTED merge table instead of an inline
-    * mine — the apply half of the lifecycle. The merge table is
+  /** [[encodeWithTable]] against a PERSISTED merge table instead of an
+    * inline mine — the apply half of the lifecycle. The merge table is
     * MODEL-sized (≤ [[TrainMaxRounds]] rows), so it collects to the
     * driver and loads into ONE [[BpeMergeTable]] automaton: the
     * corpus plan is a pure scan → one native priority-merge
     * expression, with no joins and a node count independent of the
-    * merge count (until r17 this was a chain of `rounds` replaces —
-    * fine at 16, impossible at a realistic vocabulary; the flat form
-    * is spec-pinned output-identical). Output schema is identical to
-    * [[encode]] and spec-pinned equal given
-    * `merges = rawMerges(docs, rounds)`.
+    * merge count. Spec-pinned equal to the replace-chain encode given
+    * `merges = rawMerges(docs, rounds)`, through a parquet round-trip.
     */
   def encodeWithMerges(docs: DataFrame, merges: DataFrame): DataFrame = {
     val m = merges.orderBy(col("merge_rank"))
@@ -706,8 +545,8 @@ object BpeMiner {
     * replayed as whole-text string replaces at all (symbol boundaries
     * are lost the moment two merged tokens abut), and published
     * vocabularies run to 50k merges — VERDICT r17 #2. Same output
-    * schema as [[encode]]; ids are codepoints for unmerged chars and
-    * `0x110000 + rank` for merged tokens.
+    * schema as [[encodeWithTable]]; ids are codepoints for unmerged
+    * chars and `0x110000 + rank` for merged tokens.
     *
     * Faithfulness boundary (documented, not hidden): a real GPT-2
     * tokenizer pre-splits with its regex and maps UTF-8 BYTES through
@@ -763,140 +602,4 @@ object BpeMiner {
           s"merges.txt line must be 'left right', got '$l'")
         (l.substring(0, sp), l.substring(sp + 1))
       }.toSeq
-
-  /** Apply the mined merges as a TOKENIZER-ENCODE pass: re-run the
-    * `rounds` learned merges over every document (the same leftmost
-    * non-overlapping `replace` convention the trainer used on the
-    * vocabulary) and emit per-document token ids — the operator that
-    * turns "we mined merges" into a column downstream packing and
-    * censuses can actually consume.
-    *
-    * Token ids are Unicode code points: an unmerged character encodes
-    * as itself; the round-r merged symbol rides its placeholder
-    * codepoint `0xE000 + r` (so `id - 0xE000` IS the 0-based merge
-    * rank — stable, replayable, no id-assignment table needed). The
-    * dump is hash-friendly: `(doc_id, n_tokens, ids_hash, head_ids)`
-    * with the full id sequence carried as an md5 over the comma-joined
-    * ids and the first 8 ids in the clear for triage (raw arrays in a
-    * final schema would be at the mercy of engine list
-    * canonicalization — the wide-decimal lesson applied to lists).
-    *
-    * Scale shape: mining is vocabulary-sized; the encode itself is a
-    * pure per-row expression chain over the corpus scan (`rounds`
-    * 1-row broadcast merge joins, zero shuffles) — the 100 TB plan is
-    * scan → replace chain → one native code-point walk
-    * ([[graft.functions.BpeCodepointsExpr]]). [[encodeHof]] keeps the
-    * composed built-ins formulation as the spec-pinned semantic
-    * reference.
-    */
-  def encode(docs: DataFrame, rounds: Int = 3): DataFrame = {
-    val (_, tops, _) = mineRounds(docs, rounds)
-    val base = docs.filter(col("text").isNotNull)
-      .select(col("doc_id"), col("source"),
-        TextDedup.normText(col("text")).as("nt"))
-    val dumped = withMergeCols(base, tops)
-      .select(col("doc_id"), col("source"),
-        BpeExprs.codepointsDump(applyMerges(col("nt"), rounds)).as("d"))
-    dumped.select(col("doc_id"), col("source"),
-      col("d.n_tokens").as("n_tokens"),
-      md5(col("d.ids_csv")).as("ids_hash"),
-      col("d.head_ids").as("head_ids"))
-  }
-
-  /** The composed built-ins formulation of [[encode]] — per-word
-    * higher-order lambdas materializing each id through
-    * `ascii(substr(w, i, 1))`, then re-joining for the hash. Identical
-    * output (spec-pinned); kept as the semantic reference for the
-    * native node per the engine's extension-ladder convention.
-    */
-  def encodeHof(docs: DataFrame, rounds: Int = 3): DataFrame = {
-    val (_, tops, _) = mineRounds(docs, rounds)
-    val base = docs.filter(col("text").isNotNull)
-      .select(col("doc_id"), col("source"),
-        // drop empty words up front: sequence(1, 0) descends instead
-        // of emitting empty (the mining lesson at the pairStructs)
-        filter(split(TextDedup.normText(col("text")), " "),
-          w => length(w) > 0).as("wd"))
-    val ids = withMergeCols(base, tops)
-      .select(col("doc_id"), col("source"),
-        transform(col("wd"), w => applyMerges(w, rounds)).as("mw"))
-      .select(col("doc_id"), col("source"),
-        flatten(transform(col("mw"), w =>
-          transform(sequence(lit(1), length(w)),
-            i => ascii(w.substr(i, lit(1)))))).as("token_ids"))
-    def joined(c: Column): Column =
-      array_join(transform(c, i => i.cast("string")), ",")
-    ids.select(col("doc_id"), col("source"),
-      size(col("token_ids")).cast("long").as("n_tokens"),
-      md5(joined(col("token_ids"))).as("ids_hash"),
-      joined(slice(col("token_ids"), 1, 8)).as("head_ids"))
-  }
-
-  /** [[encode]]'s per-document token counts only — the length column
-    * [[graft.ops.Chunking.packByLength]] packs on: `(doc_id, source,
-    * n_tokens)`. The same full-text merge replay, then one
-    * space-strip + length — no per-word lambda, no id
-    * materialization, identical counts.
-    */
-  def encodedLengths(docs: DataFrame, rounds: Int = 3): DataFrame = {
-    val (_, tops, _) = mineRounds(docs, rounds)
-    val base = docs.filter(col("text").isNotNull)
-      .select(col("doc_id"), col("source"),
-        TextDedup.normText(col("text")).as("nt"))
-    withMergeCols(base, tops)
-      .select(col("doc_id"), col("source"),
-        length(replace(applyMerges(col("nt"), rounds), lit(" "), lit("")))
-          .cast("long").as("n_tokens"))
-  }
-
-  /** Corpus compression under the learned merges, one row:
-    * `(symbols_before, symbols_after, compression_x)` — symbol counts
-    * (each char and each merged placeholder = one symbol) over the
-    * multi-char vocabulary weighted by word frequency, before vs after
-    * all `rounds` merges, with the ratio as a single IEEE division of
-    * the two exact BIGINTs. The "is this tokenizer worth its vocab
-    * slots" accounting, off the same one corpus pass as [[topMerges]].
-    */
-  def compressionSummary(docs: DataFrame, rounds: Int = 3): DataFrame = {
-    val (vocab, _, curs) = mineRounds(docs, rounds)
-    val before = vocab.agg(
-      sum(col("cnt") * length(col("w"))).as("symbols_before"))
-    val after = curs.last.agg(
-      sum(col("cnt") * length(col("w"))).as("symbols_after"))
-    before.crossJoin(broadcast(after))
-      .select(col("symbols_before"), col("symbols_after"),
-        (col("symbols_before").cast("double") /
-          col("symbols_after").cast("double")).as("compression_x"))
-  }
-
-  /** The merge-depth RETURN CURVE, one row per round: `(merge_rank,
-    * pair_cnt, symbols_before, symbols_after)` — the weighted corpus
-    * symbol count after each successive merge, against the constant
-    * pre-merge total. The "how many merges are worth their vocab
-    * slots" table: a Zipf corpus shows pair_cnt and the per-round
-    * symbol drop decaying geometrically, and the flattening point is
-    * the economic merge depth. NOTE `symbols_after` is a genuine
-    * per-round recount, NOT `symbols_before − Σ pair_cnt`: pair
-    * counts include OVERLAPPING adjacencies ("aaa" counts (a,a)
-    * twice) while the apply merges leftmost-non-overlapping, so the
-    * subtraction identity does not hold.
-    *
-    * Scale shape: every row is a bounded aggregate over the (chain-
-    * capped, checkpointed) vocabulary — `rounds` small vocab scans,
-    * zero corpus passes beyond the shared tokenize.
-    */
-  def mergeCurve(docs: DataFrame, rounds: Int = 3): DataFrame = {
-    val (vocab, tops, curs) = mineRounds(docs, rounds, keepRounds = true)
-    val before = vocab.agg(
-      sum(col("cnt") * length(col("w"))).as("symbols_before"))
-    tops.zip(curs).zipWithIndex.map { case ((t, c), i) =>
-      t.select(lit(i + 1L).as("merge_rank"), col("pair_cnt"))
-        .crossJoin(broadcast(c.agg(
-          sum(col("cnt") * length(col("w"))).as("symbols_after"))))
-    }.reduce(_.unionByName(_))
-      .crossJoin(broadcast(before))
-      .select(col("merge_rank"), col("pair_cnt"),
-        col("symbols_before"), col("symbols_after"))
-      .orderBy("merge_rank")
-  }
 }

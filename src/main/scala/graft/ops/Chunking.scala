@@ -61,7 +61,7 @@ object Chunking {
 
   /** [[packSequences]] over an ALREADY-COMPUTED length column — the
     * entry point for packing on real tokenizer output
-    * ([[BpeMiner.encodedLengths]]) instead of whitespace counts.
+    * ([[BpeMiner.encodedLengthsFlat]]) instead of whitespace counts.
     * Expects `(doc_id, source, n_tokens)`; same prefix-sum
     * decomposition, same deterministic arithmetic assignment.
     */

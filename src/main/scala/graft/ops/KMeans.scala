@@ -47,7 +47,7 @@ object KMeans {
     * row `(cents: array<struct<cell:int, cvec:array<int>,
     * cnorm2:long>>)` for the broadcast-into-row assignment.
     */
-  private def packed(centroids: DataFrame): DataFrame =
+  private[ops] def packed(centroids: DataFrame): DataFrame =
     centroids
       .withColumn("cnorm2", VectorExprs.intDot(col("cvec"), col("cvec")))
       .agg(collect_list(struct(col("cell"), col("cvec"), col("cnorm2")))
@@ -60,35 +60,14 @@ object KMeans {
     * (score DESC, cell ASC via the negated-cell tiebreak).
     */
   def assign(q: DataFrame, centroids: DataFrame): DataFrame =
-    // Native codegen'd kernel (r22, guide §4): the composed HOF form
-    // below is the spec-pinned semantic reference — its per-row
-    // k-struct allocation + interpreted lambda dispatch priced every
-    // assignment pass (3 corpus passes per fitAssign at iters=2).
+    // Native codegen'd kernel (r22, guide §4): a composed HOF form's
+    // per-row k-struct allocation + interpreted lambda dispatch priced
+    // every assignment pass (3 corpus passes per fitAssign at
+    // iters=2). Parity-pinned against that form in KMeansSpec.
     q.crossJoin(broadcast(packed(centroids)))
       .withColumn("label",
         VectorExprs.kmeansLabel(col("qvec"), col("cents")))
       .drop("cents")
-
-  /** Composed-built-in reference for [[assign]] (spec use only). */
-  private[graft] def assignComposed(
-      q: DataFrame, centroids: DataFrame): DataFrame = {
-    val scored = transform(col("cents"), c => struct(
-      VectorExprs.intDot(col("qvec"), c.getField("cvec")).as("qd"),
-      c.getField("cell").as("cell"),
-      c.getField("cnorm2").as("cnorm2")))
-    val best = array_max(transform(scored, t => {
-      val qd = t.getField("qd")
-      val sq = (qd * qd).cast("double")
-      val score = when(t.getField("cnorm2") > 0,
-        when(qd >= 0, sq).otherwise(sq * -1d) /
-          t.getField("cnorm2").cast("double"))
-        .otherwise(lit(Double.NegativeInfinity))
-      struct(score.as("score"), (t.getField("cell") * -1).as("neg_cell"))
-    }))
-    q.crossJoin(broadcast(packed(centroids)))
-      .withColumn("label", best.getField("neg_cell") * -1)
-      .drop("cents")
-  }
 
   /** One Lloyd centroid update from an assigned frame `(label, qvec)`:
     * per-cell, per-dimension `floor(sum/count)` — exact, see object

@@ -37,29 +37,18 @@ object Quantization {
     // native codegen'd kernel (r22, guide §4): one loop per row
     // instead of an interpreted per-element HOF — this projection
     // runs over the corpus in every quantized path (quantize, PQ
-    // encode/seed, probes, SemDedup, k-means)
+    // encode/seed, probes, SemDedup, k-means); parity-pinned against
+    // the transform/clamp form in QuantizationSpec
     graft.functions.VectorExprs.int8Codes(vec, logScale)
 
-  /** Composed-built-in reference for [[int8Codes]] (spec use only). */
-  private[graft] def int8CodesComposed(
-      vec: Column, logScale: Int = 6): Column =
-    transform(vec, v =>
-      greatest(least(floor(v.cast("double") * (1 << logScale)), lit(127L)),
-        lit(-128L)).cast("int"))
-
   /** Exact integer dot product of two code arrays (BIGINT — 64 dims ×
-    * 127² is far inside long range). Native codegen'd kernel; the
-    * composed higher-order form below is the semantic reference
-    * (bit-parity spec-pinned) — HOFs are CodegenFallback, which is
-    * too slow for the all-pairs loops this feeds.
+    * 127² is far inside long range). Native codegen'd kernel: HOFs are
+    * CodegenFallback, too slow for the all-pairs loops this feeds.
+    * Parity-pinned against the zip_with/aggregate form in
+    * QuantizationSpec.
     */
   def intDot(a: Column, b: Column): Column =
     graft.functions.VectorExprs.intDot(a, b)
-
-  /** Composed-built-in reference for [[intDot]] (spec use only). */
-  private[graft] def intDotComposed(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x * y).cast("long")),
-      lit(0L), (acc, v) => acc + v)
 
   /** Corpus-side quantization: (vec_id, qvec, norm2) with the squared
     * L2 norm of the codes (used for cosine-style normalization checks
@@ -181,29 +170,14 @@ object Quantization {
     * column: per subspace the exact integer L2² argmin (ties to the
     * lower j) — the [[pqEncodeCodes]] kernel, parameterized so
     * multi-flavor callers can encode against several codebooks in one
-    * projection. Native codegen'd kernel (r22, guide §4): the
-    * composed HOF form below is the spec-pinned semantic reference —
-    * its nested interpreted lambdas allocated m×kCode structs and a
-    * slice copy per row, pricing the encode stage of every PQ query.
+    * projection. Native codegen'd kernel (r22, guide §4): a composed
+    * HOF form allocates m×kCode structs and a slice copy per row, which
+    * priced the encode stage of every PQ query. Parity-pinned against
+    * that form in QuantizationSpec.
     */
   private def pqCodesCol(
       qv: Column, cb: Column, kCode: Int, m: Int, subDim: Int): Column =
     graft.functions.VectorExprs.pqAssign(qv, cb, kCode, m, subDim)
-
-  /** Composed-built-in reference for [[pqCodesCol]] (spec use only). */
-  private[graft] def pqCodesColComposed(
-      qv: Column, cb: Column, kCode: Int, m: Int, subDim: Int): Column =
-    transform(sequence(lit(0), lit(m - 1)), s => {
-      val sub = slice(qv, s * subDim + 1, lit(subDim))
-      val best = array_max(transform(sequence(lit(0), lit(kCode - 1)), j => {
-        val c = element_at(cb, s * kCode + j + 1)
-        struct(
-          (intDot(sub, c.getField("cvec")) * 2 - c.getField("nb"))
-            .as("score"),
-          (j * -1).as("negj"))
-      }))
-      best.getField("negj") * -1
-    })
 
   /** The PQ reconstruction expression: concatenate the assigned
     * centroids' code vectors from the packed codebook — the shared

@@ -34,11 +34,12 @@ import org.apache.spark.sql.functions._
   * keys — no reachability pair table ever materializes (the oracle's
   * recursive closure is the small-fixture replay, not the plan).
   * Outer rounds scale with the SCC-DAG's peel depth after trimming
-  * (PROVEN on a data-scaled events graph in r18 — see
-  * [[graft.tools.RunGraphScale]] and SCALE.md); a web-shaped graph
-  * (one giant SCC, shallow in/out periphery — the bowtie) needs very
-  * few. Per-round state is node-sized, checkpointed, and superseded
-  * rounds free their blocks ([[CheckpointUtil]] lifecycle).
+  * (PROVEN on a data-scaled events graph in r18 — see SCALE.md,
+  * "Round-18: DATA-SCALED SCC/condensation/bowtie evidence"); a
+  * web-shaped graph (one giant SCC, shallow in/out periphery — the
+  * bowtie) needs very few. Per-round state is node-sized,
+  * checkpointed, and superseded rounds free their blocks
+  * ([[CheckpointUtil]] lifecycle).
   *
   * Honest inner-loop bound (measured r18): the pointer jump doubles
   * label distance only where labels DECREASE along a path; on a

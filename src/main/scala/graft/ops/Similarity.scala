@@ -38,23 +38,12 @@ object Similarity {
   /** Cosine similarity; 0 when either side has zero norm. Backed by the
     * native codegen'd [[graft.functions.CosineSimExpr]] — one fused
     * loop per row instead of three interpreted HOF array passes.
-    * Bit-identical to [[cosineHof]] on well-formed embeddings
-    * (equal-length, no null elements; pinned by spec). Malformed input
-    * null-poisons: ragged lengths or a null element → NULL — stricter
-    * than [[cosineHof]] only on the ragged+zero-norm corner, where the
-    * HOF's denominator-first check manufactures a 0.0.
+    * Malformed input null-poisons: ragged lengths or a null element →
+    * NULL. Parity-pinned against the zip_with/aggregate form in
+    * SimilaritySpec.
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.NativeExpressions.cosineSim(a, b)
-
-  /** The composed higher-order-function formulation of [[cosine]] —
-    * kept as the semantic reference the native expression is verified
-    * against.
-    */
-  def cosineHof(a: Column, b: Column): Column = {
-    val denom = l2Norm(a) * l2Norm(b)
-    when(denom === 0.0d, lit(0.0d)).otherwise(dot(a, b) / denom)
-  }
 
   /** Exact cosine top-k: for each query vector, the k nearest corpus
     * vectors (self-matches excluded). `queries` must have columns
@@ -145,13 +134,11 @@ object Similarity {
     */
   def ivfAssign(corpus: DataFrame, centroids: DataFrame): DataFrame = {
     // In-row argmax over ONE broadcast packed centroid row (r22,
-    // guide §2.4): the window formulation below — kept as the
-    // spec-pinned semantic reference — exploded the corpus k-ways and
-    // SHUFFLED corpus×k rows (embedding arrays included) just to pick
-    // each vector's max; the packed form is a zero-shuffle per-row
-    // projection, same cosine expression, same (c_sim DESC, cell ASC)
-    // winner. Requires unique vec_id (every caller's contract; the
-    // window form would silently dedup a violation instead).
+    // guide §2.4): a row_number window would shuffle corpus×k rows
+    // just to pick each vector's max; this is a zero-shuffle per-row
+    // projection with the same (c_sim DESC, cell ASC) winner, parity-
+    // pinned against the windowed form in SimilaritySpec. Requires
+    // unique vec_id (every caller's contract).
     val packed = centroids
       .agg(collect_list(struct(col("cell"), col("c_vec"))).as("cents"))
     val best = array_max(transform(col("cents"), c => struct(
@@ -159,19 +146,6 @@ object Similarity {
       (c.getField("cell") * -1).as("neg_cell"))))
     corpus.crossJoin(broadcast(packed))
       .withColumn("cell", best.getField("neg_cell") * -1)
-      .select(col("vec_id"), col("embedding"), col("cell"))
-  }
-
-  /** Windowed reference formulation of [[ivfAssign]] (spec use only). */
-  private[graft] def ivfAssignWindowed(
-      corpus: DataFrame, centroids: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("c_sim").desc, col("cell").asc)
-    corpus.crossJoin(broadcast(centroids))
-      .select(col("vec_id"), col("embedding"), col("cell"),
-        cosine(col("embedding"), col("c_vec")).as("c_sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
       .select(col("vec_id"), col("embedding"), col("cell"))
   }
 

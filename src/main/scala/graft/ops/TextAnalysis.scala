@@ -279,17 +279,11 @@ object TextAnalysis {
     "es" -> Seq(" el ", " y ", " los ", " con "),
     "zh" -> Seq(" 的 ", " 和 ", " 是 ", " 在 "))
 
-  /** Composed-built-in marker-hit sum over an already padded+lowered
-    * column — the semantic reference for the native
-    * [[graft.functions.MarkerHitsExpr]] (bit-parity spec-pinned).
-    */
-  private[ops] def markerHitsComposed(
-      padded: Column, markers: Seq[String]): Column =
-    markers.map(m => occurrences(padded, m)).reduce(_ + _)
-
   /** Native one-pass marker-hit sum over RAW text (padding and
     * lowercasing happen inside the node): one lowercase per row
     * replaces one full-string `replace` allocation per marker.
+    * Parity-pinned against the per-marker [[occurrences]] sum in
+    * TextOpsSpec.
     */
   private[ops] def markerHits(text: Column, markers: Seq[String]): Column =
     graft.functions.TextExprs.markerHits(text, markers)

@@ -355,9 +355,9 @@ object TextDedup {
   /** Word `n`-gram shingles of the normalized text as a distinct array.
     * Short texts (< n tokens) fall back to one whole-text shingle so no
     * document silently vanishes from the signature stage. Backed by the
-    * native single-pass [[graft.functions.ShinglesExpr]] (bit-identical
-    * to [[shinglesHof]], spec-pinned); the normalization prefix stays
-    * on the codegen'd built-in path.
+    * native single-pass [[graft.functions.ShinglesExpr]]; the
+    * normalization prefix stays on the codegen'd built-in path.
+    * Parity-pinned against the transform/slice form in TextExprsSpec.
     */
   def shingles(text: Column, n: Int = 3): Column =
     graft.functions.TextExprs.shingles(normText(text), n)
@@ -372,19 +372,6 @@ object TextDedup {
     */
   def shinglesHashed(text: Column, n: Int = 3): Column =
     graft.functions.TextExprs.hashedShingles(normText(text), n)
-
-  /** The composed built-in formulation of [[shingles]] — the semantic
-    * reference for the native node. Every HOF in the chain runs its
-    * lambda interpreted and allocates per row, which is what the native
-    * expression eliminates.
-    */
-  def shinglesHof(text: Column, n: Int = 3): Column = {
-    val tokens = split(normText(text), " ")
-    val grams = transform(
-      sequence(lit(0), greatest(size(tokens) - n, lit(0))),
-      i => concat_ws(" ", slice(tokens, i + 1, lit(n))))
-    array_distinct(grams)
-  }
 
   /** The ACTION half of eval-set decontamination: the training rows
     * that share NO word `n`-gram with any benchmark document — what
@@ -440,39 +427,16 @@ object TextDedup {
         sum(coalesce(col("__hit"), lit(0L))).as("grams_known"))
   }
 
-  /** Per-shingle hash vector: `xxhash64(seed_i, shingle)` for each of
-    * the `numHashes` seeds.
-    */
-  private def hashVector(s: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)), i => xxhash64(i, s))
-
   /** MinHash signature: `numHashes` independent min-hashes, each the
     * minimum of `xxhash64(seed_i, shingle)` over the shingle set.
     * Backed by the native fused loop
-    * ([[graft.functions.MinHashSignatureExpr]]) — bit-identical to
-    * [[minHashSignatureHof]] (spec-pinned), with zero per-shingle
+    * ([[graft.functions.MinHashSignatureExpr]]), with zero per-shingle
     * allocation. Pure per-row expression work — the 100 TB plan is
-    * scan → project.
+    * scan → project. Parity-pinned against the aggregate/zip_with fold
+    * in MinHashExprsSpec.
     */
   def minHashSignature(shingleArr: Column, numHashes: Int = 32): Column =
     graft.functions.MinHashExprs.minHashSignature(shingleArr, numHashes)
-
-  /** The composed higher-order-function formulation of
-    * [[minHashSignature]] — kept as the semantic reference the native
-    * expression is verified against: a SINGLE `aggregate` fold with an
-    * element-wise `least` merge, so the shingle array is evaluated
-    * exactly once per row. (The naive `transform(seeds, i =>
-    * array_min(...))` nesting re-evaluates the shingle expression per
-    * seed — Catalyst does not CSE subtrees across lambda iterations —
-    * which measured ~30× slower. The interpreted fold still allocates
-    * three `numHashes`-wide arrays per shingle, which is what the
-    * native node eliminates.)
-    */
-  def minHashSignatureHof(shingleArr: Column, numHashes: Int = 32): Column =
-    aggregate(
-      shingleArr,
-      array_repeat(lit(Long.MaxValue), numHashes),
-      (acc, s) => zip_with(acc, hashVector(s, numHashes), (a, b) => least(a, b)))
 
   /** Banded signature rows: one output row per (doc, band) with the
     * band's hash — `numHashes/rowsPerBand` bands. Equal band hash ⇒
@@ -485,35 +449,14 @@ object TextDedup {
       shingleSize: Int = 3): DataFrame = {
     require(numHashes % rowsPerBand == 0, "bands must tile the signature")
     // Signature fold + banding fused into ONE native loop (see
-    // [[graft.functions.MinHashBandsExpr]]); the HOF reference
-    // formulation lives in [[minHashBandsHof]] and the equivalence is
-    // spec-pinned.
+    // [[graft.functions.MinHashBandsExpr]]); parity-pinned against the
+    // HOF fold in MinHashExprsSpec.
     val bandHashes = graft.functions.MinHashExprs.minHashBands(
       shingles(col("text"), shingleSize), numHashes, rowsPerBand)
     docs
       .select(col("doc_id"), posexplode(bandHashes))
       .withColumnRenamed("pos", "band_idx")
       .withColumnRenamed("col", "band_hash")
-  }
-
-  /** The composed HOF reference for [[minHashBands]]'s band-hash
-    * column: signature fold + per-band `xxhash64` fused into one
-    * `aggregate` whose `finish` lambda sees the final accumulator
-    * exactly once. The native node must match this bit-for-bit.
-    */
-  def minHashBandHashesHof(
-      text: Column,
-      numHashes: Int = 32,
-      rowsPerBand: Int = 4,
-      shingleSize: Int = 3): Column = {
-    val numBands = numHashes / rowsPerBand
-    aggregate(
-      shingles(text, shingleSize),
-      array_repeat(lit(Long.MaxValue), numHashes),
-      (acc, s) => zip_with(acc, hashVector(s, numHashes), (a, b) => least(a, b)),
-      acc => transform(
-        sequence(lit(0), lit(numBands - 1)),
-        b => xxhash64(slice(acc, b * rowsPerBand + 1, lit(rowsPerBand)))))
   }
 
   /** LSH candidate pairs: self-join of the band rows on
@@ -965,46 +908,15 @@ object TextDedup {
     *
     * Runs on the native [[graft.functions.SimHashExpr]] fold — one
     * codegen'd static call per document, scan-shaped (no explode, no
-    * aggregate, no shuffle). The `isNotNull` filter preserves the
-    * reference formulation's explode semantics exactly: a null text
-    * (null token array) produces no signature row there, and is
-    * dropped here. Bit-for-bit parity with
-    * [[simHashSignaturesExplode]] is spec-pinned on real corpus data.
+    * aggregate, no shuffle). A null text yields no row, as an explode
+    * of its null token array would. Parity-pinned against the explode +
+    * 64-sum form on real corpus data in TextOpsSpec.
     */
   def simHashSignatures(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       graft.functions.SimHashExprs
         .simHash(split(normText(col("text")), " ")).as("simhash"))
       .where(col("simhash").isNotNull)
-
-  /** Reference formulation of [[simHashSignatures]], kept as the
-    * parity baseline: explode → `xxhash64` → 64 conditional SUMs →
-    * sign reassembly. Every stage is whole-stage-codegen'd and the
-    * shuffle carries 64 longs per document (map-side partial
-    * aggregation compresses the token fan-out before it moves) — but
-    * the explode and the per-token 64-branch aggregate update make it
-    * ~2× the cost of the native fold on a signature pass. (A pure
-    * higher-order-function formulation is far worse still — it
-    * re-evaluates the token-hash array inside every per-bit lambda,
-    * measured ~100ms PER ROW, because Catalyst does not CSE across
-    * lambda iterations.)
-    */
-  def simHashSignaturesExplode(docs: DataFrame): DataFrame = {
-    val tokenHashes = docs
-      .select(col("doc_id"),
-        explode(split(normText(col("text")), " ")).as("tok"))
-      .select(col("doc_id"), xxhash64(col("tok")).as("h"))
-    val bitAggs = (0 until 64).map { b =>
-      sum(when(shiftright(col("h"), b).bitwiseAND(lit(1L)) === 1L, lit(1L))
-        .otherwise(lit(-1L))).as(s"b$b")
-    }
-    val summed = tokenHashes.groupBy("doc_id")
-      .agg(bitAggs.head, bitAggs.tail: _*)
-    val sig = (0 until 64).map { b =>
-      when(col(s"b$b") > 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_.bitwiseOR(_))
-    summed.select(col("doc_id"), sig.as("simhash"))
-  }
 
   /** SimHash near-dup candidates: bucket on each of four 16-bit bands of
     * the signature (pigeonhole: hamming distance ≤ 3 ⇒ at least one band

@@ -56,4 +56,32 @@ class SourceHygieneSpec extends AnyFunSuite {
       .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(literal))
     assert(copies.isEmpty, copies.mkString("\n"))
   }
+
+  test("reference formulations live in src/test, not src/main") {
+    // src/main runs one formulation per operator; the composed/HOF
+    // references and the distributed BPE miner sit beside their parity
+    // specs (graft.ops.Reference, graft.ops.BpeReference)
+    val refDef = raw"def \w+(Hof|Composed)\b".r
+    val moved = Seq("cosineHof", "ivfAssignWindowed", "shinglesHof",
+      "minHashSignatureHof", "minHashBandHashesHof",
+      "simHashSignaturesExplode", "hashVector", "int8CodesComposed",
+      "intDotComposed", "pqCodesColComposed", "assignComposed",
+      "markerHitsComposed", "cleanNameScala", "MaxRounds", "ChainCap",
+      "mineRounds", "withMergeCols", "applyMerges", "topMerges",
+      "rawMergesViaMine", "encodeHof", "compressionSummary", "mergeCurve",
+      "BpeCodepointsExpr", "MicroBench")
+    val movedName = moved.mkString(raw"\b(", "|", raw")\b").r
+    // BpeMiner keeps only the driver-side trainer: no replace-chain
+    // encode and no checkpointed round loop
+    val bpeOnly = raw"def (encode|encodedLengths)\b|localCheckpoint|CheckpointUtil".r
+    val offenders = sourceFiles(Paths.get("src/main")).flatMap { p =>
+      val text = new String(Files.readAllBytes(p), "UTF-8")
+      val bpe =
+        if (p.getFileName.toString == "BpeMiner.scala") bpeOnly.findFirstIn(text)
+        else None
+      (refDef.findFirstIn(text) ++ movedName.findFirstIn(text) ++ bpe)
+        .map(m => s"$p: $m")
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }

@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CleanseSpec extends AnyFunSuite {
   import Cleanse._
+  import graft.ops.Reference.cleanNameScala
 
   // ---- clean_name (`tests/test_utils.py:21-43`) ----
 

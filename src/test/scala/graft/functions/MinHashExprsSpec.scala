@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.ops.TextDedup
+import graft.ops.{Reference, TextDedup}
 
 /** The native fused MinHash nodes must be bit-identical to the
   * composed HOF formulation they replace — same xxhash64 folding, same
@@ -29,7 +29,7 @@ class MinHashExprsSpec extends SparkSpec {
     val sh = TextDedup.shingles(col("text"), 3)
     val rows = docs.select(
       TextDedup.minHashSignature(sh, 16).as("native"),
-      TextDedup.minHashSignatureHof(sh, 16).as("hof"))
+      Reference.minHashSignatureHof(sh, 16).as("hof"))
       .collect()
     rows.foreach { r =>
       assert(r.getSeq[Long](0) == r.getSeq[Long](1))
@@ -40,7 +40,7 @@ class MinHashExprsSpec extends SparkSpec {
     val rows = docs.select(
       MinHashExprs.minHashBands(
         TextDedup.shingles(col("text"), 3), 32, 4).as("native"),
-      TextDedup.minHashBandHashesHof(col("text"), 32, 4, 3).as("hof"))
+      Reference.minHashBandHashesHof(col("text"), 32, 4, 3).as("hof"))
       .collect()
     rows.foreach { r =>
       assert(r.getSeq[Long](0) == r.getSeq[Long](1))
@@ -53,9 +53,9 @@ class MinHashExprsSpec extends SparkSpec {
       "cast(array() as array<string>) as empty")
     val r = df.select(
       TextDedup.minHashSignature(col("with_null"), 8).as("n1"),
-      TextDedup.minHashSignatureHof(col("with_null"), 8).as("h1"),
+      Reference.minHashSignatureHof(col("with_null"), 8).as("h1"),
       TextDedup.minHashSignature(col("empty"), 8).as("n2"),
-      TextDedup.minHashSignatureHof(col("empty"), 8).as("h2"))
+      Reference.minHashSignatureHof(col("empty"), 8).as("h2"))
       .head
     assert(r.getSeq[Long](0) == r.getSeq[Long](1))
     assert(r.getSeq[Long](2) == r.getSeq[Long](3))

@@ -46,6 +46,14 @@ class NativeExpressionsSpec extends SparkSpec {
     assert(r.getAs[String]("a") == "Kode")
     assert(r.getAs[String]("c") ==
       "03°19'03.44\" N 097°07'41.73\" E")
+    // a second register leaves one copy of each rule and strategy
+    GraftExtensions.register(spark)
+    val rules = spark.experimental.extraOptimizations
+    Seq(graft.plans.FuseHofDotProduct, graft.plans.RewriteRangeJoin)
+      .foreach(rule => assert(rules.count(_ == rule) == 1, rules.toString))
+    val strategies = spark.experimental.extraStrategies
+    assert(strategies.count(_ == graft.plans.AsofJoinStrategy) == 1,
+      strategies.toString)
   }
 
   test("text-native SQL functions: shingles, minhash, intersect count") {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
-import graft.ops.{Similarity, TextDedup}
+import graft.ops.{Reference, Similarity, TextDedup}
 
 /** Seeded fuzz parity: the native expressions must agree with their
   * composed built-in references on hundreds of adversarial inputs —
@@ -33,11 +33,11 @@ class NativeParitySpec extends SparkSpec {
     for (n <- 1 to 4) {
       val bad = texts.select(
         TextDedup.shingles(col("text"), n).as("native"),
-        TextDedup.shinglesHof(col("text"), n).as("hof"),
+        Reference.shinglesHof(col("text"), n).as("hof"),
         TextDedup.minHashSignature(TextDedup.shingles(col("text"), n), 16)
           .as("mh_native"),
-        TextDedup.minHashSignatureHof(
-          TextDedup.shinglesHof(col("text"), n), 16).as("mh_hof"))
+        Reference.minHashSignatureHof(
+          Reference.shinglesHof(col("text"), n), 16).as("mh_hof"))
         .filter(col("native") =!= col("hof") ||
           col("mh_native") =!= col("mh_hof"))
         .count()
@@ -120,6 +120,26 @@ class NativeParitySpec extends SparkSpec {
       assert(bits(fused) == bits(wantDot), s"fused dot mismatch id=$i a=$a b=$b")
       assert(bits(direct) == bits(wantDot), s"direct dot mismatch id=$i a=$a b=$b")
       assert(bits(cos) == bits(refCos(a, b)), s"cosine mismatch id=$i a=$a b=$b")
+    }
+  }
+
+  test("cleanName column == plain-Scala mirror on 300 random PDF-ish " +
+      "names (digits, CR/LF, tabs, NBSP, runs of spaces)") {
+    val s = spark
+    import s.implicits._
+    val parts = Seq("Aceh", "Barat", "123", "7", "\n", "\r\n", "\t",
+      " ", "  ", "\u00A0", "Kab.", "désa", "\n\n", "1 ", "")
+    val names = Seq.fill(300)(
+      (0 until rnd.nextInt(8)).map(_ => parts(rnd.nextInt(parts.length)))
+        .mkString) :+ null
+    val got = names.toDF("name")
+      .select(col("name"),
+        coalesce(Cleanse.cleanName(col("name")), lit("")).as("native"))
+      .as[(String, String)].collect()
+    assert(got.length == names.length)
+    got.foreach { case (n, native) =>
+      assert(native == graft.ops.Reference.cleanNameScala(n),
+        s"cleanName diverged on '$n'")
     }
   }
 }

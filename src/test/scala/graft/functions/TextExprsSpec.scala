@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.ops.TextDedup
+import graft.ops.{Reference, TextDedup}
 
 /** Native shingling/intersection must match the composed built-in
   * formulations exactly — same tokenization (trailing empties kept),
@@ -31,7 +31,7 @@ class TextExprsSpec extends SparkSpec {
     for (n <- Seq(1, 2, 3, 8)) {
       val rows = docs.select(
         TextDedup.shingles(col("text"), n).as("native"),
-        TextDedup.shinglesHof(col("text"), n).as("hof"))
+        Reference.shinglesHof(col("text"), n).as("hof"))
         .collect()
       rows.foreach { r =>
         assert(r.getSeq[String](0) == r.getSeq[String](1), s"n=$n")

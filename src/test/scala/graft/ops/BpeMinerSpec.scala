@@ -3,13 +3,16 @@ package graft.ops
 import graft.SparkSpec
 
 /** Hand-computed BPE merge-mining pins: weighted pair counts, the
-  * leftmost-non-overlapping apply, placeholder expansion, tie order.
+  * leftmost-non-overlapping apply, placeholder expansion, tie order —
+  * on the distributed reference miner ([[BpeReference]]), which the
+  * driver-side trainer, the flat census operators and the flat encode
+  * are then pinned against.
   */
 class BpeMinerSpec extends SparkSpec {
   import graft.SparkTestSession.spark.implicits._
 
   private def merges(texts: Seq[String], rounds: Int) =
-    BpeMiner.topMerges(texts.zipWithIndex
+    BpeReference.topMerges(texts.zipWithIndex
         .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text"),
       rounds)
       .as[(Long, String, String, Long)].collect().toSeq
@@ -49,7 +52,7 @@ class BpeMinerSpec extends SparkSpec {
     // vocab abab×2 abc×1 → before = 2·4 + 1·3 = 11; after three
     // merges (ab, abab, abc) every word is ONE symbol → after = 3
     val df = Seq((1L, "abab abab"), (2L, "abc")).toDF("doc_id", "text")
-    val got = BpeMiner.compressionSummary(df, rounds = 3)
+    val got = BpeReference.compressionSummary(df, rounds = 3)
       .as[(Long, Long, Double)].collect().head
     assert(got == ((11L, 3L, 11.0 / 3.0)), got.toString)
   }
@@ -68,7 +71,7 @@ class BpeMinerSpec extends SparkSpec {
     // doc 1 "abc":       → U+E000 c → U+E002 → ids [57346]
     val df = Seq((0L, "web", "abab abab"), (1L, "web", "abc"))
       .toDF("doc_id", "source", "text")
-    val got = BpeMiner.encode(df, rounds = 3).orderBy("doc_id")
+    val got = BpeReference.encode(df, rounds = 3).orderBy("doc_id")
       .as[(Long, String, Long, String, String)].collect().toSeq
     def md5s(s: String) = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -79,7 +82,7 @@ class BpeMinerSpec extends SparkSpec {
     // pair rides 0xE000 + (rank - 1)
     val plain = Seq((0L, "web", "qv xx"))
       .toDF("doc_id", "source", "text")
-    val p = BpeMiner.encode(plain, rounds = 1).orderBy("doc_id")
+    val p = BpeReference.encode(plain, rounds = 1).orderBy("doc_id")
       .as[(Long, String, Long, String, String)].collect().head
     // r1 pair counts: qv=1, xx=1 → (q,v) wins on byte order →
     // "qv"→U+E000, "xx" stays x(120) x(120)
@@ -101,9 +104,9 @@ class BpeMinerSpec extends SparkSpec {
     // merges, and an empty round annihilates both paths identically
     // (a trivial parity pass, not a useful one)
     for (rounds <- Seq(1, 3, 4)) {
-      val native = BpeMiner.encode(df, rounds).orderBy("doc_id")
+      val native = BpeReference.encode(df, rounds).orderBy("doc_id")
         .collect().toSeq
-      val hof = BpeMiner.encodeHof(df, rounds).orderBy("doc_id")
+      val hof = BpeReference.encodeHof(df, rounds).orderBy("doc_id")
         .collect().toSeq
       assert(native == hof, s"rounds=$rounds: $native vs $hof")
     }
@@ -131,7 +134,7 @@ class BpeMinerSpec extends SparkSpec {
     // but the leftmost-non-overlapping apply gives P1P1 — symbols
     // 4 → 2 (drop 2, not 3). r2 merges (aa,aa) count 1 → 1 symbol.
     val df = Seq((0L, "aaaa")).toDF("doc_id", "text")
-    val got = BpeMiner.mergeCurve(df, rounds = 2)
+    val got = BpeReference.mergeCurve(df, rounds = 2)
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(got == Seq(
       (1L, 3L, 4L, 2L),
@@ -139,9 +142,9 @@ class BpeMinerSpec extends SparkSpec {
     // and the multi-word corpus agrees with compressionSummary's
     // endpoint at the same depth
     val df2 = Seq((1L, "abab abab"), (2L, "abc")).toDF("doc_id", "text")
-    val curve = BpeMiner.mergeCurve(df2, rounds = 3)
+    val curve = BpeReference.mergeCurve(df2, rounds = 3)
       .as[(Long, Long, Long, Long)].collect()
-    val summary = BpeMiner.compressionSummary(df2, rounds = 3)
+    val summary = BpeReference.compressionSummary(df2, rounds = 3)
       .as[(Long, Long, Double)].collect().head
     assert(curve.last._4 == summary._2 &&
       curve.head._3 == summary._1, s"${curve.toSeq} vs $summary")
@@ -151,14 +154,14 @@ class BpeMinerSpec extends SparkSpec {
     val df = Seq((0L, "web", "abab abab"), (1L, "web", "abc"),
       (2L, "news", "abab abc abab"))
       .toDF("doc_id", "source", "text")
-    val viaEncode = BpeMiner.encode(df, rounds = 3)
+    val viaEncode = BpeReference.encode(df, rounds = 3)
       .select("doc_id", "n_tokens").as[(Long, Long)].collect().toMap
-    val viaLengths = BpeMiner.encodedLengths(df, rounds = 3)
+    val viaLengths = BpeReference.encodedLengths(df, rounds = 3)
       .select("doc_id", "n_tokens").as[(Long, Long)].collect().toMap
     assert(viaEncode == viaLengths, s"$viaEncode vs $viaLengths")
     // pack on the encoded lengths: per-source exclusive prefix // target
     val packed = Chunking.packByLength(
-      BpeMiner.encodedLengths(df, rounds = 3), targetTokens = 2)
+      BpeReference.encodedLengths(df, rounds = 3), targetTokens = 2)
       .select("doc_id", "pack_id").as[(Long, Long)].collect().toMap
     // web: doc0 len 2 prefix 0 → pack 0; doc1 prefix 2 → pack 1
     // news: doc2 prefix 0 → pack 0
@@ -170,7 +173,7 @@ class BpeMinerSpec extends SparkSpec {
     val df = Seq((0L, "web", "abab abab"), (1L, "web", "abc"),
       (2L, "news", "xy abc zq zq"), (3L, "web", ""))
       .toDF("doc_id", "source", "text")
-    val inline = BpeMiner.encode(df, rounds = 3).orderBy("doc_id")
+    val inline = BpeReference.encode(df, rounds = 3).orderBy("doc_id")
       .as[(Long, String, Long, String, String)].collect().toSeq
 
     val raw = BpeMiner.rawMerges(df, rounds = 3)
@@ -221,7 +224,7 @@ class BpeMinerSpec extends SparkSpec {
       "real sf0.001 corpus at depth 16 (counts, symbols, tie-breaks)") {
     val local = BpeMiner.trainMergesLocal(realDocs, rounds = 16)
       .zipWithIndex.map { case ((l, r, c), i) => (i + 1L, l, r, c) }.toSeq
-    val mined = BpeMiner.rawMergesViaMine(realDocs, rounds = 16)
+    val mined = BpeReference.rawMergesViaMine(realDocs, rounds = 16)
       .orderBy("merge_rank")
       .as[(Long, String, String, Long)].collect().toSeq
     assert(local == mined, s"local=$local\nmined=$mined")
@@ -233,19 +236,19 @@ class BpeMinerSpec extends SparkSpec {
     // topMergesFlat: placeholder expansion replayed driver-side
     val tmFlat = BpeMiner.topMergesFlat(realDocs, rounds = 16)
       .as[(Long, String, String, Long)].collect().toSeq
-    val tm = BpeMiner.topMerges(realDocs, rounds = 16)
+    val tm = BpeReference.topMerges(realDocs, rounds = 16)
       .as[(Long, String, String, Long)].collect().toSeq
     assert(tmFlat == tm, s"flat=$tmFlat\nmined=$tm")
     // mergeCurveFlat: per-round weighted symbol recount in memory
     val mcFlat = BpeMiner.mergeCurveFlat(realDocs, rounds = 16)
       .as[(Long, Long, Long, Long)].collect().toSeq
-    val mc = BpeMiner.mergeCurve(realDocs, rounds = 16)
+    val mc = BpeReference.mergeCurve(realDocs, rounds = 16)
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(mcFlat == mc, s"flat=$mcFlat\nmined=$mc")
     // compressionSummaryFlat: same BIGINTs, same IEEE division
     val csFlat = BpeMiner.compressionSummaryFlat(realDocs, rounds = 16)
       .as[(Long, Long, Double)].collect().head
-    val cs = BpeMiner.compressionSummary(realDocs, rounds = 16)
+    val cs = BpeReference.compressionSummary(realDocs, rounds = 16)
       .as[(Long, Long, Double)].collect().head
     assert(csFlat == cs, s"flat=$csFlat mined=$cs")
   }
@@ -265,13 +268,15 @@ class BpeMinerSpec extends SparkSpec {
       maxVocab = vocabSize).toSeq
     assert(atCap == unbounded)
     // cap one below: the hard gate throws with remediation guidance
-    // instead of silently truncating (or OOMing at scale)
+    // instead of silently truncating (or OOMing at scale); the advice
+    // names only the trainer's own knobs
     val e = intercept[IllegalArgumentException] {
       BpeMiner.trainMergesLocal(realDocs, rounds = 8,
         maxVocab = vocabSize - 1)
     }
     assert(e.getMessage.contains("raise minCount") &&
-      e.getMessage.contains("rawMergesViaMine"), e.getMessage)
+      e.getMessage.contains("or maxVocab") &&
+      !e.getMessage.contains("rawMergesViaMine"), e.getMessage)
     // minCount=2 drops exactly the count-1 tail: the planted one-per-
     // doc pseudo-words (the deep-gate corpus shape the r18 ADVICE
     // flagged as breaking the Zipf justification) vanish, leaving
@@ -298,12 +303,12 @@ class BpeMinerSpec extends SparkSpec {
 
   test("encodeFlat == chain encode and encodedLengthsFlat == " +
       "encodedLengths at rounds=16 on the real corpus") {
-    val chain = BpeMiner.encode(realDocs, rounds = 16).orderBy("doc_id")
+    val chain = BpeReference.encode(realDocs, rounds = 16).orderBy("doc_id")
       .as[(Long, String, Long, String, String)].collect().toSeq
     val flat = BpeMiner.encodeFlat(realDocs, rounds = 16).orderBy("doc_id")
       .as[(Long, String, Long, String, String)].collect().toSeq
     assert(flat == chain)
-    val chainLen = BpeMiner.encodedLengths(realDocs, rounds = 16)
+    val chainLen = BpeReference.encodedLengths(realDocs, rounds = 16)
       .as[(Long, String, Long)].collect().toSet
     val flatLen = BpeMiner.encodedLengthsFlat(realDocs, rounds = 16)
       .as[(Long, String, Long)].collect().toSet

@@ -68,7 +68,7 @@ class KMeansSpec extends SparkSpec {
         array((0 until 64).map(_ => lit(0)): _*).as("cvec")))
     val native = KMeans.assign(corpus, cents)
       .select("vec_id", "label").as[(Long, Int)].collect().sortBy(_._1)
-    val composed = KMeans.assignComposed(corpus, cents)
+    val composed = Reference.assignComposed(corpus, cents)
       .select("vec_id", "label").as[(Long, Int)].collect().sortBy(_._1)
     assert(native.sameElements(composed))
     assert(native.map(_._2).distinct.length > 1, "labels vary")

@@ -38,10 +38,27 @@ class QuantizationSpec extends SparkSpec {
       .select(Quantization.int8Codes(col("embedding")).as("q"))
     val bad = corpus
       .select(Quantization.intDot(col("q"), col("q")).as("native"),
-        Quantization.intDotComposed(col("q"), col("q")).as("composed"))
+        Reference.intDotComposed(col("q"), col("q")).as("composed"))
       .filter(col("native") =!= col("composed"))
       .count()
     assert(bad == 0L)
+  }
+
+  test("native int8Codes == composed reference on real embeddings " +
+      "and the clamp edges") {
+    // edges: ±1.99f·64 = ±127.36 (floor lands inside / on the clamp),
+    // ±3·64 = ±192 (clamped both ways), 0
+    val edges = Seq(Seq(1.99f, -1.99f, 3.0f, -3.0f, 0.0f))
+      .toDF("embedding")
+    val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select(col("embedding"))
+      .unionByName(edges)
+    val both = vecs.select(
+      Quantization.int8Codes(col("embedding")).as("native"),
+      Reference.int8CodesComposed(col("embedding")).as("composed"))
+    val bad = both.filter(col("native") =!= col("composed")).count()
+    assert(bad == 0L)
+    assert(both.count() > 1L)
   }
 
   test("intDot rejects length mismatch and null elements loudly") {
@@ -209,7 +226,7 @@ class QuantizationSpec extends SparkSpec {
       .select(col("vec_id"),
         graft.functions.VectorExprs
           .pqAssign(col("qv"), col("cb"), 16, 8, 8).as("native"),
-        Quantization.pqCodesColComposed(
+        Reference.pqCodesColComposed(
           col("qv"), col("cb"), 16, 8, 8).as("composed"))
     val bad = both.filter(col("native") =!= col("composed")).count()
     assert(bad == 0L, s"$bad rows diverge between native and composed")

@@ -1,0 +1,188 @@
+package graft.ops
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+
+import graft.functions.{Cleanse, VectorExprs}
+
+/** The composed reference formulations the native operators are
+  * parity-pinned against. Each one is built from Spark built-ins
+  * (higher-order functions, windows, explode + aggregate) and states
+  * the operator's semantics plainly; the production operator in
+  * `src/main` must agree with it row for row. None of these runs in
+  * the shipped code.
+  */
+object Reference {
+
+  // ---- Similarity ----------------------------------------------------
+
+  /** [[Similarity.cosine]] as zip_with/aggregate HOFs. The native node
+    * null-poisons ragged or null-element input; this form manufactures
+    * a 0.0 for the ragged+zero-norm corner (denominator checked first).
+    */
+  def cosineHof(a: Column, b: Column): Column = {
+    val denom = Similarity.l2Norm(a) * Similarity.l2Norm(b)
+    when(denom === 0.0d, lit(0.0d)).otherwise(Similarity.dot(a, b) / denom)
+  }
+
+  /** [[Similarity.ivfAssign]] as a corpus×k explode and a row_number
+    * window per vector: same cosine, same (c_sim DESC, cell ASC) winner.
+    */
+  def ivfAssignWindowed(corpus: DataFrame, centroids: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("vec_id"))
+      .orderBy(col("c_sim").desc, col("cell").asc)
+    corpus.crossJoin(broadcast(centroids))
+      .select(col("vec_id"), col("embedding"), col("cell"),
+        Similarity.cosine(col("embedding"), col("c_vec")).as("c_sim"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(col("vec_id"), col("embedding"), col("cell"))
+  }
+
+  // ---- TextDedup -----------------------------------------------------
+
+  /** [[TextDedup.shingles]] as a transform over token slices. */
+  def shinglesHof(text: Column, n: Int = 3): Column = {
+    val tokens = split(TextDedup.normText(text), " ")
+    val grams = transform(
+      sequence(lit(0), greatest(size(tokens) - n, lit(0))),
+      i => concat_ws(" ", slice(tokens, i + 1, lit(n))))
+    array_distinct(grams)
+  }
+
+  /** Per-shingle hash vector: `xxhash64(seed_i, shingle)` for each of
+    * the `numHashes` seeds.
+    */
+  private def hashVector(s: Column, numHashes: Int): Column =
+    transform(sequence(lit(0), lit(numHashes - 1)), i => xxhash64(i, s))
+
+  /** [[TextDedup.minHashSignature]] as ONE `aggregate` fold with an
+    * element-wise `least` merge, so the shingle array is evaluated once
+    * per row (Catalyst does not CSE across lambda iterations).
+    */
+  def minHashSignatureHof(shingleArr: Column, numHashes: Int = 32): Column =
+    aggregate(
+      shingleArr,
+      array_repeat(lit(Long.MaxValue), numHashes),
+      (acc, s) => zip_with(acc, hashVector(s, numHashes), (a, b) => least(a, b)))
+
+  /** [[TextDedup.minHashBands]]'s band-hash column: the signature fold
+    * plus per-band `xxhash64` in the `finish` lambda.
+    */
+  def minHashBandHashesHof(
+      text: Column,
+      numHashes: Int = 32,
+      rowsPerBand: Int = 4,
+      shingleSize: Int = 3): Column = {
+    val numBands = numHashes / rowsPerBand
+    aggregate(
+      TextDedup.shingles(text, shingleSize),
+      array_repeat(lit(Long.MaxValue), numHashes),
+      (acc, s) => zip_with(acc, hashVector(s, numHashes), (a, b) => least(a, b)),
+      acc => transform(
+        sequence(lit(0), lit(numBands - 1)),
+        b => xxhash64(slice(acc, b * rowsPerBand + 1, lit(rowsPerBand)))))
+  }
+
+  /** [[TextDedup.simHashSignatures]] as explode → `xxhash64` → 64
+    * conditional SUMs → sign reassembly. A null text explodes to no
+    * row, which is why the native form filters nulls out.
+    */
+  def simHashSignaturesExplode(docs: DataFrame): DataFrame = {
+    val tokenHashes = docs
+      .select(col("doc_id"),
+        explode(split(TextDedup.normText(col("text")), " ")).as("tok"))
+      .select(col("doc_id"), xxhash64(col("tok")).as("h"))
+    val bitAggs = (0 until 64).map { b =>
+      sum(when(shiftright(col("h"), b).bitwiseAND(lit(1L)) === 1L, lit(1L))
+        .otherwise(lit(-1L))).as(s"b$b")
+    }
+    val summed = tokenHashes.groupBy("doc_id")
+      .agg(bitAggs.head, bitAggs.tail: _*)
+    val sig = (0 until 64).map { b =>
+      when(col(s"b$b") > 0, lit(1L << b)).otherwise(lit(0L))
+    }.reduce(_.bitwiseOR(_))
+    summed.select(col("doc_id"), sig.as("simhash"))
+  }
+
+  // ---- Quantization --------------------------------------------------
+
+  /** [[Quantization.int8Codes]]: `clamp(floor(v * 2^logScale), -128, 127)`
+    * per element.
+    */
+  def int8CodesComposed(vec: Column, logScale: Int = 6): Column =
+    transform(vec, v =>
+      greatest(least(floor(v.cast("double") * (1 << logScale)), lit(127L)),
+        lit(-128L)).cast("int"))
+
+  /** [[Quantization.intDot]] as zip_with/aggregate. */
+  def intDotComposed(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => (x * y).cast("long")),
+      lit(0L), (acc, v) => acc + v)
+
+  /** The PQ assignment kernel (`VectorExprs.pqAssign`): per subspace
+    * the exact integer L2² argmin over the packed codebook, ties to the
+    * lower j.
+    */
+  def pqCodesColComposed(
+      qv: Column, cb: Column, kCode: Int, m: Int, subDim: Int): Column =
+    transform(sequence(lit(0), lit(m - 1)), s => {
+      val sub = slice(qv, s * subDim + 1, lit(subDim))
+      val best = array_max(transform(sequence(lit(0), lit(kCode - 1)), j => {
+        val c = element_at(cb, s * kCode + j + 1)
+        struct(
+          (Quantization.intDot(sub, c.getField("cvec")) * 2 - c.getField("nb"))
+            .as("score"),
+          (j * -1).as("negj"))
+      }))
+      best.getField("negj") * -1
+    })
+
+  // ---- KMeans --------------------------------------------------------
+
+  /** [[KMeans.assign]] as HOFs over the packed centroid row: the
+    * signed-square cosine score, -Infinity for an all-zero centroid,
+    * ties to the lower cell.
+    */
+  def assignComposed(q: DataFrame, centroids: DataFrame): DataFrame = {
+    val scored = transform(col("cents"), c => struct(
+      VectorExprs.intDot(col("qvec"), c.getField("cvec")).as("qd"),
+      c.getField("cell").as("cell"),
+      c.getField("cnorm2").as("cnorm2")))
+    val best = array_max(transform(scored, t => {
+      val qd = t.getField("qd")
+      val sq = (qd * qd).cast("double")
+      val score = when(t.getField("cnorm2") > 0,
+        when(qd >= 0, sq).otherwise(sq * -1d) /
+          t.getField("cnorm2").cast("double"))
+        .otherwise(lit(Double.NegativeInfinity))
+      struct(score.as("score"), (t.getField("cell") * -1).as("neg_cell"))
+    }))
+    q.crossJoin(broadcast(KMeans.packed(centroids)))
+      .withColumn("label", best.getField("neg_cell") * -1)
+      .drop("cents")
+  }
+
+  // ---- TextAnalysis --------------------------------------------------
+
+  /** The native marker-hit sum (`TextExprs.markerHits`) over an
+    * already padded and lowercased column.
+    */
+  def markerHitsComposed(padded: Column, markers: Seq[String]): Column =
+    markers.map(m => TextAnalysis.occurrences(padded, m)).reduce(_ + _)
+
+  // ---- Cleanse -------------------------------------------------------
+
+  /** [[Cleanse.cleanName]] in plain Scala, with "" for null. */
+  def cleanNameScala(name: String): String = {
+    if (name == null) return ""
+    var t = Cleanse.pyStrip(name).replace("\r", "").replace("\t", " ")
+    t = t.replaceAll("(?U)^\\d+\n", "")
+    t = t.replaceAll("(?U)\n\\d+$", "")
+    t = t.replaceAll("\n+", " ")
+    t = t.replaceAll("(?U)^\\d+\\s+", "")
+    t = t.replaceAll("(?U)\\s{2,}", " ")
+    Cleanse.pyStrip(t)
+  }
+}

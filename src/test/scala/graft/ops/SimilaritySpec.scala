@@ -37,7 +37,7 @@ class SimilaritySpec extends SparkSpec {
     }.toDF("id", "a", "b")
     val diff = pairs.select(
       Similarity.cosine(col("a"), col("b")).as("native"),
-      Similarity.cosineHof(col("a"), col("b")).as("hof"))
+      Reference.cosineHof(col("a"), col("b")).as("hof"))
       .filter(col("native") =!= col("hof"))
     assert(diff.count() == 0, "native and HOF cosine must agree exactly")
   }
@@ -122,7 +122,7 @@ class SimilaritySpec extends SparkSpec {
         col("embedding").as("c_vec"))
     val packedForm = Similarity.ivfAssign(corpus, centroids)
       .select("vec_id", "cell").as[(Long, Int)].collect().sortBy(_._1)
-    val windowed = Similarity.ivfAssignWindowed(corpus, centroids)
+    val windowed = Reference.ivfAssignWindowed(corpus, centroids)
       .select("vec_id", "cell").as[(Long, Int)].collect().sortBy(_._1)
     assert(packedForm.sameElements(windowed))
     assert(packedForm.map(_._2).distinct.length > 1, "cells vary")

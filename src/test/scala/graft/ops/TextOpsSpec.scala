@@ -385,7 +385,7 @@ class TextOpsSpec extends SparkSpec {
       .select("doc_id", "text")
     for (d <- Seq(edge, corpus)) {
       val native = TextDedup.simHashSignatures(d)
-      val ref = TextDedup.simHashSignaturesExplode(d)
+      val ref = Reference.simHashSignaturesExplode(d)
       assert(native.exceptAll(ref).isEmpty && ref.exceptAll(native).isEmpty,
         "native simhash diverged from the explode reference")
     }
@@ -519,7 +519,7 @@ class TextOpsSpec extends SparkSpec {
       val padded = concat(lit(" "), lower(col("text")), lit(" "))
       val rows = df.select(
         TextAnalysis.markerHits(col("text"), ms).as("native"),
-        TextAnalysis.markerHitsComposed(padded, ms).as("composed"),
+        Reference.markerHitsComposed(padded, ms).as("composed"),
         col("text"))
         .as[(Long, Long, String)].collect()
       rows.foreach { case (n, c, t) =>

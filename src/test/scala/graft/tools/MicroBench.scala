@@ -2,12 +2,12 @@ package graft.tools
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ops.{Similarity, TextDedup}
+import graft.ops.{Reference, Similarity, TextDedup}
 
 /** Microbenchmarks: each native codegen'd expression vs the composed
-  * built-in/higher-order-function formulation it replaces, on cached
+  * built-in/higher-order-function reference it replaces, on cached
   * in-memory frames so only expression evaluation is timed. Run with
-  * `sbt "runMain graft.tools.MicroBench [rows]"`.
+  * `sbt "Test/runMain graft.tools.MicroBench [rows]"`.
   */
 object MicroBench {
   def main(args: Array[String]): Unit = {
@@ -37,7 +37,7 @@ object MicroBench {
       .cache()
     vecs.count() // materialize outside the timed region
     val hofCos = time(vecs, "cosine hof",
-      Similarity.cosineHof(col("a"), col("b")), rows)
+      Reference.cosineHof(col("a"), col("b")), rows)
     val natCos = time(vecs, "cosine native",
       Similarity.cosine(col("a"), col("b")), rows)
     println(f"cosine speedup ${hofCos / natCos}%.1fx\n")
@@ -50,7 +50,7 @@ object MicroBench {
       .cache()
     qvecs.count()
     val hofDot = time(qvecs, "intdot hof",
-      graft.ops.Quantization.intDotComposed(col("qa"), col("qb")), rows)
+      Reference.intDotComposed(col("qa"), col("qb")), rows)
     val natDot = time(qvecs, "intdot native",
       graft.ops.Quantization.intDot(col("qa"), col("qb")), rows)
     println(f"intdot speedup ${hofDot / natDot}%.1fx\n")
@@ -69,13 +69,13 @@ object MicroBench {
       .cache()
     docs.count()
     val hofSh = time(docs, "shingles hof",
-      size(TextDedup.shinglesHof(col("text"), 3)), textRows)
+      size(Reference.shinglesHof(col("text"), 3)), textRows)
     val natSh = time(docs, "shingles native",
       size(TextDedup.shingles(col("text"), 3)), textRows)
     println(f"shingles speedup ${hofSh / natSh}%.1fx\n")
 
     val hofMh = time(docs, "minhash hof",
-      element_at(TextDedup.minHashBandHashesHof(col("text"), 32, 4, 3), 1),
+      element_at(Reference.minHashBandHashesHof(col("text"), 32, 4, 3), 1),
       textRows)
     val natMh = time(docs, "minhash native",
       element_at(graft.functions.MinHashExprs.minHashBands(
