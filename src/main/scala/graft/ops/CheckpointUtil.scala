@@ -2,9 +2,12 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Lifecycle management for `localCheckpoint()` frames inside iterative
-  * operators (components, k-core, PageRank, LPA, k-means, PQ training).
+  * operators (components, SCC, HyperBall, k-core, PageRank, LPA,
+  * k-means, PQ training), and the one round loop the
+  * convergence-certified ones share ([[rounds]]).
   *
   * `localCheckpoint` pins its blocks in storage memory for the LIFETIME
   * of the session — nothing ever unpersists them implicitly. A
@@ -37,9 +40,11 @@ object CheckpointUtil {
     * executor cannot take a round frame with it, because
     * locally-checkpointed blocks have NO recompute path (their
     * lineage is truncated at their own blocks). At 100 TB on a real
-    * cluster, flip this on for the iterative operators
-    * (KMeans/PageRank/Hits/Components) and accept the HDFS round
-    * trip per round; see SCALE.md "Checkpoint durability".
+    * cluster, flip this on and accept the HDFS round trip per round;
+    * every checkpoint of the iterative family (Components, Scc,
+    * HyperBall, KCore, LabelProp, KMeans, PageRank, Hits) goes
+    * through [[ckpt]], so the flag reaches them all; see SCALE.md
+    * "Checkpoint durability".
     */
   val ReliableConf = "spark.graft.reliableCheckpoints"
 
@@ -71,4 +76,66 @@ object CheckpointUtil {
         case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
       }
     }
+
+  /** The round loop of the iterative graph operators. Round `r` runs
+    * `step(prev)` (`prev` is null in round 1, so the step starts from
+    * its own seed), lazily [[ckpt]]s it, resets its plan statistics
+    * (`ColumnBridge.freshStatsFrame`: a checkpoint copies its origin's
+    * size estimate, and a self-join squares it every round), and runs
+    * ONE action, `witness(round)` — a one-row scalar aggregate (a
+    * count or an exact sum) — which both materializes the round and
+    * returns the loop's convergence witness. The round two back is
+    * then freed; the previous one stays for the diagnostics.
+    *
+    * With `untilRepeat`, the loop stops at the first round whose
+    * witness equals the previous one — an exact fixpoint certificate
+    * for a monotone step (labels only fall, layers and reach sets
+    * only grow). If `maxRounds` pass without that, it throws
+    * `IllegalStateException(exhausted(last, prev, "w1 -> w2"))`:
+    * `exhausted` (required with `untilRepeat`) gets the last two
+    * rounds, both still pinned (`prev` is null when `maxRounds` is 1),
+    * so it can count the rows the final round changed, and the last
+    * two witnesses; every round is freed before the throw. Without
+    * `untilRepeat` it runs exactly `maxRounds` rounds.
+    *
+    * Returns the final round, which the caller owns (and frees once
+    * done with it), and every round's witness in order. Every frame
+    * the loop made is freed if a step, an action or the diagnostics
+    * throw. `step` must build on `prev` or on the caller's own frames,
+    * never on another call's rounds: the loop frees only what it made,
+    * so concurrent loops are safe.
+    */
+  def rounds(
+      maxRounds: Int,
+      step: DataFrame => DataFrame,
+      witness: DataFrame => DataFrame,
+      untilRepeat: Boolean = true,
+      exhausted: (DataFrame, DataFrame, String) => String = null)
+      : (DataFrame, Seq[Any]) = {
+    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Any]
+    var prev, last, next: DataFrame = null
+    var repeated = false
+    try {
+      while (!repeated && seen.size < maxRounds) {
+        next = ColumnBridge.freshStatsFrame(ckpt(step(last), eager = false))
+        val w = witness(next).head().get(0)
+        repeated = untilRepeat && seen.lastOption.contains(w)
+        free(prev)
+        prev = last
+        last = next
+        next = null
+        seen += w
+      }
+      if (untilRepeat && !repeated)
+        throw new IllegalStateException(
+          exhausted(last, prev, seen.takeRight(2).mkString(" -> ")))
+    } catch {
+      case e: Throwable =>
+        free(prev, last, next)
+        throw e
+    }
+    free(prev)
+    (last, seen.toSeq)
+  }
 }

@@ -32,12 +32,11 @@ import org.apache.spark.sql.functions._
   *    label-sum per round (an exact convergence witness: labels are
   *    per-node non-increasing, so sum equality ⇒ fixpoint) — no label
   *    data ever leaves the executors.
-  *  - `localCheckpoint` truncates lineage each round; without it the
-  *    plan doubles per iteration and Catalyst analysis itself becomes
-  *    the bottleneck. On a multi-node cluster prefer
-  *    `spark.sparkContext.setCheckpointDir` + `checkpoint()` (fault-
-  *    tolerant); local mode has no reliable storage, so localCheckpoint
-  *    is the correct variant here.
+  *  - Each round is one [[CheckpointUtil.rounds]] round: checkpointed
+  *    (lineage cut; the reliable flavor under
+  *    `spark.graft.reliableCheckpoints`), stats reset, one sum action.
+  *    Batching several rounds per action measured no faster (SCALE.md,
+  *    round 17 and the r20 bowtie adjudication).
   *  - Input edges should come from an LSH/banding candidate stage, so
   *    |E| is near-linear in |V| — never feed an all-pairs product.
   */
@@ -118,97 +117,74 @@ object Components {
     val symSelf = CheckpointUtil.ckpt(symCk
       .union(symCk.select(col("src"), col("src").as("dst")))
       .repartition(col("src")), eager = false)
-    // Convergence = label-sum fixpoint, and it is EXACT, not a hash
-    // heuristic: both steps are per-node non-increasing (closed-
-    // neighborhood min includes self; the jump replaces lbl with
-    // lbl(lbl) ≤ lbl since every label satisfies lbl(m) ≤ m), so the
-    // decimal sum strictly decreases until the fixpoint and sum
-    // equality implies every node is unchanged. This folds convergence
-    // detection into a near-free aggregate over the round's already-
-    // checkpointed output instead of carrying a `prev` column through
-    // an extra join.
-    var prevSum: Option[java.math.BigDecimal] = None
-    var lastSums: List[java.math.BigDecimal] = Nil
-    var converged = false
-    var iter = 0
-    var labels: DataFrame = null
-    var prevLabels: DataFrame = null
-    while (!converged && iter < maxIter) {
-      // Round 0 exploits that the seed labeling is the identity
-      // (lbl(src) = src): the "join labels on src" step collapses to a
-      // direct aggregate over the edge frame, saving both the join and
-      // the materialization of an explicit active-node seed. Every
-      // edge-incident node appears as a dst thanks to the self-loops,
-      // so the aggregate's key set IS the active set.
-      val stepped =
-        if (labels == null)
-          symSelf.groupBy(col("dst").as("node"))
-            .agg(min(col("src")).as("lbl"))
-        else
-          symSelf
-            .join(labels.withColumnRenamed("node", "src"), "src")
-            .groupBy(col("dst").as("node"))
-            .agg(min(col("lbl")).as("lbl"))
-      // pointer jump, lbl ← lbl(lbl): self-join with explicit subquery
-      // aliases (both sides derive from the same plan); the aggregate's
-      // exchange is shared between the two sides via ReusedExchange.
-      // Lazy checkpoint + the convergence aggregate as the materializing
-      // action: ONE Spark job per round (the sum computes the round's
-      // plan and persists `jumped`'s partitions as it goes), where an
-      // eager checkpoint followed by a separate `agg` was two.
-      val jumped = stepped.as("a")
-        .join(stepped.as("b"), col("a.lbl") === col("b.node"), "left")
-        .select(col("a.node").as("node"),
-          coalesce(col("b.lbl"), col("a.lbl")).as("lbl"))
-        .transform(df => CheckpointUtil.ckpt(df, eager = false))
-      val sumRow = jumped.agg(sum(col("lbl").cast("decimal(38,0)"))).head()
-      val lblSum = Option(sumRow.getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-      converged = prevSum.exists(_.compareTo(lblSum) == 0)
-      prevSum = Some(lblSum)
-      lastSums = (lblSum :: lastSums).take(2)
-      // `jumped` is fully materialized (the sum action computed every
-      // partition of the lazy checkpoint), so the round that now falls
-      // out of the (labels, prevLabels) retention window — kept two
-      // deep only for the exhaustion diagnostics below — can release
-      // its pinned blocks; without this the loop leaks one dead block
-      // set per round for the session's lifetime (r15: 6-8× bench
-      // inflation by query ~130).
-      val evicted = prevLabels
-      prevLabels = labels
-      labels = jumped
-      CheckpointUtil.free(evicted)
-      iter += 1
-    }
-    // Exhaustion diagnostics (VERDICT r9): pointer jumping covers
-    // diameter ~2^maxIter, so hitting the cap on a real graph is a
-    // pathology worth describing, not a bare abort. The extra counting
-    // action runs ONLY on the failure path; the previous round's seed
-    // is the identity labeling, so round 0 compares against `node`.
-    if (!converged) {
-      val changed =
-        if (prevLabels == null)
-          labels.filter(col("node") =!= col("lbl")).count()
-        else
-          labels.join(prevLabels.withColumnRenamed("lbl", "prev"), "node")
-            .filter(col("lbl") =!= col("prev")).count()
-      CheckpointUtil.free(prevLabels, labels, symSelf, symCk)
-      throw new IllegalStateException(
-        s"components did not converge in $maxIter round(s): $changed " +
-          "edge-incident node(s) still changed label in the final round; " +
-          s"last two label sums: ${lastSums.reverse.mkString(" -> ")}. " +
-          "Pointer jumping covers diameter ~2^maxIter, so exhaustion " +
-          "suggests a pathological graph or a non-deterministic edge " +
-          "source; raise maxIter only after ruling those out.")
-    }
     // The returned labeling is a self-contained checkpoint — consumers
     // compute from ITS blocks, never from the loop scaffolding — so the
-    // edge checkpoints and the diagnostics-only previous round release
-    // here. Only the final frame stays pinned (callers done with it can
+    // edge checkpoints release here, on success and on exhaustion.
+    // Only the final frame stays pinned (callers done with it can
     // CheckpointUtil.free the result).
-    CheckpointUtil.free(prevLabels, symSelf, symCk)
-    labels.withColumnRenamed("lbl", "component")
+    try closedMinLabels(symSelf, maxIter, "components")
+      .withColumnRenamed("lbl", "component")
+    finally CheckpointUtil.free(symSelf, symCk)
   }
+
+  /** `(node, lbl)` for every node of `closed(src, dst)`, `lbl` = the
+    * minimum `src` that reaches the node along `closed`'s edges — the
+    * round body [[edgeComponents]] and [[Scc]]'s peel share. `closed`
+    * must hold a self-loop per node (every node is then a `dst`, the
+    * aggregate's key set, and the min is over the CLOSED neighborhood)
+    * and is the caller's: it stays pinned. Each round:
+    *   1. closed-neighborhood min — every node takes the min label over
+    *      itself and its in-neighbors in ONE join + partial-aggregated
+    *      `min` (round 1 exploits that the seed labeling is the
+    *      identity, so the join collapses to a direct aggregate);
+    *   2. pointer jump, `lbl ← lbl(lbl)`: a label reaches the node, and
+    *      the label's label reaches the label, so the substitution is
+    *      sound and halves every label tree's depth where labels fall
+    *      along a path.
+    * The jump's self-join reads the step's aggregate twice; both sides
+    * share its exchange via ReusedExchange, so it needs no checkpoint
+    * of its own (checkpointing the aggregate, Scc's former shape, ran
+    * neardup_components in 36 jobs instead of 30 at sf0.01). Adaptive
+    * execution may re-plan the jump as a broadcast join: one more job
+    * per round, yet faster at sf0.1 than a sort-merge join forced by
+    * hint (semdedup_keep_e2e 2.6 s vs 3.0–3.9 s).
+    * Convergence = label-sum fixpoint, and it is EXACT: both steps are
+    * per-node non-increasing, so the decimal sum strictly falls until
+    * the fixpoint and sum equality means every node is unchanged
+    * ([[CheckpointUtil.rounds]]).
+    */
+  private[ops] def closedMinLabels(
+      closed: DataFrame, maxRounds: Int, what: String): DataFrame =
+    CheckpointUtil.rounds(maxRounds,
+      step = { labels =>
+        val stepped =
+          if (labels == null)
+            closed.groupBy(col("dst").as("node"))
+              .agg(min(col("src")).as("lbl"))
+          else
+            closed
+              .join(labels.withColumnRenamed("node", "src"), "src")
+              .groupBy(col("dst").as("node"))
+              .agg(min(col("lbl")).as("lbl"))
+        stepped.as("a")
+          .join(stepped.as("b"), col("a.lbl") === col("b.node"), "left")
+          .select(col("a.node").as("node"),
+            coalesce(col("b.lbl"), col("a.lbl")).as("lbl"))
+      },
+      witness = _.agg(sum(col("lbl").cast("decimal(38,0)"))),
+      // round 1's predecessor is the identity labeling
+      exhausted = (last, prev, sums) =>
+        s"$what did not converge in $maxRounds round(s): " +
+          last.except(Option(prev)
+            .getOrElse(last.select(col("node"), col("node").as("lbl"))))
+            .count() +
+          " edge-incident node(s) still changed label in the final " +
+          s"round; last two label sums: $sums. Pointer jumping covers " +
+          "diameter ~2^rounds where labels fall along a path (a cycle " +
+          "against its id order needs O(diameter) rounds), so " +
+          "exhaustion suggests a pathological graph or a " +
+          "non-deterministic edge source; raise the round bound only " +
+          "after ruling those out.")._1
 
   /** Cluster summary: one row per non-singleton component with its size
     * and canonical (minimum) member.

@@ -29,38 +29,36 @@ import org.apache.spark.sql.functions._
 object HyperBall {
 
   /** Exact pairs-within-t: one row `(t, n_pairs)` per t in [0, maxT].
-    * Pair frame checkpointed per hop; superseded rounds free
-    * immediately ([[CheckpointUtil]] discipline).
+    * One [[CheckpointUtil.rounds]] round per radius, whose count is
+    * the round's one action.
     */
   def exactNeighborhood(edges: DataFrame, maxT: Int): DataFrame = {
     require(maxT >= 0 && maxT <= 8, s"maxT must be in [0,8], got $maxT")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .localCheckpoint()
-    val nodes = e.select(col("src").as("v"))
-      .union(e.select(col("dst").as("v"))).distinct()
-    var pairs = nodes.select(col("v").as("p_src"), col("v").as("p_dst"))
-      .localCheckpoint()
-    // the per-radius census is one SCALAR per round (the convergence-
-    // witness convention) — taken eagerly, so freeing the superseded
-    // pair table never strands a lazy aggregate's lineage
-    val counts = Seq.newBuilder[(Int, Long)]
-    counts += ((0, pairs.count()))
-    for (t <- 1 to maxT) {
-      // ball_{t+1}(v) adds ball_t(u) for every out-edge v -> u
-      val next = pairs
-        .union(e.join(pairs, e("dst") === pairs("p_src"))
-          .select(e("src").as("p_src"), col("p_dst")))
-        .distinct()
-        .localCheckpoint()
+    val e = CheckpointUtil.ckpt(
+      edges.select(col("src"), col("dst")).distinct(), eager = false)
+    try {
+      // round t + 1 is radius t: the identity pairs, then one hop per
+      // round — ball_{t+1}(v) adds ball_t(u) for every out-edge v -> u
+      val (pairs, counts) = CheckpointUtil.rounds(maxT + 1,
+        step = {
+          case null =>
+            e.select(col("src").as("v"))
+              .union(e.select(col("dst").as("v"))).distinct()
+              .select(col("v").as("p_src"), col("v").as("p_dst"))
+          case pairs =>
+            pairs
+              .union(e.join(pairs, e("dst") === pairs("p_src"))
+                .select(e("src").as("p_src"), col("p_dst")))
+              .distinct()
+        },
+        witness = _.agg(count(lit(1))),
+        untilRepeat = false)
       CheckpointUtil.free(pairs)
-      pairs = next
-      counts += ((t, pairs.count()))
-    }
-    CheckpointUtil.free(pairs)
-    CheckpointUtil.free(e)
-    counts.result().toDF("t", "n_pairs")
+      counts.zipWithIndex.map { case (n, t) => (t, n.asInstanceOf[Long]) }
+        .toDF("t", "n_pairs")
+    } finally CheckpointUtil.free(e)
   }
 
   /** HLL-register estimate of the same census: one row `(t, est)` per
@@ -85,26 +83,15 @@ object HyperBall {
 
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
+    val e = CheckpointUtil.ckpt(
+      edges.select(col("src"), col("dst")).distinct(), eager = false)
     // register seed: node v hits bucket h & (m-1) with rho = leading
     // zeros of the remaining 64-p bits, + 1 — all integer expressions
     val h = xxhash64(col("node"))
     val w = shiftrightunsigned(h, p)
-    var regs = nodes.select(
-      col("node"),
-      (h.bitwiseAND(lit((m - 1).toLong))).cast("int").as("j"),
-      when(w === 0, lit(64 - p + 1))
-        .otherwise(lit(64 - p) - length(bin(w)) + 1)
-        .cast("int").as("rho"))
-      .localCheckpoint()
-
-    // the per-radius estimate is one SCALAR per round, taken eagerly
-    // before the superseded register table frees (the exact path's
-    // reasoning; floats live only here, feeding the audit flag)
-    def estNow(): Double = regs.groupBy(col("node")).agg(
+    // the per-radius estimate is the round's witness (floats live only
+    // here, feeding the audit flag)
+    def est(regs: DataFrame): DataFrame = regs.groupBy(col("node")).agg(
         count(lit(1)).as("nz"),
         sum(pow(lit(2.0), -col("rho"))).as("zsum"))
       .select(
@@ -117,24 +104,32 @@ object HyperBall {
             (col("zsum") + (lit(m) - col("nz")).cast("double")))
           .as("e"))
       .agg(sum(col("e")))
-      .head().getDouble(0)
 
-    val ests = Seq.newBuilder[(Int, Double)]
-    ests += ((0, estNow()))
-    for (t <- 1 to maxT) {
-      val next = regs
-        .unionByName(e.join(regs, e("dst") === regs("node"))
-          .select(e("src").as("node"), col("j"), col("rho")))
-        .groupBy(col("node"), col("j"))
-        .agg(max(col("rho")).as("rho"))
-        .localCheckpoint()
+    try {
+      val (regs, ests) = CheckpointUtil.rounds(maxT + 1,
+        step = {
+          case null =>
+            e.select(col("src").as("node"))
+              .union(e.select(col("dst").as("node"))).distinct()
+              .select(
+                col("node"),
+                (h.bitwiseAND(lit((m - 1).toLong))).cast("int").as("j"),
+                when(w === 0, lit(64 - p + 1))
+                  .otherwise(lit(64 - p) - length(bin(w)) + 1)
+                  .cast("int").as("rho"))
+          case regs =>
+            regs
+              .unionByName(e.join(regs, e("dst") === regs("node"))
+                .select(e("src").as("node"), col("j"), col("rho")))
+              .groupBy(col("node"), col("j"))
+              .agg(max(col("rho")).as("rho"))
+        },
+        witness = est,
+        untilRepeat = false)
       CheckpointUtil.free(regs)
-      regs = next
-      ests += ((t, estNow()))
-    }
-    CheckpointUtil.free(regs)
-    CheckpointUtil.free(e)
-    ests.result().toDF("t", "est")
+      ests.zipWithIndex.map { case (x, t) => (t, x.asInstanceOf[Double]) }
+        .toDF("t", "est")
+    } finally CheckpointUtil.free(e)
   }
 
   /** The audited census: `(t, n_pairs, est_ok)` — exact pairs per

@@ -34,12 +34,11 @@ object KCore {
     def degrees(e: DataFrame): DataFrame =
       e.select(explode(array(col("a"), col("b"))).as("node"))
         .groupBy("node").agg(count(lit(1)).as("deg"))
-    var e = edges.select(
+    var e = CheckpointUtil.ckpt(edges.select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     for (_ <- 1 to rounds) {
       val keep = degrees(e).filter(col("deg") >= k).select("node")
       // freshStatsFrame on the carried edge frame (r19, the Scc
@@ -52,10 +51,9 @@ object KCore {
       // driver in BigInteger.multiply. Resetting stats per round pins
       // the estimate flat; AQE runtime stats govern the actual plan.
       val next = org.apache.spark.sql.graftbridge.ColumnBridge
-        .freshStatsFrame(e
+        .freshStatsFrame(CheckpointUtil.ckpt(e
           .join(keep.withColumnRenamed("node", "a"), "a")
-          .join(keep.withColumnRenamed("node", "b"), "b")
-          .localCheckpoint())
+          .join(keep.withColumnRenamed("node", "b"), "b")))
       // the eager checkpoint above has materialized `next` from the
       // previous round's blocks — release them now instead of leaking
       // one dead block set per peel for the session's lifetime; only

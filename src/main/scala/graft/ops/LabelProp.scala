@@ -34,9 +34,8 @@ object LabelProp {
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-    val adj = und.select(col("a").as("n"), col("b").as("m"))
-      .unionByName(und.select(col("b").as("n"), col("a").as("m")))
-      .localCheckpoint()
+    val adj = CheckpointUtil.ckpt(und.select(col("a").as("n"), col("b").as("m"))
+      .unionByName(und.select(col("b").as("n"), col("a").as("m"))))
     var labels = adj.select(col("n")).distinct()
       .withColumn("lbl", col("n"))
     for (round <- 1 to rounds) {
@@ -46,12 +45,11 @@ object LabelProp {
         .agg(count(lit(1)).as("c"))
       // argmax by (count desc, label asc): labels are node ids >= 0,
       // so max over (c, -lbl) picks the largest count, smallest label
-      val next = counts
+      val next = CheckpointUtil.ckpt(counts
         .groupBy(col("n"))
         .agg(max(struct(col("c").as("c"), (-col("lbl")).as("neg")))
           .as("s"))
-        .select(col("n"), (-col("s.neg")).as("lbl"))
-        .localCheckpoint()
+        .select(col("n"), (-col("s.neg")).as("lbl")))
       // `next` is materialized (eager checkpoint): the superseded
       // round's blocks release now (round 1's seed labeling derives
       // from `adj`, not a checkpoint of its own — nothing to free yet)

@@ -38,7 +38,7 @@ object ColumnBridge {
     * numbers stay mathematically harmless but physically explosive:
     * by iteration ~20 the driver spends its time in
     * `BigInteger.multiply` on million-digit integers inside
-    * `SizeInBytesOnlyStatsPlanVisitor` (measured: the minLabels jump
+    * `SizeInBytesOnlyStatsPlanVisitor` (measured: Scc's peel-label jump
     * went 0.3 s → 60+ s per iteration on a 26-node cycle). Dropping
     * originStats caps the estimate at the session default; AQE's
     * runtime statistics make the static estimate irrelevant for

@@ -21,20 +21,54 @@ class CheckpointLifecycleSpec extends SparkSpec {
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   /** Run `op`, materialize its result, and assert the operator left
-    * exactly `finalFrames` new pinned block sets, all of which free()
-    * back to baseline.
+    * exactly `finalFrames` new pinned block sets (any number when
+    * negative), all of which free() back to baseline.
     */
   private def assertLifecycle(finalFrames: Int)(op: => DataFrame): Unit = {
     val before = pinned
     val result = op
     result.count()
     val leaked = pinned -- before
-    assert(leaked.size == finalFrames,
+    assert(finalFrames < 0 || leaked.size == finalFrames,
       s"expected $finalFrames pinned final frame(s), found ${leaked.size}")
     CheckpointUtil.free(result)
     assert((pinned -- before).isEmpty,
       "freeing the result must return storage to baseline")
   }
+
+  /** Assert `op` throws an IllegalStateException naming `what` and
+    * leaves no pinned blocks behind. */
+  private def assertFailureFrees(what: String)(op: => DataFrame): Unit = {
+    val before = pinned
+    val e = intercept[IllegalStateException](op.collect())
+    assert(e.getMessage.contains(what), e.getMessage)
+    assert((pinned -- before).isEmpty,
+      s"the failure path must not leak pinned blocks: ${e.getMessage}")
+  }
+
+  /** Jobs that `body` submits. */
+  private def jobs(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    n.get
+  }
+
+  private def chain(n: Long) =
+    (1L until n).map(i => (i, i + 1)).toDF("src", "dst")
+
+  // the SccSpec bowtie fixture: core {1,2}, in 3, out 4, an island
+  // cycle {5,6} and a tendril 3 -> 7 — trim AND peel both run
+  private def cyclic =
+    Seq((1L, 2L), (2L, 1L), (3L, 1L), (2L, 4L), (5L, 6L), (6L, 5L),
+      (3L, 7L)).toDF("src", "dst")
 
   // a two-component graph with a 5-chain (forces several jump rounds)
   private def edges =
@@ -92,13 +126,18 @@ class CheckpointLifecycleSpec extends SparkSpec {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-reliable-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
-    def run(): (Seq[(Long, Long)], Seq[(Long, Long)], Seq[(Long, Long)]) = (
-      Components.edgeComponents(edges, maxIter = 10)
-        .as[(Long, Long)].collect().toSeq.sorted,
-      PageRank.pagerankFixed(edges, iters = 3)
-        .select("node", "r").as[(Long, Long)].collect().toSeq.sorted,
-      Hits.hitsFixed(edges, rounds = 2)
-        .select("node", "hub").as[(Long, Long)].collect().toSeq.sorted)
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    def run(): Seq[Seq[String]] = Seq(
+      rows(Components.edgeComponents(edges, maxIter = 10)),
+      rows(PageRank.pagerankFixed(edges, iters = 3).select("node", "r")),
+      rows(Hits.hitsFixed(edges, rounds = 2).select("node", "hub")),
+      rows(Scc.stronglyConnected(cyclic)),
+      rows(Scc.condensation(cyclic)),
+      rows(Scc.bowtie(cyclic)),
+      rows(KCore.kcorePeel(cyclic, k = 1, rounds = 2)),
+      rows(LabelProp.propagate(cyclic, rounds = 2)),
+      rows(HyperBall.auditedNeighborhood(cyclic, maxT = 2)))
     val local = run()
     spark.conf.set(CheckpointUtil.ReliableConf, "true")
     try {
@@ -106,6 +145,77 @@ class CheckpointLifecycleSpec extends SparkSpec {
       assert(reliable == local,
         s"reliable=$reliable\nlocal=$local")
     } finally spark.conf.unset(CheckpointUtil.ReliableConf)
+  }
+
+  test("the reliable-checkpoint flag reaches Scc: its checkpoint " +
+      "directory gains files during a call") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-reliable-scc")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    def files(): Long = {
+      val walk = java.nio.file.Files.walk(dir)
+      try walk.filter(java.nio.file.Files.isRegularFile(_)).count()
+      finally walk.close()
+    }
+    val before = files()
+    spark.conf.set(CheckpointUtil.ReliableConf, "true")
+    try Scc.stronglyConnected(cyclic).collect()
+    finally spark.conf.unset(CheckpointUtil.ReliableConf)
+    assert(files() > before, s"no checkpoint file written under $dir")
+  }
+
+  test("stronglyConnected, condensation and bowtie free back to " +
+      "baseline after success") {
+    assertLifecycle(finalFrames = -1)(Scc.stronglyConnected(cyclic))
+    assertLifecycle(finalFrames = 1)(Scc.condensation(cyclic))
+    assertLifecycle(finalFrames = 1)(Scc.bowtie(cyclic))
+  }
+
+  test("Scc exhaustion frees every checkpoint before throwing") {
+    // a 20-cycle's peel labels need many rounds; one cannot certify
+    val ring = (1L to 20L).map(i => (i, i % 20 + 1)).toDF("src", "dst")
+    assertFailureFrees("did not converge in 1 round(s)") {
+      Scc.stronglyConnected(ring, maxInner = 1)
+    }
+    // condensation 6 -> {1,2,3} -> {4,5} -> 7 is three layers deep
+    val layered = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
+      (5L, 4L), (6L, 1L), (5L, 7L)).toDF("src", "dst")
+    assertFailureFrees("condensation layers did not converge") {
+      Scc.condensation(layered, maxDepth = 1)
+    }
+    assertFailureFrees("bowtie reach set still growing") {
+      Scc.bowtie(cyclic, maxDepth = 1)
+    }
+  }
+
+  test("edgeComponents' plan statistics do not grow with rounds") {
+    // a 4-node chain needs 3 rounds (2 to the fixpoint, 1 to certify
+    // it) and a 32-node chain 6; every round resets its estimate, so
+    // both results carry the same one
+    def size(n: Long): BigInt = {
+      val labels = Components.edgeComponents(chain(n))
+      try labels.queryExecution.optimizedPlan.stats.sizeInBytes
+      finally CheckpointUtil.free(labels)
+    }
+    assert(size(4) == size(32))
+  }
+
+  test("job budget: one action per round plus set-up") {
+    // Under adaptive execution a round costs its checkpoint's shuffle
+    // map stage(s), which run as the checkpoint is taken, plus its
+    // witness action (a partial-aggregate map job and the result
+    // job). exactNeighborhood(maxT = 3) is 4 rounds: 1 set-up job
+    // (the edge distinct) + 1 + 3 × 2 checkpoint jobs + 4 × 2 witness
+    // jobs = 16, where an eager checkpoint plus a count per radius
+    // ran 21. edgeComponents on a 4-chain is 3 rounds and 16 jobs.
+    val hb = jobs(HyperBall.exactNeighborhood(chain(6), maxT = 3).collect())
+    val cc = jobs {
+      val labels = Components.edgeComponents(chain(4))
+      labels.collect()
+      CheckpointUtil.free(labels)
+    }
+    assert(hb <= 16 && cc <= 16,
+      s"exactNeighborhood $hb jobs, edgeComponents $cc jobs")
   }
 
   test("non-convergence diagnostics free every checkpoint before throwing") {

@@ -130,15 +130,15 @@ class SccSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val q = 4
     // every 4th event: same real stream, segment diameters ~5 so the
-    // spec stays inside the suite budget (minLabels is O(diameter)
-    // per peel — see the r18 scaladoc note); the FULL-data evidence
-    // lives in SCALE.md (round-18 data-scaled SCC evidence)
+    // spec stays inside the suite budget (the peel labels are
+    // O(diameter) per peel — see the r18 scaladoc note); the FULL-data
+    // evidence lives in SCALE.md (round-18 data-scaled SCC evidence)
     val events = graft.SparkTestSession.spark.read
       .parquet("/root/testdata/sf0.001/events.parquet")
       .filter(org.apache.spark.sql.functions.col("event_id") % 4 === 0)
     val edges = EventOps.segmentCycleGraph(events, q)
-    // explicit maxInner with headroom (ADVICE r18): minLabels
-    // converges in O(segment diameter), and the %4 thinning keeps
+    // explicit maxInner with headroom (ADVICE r18): the peel labels
+    // converge in O(segment diameter), and the %4 thinning keeps
     // diameters ~5 TODAY — but the bound must not depend on that
     // fixture accident; 256 is what the SCALE.md round-18 runs used
     // and survives a regenerated, heavier events table
