@@ -32,8 +32,8 @@ object AreaPipeline {
 
   /** Per-table metadata DF: (table_id, table_width, is_area), one row
     * per table — the area columns of [[Dispatch.tableMeta]], whose
-    * route tags `is_area`. `table_width` is the header row's width; the
-    * input must be rectangular (see [[Dispatch.tableMeta]]).
+    * route tags `is_area`. `table_width` is the widest row's cell
+    * count, so a ragged table extracts as its padded grid.
     */
   def tableMeta(cells: DataFrame): DataFrame =
     Dispatch.tableMeta(cells).select(col("table_id"), col("table_width"),

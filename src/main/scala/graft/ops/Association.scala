@@ -35,10 +35,9 @@ object Association {
     // the self-join's two sides share an exchange, so the distinct
     // over the fact table would otherwise run three times. One lazy
     // barrier on the (orderkey, item) long-pair frame.
-    val items = lineitem
+    val items = CheckpointUtil.ckpt(lineitem
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("item"))
-      .distinct()
-      .localCheckpoint(false)
+      .distinct(), eager = false)
     val itemCnt = items.groupBy(col("item"))
       .agg(count(lit(1)).as("c"))
     val nOrders = items.select(col("ok")).distinct()

@@ -1,12 +1,12 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.schema.RawTableRow
 
 /** Helpers for the cell-table ingest boundary (FIXTURES.md §1):
   * building `RawTableRow` DataFrames from in-memory grids (tests,
-  * fixtures) and padding ragged tables.
+  * fixtures). Ragged tables need no padding: the extractors size each
+  * table by its widest row ([[Dispatch.tableMeta]]).
   */
 object CellTables {
 
@@ -44,27 +44,4 @@ object CellTables {
     if (dfs.isEmpty) ofGrid(spark, Nil)
     else dfs.reduce(_ unionByName _)
   }
-
-  /** Enforce the rectangular-table invariant at an ingest boundary:
-    * pad every row's `cells` with "" to its table's max width (exactly
-    * what pandas does when camelot builds the frame — NaN-padding that
-    * the reference's `.astype(str).strip()` reads as empty).
-    *
-    * The downstream pipelines ([[AreaPipeline.tableMeta]] keys the
-    * variant projection off the header row's width) REQUIRE rectangular
-    * input; parquet written by this engine and [[ofGrid]] fixtures
-    * already guarantee it. Apply this only to sources that don't (e.g.
-    * hand-written CellTsv files, which round-trip ragged widths
-    * losslessly by design) — it costs one extra pass over the cell
-    * stream (a tiny per-table max broadcast-joined back), which is
-    * exactly the cost the top-rows-only metadata aggregate avoids on
-    * trusted inputs.
-    */
-  def rectangularize(cells: DataFrame): DataFrame =
-    cells.join(broadcast(cells.groupBy("table_id")
-        .agg(max(size(col("cells"))).as("table_width"))), "table_id")
-      .withColumn("cells",
-        concat(col("cells"), array_repeat(lit(""),
-          greatest(col("table_width") - size(col("cells")), lit(0)))))
-      .drop("table_width")
 }

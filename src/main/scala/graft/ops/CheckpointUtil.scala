@@ -4,10 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
-/** Lifecycle management for `localCheckpoint()` frames inside iterative
-  * operators (components, SCC, HyperBall, k-core, PageRank, LPA,
-  * k-means, PQ training), and the one round loop the
-  * convergence-certified ones share ([[rounds]]).
+/** The one checkpoint primitive of `src/main` ([[ckpt]]), lifecycle
+  * management for checkpointed frames inside iterative operators
+  * (components, SCC, HyperBall, k-core, PageRank, LPA, k-means, PQ
+  * training), and the one round loop the convergence-certified ones
+  * share ([[rounds]]).
   *
   * `localCheckpoint` pins its blocks in storage memory for the LIFETIME
   * of the session — nothing ever unpersists them implicitly. A
@@ -41,9 +42,9 @@ object CheckpointUtil {
     * locally-checkpointed blocks have NO recompute path (their
     * lineage is truncated at their own blocks). At 100 TB on a real
     * cluster, flip this on and accept the HDFS round trip per round;
-    * every checkpoint of the iterative family (Components, Scc,
-    * HyperBall, KCore, LabelProp, KMeans, PageRank, Hits) goes
-    * through [[ckpt]], so the flag reaches them all; see SCALE.md
+    * every checkpoint in `src/main` — the iterative family and the
+    * one-shot barriers of other operators and registry queries alike —
+    * goes through [[ckpt]], so the flag reaches them all; see SCALE.md
     * "Checkpoint durability".
     */
   val ReliableConf = "spark.graft.reliableCheckpoints"

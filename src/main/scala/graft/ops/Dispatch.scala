@@ -6,11 +6,12 @@ import org.apache.spark.sql.functions._
 /** P3 first-match dispatch (`cli.py:158-160,183-191`): each detected
   * table goes to the first extractor whose `matches()` fires, area
   * before island. The rule lives in ONE place, [[tableMeta]]: one
-  * per-table aggregate over the top four rows tags every table with its
-  * `route` and carries the metadata both extractors need. Each family
-  * broadcast-joins that meta, filtered to its own route, onto the cell
-  * stream — the join that feeds the extractor is also the dispatch, so
-  * each family sees only its own tables and pays one meta aggregate.
+  * per-table aggregate tags every table with its `route` (read from
+  * its top four rows) and carries the metadata both extractors need.
+  * Each family broadcast-joins that meta, filtered to its own route,
+  * onto the cell stream — the join that feeds the extractor is also
+  * the dispatch, so each family sees only its own tables and pays one
+  * meta aggregate.
   */
 object Dispatch {
 
@@ -42,25 +43,22 @@ object Dispatch {
   /** Per-table metadata, one row per table (small enough to
     * broadcast): (table_id, route, table_width, header_idx, code_idx,
     * name_idx, coord_idx, status_idx, info_idx). `route` is "area",
-    * "island" or null — area wins ties. `table_width` is the header
-    * row's width, which keys the area name-column variant; the island
-    * indexes are -1 when absent.
+    * "island" or null — area wins ties. `table_width` is the widest
+    * row's cell count: the column count of the frame the reference
+    * builds (`extractors.py:134-140`), so ragged rows pick the same
+    * area name-column variant as their padded grid. The island indexes
+    * are -1 when absent.
     *
-    * Aggregates only `row_idx < 4` — the filter is pushed to the scan.
-    * INPUT MUST BE RECTANGULAR (the camelot/pandas invariant — every
-    * ingest path in this engine pads: CellTables.ofGrid, the engine's
-    * own parquet), so the header row alone carries the table width.
-    * Sources that cannot guarantee it (hand-written CellTsv files) go
-    * through [[CellTables.rectangularize]] first; a data row wider than
-    * its header would otherwise shift the width-keyed variant
-    * projection.
+    * One aggregate over every row: the width needs them all, while
+    * only the top four rows reach the route rule (`collect_list` skips
+    * the nulls of the rest).
     */
   def tableMeta(cells: DataFrame): DataFrame =
-    cells.filter(col("row_idx") < 4)
-      .groupBy("table_id")
+    cells.groupBy("table_id")
       .agg(
-        max(when(col("row_idx") === 0, size(col("cells")))).as("table_width"),
-        collect_list(struct(col("row_idx"), col("cells"))).as("top"))
+        max(size(col("cells"))).as("table_width"),
+        collect_list(when(col("row_idx") < 4,
+          struct(col("row_idx"), col("cells")))).as("top"))
       .withColumn("meta", metaUdf(col("top")))
       .select(col("table_id"), col("meta._1").as("route"),
         col("table_width"),
@@ -92,9 +90,9 @@ object Dispatch {
     * repartition exchange that AQE's ReuseExchange serves to every
     * branch, so the upstream runs exactly once.
     *
-    * Keep plain [[extractAll]] for pushdown-capable sources (the
-    * CellTsv DSv2 path): there the meta pass prunes to `row_idx < 4`
-    * AT THE SCAN — far cheaper than forcing the full stream through an
+    * Keep plain [[extractAll]] for scanned sources (parquet, the
+    * CellTsv DSv2 path): there each branch re-reads only the columns it
+    * needs — far cheaper than forcing the full stream through an
     * exchange. (The multi-sink [[ExtractJob]] needs neither: its one
     * write reads the rendered lines from [[graft.io.CsvSink]]'s cache.)
     *

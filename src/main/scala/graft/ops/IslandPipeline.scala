@@ -10,9 +10,9 @@ import graft.functions.{Cleanse, Coordinates}
   *
   * Scale design mirrors [[AreaPipeline]]: header location + column
   * inference happen in the shared per-table aggregate
-  * [[Dispatch.tableMeta]] over only the top 4 rows of each table (a
-  * pushed-down `row_idx < 4` filter), broadcast back onto the stream;
-  * the row shaping is a single codegen'd projection.
+  * [[Dispatch.tableMeta]], from the top 4 rows of each table,
+  * broadcast back onto the stream; the row shaping is a single
+  * codegen'd projection.
   */
 object IslandPipeline {
 

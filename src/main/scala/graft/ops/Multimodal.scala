@@ -326,34 +326,15 @@ object Multimodal {
 
   @transient private lazy val sharedImageSession = new ImageDecoderSession
 
-  /** Real 16-dim pooled feature: 4x4 grid of mean luminance (0..255,
-    * integer floor per cell — deterministic across JVMs) when the
-    * payload decodes as an image; byte-histogram fallback otherwise,
+  /** Real 16-dim pooled feature: the 4x4
+    * [[ImageDecoderSession.grayThumb]] (mean luminance 0..255, integer
+    * floor per cell — deterministic across JVMs) when the payload
+    * decodes as an image; byte-histogram fallback otherwise,
     * so mixed corpora never fail mid-scan.
     */
   val imageFeatures = udf { bytes: Array[Byte] =>
-    val img = sharedImageSession.decode(bytes)
-    if (img == null) sharedSession.decode(bytes)
-    else {
-      val (w, h) = (img.getWidth, img.getHeight)
-      val sums = new Array[Long](16)
-      val counts = new Array[Long](16)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val p = img.getRGB(x, y)
-          val luma = (((p >> 16) & 0xFF) * 299 +
-            ((p >> 8) & 0xFF) * 587 + (p & 0xFF) * 114) / 1000
-          val cell = math.min(y * 4 / h, 3) * 4 + math.min(x * 4 / w, 3)
-          sums(cell) += luma; counts(cell) += 1
-          x += 1
-        }
-        y += 1
-      }
-      Array.tabulate(16)(i =>
-        if (counts(i) == 0) 0f else (sums(i) / counts(i)).toFloat)
-    }
+    Option(sharedImageSession.grayThumb(bytes, 4))
+      .getOrElse(sharedSession.decode(bytes))
   }
 
   /** The 8×8 pooled-pixel feature as a column: 64 integer-valued

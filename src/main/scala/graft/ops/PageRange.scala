@@ -1,9 +1,12 @@
 package graft.ops
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.lit
+
 /** S3/S4/F9 driver utilities (reference `utils.py:82-110`):
-  * page-range grammar, chunking, duration formatting. Pure Scala —
-  * these parameterize the scan (partition pruning analog), they are
-  * not per-row operators.
+  * page-range grammar, chunking, duration formatting. These
+  * parameterize the scan (partition pruning analog), they are not
+  * per-row operators.
   */
 object PageRange {
 
@@ -11,19 +14,35 @@ object PageRange {
   def validate(pageRange: String): Boolean =
     pageRange.matches("^(\\d+(-\\d+)?)(,(\\d+(-\\d+)?))*$")
 
+  /** The grammar's parts as inclusive `(start, end)` bounds, in
+    * order; a single page `n` is `(n, n)`. Throws
+    * NumberFormatException on a malformed part.
+    */
+  def ranges(pageRange: String): Seq[(Int, Int)] =
+    pageRange.split(",").toSeq.map { part =>
+      part.split("-", 2).map(_.toInt) match {
+        case Array(start, end) => (start, end)
+        case Array(page) => (page, page)
+      }
+    }
+
   /** `parse_page_range` (`utils.py:92-100`): expand + sort + clip to
     * [1, totalPages]; out-of-range pages silently dropped.
     */
-  def parse(pageRange: String, totalPages: Int): Seq[Int] = {
-    val pages = scala.collection.mutable.Set.empty[Int]
-    for (part <- pageRange.split(",")) {
-      if (part.contains("-")) {
-        val Array(start, end) = part.split("-", 2).map(_.toInt)
-        pages ++= (start to end)
-      } else pages += part.toInt
-    }
-    pages.filter(p => p >= 1 && p <= totalPages).toSeq.sorted
-  }
+  def parse(pageRange: String, totalPages: Int): Seq[Int] =
+    ranges(pageRange).flatMap { case (s, e) =>
+      math.max(s, 1) to math.min(e, totalPages)
+    }.distinct.sorted
+
+  /** The rows of the pages [[parse]] would select, as one predicate
+    * over `page` that pushes down to the scan: `(page >= max(s, 1) AND
+    * page <= e) OR ...`. No page count is needed — a page past the last
+    * one matches no row anyway — and nothing is expanded.
+    */
+  def predicate(pageRange: String, page: Column): Column =
+    ranges(pageRange).map { case (s, e) =>
+      page >= math.max(s, 1) && page <= e
+    }.reduceOption(_ || _).getOrElse(lit(false))
 
   /** `chunked` (`utils.py:82-84`): micro-batch split. Size 0 raises
     * (Python `range` step-0 ValueError); negative yields nothing.

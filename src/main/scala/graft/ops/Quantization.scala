@@ -274,13 +274,12 @@ object Quantization {
         // densify: the previous codebook IS the full (s, j) grid (dense
         // by induction from the seeded one), so a left join + coalesce
         // carries empty cells' previous centroids forward
-        val next = cb
+        val next = CheckpointUtil.ckpt(cb
           .select(col("s"), col("j"), col("cvec").as("prev_cvec"))
           .join(updated, Seq("s", "j"), "left")
           .select(col("s"), col("j"),
             coalesce(col("new_cvec"), col("prev_cvec")).as("cvec"))
-          .withColumn("nb", intDot(col("cvec"), col("cvec")))
-          .localCheckpoint()
+          .withColumn("nb", intDot(col("cvec"), col("cvec"))))
         if (round > 1) CheckpointUtil.free(cb)
         next
     }

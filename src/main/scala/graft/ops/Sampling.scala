@@ -469,6 +469,16 @@ object Sampling {
     fullKeep.unionByName(boundary)
   }
 
+  /** The training shard of a row whose key hashes to `md5Hex`: the
+    * hash's first byte (its first two hex digits) mod `nShards` — the
+    * one rule of [[shardLayout]] and [[writeTrainingShards]].
+    */
+  private def shardOf(md5Hex: Column, nShards: Int): Column = {
+    require(nShards >= 1 && 256 % nShards == 0,
+      s"nShards must divide 256, got $nShards")
+    pmod(conv(substring(md5Hex, 1, 2), 16, 10).cast("int"), lit(nShards))
+  }
+
   /** Training-shard layout — the WRITE side of a curation run: assign
     * every document a deterministic shard and a deterministic position
     * within it, so the emitted corpus is globally shuffled (hash
@@ -495,8 +505,6 @@ object Sampling {
       df: DataFrame,
       key: Column,
       nShards: Int = 16): DataFrame = {
-    require(nShards >= 1 && 256 % nShards == 0,
-      s"nShards must divide 256, got $nShards")
     // The md5 subtree must appear a BOUNDED number of times per row:
     // CollapseProject happily duplicates deterministic expressions,
     // so per-nibble ascii CASE arithmetic referencing a prior h
@@ -516,8 +524,6 @@ object Sampling {
     // per-(shard, bucket) groups are corpus/65536-bounded. Bucket
     // counts aggregate map-side; the cumulative offsets window runs
     // on the ≤4096-row per-shard bucket frames and broadcasts back.
-    // shard = high byte of the prefix folded mod nShards (the same
-    // first-two-hex-chars value as before, via shiftright).
     // Two passes over the source are inherent to two-phase ranking
     // (the offsets branch is a count aggregate, and column pruning
     // narrows its scan below any shared exchange, so ReuseExchange
@@ -526,8 +532,7 @@ object Sampling {
     // in SCALE.md: ~2.3× dearer at sf1, in exchange for a plan whose
     // widest single-task sort is corpus/65536, not corpus/nShards.
     val shuffled = df.select(col("doc_id"), md5(key).as("h"),
-      pmod(shiftright(hb, 8), lit(nShards)).cast("int").as("shard"),
-      hb.as("__hb"))
+      shardOf(md5(key), nShards).as("shard"), hb.as("__hb"))
       .repartition(col("shard"), col("__hb"))
     val offsets = shuffled.groupBy(col("shard"), col("__hb"))
       .agg(count(lit(1)).as("__c"))
@@ -557,19 +562,12 @@ object Sampling {
       key: Column,
       dest: String,
       nShards: Int = 16): Unit = {
-    require(nShards >= 1 && 256 % nShards == 0,
-      s"nShards must divide 256, got $nShards")
     val h = md5(key)
-    def nib(c: Column): Column =
-      when(ascii(c) < 58, ascii(c) - 48).otherwise(ascii(c) - 87)
-    val shard =
-      pmod(nib(substring(h, 1, 1)) * 16 + nib(substring(h, 2, 1)),
-        lit(nShards)).cast("int")
     // shard leads the sort so the dynamic-partition writer sees its
     // partition column already ordered and does NOT inject its own
     // sort (which would only order by shard and could re-arrange the
     // in-shard hash order)
-    df.withColumn("__h", h).withColumn("shard", shard)
+    df.withColumn("__h", h).withColumn("shard", shardOf(h, nShards))
       .repartition(nShards, col("shard"))
       .sortWithinPartitions(col("shard"), col("__h"), col("doc_id"))
       .drop("__h")

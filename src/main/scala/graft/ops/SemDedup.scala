@@ -83,11 +83,11 @@ object SemDedup {
     // quantization projection over the corpus. The lazy checkpoint
     // materializes it once at the first action and every later
     // reference is a block read (the r17 cache-barrier lesson).
-    val q = vectors.select(col("vec_id"), col("label"),
+    val q = CheckpointUtil.ckpt(vectors.select(col("vec_id"), col("label"),
       Quantization.int8Codes(boundedEmbedding(col("embedding")), logScale)
         .as("qvec"))
-      .withColumn("norm2", Quantization.intDot(col("qvec"), col("qvec")))
-      .localCheckpoint(false)
+      .withColumn("norm2", Quantization.intDot(col("qvec"), col("qvec"))),
+      eager = false)
     // Mega-cluster guard, same contract as the MinHash maxBucket
     // guard: a cluster whose size breaks the |cluster| ~ N/k sizing
     // assumption would make the pair stage quadratic in IT alone

@@ -267,12 +267,11 @@ object Sketches {
     // audit signal (ADVICE r17). Collapsing collisions
     // deterministically is also exactly the KMV estimator's model —
     // it estimates distinct HASH values. One shuffle either way.
-    def sketch(s: String): DataFrame = in
+    def sketch(s: String): DataFrame = CheckpointUtil.ckpt(in
       .filter(col(setCol) === s)
       .select(xxhash64(col(keyCol)).bitwiseAND(Long.MaxValue).as("h"))
       .distinct()
-      .orderBy(col("h")).limit(k)
-      .localCheckpoint(false)
+      .orderBy(col("h")).limit(k), eager = false)
     def estimate(sk: DataFrame, as: String): DataFrame = sk
       .agg(count(lit(1)).as("cnt"), max(col("h")).as("mk"))
       .select(when(col("cnt") < k, dec(col("cnt")))
@@ -280,9 +279,8 @@ object Sketches {
         .as(as))
     val skA = sketch(setA)
     val skB = sketch(setB)
-    val skU = skA.unionByName(skB).distinct()
-      .orderBy(col("h")).limit(k)
-      .localCheckpoint(false)
+    val skU = CheckpointUtil.ckpt(skA.unionByName(skB).distinct()
+      .orderBy(col("h")).limit(k), eager = false)
     val common = skU.join(skA, "h").join(skB, "h")
       .agg(count(lit(1)).as("m_common"))
     val kPrime = skU.agg(count(lit(1)).as("k_prime"))

@@ -31,12 +31,11 @@ object Triangles {
     // without the two lineage cuts each reference re-derives the whole
     // upstream (scan → self-join → distinct) chain (measured 3× the
     // runtime at sf0.1; SCALE.md)
-    val und = edges.select(
+    val und = CheckpointUtil.ckpt(edges.select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val deg = und.select(explode(array(col("a"), col("b"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("deg"))
     val withDeg = und
@@ -44,7 +43,7 @@ object Triangles {
       .join(deg.select(col("n").as("b"), col("deg").as("db")), "b")
     // orient lower (deg, id) -> higher; rank comparisons carried as
     // (deg, id) pairs so the wedge step can re-canonicalize
-    val oriented = withDeg.select(
+    val oriented = CheckpointUtil.ckpt(withDeg.select(
       when(col("da") < col("db") ||
           (col("da") === col("db") && col("a") < col("b")),
         struct(col("a").as("u"), col("b").as("v"),
@@ -52,8 +51,7 @@ object Triangles {
         .otherwise(struct(col("b").as("u"), col("a").as("v"),
           col("db").as("du"), col("da").as("dv"))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"),
-        col("e.du").as("du"), col("e.dv").as("dv"))
-      .localCheckpoint()
+        col("e.du").as("du"), col("e.dv").as("dv")))
     // wedges u -> (v1, v2) with rank(v1) < rank(v2); the closing edge,
     // if present, is oriented (v1, v2) by transitivity of the order
     val wedges = oriented.as("x").join(oriented.as("y"),

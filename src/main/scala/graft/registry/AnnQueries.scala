@@ -736,16 +736,14 @@ object AnnQueries {
       // group scan task (cf. the mm gates)
       val corpus = spread(
         T(s, dir, "embeddings").select("vec_id", "embedding"))
-      val cents = graft.tools.RunAnnIndex
-        .trainCentroids(corpus, kCells = 8, iters = 1)
-        .localCheckpoint()
+      val cents = CheckpointUtil.ckpt(graft.tools.RunAnnIndex
+        .trainCentroids(corpus, kCells = 8, iters = 1))
       // ONE coarse assignment shared by all three index flavors
       // (r21): identical rows by construction, so the checkpoint
       // changes no result. queries derive from it too (same
       // (vec_id, embedding) rows as the corpus), killing the
       // per-flavor corpus re-scans (r22).
-      val assigned = Similarity.ivfAssign(corpus, cents)
-        .localCheckpoint()
+      val assigned = CheckpointUtil.ckpt(Similarity.ivfAssign(corpus, cents))
       val queries = assigned
         .filter(col("vec_id") >= 10 && col("vec_id") < 110)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
@@ -845,7 +843,7 @@ object AnnQueries {
       // sides plus the final labeling (3 references), each of which
       // re-ran the assign projection + model broadcast otherwise
       SemDedup.semDedup(
-        KMeans.fitAssign(base.unionByName(planted)).localCheckpoint())
+        CheckpointUtil.ckpt(KMeans.fitAssign(base.unionByName(planted))))
     },
       // k-means labels feeding the semantic-dedup reach — the full
       // raw-embeddings-to-verdict replay in one statement
@@ -872,7 +870,7 @@ object AnnQueries {
           col("embedding"))
       // same shared-labeling checkpoint as semdedup_e2e
       SemDedup.semDedup(
-        KMeans.fitAssign(base.unionByName(planted)).localCheckpoint())
+        CheckpointUtil.ckpt(KMeans.fitAssign(base.unionByName(planted))))
         .filter(col("is_dup") === 0)
         .select(col("vec_id"), col("label"))
     },

@@ -242,9 +242,9 @@ object DedupQueries {
     // regexp normalization once and the detectors read ~500 tiny
     // (doc_id, nt) rows. normText(null) stays null, so every
     // detector's null semantics are byte-identical (oracle unchanged).
-    val allNorm = all
-      .select(col("doc_id"), TextDedup.normText(col("text")).as("nt"))
-      .localCheckpoint(false)
+    val allNorm = CheckpointUtil.ckpt(all
+      .select(col("doc_id"), TextDedup.normText(col("text")).as("nt")),
+      eager = false)
     // exact: min-owner per 32-byte content hash — one window over the
     // hash partitioning, no second aggregate-join pass
     val exact = allNorm
@@ -406,7 +406,7 @@ object DedupQueries {
       // connectedComponents over this same frame, so results are
       // unchanged — oracle stays green).
       val (edges0, ids) = neardupEdges(s, dir)
-      val edges = edges0.localCheckpoint()
+      val edges = CheckpointUtil.ckpt(edges0)
       val labeled = Components.connectedComponents(edges,
         ids.select(col("doc_id").as("node")))
       val naive = Sampling.hashSplit(docs, col("text"), evalRate = 0.2)

@@ -305,13 +305,12 @@ object MultimodalQueries {
       // self-join this frame, so the lazy form re-decodes every PNG
       // 4x (2 seeds x 2 join sides) — the decode is the dominant
       // cost and the frame is tiny (64 floats/doc)
-      val vecs = payloads
+      val vecs = CheckpointUtil.ckpt(payloads
         .select(col("doc_id"),
           Multimodal.imageThumbFeatures(col("payload")).as("thumb"))
         .select(col("doc_id").as("vec_id"),
           expr("transform(thumb, x -> CAST(x - 127.5 AS FLOAT))")
-            .as("embedding"))
-        .localCheckpoint()
+            .as("embedding")))
       val cands = Seq(42L, 1042L).map(seed =>
           Similarity.cosineNearDupPairs(vecs, threshold = 0.9,
             numBits = 8, dims = 64, seed = seed)
@@ -357,10 +356,9 @@ object MultimodalQueries {
           (col("doc_id") + PlantOffset).as("doc_id"),
           Multimodal.patternWav(col("doc_id"), lit(true)).as("payload")))
       // same checkpoint-the-decode reasoning as mm_image_neardup
-      val vecs = payloads
+      val vecs = CheckpointUtil.ckpt(payloads
         .select(col("doc_id").as("vec_id"),
-          Multimodal.audioPooledFeatures(col("payload")).as("embedding"))
-        .localCheckpoint()
+          Multimodal.audioPooledFeatures(col("payload")).as("embedding")))
       val cands = Seq(42L, 1042L).map(seed =>
           Similarity.cosineNearDupPairs(vecs, threshold = 0.9,
             numBits = 8, dims = 64, seed = seed)
@@ -397,13 +395,12 @@ object MultimodalQueries {
           (col("doc_id") + PlantOffset).as("doc_id"),
           Multimodal.patternGif(col("doc_id"), lit(true)).as("payload")))
       // checkpoint-the-decode, as in the image/audio gates
-      val vecs = payloads
+      val vecs = CheckpointUtil.ckpt(payloads
         .select(col("doc_id"),
           Multimodal.videoPooledFeatures(col("payload")).as("f"))
         .select(col("doc_id").as("vec_id"),
           expr("transform(f, x -> CAST(x - 95.5 AS FLOAT))")
-            .as("embedding"))
-        .localCheckpoint()
+            .as("embedding")))
       val cands = Seq(42L, 1042L).map(seed =>
           Similarity.cosineNearDupPairs(vecs, threshold = 0.9,
             numBits = 8, dims = 48, seed = seed)

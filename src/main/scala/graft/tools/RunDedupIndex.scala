@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -78,11 +77,6 @@ object RunDedupIndex {
   /** Default band-bucket cap; see [[graft.ops.TextDedup.hotBandBuckets]]. */
   val DefaultMaxBucket = 64
 
-  private def fsFor(spark: SparkSession, path: String): (FileSystem, Path) = {
-    val p = new Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
   /** Recompute `indexDir/hot_buckets` from the persisted band table —
     * one map-side-combined aggregate over 12-byte rows, output a
     * handful of pathological buckets. Runs at build and compact time
@@ -115,7 +109,7 @@ object RunDedupIndex {
     */
   private def hotBucketsFrame(
       spark: SparkSession, indexDir: String): DataFrame = {
-    val (fs, p) = fsFor(spark, s"$indexDir/hot_buckets")
+    val (fs, p) = IndexUtil.fsFor(spark, s"$indexDir/hot_buckets")
     if (fs.exists(p)) spark.read.parquet(p.toString)
     else TextDedup.hotBandBuckets(
       spark.read.parquet(s"$indexDir/band_index"), DefaultMaxBucket)
@@ -215,7 +209,8 @@ object RunDedupIndex {
       outDir: String,
       thresholdPct: Int = 80,
       update: Boolean = false): Long = {
-    val (fs, marker) = fsFor(spark, appliedMarker(indexDir, newDocsPath))
+    val (fs, marker) =
+      IndexUtil.fsFor(spark, appliedMarker(indexDir, newDocsPath))
     if (update && fs.exists(marker)) {
       System.err.println(
         s"snapshot $newDocsPath already applied+updated; keeping $outDir")

@@ -1,7 +1,8 @@
 package graft.tools
 
 import java.nio.file.Paths
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import graft.config.EtlConfig
 import graft.ops.{ExtractJob, PageRange}
 
@@ -12,16 +13,13 @@ import graft.ops.{ExtractJob, PageRange}
   * Usage:
   *   RunEtl <cells.parquet> <destDir> <outputName>
   *          [--config <toml>] [--pages <range>] [--multi-file]
-  *          [--rectangularize]
   *
   * `--pages` takes the reference's `1-4,6` grammar (`cli.py:146-150`,
   * `utils.py:87-100`) and prunes the scan by the `page` column — the
   * partition-pruning analog of the reference's page selection. The CLI
   * writes reference-parity single files by default; `--multi-file`
-  * switches to the scale-safe range-partitioned layout.
-  * `--rectangularize` pads ragged rows to their table's width
-  * ([[graft.ops.CellTables.rectangularize]]) for sources that do not
-  * guarantee rectangular tables.
+  * switches to the scale-safe range-partitioned layout. Tables may be
+  * ragged: each is sized by its widest row.
   *
   * Without a config path, the reference's shipped `idnareaetl.toml`
   * defaults apply (suffixes province/regency/district/village/island,
@@ -34,22 +32,30 @@ object RunEtl {
 
   private val Usage =
     "usage: RunEtl <cells.parquet> <destDir> <outputName> " +
-      "[--config <toml>] [--pages <range>] [--multi-file] " +
-      "[--rectangularize]"
+      "[--config <toml>] [--pages <range>] [--multi-file]"
+
+  /** The cells to extract: the parquet at `path`, pruned to `pageRange`
+    * by one pushed-down predicate. Pages past the last one select
+    * nothing, as the reference clips to the PDF's page count
+    * (`utils.py:100`), so no Spark job runs before extraction.
+    */
+  def input(
+      spark: SparkSession,
+      path: String,
+      pageRange: Option[String]): DataFrame = {
+    val all = spark.read.parquet(path)
+    pageRange.fold(all)(r => all.filter(PageRange.predicate(r, col("page"))))
+  }
 
   def main(args: Array[String]): Unit = {
     if (args.length < 3) {
       System.err.println(Usage)
       sys.exit(2)
     }
-    val Array(input, dest, name) = args.take(3)
+    val Array(inputPath, dest, name) = args.take(3)
     var configPath: Option[String] = None
     var pageRange: Option[String] = None
     var singleFile = true
-    // pad ragged rows to table width before extraction — required for
-    // sources that don't guarantee the rectangular invariant
-    // (see CellTables.rectangularize)
-    var rectangularize = false
     var i = 3
     while (i < args.length) {
       args(i) match {
@@ -58,7 +64,6 @@ object RunEtl {
         case "--pages" if i + 1 < args.length =>
           pageRange = Some(args(i + 1)); i += 2
         case "--multi-file" => singleFile = false; i += 1
-        case "--rectangularize" => rectangularize = true; i += 1
         case other =>
           System.err.println(s"unknown argument: $other\n$Usage")
           sys.exit(2)
@@ -88,26 +93,8 @@ object RunEtl {
 
     val t0 = System.nanoTime()
     try {
-      val read = spark.read.parquet(input)
-      val all =
-        if (rectangularize) graft.ops.CellTables.rectangularize(read)
-        else read
-      val cells = pageRange match {
-        case None => all
-        case Some(r) =>
-          // clip to the actual page count (`utils.py:100` drops
-          // out-of-range silently); one tiny max() job stands in for
-          // the reference's PdfReader page count (`cli.py:146-147`).
-          // Empty input -> max is NULL -> zero pages, which flows into
-          // the reference-parity "No matching data found" exit.
-          val maxRow = all.agg(max(col("page"))).head()
-          val total = if (maxRow.isNullAt(0)) 0 else maxRow.getInt(0)
-          val pages = PageRange.parse(r, total)
-          // isin over an int column pushes to the parquet scan
-          all.filter(col("page").isin(pages: _*))
-      }
-      val result = ExtractJob.run(cells, dest, name, config,
-        singleFile = singleFile)
+      val result = ExtractJob.run(input(spark, inputPath, pageRange), dest,
+        name, config, singleFile = singleFile)
       val secs = (System.nanoTime() - t0) / 1e9
       // report shape follows `cli.py:196,203-205`
       println(s"Extraction completed in ${PageRange.formatDuration(secs)}")

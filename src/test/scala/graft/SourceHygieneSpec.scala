@@ -84,4 +84,17 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+
+  test("only CheckpointUtil checkpoints under src/main") {
+    // one checkpoint primitive (CheckpointUtil.ckpt), so the
+    // reliable-checkpoint flag reaches every checkpoint
+    val call = raw"\.(localCheckpoint|checkpoint)\(".r
+    val offenders = sourceFiles(Paths.get("src/main"))
+      .filter(p => p.getFileName.toString != "CheckpointUtil.scala")
+      .flatMap { p =>
+        val text = new String(Files.readAllBytes(p), "UTF-8")
+        call.findFirstIn(text).map(m => s"$p: $m")
+      }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }

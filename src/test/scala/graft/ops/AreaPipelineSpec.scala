@@ -22,29 +22,63 @@ class AreaPipelineSpec extends SparkSpec {
     assert(!AreaPipeline.matchesHeader(Nil))
   }
 
-  test("rectangularize restores the width invariant for ragged sources") {
+  /** One table's rows exactly as given — no padding, unlike
+    * [[CellTables.ofGrid]]. */
+  private def raggedCells(grid: Seq[Seq[String]]) = {
     import graft.SparkTestSession.spark.implicits._
-    import graft.schema.RawTableRow
-    import org.apache.spark.sql.functions.{col, size}
-    // A ragged variant of the area fixture: trailing empty cells
-    // dropped (what a lossless interchange format like CellTsv can
-    // deliver) — direct extraction is out-of-contract; rectangularize
-    // must make it byte-identical to the padded grid.
-    val padded = CellTables.ofGrid(spark, Fixtures.dfArea)
-    val ragged = Fixtures.dfArea.zipWithIndex.map { case (row, i) =>
-      RawTableRow(0L, 1, i, i.toLong,
-        row.reverse.dropWhile(_ == "").reverse)
+    grid.zipWithIndex.map { case (row, i) =>
+      graft.schema.RawTableRow(0L, 1, i, i.toLong, row)
     }.toDF()
+  }
+
+  /** (entity, code, name) of the dispatched area extraction. */
+  private def dispatched(cells: org.apache.spark.sql.DataFrame) =
+    Dispatch.extractAll(cells)._1
+      .orderBy("seq").select("entity", "code", "name")
+      .collect().map(_.toSeq.toList).toList
+
+  test("ragged input extracts byte-identically to its padded grid") {
+    import org.apache.spark.sql.functions.{col, size}
+    // the area fixture with trailing empty cells dropped (what a
+    // lossless interchange format like CellTsv can deliver)
+    val padded = CellTables.ofGrid(spark, Fixtures.dfArea)
+    val ragged = raggedCells(
+      Fixtures.dfArea.map(_.reverse.dropWhile(_ == "").reverse))
     assert(ragged.select(size(col("cells"))).distinct().count() > 1)
-    val fixed = CellTables.rectangularize(ragged)
-    assert(fixed.select(size(col("cells"))).distinct().count() == 1)
-    val got = AreaPipeline.extract(fixed)
+    val got = AreaPipeline.extract(ragged)
       .orderBy("seq").select("entity", "code", "name")
       .collect().map(_.toSeq.toList).toList
     val want = AreaPipeline.extract(padded)
       .orderBy("seq").select("entity", "code", "name")
       .collect().map(_.toSeq.toList).toList
     assert(got == want && got.nonEmpty)
+  }
+
+  test("data rows wider than a 2-cell header take the width-7 " +
+      "variant, name columns {1,4,5,6}") {
+    // the reference's frame is as wide as its widest row
+    val cells = raggedCells(Seq(
+      Seq("K O D E", "NAMA PROVINSI"),
+      Seq("", "KAB", "KOTA"),
+      Seq("11", "Aceh", "", "", "", "", ""),
+      Seq("11.01", "", "", "", "", "Kabupaten Aceh Selatan", ""),
+      Seq("11.01.01", "", "", "Not A Name", "", "", "Bakongan")))
+    assert(dispatched(cells) == List(
+      List("province", "11", "Aceh"),
+      List("regency", "11.01", "Kabupaten Aceh Selatan"),
+      List("district", "11.01.01", "Bakongan")))
+  }
+
+  test("6-cell rows under a shorter header take the width-6 variant, " +
+      "name columns {1,3}") {
+    val cells = raggedCells(Seq(
+      Seq("K O D E", "NAMA PROVINSI", "JUMLAH"),
+      Seq("", "", ""),
+      Seq("11", "Aceh", "", "", "", ""),
+      Seq("11.01", "", "", "Kabupaten Aceh Selatan", "Not A Name", "")))
+    assert(dispatched(cells) == List(
+      List("province", "11", "Aceh"),
+      List("regency", "11.01", "Kabupaten Aceh Selatan")))
   }
 
   test("extract happy path (test_extract_rows_happy_path)") {

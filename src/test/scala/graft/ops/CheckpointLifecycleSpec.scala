@@ -137,7 +137,8 @@ class CheckpointLifecycleSpec extends SparkSpec {
       rows(Scc.bowtie(cyclic)),
       rows(KCore.kcorePeel(cyclic, k = 1, rounds = 2)),
       rows(LabelProp.propagate(cyclic, rounds = 2)),
-      rows(HyperBall.auditedNeighborhood(cyclic, maxT = 2)))
+      rows(HyperBall.auditedNeighborhood(cyclic, maxT = 2)),
+      rows(Triangles.summary(cyclic)))
     val local = run()
     spark.conf.set(CheckpointUtil.ReliableConf, "true")
     try {
@@ -147,10 +148,11 @@ class CheckpointLifecycleSpec extends SparkSpec {
     } finally spark.conf.unset(CheckpointUtil.ReliableConf)
   }
 
-  test("the reliable-checkpoint flag reaches Scc: its checkpoint " +
-      "directory gains files during a call") {
+  /** Assert `op`, run under the reliable-checkpoint flag, writes
+    * files into a fresh checkpoint directory. */
+  private def assertWritesReliableCheckpoints(op: => DataFrame): Unit = {
     val dir = java.nio.file.Files
-      .createTempDirectory("graft-reliable-scc")
+      .createTempDirectory("graft-reliable-files")
     spark.sparkContext.setCheckpointDir(dir.toString)
     def files(): Long = {
       val walk = java.nio.file.Files.walk(dir)
@@ -159,9 +161,19 @@ class CheckpointLifecycleSpec extends SparkSpec {
     }
     val before = files()
     spark.conf.set(CheckpointUtil.ReliableConf, "true")
-    try Scc.stronglyConnected(cyclic).collect()
+    try op.collect()
     finally spark.conf.unset(CheckpointUtil.ReliableConf)
     assert(files() > before, s"no checkpoint file written under $dir")
+  }
+
+  test("the reliable-checkpoint flag reaches Scc: its checkpoint " +
+      "directory gains files during a call") {
+    assertWritesReliableCheckpoints(Scc.stronglyConnected(cyclic))
+  }
+
+  test("the reliable-checkpoint flag reaches a one-shot barrier outside " +
+      "the iterative family: Triangles.summary writes checkpoint files") {
+    assertWritesReliableCheckpoints(Triangles.summary(cyclic))
   }
 
   test("stronglyConnected, condensation and bowtie free back to " +

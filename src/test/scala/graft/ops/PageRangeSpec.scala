@@ -1,11 +1,12 @@
 package graft.ops
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.col
+import graft.SparkSpec
 
 /** Mirrors `tests/test_utils.py:166-230` (chunked, page range,
-  * format_duration).
+  * format_duration), and pins [[PageRange.predicate]] to [[PageRange.parse]].
   */
-class PageRangeSpec extends AnyFunSuite {
+class PageRangeSpec extends SparkSpec {
   import PageRange._
 
   test("validate_page_range") {
@@ -26,6 +27,49 @@ class PageRangeSpec extends AnyFunSuite {
 
   test("parse_page_range invalid raises") {
     intercept[NumberFormatException](parse("a-b", 10))
+  }
+
+  test("predicate selects the pages isin(parse(spec, lastPage)) selects") {
+    import graft.SparkTestSession.spark.implicits._
+    val rnd = new scala.util.Random(7)
+    def part(): String = {
+      val s = rnd.nextInt(14)
+      if (rnd.nextBoolean()) s.toString else s"$s-${rnd.nextInt(14)}"
+    }
+    val specs = Seq("1", "0", "0-0", "5-3", "1-2000000000") ++
+      Seq.fill(120)(Seq.fill(1 + rnd.nextInt(4))(part()).mkString(","))
+    assert(specs.forall(validate))
+    // page sets: with page 0, gaps, repeats, a last page inside or
+    // below the specs' ranges, and empty input
+    val pageSets = Seq(Seq.empty[Int], Seq(0), Seq(0, 1, 2), (0 to 13),
+      Seq(1, 1, 3, 3, 9)) ++
+      Seq.fill(10)(Seq.fill(1 + rnd.nextInt(12))(rnd.nextInt(14)))
+    for (pages <- pageSets) {
+      val lastPage = if (pages.isEmpty) 0 else pages.max
+      val df = pages.toDF("page")
+      val rows = df.select(specs.flatMap { spec =>
+        Seq(predicate(spec, col("page")),
+          col("page").isin(parse(spec, lastPage): _*))
+      }: _*).collect()
+      assert(rows.length == pages.length)
+      for (row <- rows; (spec, i) <- specs.zipWithIndex) {
+        val byPredicate = !row.isNullAt(2 * i) && row.getBoolean(2 * i)
+        val byParse = !row.isNullAt(2 * i + 1) && row.getBoolean(2 * i + 1)
+        assert(byPredicate == byParse,
+          s"spec '$spec' over pages $pages: row $row")
+      }
+    }
+  }
+
+  test("predicate for a huge range is built without expanding it") {
+    val t0 = System.nanoTime()
+    val p = predicate("1-2000000000", col("page"))
+    assert((System.nanoTime() - t0) / 1e9 < 1.0)
+    assert(ranges("1-2000000000,7") == Seq((1, 2000000000), (7, 7)))
+    import graft.SparkTestSession.spark.implicits._
+    val kept = Seq(0, 1, 5, 2000000000, Int.MaxValue).toDF("page")
+      .filter(p).as[Int].collect().toSeq
+    assert(kept == Seq(1, 5, 2000000000))
   }
 
   test("chunked") {
