@@ -104,40 +104,6 @@ case class OpaqueIdentityExpr(child: Expression)
     copy(child = newChild)
 }
 
-/** Always-true boolean that DECLARES itself nondeterministic and
-  * REFERENCES its argument columns without evaluating them: a filter
-  * built from this node is a runtime no-op but a hard optimizer
-  * barrier. Nondeterminism stops predicates from being reordered or
-  * pushed across it; being one indivisible conjunct, conjunct
-  * splitting cannot peel a pushable part off; the child references pin
-  * every named column against per-branch column pruning; and being a
-  * graft-owned class, no simplification rule (current or future) can
-  * prove it true and eliminate it. Used by
-  * [[graft.ops.Dispatch.extractAllShared]] to keep fan-out branch
-  * subtrees canonically EQUAL below a shared exchange so AQE's
-  * exchange reuse matches. (A `rand(seed) > -1` conjunct was tried
-  * first and the optimizer deleted it; a deterministic all-column hash
-  * conjunct was split off and pushed through the exchange.)
-  */
-case class OpaqueTrueExpr(children: Seq[Expression])
-    extends Expression
-    with org.apache.spark.sql.catalyst.expressions.Nondeterministic {
-  override def nullable: Boolean = false
-  override def dataType: DataType =
-    org.apache.spark.sql.types.BooleanType
-  override def prettyName: String = "graft_opaque_true"
-  override protected def initializeInternal(partitionIndex: Int): Unit = ()
-  override protected def evalInternal(
-      input: org.apache.spark.sql.catalyst.InternalRow): Any = true
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    ExprCode.forNonNullValue(
-      org.apache.spark.sql.catalyst.expressions.codegen.TrueLiteral)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): OpaqueTrueExpr =
-    copy(children = newChildren)
-}
-
 object CurationExprs {
   private def col(e: Expression): Column = ColumnBridge.column(e)
   private def expr(c: Column): Expression = ColumnBridge.expression(c)
@@ -145,6 +111,4 @@ object CurationExprs {
   def nfcNormalize(c: Column): Column = col(NfcNormalizeExpr(expr(c)))
   def deflateSize(c: Column): Column = col(DeflateSizeExpr(expr(c)))
   def opaqueIdentity(c: Column): Column = col(OpaqueIdentityExpr(expr(c)))
-  def opaqueTrue(keepAlive: Column*): Column =
-    col(OpaqueTrueExpr(keepAlive.map(expr)))
 }

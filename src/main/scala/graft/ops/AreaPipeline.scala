@@ -1,21 +1,17 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Cleanse
 
-/** Area extraction pipeline: cell tables -> province/regency/district/
-  * village rows. Reference: `extractors.py:103-176` (AreaExtractor),
-  * pinned by `tests/test_extractors.py:405-488`.
+/** Area extraction: cell tables -> province/regency/district/village
+  * rows. Reference: `extractors.py:103-176` (AreaExtractor), pinned by
+  * `tests/test_extractors.py:405-488`.
   *
-  * Scale design: the only per-table metadata needed is the table width,
-  * which comes from the shared per-table aggregate [[Dispatch.tableMeta]]
-  * (one row per detected table — thousands of rows at 100 TB, not
-  * billions), broadcast-joined back onto the full cell stream.
-  * Everything else is codegen'd Project/Filter; the one shuffle is the
-  * province first-occurrence dedup window, partitioned by code
-  * (per-code ordering only — parallel across codes).
+  * The row rule is a set of `Column` builders over one row of
+  * `cells ⋈ meta`; [[Dispatch.extract]] applies it to the tables routed
+  * to area, in the same projection as the island rule. The only
+  * per-table metadata it reads is the table width.
   */
 object AreaPipeline {
 
@@ -39,98 +35,80 @@ object AreaPipeline {
     Dispatch.tableMeta(cells).select(col("table_id"), col("table_width"),
       (col("route") <=> "area").as("is_area"))
 
+  // `get` is 0-based and null-safe for ragged rows (ANSI mode on).
+  private def cell(i: Int): Column = coalesce(get(col("cells"), lit(i)), lit(""))
+
   private def nonEmpty(c: Column): Column = {
     val t = Cleanse.pyTrim(c)
     when(t === "", lit(null)).otherwise(t)
   }
 
-  /** The code/name pair extraction (`extractors.py:124-155`):
-    * skip 2 header rows; trim code col 0; variant-dependent name
-    * candidates (width 6 -> cols {1,3}; width >=7 -> {1,4,5,6});
-    * row-wise first-non-empty coalesce; cleanse chain; non-empty mask.
-    *
-    * Width 2-5 tables raise IndexError in the reference and are skipped
-    * by the CLI's per-table error isolation (`cli.py:190-191`) — here
-    * they simply produce no rows.
-    *
-    * Input must have (table_id, row_idx, seq, cells); output
-    * (code, name, seq).
+  /** Code (`extractors.py:124-155`): cell 0, trimmed. */
+  private[ops] def code: Column = Cleanse.pyTrim(cell(0))
+
+  /** Name (`extractors.py:134-151`): the first non-empty of the
+    * width-dependent candidates (width 6 -> cols {1,3}; width >= 7 ->
+    * {1,4,5,6}), cleansed.
     */
-  def codeNamePairs(
-      cells: DataFrame,
-      precomputedMeta: Option[DataFrame] = None): DataFrame = {
-    // Dispatch passes its meta, already filtered to the area route; the
-    // inner broadcast join drops rows for tables not in it. The
-    // reference separates matches() (the dispatch gate,
-    // `cli.py:183-191`) from _extract_rows (no gate) — direct extraction
-    // processes any table, like its unit tests do.
-    val meta = precomputedMeta.getOrElse(tableMeta(cells))
-    // width gating happens once, below: `=== 6 || >= 7` subsumes any
-    // minimum-width check
-    val withMeta = cells
-      .join(broadcast(meta), "table_id")
-      .filter(col("row_idx") >= 2)
-
-    // `get` is 0-based and null-safe for ragged rows (ANSI mode on).
-    def cell(i: Int): Column = coalesce(get(col("cells"), lit(i)), lit(""))
-
-    val code = Cleanse.pyTrim(cell(0))
-    val picked6 = coalesce(nonEmpty(cell(1)), nonEmpty(cell(3)))
-    val picked7 = coalesce(nonEmpty(cell(1)), nonEmpty(cell(4)),
-      nonEmpty(cell(5)), nonEmpty(cell(6)))
-    val picked = when(col("table_width") === 6, picked6)
-      .when(col("table_width") >= 7, picked7)
-      .otherwise(lit(null))
-    val name = Cleanse.cleanseName(coalesce(picked, lit("")))
-
-    withMeta
-      .filter(col("table_width") === 6 || col("table_width") >= 7)
-      .select(code.as("code"), name.as("name"), col("seq"))
-      .filter(col("code") =!= "" && col("name") =!= "")
+  private[ops] def name: Column = {
+    val w = col("table_width")
+    val picked =
+      when(w === 6, coalesce(nonEmpty(cell(1)), nonEmpty(cell(3))))
+        .when(w >= 7, coalesce(nonEmpty(cell(1)), nonEmpty(cell(4)),
+          nonEmpty(cell(5)), nonEmpty(cell(6))))
+    Cleanse.cleanseName(coalesce(picked, lit("")))
   }
 
-  /** Code-length classification + parent prefixes (`extractors.py:164-176`):
-    * 2->province, 5->regency(+code[:2]), 8->district(+code[:5]),
-    * 13->village(+code[:8]); other lengths dropped. Province rows are
-    * first-occurrence-deduped in document order (A1) — Window partitioned
-    * by code, ordered by seq: parallel across codes, no global sort.
-    *
-    * Output: (entity, code, parent_code, name, seq); province parent_code
-    * is null.
+  /** Whether a row is kept (`extractors.py:124-176`): below the two
+    * header rows of a width-6 or width->=7 table, with a non-empty name
+    * and a code of an area length. Width 2-5 tables raise IndexError in
+    * the reference and are skipped by the CLI's per-table error
+    * isolation (`cli.py:190-191`) — here they simply produce no rows.
     */
-  def classify(pairs: DataFrame): DataFrame = {
-    val L = length(col("code"))
-    val tagged = pairs.withColumn("entity",
-      when(L === Cleanse.ProvinceCodeLength, "province")
-        .when(L === Cleanse.RegencyCodeLength, "regency")
-        .when(L === Cleanse.DistrictCodeLength, "district")
-        .when(L === Cleanse.VillageCodeLength, "village"))
-      .filter(col("entity").isNotNull)
-      .withColumn("parent_code",
-        when(col("entity") === "regency",
-          Cleanse.parentPrefix(col("code"), Cleanse.ProvinceCodeLength))
-          .when(col("entity") === "district",
-            Cleanse.parentPrefix(col("code"), Cleanse.RegencyCodeLength))
-          .when(col("entity") === "village",
-            Cleanse.parentPrefix(col("code"), Cleanse.DistrictCodeLength)))
-
-    // A1: first occurrence in document order, provinces only. Split so
-    // the dedup window shuffles *only* the (tiny) province stream — a
-    // single when() would force a whole-stream Window shuffle.
-    val w = Window.partitionBy(col("code")).orderBy(col("seq"))
-    val provinces = tagged.filter(col("entity") === "province")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn")
-    val others = tagged.filter(col("entity") =!= "province")
-    provinces.unionByName(others)
-      .select("entity", "code", "parent_code", "name", "seq")
+  private[ops] def kept: Column = {
+    val w = col("table_width")
+    col("row_idx") >= 2 && (w === 6 || w >= 7) &&
+      length(code).isin(Cleanse.ProvinceCodeLength, Cleanse.RegencyCodeLength,
+        Cleanse.DistrictCodeLength, Cleanse.VillageCodeLength) &&
+      name =!= ""
   }
 
-  /** Full pipeline: cell tables -> tagged entity rows. */
-  def extract(
-      cells: DataFrame,
-      precomputedMeta: Option[DataFrame] = None): DataFrame =
-    classify(codeNamePairs(cells, precomputedMeta))
+  /** A kept row's entity by code length (`extractors.py:164-176`): 2
+    * province, 5 regency, 8 district, 13 village.
+    */
+  private[ops] def entityOf(code: Column): Column = {
+    val len = length(code)
+    when(len === Cleanse.ProvinceCodeLength, "province")
+      .when(len === Cleanse.RegencyCodeLength, "regency")
+      .when(len === Cleanse.DistrictCodeLength, "district")
+      .otherwise("village")
+  }
+
+  /** Parent prefix by code length (`extractors.py:171-175`); null for a
+    * province.
+    */
+  private[ops] def parentCode(code: Column): Column = {
+    val len = length(code)
+    when(len === Cleanse.RegencyCodeLength,
+      Cleanse.parentPrefix(code, Cleanse.ProvinceCodeLength))
+      .when(len === Cleanse.DistrictCodeLength,
+        Cleanse.parentPrefix(code, Cleanse.RegencyCodeLength))
+      .when(len === Cleanse.VillageCodeLength,
+        Cleanse.parentPrefix(code, Cleanse.DistrictCodeLength))
+  }
+
+  private[ops] def shape(rows: DataFrame): DataFrame =
+    rows.select("entity", "code", "parent_code", "name", "seq")
+
+  /** The area extractor called directly, as the reference's unit tests
+    * do: every table goes through the area rule, matched or not.
+    * Output: (entity, code, parent_code, name, seq); a province's
+    * parent_code is null.
+    */
+  def extract(cells: DataFrame): DataFrame = {
+    val rows = Dispatch.pass(cells, lit("area"))
+    shape(Dispatch.firstProvinces(rows, rows))
+  }
 
   /** One entity stream, shaped to its output schema (SURVEY §1.2):
     * (code, <parent>_code, name, seq); provinces have no parent.

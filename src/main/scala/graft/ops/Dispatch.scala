@@ -1,17 +1,18 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** P3 first-match dispatch (`cli.py:158-160,183-191`): each detected
-  * table goes to the first extractor whose `matches()` fires, area
-  * before island. The rule lives in ONE place, [[tableMeta]]: one
-  * per-table aggregate tags every table with its `route` (read from
-  * its top four rows) and carries the metadata both extractors need.
-  * Each family broadcast-joins that meta, filtered to its own route,
-  * onto the cell stream — the join that feeds the extractor is also
-  * the dispatch, so each family sees only its own tables and pays one
-  * meta aggregate.
+/** P3 first-match dispatch and the one extract pass (`cli.py:158-160,
+  * 183-194`): each detected table goes to the first extractor whose
+  * `matches()` fires, area before island, and is extracted once.
+  * [[tableMeta]], one per-table aggregate, tags every table with its
+  * `route` (read from its top four rows) and carries the metadata both
+  * row rules need. [[extract]] broadcast-joins it onto the cell stream
+  * and renders both families in ONE projection that switches on the
+  * route, so the join that feeds the row rules is also the dispatch.
+  * The one stream shuffle is the province first-occurrence window (A1).
   */
 object Dispatch {
 
@@ -70,50 +71,74 @@ object Dispatch {
   def routes(cells: DataFrame): DataFrame =
     tableMeta(cells).select("table_id", "route")
 
-  /** Dispatch + extract both families. Returns (area tagged rows,
-    * island rows); each side only sees tables routed to it.
+  /** Every routed table extracted in one pass: (entity, code,
+    * parent_code, name, seq, coordinate, is_populated,
+    * is_outermost_small), one row per kept cell row, provinces deduped
+    * to their first occurrence. An island's `regency_code` rides in
+    * `parent_code`; the island columns are null on area rows. The
+    * province branch passes only the area tables, so it plans only the
+    * area rule; both branches read the one meta aggregate.
+    */
+  def extract(cells: DataFrame): DataFrame =
+    firstProvinces(pass(cells, routed("area")), pass(cells, col("route")))
+
+  /** [[extract]] split by family: (area rows `(entity, code,
+    * parent_code, name, seq)`, island rows in their output schema).
+    * Each side's pass sees only the tables routed to it.
     */
   def extractAll(cells: DataFrame): (DataFrame, DataFrame) = {
-    val meta = tableMeta(cells)
-    def routed(family: String) = Some(meta.filter(col("route") === family))
-    (AreaPipeline.extract(cells, precomputedMeta = routed("area")),
-      IslandPipeline.extract(cells, precomputedMeta = routed("island")))
+    val area = pass(cells, routed("area"))
+    (AreaPipeline.shape(firstProvinces(area, area)),
+      IslandPipeline.shape(pass(cells, routed("island"))))
   }
 
-  /** [[extractAll]] over a SHARED one-exchange materialization of the
-    * cell stream. Each family needs the stream at least twice (the
-    * per-table meta aggregate and the extract pass; the area side a
-    * third time for the province-dedup split), and when `cells` is a
-    * COMPUTED frame — a synthesized fixture, a join product, anything
-    * without scan-level pushdown — every branch re-runs the whole
-    * upstream pipeline. Here the stream goes through one
-    * repartition exchange that AQE's ReuseExchange serves to every
-    * branch, so the upstream runs exactly once.
-    *
-    * Keep plain [[extractAll]] for scanned sources (parquet, the
-    * CellTsv DSv2 path): there each branch re-reads only the columns it
-    * needs — far cheaper than forcing the full stream through an
-    * exchange. (The multi-sink [[ExtractJob]] needs neither: its one
-    * write reads the rendered lines from [[graft.io.CsvSink]]'s cache.)
-    *
-    * Barrier mechanics (the same canonical-equality discipline as the
-    * tfidf/surprisal exchange reuse in
-    * [[graft.ops.TextAnalysis.tfidfTopTerms]]): branch subtrees only
-    * reuse an exchange if they stay canonically EQUAL, so the filter
-    * above the repartition is ONE indivisible nondeterministic
-    * always-true conjunct ([[graft.functions.OpaqueTrueExpr]]) that
-    * both stops branch-specific predicates from being pushed across
-    * the exchange AND references every cell column, so per-branch
-    * column pruning (e.g. the province-dedup branch needing `seq`
-    * where the meta aggregate does not) cannot make the exchange
-    * subtrees diverge. The filter is a runtime no-op.
+  /** The family of the tables routed to `family`, null for the rest: a
+    * pass over it plans only that family's rule.
     */
-  def extractAllShared(cells: DataFrame): (DataFrame, DataFrame) = {
-    val shared = cells
-      .repartition(cells.sparkSession.sparkContext.defaultParallelism)
-      .where(graft.functions.CurationExprs.opaqueTrue(
-        col("table_id"), col("page"), col("row_idx"), col("seq"),
-        col("cells")))
-    extractAll(shared)
+  private def routed(family: String): Column =
+    when(col("route") === family, family)
+
+  /** The per-row pass, before the province dedup: each row of
+    * `cells ⋈ broadcast(meta)` goes through the row rule of its
+    * `family` — the table's route, or a literal that forces one family
+    * on every table, as the reference's unit tests call an extractor
+    * directly. Rows no rule keeps are dropped.
+    */
+  private[ops] def pass(cells: DataFrame, family: Column): DataFrame = {
+    val island = family === "island"
+    def pick(area: Column, isl: Column) =
+      when(family === "area", area).when(island, isl)
+    val code = col("code")
+    cells.join(broadcast(tableMeta(cells)), "table_id")
+      // the keep rule alone lands in the join condition: filtering on
+      // the projected columns would copy every cleanse chain into it
+      .filter(pick(AreaPipeline.kept, IslandPipeline.kept))
+      .withColumn("code", pick(AreaPipeline.code, IslandPipeline.code))
+      .select(pick(AreaPipeline.entityOf(code), lit("island")).as("entity"),
+        code,
+        pick(AreaPipeline.parentCode(code), IslandPipeline.parentCode(code))
+          .as("parent_code"),
+        pick(AreaPipeline.name, IslandPipeline.name(code)).as("name"),
+        col("seq"),
+        when(island, IslandPipeline.coordinate).as("coordinate"),
+        when(island, IslandPipeline.isPopulated).as("is_populated"),
+        when(island, IslandPipeline.isOutermostSmall)
+          .as("is_outermost_small"))
+  }
+
+  /** The provinces of `provinces`, deduped to their first occurrence in
+    * document order (A1, `extractors.py:110-112,166-169`), and the other
+    * rows of `rest`. The window shuffles only the (tiny) province
+    * stream, partitioned by code — parallel across codes, no global
+    * sort; a single `when()` over all rows would shuffle the whole
+    * stream.
+    */
+  private[ops] def firstProvinces(
+      provinces: DataFrame, rest: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("code")).orderBy(col("seq"))
+    provinces.filter(col("entity") === "province")
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1).drop("rn")
+      .unionByName(rest.filter(col("entity") =!= "province"))
   }
 }

@@ -7,11 +7,11 @@ import graft.config.EtlConfig
 import graft.io.CsvSink
 
 /** The whole-pipeline driver (`cli.py:77-205` `extract` minus PDF
-  * parsing): dispatch cell tables to the two extractor families, write
-  * the five entity CSVs in document order, fail on zero rows (A2,
-  * `cli.py:198-201`).
+  * parsing): extract every routed table in one pass
+  * ([[Dispatch.extract]]), write the five entity CSVs in document
+  * order, fail on zero rows (A2, `cli.py:198-201`).
   *
-  * S7 multi-sink fan-out: both families render to one frame of CSV
+  * S7 multi-sink fan-out: the extracted rows render to one frame of CSV
   * lines tagged by entity ([[lines]]), and [[CsvSink]] writes all five
   * entities in one ordered, entity-partitioned write. The sink caches
   * those lines (its range partitioner samples them before the write
@@ -31,39 +31,49 @@ object ExtractJob {
   final case class NoMatchingDataException(message: String)
       extends RuntimeException(message)
 
-  /** The entity fan-out of one extraction (`cli.py:183-194`): the
-    * [[EtlConfig.Areas]] sinks in order, each with its configured
-    * suffix and output headers, and one frame `(entity, seq, line)` of
-    * every row rendered as a CSV record in its entity's column order.
-    * The area family renders in ONE projection (a province has no
-    * parent column), so the area extract is planned once. Raises
+  /** Each entity's output columns in [[Dispatch.extract]]'s frame, in
+    * CSV order (SURVEY §1.2); an island's regency_code rides in
+    * parent_code.
+    */
+  val Columns: Map[String, Seq[String]] = {
+    val child = Seq("code", "parent_code", "name")
+    Map("province" -> Seq("code", "name"), "regency" -> child,
+      "district" -> child, "village" -> child,
+      "island" -> Seq("code", "parent_code", "coordinate", "is_populated",
+        "is_outermost_small", "name"))
+  }
+
+  /** The [[EtlConfig.Areas]] sinks in order, each with its configured
+    * suffix and output headers. Driver-side only: raises
     * [[EtlConfig.ConfigError]] for a missing entity config or a header
-    * count that differs from the entity's columns.
+    * count that differs from the entity's [[Columns]].
+    */
+  def sinks(config: EtlConfig.Config): Seq[CsvSink.Sink] =
+    EtlConfig.Areas.map { entity =>
+      val cfg = config.data.getOrElse(entity,
+        throw EtlConfig.ConfigError(
+          s"Missing or invalid configuration for area '$entity'"))
+      if (cfg.outputHeaders.length != Columns(entity).length)
+        throw EtlConfig.ConfigError(s"header arity mismatch for " +
+          s"$entity: ${cfg.outputHeaders} vs ${Columns(entity)}")
+      CsvSink.Sink(entity, cfg.filenameSuffix, cfg.outputHeaders)
+    }
+
+  /** The entity fan-out of one extraction (`cli.py:183-194`): the
+    * [[sinks]], and one frame `(entity, seq, line)` of every row of
+    * `extracted` ([[Dispatch.extract]]) rendered as a CSV record in its
+    * entity's column order, in one projection.
     */
   def lines(
-      area: DataFrame,
-      island: DataFrame,
+      extracted: DataFrame,
       config: EtlConfig.Config): (DataFrame, Seq[CsvSink.Sink]) = {
-    def dataCols(df: DataFrame) = df.columns.filterNot(_ == "seq").toSeq
-    val sinks = EtlConfig.Areas.map { entityName =>
-      val cols = dataCols(
-        if (entityName == "island") island
-        else AreaPipeline.entity(area, entityName))
-      val cfg = config.data.getOrElse(entityName,
-        throw EtlConfig.ConfigError(
-          s"Missing or invalid configuration for area '$entityName'"))
-      if (cfg.outputHeaders.length != cols.length)
-        throw EtlConfig.ConfigError(s"header arity mismatch for " +
-          s"$entityName: ${cfg.outputHeaders} vs $cols")
-      CsvSink.Sink(entityName, cfg.filenameSuffix, cfg.outputHeaders)
+    val out = sinks(config)
+    def render(entity: String) = CsvSink.line(Columns(entity).map(col): _*)
+    val Seq(first, rest @ _*) = EtlConfig.Areas
+    val line = rest.foldLeft(when(col("entity") === first, render(first))) {
+      (acc, entity) => acc.when(col("entity") === entity, render(entity))
     }
-    def line(cols: String*) = CsvSink.line(cols.map(col): _*)
-    val areaLines = area.select(col("entity"), col("seq"),
-      when(col("entity") === "province", line("code", "name"))
-        .otherwise(line("code", "parent_code", "name")).as("line"))
-    val islandLines = island.select(lit("island").as("entity"), col("seq"),
-      line(dataCols(island): _*).as("line"))
-    (areaLines.unionByName(islandLines), sinks)
+    (extracted.select(col("entity"), col("seq"), line.as("line")), out)
   }
 
   def run(
@@ -75,8 +85,7 @@ object ExtractJob {
       // single-task total-sort drain). Pass singleFile=true explicitly
       // for reference-parity one-file-per-entity layout (the CLI does).
       singleFile: Boolean = false): Result = {
-    val (area, island) = Dispatch.extractAll(cells)
-    val (rendered, sinks) = lines(area, island, config)
+    val (rendered, sinks) = lines(Dispatch.extract(cells), config)
     val written = CsvSink.write(rendered, sinks, destination, outputName,
       singleFile)
     val counts = sinks.map(_.entity).zip(written.map(_._2)).toMap

@@ -4,15 +4,15 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{Cleanse, Coordinates}
 
-/** Island extraction pipeline: cell tables -> island rows.
+/** Island extraction: cell tables -> island rows.
   * Reference: `extractors.py:179-298` (IslandExtractor), pinned by
   * `tests/test_extractors.py:491-710`.
   *
-  * Scale design mirrors [[AreaPipeline]]: header location + column
-  * inference happen in the shared per-table aggregate
-  * [[Dispatch.tableMeta]], from the top 4 rows of each table,
-  * broadcast back onto the stream; the row shaping is a single
-  * codegen'd projection.
+  * Header location and column inference happen in the shared per-table
+  * aggregate [[Dispatch.tableMeta]], from the top 4 rows of each table;
+  * the row rule is a set of `Column` builders over one row of
+  * `cells ⋈ meta`, which [[Dispatch.extract]] applies to the tables
+  * routed to island, in the same projection as the area rule.
   */
 object IslandPipeline {
 
@@ -83,50 +83,51 @@ object IslandPipeline {
     Cleanse.pyTrim(coalesce(
       when(idx >= 0, get(col("cells"), idx)), lit("")))
 
-  /** Full pipeline (`extractors.py:250-298`): locate header, infer
-    * columns, shape rows. Output:
-    * (code, regency_code, coordinate, is_populated, is_outermost_small,
-    * name, seq) in document order via seq.
-    *
-    * Like the reference's extractor called directly (as its unit tests
-    * do), this processes every table with a header in its top 4 rows.
-    * The dispatched pipeline passes [[Dispatch.tableMeta]] filtered to
-    * the island route as `precomputedMeta`, which also applies the
-    * dispatcher's 3-row `matches()` rule (`cli.py:183-191`).
+  /** Code: the code column's cell. */
+  private[ops] def code: Column = cellAt(col("code_idx"))
+
+  /** Whether a row is kept: below its table's header (found in the top
+    * 4 rows, `extractors.py:252-263`), with a code of the island format
+    * (`extractors.py:274-276`).
     */
-  def extract(
-      cells: DataFrame,
-      precomputedMeta: Option[DataFrame] = None): DataFrame = {
-    val meta = precomputedMeta.getOrElse(tableMeta(cells))
-      .filter(col("header_idx") >= 0)
+  private[ops] def kept: Column =
+    col("header_idx") >= 0 && col("row_idx") > col("header_idx") &&
+      code.rlike(Cleanse.IslandCodeRegex)
 
-    val withMeta = cells.join(broadcast(meta), "table_id")
-      .filter(col("row_idx") > col("header_idx"))
-
-    val rawCode = cellAt(col("code_idx"))
-    val rawName = cellAt(col("name_idx"))
-    val nameClean = Cleanse.cleanseIslandName(rawName)
-    // F8 name-equals-code rescue (`extractors.py:279-284`); the
-    // reference's `(colmap["code"] or 0) + 1` quirk maps 0 -> 1 too.
+  /** Name, cleansed, with the F8 name-equals-code rescue
+    * (`extractors.py:279-284`); the reference's
+    * `(colmap["code"] or 0) + 1` quirk maps 0 -> 1 too.
+    */
+  private[ops] def name(code: Column): Column = {
+    val nameClean = Cleanse.cleanseIslandName(cellAt(col("name_idx")))
     val nextIdx = when(col("code_idx") >= 0, col("code_idx") + 1).otherwise(1)
     val nextClean = Cleanse.cleanseIslandName(cellAt(nextIdx))
-    val name = when(nameClean === col("code") &&
-        nextClean =!= "" && nextClean =!= col("code"), nextClean)
-      .otherwise(nameClean)
-
-    withMeta
-      .withColumn("code", rawCode)
-      .filter(col("code") =!= "" && col("code").rlike(Cleanse.IslandCodeRegex))
-      .select(
-        col("code"),
-        Cleanse.islandParentCode(col("code")).as("regency_code"),
-        Coordinates.formatCoordinate(cellAt(col("coord_idx")))
-          .as("coordinate"),
-        Cleanse.isPopulated(upper(cellAt(col("status_idx"))))
-          .as("is_populated"),
-        Cleanse.isOutermostSmall(upper(cellAt(col("info_idx"))))
-          .as("is_outermost_small"),
-        name.as("name"),
-        col("seq"))
+    when(nameClean === code && nextClean =!= "" && nextClean =!= code,
+      nextClean).otherwise(nameClean)
   }
+
+  private[ops] def parentCode(code: Column): Column =
+    Cleanse.islandParentCode(code)
+
+  private[ops] def coordinate: Column =
+    Coordinates.formatCoordinate(cellAt(col("coord_idx")))
+
+  private[ops] def isPopulated: Column =
+    Cleanse.isPopulated(upper(cellAt(col("status_idx"))))
+
+  private[ops] def isOutermostSmall: Column =
+    Cleanse.isOutermostSmall(upper(cellAt(col("info_idx"))))
+
+  private[ops] def shape(rows: DataFrame): DataFrame =
+    rows.select(col("code"), col("parent_code").as("regency_code"),
+      col("coordinate"), col("is_populated"), col("is_outermost_small"),
+      col("name"), col("seq"))
+
+  /** The island extractor called directly, as the reference's unit
+    * tests do: every table with a header in its top 4 rows, routed
+    * there or not. Output: (code, regency_code, coordinate,
+    * is_populated, is_outermost_small, name, seq).
+    */
+  def extract(cells: DataFrame): DataFrame =
+    shape(Dispatch.pass(cells, lit("island")))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Cleanse
 import graft.ops._
-import Shared.T
+import Shared.{T, spread}
 
 /** The paper's ETL primitives (cleanse, parent codes, flags, first-
   * occurrence dedup, page pruning) over synthesized messy columns, and
@@ -217,9 +217,6 @@ object EtlQueries {
     // broadcast join, variant projection, cleanse chain (native
     // expressions), length classification, parent prefixes, ordered
     // province dedup. The oracle replays the data-row semantics in SQL.
-    // (extractAllShared's one exchange feeds the meta aggregate, the
-    // extract pass, and the province-dedup split — the synthesized
-    // stream is computed once instead of once per branch.)
     QueryDef("pipeline_area_e2e", (s, dir) => {
       val k = col("c_custkey")
       val code = when(pmod(k, lit(4)) === 0,
@@ -228,7 +225,8 @@ object EtlQueries {
         .when(pmod(k, lit(4)) === 2, lpad(k.cast("string"), 8, "0"))
         .otherwise(lpad(k.cast("string"), 13, "0"))
       val pad5 = Seq.fill(5)(lit(""))
-      val data = T(s, dir, "customer").select(
+      // the spread's one exchange serves every branch of the extract
+      val data = spread(T(s, dir, "customer")).select(
         lit(0L).as("table_id"), lit(1).as("page"),
         (k + 2).cast("int").as("row_idx"), (k + 2).as("seq"),
         array(code +: col("c_name") +: pad5: _*).as("cells"))
@@ -245,7 +243,7 @@ object EtlQueries {
           Some(acc.fold(row)(_.unionByName(row)))
       }.get
       val cells = header.unionByName(data)
-      val (areaRows, _) = Dispatch.extractAllShared(cells)
+      val (areaRows, _) = Dispatch.extractAll(cells)
       areaRows.select(col("entity"), col("code"),
         coalesce(col("parent_code"), lit("")).as("parent"), col("name"))
     },
@@ -289,10 +287,7 @@ object EtlQueries {
       val status = when(pmod(k, lit(2)) === 0, lit("BP")).otherwise(lit("TBP"))
       val info = when(pmod(k, lit(3)) === 0, lit("PPKT")).otherwise(lit(""))
       val name = concat(lit("Pulau "), k.cast("string"))
-      // extractAllShared's repartition also spreads the single-file
-      // fixture scan across cores (the old data-level repartition,
-      // measured 2× at sf0.1), so no separate exchange here
-      val data = T(s, dir, "orders")
+      val data = spread(T(s, dir, "orders"))
         .select(
         lit(0L).as("table_id"), lit(1).as("page"),
         (k + 1).cast("int").as("row_idx"), (k + 1).as("seq"),
@@ -302,8 +297,7 @@ object EtlQueries {
         lit(0).as("row_idx"), lit(0L).as("seq"),
         typedLit(Seq("No", "Kode Pulau", "Nama Pulau", "Koordinat",
           "BP/TBP", "Keterangan")).as("cells"))
-      val (_, islandRows) =
-        Dispatch.extractAllShared(header.unionByName(data))
+      val (_, islandRows) = Dispatch.extractAll(header.unionByName(data))
       islandRows.select(col("code"), col("regency_code"), col("coordinate"),
         col("is_populated"), col("is_outermost_small"), col("name"))
     },

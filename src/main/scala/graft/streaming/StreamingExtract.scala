@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.config.EtlConfig
 import graft.io.CsvSink
-import graft.ops.{Dispatch, ExtractJob}
-import graft.schema.RawTableRow
+import graft.ops.{CellTables, Dispatch, ExtractJob}
 
 /** Structured-Streaming analog of the reference's manually-driven
   * micro-batch loop (SURVEY §2.9): the chunk loop (`cli.py:170-194`)
@@ -16,10 +15,12 @@ import graft.schema.RawTableRow
   * appends; the graceful interrupt (`cli.py:30-37`) is `query.stop()`.
   *
   * Each micro-batch runs the SAME batch pipeline as [[ExtractJob]]
-  * (dispatch → extract → [[ExtractJob.lines]] with
-  * [[EtlConfig.Default]]), so the plan properties (broadcast metas,
-  * pushed filters, codegen) carry over unchanged. The run-global
-  * `_seen_provinces` set (`extractors.py:110-112,166-169`) is a table
+  * (the one [[Dispatch.extract]] pass → [[ExtractJob.lines]] with
+  * [[EtlConfig.Default]]), so the plan properties (one broadcast meta,
+  * pushed filters, codegen) carry over unchanged; the batch's extracted
+  * frame is cached once and feeds both the province record and the
+  * lines. The run-global `_seen_provinces` set
+  * (`extractors.py:110-112,166-169`) is a table
   * of province codes under the checkpoint dir, one entry per batch id:
   * batch B records its own codes, then drops the provinces whose code
   * an entry below B holds. A replayed batch overwrites its own entry
@@ -28,12 +29,11 @@ import graft.schema.RawTableRow
 object StreamingExtract {
 
   /** File-source stream of cell tables (the post-camelot boundary):
-    * new parquet files under `cellsDir` are the "new chunks".
+    * new parquet files under `cellsDir` are the "new chunks", read with
+    * the fixed [[CellTables.Schema]].
     */
   def readCells(spark: SparkSession, cellsDir: String): DataFrame =
-    spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[RawTableRow].schema)
-      .parquet(cellsDir)
+    spark.readStream.schema(CellTables.Schema).parquet(cellsDir)
 
   /** End-to-end streaming extract: per micro-batch, run the batch
     * dispatch+extract pipeline and hand its rendered lines and the
@@ -54,8 +54,7 @@ object StreamingExtract {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (extracted, island) = Dispatch.extractAll(batch)
-        val cached = extracted.cache()
+        val cached = Dispatch.extract(batch).cache()
         try {
           // record this batch's codes first: the table then exists, and
           // a replay overwrites the same entry
@@ -65,9 +64,9 @@ object StreamingExtract {
           val seen = batch.sparkSession.read.parquet(seenDir)
             .filter(col("batch_id") < batchId)
             .select(lit("province").as("entity"), col("code"))
-          val area = cached.join(broadcast(seen), Seq("entity", "code"),
-            "left_anti")
-          val (lines, sinks) = ExtractJob.lines(area, island, EtlConfig.Default)
+          val (lines, sinks) = ExtractJob.lines(cached.join(
+            broadcast(seen), Seq("entity", "code"), "left_anti"),
+            EtlConfig.Default)
           sink(batchId, lines, sinks)
         } finally { cached.unpersist(); () }
       }

@@ -4,7 +4,7 @@ import java.nio.file.Paths
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import graft.config.EtlConfig
-import graft.ops.{ExtractJob, PageRange}
+import graft.ops.{CellTables, ExtractJob, PageRange}
 
 /** CLI entry mirroring the reference's `idnareaetl extract` command
   * (`cli.py:77-205`), minus PDF parsing: input is a cell-table parquet
@@ -34,17 +34,29 @@ object RunEtl {
     "usage: RunEtl <cells.parquet> <destDir> <outputName> " +
       "[--config <toml>] [--pages <range>] [--multi-file]"
 
-  /** The cells to extract: the parquet at `path`, pruned to `pageRange`
-    * by one pushed-down predicate. Pages past the last one select
-    * nothing, as the reference clips to the PDF's page count
-    * (`utils.py:100`), so no Spark job runs before extraction.
+  /** The cells to extract: the parquet at `path`, read with the fixed
+    * cell schema ([[CellTables.read]]) and pruned to `pageRange` by one
+    * pushed-down predicate. Pages past the last one select nothing, as
+    * the reference clips to the PDF's page count (`utils.py:100`), so
+    * no Spark job runs before extraction.
     */
   def input(
       spark: SparkSession,
       path: String,
       pageRange: Option[String]): DataFrame = {
-    val all = spark.read.parquet(path)
+    val all = CellTables.read(spark, path)
     pageRange.fold(all)(r => all.filter(PageRange.predicate(r, col("page"))))
+  }
+
+  /** The config at `path` (default: the shipped one), checked against
+    * the sinks it must drive ([[ExtractJob.sinks]]) on the driver, so a
+    * wrong header count fails before any Spark session starts.
+    */
+  def config(path: Option[String]): EtlConfig.Config = {
+    val config = path.map(p => EtlConfig.load(Paths.get(p)))
+      .getOrElse(defaultConfig)
+    ExtractJob.sinks(config)
+    config
   }
 
   def main(args: Array[String]): Unit = {
@@ -77,38 +89,39 @@ object RunEtl {
         sys.exit(1)
       }
     }
-    val config =
-      try configPath.map(p => EtlConfig.load(Paths.get(p)))
-        .getOrElse(defaultConfig)
+    val cfg =
+      try config(configPath)
       catch {
         case e: EtlConfig.ConfigError =>
           // reference prints "Configuration error: ..." and exits 1
           // (`cli.py:140-144`)
           System.err.println(s"Configuration error: ${e.getMessage}")
           sys.exit(1)
-          throw e // unreachable; keeps the type checker happy
       }
 
     val spark = graft.Harness.session()
 
     val t0 = System.nanoTime()
-    try {
-      val result = ExtractJob.run(input(spark, inputPath, pageRange), dest,
-        name, config, singleFile = singleFile)
-      val secs = (System.nanoTime() - t0) / 1e9
-      // report shape follows `cli.py:196,203-205`
-      println(s"Extraction completed in ${PageRange.formatDuration(secs)}")
-      println(s"Total rows extracted: ${result.total}")
-      result.counts.toSeq.sortBy(_._1).foreach { case (e, c) =>
-        println(s"  $e: $c")
-      }
-      result.files.foreach(f => println(s"  -> $f"))
-    } catch {
-      case e: ExtractJob.NoMatchingDataException =>
-        System.err.println(s"Error: ${e.message}")
-        spark.stop()
-        sys.exit(1)
+    val failure =
+      try {
+        val result = ExtractJob.run(input(spark, inputPath, pageRange), dest,
+          name, cfg, singleFile = singleFile)
+        val secs = (System.nanoTime() - t0) / 1e9
+        // report shape follows `cli.py:196,203-205`
+        println(s"Extraction completed in ${PageRange.formatDuration(secs)}")
+        println(s"Total rows extracted: ${result.total}")
+        result.counts.toSeq.sortBy(_._1).foreach { case (e, c) =>
+          println(s"  $e: $c")
+        }
+        result.files.foreach(f => println(s"  -> $f"))
+        None
+      } catch {
+        case e: ExtractJob.NoMatchingDataException => Some(e.message)
+        case e: CellTables.SchemaError => Some(e.message)
+      } finally spark.stop()
+    failure.foreach { message =>
+      System.err.println(s"Error: $message")
+      sys.exit(1)
     }
-    spark.stop()
   }
 }

@@ -131,11 +131,11 @@ class SparkEntrySpec extends SparkSpec {
     // instead of reading as bench noise. Counts are shuffle Exchanges
     // only — BroadcastExchange (small dims) and ReusedExchange are
     // deliberate and excluded.
-    // NOTE these are STATIC-plan counts: extractAllShared's one
-    // repartition prints once per consuming branch here (area 4×,
-    // island 2×) and collapses to a single exchange + ReusedExchange
-    // at runtime — the "e2e pipelines scan once and reuse" spec below
-    // pins that.
+    // NOTE these are STATIC-plan counts: the fixture's one spread
+    // repartition prints once per consuming branch here (area 4×: the
+    // province branch, the rest, and the meta under each; island 2×)
+    // and collapses to a single exchange + ReusedExchange at runtime —
+    // the "e2e pipelines scan once and reuse" spec below pins that.
     val shuffles = raw"(?<!Broadcast|Reused)Exchange".r
     for ((name, pinned) <- Seq(
         "pipeline_area_e2e" -> 7, "pipeline_island_e2e" -> 3)) {
@@ -170,11 +170,12 @@ class SparkEntrySpec extends SparkSpec {
   }
 
   test("e2e pipelines scan once and reuse the shared exchange at runtime") {
-    // The island pipeline dropped its explicit repartition on the
-    // strength of AQE collapsing extractAllShared's per-branch
-    // repartition prints into one exchange + ReusedExchange — if that
-    // reuse silently breaks, the synthesizing pipeline re-runs per
-    // branch and only bench noise would show it (ADVICE r10). Floors
+    // Both fixtures spread their single-file scan through one
+    // repartition, which AQE serves to every branch of the extract
+    // (the meta aggregate and the row pass; the area side's province
+    // branch too) as one exchange + ReusedExchange — if that reuse
+    // silently breaks, the synthesizing pipeline re-runs per branch
+    // and only bench noise would show it (ADVICE r10). Floors
     // measured with `graft.tools.Inspect reuse` at sf0.001: area
     // reused=3, island reused=1, scans=1 both.
     for ((name, minReused) <- Seq(

@@ -1,13 +1,15 @@
 package graft.ops
 
+import java.nio.file.Files
 import graft.SparkSpec
+import graft.config.EtlConfig
 
 /** Physical-plan pins for the dispatch + extract product: routing is
-  * one per-table metadata aggregate that each family filters to its own
-  * route, so the ONLY joins in either side's plan are broadcast hash
-  * joins of that tiny meta — a shuffle (sort-merge) join of the cell
-  * stream would be a scale regression (the stream side must never move
-  * for dispatch).
+  * one per-table metadata aggregate, broadcast onto the cell stream by
+  * the one extract pass, so the ONLY joins in the plan are broadcast
+  * hash joins of that tiny meta — a shuffle (sort-merge) join of the
+  * cell stream would be a scale regression (the stream side must never
+  * move for dispatch).
   */
 class DispatchPlanSpec extends SparkSpec {
 
@@ -49,5 +51,25 @@ class DispatchPlanSpec extends SparkSpec {
       assert(metaAggs == 1, s"$name side plans $metaAggs meta aggregates:\n$p")
       assert(!p.contains("LeftAnti"), s"$name side plans an anti-join:\n$p")
     }
+  }
+
+  test("the product's lines read scanned cells at most 3 times, with one " +
+      "meta aggregate and broadcast-only joins") {
+    // the meta aggregate, the province branch and the rest; AQE serves
+    // the one meta aggregate stage to both branches' broadcasts
+    val dir = Files.createTempDirectory("graft-dispatch-plan-")
+      .resolve("cells").toString
+    CellTables.ofGrids(spark, Seq(Fixtures.dfArea, Fixtures.dfIsland,
+      Fixtures.dfAreaUnmatched)).write.parquet(dir)
+    val (lines, _) = ExtractJob.lines(
+      Dispatch.extract(CellTables.read(spark, dir)), EtlConfig.Default)
+    val p = graft.tools.Inspect.finalPlan(lines)
+    val (scans, _, _) = graft.tools.Inspect.reuseCounts(p)
+    assert(scans <= 3, s"$scans cell scans:\n$p")
+    val metaAggs = p.linesIterator
+      .count(l => l.contains("Aggregate(") && l.contains("partial_"))
+    assert(metaAggs == 1, s"$metaAggs meta aggregates:\n$p")
+    val joins = raw"\w*(Join|CartesianProduct)\b".r.findAllIn(p).toSet
+    assert(joins == Set("BroadcastHashJoin"), s"joins $joins:\n$p")
   }
 }

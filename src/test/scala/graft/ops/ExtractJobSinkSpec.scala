@@ -80,10 +80,11 @@ class ExtractJobSinkSpec extends SparkSpec {
 
   test("one ExtractJob.run on the three-table fixture runs a pinned " +
       "number of jobs in both layouts") {
-    // the extract's five (metas, the area dedup shuffle), the cache
-    // fill, the range sample (one-partition layout: none), the range
-    // shuffle and the write
-    for ((singleFile, pinned) <- Seq(false -> 9, true -> 8)) {
+    // the extract's four (the one meta aggregate, its broadcast to the
+    // province branch and to the rest, the province dedup shuffle), the
+    // cache fill, the range sample (one-partition layout: none), the
+    // range shuffle and the write
+    for ((singleFile, pinned) <- Seq(false -> 8, true -> 7)) {
       val n = jobs(ExtractJob.run(threeTables, tmpDir().toString, "j",
         EtlConfig.Default, singleFile))
       assert(n == pinned, s"singleFile=$singleFile ran $n jobs")
@@ -126,8 +127,7 @@ class ExtractJobSinkSpec extends SparkSpec {
       "several range partitions") {
     val cells = CellTables.ofGrids(spark,
       Seq.fill(12)(Seq(Fixtures.dfArea, Fixtures.dfIsland)).flatten)
-    val (area, island) = Dispatch.extractAll(cells)
-    val expected = ExtractJob.lines(area, island, EtlConfig.Default)._1
+    val expected = ExtractJob.lines(Dispatch.extract(cells), EtlConfig.Default)._1
       .groupBy("entity").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val key = "spark.sql.adaptive.coalescePartitions.enabled"
