@@ -1,19 +1,24 @@
 package graft.functions
 
+import java.util.regex.Pattern
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.util.CollationAwareUTF8String
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Text-cleansing expression library.
+/** Text-cleansing library.
   *
   * Reference semantics: idn-area-etl `utils.py` (clean_name `utils.py:36-38`,
   * fix_wrapped_name `utils.py:41-65`, normalize_words `utils.py:68-79`) and
   * the pinned unit tables in `tests/test_utils.py:21-106`.
   *
-  * Design: everything regex-expressible is a pure `Column` chain
-  * (whole-stage-codegen'd, no serialization boundary); only the two
-  * genuinely procedural functions (`fixWrappedName`, `normalizeWords`)
-  * are Scala UDFs, with the pure-Scala implementation exposed for unit
-  * tests and for driver-side header inference.
+  * Design: each cleanse function is ONE plain Scala function over
+  * `String`, the form the ETL row rules ([[graft.ops.AreaPipeline.row]],
+  * [[graft.ops.IslandPipeline.row]]) call once per row. The `Column`
+  * builders of the same names wrap those functions in native Catalyst
+  * nodes ([[NativeExpressions]]) for the registry queries and SQL.
+  * Every regex is compiled once, here: `String.replaceAll`/`split`
+  * would compile its pattern again on every call.
   *
   * All regexes carry the `(?U)` (UNICODE_CHARACTER_CLASS) flag so that
   * `\s`/`\d` match Unicode whitespace/digits exactly like Python's
@@ -22,39 +27,57 @@ import org.apache.spark.sql.functions._
   */
 object Cleanse {
 
-  /** Python-`str.strip()` equivalent (Spark's `trim` only strips 0x20;
-    * `(?U)` makes `\s` cover NBSP etc. like Python).
-    */
-  def pyTrim(c: Column): Column = regexp_replace(c, "(?U)^\\s+|\\s+$", "")
+  private val Strip = Pattern.compile("(?U)^\\s+|\\s+$")
+  private val Rstrip = Pattern.compile("(?U)\\s+$")
+  private[graft] val Whitespace = Pattern.compile("(?U)\\s+")
 
+  /** An ASCII graphic character: never `(?U)\s`, so a string that
+    * starts and ends with one has nothing to strip.
+    */
+  private def graphic(c: Char): Boolean = c > ' ' && c < '\u007f'
+
+  /** Python `str.strip()` (`(?U)` makes `\s` cover NBSP etc. like
+    * Python; Spark's `trim` only strips 0x20).
+    */
   private[graft] def pyStrip(s: String): String =
-    s.replaceAll("(?U)^\\s+|\\s+$", "")
+    if (s.isEmpty || graphic(s.charAt(0)) && graphic(s.charAt(s.length - 1))) s
+    else Strip.matcher(s).replaceAll("")
   private[graft] def pyRstrip(s: String): String =
-    s.replaceAll("(?U)\\s+$", "")
+    if (s.isEmpty || graphic(s.charAt(s.length - 1))) s
+    else Rstrip.matcher(s).replaceAll("")
+
+  private val LeadDigitsNewline = Pattern.compile("(?U)^\\d+\n")
+  private val NewlineTrailDigits = Pattern.compile("(?U)\n\\d+$")
+  private val Newlines = Pattern.compile("\n+")
+  private val LeadDigitsSpace = Pattern.compile("(?U)^\\d+\\s+")
+  private val SpaceRuns = Pattern.compile("(?U)\\s{2,}")
 
   /** clean_name (`utils.py:23-38`): strip; drop CR; TAB->space; then the
     * 5 ordered regex passes (leading digits+NL, trailing NL+digits,
     * NL-collapse, leading digits+space, multi-space collapse); strip.
     * Order is load-bearing: digit artifacts are stripped while newlines
     * still exist, so `"1 Bakongan"` -> `"Bakongan"` but `"Limba U I"`
-    * survives. Pure built-ins — stays inside codegen.
-    *
-    * Null-propagating by design (Column semantics) — callers that need
-    * "" should wrap with `coalesce(..., lit(""))` or use [[cleanseName]].
-    * Parity-pinned against a plain-Scala mirror in NativeParitySpec;
-    * CleanseSpec holds the reference's unit tables.
+    * survives. Null reads as "". CleanseSpec holds the reference's unit
+    * tables; NativeParitySpec pins it to the 9-regex `Column` chain it
+    * replaced (`graft.ops.Reference.cleanNameChain`).
     */
-  def cleanName(c: Column): Column = {
-    val t0 = pyTrim(c)
-    val t1 = regexp_replace(t0, "\r", "")
-    val t2 = regexp_replace(t1, "\t", " ")
-    val t3 = regexp_replace(t2, "(?U)^\\d+\n", "")
-    val t4 = regexp_replace(t3, "(?U)\n\\d+$", "")
-    val t5 = regexp_replace(t4, "\n+", " ")
-    val t6 = regexp_replace(t5, "(?U)^\\d+\\s+", "")
-    val t7 = regexp_replace(t6, "(?U)\\s{2,}", " ")
-    pyTrim(t7)
+  def cleanName(name: String): String = {
+    if (name == null) return ""
+    var t = pyStrip(name).replace("\r", "").replace('\t', ' ')
+    if (t.indexOf('\n') >= 0) {
+      t = LeadDigitsNewline.matcher(t).replaceAll("")
+      t = NewlineTrailDigits.matcher(t).replaceAll("")
+      t = Newlines.matcher(t).replaceAll(" ")
+    }
+    if (t.nonEmpty && Character.isDigit(t.codePointAt(0)))
+      t = LeadDigitsSpace.matcher(t).replaceAll("")
+    pyStrip(SpaceRuns.matcher(t).replaceAll(" "))
   }
+
+  /** [[cleanName]] as a native expression; null-propagating like any
+    * `Column` function.
+    */
+  def cleanName(c: Column): Column = NativeExpressions.cleanName(c)
 
   /** fix_wrapped_name (`utils.py:41-65`): repairs PDF line-wraps.
     * Drops blank lines; merges a <=3-char lowercase-initial fragment
@@ -88,7 +111,7 @@ object Cleanse {
     if (words == null) return ""
     val s = pyStrip(words)
     if (s.isEmpty) return ""
-    val tokens = s.split("(?U)\\s+")
+    val tokens = Whitespace.split(s)
     if (tokens.exists(t => t.length > 1 && t != "/" && t != "-")) s
     else tokens.mkString("")
   }
@@ -103,6 +126,10 @@ object Cleanse {
     * `normalize_words(clean_name(fix_wrapped_name(s))) if s else ""`
     * (`extractors.py:151`).
     */
+  def cleanseName(s: String): String =
+    if (s == null || s.isEmpty) ""
+    else normalizeWordsScala(cleanName(fixWrappedNameScala(s)))
+
   def cleanseName(c: Column): Column =
     when(c.isNull || c === "", lit(""))
       .otherwise(normalizeWords(cleanName(fixWrappedName(c))))
@@ -110,6 +137,8 @@ object Cleanse {
   /** Island-side cleanse: `clean_name(fix_wrapped_name(s))` — no
     * normalize_words pass (`extractors.py:279`).
     */
+  def cleanseIslandName(s: String): String = cleanName(fixWrappedNameScala(s))
+
   def cleanseIslandName(c: Column): Column =
     cleanName(fixWrappedName(coalesce(c, lit(""))))
 
@@ -123,6 +152,7 @@ object Cleanse {
 
   /** Island code pattern, e.g. "11.01.40001" (`utils.py:20`). */
   val IslandCodeRegex = "^\\d{2}\\.\\d{2}\\.\\d{5}$"
+  private[graft] val IslandCode = Pattern.compile(IslandCodeRegex)
 
   /** F7: parent prefix for regency/district/village (`extractors.py:171-175`). */
   def parentPrefix(code: Column, parentLen: Int): Column =
@@ -135,13 +165,22 @@ object Cleanse {
     when(substring(code, 4, 2) === "00", lit(""))
       .otherwise(substring(code, 1, 5))
 
+  private val PopulatedRegex = "(?U)^\\s*BP\\b"
+  private[graft] val Populated = Pattern.compile(PopulatedRegex)
+
   /** F5: is_populated — status upper-cased matches `^\s*BP\b`
     * (`extractors.py:287-290`). `BP` prefix ⇒ 1, `TBP` ⇒ 0.
     */
   def isPopulated(status: Column): Column =
-    when(upper(status).rlike("(?U)^\\s*BP\\b"), lit(1)).otherwise(lit(0))
+    when(upper(status).rlike(PopulatedRegex), lit(1)).otherwise(lit(0))
 
   /** F5: is_outermost_small — info contains "PPKT" (`extractors.py:291`). */
   def isOutermostSmall(info: Column): Column =
     when(upper(info).contains("PPKT"), lit(1)).otherwise(lit(0))
+
+  /** Spark's `upper` on a plain string: the ICU root case mapping that
+    * `spark.sql.icu.caseMappings.enabled` (on by default) selects.
+    */
+  private[graft] def upperCase(s: String): String =
+    CollationAwareUTF8String.toUpperCase(UTF8String.fromString(s)).toString
 }

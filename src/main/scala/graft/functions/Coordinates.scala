@@ -1,5 +1,6 @@
 package graft.functions
 
+import java.util.regex.Pattern
 import org.apache.spark.sql.Column
 
 /** DMS coordinate canonicalization.
@@ -33,20 +34,23 @@ object Coordinates {
     "(\\d{1,2}(?:\\.\\d+)?)\\s*\"?\\s*" +
     "([NSEW])?").r
 
+  private val QuoteRuns = Pattern.compile("\"{2,}")
+  private val PrimeRuns = Pattern.compile("'{2,}")
+
   /** Smart quotes/primes -> ASCII; collapse duplicated quotes
     * (`utils.py:137-150`).
     */
-  private def normalizeQuotes(s: String): String =
-    s.replace('’', '\'').replace('‘', '\'').replace('′', '\'')
+  private def normalizeQuotes(s: String): String = {
+    val ascii = s.replace('’', '\'').replace('‘', '\'').replace('′', '\'')
       .replace('“', '"').replace('”', '"').replace('″', '"')
-      .replaceAll("\"{2,}", "\"")
-      .replaceAll("'{2,}", "'")
+    PrimeRuns.matcher(QuoteRuns.matcher(ascii).replaceAll("\"")).replaceAll("'")
+  }
 
   private def mapHemispheres(s: String): String =
     HemiTokenRe.replaceAllIn(s, m => HemiMap(m.group(1).toUpperCase))
 
   private def normalizeSpaces(s: String): String =
-    Cleanse.pyStrip(s.replaceAll("(?U)\\s+", " "))
+    Cleanse.pyStrip(Cleanse.Whitespace.matcher(s).replaceAll(" "))
 
   /** "3"->"3.00", "3.4"->"3.40", "3.444"->"3.44" (`utils.py:166-173`). */
   private def formatSecondsTwoDecimals(sec: String): String = {

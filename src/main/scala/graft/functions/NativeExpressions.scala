@@ -50,8 +50,8 @@ trait GraftTypeChecks { self: Expression =>
   protected val isString: DataType => Boolean = _ == StringType
 }
 
-/** Native Catalyst expressions for the three procedural cleanse
-  * functions — the (b) tier of the engine's extension ladder: a custom
+/** Native Catalyst expressions for the cleanse functions — the (b)
+  * tier of the engine's extension ladder: a custom
   * `Expression` with `doGenCode` beats a Scala UDF because it skips the
   * ScalaUDF machinery entirely (no encoder round-trip, no
   * `Option`/null boxing, no lambda dispatch) and participates in
@@ -77,6 +77,15 @@ abstract class StringMapExpression extends UnaryExpression with GraftTypeChecks 
     defineCodeGen(ctx, ev, c =>
       "org.apache.spark.unsafe.types.UTF8String.fromString(" +
         s"$staticCall($c.toString()))")
+}
+
+/** `clean_name` (`utils.py:23-38`) as a codegen'd expression. */
+case class CleanNameExpr(child: Expression) extends StringMapExpression {
+  override def staticCall: String = "graft.functions.Cleanse.cleanName"
+  override def eval(s: String): String = Cleanse.cleanName(s)
+  override def prettyName: String = "graft_clean_name"
+  override protected def withNewChildInternal(newChild: Expression) =
+    copy(child = newChild)
 }
 
 /** `normalize_words` (`utils.py:68-79`) as a codegen'd expression. */
@@ -281,6 +290,7 @@ object NativeExpressions {
   private def expr(c: Column): Expression = ColumnBridge.expression(c)
 
   /** Column builders over the native nodes. */
+  def cleanName(c: Column): Column = col(CleanNameExpr(expr(c)))
   def normalizeWords(c: Column): Column = col(NormalizeWordsExpr(expr(c)))
   def fixWrappedName(c: Column): Column = col(FixWrappedNameExpr(expr(c)))
   def formatCoordinate(c: Column): Column = col(FormatCoordinateExpr(expr(c)))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Cleanse
 
@@ -8,9 +8,9 @@ import graft.functions.Cleanse
   * rows. Reference: `extractors.py:103-176` (AreaExtractor), pinned by
   * `tests/test_extractors.py:405-488`.
   *
-  * The row rule is a set of `Column` builders over one row of
+  * The row rule ([[row]]) is one plain Scala function over one row of
   * `cells ⋈ meta`; [[Dispatch.extract]] applies it to the tables routed
-  * to area, in the same projection as the island rule. The only
+  * to area, in the same typed pass as the island rule. The only
   * per-table metadata it reads is the table width.
   */
 object AreaPipeline {
@@ -35,66 +35,45 @@ object AreaPipeline {
     Dispatch.tableMeta(cells).select(col("table_id"), col("table_width"),
       (col("route") <=> "area").as("is_area"))
 
-  // `get` is 0-based and null-safe for ragged rows (ANSI mode on).
-  private def cell(i: Int): Column = coalesce(get(col("cells"), lit(i)), lit(""))
-
-  private def nonEmpty(c: Column): Column = {
-    val t = Cleanse.pyTrim(c)
-    when(t === "", lit(null)).otherwise(t)
-  }
-
-  /** Code (`extractors.py:124-155`): cell 0, trimmed. */
-  private[ops] def code: Column = Cleanse.pyTrim(cell(0))
-
-  /** Name (`extractors.py:134-151`): the first non-empty of the
-    * width-dependent candidates (width 6 -> cols {1,3}; width >= 7 ->
-    * {1,4,5,6}), cleansed.
+  /** Name candidates by table width (`extractors.py:134-151`): width 6
+    * -> cols {1,3}; width >= 7 -> {1,4,5,6}.
     */
-  private[ops] def name: Column = {
-    val w = col("table_width")
-    val picked =
-      when(w === 6, coalesce(nonEmpty(cell(1)), nonEmpty(cell(3))))
-        .when(w >= 7, coalesce(nonEmpty(cell(1)), nonEmpty(cell(4)),
-          nonEmpty(cell(5)), nonEmpty(cell(6))))
-    Cleanse.cleanseName(coalesce(picked, lit("")))
-  }
+  private val NameColumns6 = Array(1, 3)
+  private val NameColumns7 = Array(1, 4, 5, 6)
 
-  /** Whether a row is kept (`extractors.py:124-176`): below the two
-    * header rows of a width-6 or width->=7 table, with a non-empty name
-    * and a code of an area length. Width 2-5 tables raise IndexError in
-    * the reference and are skipped by the CLI's per-table error
-    * isolation (`cli.py:190-191`) — here they simply produce no rows.
+  /** The area row rule (`extractors.py:124-176`) over one row of
+    * `cells ⋈ meta`. A row is kept below the two header rows of a
+    * width-6 or width->=7 table, with a code of an area length and a
+    * non-empty name. Width 2-5 tables raise IndexError in the reference
+    * and are skipped by the CLI's per-table error isolation
+    * (`cli.py:190-191`) — here they simply produce no rows.
+    *
+    *  - code: cell 0, stripped; its length in code points picks the
+    *    entity (2 province, 5 regency, 8 district, 13 village) and the
+    *    parent prefix (`extractors.py:164-176`); a province has none;
+    *  - name: the first non-empty stripped candidate, cleansed.
     */
-  private[ops] def kept: Column = {
-    val w = col("table_width")
-    col("row_idx") >= 2 && (w === 6 || w >= 7) &&
-      length(code).isin(Cleanse.ProvinceCodeLength, Cleanse.RegencyCodeLength,
-        Cleanse.DistrictCodeLength, Cleanse.VillageCodeLength) &&
-      name =!= ""
-  }
-
-  /** A kept row's entity by code length (`extractors.py:164-176`): 2
-    * province, 5 regency, 8 district, 13 village.
-    */
-  private[ops] def entityOf(code: Column): Column = {
-    val len = length(code)
-    when(len === Cleanse.ProvinceCodeLength, "province")
-      .when(len === Cleanse.RegencyCodeLength, "regency")
-      .when(len === Cleanse.DistrictCodeLength, "district")
-      .otherwise("village")
-  }
-
-  /** Parent prefix by code length (`extractors.py:171-175`); null for a
-    * province.
-    */
-  private[ops] def parentCode(code: Column): Column = {
-    val len = length(code)
-    when(len === Cleanse.RegencyCodeLength,
-      Cleanse.parentPrefix(code, Cleanse.ProvinceCodeLength))
-      .when(len === Cleanse.DistrictCodeLength,
-        Cleanse.parentPrefix(code, Cleanse.RegencyCodeLength))
-      .when(len === Cleanse.VillageCodeLength,
-        Cleanse.parentPrefix(code, Cleanse.DistrictCodeLength))
+  def row(r: Dispatch.Joined): Option[Dispatch.Extracted] = {
+    val w = r.table_width
+    if (r.row_idx < 2 || w < 6) return None
+    val code = Cleanse.pyStrip(r.cell(0))
+    val (entity, parentLen) = code.codePointCount(0, code.length) match {
+      case Cleanse.ProvinceCodeLength => ("province", 0)
+      case Cleanse.RegencyCodeLength => ("regency", Cleanse.ProvinceCodeLength)
+      case Cleanse.DistrictCodeLength => ("district", Cleanse.RegencyCodeLength)
+      case Cleanse.VillageCodeLength => ("village", Cleanse.DistrictCodeLength)
+      case _ => return None
+    }
+    val picked = (if (w == 6) NameColumns6 else NameColumns7).iterator
+      .map(i => Cleanse.pyStrip(r.cell(i))).find(_.nonEmpty).getOrElse("")
+    val name = Cleanse.cleanseName(picked)
+    if (name.isEmpty) None
+    else {
+      val parent =
+        if (parentLen == 0) null
+        else code.substring(0, code.offsetByCodePoints(0, parentLen))
+      Some(Dispatch.Extracted(entity, code, parent, name, r.seq))
+    }
   }
 
   private[ops] def shape(rows: DataFrame): DataFrame =

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,9 +10,11 @@ import org.apache.spark.sql.functions._
   * [[tableMeta]], one per-table aggregate, tags every table with its
   * `route` (read from its top four rows) and carries the metadata both
   * row rules need. [[extract]] broadcast-joins it onto the cell stream
-  * and renders both families in ONE projection that switches on the
-  * route, so the join that feeds the row rules is also the dispatch.
-  * The one stream shuffle is the province first-occurrence window (A1).
+  * on `table_id` alone and hands each joined row to its route's row
+  * rule — a plain Scala function, one per family, in one typed
+  * `flatMap` — so the join that feeds the row rules is also the
+  * dispatch. The one stream shuffle is the province first-occurrence
+  * window (A1).
   */
 object Dispatch {
 
@@ -76,8 +78,8 @@ object Dispatch {
     * is_outermost_small), one row per kept cell row, provinces deduped
     * to their first occurrence. An island's `regency_code` rides in
     * `parent_code`; the island columns are null on area rows. The
-    * province branch passes only the area tables, so it plans only the
-    * area rule; both branches read the one meta aggregate.
+    * province branch passes only the area tables, so only the area rule
+    * runs there; both branches read the one meta aggregate.
     */
   def extract(cells: DataFrame): DataFrame =
     firstProvinces(pass(cells, routed("area")), pass(cells, col("route")))
@@ -93,38 +95,60 @@ object Dispatch {
   }
 
   /** The family of the tables routed to `family`, null for the rest: a
-    * pass over it plans only that family's rule.
+    * pass over it runs only that family's rule.
     */
   private def routed(family: String): Column =
     when(col("route") === family, family)
+
+  /** One row of `cells ⋈ meta`, the input of both row rules. */
+  final case class Joined(
+      family: String, row_idx: Int, seq: Long, cells: Array[String],
+      table_width: Int, header_idx: Int, code_idx: Int, name_idx: Int,
+      coord_idx: Int, status_idx: Int, info_idx: Int) {
+    /** Cell `i` (0-based): "" when `i` is negative, past the row's end
+      * or a null cell, as `coalesce(get(cells, i), "")` reads it.
+      */
+    def cell(i: Int): String =
+      if (cells == null || i < 0 || i >= cells.length || cells(i) == null) ""
+      else cells(i)
+  }
+
+  /** One extracted row: [[extract]]'s output schema. The island
+    * columns are null on area rows.
+    */
+  final case class Extracted(
+      entity: String, code: String, parent_code: String, name: String,
+      seq: Long, coordinate: String = null,
+      is_populated: Option[Int] = None,
+      is_outermost_small: Option[Int] = None)
+
+  private val JoinedEncoder = Encoders.product[Joined]
+  private val ExtractedEncoder = Encoders.product[Extracted]
 
   /** The per-row pass, before the province dedup: each row of
     * `cells ⋈ broadcast(meta)` goes through the row rule of its
     * `family` — the table's route, or a literal that forces one family
     * on every table, as the reference's unit tests call an extractor
-    * directly. Rows no rule keeps are dropped.
+    * directly. The rules are plain Scala functions
+    * ([[AreaPipeline.row]], [[IslandPipeline.row]]) in one typed
+    * `flatMap`, so a pass cleanses each cell once and the generated code
+    * around them stays small enough for the JIT. Rows of unrouted
+    * tables, and of tables with no width (every row's `cells` null),
+    * are dropped before the rules.
     */
-  private[ops] def pass(cells: DataFrame, family: Column): DataFrame = {
-    val island = family === "island"
-    def pick(area: Column, isl: Column) =
-      when(family === "area", area).when(island, isl)
-    val code = col("code")
+  private[ops] def pass(cells: DataFrame, family: Column): DataFrame =
     cells.join(broadcast(tableMeta(cells)), "table_id")
-      // the keep rule alone lands in the join condition: filtering on
-      // the projected columns would copy every cleanse chain into it
-      .filter(pick(AreaPipeline.kept, IslandPipeline.kept))
-      .withColumn("code", pick(AreaPipeline.code, IslandPipeline.code))
-      .select(pick(AreaPipeline.entityOf(code), lit("island")).as("entity"),
-        code,
-        pick(AreaPipeline.parentCode(code), IslandPipeline.parentCode(code))
-          .as("parent_code"),
-        pick(AreaPipeline.name, IslandPipeline.name(code)).as("name"),
-        col("seq"),
-        when(island, IslandPipeline.coordinate).as("coordinate"),
-        when(island, IslandPipeline.isPopulated).as("is_populated"),
-        when(island, IslandPipeline.isOutermostSmall)
-          .as("is_outermost_small"))
-  }
+      .filter(family.isNotNull && col("table_width").isNotNull)
+      .select(family.as("family"), col("row_idx"), col("seq"), col("cells"),
+        col("table_width"), col("header_idx"), col("code_idx"),
+        col("name_idx"), col("coord_idx"), col("status_idx"),
+        col("info_idx"))
+      .as(JoinedEncoder)
+      .flatMap { r =>
+        if (r.family == "area") AreaPipeline.row(r)
+        else IslandPipeline.row(r)
+      }(ExtractedEncoder)
+      .toDF()
 
   /** The provinces of `provinces`, deduped to their first occurrence in
     * document order (A1, `extractors.py:110-112,166-169`), and the other

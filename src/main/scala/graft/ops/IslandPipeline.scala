@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{Cleanse, Coordinates}
 
@@ -10,9 +10,9 @@ import graft.functions.{Cleanse, Coordinates}
   *
   * Header location and column inference happen in the shared per-table
   * aggregate [[Dispatch.tableMeta]], from the top 4 rows of each table;
-  * the row rule is a set of `Column` builders over one row of
+  * the row rule ([[row]]) is one plain Scala function over one row of
   * `cells ⋈ meta`, which [[Dispatch.extract]] applies to the tables
-  * routed to island, in the same projection as the area rule.
+  * routed to island, in the same typed pass as the area rule.
   */
 object IslandPipeline {
 
@@ -79,44 +79,44 @@ object IslandPipeline {
   /** `val()` (`extractors.py:269-272`): absent column or short row -> "";
     * else `str(cell).strip()` (Unicode strip).
     */
-  private def cellAt(idx: Column): Column =
-    Cleanse.pyTrim(coalesce(
-      when(idx >= 0, get(col("cells"), idx)), lit("")))
+  private def cellAt(r: Dispatch.Joined, idx: Int): String =
+    Cleanse.pyStrip(r.cell(idx))
 
-  /** Code: the code column's cell. */
-  private[ops] def code: Column = cellAt(col("code_idx"))
-
-  /** Whether a row is kept: below its table's header (found in the top
-    * 4 rows, `extractors.py:252-263`), with a code of the island format
-    * (`extractors.py:274-276`).
+  /** The island row rule (`extractors.py:252-298`) over one row of
+    * `cells ⋈ meta`. A row is kept below its table's header (found in
+    * the top 4 rows, `extractors.py:252-263`), with a code of the island
+    * format (`extractors.py:274-276`).
+    *
+    *  - name: cleansed, with the F8 name-equals-code rescue
+    *    (`extractors.py:279-284`); the reference's
+    *    `(colmap["code"] or 0) + 1` quirk maps 0 -> 1 too;
+    *  - parent: "NN.RR" of "NN.RR.XXXXX", "" when RR is "00" (F6,
+    *    `extractors.py:244-248,292`);
+    *  - is_populated: the upper-cased status matches `^\s*BP\b`, so
+    *    `BP` is 1 and `TBP` is 0; is_outermost_small: the upper-cased
+    *    info contains "PPKT" (F5, `extractors.py:287-291`).
     */
-  private[ops] def kept: Column =
-    col("header_idx") >= 0 && col("row_idx") > col("header_idx") &&
-      code.rlike(Cleanse.IslandCodeRegex)
-
-  /** Name, cleansed, with the F8 name-equals-code rescue
-    * (`extractors.py:279-284`); the reference's
-    * `(colmap["code"] or 0) + 1` quirk maps 0 -> 1 too.
-    */
-  private[ops] def name(code: Column): Column = {
-    val nameClean = Cleanse.cleanseIslandName(cellAt(col("name_idx")))
-    val nextIdx = when(col("code_idx") >= 0, col("code_idx") + 1).otherwise(1)
-    val nextClean = Cleanse.cleanseIslandName(cellAt(nextIdx))
-    when(nameClean === code && nextClean =!= "" && nextClean =!= code,
-      nextClean).otherwise(nameClean)
+  def row(r: Dispatch.Joined): Option[Dispatch.Extracted] = {
+    if (r.header_idx < 0 || r.row_idx <= r.header_idx) return None
+    val code = cellAt(r, r.code_idx)
+    if (!Cleanse.IslandCode.matcher(code).find()) return None
+    val nameClean = Cleanse.cleanseIslandName(cellAt(r, r.name_idx))
+    val name =
+      if (nameClean != code) nameClean
+      else {
+        val next = Cleanse.cleanseIslandName(
+          cellAt(r, if (r.code_idx >= 0) r.code_idx + 1 else 1))
+        if (next.nonEmpty && next != code) next else nameClean
+      }
+    // the code matched the ASCII island pattern: 11 chars
+    val parent = if (code.substring(3, 5) == "00") "" else code.substring(0, 5)
+    val status = Cleanse.upperCase(cellAt(r, r.status_idx))
+    val info = Cleanse.upperCase(cellAt(r, r.info_idx))
+    Some(Dispatch.Extracted("island", code, parent, name, r.seq,
+      Coordinates.formatCoordinateScala(cellAt(r, r.coord_idx)),
+      Some(if (Cleanse.Populated.matcher(status).find()) 1 else 0),
+      Some(if (info.contains("PPKT")) 1 else 0)))
   }
-
-  private[ops] def parentCode(code: Column): Column =
-    Cleanse.islandParentCode(code)
-
-  private[ops] def coordinate: Column =
-    Coordinates.formatCoordinate(cellAt(col("coord_idx")))
-
-  private[ops] def isPopulated: Column =
-    Cleanse.isPopulated(upper(cellAt(col("status_idx"))))
-
-  private[ops] def isOutermostSmall: Column =
-    Cleanse.isOutermostSmall(upper(cellAt(col("info_idx"))))
 
   private[ops] def shape(rows: DataFrame): DataFrame =
     rows.select(col("code"), col("parent_code").as("regency_code"),

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.debug.codegenStringSeq
 import graft.{Harness, SparkEntry}
 
 /** Inspection loop for registry queries, one mode per question:
@@ -11,13 +12,44 @@ import graft.{Harness, SparkEntry}
   *    PLANS.md is this mode's output;
   *  - `reuse`: prints how many file scans, query stages and reused
   *    exchanges the FINAL adaptive plan holds — "does this query
-  *    recompute a shared subtree or reuse its shuffle?".
+  *    recompute a shared subtree or reuse its shuffle?";
+  *  - `codegen`: prints each whole-stage-codegen stage of the FINAL
+  *    plan with its generated source size and largest compiled method,
+  *    flagging the methods over HotSpot's huge-method limit — "does
+  *    this query's row loop run interpreted?".
   *
-  * Usage: Inspect <show|explain|reuse> <sfDir> <q1 [q2 ...]|q1,q2,...|ALL>
+  * Usage: Inspect <show|explain|reuse|codegen> <sfDir> <q1 [q2 ...]|q1,q2,...|ALL>
   */
 object Inspect {
-  private val Usage =
-    "usage: Inspect <show|explain|reuse> <sfDir> <q1 [q2 ...]|q1,q2,...|ALL>"
+  private val Usage = "usage: Inspect <show|explain|reuse|codegen> <sfDir> " +
+    "<q1 [q2 ...]|q1,q2,...|ALL>"
+
+  /** HotSpot compiles no method with more bytecode than this
+    * (`-XX:+DontCompileHugeMethods`, on by default): a larger generated
+    * row loop runs in the interpreter for the life of the JVM.
+    */
+  val HugeMethodLimit = 8000
+
+  /** One whole-stage-codegen stage: its codegen id, generated source
+    * size in chars and largest compiled method in bytes of bytecode.
+    */
+  final case class CodegenStage(id: Int, sourceChars: Int, maxMethodBytes: Int) {
+    def interpreted: Boolean = maxMethodBytes > HugeMethodLimit
+  }
+
+  /** The whole-stage-codegen stages of `df`'s FINAL plan
+    * (`org.apache.spark.sql.execution.debug.codegenStringSeq`, which
+    * compiles each stage's source and reads its bytecode stats).
+    */
+  def codegenStages(df: DataFrame): Seq[CodegenStage] = {
+    finalPlan(df)
+    val StageId = raw"^\*\((\d+)\)".r.unanchored
+    codegenStringSeq(df.queryExecution.executedPlan).map {
+      case (subtree, source, stats) =>
+        val id = subtree match { case StageId(n) => n.toInt; case _ => -1 }
+        CodegenStage(id, source.length, stats.maxMethodCodeSize)
+    }
+  }
 
   /** The FINAL adaptive plan of `df`'s own QueryExecution. A write
     * action executes a CLONED plan, leaving this one unexecuted with
@@ -48,7 +80,7 @@ object Inspect {
 
   def main(args: Array[String]): Unit = {
     if (args.length < 3 ||
-        !Set("show", "explain", "reuse").contains(args(0))) {
+        !Set("show", "explain", "reuse", "codegen").contains(args(0))) {
       System.err.println(Usage)
       sys.exit(2)
     }
@@ -62,6 +94,16 @@ object Inspect {
           if (mode == "reuse") {
             val (scans, stages, reused) = reuseCounts(finalPlan(df))
             println(f"AUDIT $n%-28s scans=$scans stages=$stages%d reused=$reused")
+          } else if (mode == "codegen") {
+            val stages = codegenStages(df)
+            stages.foreach { st =>
+              println(f"CODEGEN $n%-28s stage=${st.id}%-3d " +
+                f"source_chars=${st.sourceChars}%-7d " +
+                f"max_method_bytes=${st.maxMethodBytes}%d" +
+                (if (st.interpreted) "  INTERPRETED" else ""))
+            }
+            println(f"CODEGEN_SUMMARY $n%-28s stages=${stages.size}%d " +
+              s"interpreted=${stages.count(_.interpreted)}")
           } else {
             println(s"\n========== $n ==========")
             if (mode == "show") df.show(50, truncate = false)

@@ -9,34 +9,33 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CleanseSpec extends AnyFunSuite {
   import Cleanse._
-  import graft.ops.Reference.cleanNameScala
 
   // ---- clean_name (`tests/test_utils.py:21-43`) ----
 
   test("clean_name basic cleaning") {
-    assert(cleanNameScala("  Kabupaten   Aceh \tSelatan\r\n") ==
+    assert(cleanName("  Kabupaten   Aceh \tSelatan\r\n") ==
       "Kabupaten Aceh Selatan")
   }
 
   test("clean_name drops numeric header on its own line") {
-    val out = cleanNameScala("123\nNama Provinsi\nAceh")
+    val out = cleanName("123\nNama Provinsi\nAceh")
     assert(!out.contains("123"))
     assert(out == "Nama Provinsi Aceh")
   }
 
   test("clean_name empty / whitespace-only") {
-    assert(cleanNameScala("") == "")
-    assert(cleanNameScala("   \t  \r\n  ") == "")
+    assert(cleanName("") == "")
+    assert(cleanName("   \t  \r\n  ") == "")
   }
 
   test("clean_name number patterns at both ends") {
-    assert(cleanNameScala("123\nSome Name\n456") == "Some Name")
-    assert(cleanNameScala("1 Some Name") == "Some Name")
+    assert(cleanName("123\nSome Name\n456") == "Some Name")
+    assert(cleanName("1 Some Name") == "Some Name")
   }
 
   test("clean_name strips Unicode whitespace (NBSP) like Python strip") {
-    assert(cleanNameScala(" Aceh ") == "Aceh")
-    assert(cleanNameScala("Aceh  Barat") == "Aceh Barat")
+    assert(cleanName(" Aceh ") == "Aceh")
+    assert(cleanName("Aceh  Barat") == "Aceh Barat")
   }
 
   // ---- fix_wrapped_name (`tests/test_utils.py:46-90`) ----

@@ -133,13 +133,14 @@ class NativeParitySpec extends SparkSpec {
       (0 until rnd.nextInt(8)).map(_ => parts(rnd.nextInt(parts.length)))
         .mkString) :+ null
     val got = names.toDF("name")
-      .select(col("name"),
-        coalesce(Cleanse.cleanName(col("name")), lit("")).as("native"))
-      .as[(String, String)].collect()
+      .select(col("name"), Cleanse.cleanName(col("name")).as("native"),
+        graft.ops.Reference.cleanNameChain(col("name")).as("chain"))
+      .as[(String, String, String)].collect()
     assert(got.length == names.length)
-    got.foreach { case (n, native) =>
-      assert(native == graft.ops.Reference.cleanNameScala(n),
-        s"cleanName diverged on '$n'")
+    got.foreach { case (n, native, chain) =>
+      assert(native == chain, s"cleanName diverged on '$n'")
+      assert(Cleanse.cleanName(n) == Option(chain).getOrElse(""),
+        s"cleanName(String) diverged on '$n'")
     }
   }
 }

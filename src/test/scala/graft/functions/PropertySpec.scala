@@ -14,15 +14,15 @@ object CleanseProps extends Properties("graft.cleanse") {
     forAll(Gen.listOf(Gen.oneOf(
       Gen.alphaNumStr, Gen.const(" "), Gen.const("\n"), Gen.const("\t"),
       Gen.const("\r"), Gen.const("  "))).map(_.mkString)) { s =>
-      val out = graft.ops.Reference.cleanNameScala(s)
+      val out = Cleanse.cleanName(s)
       out == out.trim && !out.contains("  ") && !out.contains("\n") &&
         !out.contains("\t") && !out.contains("\r")
     }
 
   property("cleanName is idempotent") =
     forAll(Gen.asciiPrintableStr) { s =>
-      val once = graft.ops.Reference.cleanNameScala(s)
-      graft.ops.Reference.cleanNameScala(once) == once
+      val once = Cleanse.cleanName(s)
+      Cleanse.cleanName(once) == once
     }
 
   property("normalizeWords preserves non-kerned text") =

@@ -1,6 +1,8 @@
 package graft.ops
 
 import java.nio.file.Files
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import graft.SparkSpec
 import graft.config.EtlConfig
 
@@ -53,16 +55,21 @@ class DispatchPlanSpec extends SparkSpec {
     }
   }
 
-  test("the product's lines read scanned cells at most 3 times, with one " +
-      "meta aggregate and broadcast-only joins") {
-    // the meta aggregate, the province branch and the rest; AQE serves
-    // the one meta aggregate stage to both branches' broadcasts
+  /** The product's lines over a parquet-scanned corpus. */
+  private def productLines() = {
     val dir = Files.createTempDirectory("graft-dispatch-plan-")
       .resolve("cells").toString
     CellTables.ofGrids(spark, Seq(Fixtures.dfArea, Fixtures.dfIsland,
       Fixtures.dfAreaUnmatched)).write.parquet(dir)
-    val (lines, _) = ExtractJob.lines(
-      Dispatch.extract(CellTables.read(spark, dir)), EtlConfig.Default)
+    ExtractJob.lines(
+      Dispatch.extract(CellTables.read(spark, dir)), EtlConfig.Default)._1
+  }
+
+  test("the product's lines read scanned cells at most 3 times, with one " +
+      "meta aggregate and broadcast-only joins") {
+    // the meta aggregate, the province branch and the rest; AQE serves
+    // the one meta aggregate stage to both branches' broadcasts
+    val lines = productLines()
     val p = graft.tools.Inspect.finalPlan(lines)
     val (scans, _, _) = graft.tools.Inspect.reuseCounts(p)
     assert(scans <= 3, s"$scans cell scans:\n$p")
@@ -71,5 +78,27 @@ class DispatchPlanSpec extends SparkSpec {
     assert(metaAggs == 1, s"$metaAggs meta aggregates:\n$p")
     val joins = raw"\w*(Join|CartesianProduct)\b".r.findAllIn(p).toSet
     assert(joins == Set("BroadcastHashJoin"), s"joins $joins:\n$p")
+  }
+
+  test("every generated stage of the product's lines stays JIT-compilable; " +
+      "the meta join is on table_id alone") {
+    // a generated row loop over HotSpot's huge-method limit runs in the
+    // bytecode interpreter for the life of the JVM: the row rules stay
+    // in plain Scala, not in the generated code
+    val lines = productLines()
+    val stages = graft.tools.Inspect.codegenStages(lines)
+    assert(stages.nonEmpty)
+    val huge = stages.filter(_.interpreted)
+    assert(huge.isEmpty, s"stages over the limit: $huge")
+    val joins = new AdaptiveSparkPlanHelper {}
+      .collect(lines.queryExecution.executedPlan) {
+        case j: BroadcastHashJoinExec => j
+      }
+    assert(joins.nonEmpty)
+    for (j <- joins) {
+      assert(j.condition.isEmpty, s"join condition ${j.condition}")
+      assert((j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name))
+        .toSet == Set("table_id"), j.toString)
+    }
   }
 }

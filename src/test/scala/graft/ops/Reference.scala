@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Cleanse, VectorExprs}
+import graft.functions.{Cleanse, Coordinates, VectorExprs}
 
 /** The composed reference formulations the native operators are
   * parity-pinned against. Each one is built from Spark built-ins
@@ -174,15 +174,81 @@ object Reference {
 
   // ---- Cleanse -------------------------------------------------------
 
-  /** [[Cleanse.cleanName]] in plain Scala, with "" for null. */
-  def cleanNameScala(name: String): String = {
-    if (name == null) return ""
-    var t = Cleanse.pyStrip(name).replace("\r", "").replace("\t", " ")
-    t = t.replaceAll("(?U)^\\d+\n", "")
-    t = t.replaceAll("(?U)\n\\d+$", "")
-    t = t.replaceAll("\n+", " ")
-    t = t.replaceAll("(?U)^\\d+\\s+", "")
-    t = t.replaceAll("(?U)\\s{2,}", " ")
-    Cleanse.pyStrip(t)
+  /** Python `str.strip()` as a regex `Column`. */
+  def pyTrim(c: Column): Column = regexp_replace(c, "(?U)^\\s+|\\s+$", "")
+
+  /** clean_name as the 9-regex `Column` chain the ETL ran before
+    * [[Cleanse.cleanName]] became one Scala function; null-propagating.
+    */
+  def cleanNameChain(c: Column): Column = {
+    val t0 = pyTrim(c)
+    val t1 = regexp_replace(t0, "\r", "")
+    val t2 = regexp_replace(t1, "\t", " ")
+    val t3 = regexp_replace(t2, "(?U)^\\d+\n", "")
+    val t4 = regexp_replace(t3, "(?U)\n\\d+$", "")
+    val t5 = regexp_replace(t4, "\n+", " ")
+    val t6 = regexp_replace(t5, "(?U)^\\d+\\s+", "")
+    val t7 = regexp_replace(t6, "(?U)\\s{2,}", " ")
+    pyTrim(t7)
+  }
+
+  def cleanseNameChain(c: Column): Column =
+    when(c.isNull || c === "", lit(""))
+      .otherwise(Cleanse.normalizeWords(cleanNameChain(Cleanse.fixWrappedName(c))))
+
+  def cleanseIslandNameChain(c: Column): Column =
+    cleanNameChain(Cleanse.fixWrappedName(coalesce(c, lit(""))))
+
+  // ---- Dispatch ------------------------------------------------------
+
+  /** [[Dispatch.pass]] with both row rules as the `Column` builders it
+    * ran before they became Scala functions ([[AreaPipeline.row]],
+    * [[IslandPipeline.row]]): the keep rules filter the join, one
+    * projection renders both families.
+    */
+  def passColumns(cells: DataFrame, family: Column): DataFrame = {
+    def trimmed(i: Column) =
+      pyTrim(coalesce(when(i >= 0, get(col("cells"), i)), lit("")))
+    def nonEmpty(i: Int) = {
+      val t = trimmed(lit(i))
+      when(t === "", lit(null)).otherwise(t)
+    }
+    val w = col("table_width")
+    val areaCode = trimmed(lit(0))
+    val len = length(areaCode)
+    val areaName = cleanseNameChain(coalesce(
+      when(w === 6, coalesce(nonEmpty(1), nonEmpty(3)))
+        .when(w >= 7, coalesce(nonEmpty(1), nonEmpty(4), nonEmpty(5),
+          nonEmpty(6))), lit("")))
+    val areaKept = col("row_idx") >= 2 && (w === 6 || w >= 7) &&
+      len.isin(2, 5, 8, 13) && areaName =!= ""
+    val areaEntity = when(len === 2, "province").when(len === 5, "regency")
+      .when(len === 8, "district").otherwise("village")
+    val areaParent = when(len === 5, Cleanse.parentPrefix(areaCode, 2))
+      .when(len === 8, Cleanse.parentPrefix(areaCode, 5))
+      .when(len === 13, Cleanse.parentPrefix(areaCode, 8))
+    val islCode = trimmed(col("code_idx"))
+    val islKept = col("header_idx") >= 0 &&
+      col("row_idx") > col("header_idx") && islCode.rlike(Cleanse.IslandCodeRegex)
+    val nameClean = cleanseIslandNameChain(trimmed(col("name_idx")))
+    val nextClean = cleanseIslandNameChain(trimmed(
+      when(col("code_idx") >= 0, col("code_idx") + 1).otherwise(1)))
+    val islName = when(nameClean === islCode && nextClean =!= "" &&
+      nextClean =!= islCode, nextClean).otherwise(nameClean)
+    val island = family === "island"
+    def pick(area: Column, isl: Column) =
+      when(family === "area", area).when(island, isl)
+    cells.join(broadcast(Dispatch.tableMeta(cells)), "table_id")
+      .filter(pick(areaKept, islKept))
+      .select(pick(areaEntity, lit("island")).as("entity"),
+        pick(areaCode, islCode).as("code"),
+        pick(areaParent, Cleanse.islandParentCode(islCode)).as("parent_code"),
+        pick(areaName, islName).as("name"), col("seq"),
+        when(island, Coordinates.formatCoordinate(trimmed(col("coord_idx"))))
+          .as("coordinate"),
+        when(island, Cleanse.isPopulated(upper(trimmed(col("status_idx")))))
+          .as("is_populated"),
+        when(island, Cleanse.isOutermostSmall(upper(trimmed(col("info_idx")))))
+          .as("is_outermost_small"))
   }
 }
