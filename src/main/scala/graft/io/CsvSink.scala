@@ -16,25 +16,24 @@ import scala.jdk.CollectionConverters._
   *    byte-compared, `tests/test_e2e.py:9-21`).
   *
   * Every entity goes out in ONE write (SURVEY S7): the rows arrive
-  * already rendered as `(entity, seq, line)`, go through one
-  * `repartitionByRange(seq)`, one `sortWithinPartitions(entity, seq)`
-  * and one `write.partitionBy("entity")` as CRLF text; each
-  * `entity=<e>` directory then becomes `{output}.{suffix}.csv.d`. The
-  * default layout keeps global document order across part files with
-  * no single-task bottleneck; `singleFile=true` reproduces the
-  * reference's one-file layout through one partition and one writer
-  * task — correct for golden-parity sizes but a scale-killer, so not
-  * the default.
+  * already rendered as `(entity, seq, line)`, each tagged with its
+  * `part` — its seq's slot in an even split of the caller's seq range
+  * into `spark.sql.shuffle.partitions` parts ([[part]]) — and go
+  * through one `repartitionById(part)`, one
+  * `sortWithinPartitions(entity, seq)` and one
+  * `write.partitionBy("entity")` as CRLF text; each `entity=<e>`
+  * directory then becomes `{output}.{suffix}.csv.d`. The part is
+  * monotone in seq, so part files in name order hold global document
+  * order with no sampling job and no cache; a seq range out of balance
+  * with the rows costs balance only, never order. `singleFile=true`
+  * reproduces the reference's one-file layout through one part and one
+  * writer task — correct for golden-parity sizes but a scale-killer, so
+  * not the default.
   *
-  * The range partitioner's sampling job evaluates the whole input
-  * before the write does, so the rendered lines are cached for the
-  * write (the only cache; without it the extract runs twice) and
-  * released in `finally`. The per-entity row
-  * counts come from one `Observation` placed ABOVE the range exchange:
-  * the sampling job evaluates only the exchange's child, so the
-  * metric counts each row once (below the exchange it counts twice).
-  * When AQE proves the exchange empty it drops the observed node, and
-  * the observation completes with no metrics: every count is 0.
+  * The per-entity row counts come from one `Observation` above the
+  * exchange, in the write's own job. When AQE proves the exchange empty
+  * it drops the observed node, and the observation completes with no
+  * metrics: every count is 0.
   */
 object CsvSink {
 
@@ -56,7 +55,8 @@ object CsvSink {
 
   /** Write one entity stream. `df` must contain a `seq` column (dropped
     * on write) plus the output columns in schema order, which name the
-    * header.
+    * header. Its seq range comes from one aggregate over `df`
+    * ([[seqRange]]).
     */
   def write(
       df: DataFrame,
@@ -68,35 +68,58 @@ object CsvSink {
     write(df.select(lit(suffix).as("entity"), col("seq"),
         line(cols.map(col): _*).as("line")),
       Seq(Sink(suffix, suffix, cols)), destination, outputName,
-      singleFile).head._1
+      singleFile, seqRange(df)).head._1
+  }
+
+  /** The lowest and highest `seq` of `df`, from one aggregate; (0, 0)
+    * when it has no rows.
+    */
+  def seqRange(df: DataFrame): (Long, Long) = {
+    val r = df.agg(min(col("seq")), max(col("seq"))).head()
+    if (r.isNullAt(0)) (0L, 0L) else (r.getLong(0), r.getLong(1))
+  }
+
+  /** The part of `seq` in an even split of `[lo, hi]` into `n` parts:
+    * `floor((seq - lo) * n / (hi - lo + 1))`, clamped to `[0, n)`. In
+    * double arithmetic, so no seq range overflows; each step is
+    * monotone, so the part never decreases as seq grows.
+    */
+  private def part(seq: Column, range: (Long, Long), n: Int): Column = {
+    val (lo, hi) = range
+    val scale = n / (hi.toDouble - lo.toDouble + 1)
+    least(greatest(floor((seq.cast("double") - lo.toDouble) * scale), lit(0L)),
+      lit(n - 1L)).cast("int")
   }
 
   /** Write every sink's rows of `lines` (`entity`, `seq`, `line`) in
     * one ordered write; returns each sink's path and row count, in
-    * `sinks` order. Every row's entity must name a sink.
+    * `sinks` order. Every row's entity must name a sink; `seqRange`
+    * should span the rows' seqs (one outside it goes to the first or
+    * last part).
     */
   def write(
       lines: DataFrame,
       sinks: Seq[Sink],
       destination: String,
       outputName: String,
-      singleFile: Boolean): Seq[(Path, Long)] = {
+      singleFile: Boolean,
+      seqRange: (Long, Long)): Seq[(Path, Long)] = {
     val headers = sinks.map(s => s.entity -> s.headers.mkString(",")).toMap
     val counted = Observation()
     val metrics = sinks.map(s =>
       count(when(col("entity") === s.entity, 1)).as(s.entity))
+    val nParts =
+      if (singleFile) 1
+      else lines.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // Staging dir lives UNDER the destination so the final Files.move
     // is a same-filestore rename — moving a non-empty directory across
     // stores (e.g. tmpfs /tmp -> disk) throws in java.nio.
     Files.createDirectories(Paths.get(destination))
     val tmp = Files.createTempDirectory(Paths.get(destination), ".graft-csv-")
-    val cached = lines.cache()
     try {
-      val spread =
-        if (singleFile) cached.repartition(1)
-        else cached.repartitionByRange(col("seq"))
       import lines.sparkSession.implicits._
-      spread.observe(counted, metrics.head, metrics.tail: _*)
+      lines.repartitionById(nParts, part(col("seq"), seqRange, nParts))
+        .observe(counted, metrics.head, metrics.tail: _*)
         .select("entity", "seq", "line").as[(String, Long, String)]
         // each task's first row of an entity is preceded by a header
         // row sorting first (seq = Long.MinValue); the sort after this
@@ -140,11 +163,10 @@ object CsvSink {
       // a failed write must not leak the staging dir under the
       // user-visible destination (repeated failed runs would pile up)
       FileUtils.deleteDirectory(tmp.toFile)
-      cached.unpersist()
     }
   }
 
-  /** The part files Spark wrote under `dir`, in name (= range) order;
+  /** The part files Spark wrote under `dir`, in name (= part) order;
     * none when `dir` does not exist.
     */
   private def textParts(dir: Path): List[Path] =

@@ -8,10 +8,13 @@ import graft.functions.Cleanse
   * rows. Reference: `extractors.py:103-176` (AreaExtractor), pinned by
   * `tests/test_extractors.py:405-488`.
   *
-  * The row rule ([[row]]) is one plain Scala function over one row of
-  * `cells ⋈ meta`; [[Dispatch.extract]] applies it to the tables routed
-  * to area, in the same typed pass as the island rule. The only
-  * per-table metadata it reads is the table width.
+  * The row rule ([[row]]) is one plain Scala function over one cell row
+  * and its table's width, the only per-table metadata it reads.
+  * [[Dispatch.extract]] applies it to the tables routed to area, in the
+  * same typed pass as the island rule; [[Dispatch.tableMeta]] applies it
+  * to each table's province candidates ([[provinceCell]]), so the
+  * province first-occurrence dedup (A1) is settled from the meta with no
+  * second pass over the cells.
   */
 object AreaPipeline {
 
@@ -41,8 +44,17 @@ object AreaPipeline {
   private val NameColumns6 = Array(1, 3)
   private val NameColumns7 = Array(1, 4, 5, 6)
 
-  /** The area row rule (`extractors.py:124-176`) over one row of
-    * `cells ⋈ meta`. A row is kept below the two header rows of a
+  /** Whether a row whose cell 0 is `cell0` can be a province: cell 0
+    * has two code points once stripped. The rows [[Dispatch.tableMeta]]
+    * runs [[row]] on to find each table's first provinces.
+    */
+  def provinceCell(cell0: String): Boolean = cell0 != null && {
+    val code = Cleanse.pyStrip(cell0)
+    code.codePointCount(0, code.length) == Cleanse.ProvinceCodeLength
+  }
+
+  /** The area row rule (`extractors.py:124-176`) over one cell row of a
+    * table `w` cells wide. A row is kept below the two header rows of a
     * width-6 or width->=7 table, with a code of an area length and a
     * non-empty name. Width 2-5 tables raise IndexError in the reference
     * and are skipped by the CLI's per-table error isolation
@@ -53,8 +65,7 @@ object AreaPipeline {
     *    parent prefix (`extractors.py:164-176`); a province has none;
     *  - name: the first non-empty stripped candidate, cleansed.
     */
-  def row(r: Dispatch.Joined): Option[Dispatch.Extracted] = {
-    val w = r.table_width
+  def row(r: Dispatch.Cell, w: Int): Option[Dispatch.Extracted] = {
     if (r.row_idx < 2 || w < 6) return None
     val code = Cleanse.pyStrip(r.cell(0))
     val (entity, parentLen) = code.codePointCount(0, code.length) match {
@@ -80,14 +91,13 @@ object AreaPipeline {
     rows.select("entity", "code", "parent_code", "name", "seq")
 
   /** The area extractor called directly, as the reference's unit tests
-    * do: every table goes through the area rule, matched or not.
+    * do: every table goes through the area rule, matched or not, and a
+    * province is kept at its code's first occurrence over all of them.
     * Output: (entity, code, parent_code, name, seq); a province's
     * parent_code is null.
     */
-  def extract(cells: DataFrame): DataFrame = {
-    val rows = Dispatch.pass(cells, lit("area"))
-    shape(Dispatch.firstProvinces(rows, rows))
-  }
+  def extract(cells: DataFrame): DataFrame =
+    shape(Dispatch.extract(cells, Dispatch.tables(cells, lit("area"))))
 
   /** One entity stream, shaped to its output schema (SURVEY §1.2):
     * (code, <parent>_code, name, seq); provinces have no parent.

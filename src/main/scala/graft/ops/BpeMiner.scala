@@ -135,22 +135,16 @@ object BpeMiner {
       s"rounds must be in [1, $TrainMaxRounds], got $rounds")
     require(minCount >= 1L, s"minCount must be >= 1, got $minCount")
     require(maxVocab >= 1, s"maxVocab must be >= 1, got $maxVocab")
-    val rows = docs.filter(col("text").isNotNull)
+    val vocab = docs.filter(col("text").isNotNull)
       .select(explode(split(TextDedup.normText(col("text")), " "))
         .as("w"))
       .filter(length(col("w")) > 1)
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= minCount)
-      // limit(cap+1), not count(): one job proves the bound AND
-      // fetches the vocabulary; a row count would re-run the
-      // aggregation just to ask permission
-      .limit(maxVocab + 1)
-      .collect()
-    require(rows.length <= maxVocab,
-      s"trainMergesLocal: distinct-word vocabulary exceeds " +
-        s"maxVocab=$maxVocab at minCount=$minCount — raise minCount " +
-        s"(each dropped word perturbs pair counts by < minCount) or " +
-        s"maxVocab (if the driver heap allows)")
+    val rows = CheckpointUtil.collectBounded(vocab, maxVocab,
+      s"trainMergesLocal: distinct-word vocabulary at minCount=$minCount",
+      "raise minCount (each dropped word perturbs pair counts by " +
+        "< minCount) or maxVocab (if the driver heap allows)")
     // words as codepoint arrays, merged IN PLACE (lengths shrink);
     // codepoint order == UTF-8 byte order == both engines' binary
     // string collation, so integer compares reproduce the tie-break
@@ -364,18 +358,16 @@ object BpeMiner {
       graft.functions.Gpt2ByteLevel.preTokenize(text)
         .map(graft.functions.Gpt2ByteLevel.toByteSymbols).toArray
     }
-    val rows = docs.filter(col("text").isNotNull)
+    val vocab = docs.filter(col("text").isNotNull)
       .select(explode(pretokens(col("text"))).as("w"))
       .filter(length(col("w")) > 1)
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= minCount)
-      .limit(maxVocab + 1)
-      .collect()
-    require(rows.length <= maxVocab,
-      s"trainByteLevelMergesLocal: distinct-pretoken vocabulary " +
-        s"exceeds maxVocab=$maxVocab at minCount=$minCount — raise " +
-        s"minCount (each dropped pretoken perturbs pair counts by " +
-        s"< minCount)")
+    val rows = CheckpointUtil.collectBounded(vocab, maxVocab,
+      "trainByteLevelMergesLocal: distinct-pretoken vocabulary at " +
+        s"minCount=$minCount",
+      "raise minCount (each dropped pretoken perturbs pair counts by " +
+        "< minCount) or maxVocab")
     // pretokens as symbol-string arrays, merged IN PLACE; initial
     // symbols are the single byte-map chars of the mapped pretoken
     val nWords = rows.length

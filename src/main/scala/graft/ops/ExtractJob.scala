@@ -13,11 +13,12 @@ import graft.io.CsvSink
   *
   * S7 multi-sink fan-out: the extracted rows render to one frame of CSV
   * lines tagged by entity ([[lines]]), and [[CsvSink]] writes all five
-  * entities in one ordered, entity-partitioned write. The sink caches
-  * those lines (its range partitioner samples them before the write
-  * reads them) and counts each entity's rows (A2's count accumulation)
-  * with an observation in the same write, so the extract runs once and
-  * no separate count action follows; an entity with no rows reads 0.
+  * entities in one ordered, entity-partitioned write, split by the seq
+  * range of the table meta the extract already brought to the driver.
+  * It counts each entity's rows (A2's count accumulation) with an
+  * observation in the same write, so no separate count action follows;
+  * an entity with no rows reads 0. A run is four Spark jobs: the meta
+  * aggregate's shuffle and collect, the write's shuffle and the write.
   */
 object ExtractJob {
 
@@ -66,14 +67,16 @@ object ExtractJob {
     */
   def lines(
       extracted: DataFrame,
-      config: EtlConfig.Config): (DataFrame, Seq[CsvSink.Sink]) = {
-    val out = sinks(config)
-    def render(entity: String) = CsvSink.line(Columns(entity).map(col): _*)
+      config: EtlConfig.Config): (DataFrame, Seq[CsvSink.Sink]) =
+    (render(extracted), sinks(config))
+
+  private def render(extracted: DataFrame): DataFrame = {
+    def record(entity: String) = CsvSink.line(Columns(entity).map(col): _*)
     val Seq(first, rest @ _*) = EtlConfig.Areas
-    val line = rest.foldLeft(when(col("entity") === first, render(first))) {
-      (acc, entity) => acc.when(col("entity") === entity, render(entity))
+    val line = rest.foldLeft(when(col("entity") === first, record(first))) {
+      (acc, entity) => acc.when(col("entity") === entity, record(entity))
     }
-    (extracted.select(col("entity"), col("seq"), line.as("line")), out)
+    extracted.select(col("entity"), col("seq"), line.as("line"))
   }
 
   def run(
@@ -81,14 +84,16 @@ object ExtractJob {
       destination: String,
       outputName: String,
       config: EtlConfig.Config,
-      // Scale-safe default: range-partitioned multi-file output (no
-      // single-task total-sort drain). Pass singleFile=true explicitly
-      // for reference-parity one-file-per-entity layout (the CLI does).
+      // Scale-safe default: multi-file output split by seq range (no
+      // single-task drain). Pass singleFile=true explicitly for
+      // reference-parity one-file-per-entity layout (the CLI does).
       singleFile: Boolean = false): Result = {
-    val (rendered, sinks) = lines(Dispatch.extract(cells), config)
-    val written = CsvSink.write(rendered, sinks, destination, outputName,
-      singleFile)
-    val counts = sinks.map(_.entity).zip(written.map(_._2)).toMap
+    // a configuration error fails before any Spark job
+    val out = sinks(config)
+    val tables = Dispatch.tables(cells, col("route"))
+    val written = CsvSink.write(render(Dispatch.extract(cells, tables)), out,
+      destination, outputName, singleFile, tables.seqRange)
+    val counts = out.map(_.entity).zip(written.map(_._2)).toMap
     if (counts.values.sum == 0)
       throw NoMatchingDataException("No matching data found")
     Result(counts, written.map(_._1))

@@ -10,9 +10,9 @@ import graft.functions.{Cleanse, Coordinates}
   *
   * Header location and column inference happen in the shared per-table
   * aggregate [[Dispatch.tableMeta]], from the top 4 rows of each table;
-  * the row rule ([[row]]) is one plain Scala function over one row of
-  * `cells ⋈ meta`, which [[Dispatch.extract]] applies to the tables
-  * routed to island, in the same typed pass as the area rule.
+  * the row rule ([[row]]) is one plain Scala function over one cell row
+  * and its table's meta, which [[Dispatch.extract]] applies to the
+  * tables routed to island, in the same typed pass as the area rule.
   */
 object IslandPipeline {
 
@@ -79,13 +79,13 @@ object IslandPipeline {
   /** `val()` (`extractors.py:269-272`): absent column or short row -> "";
     * else `str(cell).strip()` (Unicode strip).
     */
-  private def cellAt(r: Dispatch.Joined, idx: Int): String =
+  private def cellAt(r: Dispatch.Cell, idx: Int): String =
     Cleanse.pyStrip(r.cell(idx))
 
-  /** The island row rule (`extractors.py:252-298`) over one row of
-    * `cells ⋈ meta`. A row is kept below its table's header (found in
-    * the top 4 rows, `extractors.py:252-263`), with a code of the island
-    * format (`extractors.py:274-276`).
+  /** The island row rule (`extractors.py:252-298`) over one cell row
+    * and its table's meta `m`. A row is kept below its table's header
+    * (found in the top 4 rows, `extractors.py:252-263`), with a code of
+    * the island format (`extractors.py:274-276`).
     *
     *  - name: cleansed, with the F8 name-equals-code rescue
     *    (`extractors.py:279-284`); the reference's
@@ -96,24 +96,24 @@ object IslandPipeline {
     *    `BP` is 1 and `TBP` is 0; is_outermost_small: the upper-cased
     *    info contains "PPKT" (F5, `extractors.py:287-291`).
     */
-  def row(r: Dispatch.Joined): Option[Dispatch.Extracted] = {
-    if (r.header_idx < 0 || r.row_idx <= r.header_idx) return None
-    val code = cellAt(r, r.code_idx)
+  def row(r: Dispatch.Cell, m: Dispatch.Meta): Option[Dispatch.Extracted] = {
+    if (m.header_idx < 0 || r.row_idx <= m.header_idx) return None
+    val code = cellAt(r, m.code_idx)
     if (!Cleanse.IslandCode.matcher(code).find()) return None
-    val nameClean = Cleanse.cleanseIslandName(cellAt(r, r.name_idx))
+    val nameClean = Cleanse.cleanseIslandName(cellAt(r, m.name_idx))
     val name =
       if (nameClean != code) nameClean
       else {
         val next = Cleanse.cleanseIslandName(
-          cellAt(r, if (r.code_idx >= 0) r.code_idx + 1 else 1))
+          cellAt(r, if (m.code_idx >= 0) m.code_idx + 1 else 1))
         if (next.nonEmpty && next != code) next else nameClean
       }
     // the code matched the ASCII island pattern: 11 chars
     val parent = if (code.substring(3, 5) == "00") "" else code.substring(0, 5)
-    val status = Cleanse.upperCase(cellAt(r, r.status_idx))
-    val info = Cleanse.upperCase(cellAt(r, r.info_idx))
+    val status = Cleanse.upperCase(cellAt(r, m.status_idx))
+    val info = Cleanse.upperCase(cellAt(r, m.info_idx))
     Some(Dispatch.Extracted("island", code, parent, name, r.seq,
-      Coordinates.formatCoordinateScala(cellAt(r, r.coord_idx)),
+      Coordinates.formatCoordinateScala(cellAt(r, m.coord_idx)),
       Some(if (Cleanse.Populated.matcher(status).find()) 1 else 0),
       Some(if (info.contains("PPKT")) 1 else 0)))
   }
@@ -129,5 +129,5 @@ object IslandPipeline {
     * is_populated, is_outermost_small, name, seq).
     */
   def extract(cells: DataFrame): DataFrame =
-    shape(Dispatch.pass(cells, lit("island")))
+    shape(Dispatch.extract(cells, Dispatch.tables(cells, lit("island"))))
 }

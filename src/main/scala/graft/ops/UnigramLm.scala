@@ -77,17 +77,15 @@ object UnigramLm {
     require(vocabSize >= 1, s"vocabSize must be >= 1, got $vocabSize")
     require(emRounds >= 0, s"emRounds must be >= 0, got $emRounds")
     require(minCount >= 1L, s"minCount must be >= 1, got $minCount")
-    val rows = docs.filter(col("text").isNotNull)
+    val vocab = docs.filter(col("text").isNotNull)
       .select(explode(split(TextDedup.normText(col("text")), " "))
         .as("w"))
       .filter(length(col("w")) >= 1)
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= minCount)
-      .limit(maxVocab + 1)
-      .collect()
-    require(rows.length <= maxVocab,
-      s"UnigramLm.trainLocal: distinct-word vocabulary exceeds " +
-        s"maxVocab=$maxVocab at minCount=$minCount — raise minCount")
+    val rows = CheckpointUtil.collectBounded(vocab, maxVocab,
+      s"UnigramLm.trainLocal: distinct-word vocabulary at minCount=$minCount",
+      "raise minCount or maxVocab")
     require(rows.nonEmpty, "UnigramLm.trainLocal: empty vocabulary")
     val words = rows.map(r => (r.getString(0), r.getLong(1)))
     trainFromWordCounts(words, maxPieceLen, seedSize, vocabSize, emRounds)

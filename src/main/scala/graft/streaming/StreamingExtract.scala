@@ -16,10 +16,10 @@ import graft.ops.{CellTables, Dispatch, ExtractJob}
   *
   * Each micro-batch runs the SAME batch pipeline as [[ExtractJob]]
   * (the one [[Dispatch.extract]] pass → [[ExtractJob.lines]] with
-  * [[EtlConfig.Default]]), so the plan properties (one broadcast meta,
-  * pushed filters, codegen) carry over unchanged; the batch's extracted
-  * frame is cached once and feeds both the province record and the
-  * lines. The run-global `_seen_provinces` set
+  * [[EtlConfig.Default]]), so the plan properties (one meta collect,
+  * one join-free typed pass) carry over unchanged; the batch's
+  * extracted frame is cached once and feeds both the province record
+  * and the lines. The run-global `_seen_provinces` set
   * (`extractors.py:110-112,166-169`) is a table
   * of province codes under the checkpoint dir, one entry per batch id:
   * batch B records its own codes, then drops the provinces whose code

@@ -18,7 +18,7 @@ import graft.ops.{CellTables, ExtractJob, PageRange}
   * `utils.py:87-100`) and prunes the scan by the `page` column — the
   * partition-pruning analog of the reference's page selection. The CLI
   * writes reference-parity single files by default; `--multi-file`
-  * switches to the scale-safe range-partitioned layout. Tables may be
+  * switches to the scale-safe layout split by seq range. Tables may be
   * ragged: each is sized by its widest row.
   *
   * Without a config path, the reference's shipped `idnareaetl.toml`

@@ -40,7 +40,8 @@ object RunStreamEtl {
         // keyed by the CHECKPOINTED batch id: re-runs continue the
         // sequence instead of overwriting a previous run's output
         val written = CsvSink.write(lines, sinks,
-          Paths.get(dest, s"batch_$batchId").toString, name, singleFile = false)
+          Paths.get(dest, s"batch_$batchId").toString, name,
+          singleFile = false, CsvSink.seqRange(lines))
         sinks.zip(written).foreach { case (s, (_, n)) =>
           counts.updateWith(s.entity)(c => Some(c.getOrElse(0L) + n))
         }

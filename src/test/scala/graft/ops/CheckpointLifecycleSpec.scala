@@ -240,4 +240,17 @@ class CheckpointLifecycleSpec extends SparkSpec {
     assert((pinned -- before).isEmpty,
       "the failure path must not leak pinned blocks")
   }
+
+  test("collectBounded fetches up to the bound in one job and fails " +
+      "loudly past it") {
+    val df = spark.range(5).toDF("id")
+    var rows: Array[org.apache.spark.sql.Row] = null
+    assert(jobs { rows = CheckpointUtil.collectBounded(df, 5, "ids", "") } == 1)
+    assert(rows.map(_.getLong(0)).sorted.toSeq == (0L until 5L))
+    val e = intercept[IllegalArgumentException] {
+      CheckpointUtil.collectBounded(df, 4, "the ids", "raise the cap")
+    }
+    assert(e.getMessage.contains("the ids exceeds the bound of 4 rows") &&
+      e.getMessage.contains("raise the cap"), e.getMessage)
+  }
 }

@@ -1,104 +1,104 @@
 package graft.ops
 
 import java.nio.file.Files
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graftbridge.ListenerBridge
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkSpec
 import graft.config.EtlConfig
 
-/** Physical-plan pins for the dispatch + extract product: routing is
-  * one per-table metadata aggregate, broadcast onto the cell stream by
-  * the one extract pass, so the ONLY joins in the plan are broadcast
-  * hash joins of that tiny meta — a shuffle (sort-merge) join of the
-  * cell stream would be a scale regression (the stream side must never
-  * move for dispatch).
+/** Physical-plan pins for the dispatch + extract product: the table
+  * meta is one aggregate, collected to the driver once per call, and
+  * the extract is one typed pass over the cells that looks its table up
+  * there — no join, no window, no shuffle — so the product reads the
+  * cells twice and its only other shuffle is the sink's.
   */
 class DispatchPlanSpec extends SparkSpec {
 
-  private def plans(): (String, String) = {
-    val cells = CellTables.ofGrids(spark,
-      Seq(Fixtures.dfArea, Fixtures.dfIsland))
-    val (area, island) = Dispatch.extractAll(cells)
-    (area.queryExecution.executedPlan.toString,
-      island.queryExecution.executedPlan.toString)
-  }
-
-  test("dispatch joins are broadcast-only; the cell stream never shuffles for routing") {
-    val (area, island) = plans()
-    for ((name, p) <- Seq("area" -> area, "island" -> island)) {
-      assert(p.contains("BroadcastHashJoin"),
-        s"$name side must broadcast its meta:\n$p")
-      assert(!p.contains("SortMergeJoin"),
-        s"$name side must not shuffle the stream for a join:\n$p")
-      assert(!p.contains("CartesianProduct"), s"$name side:\n$p")
+  /** The final plan of every query `body` runs, as text. */
+  private def executedPlans(body: => Unit): Seq[String] = {
+    val plans = new ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString
+          .split("\\+\\- == Initial Plan ==").head)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    // the one stream shuffle on the area side is the province
-    // first-occurrence window (partitioned by code) — nothing else
-    assert(area.contains("Window"), area)
+    ListenerBridge.drain(spark)
+    spark.listenerManager.register(listener)
+    try { body; ListenerBridge.drain(spark) }
+    finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
   }
 
-  test("each family plans exactly one metadata aggregate and no anti-join") {
-    // the routing rule is one aggregate (Dispatch.tableMeta) that both
-    // families read; a second per-family meta pass, or an anti-join to
-    // enforce area-wins-ties, would re-scan the top rows per family.
-    // FINAL plans: the area side's two province-dedup branches each
-    // print the meta broadcast statically, and AQE reuses one stage.
-    val cells = CellTables.ofGrids(spark,
-      Seq(Fixtures.dfArea, Fixtures.dfIsland))
-    val (area, island) = Dispatch.extractAll(cells)
-    for ((name, df) <- Seq("area" -> area, "island" -> island)) {
-      val p = graft.tools.Inspect.finalPlan(df)
-      val metaAggs = p.linesIterator
-        .count(l => l.contains("Aggregate(") && l.contains("partial_"))
-      assert(metaAggs == 1, s"$name side plans $metaAggs meta aggregates:\n$p")
-      assert(!p.contains("LeftAnti"), s"$name side plans an anti-join:\n$p")
-    }
-  }
+  private def count(regex: String, plan: String): Int =
+    regex.r.findAllIn(plan).size
 
-  /** The product's lines over a parquet-scanned corpus. */
-  private def productLines() = {
+  private val Join = raw"\w*(Join|CartesianProduct)\b"
+  private val Shuffle = raw"\bExchange\b"
+  private val MetaAggregate = raw"Aggregate\(.*partial_"
+  private val Scan = "FileScan|Scan parquet"
+
+  /** A parquet-scanned copy of the three-table fixture corpus. */
+  private def scannedCells(): DataFrame = {
     val dir = Files.createTempDirectory("graft-dispatch-plan-")
       .resolve("cells").toString
     CellTables.ofGrids(spark, Seq(Fixtures.dfArea, Fixtures.dfIsland,
       Fixtures.dfAreaUnmatched)).write.parquet(dir)
-    ExtractJob.lines(
-      Dispatch.extract(CellTables.read(spark, dir)), EtlConfig.Default)._1
+    CellTables.read(spark, dir)
   }
 
-  test("the product's lines read scanned cells at most 3 times, with one " +
-      "meta aggregate and broadcast-only joins") {
-    // the meta aggregate, the province branch and the rest; AQE serves
-    // the one meta aggregate stage to both branches' broadcasts
-    val lines = productLines()
-    val p = graft.tools.Inspect.finalPlan(lines)
-    val (scans, _, _) = graft.tools.Inspect.reuseCounts(p)
-    assert(scans <= 3, s"$scans cell scans:\n$p")
-    val metaAggs = p.linesIterator
-      .count(l => l.contains("Aggregate(") && l.contains("partial_"))
-    assert(metaAggs == 1, s"$metaAggs meta aggregates:\n$p")
-    val joins = raw"\w*(Join|CartesianProduct)\b".r.findAllIn(p).toSet
-    assert(joins == Set("BroadcastHashJoin"), s"joins $joins:\n$p")
+  test("extractAll collects one meta aggregate; its frames plan no " +
+      "join, window, aggregate or shuffle") {
+    val cells = CellTables.ofGrids(spark,
+      Seq(Fixtures.dfArea, Fixtures.dfIsland))
+    var frames: (DataFrame, DataFrame) = null
+    val built = executedPlans { frames = Dispatch.extractAll(cells) }
+    assert(built.size == 1, built.mkString("\n"))
+    assert(count(MetaAggregate, built.head) == 1, built.head)
+    val (area, island) = frames
+    for ((name, df) <- Seq("area" -> area, "island" -> island)) {
+      val p = graft.tools.Inspect.finalPlan(df)
+      for (banned <- Seq(Join, Shuffle, "Window", "Aggregate"))
+        assert(count(banned, p) == 0, s"$name side plans $banned:\n$p")
+    }
   }
 
-  test("every generated stage of the product's lines stays JIT-compilable; " +
-      "the meta join is on table_id alone") {
+  test("ExtractJob.run reads scanned cells twice, with one meta " +
+      "aggregate, no join and no shuffle before the sink's") {
+    val cells = scannedCells()
+    val plans = executedPlans(ExtractJob.run(cells,
+      Files.createTempDirectory("graft-dispatch-plan-out-").toString, "p",
+      EtlConfig.Default))
+    // the meta collect, then the write
+    assert(plans.size == 2, plans.mkString("\n"))
+    val Seq(meta, write) = plans
+    assert(count(Scan, meta) == 1 && count(Scan, write) == 1,
+      plans.mkString("\n"))
+    assert(count(MetaAggregate, meta) == 1, meta)
+    assert(count(MetaAggregate, write) == 0, write)
+    for (p <- plans) assert(count(Join, p) == 0 && !p.contains("Window"), p)
+    // the meta aggregate's exchange, and the sink's split by seq range
+    assert(count(Shuffle, meta) == 1, meta)
+    assert(count(Shuffle, write) == 1 &&
+      write.contains("shufflepartitionidpassthrough"),
+      write)
+  }
+
+  test("every generated stage of the product's lines stays " +
+      "JIT-compilable") {
     // a generated row loop over HotSpot's huge-method limit runs in the
     // bytecode interpreter for the life of the JVM: the row rules stay
     // in plain Scala, not in the generated code
-    val lines = productLines()
+    val cells = scannedCells()
+    val lines =
+      ExtractJob.lines(Dispatch.extract(cells), EtlConfig.Default)._1
     val stages = graft.tools.Inspect.codegenStages(lines)
-    assert(stages.nonEmpty)
+    assert(stages.nonEmpty, lines.queryExecution.executedPlan.toString)
     val huge = stages.filter(_.interpreted)
     assert(huge.isEmpty, s"stages over the limit: $huge")
-    val joins = new AdaptiveSparkPlanHelper {}
-      .collect(lines.queryExecution.executedPlan) {
-        case j: BroadcastHashJoinExec => j
-      }
-    assert(joins.nonEmpty)
-    for (j <- joins) {
-      assert(j.condition.isEmpty, s"join condition ${j.condition}")
-      assert((j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name))
-        .toSet == Set("table_id"), j.toString)
-    }
   }
 }

@@ -19,9 +19,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkSpec
 import graft.config.EtlConfig
 
-/** The one ordered write behind [[ExtractJob.run]]: its job count, its
-  * single cache, the sort order above its exchange, its sink-side
-  * counts and its empty-input failure.
+/** The one ordered write behind [[ExtractJob.run]]: its job count, no
+  * cache, the sort order above its exchange, its sink-side counts and
+  * its empty-input failure.
   */
 class ExtractJobSinkSpec extends SparkSpec {
 
@@ -80,11 +80,9 @@ class ExtractJobSinkSpec extends SparkSpec {
 
   test("one ExtractJob.run on the three-table fixture runs a pinned " +
       "number of jobs in both layouts") {
-    // the extract's four (the one meta aggregate, its broadcast to the
-    // province branch and to the rest, the province dedup shuffle), the
-    // cache fill, the range sample (one-partition layout: none), the
-    // range shuffle and the write
-    for ((singleFile, pinned) <- Seq(false -> 8, true -> 7)) {
+    // the meta aggregate's shuffle and its collect, the sink's shuffle
+    // by seq range and the write; no cache fill and no range sample
+    for ((singleFile, pinned) <- Seq(false -> 4, true -> 4)) {
       val n = jobs(ExtractJob.run(threeTables, tmpDir().toString, "j",
         EtlConfig.Default, singleFile))
       assert(n == pinned, s"singleFile=$singleFile ran $n jobs")
@@ -145,6 +143,54 @@ class ExtractJobSinkSpec extends SparkSpec {
     val parts = Files.list(dest.resolve("n.village.csv.d")).iterator()
       .asScala.count(_.getFileName.toString.endsWith(".csv"))
     assert(parts > 1, s"$parts village part files: one range partition")
+  }
+
+  test("sparse, skewed seq writes document order across part files, " +
+      "line for line the single-file output") {
+    // one table holds most rows; the others sit 10^9 seqs apart, so
+    // the even split of the seq range leaves most parts nearly empty
+    val big = Fixtures.dfArea.take(2) ++ (1 to 200).map(i =>
+      Seq(f"11.01.${i % 90 + 10}%02d", s"Kecamatan $i", "", "", "", "", ""))
+    val grids = Seq(big, Fixtures.dfIsland, Fixtures.dfArea,
+      Fixtures.dfIsland, Fixtures.dfArea)
+    val cells = grids.zipWithIndex.map { case (g, i) =>
+      CellTables.ofGrid(spark, g, i.toLong, 1, i * 1000000000L)
+    }.reduce(_ unionByName _)
+    val (multi, single) = (tmpDir(), tmpDir())
+    ExtractJob.run(cells, multi.toString, "s", EtlConfig.Default)
+    ExtractJob.run(cells, single.toString, "s", EtlConfig.Default,
+      singleFile = true)
+    var multiPart = false
+    for (sink <- ExtractJob.sinks(EtlConfig.Default)) {
+      val name = s"s.${sink.suffix}.csv"
+      val parts = Files.list(multi.resolve(s"$name.d")).iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".csv")).toSeq
+        .sortBy(_.getFileName.toString)
+      multiPart ||= parts.size > 1
+      val header = sink.headers.mkString(",")
+      val lines = Files.readString(single.resolve(name)).split("\r\n").toSeq
+      val concatenated = header +: parts.flatMap(p =>
+        Files.readString(p).split("\r\n").toSeq.tail)
+      assert(concatenated == lines, sink.entity)
+    }
+    assert(multiPart, "every entity in one part file")
+  }
+
+  test("more routed tables than the meta bound fail loudly before the " +
+      "pass runs") {
+    // two routed tables of three; the bound is one
+    var caught: IllegalArgumentException = null
+    val n = jobs {
+      caught = intercept[IllegalArgumentException] {
+        Dispatch.tables(threeTables, col("route"), maxTables = 1)
+      }
+    }
+    for (part <- Seq("Dispatch.tables", "bound of 1", "--pages", "maxTables"))
+      assert(caught.getMessage.contains(part), caught.getMessage)
+    // the meta aggregate's shuffle and its collect, nothing after
+    assert(n <= 2, s"$n jobs")
+    assert(Dispatch.tables(threeTables, col("route"), maxTables = 2)
+      .metas.map(_.family).sorted == Seq("area", "island"))
   }
 
   test("empty input ends in NoMatchingDataException, not a hang") {

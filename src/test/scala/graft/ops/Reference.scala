@@ -251,4 +251,18 @@ object Reference {
         when(island, Cleanse.isOutermostSmall(upper(trimmed(col("info_idx")))))
           .as("is_outermost_small"))
   }
+
+  /** The rows of a pass with its provinces deduped to their first
+    * occurrence in document order (A1, `extractors.py:110-112,
+    * 166-169`) by a `row_number` window partitioned by code: the
+    * formulation [[Dispatch.extract]] replaced with first provinces
+    * settled from the table meta.
+    */
+  def firstProvincesWindow(rows: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("code")).orderBy(col("seq"))
+    rows.filter(col("entity") === "province")
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1).drop("rn")
+      .unionByName(rows.filter(col("entity") =!= "province"))
+  }
 }

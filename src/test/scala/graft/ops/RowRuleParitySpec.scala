@@ -100,7 +100,8 @@ class RowRuleParitySpec extends SparkSpec {
     val input = rows.toDF().repartition(3).cache()
     try {
       for (family <- Seq(col("route"), lit("area"), lit("island"))) {
-        val got = Dispatch.pass(input, family)
+        val got = Dispatch.pass(input, Dispatch.tables(input, family),
+          dedup = false)
         val want = Reference.passColumns(input, family)
         assert(got.schema.map(f => (f.name, f.dataType)) ==
           want.schema.map(f => (f.name, f.dataType)))
