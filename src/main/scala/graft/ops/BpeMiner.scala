@@ -141,7 +141,7 @@ object BpeMiner {
       .filter(length(col("w")) > 1)
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= minCount)
-    val rows = CheckpointUtil.collectBounded(vocab, maxVocab,
+    val rows = DriverCollect.collectBounded(vocab, maxVocab,
       s"trainMergesLocal: distinct-word vocabulary at minCount=$minCount",
       "raise minCount (each dropped word perturbs pair counts by " +
         "< minCount) or maxVocab (if the driver heap allows)")
@@ -363,7 +363,7 @@ object BpeMiner {
       .filter(length(col("w")) > 1)
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= minCount)
-    val rows = CheckpointUtil.collectBounded(vocab, maxVocab,
+    val rows = DriverCollect.collectBounded(vocab, maxVocab,
       "trainByteLevelMergesLocal: distinct-pretoken vocabulary at " +
         s"minCount=$minCount",
       "raise minCount (each dropped pretoken perturbs pair counts by " +

@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
-/** The one checkpoint primitive of `src/main` ([[ckpt]]), the bounded
-  * driver collect beside it ([[collectBounded]]), lifecycle
+/** The one checkpoint primitive of `src/main` ([[ckpt]]), lifecycle
   * management for checkpointed frames inside iterative operators
   * (components, SCC, HyperBall, k-core, PageRank, LPA, k-means, PQ
   * training), and the one round loop the convergence-certified ones
@@ -59,22 +58,6 @@ object CheckpointUtil {
     if (df.sparkSession.conf.getOption(ReliableConf).exists(_.toBoolean))
       df.checkpoint(eager)
     else df.localCheckpoint(eager)
-
-  /** `df`'s rows on the driver, at most `bound` of them. One job both
-    * proves the bound and fetches the rows (`limit(bound + 1)`, not a
-    * `count()` that would re-run `df` just to ask permission). More
-    * than `bound` rows fail loudly, before anything downstream runs:
-    * an `IllegalArgumentException` naming `what`, the bound and
-    * `remedy`, how to raise it or shrink the input.
-    */
-  def collectBounded[T](
-      df: Dataset[T], bound: Int, what: String, remedy: String): Array[T] = {
-    require(bound >= 1, s"bound must be >= 1, got $bound")
-    val rows = df.limit(bound + 1).collect()
-    require(rows.length <= bound,
-      s"$what exceeds the bound of $bound rows — $remedy")
-    rows
-  }
 
   /** Unpersist (non-blocking) every locally-checkpointed RDD appearing
     * as a leaf in the given frames' analyzed plans.
@@ -155,5 +138,28 @@ object CheckpointUtil {
     }
     free(prev)
     (last, seen.toSeq)
+  }
+}
+
+/** The one bounded driver collect of `src/main`, beside the checkpoint
+  * primitive: a collect of a frame whose size the data decides goes
+  * through [[collectBounded]].
+  */
+object DriverCollect {
+
+  /** `df`'s rows on the driver, at most `bound` of them. One job both
+    * proves the bound and fetches the rows (`limit(bound + 1)`, not a
+    * `count()` that would re-run `df` just to ask permission). More
+    * than `bound` rows fail loudly, before anything downstream runs:
+    * an `IllegalArgumentException` naming `what`, the bound and
+    * `remedy`, how to raise it or shrink the input.
+    */
+  def collectBounded[T](
+      df: Dataset[T], bound: Int, what: String, remedy: String): Array[T] = {
+    require(bound >= 1, s"bound must be >= 1, got $bound")
+    val rows = df.limit(bound + 1).collect()
+    require(rows.length <= bound,
+      s"$what exceeds the bound of $bound rows — $remedy")
+    rows
   }
 }

@@ -152,7 +152,7 @@ object Dispatch {
     val meta = tableMeta(cells).select(col("*"), family.as("family"))
       .filter(col("family").isNotNull && col("table_width").isNotNull)
       .drop("route").as(MetaEncoder)
-    Tables(CheckpointUtil.collectBounded(meta, maxTables,
+    Tables(DriverCollect.collectBounded(meta, maxTables,
       "Dispatch.tables: the cell tables to extract",
       "extract fewer pages per run (RunEtl --pages) or pass a larger " +
         "maxTables").toSeq)

@@ -83,7 +83,7 @@ object UnigramLm {
       .filter(length(col("w")) >= 1)
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= minCount)
-    val rows = CheckpointUtil.collectBounded(vocab, maxVocab,
+    val rows = DriverCollect.collectBounded(vocab, maxVocab,
       s"UnigramLm.trainLocal: distinct-word vocabulary at minCount=$minCount",
       "raise minCount or maxVocab")
     require(rows.nonEmpty, "UnigramLm.trainLocal: empty vocabulary")

@@ -213,10 +213,11 @@ object EtlQueries {
     // Whole-pipeline E2E, area family: cell tables are SYNTHESIZED from
     // the customer table (header + subheader literals unioned with one
     // data row per customer, code length cycling 2/5/8/13), then run
-    // through the REAL dispatch + area pipeline — header sniff, meta
-    // broadcast join, variant projection, cleanse chain (native
-    // expressions), length classification, parent prefixes, ordered
-    // province dedup. The oracle replays the data-row semantics in SQL.
+    // through the REAL dispatch + area pipeline — header sniff and
+    // province candidates in the table meta (collected while the query
+    // is built), variant projection, cleanse chain, length
+    // classification, parent prefixes, ordered province dedup. The
+    // oracle replays the data-row semantics in SQL.
     QueryDef("pipeline_area_e2e", (s, dir) => {
       val k = col("c_custkey")
       val code = when(pmod(k, lit(4)) === 0,
@@ -225,7 +226,7 @@ object EtlQueries {
         .when(pmod(k, lit(4)) === 2, lpad(k.cast("string"), 8, "0"))
         .otherwise(lpad(k.cast("string"), 13, "0"))
       val pad5 = Seq.fill(5)(lit(""))
-      // the spread's one exchange serves every branch of the extract
+      // the extract is one pass over the spread's one exchange
       val data = spread(T(s, dir, "customer")).select(
         lit(0L).as("table_id"), lit(1).as("page"),
         (k + 2).cast("int").as("row_idx"), (k + 2).as("seq"),

@@ -245,10 +245,10 @@ class CheckpointLifecycleSpec extends SparkSpec {
       "loudly past it") {
     val df = spark.range(5).toDF("id")
     var rows: Array[org.apache.spark.sql.Row] = null
-    assert(jobs { rows = CheckpointUtil.collectBounded(df, 5, "ids", "") } == 1)
+    assert(jobs { rows = DriverCollect.collectBounded(df, 5, "ids", "") } == 1)
     assert(rows.map(_.getLong(0)).sorted.toSeq == (0L until 5L))
     val e = intercept[IllegalArgumentException] {
-      CheckpointUtil.collectBounded(df, 4, "the ids", "raise the cap")
+      DriverCollect.collectBounded(df, 4, "the ids", "raise the cap")
     }
     assert(e.getMessage.contains("the ids exceeds the bound of 4 rows") &&
       e.getMessage.contains("raise the cap"), e.getMessage)
