@@ -51,19 +51,40 @@ class DispatchPlanSpec extends SparkSpec {
     CellTables.read(spark, dir)
   }
 
-  test("extractAll collects one meta aggregate; its frames plan no " +
-      "join, window, aggregate or shuffle") {
+  /** `Dispatch.extractAll` over the fixture corpus: the plans of the
+    * queries it runs while building, and the two family frames. */
+  private def extracted(): (Seq[String], DataFrame, DataFrame) = {
     val cells = CellTables.ofGrids(spark,
       Seq(Fixtures.dfArea, Fixtures.dfIsland))
     var frames: (DataFrame, DataFrame) = null
     val built = executedPlans { frames = Dispatch.extractAll(cells) }
-    assert(built.size == 1, built.mkString("\n"))
-    assert(count(MetaAggregate, built.head) == 1, built.head)
-    val (area, island) = frames
+    (built, frames._1, frames._2)
+  }
+
+  test("dispatch joins are broadcast-only; the cell stream never " +
+      "shuffles for routing") {
+    // routing is a lookup in the driver-collected meta: the frames plan
+    // no join at all, so none can move the cell stream
+    val (_, area, island) = extracted()
     for ((name, df) <- Seq("area" -> area, "island" -> island)) {
       val p = graft.tools.Inspect.finalPlan(df)
-      for (banned <- Seq(Join, Shuffle, "Window", "Aggregate"))
+      for (banned <- Seq(Join, Shuffle, "Window"))
         assert(count(banned, p) == 0, s"$name side plans $banned:\n$p")
+    }
+  }
+
+  test("each family plans exactly one metadata aggregate and no anti-join") {
+    // the routing rule is one aggregate (Dispatch.tableMeta), collected
+    // once per call and read by both families; a second per-family meta
+    // pass, or an anti-join to enforce area-wins-ties, would re-scan
+    // the top rows per family
+    val (built, area, island) = extracted()
+    assert(built.size == 1, built.mkString("\n"))
+    assert(count(MetaAggregate, built.head) == 1, built.head)
+    for ((name, df) <- Seq("area" -> area, "island" -> island)) {
+      val p = graft.tools.Inspect.finalPlan(df)
+      assert(count("Aggregate", p) == 0, s"$name side plans an aggregate:\n$p")
+      assert(!p.contains("LeftAnti"), s"$name side plans an anti-join:\n$p")
     }
   }
 
